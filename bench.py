@@ -328,21 +328,21 @@ def alt_queries():
         return load_table(s, d, "embeddings")
 
     return {
-        "alt_d03_minhash_vectorized": lambda s, d: dedup.minhash_lsh_pairs(
-            docs(s, d), jaccard_threshold=0.35
+        "alt_d03_minhash_vectorized": lambda m, s, d: dedup.minhash_lsh_pairs(
+            m, docs(s, d), jaccard_threshold=0.35
         ),
-        "alt_d04_simhash_vectorized": lambda s, d: dedup.simhash_near_pairs(
-            docs(s, d), max_hamming=8
+        "alt_d04_simhash_vectorized": lambda m, s, d: dedup.simhash_near_pairs(
+            m, docs(s, d), max_hamming=8
         ),
-        "alt_d07_near_dedup_vectorized": lambda s, d: dedup.near_dedup_drop_list(
-            docs(s, d), candidate_threshold=0.3, jaccard_threshold=0.5
+        "alt_d07_near_dedup_vectorized": lambda m, s, d: dedup.near_dedup_drop_list(
+            m, docs(s, d), candidate_threshold=0.3, jaccard_threshold=0.5
         ),
-        "alt_s02_ivf_trained": lambda s, d: similarity.ivf_topk(
+        "alt_s02_ivf_trained": lambda m, s, d: similarity.ivf_topk(
             emb(s, d).filter(F.col("vec_id") >= 8),
             emb(s, d).filter(F.col("vec_id") < 8),
             k=5,
         ),
-        "alt_s04_srp_gaussian": lambda s, d: similarity.srp_topk(
+        "alt_s04_srp_gaussian": lambda m, s, d: similarity.srp_topk(
             emb(s, d).filter(F.col("vec_id") >= 8),
             emb(s, d).filter(F.col("vec_id") < 8),
             k=5,
@@ -423,6 +423,7 @@ def calibration(spark) -> dict:
 
 
 def main() -> None:
+    from mapreducehs_spark.operators.iteration import materialize
     from mapreducehs_spark.queries import QUERIES
     from mapreducehs_spark.session import get_spark
 
@@ -434,7 +435,9 @@ def main() -> None:
     # (r12's q_family "regression" was q128+q129 being new, not code);
     # `common_inventory_total` removes that failure mode.  Additive only
     # — `value` and `queries` are unchanged.
-    prev_inventory: set[str] = set()
+    # None (reported as null) when the previous detail file is missing
+    # or unparseable — never aliased to this run's total
+    prev_inventory: set[str] | None = None
     try:
         with open(os.path.join(REPO, "BENCH_local.json")) as f:
             prev_inventory = set(json.load(f).get("queries", {}))
@@ -493,16 +496,18 @@ def main() -> None:
     alts = {}
     for name, fn in alt_queries().items():
         t0 = time.perf_counter()
-        fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        with materialize(spark) as m:
+            fn(m, spark, SF_DIR).write.format("noop").mode("overwrite").save()
         alts[name] = round(time.perf_counter() - t0, 4)
 
     sf = SF_DIR.rstrip("/").split("sf")[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else SF_DIR
     total = round(sum(timings.values()), 4)
     series_total = round(sum(timings[n] for n in R5_SERIES if n in timings), 4)
-    common = {n: t for n, t in timings.items() if n in prev_inventory}
-    common_total = round(sum(common.values()), 4) if common else total
-    common_n = len(common) if common else len(timings)
+    common_total = common_n = None
+    if prev_inventory is not None:
+        common = {n: t for n, t in timings.items() if n in prev_inventory}
+        common_total, common_n = round(sum(common.values()), 4), len(common)
 
     # per-family subtotals keep the stdout line ~300 bytes: q relational,
     # d dedup, s similarity, t text, m multimodal, p pipeline

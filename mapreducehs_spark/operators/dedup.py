@@ -30,6 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from mapreducehs_spark.operators.iteration import Materialization, materialize
 from mapreducehs_spark.operators.text import tokens
 
 
@@ -197,6 +198,7 @@ def hashed_shingle_rows(
 
 
 def ngram_jaccard_intersections(
+    m: Materialization,
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
@@ -211,7 +213,7 @@ def ngram_jaccard_intersections(
     a rounded double — no FP anywhere in the predicate."""
     # persist: both sides of the self-join and the doc-frequency guard
     # read this frame — without it the shingle kernel runs 3x.
-    exploded = hashed_shingle_rows(df, text_col, id_col, n).persist()
+    exploded = m.persist(hashed_shingle_rows(df, text_col, id_col, n))
     if max_shingle_df is not None:
         keep = (
             exploded.groupBy("shingle")
@@ -232,6 +234,7 @@ def ngram_jaccard_intersections(
 
 
 def ngram_jaccard_pairs(
+    m: Materialization,
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
@@ -247,7 +250,7 @@ def ngram_jaccard_pairs(
     the join (boilerplate guard — bounds the worst bucket at scale).
     Returns (id_a, id_b, jaccard) with id_a < id_b.
     """
-    inter = ngram_jaccard_intersections(df, text_col, id_col, n, max_shingle_df)
+    inter = ngram_jaccard_intersections(m, df, text_col, id_col, n, max_shingle_df)
     return (
         inter.withColumn(
             "jaccard",
@@ -353,6 +356,7 @@ def minhash_signature(
 
 
 def minhash_lsh_pairs(
+    m: Materialization,
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
@@ -373,7 +377,7 @@ def minhash_lsh_pairs(
     # signature arrays would otherwise ride through the explode-join
     # shuffle (~512 bytes/pair); instead candidates are deduped as bare
     # id pairs and signatures re-attached with two joins afterwards.
-    sigs = minhash_signature(df, text_col, id_col, num_perm, shingle_n, bands=bands).persist()
+    sigs = m.persist(minhash_signature(df, text_col, id_col, num_perm, shingle_n, bands=bands))
     banded = sigs.select("id", F.posexplode("bks").alias("band", "band_key"))
     left = banded.select(F.col("id").alias("id_a"), "band", "band_key")
     right = banded.select(F.col("id").alias("id_b"), "band", "band_key")
@@ -453,6 +457,7 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
 
 
 def simhash_near_pairs(
+    m: Materialization,
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
@@ -468,7 +473,7 @@ def simhash_near_pairs(
     """
     # persist: the fingerprint aggregation feeds 2×bands join sides —
     # without it the explode+64-bit-sum groupBy recomputes per side.
-    fps = simhash(df, text_col, id_col).persist()
+    fps = m.persist(simhash(df, text_col, id_col))
     band_cols = [
         (F.shiftrightunsigned(F.col("simhash"), i * 16).bitwiseAND(F.lit(0xFFFF))).alias(
             f"band{i}"
@@ -494,19 +499,6 @@ def simhash_near_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
-
-
-def embedding_near_dup_pairs(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-) -> DataFrame:
-    """Near-dup pairs by embedding cosine ≥ threshold (delegates to the
-    similarity module's LSH candidate path)."""
-    from mapreducehs_spark.operators.similarity import cosine_pairs_lsh
-
-    return cosine_pairs_lsh(emb, id_col=id_col, vec_col=vec_col, threshold=threshold)
 
 
 def resolve_duplicate_clusters(
@@ -546,34 +538,42 @@ def resolve_duplicate_clusters(
     """
     # materialize the pair list once up front: its size picks the
     # regime, and every downstream frame derives from it
-    fwd = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).persist()
-    n_pairs = fwd.count()
-
-    if n_pairs <= driver_threshold:
+    with materialize(pairs.sparkSession) as m:
+        fwd = m.persist(pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")))
+        n_pairs = fwd.count()
+        if n_pairs > driver_threshold:
+            return m.result(_min_label_propagation(m, fwd, n_pairs, max_iter))
         pdf = fwd.toPandas()
-        fwd.unpersist(blocking=False)
-        parent: dict[int, int] = {}
 
-        def find(x: int) -> int:
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:
-                parent[x], x = root, parent[x]
-            return root
+    parent: dict[int, int] = {}
 
-        for a, b in zip(pdf["src"].values, pdf["dst"].values):
-            ra, rb = find(int(a)), find(int(b))
-            if ra != rb:
-                if rb < ra:
-                    ra, rb = rb, ra
-                parent[rb] = ra  # min root wins → rep is the min id
-        ids = sorted(set(pdf["src"].astype(int)) | set(pdf["dst"].astype(int)))
-        out = pd.DataFrame(
-            {"doc_id": ids, "rep_id": [find(i) for i in ids]}, dtype="int64"
-        )
-        return pairs.sparkSession.createDataFrame(out, schema="doc_id long, rep_id long")
+    def find(x: int) -> int:
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while parent.get(x, x) != x:
+            parent[x], x = root, parent[x]
+        return root
 
+    for a, b in zip(pdf["src"].values, pdf["dst"].values):
+        ra, rb = find(int(a)), find(int(b))
+        if ra != rb:
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra  # min root wins → rep is the min id
+    ids = sorted(set(pdf["src"].astype(int)) | set(pdf["dst"].astype(int)))
+    out = pd.DataFrame(
+        {"doc_id": ids, "rep_id": [find(i) for i in ids]}, dtype="int64"
+    )
+    return pairs.sparkSession.createDataFrame(out, schema="doc_id long, rep_id long")
+
+
+def _min_label_propagation(
+    m: Materialization, fwd: DataFrame, n_pairs: int, max_iter: int
+) -> DataFrame:
+    """``resolve_duplicate_clusters``' distributed regime over the
+    persisted (src, dst) pair list ``fwd``; returns (doc_id, rep_id)
+    over the last round's labels, persisted in ``m``."""
     nodes = (
         fwd.select(F.col("src").alias("id"))
         .unionByName(fwd.select(F.col("dst").alias("id")))
@@ -583,36 +583,37 @@ def resolve_duplicate_clusters(
     # partition per ~25k edges, capped at the session's parallelism.
     # The repartition co-locates each round's join probe on src; AQE
     # handles the reduce sides.
-    par = pairs.sparkSession.sparkContext.defaultParallelism
+    par = fwd.sparkSession.sparkContext.defaultParallelism
     target = max(1, min(par, n_pairs // 25_000 + 1))
-    edges = (
+    edges = m.persist(
         fwd.unionByName(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .unionByName(nodes.select(F.col("id").alias("src"), F.col("id").alias("dst")))
         .repartition(target, "src")
-    ).persist()
+    )
     edges.count()  # materialize once; every round joins this frame
-    fwd.unpersist(blocking=False)
-    labels = nodes.withColumn("rep", F.col("id")).persist()
+    m.free(fwd)
+    labels = m.persist(nodes.withColumn("rep", F.col("id")))
     prev_sum = None
 
     for _ in range(max_iter):
-        new_labels = (
+        new_labels = m.persist(
             edges.join(labels, edges.src == labels.id)
             .groupBy("dst")
             .agg(F.min("rep").alias("rep"))
             .select(F.col("dst").alias("id"), "rep")
-        ).persist()
+        )
         cur_sum = new_labels.agg(F.sum("rep")).collect()[0][0]
-        labels.unpersist()
+        m.free(labels)
         labels = new_labels
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
-    edges.unpersist()
+    m.free(edges)
     return labels.select(F.col("id").alias("doc_id"), F.col("rep").alias("rep_id"))
 
 
 def near_dedup_drop_list(
+    m: Materialization,
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
@@ -644,7 +645,7 @@ def near_dedup_drop_list(
     well under a minute).
     """
     cands = minhash_lsh_pairs(
-        df, text_col, id_col, num_perm, bands, shingle_n,
+        m, df, text_col, id_col, num_perm, bands, shingle_n,
         jaccard_threshold=candidate_threshold,
     )
     return _verify_and_resolve(df, cands, text_col, id_col, shingle_n, jaccard_threshold)
@@ -663,19 +664,16 @@ def _verify_and_resolve(
     resolution → drop list (doc_id, rep_id) with the representative
     removed.  Candidate generation is the caller's (vectorized
     minhash_lsh_pairs for throughput, minhash_lsh_pairs_checked for the
-    oracle-replayable twin)."""
-    verified, frames = _verified_pairs(
-        df, cands, text_col, id_col, shingle_n, jaccard_threshold
-    )
-    clusters = resolve_duplicate_clusters(verified)
-    # resolve_duplicate_clusters materialized the verified pair list
-    # (its regime-picking count); the candidate/shingle caches are dead
-    for fr in frames:
-        fr.unpersist(blocking=False)
+    oracle-replayable twin).  The candidate/shingle caches are freed on
+    return: resolve_duplicate_clusters materializes its result."""
+    with materialize(df.sparkSession) as m:
+        verified = _verified_pairs(m, df, cands, text_col, id_col, shingle_n, jaccard_threshold)
+        clusters = resolve_duplicate_clusters(verified)
     return clusters.filter(F.col("doc_id") != F.col("rep_id"))
 
 
 def near_dedup_verified_edges_checked(
+    m: Materialization,
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
@@ -691,48 +689,38 @@ def near_dedup_verified_edges_checked(
     computed only to be thrown away by the cross-modal closure).
     Connectivity equals ``near_dedup_drop_list_checked``'s drop-list
     edges by construction (both encode the verified-pair graph).
-    Returns ``(edges, free)``: the LAZY verified-pair frame (the
-    caller's closure materializes it in its one action) and a cleanup
-    closure releasing the internal candidate/shingle caches."""
+    Returns the LAZY verified-pair frame (the caller's closure
+    materializes it in its one action) over caches held in ``m``."""
     cands = minhash_lsh_pairs_checked(
         df, text_col, id_col, shingle_n, est_threshold
     ).select("id_a", "id_b")
-    verified, frames = _verified_pairs(
-        df, cands, text_col, id_col, shingle_n, jaccard_threshold
-    )
-
-    def free() -> None:
-        for fr in frames:
-            fr.unpersist(blocking=False)
-
-    return verified, free
+    return _verified_pairs(m, df, cands, text_col, id_col, shingle_n, jaccard_threshold)
 
 
 def _verified_pairs(
+    m: Materialization,
     df: DataFrame,
     cands: DataFrame,
     text_col: str,
     id_col: str,
     shingle_n: int,
     jaccard_threshold: float,
-) -> tuple[DataFrame, list[DataFrame]]:
+) -> DataFrame:
     """Exact per-pair Jaccard verification of candidate pairs: each
     pair's two shingle sets joined in and intersected in an Arrow
-    kernel.  Returns (verified (id_a, id_b) frame — LAZY, derives from
-    the returned persisted frames — and those frames, which the caller
-    unpersists once verification has materialized)."""
-    cands = cands.persist()
+    kernel.  Returns the verified (id_a, id_b) frame — LAZY, over the
+    candidate and shingle-set frames persisted in ``m``."""
+    cands = m.persist(cands)
     cand_docs = (
         cands.select(F.col("id_a").alias("cid"))
         .unionByName(cands.select(F.col("id_b").alias("cid")))
         .distinct()
     )
     subset = df.join(cand_docs, df[id_col] == cand_docs.cid, "left_semi")
-    sets = (
+    sets = m.persist(
         hashed_shingle_rows(subset, text_col, id_col, shingle_n)
         .groupBy("id")
         .agg(F.collect_list("shingle").alias("hs"))
-        .persist()
     )
     paired = (
         cands.select("id_a", "id_b")
@@ -751,12 +739,11 @@ def _verified_pairs(
                 {"id_a": pdf["id_a"], "id_b": pdf["id_b"], "jaccard": jac}
             )
 
-    verified = (
+    return (
         paired.mapInPandas(verify, "id_a long, id_b long, jaccard double")
         .filter(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b")
     )
-    return verified, [cands, sets]
 
 
 def near_dedup_drop_list_checked(
@@ -896,6 +883,7 @@ def _minhash_band_keys(mins_col, n_bands: int | None = None):
 
 
 def decontaminate_fuzzy(
+    m: Materialization,
     train: DataFrame,
     benchmark: DataFrame,
     text_col: str = "text",
@@ -913,7 +901,8 @@ def decontaminate_fuzzy(
     training-is-TBs asymmetry: both sides get scan-shaped checked-law
     signatures (``minhash_sigs_scan_shaped`` — zero wide dependency),
     the benchmark's banded keys AND signatures broadcast (two tiny
-    frames, localCheckpointed once), and the training side meets them
+    frames, checkpointed once and handed out of ``m`` — the returned
+    plan reads them), and the training side meets them
     in map-side broadcast hash joins.  The only shuffle in the whole
     plan is the final per-doc aggregate over CONTAMINATED candidates —
     a vanishing fraction of the corpus.  Candidate pairs agreeing on
@@ -925,9 +914,7 @@ def decontaminate_fuzzy(
     is the lowest-id benchmark doc at the maximum estimate
     (deterministic tie-break).
     """
-    bench_sigs = minhash_sigs_scan_shaped(
-        benchmark, text_col, id_col, shingle_n
-    ).localCheckpoint()
+    bench_sigs = m.result(minhash_sigs_scan_shaped(benchmark, text_col, id_col, shingle_n))
     bench_banded = bench_sigs.select(
         F.col("id").alias("eval_id"),
         F.posexplode(_minhash_band_keys("mins")).alias("band", "bk"),
@@ -1074,7 +1061,7 @@ def minhash_checked_signatures(
     text_col: str = "text",
     id_col: str = "doc_id",
     shingle_n: int = 3,
-    materialize: bool = False,
+    m: Materialization | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """The checked-MinHash SIGNATURE + BANDING stages as a reusable
     seam (round 7: the incremental near-dup composition needs to band a
@@ -1083,13 +1070,14 @@ def minhash_checked_signatures(
     expression trees ``minhash_lsh_pairs_checked`` always built
     (extraction, not a change; plan fingerprints hold).
 
-    ``materialize`` (round 12): ``sigs`` is referenced 4x downstream
+    ``m`` (round 12): ``sigs`` is referenced 4x downstream
     (banding feeds both sides of the candidate self-join, verify reads
     both signature sides), but WITHIN one action AQE's runtime exchange
     reuse already dedups the computation — interleaved A/B at sf0.1
     measured 2.29 s lazy vs 2.28 s checkpointed for the d11 chain, so
-    the default stays lazy (zero plan drift).  Pass True only when the
-    SAME signature frame feeds MULTIPLE separate actions (d28/d31's
+    the default stays lazy (zero plan drift).  Pass a scope, which
+    checkpoints ``sigs`` in it, only when the SAME signature frame
+    feeds MULTIPLE separate actions (d28/d31's
     incremental composition: the base closure and the merged closure
     are different jobs, and exchange reuse cannot span jobs — there the
     checkpoint is the difference between hashing the corpus once and
@@ -1126,8 +1114,8 @@ def minhash_checked_signatures(
             for i in range(MINHASH_CHECK_NUM_PERM)
         ]
     )
-    if materialize:
-        sigs = sigs.localCheckpoint()
+    if m is not None:
+        sigs = m.checkpoint(sigs)
     band_keys = F.array(
         *[
             F.concat_ws(
@@ -1207,6 +1195,7 @@ SIMHASH_CHECK_BANDS = 4
 
 
 def simhash_checked(
+    m: Materialization,
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
@@ -1259,8 +1248,9 @@ def simhash_checked(
     # across those subtrees — without a barrier the token explode + the
     # 32-column bit-sum aggregation (the dominant cost) re-runs once per
     # reference (measured: 4 scans, 0 ReusedExchange).  The checkpoint
-    # materializes 2 longs/doc — per-mille of corpus width — once.
-    sigs = bitsums.select("id", sig.alias("sig")).localCheckpoint()
+    # materializes 2 longs/doc — per-mille of corpus width — once; the
+    # returned plan reads it, so it is handed out of ``m``.
+    sigs = m.result(bitsums.select("id", sig.alias("sig")))
     band_keys = F.array(
         *[
             F.shiftright(F.col("sig"), band_width * b).bitwiseAND(F.lit((1 << band_width) - 1))
@@ -1360,7 +1350,8 @@ def connected_components_star(
     semantics before the checksum (guide §2.4: 9 → 7 shuffle exchanges
     in the static round plan, plans/r12/cc_round_body_{before,after}.txt;
     AQE reuses more at runtime).  Per-round frames are genuinely freed
-    (operators/iteration).
+    (operators/iteration), and the result is checkpointed before the
+    last round's frame is.
 
     TWO REGIMES, picked by the deduped edge count (round 12; the
     ``resolve_duplicate_clusters`` discipline applied to the star
@@ -1378,8 +1369,6 @@ def connected_components_star(
     Returns (node, rep) for every non-representative node, rep = the
     component's minimum id — ``resolve_duplicate_clusters``'s contract.
     """
-    from mapreducehs_spark.operators.iteration import local_checkpoint_freeable
-
     e0 = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v")).filter(
         F.col("u") != F.col("v")
     )
@@ -1420,61 +1409,55 @@ def connected_components_star(
         ).collect()[0]
         return (row["n"], row["h"])
 
-    cur, free_cur = local_checkpoint_freeable(e0.distinct(), eager=False)
-    prev_sum = checksum(cur)
-
-    if prev_sum[0] <= driver_threshold:
+    with materialize(pairs.sparkSession) as m:
+        cur = m.checkpoint(e0.distinct(), eager=False)
+        prev_sum = checksum(cur)
+        if prev_sum[0] > driver_threshold:
+            for _ in range(max_rounds):
+                nxt = m.checkpoint(small_star(large_star(cur)), eager=False)
+                cur_sum = checksum(nxt)
+                m.free(cur)
+                cur = nxt
+                if cur_sum == prev_sum:
+                    break
+                prev_sum = cur_sum
+            else:
+                raise RuntimeError(f"star CC did not converge in {max_rounds} rounds")
+            # converged: every edge points node → component min; a node has a
+            # single rep at the fixpoint, min() guards intermediate ties
+            return m.result(cur.groupBy(F.col("u").alias("node")).agg(F.min("v").alias("rep")))
         # small-graph regime: union-find on the materialized edge list
         # (min root wins → rep is the component minimum, exactly the
         # star fixpoint).  The checksum action above already stored the
         # checkpoint blocks, so this toPandas reads them, not lineage.
         pdf = cur.toPandas()
-        free_cur()
-        parent: dict[int, int] = {}
 
-        def find(x: int) -> int:
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:
-                parent[x], x = root, parent[x]
-            return root
+    parent: dict[int, int] = {}
 
-        for a, b in zip(pdf["u"].values, pdf["v"].values):
-            ra, rb = find(int(a)), find(int(b))
-            if ra != rb:
-                if rb < ra:
-                    ra, rb = rb, ra
-                parent[rb] = ra
-        ids = sorted(set(pdf["u"].astype(int)) | set(pdf["v"].astype(int)))
-        rows = [(i, find(i)) for i in ids]
-        out_pdf = pd.DataFrame(
-            {
-                "node": [i for i, r in rows if i != r],
-                "rep": [r for i, r in rows if i != r],
-            },
-            dtype="int64",
-        )
-        return pairs.sparkSession.createDataFrame(
-            out_pdf, schema="node long, rep long"
-        )
+    def find(x: int) -> int:
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while parent.get(x, x) != x:
+            parent[x], x = root, parent[x]
+        return root
 
-    for _ in range(max_rounds):
-        nxt, free_nxt = local_checkpoint_freeable(
-            small_star(large_star(cur)), eager=False
-        )
-        cur_sum = checksum(nxt)
-        free_cur()
-        cur, free_cur = nxt, free_nxt
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    else:
-        raise RuntimeError(f"star CC did not converge in {max_rounds} rounds")
-    # converged: every edge points node → component min; a node has a
-    # single rep at the fixpoint, min() guards intermediate ties
-    out = cur.groupBy(F.col("u").alias("node")).agg(F.min("v").alias("rep"))
-    return out
+    for a, b in zip(pdf["u"].values, pdf["v"].values):
+        ra, rb = find(int(a)), find(int(b))
+        if ra != rb:
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra
+    ids = sorted(set(pdf["u"].astype(int)) | set(pdf["v"].astype(int)))
+    rows = [(i, find(i)) for i in ids]
+    out_pdf = pd.DataFrame(
+        {
+            "node": [i for i, r in rows if i != r],
+            "rep": [r for i, r in rows if i != r],
+        },
+        dtype="int64",
+    )
+    return pairs.sparkSession.createDataFrame(out_pdf, schema="node long, rep long")
 
 
 def semantic_dedup(
@@ -1673,6 +1656,7 @@ def _banded_rep_edges(
 
 
 def banded_duplicate_edges(
+    m: Materialization,
     hashes: DataFrame,
     key_cols: list[str],
     bands_arr,
@@ -1690,17 +1674,13 @@ def banded_duplicate_edges(
     feeds them all to ONE shared components pass instead of closing
     (and emitting, and re-keying) each arm first.
 
-    Returns ``(edges, free)``: a LAZY (id_a, id_b) frame — so the
-    caller's closure materializes every arm in its ONE
+    Returns a LAZY (id_a, id_b) frame over caches held in ``m`` — so
+    the caller's closure materializes every arm in its ONE
     checkpoint+checksum action instead of paying a per-arm
-    materialization action — and a cleanup closure releasing the
-    internal caches, to call once the edges have been consumed by an
-    action."""
-    h = hashes.select(F.col(id_col).alias("id"), *key_cols).persist()
-    grp = (
-        h.groupBy(*key_cols)
-        .agg(F.min("id").alias("hrep"), F.count(F.lit(1)).alias("cnt"))
-        .persist()
+    materialization action."""
+    h = m.persist(hashes.select(F.col(id_col).alias("id"), *key_cols))
+    grp = m.persist(
+        h.groupBy(*key_cols).agg(F.min("id").alias("hrep"), F.count(F.lit(1)).alias("cnt"))
     )
     rep_edges = _banded_rep_edges(grp, key_cols, bands_arr, max_hamming)
     mem_edges = (
@@ -1708,25 +1688,21 @@ def banded_duplicate_edges(
         .filter(F.col("id") != F.col("hrep"))
         .select(F.col("id").alias("id_a"), F.col("hrep").alias("id_b"))
     )
-
-    def free() -> None:
-        grp.unpersist(blocking=False)
-        h.unpersist(blocking=False)
-
-    return rep_edges.unionByName(mem_edges), free
+    return rep_edges.unionByName(mem_edges)
 
 
 def hash64_duplicate_edges(
+    m: Materialization,
     hashes: DataFrame,
     max_hamming: int = 3,
     id_col: str = "id",
 ):
     """``banded_duplicate_edges`` at hash64_canonical_dedup's width: raw
     (id_a, id_b) connectivity edges of the 64-bit perceptual-hash
-    near-dup graph (lazy, plus a cleanup closure), for callers that run
-    ONE shared closure over several modality arms (m14)."""
+    near-dup graph (lazy, over caches held in ``m``), for callers that
+    run ONE shared closure over several modality arms (m14)."""
     return banded_duplicate_edges(
-        hashes, ["lo", "hi"], _hash64_bands(), max_hamming=max_hamming, id_col=id_col
+        m, hashes, ["lo", "hi"], _hash64_bands(), max_hamming=max_hamming, id_col=id_col
     )
 
 
@@ -1762,39 +1738,27 @@ def banded_canonical_dedup(
     sizing decision, not a per-query one.  m11/m12/m16 witness the
     64-bit instantiation, m13 the 128-bit one.
     """
-    h = hashes.select(F.col(id_col).alias("id"), *key_cols).persist()
-    try:
-        grp = (
-            h.groupBy(*key_cols)
-            .agg(F.min("id").alias("hrep"), F.count(F.lit(1)).alias("cnt"))
-            .persist()
+    with materialize(hashes.sparkSession) as m:
+        h = m.persist(hashes.select(F.col(id_col).alias("id"), *key_cols))
+        grp = m.persist(
+            h.groupBy(*key_cols).agg(F.min("id").alias("hrep"), F.count(F.lit(1)).alias("cnt"))
         )
-        try:
-            edges = _banded_rep_edges(grp, key_cols, bands_arr, max_hamming)
-            cc = connected_components_star(edges)  # (node, rep); executes here
-            crep = grp.join(cc, grp.hrep == cc.node, "left").select(
-                *key_cols, "cnt", F.coalesce("rep", "hrep").alias("comp")
+        edges = _banded_rep_edges(grp, key_cols, bands_arr, max_hamming)
+        cc = connected_components_star(edges)  # (node, rep); executes here
+        crep = grp.join(cc, grp.hrep == cc.node, "left").select(
+            *key_cols, "cnt", F.coalesce("rep", "hrep").alias("comp")
+        )
+        sizes = crep.groupBy("comp").agg(F.sum("cnt").cast("bigint").alias("class_size"))
+        return m.result(
+            h.join(crep.select(*key_cols, "comp"), key_cols)
+            .join(sizes, "comp")
+            .filter(F.col("id") != F.col("comp"))
+            .select(
+                F.col("id").alias("member"),
+                F.col("comp").cast("bigint").alias("rep"),
+                "class_size",
             )
-            sizes = crep.groupBy("comp").agg(
-                F.sum("cnt").cast("bigint").alias("class_size")
-            )
-            out = (
-                h.join(crep.select(*key_cols, "comp"), key_cols)
-                .join(sizes, "comp")
-                .filter(F.col("id") != F.col("comp"))
-                .select(
-                    F.col("id").alias("member"),
-                    F.col("comp").cast("bigint").alias("rep"),
-                    "class_size",
-                )
-            )
-            # materialize while h/grp are cached; eager localCheckpoint
-            # (the q108 ordering discipline: checkpoint BEFORE unpersist)
-            return out.localCheckpoint()
-        finally:
-            grp.unpersist(blocking=False)
-    finally:
-        h.unpersist(blocking=False)
+        )
 
 
 def hash128_canonical_dedup(

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mapreducehs_spark.operators.iteration import materialize
+
 #: fixed-point scale: weights, margins, probabilities in micro-units
 MICRO = 1_000_000
 #: learning-rate denominator: w -= (mean_grad // LR_DEN) per step
@@ -288,9 +290,9 @@ def logreg_train_minibatch(
     labels = docs.select(
         "doc_id", (F.col("n_chars") >= label_chars).cast("bigint").alias("y")
     )
-    features = hashed_features(docs, n_buckets).persist()
-    labels = labels.repartition("doc_id").persist()
-    try:
+    with materialize(spark) as m:
+        features = m.persist(hashed_features(docs, n_buckets))
+        labels = m.persist(labels.repartition("doc_id"))
         feats_x = features.withColumn("f", F.lit(0).cast("bigint"))
         labs_x = labels.withColumn("f", F.lit(0).cast("bigint"))
         w = {b: 0 for b in range(n_buckets)}
@@ -315,9 +317,6 @@ def logreg_train_minibatch(
         return spark.createDataFrame(
             rows, "bucket bigint, w_step1 bigint, w_final bigint"
         )
-    finally:
-        features.unpersist(blocking=False)
-        labels.unpersist(blocking=False)
 
 
 def logreg_train_hashed(
@@ -343,9 +342,9 @@ def logreg_train_hashed(
     labels = docs.select(
         "doc_id", (F.col("n_chars") >= label_chars).cast("bigint").alias("y")
     )
-    features = hashed_features(docs, n_buckets).persist()
-    labels = labels.repartition("doc_id").persist()
-    try:
+    with materialize(spark) as m:
+        features = m.persist(hashed_features(docs, n_buckets))
+        labels = m.persist(labels.repartition("doc_id"))
         feats_x = features.withColumn("f", F.lit(0).cast("bigint"))
         labs_x = labels.withColumn("f", F.lit(0).cast("bigint"))
         w = {b: 0 for b in range(n_buckets)}
@@ -366,9 +365,6 @@ def logreg_train_hashed(
         return spark.createDataFrame(
             rows, "bucket bigint, w_step1 bigint, w_final bigint"
         )
-    finally:
-        features.unpersist(blocking=False)
-        labels.unpersist(blocking=False)
 
 
 def cv_fold_col(k: int):
@@ -411,15 +407,15 @@ def logreg_crossval(
     bit-for-bit in one unrolled SQL oracle."""
     spark = docs.sparkSession
     fold = cv_fold_col(k)
-    labels = docs.select(
-        "doc_id",
-        (F.col("n_chars") >= label_chars).cast("bigint").alias("y"),
-        fold.alias("fold"),
-    ).repartition("doc_id").persist()
-    features = (
-        hashed_features(docs, n_buckets).withColumn("fold", fold).persist()
-    )
-    try:
+    with materialize(spark) as m:
+        labels = m.persist(
+            docs.select(
+                "doc_id",
+                (F.col("n_chars") >= label_chars).cast("bigint").alias("y"),
+                fold.alias("fold"),
+            ).repartition("doc_id")
+        )
+        features = m.persist(hashed_features(docs, n_buckets).withColumn("fold", fold))
         # Round 12 (guide §2.6: the k training chains are INDEPENDENT —
         # only steps are sequential): every fold's gradient rides ONE
         # job per step, keyed by the held-out fold f.  A doc with fold
@@ -495,9 +491,6 @@ def logreg_crossval(
             for f in range(k)
             for ne, nc in [per.get(f, (0, 0))]
         ]
-    finally:
-        features.unpersist(blocking=False)
-        labels.unpersist(blocking=False)
     return spark.createDataFrame(
         out, "fold bigint, n_eval bigint, n_correct bigint, acc_micro bigint"
     )

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mapreducehs_spark.operators.iteration import Materialization
+
 #: width of the md5 prefix used as the uniform draw: 8 hex chars = 32
 #: bits; fraction f maps to the hex threshold floor(f * 16^8).
 _HEX_DIGITS = 8
@@ -168,19 +170,9 @@ def mixture_resample(
     )
 
 
-def global_positions(df: DataFrame, order_cols: list[str], out_col: str = "pos") -> DataFrame:
-    """See ``global_positions_cached`` — this convenience form discards
-    the cache handle, leaking the internally persisted range-sorted
-    frame until the session's cache is cleared.  Every production
-    caller uses the _cached form (materialize via localCheckpoint, then
-    unpersist — the t15/q113/q89/d17 pattern); this form remains for
-    tests and throwaway exploration only."""
-    return global_positions_cached(df, order_cols, out_col)[0]
-
-
-def global_positions_cached(
-    df: DataFrame, order_cols: list[str], out_col: str = "pos"
-) -> tuple[DataFrame, DataFrame]:
+def global_positions(
+    m: Materialization, df: DataFrame, order_cols: list[str], out_col: str = "pos"
+) -> DataFrame:
     """Assign every row its 1-based position in the global order of
     ``order_cols`` — scalably.
 
@@ -191,11 +183,10 @@ def global_positions_cached(
     id), count rows per partition (a key-only aggregate; only
     #partitions longs reach the driver), then add each partition's
     cumulative offset to its local running index in an Arrow kernel.
-    The sorted frame is persisted so both passes see the SAME sampled
-    range boundaries — it MUST stay cached until the positions are
-    materialized (recomputing could re-sample different boundaries),
-    which is why the second return value hands the cache to the caller
-    to unpersist after materialization.
+    The sorted frame is persisted in the caller's scope ``m`` so both
+    passes see the SAME sampled range boundaries — recomputing could
+    re-sample different ones, so the positions must be materialized
+    before the scope closes.
 
     The training-data use: a seeded content-hash order column turns
     this into a reproducible epoch shuffle (q89); downstream shard
@@ -204,10 +195,9 @@ def global_positions_cached(
     from pyspark import TaskContext
 
     par = df.sparkSession.sparkContext.defaultParallelism
-    s = (
+    s = m.persist(
         df.repartitionByRange(par, *[F.col(c) for c in order_cols])
         .sortWithinPartitions(*order_cols)
-        .persist()
     )
     pid_counts = (
         s.select(F.spark_partition_id().alias("__pid"))
@@ -234,19 +224,19 @@ def global_positions_cached(
             seen += len(pdf)
             yield pdf
 
-    return s.mapInPandas(kernel, schema=out_schema), s
+    return s.mapInPandas(kernel, schema=out_schema)
 
 
-def global_prefix_sums_cached(
+def global_prefix_sums(
+    m: Materialization,
     df: DataFrame,
     order_cols: list[str],
     weight_col: str,
     out_col: str = "start",
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """Assign every row the EXCLUSIVE prefix sum of ``weight_col`` over
     the global order of ``order_cols`` — the weighted generalization of
-    ``global_positions_cached`` (same two-phase idiom, same cache
-    contract).
+    ``global_positions`` (same two-phase idiom, same scope contract).
 
     This is the token-offset primitive of a pretraining corpus export:
     with weight = tokens-per-doc, ``out_col`` is each document's global
@@ -258,18 +248,13 @@ def global_prefix_sums_cached(
     per-partition weight subtotal reaching the driver (#partitions
     longs), then an Arrow kernel adds each partition's cumulative base
     to its local running sum.
-
-    Returns (frame-with-out_col, cache-handle); the sorted frame MUST
-    stay persisted until the result is materialized (the two passes
-    must see the same sampled range boundaries) — caller unpersists.
     """
     from pyspark import TaskContext
 
     par = df.sparkSession.sparkContext.defaultParallelism
-    s = (
+    s = m.persist(
         df.repartitionByRange(par, *[F.col(c) for c in order_cols])
         .sortWithinPartitions(*order_cols)
-        .persist()
     )
     pid_sums = (
         s.select(
@@ -301,20 +286,20 @@ def global_prefix_sums_cached(
             seen += int(csum[-1]) if len(w) else 0
             yield pdf
 
-    return s.mapInPandas(kernel, schema=out_schema), s
+    return s.mapInPandas(kernel, schema=out_schema)
 
 
-def grouped_prefix_sums_cached(
+def grouped_prefix_sums(
+    m: Materialization,
     df: DataFrame,
     group_cols: list[str],
     order_cols: list[str],
     weight_col: str,
     out_col: str = "start",
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """Assign every row the EXCLUSIVE prefix sum of ``weight_col``
     within its ``group_cols`` group, ordered by ``order_cols`` — the
-    per-shard twin of ``global_prefix_sums_cached`` (same cache
-    contract: caller unpersists after materializing).
+    per-shard twin of ``global_prefix_sums`` (same scope contract).
 
     This is the per-shard token-offset primitive of a sharded corpus
     export (per-source packing, per-cluster topical packing): a bare
@@ -328,13 +313,10 @@ def grouped_prefix_sums_cached(
     No per-group window ever materializes a group on one task; the
     only assumption is #groups ≪ #rows (it is a broadcast side).
     """
-    g, cache = global_prefix_sums_cached(
-        df, [*group_cols, *order_cols], weight_col, out_col="__gstart"
-    )
+    g = global_prefix_sums(m, df, [*group_cols, *order_cols], weight_col, out_col="__gstart")
     base = g.groupBy(*group_cols).agg(F.min("__gstart").alias("__base"))
-    out = (
+    return (
         g.join(F.broadcast(base), list(group_cols))
         .withColumn(out_col, (F.col("__gstart") - F.col("__base")).cast("long"))
         .drop("__gstart", "__base")
     )
-    return out, cache

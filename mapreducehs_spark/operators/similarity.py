@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mapreducehs_spark.functions.vector import cosine_similarity, dot_product, l2_normalize
+from mapreducehs_spark.operators.iteration import Materialization, materialize
 
 
 def cosine_topk(
@@ -113,6 +114,7 @@ def srp_signatures(
 
 
 def cosine_pairs_lsh(
+    m: Materialization,
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -128,7 +130,7 @@ def cosine_pairs_lsh(
     # interpreted dot products/row) plus normalization feed 2×bands join
     # sides — uncached, Catalyst re-derives them per side and inlines
     # the normalize into every pair projection (see cosine_topk).
-    sigs = srp_signatures(df, dim, n_planes, id_col, vec_col, seed).persist()
+    sigs = m.persist(srp_signatures(df, dim, n_planes, id_col, vec_col, seed))
     bits_per_band = n_planes // bands
     mask = (1 << bits_per_band) - 1
     band_cols = [
@@ -361,8 +363,8 @@ def train_ivf_centroids(
     train = emb.select(F.col(vec_col).alias("__v"))
     if sample_fraction is not None:
         train = train.sample(fraction=sample_fraction, seed=seed)
-    train = train.persist()
-    try:
+    with materialize(emb.sparkSession) as m:
+        train = m.persist(train)
         for _ in range(iters):
             sums = (
                 train.withColumn("cell", cell_argmax_udf(cents)(F.col("__v")))
@@ -381,8 +383,6 @@ def train_ivf_centroids(
             new[nonempty] = acc[nonempty] / cnt[nonempty, None]
             norms = np.linalg.norm(new, axis=1, keepdims=True)
             cents = np.where(norms > 0, new / np.where(norms > 0, norms, 1.0), cents)
-    finally:
-        train.unpersist()
     return cents
 
 
@@ -403,6 +403,7 @@ def label_centroids(
 
 
 def all_pairs_cosine_blocked(
+    m: Materialization,
     emb: DataFrame,
     threshold: float,
     id_col: str = "vec_id",
@@ -459,7 +460,7 @@ def all_pairs_cosine_blocked(
             }
         )
 
-    blocks = (
+    blocks = m.persist(
         emb.select(
             F.col(id_col).alias("__id"),
             F.col(vec_col).alias("__vec"),
@@ -467,7 +468,6 @@ def all_pairs_cosine_blocked(
         )
         .groupBy("__blk")
         .applyInPandas(pack, schema=packed_schema)
-        .persist()
     )
 
     # shuffle only the TINY (blk_a, blk_b) pair index and broadcast the
@@ -536,17 +536,17 @@ def all_pairs_cosine_blocked(
 
 
 def _kmeans_final_assignment(
+    m: Materialization,
     emb: DataFrame,
     k: int,
     iters: int,
     id_col: str,
     vec_col: str,
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """Shared Lloyd trajectory behind ``kmeans_profile`` and
     ``kmeans_assignments``: ``iters - 1`` centroid updates, then the
-    final assignment pass.  Returns ``(assigned, cache)`` where
-    ``assigned`` carries (id, v, a:struct<cluster,sqdist>) and
-    ``cache`` is the persisted vector frame the caller unpersists.
+    final assignment pass.  Returns (id, v, a:struct<cluster,sqdist>)
+    over the vector frame persisted in ``m``.
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -559,9 +559,9 @@ def _kmeans_final_assignment(
 
         @pandas_udf("struct<cluster: long, sqdist: double>")
         def assign(vs: pd.Series) -> pd.DataFrame:
-            m = np.asarray([np.asarray(v, dtype=np.float64) for v in vs])
+            x = np.asarray([np.asarray(v, dtype=np.float64) for v in vs])
             # ||v-c||^2 = ||v||^2 - 2 v.c + ||c||^2
-            d2 = (m * m).sum(axis=1)[:, None] - 2.0 * (m @ c.T) + c_sq[None, :]
+            d2 = (x * x).sum(axis=1)[:, None] - 2.0 * (x @ c.T) + c_sq[None, :]
             best = d2.argmin(axis=1)
             return pd.DataFrame(
                 {"cluster": labels[best], "sqdist": d2[np.arange(len(best)), best]}
@@ -582,7 +582,7 @@ def _kmeans_final_assignment(
     cids = [int(r["id"]) for r in init]
     cents = np.asarray([r["v"] for r in init], dtype=np.float64)
 
-    vecs = vecs.persist()
+    vecs = m.persist(vecs)
     for _ in range(max(iters - 1, 0)):
         assigned = vecs.withColumn("a", assign_udf(cids, cents)(F.col("v")))
         sums = (
@@ -601,7 +601,7 @@ def _kmeans_final_assignment(
             cnt[remap[r["cl"]]] = r["n"]
         cids = survivors
         cents = acc / cnt[:, None]
-    return vecs.withColumn("a", assign_udf(cids, cents)(F.col("v"))), vecs
+    return vecs.withColumn("a", assign_udf(cids, cents)(F.col("v")))
 
 
 def kmeans_profile(
@@ -627,44 +627,38 @@ def kmeans_profile(
     engine-portable.  Clusters that empty out drop from the codebook
     (standard Lloyd-with-pruning).
     """
-    final, vecs = _kmeans_final_assignment(emb, k, iters, id_col, vec_col)
-    try:
+    with materialize(emb.sparkSession) as m:
         return (
-            final.groupBy(F.col("a.cluster").alias("cluster"))
+            _kmeans_final_assignment(m, emb, k, iters, id_col, vec_col)
+            .groupBy(F.col("a.cluster").alias("cluster"))
             .agg(
                 F.count(F.lit(1)).alias("n_members"),
                 F.avg("a.sqdist").alias("avg_sqdist"),
             )
         )
-    finally:
-        vecs.unpersist()
 
 
 def kmeans_assignments(
+    m: Materialization,
     emb: DataFrame,
     k: int = 8,
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """Per-vector cluster labels from ``kmeans_profile``'s EXACT
     trajectory (same seeds, same ``iters - 1`` updates, same final
     assignment pass) — the labels are what embedding-curation passes
     consume (SemDeDup partitioning, topical packing, cluster-stratified
     selection), while ``kmeans_profile`` keeps the per-cluster rollup.
 
-    Returns ``(assignments, cache)`` with columns (id, cluster, sqdist);
-    ``cache`` is the persisted vector frame — the caller unpersists
-    after materializing (the ``global_prefix_sums_cached`` contract).
+    Returns columns (id, cluster, sqdist); the vector frame stays
+    persisted in the caller's scope ``m``.
     """
-    final, vecs = _kmeans_final_assignment(emb, k, iters, id_col, vec_col)
-    return (
-        final.select(
-            "id",
-            F.col("a.cluster").alias("cluster"),
-            F.col("a.sqdist").alias("sqdist"),
-        ),
-        vecs,
+    return _kmeans_final_assignment(m, emb, k, iters, id_col, vec_col).select(
+        "id",
+        F.col("a.cluster").alias("cluster"),
+        F.col("a.sqdist").alias("sqdist"),
     )
 
 

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from mapreducehs_spark.operators import dedup, multimodal, similarity, text, windows
 from mapreducehs_spark.operators import sampling as _sampling
+from mapreducehs_spark.operators.iteration import Materialization, materialize
 from mapreducehs_spark.operators.joins import asof_join
 from mapreducehs_spark.pipeline import word_count_pipeline
 from mapreducehs_spark.sources.catalog import load_table
@@ -86,8 +87,13 @@ def d01_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d02_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard near-dup pairs (the LSH verifier), via
     shingle explode + equi-join — never all-pairs."""
-    docs = _t(spark, sf_dir, "documents")
-    return dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.12, max_shingle_df=None)
+    with materialize(spark) as m:
+        return m.result(_d02_pairs(m, _t(spark, sf_dir, "documents")))
+
+
+def _d02_pairs(m: Materialization, docs: DataFrame) -> DataFrame:
+    """d02's exact-Jaccard pair law, shared by d06 and d27's truth arm."""
+    return dedup.ngram_jaccard_pairs(m, docs, n=3, threshold=0.12, max_shingle_df=None)
 
 
 @query("d03_minhash_lsh_pairs")  # oracle attached below (_d11_oracle(0.375))
@@ -113,7 +119,8 @@ def d04_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dedup.simhash_near_pairs) remains the throughput alternate
     (alt_d04 in bench.py), pinned in tests."""
     docs = _t(spark, sf_dir, "documents")
-    return dedup.simhash_checked(docs, max_hamming=3)
+    with materialize(spark) as m:
+        return dedup.simhash_checked(m, docs, max_hamming=3)
 
 
 @query(
@@ -139,7 +146,8 @@ def d05_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducehs_spark.operators.similarity import all_pairs_cosine_blocked
 
     emb = _t(spark, sf_dir, "embeddings")
-    return all_pairs_cosine_blocked(emb, threshold=0.4)
+    with materialize(spark) as m:
+        return m.result(all_pairs_cosine_blocked(m, emb, threshold=0.4))
 
 
 @query(
@@ -188,9 +196,8 @@ def d06_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     its cluster representative (min doc id).  The iterative Spark loop
     is oracle-checked against a DuckDB RECURSIVE transitive closure:
     genuinely-iterative dataflow, hash-matched anyway."""
-    docs = _t(spark, sf_dir, "documents")
-    pairs = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.12, max_shingle_df=None)
-    return dedup.resolve_duplicate_clusters(pairs)
+    with materialize(spark) as m:
+        return dedup.resolve_duplicate_clusters(_d02_pairs(m, _t(spark, sf_dir, "documents")))
 
 
 @query("d07_near_dedup_drop_list")  # oracle attached below (_d15_oracle(0.25, 0.6))
@@ -348,8 +355,9 @@ def d11_minhash_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     literal-seed universal-hash permutations, concatenated band keys —
     the DuckDB oracle replays signatures, banding, candidate generation
     and the agreement estimate bit-for-bit
-    (operators/dedup.minhash_lsh_pairs_checked).  d03 remains the
-    vectorized throughput path; this pins the LSH algorithm itself."""
+    (operators/dedup.minhash_lsh_pairs_checked).  d03 runs the same
+    kernel at a stricter threshold; the vectorized throughput path is
+    dedup.minhash_lsh_pairs (bench.py's alt_d03)."""
     docs = _t(spark, sf_dir, "documents")
     return dedup.minhash_lsh_pairs_checked(docs, est_threshold=0.25)
 
@@ -397,10 +405,12 @@ def d12_simhash_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs with the whole pipeline value-checked
     (operators/dedup.simhash_checked): md5-fold token hashes,
     frequency-weighted per-bit majority votes, 4x8-bit banding, xor
-    popcount verification — DuckDB replays all of it.  d04 remains the
-    vectorized 63-bit throughput path."""
+    popcount verification — DuckDB replays all of it.  d04 runs the
+    same kernel at hamming <= 3; the vectorized 63-bit throughput path
+    is dedup.simhash_near_pairs (bench.py's alt_d04)."""
     docs = _t(spark, sf_dir, "documents")
-    return dedup.simhash_checked(docs, max_hamming=2)
+    with materialize(spark) as m:
+        return dedup.simhash_checked(m, docs, max_hamming=2)
 
 
 @query("d15_near_dedup_checked", oracle=_d15_oracle())
@@ -469,8 +479,9 @@ def d16_embedding_dedup_drop_list(spark: SparkSession, sf_dir: str) -> DataFrame
     from mapreducehs_spark.operators.similarity import all_pairs_cosine_blocked
 
     emb = _t(spark, sf_dir, "embeddings")
-    pairs = all_pairs_cosine_blocked(emb, threshold=0.4).select("id_a", "id_b")
-    clusters = dedup.resolve_duplicate_clusters(pairs)
+    with materialize(spark) as m:
+        pairs = all_pairs_cosine_blocked(m, emb, threshold=0.4).select("id_a", "id_b")
+        clusters = dedup.resolve_duplicate_clusters(pairs)
     return (
         clusters.filter(F.col("doc_id") != F.col("rep_id"))
         .select(F.col("doc_id").alias("vec_id"), "rep_id")
@@ -519,13 +530,13 @@ def d13_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     count therefore equals the string-set intersection only absent a
     within-pair 64-bit collision, a ~|A||B|/2^64 event that never
     fires at any tested scale.  The pair result is tiny, so it is
-    materialized eagerly (localCheckpoint) and the shingle frame
-    unpersisted immediately — no cached blocks outlive the call."""
+    materialized eagerly (the result checkpoint) and the shingle frame
+    freed immediately — no cached blocks outlive the call."""
     from mapreducehs_spark.operators.dedup import hashed_shingle_rows
 
     docs = _t(spark, sf_dir, "documents")
-    ex = hashed_shingle_rows(docs, "text", "doc_id", 3).persist()
-    try:
+    with materialize(spark) as m:
+        ex = m.persist(hashed_shingle_rows(docs, "text", "doc_id", 3))
         a = ex.select(
             F.col("id").alias("id_small"), F.col("set_size").alias("size_small"), "shingle"
         )
@@ -536,17 +547,14 @@ def d13_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("id_small", "id_big", "size_small", "size_big")
             .agg(F.count(F.lit(1)).alias("inter"))
         )
-        return (
+        return m.result(
             inter.withColumn(
                 "containment",
                 F.round(F.col("inter") / F.col("size_small").cast("double"), 6),
             )
             .filter((F.col("containment") >= 0.5) & (F.col("size_small") < F.col("size_big")))
             .select("id_small", "id_big", "containment")
-            .localCheckpoint()
         )
-    finally:
-        ex.unpersist(blocking=False)
 
 
 @query(
@@ -607,34 +615,30 @@ def d17_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     RANGE SORT plus W narrow self-equi-joins on position — O(W·n)
     pairs total, never all-pairs, and no hash randomness, so unlike
     LSH the WHOLE operator (key, ordering, window, verification) is
-    value-checked.  Positions come from sampling.global_positions_cached
+    value-checked.  Positions come from sampling.global_positions
     (range-repartition + offsets — q89's machinery), not a single-task
     global window; the narrow (doc_id, pos) frame is checkpointed once
     so BOTH sides of the W-offset self-join read the same materialized
     positions and the full-width sorted cache is freed immediately; the
     duplicate-jaccard filter is the integer-exact form
     (na+nb ≤ 3·inter ⟺ J ≥ 0.5), so no float boundary exists."""
-    from mapreducehs_spark.operators.sampling import global_positions_cached
+    from mapreducehs_spark.operators.sampling import global_positions
 
     docs = _t(spark, sf_dir, "documents")
-    # Tokenized once: the distinct-token frame feeds the key projection
-    # AND both verify sides, and without a barrier the regex tokenize +
-    # array_sort(array_distinct(...)) chain re-runs per reference
-    # (measured: 2 extra corpus scans for ta/tb).
-    toks = docs.select(
-        "doc_id",
-        F.array_sort(F.array_distinct(text.tokens("text"))).alias("dt"),
-    ).localCheckpoint()
-    keyed = toks.select(
-        "doc_id",
-        F.concat_ws("|", F.slice("dt", 1, 3)).alias("snm_key"),
-        F.size("dt").alias("n_dt"),
-    )
-    ranked, cache = global_positions_cached(keyed, ["snm_key", "doc_id"])
-    try:
-        pos = ranked.select("doc_id", "pos").localCheckpoint()
-    finally:
-        cache.unpersist(blocking=False)
+    with materialize(spark) as m:
+        # Tokenized once: the distinct-token frame feeds the key projection
+        # AND both verify sides, and without a barrier the regex tokenize +
+        # array_sort(array_distinct(...)) chain re-runs per reference
+        # (measured: 2 extra corpus scans for ta/tb).
+        toks = m.result(
+            docs.select("doc_id", F.array_sort(F.array_distinct(text.tokens("text"))).alias("dt"))
+        )
+        keyed = toks.select(
+            "doc_id",
+            F.concat_ws("|", F.slice("dt", 1, 3)).alias("snm_key"),
+            F.size("dt").alias("n_dt"),
+        )
+        pos = m.result(global_positions(m, keyed, ["snm_key", "doc_id"]).select("doc_id", "pos"))
     a = pos.select(F.col("doc_id").alias("id_a"), F.col("pos").alias("pos_a"))
     b = pos.select(F.col("doc_id").alias("id_b"), F.col("pos").alias("pos_b"))
     offsets = spark.range(1, 4).select(F.col("id").alias("off"))
@@ -734,48 +738,47 @@ def d18_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     # three plan subtrees (prefix index, both verify sides) read the
     # shingle ARRAYS — persist the doc-count-sized array frame so
-    # tokenize+shingle runs once, unpersisted after the checkpointed
-    # result materializes (d13 discipline)
-    shf = dedup.shingle_frame(docs, "text", "doc_id", 3).persist()
-    rows = shf.select(
-        F.col("id").alias("doc_id"),
-        F.size("sh").alias("n"),
-        F.explode_outer("sh").alias("shingle"),
-    ).filter(F.col("shingle").isNotNull())
-    # document frequency as a window over the shingle partitioning, and
-    # the prefix rank as a window over the doc partitioning ordered by
-    # (df, shingle) — same selection as a global df-rank join, minus the
-    # vocabulary sort and its join (two shuffles total, both corpus-wide
-    # but narrow)
-    wf = Window.partitionBy("shingle")
-    wd = Window.partitionBy("doc_id").orderBy(F.col("df").asc(), F.col("shingle").asc())
-    pref = (
-        rows.withColumn("df", F.count(F.lit(1)).over(wf))
-        .withColumn("rr", F.row_number().over(wd))
-        .filter(F.col("rr") <= F.expr("n - (n + 1) div 2 + 1"))
-        .select("doc_id", "shingle")
-    )
-    a = pref.select(F.col("doc_id").alias("id_a"), "shingle")
-    b = pref.select(F.col("doc_id").alias("id_b"), "shingle")
-    cand = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    # verify on the candidate pairs only, intersecting the shingle
-    # ARRAYS in-place (array_intersect is a codegen'd set intersection
-    # over the two ~100-element arrays) — two narrow id-keyed joins
-    # replace the explode-join + groupBy count of the postings
-    # formulation: no shingle-row shuffle, no pair-count aggregation
-    sa = shf.select(
-        F.col("id").alias("id_a"), F.col("sh").alias("sh_a"), F.size("sh").alias("na")
-    )
-    sb = shf.select(
-        F.col("id").alias("id_b"), F.col("sh").alias("sh_b"), F.size("sh").alias("nb")
-    )
-    try:
-        return (
+    # tokenize+shingle runs once
+    with materialize(spark) as m:
+        shf = m.persist(dedup.shingle_frame(docs, "text", "doc_id", 3))
+        rows = shf.select(
+            F.col("id").alias("doc_id"),
+            F.size("sh").alias("n"),
+            F.explode_outer("sh").alias("shingle"),
+        ).filter(F.col("shingle").isNotNull())
+        # document frequency as a window over the shingle partitioning, and
+        # the prefix rank as a window over the doc partitioning ordered by
+        # (df, shingle) — same selection as a global df-rank join, minus the
+        # vocabulary sort and its join (two shuffles total, both corpus-wide
+        # but narrow)
+        wf = Window.partitionBy("shingle")
+        wd = Window.partitionBy("doc_id").orderBy(F.col("df").asc(), F.col("shingle").asc())
+        pref = (
+            rows.withColumn("df", F.count(F.lit(1)).over(wf))
+            .withColumn("rr", F.row_number().over(wd))
+            .filter(F.col("rr") <= F.expr("n - (n + 1) div 2 + 1"))
+            .select("doc_id", "shingle")
+        )
+        a = pref.select(F.col("doc_id").alias("id_a"), "shingle")
+        b = pref.select(F.col("doc_id").alias("id_b"), "shingle")
+        cand = (
+            a.join(b, "shingle")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b")
+            .distinct()
+        )
+        # verify on the candidate pairs only, intersecting the shingle
+        # ARRAYS in-place (array_intersect is a codegen'd set intersection
+        # over the two ~100-element arrays) — two narrow id-keyed joins
+        # replace the explode-join + groupBy count of the postings
+        # formulation: no shingle-row shuffle, no pair-count aggregation
+        sa = shf.select(
+            F.col("id").alias("id_a"), F.col("sh").alias("sh_a"), F.size("sh").alias("na")
+        )
+        sb = shf.select(
+            F.col("id").alias("id_b"), F.col("sh").alias("sh_b"), F.size("sh").alias("nb")
+        )
+        return m.result(
             cand.join(sa, "id_a")
             .join(sb, "id_b")
             .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
@@ -789,10 +792,7 @@ def d18_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                     6,
                 ).alias("jaccard"),
             )
-            .localCheckpoint()
         )
-    finally:
-        shf.unpersist(blocking=False)
 
 
 @query(
@@ -1420,7 +1420,8 @@ def d26_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 50 == 0)
     train = docs.filter(F.col("doc_id") % 50 != 0)
-    return dedup.decontaminate_fuzzy(train, bench, est_threshold=0.25)
+    with materialize(spark) as m:
+        return dedup.decontaminate_fuzzy(m, train, bench, est_threshold=0.25)
 
 
 # =========================================================================
@@ -1465,28 +1466,26 @@ def d27_lsh_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit; cost is the two arms plus a pair-keyed join, and the
     truth arm's shingle equi-join is the same never-all-pairs plan d02
     pins."""
-    truth = d02_ngram_jaccard_pairs(spark, sf_dir).filter(
-        F.col("jaccard") >= 0.5
-    ).select("id_a", "id_b")
-    lsh = dedup.minhash_lsh_pairs_checked(
-        _t(spark, sf_dir, "documents"), est_threshold=0.25
-    ).select("id_a", "id_b")
+    docs = _t(spark, sf_dir, "documents")
+    lsh = dedup.minhash_lsh_pairs_checked(docs, est_threshold=0.25).select("id_a", "id_b")
     # ONE action for all three counts (round 12, guide §2.6): the old
     # three-count form (truth.count(), lsh.count(), join().count()) ran
     # three jobs, and the third recomputed BOTH arms from the scan —
     # exchange reuse does not span actions.  Both pair sets are unique
     # by construction (grouped / dropDuplicates), so marker counts over
     # one full-outer join are exactly the three counts.
-    row = (
-        truth.withColumn("__t", F.lit(1))
-        .join(lsh.withColumn("__l", F.lit(1)), ["id_a", "id_b"], "full_outer")
-        .agg(
-            F.count("__t").alias("nt"),
-            F.count("__l").alias("nl"),
-            F.count(F.when(F.col("__t").isNotNull() & F.col("__l").isNotNull(), 1)).alias("nh"),
+    with materialize(spark) as m:
+        truth = _d02_pairs(m, docs).filter(F.col("jaccard") >= 0.5).select("id_a", "id_b")
+        row = (
+            truth.withColumn("__t", F.lit(1))
+            .join(lsh.withColumn("__l", F.lit(1)), ["id_a", "id_b"], "full_outer")
+            .agg(
+                F.count("__t").alias("nt"),
+                F.count("__l").alias("nl"),
+                F.count(F.when(F.col("__t").isNotNull() & F.col("__l").isNotNull(), 1)).alias("nh"),
+            )
+            .collect()[0]
         )
-        .collect()[0]
-    )
     n_truth, n_lsh, n_hit = int(row["nt"]), int(row["nl"]), int(row["nh"])
     return spark.createDataFrame(
         [
@@ -1559,53 +1558,55 @@ def _d28_graphs(
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    # materialize=True (round 12): the base signatures feed TWO separate
-    # actions (the base closure, then the merged closure's verify /
-    # index probe) and d31 adds a third (the stability compare) — AQE
-    # exchange reuse cannot span actions, so without the checkpoint the
-    # corpus re-tokenized+re-hashed once per action (guide §2.4).
-    sigs_base, banded_base = dedup.minhash_checked_signatures(docs, materialize=True)
-    sigs_new, banded_new = dedup.minhash_checked_signatures(batch, materialize=True)
+    # checkpointed signatures (round 12): the base signatures feed TWO
+    # separate actions (the base closure, then the merged closure's
+    # verify / index probe) — AQE exchange reuse cannot span actions,
+    # so without the checkpoint the corpus re-tokenized+re-hashed once
+    # per action (guide §2.4).  Both closures materialize their labels,
+    # so the signatures are freed on return.
+    with materialize(spark) as m:
+        sigs_base, banded_base = dedup.minhash_checked_signatures(docs, m=m)
+        sigs_new, banded_new = dedup.minhash_checked_signatures(batch, m=m)
 
-    # stored state: the base graph's labels (built once, then persisted
-    # in production — the d09 base-index framing)
-    cand_base = (
-        banded_base.select(F.col("id").alias("id_a"), "band", "bk")
-        .join(
-            banded_base.select(F.col("id").alias("id_b"), "band", "bk"),
-            ["band", "bk"],
+        # stored state: the base graph's labels (built once, then persisted
+        # in production — the d09 base-index framing)
+        cand_base = (
+            banded_base.select(F.col("id").alias("id_a"), "band", "bk")
+            .join(
+                banded_base.select(F.col("id").alias("id_b"), "band", "bk"),
+                ["band", "bk"],
+            )
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b")
+            .dropDuplicates(["id_a", "id_b"])
         )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    base_edges = dedup.minhash_checked_verify(cand_base, sigs_base, 0.25).select(
-        "id_a", "id_b"
-    )
-    labels = dedup.connected_components_star(base_edges)
-
-    # delta path: batch bands probe the FULL index (base + batch);
-    # normalize to undirected (min, max) pairs — base-base never appears
-    index = banded_base.unionByName(banded_new)
-    cand_new = (
-        banded_new.select(F.col("id").alias("id_a"), "band", "bk")
-        .join(index.select(F.col("id").alias("id_b"), "band", "bk"), ["band", "bk"])
-        .filter(F.col("id_a") != F.col("id_b"))
-        .select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
+        base_edges = dedup.minhash_checked_verify(cand_base, sigs_base, 0.25).select(
+            "id_a", "id_b"
         )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sigs_all = sigs_base.unionByName(sigs_new)
-    new_edges = dedup.minhash_checked_verify(cand_new, sigs_all, 0.25).select(
-        "id_a", "id_b"
-    )
+        labels = dedup.connected_components_star(base_edges)
 
-    merged = labels.select(
-        F.col("node").alias("id_a"), F.col("rep").alias("id_b")
-    ).unionByName(new_edges)
-    return labels, dedup.connected_components_star(merged)
+        # delta path: batch bands probe the FULL index (base + batch);
+        # normalize to undirected (min, max) pairs — base-base never appears
+        index = banded_base.unionByName(banded_new)
+        cand_new = (
+            banded_new.select(F.col("id").alias("id_a"), "band", "bk")
+            .join(index.select(F.col("id").alias("id_b"), "band", "bk"), ["band", "bk"])
+            .filter(F.col("id_a") != F.col("id_b"))
+            .select(
+                F.least("id_a", "id_b").alias("id_a"),
+                F.greatest("id_a", "id_b").alias("id_b"),
+            )
+            .dropDuplicates(["id_a", "id_b"])
+        )
+        sigs_all = sigs_base.unionByName(sigs_new)
+        new_edges = dedup.minhash_checked_verify(cand_new, sigs_all, 0.25).select(
+            "id_a", "id_b"
+        )
+
+        merged = labels.select(
+            F.col("node").alias("id_a"), F.col("rep").alias("id_b")
+        ).unionByName(new_edges)
+        return labels, dedup.connected_components_star(merged)
 
 
 @query("d28_incremental_components", oracle=_d28_oracle())
@@ -2070,71 +2071,71 @@ def d32_lsh_banding_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    sigs = minhash_sigs_scan_shaped(docs).localCheckpoint()
-    # Truth decision at J >= 1/2 as a PURE-INTEGER compare
-    # (inter*2 >= union) on the raw intersection counts — identical to
-    # the oracle's predicate by construction, no rounded double in the
-    # decision (round-12 fix: the prior arm filtered d02's
-    # round(j, 6), which could diverge from the oracle's unrounded
-    # ratio for true J in [0.4999995, 0.5)).
-    truth = (
-        dedup.ngram_jaccard_intersections(docs, n=3, max_shingle_df=None)
-        .filter(
-            F.col("inter") * 2
-            >= F.col("size_a") + F.col("size_b") - F.col("inter")
-        )
-        .select("id_a", "id_b")
-        .localCheckpoint()
-    )
-    n_truth = truth.count()
-    # ONE job for the whole sweep (round 12, guide §2.6/§2.4): the old
-    # per-config loop ran 4 actions per config (checkpoint + 3 counts,
-    # 13 jobs total); banding all three configs into one frame keyed by
-    # nb turns candidates + agreement + truth hits into a single
-    # 3-row grouped aggregate — same banded rows and candidate pairs,
-    # shuffled once instead of once per config, and the per-config
-    # scalar counts arrive in one driver round-trip.
-    banded_all = None
-    for nb in (2, 4, 8):
-        part = sigs.select(
-            F.lit(nb).alias("nb"),
-            "id",
-            F.posexplode(_minhash_band_keys("mins", nb)).alias("band", "bk"),
-        )
-        banded_all = part if banded_all is None else banded_all.unionByName(part)
-    a, b = banded_all.alias("a"), banded_all.alias("b")
-    cand = (
-        a.join(b, ["nb", "band", "bk"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select("nb", F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    agree = F.aggregate(
-        F.zip_with(
-            F.col("sa.mins"),
-            F.col("sb.mins"),
-            lambda x, y: (x == y).cast("int"),
-        ),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-    est_ok = F.col("agree") * 4 >= _NP
-    stats = {
-        int(r["nb"]): r
-        for r in (
-            cand.join(sigs.alias("sa"), F.col("id_a") == F.col("sa.id"))
-            .join(sigs.alias("sb"), F.col("id_b") == F.col("sb.id"))
-            .select("nb", "id_a", "id_b", agree.alias("agree"))
-            .join(truth.withColumn("__h", F.lit(1)), ["id_a", "id_b"], "left")
-            .groupBy("nb")
-            .agg(
-                F.count(F.lit(1)).alias("n_cand"),
-                F.count(F.when(est_ok, 1)).alias("n_est"),
-                F.count(F.when(est_ok & F.col("__h").isNotNull(), 1)).alias("n_hits"),
+    with materialize(spark) as m:
+        sigs = m.checkpoint(minhash_sigs_scan_shaped(docs))
+        # Truth decision at J >= 1/2 as a PURE-INTEGER compare
+        # (inter*2 >= union) on the raw intersection counts — identical to
+        # the oracle's predicate by construction, no rounded double in the
+        # decision (round-12 fix: the prior arm filtered d02's
+        # round(j, 6), which could diverge from the oracle's unrounded
+        # ratio for true J in [0.4999995, 0.5)).
+        truth = m.checkpoint(
+            dedup.ngram_jaccard_intersections(m, docs, n=3, max_shingle_df=None)
+            .filter(
+                F.col("inter") * 2
+                >= F.col("size_a") + F.col("size_b") - F.col("inter")
             )
-            .collect()
+            .select("id_a", "id_b")
         )
-    }
+        n_truth = truth.count()
+        # ONE job for the whole sweep (round 12, guide §2.6/§2.4): the old
+        # per-config loop ran 4 actions per config (checkpoint + 3 counts,
+        # 13 jobs total); banding all three configs into one frame keyed by
+        # nb turns candidates + agreement + truth hits into a single
+        # 3-row grouped aggregate — same banded rows and candidate pairs,
+        # shuffled once instead of once per config, and the per-config
+        # scalar counts arrive in one driver round-trip.
+        banded_all = None
+        for nb in (2, 4, 8):
+            part = sigs.select(
+                F.lit(nb).alias("nb"),
+                "id",
+                F.posexplode(_minhash_band_keys("mins", nb)).alias("band", "bk"),
+            )
+            banded_all = part if banded_all is None else banded_all.unionByName(part)
+        a, b = banded_all.alias("a"), banded_all.alias("b")
+        cand = (
+            a.join(b, ["nb", "band", "bk"])
+            .filter(F.col("a.id") < F.col("b.id"))
+            .select("nb", F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+            .distinct()
+        )
+        agree = F.aggregate(
+            F.zip_with(
+                F.col("sa.mins"),
+                F.col("sb.mins"),
+                lambda x, y: (x == y).cast("int"),
+            ),
+            F.lit(0),
+            lambda acc, v: acc + v,
+        )
+        est_ok = F.col("agree") * 4 >= _NP
+        stats = {
+            int(r["nb"]): r
+            for r in (
+                cand.join(sigs.alias("sa"), F.col("id_a") == F.col("sa.id"))
+                .join(sigs.alias("sb"), F.col("id_b") == F.col("sb.id"))
+                .select("nb", "id_a", "id_b", agree.alias("agree"))
+                .join(truth.withColumn("__h", F.lit(1)), ["id_a", "id_b"], "left")
+                .groupBy("nb")
+                .agg(
+                    F.count(F.lit(1)).alias("n_cand"),
+                    F.count(F.when(est_ok, 1)).alias("n_est"),
+                    F.count(F.when(est_ok & F.col("__h").isNotNull(), 1)).alias("n_hits"),
+                )
+                .collect()
+            )
+        }
     out = []
     for nb in (2, 4, 8):
         r = stats.get(nb)

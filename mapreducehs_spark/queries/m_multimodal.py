@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from mapreducehs_spark.operators import dedup, multimodal, similarity, text, windows
 from mapreducehs_spark.operators import sampling as _sampling
+from mapreducehs_spark.operators.iteration import Materialization, materialize
 from mapreducehs_spark.operators.joins import asof_join
 from mapreducehs_spark.pipeline import word_count_pipeline
 from mapreducehs_spark.sources.catalog import load_table
@@ -703,15 +704,14 @@ def m14_crossmodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     payloads = render_pgm_payloads(docs, "doc_id", width=32, height=16)
-    img, free_img = dedup.hash64_duplicate_edges(ahash_64(payloads), max_hamming=3)
-    txt, free_txt = dedup.near_dedup_verified_edges_checked(
-        docs, est_threshold=0.25, jaccard_threshold=0.6
-    )
-    # ONE action (the closure's checkpoint+checksum) materializes both
-    # lazy arms; their internal caches are dead once it returns
-    comp = dedup.connected_components_star(img.unionByName(txt))
-    free_img()
-    free_txt()
+    with materialize(spark) as m:
+        img = dedup.hash64_duplicate_edges(m, ahash_64(payloads), max_hamming=3)
+        txt = dedup.near_dedup_verified_edges_checked(
+            m, docs, est_threshold=0.25, jaccard_threshold=0.6
+        )
+        # ONE action (the closure's checkpoint+checksum) materializes both
+        # lazy arms; their internal caches are freed once it returns
+        comp = dedup.connected_components_star(img.unionByName(txt))
     sizes = comp.groupBy("rep").agg(
         (F.count(F.lit(1)) + 1).cast("bigint").alias("class_size")
     )
@@ -765,13 +765,15 @@ def m15_alignment_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     one decode scan over the media store (hashes leave the Arrow
     batch, never rasters), two hash-keyed equi-joins carrying
     (id, 2x32-bit halves) only, output linear in FLAGGED pairs.  The
-    hash frame is localCheckpointed once — two joins consume it
-    without re-decoding the corpus (simhash_checked discipline)."""
+    hash frame is checkpointed once and handed out with the result —
+    two joins consume it without re-decoding the corpus
+    (simhash_checked discipline)."""
     from mapreducehs_spark.operators.multimodal import ahash_64, render_pgm_payloads
 
     docs = _t(spark, sf_dir, "documents")
     payloads = render_pgm_payloads(docs, "doc_id", width=32, height=16)
-    ih = ahash_64(payloads).localCheckpoint()
+    with materialize(spark) as m:
+        ih = m.result(ahash_64(payloads))
     pairs = docs.select(
         "doc_id",
         F.when(F.col("doc_id") % 7 == 3, F.col("doc_id") - 1)
@@ -1171,7 +1173,7 @@ def m18_vlm_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch twin, with multimodal widths): shards pack independently, so
     export parallelism is #sources wide with no cross-shard barrier.
 
-    Offsets via the round-9 ``sampling.grouped_prefix_sums_cached``
+    Offsets via the round-9 ``sampling.grouped_prefix_sums``
     seam (t46's): global two-phase prefix sums over (source, doc_id)
     minus each source's broadcast base — never a per-source window
     that would collapse a shard onto one task at 100 TB.  Plan: one
@@ -1179,19 +1181,16 @@ def m18_vlm_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     window-free, join-free apart from the #sources-row broadcast.
     Reference witness: O1 fission + O2 ordered fold
     (src/Core/MapReduceC.hs:24-26)."""
-    df, cache = _m18_build(spark, sf_dir)
-    try:
-        return df.localCheckpoint()
-    finally:
-        cache.unpersist(blocking=False)
+    with materialize(spark) as m:
+        return m.result(_m18_build(m, sf_dir))
 
 
-def _m18_build(spark: SparkSession, sf_dir: str):
+def _m18_build(m: Materialization, sf_dir: str) -> DataFrame:
     """m18 pre-checkpoint builder (q107/t40 discipline)."""
-    from mapreducehs_spark.operators.sampling import grouped_prefix_sums_cached
+    from mapreducehs_spark.operators.sampling import grouped_prefix_sums
 
     C = _M18_CTX
-    docs = _t(spark, sf_dir, "documents")
+    docs = _t(m.spark, sf_dir, "documents")
     keyed = docs.select(
         "source",
         "doc_id",
@@ -1201,9 +1200,7 @@ def _m18_build(spark: SparkSession, sf_dir: str):
             + F.lit(2)
         ).alias("w"),
     )
-    starts, cache = grouped_prefix_sums_cached(
-        keyed, ["source"], ["doc_id"], "w", out_col="start"
-    )
+    starts = grouped_prefix_sums(m, keyed, ["source"], ["doc_id"], "w", out_col="start")
     x = starts.select(
         "source",
         "doc_id",
@@ -1245,8 +1242,7 @@ def _m18_build(spark: SparkSession, sf_dir: str):
             F.expr(f"cast((n_fill * 1000000L) div {C} as bigint)").alias(
                 "fill_micro"
             ),
-        ),
-        cache,
+        )
     )
 
 

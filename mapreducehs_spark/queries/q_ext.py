@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from mapreducehs_spark.operators import dedup, multimodal, similarity, text, windows
 from mapreducehs_spark.operators import sampling as _sampling
+from mapreducehs_spark.operators.iteration import Materialization, materialize
 from mapreducehs_spark.operators.joins import asof_join
 from mapreducehs_spark.pipeline import word_count_pipeline
 from mapreducehs_spark.sources.catalog import load_table
@@ -860,29 +861,26 @@ def q89_deterministic_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     export step before training (new epoch = new seed string), with the
     guarantees random() can't give: stable under re-runs, re-sharding,
     and engine changes.  Positions come from
-    operators/sampling.global_positions_cached — range-partitioned sort
+    operators/sampling.global_positions — range-partitioned sort
     + per-partition offsets, never the single-task gather a bare
     ``row_number() OVER (ORDER BY ...)`` collapses to — and shard
     assignment is arithmetic on the position; at 100 TB the per-shard
     writer is ``partitionBy(shard)`` on this frame (which materializes
-    it, exactly like the localCheckpoint here).  Both engines share the
+    it, exactly like the result checkpoint here).  Both engines share the
     md5 definition, so the permutation is value-checked."""
-    from mapreducehs_spark.operators.sampling import global_positions_cached
+    from mapreducehs_spark.operators.sampling import global_positions
 
     docs = _t(spark, sf_dir, "documents")
     keyed = docs.select(
         "doc_id",
         F.md5(F.concat(F.lit("epoch7_"), F.col("doc_id").cast("string"))).alias("shuffle_key"),
     )
-    pos, cache = global_positions_cached(keyed, ["shuffle_key", "doc_id"])
-    try:
-        return (
+    with materialize(spark) as m:
+        pos = global_positions(m, keyed, ["shuffle_key", "doc_id"])
+        return m.result(
             pos.withColumn("shard", F.floor((F.col("pos") - 1) / 64).cast("bigint"))
             .select("doc_id", "pos", "shard")
-            .localCheckpoint()  # materialize, then free the sorted cache
         )
-    finally:
-        cache.unpersist(blocking=False)
 
 
 @query(
@@ -1671,7 +1669,7 @@ def _q96_oracle(iters: int = 3, damp_num: int = 85, damp_den: int = 100) -> str:
     return head + "".join(body) + tail
 
 
-def _symmetrized_trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _symmetrized_trade_edges(m: Materialization, sf_dir: str) -> DataFrame:
     """Shared adjacency build for the trade-graph family (q96 PageRank,
     q108 BFS): distinct customer↔supplier pairs, symmetrized, persisted
     hash-partitioned on ``src`` so iterative joins reuse the layout.
@@ -1685,19 +1683,17 @@ def _symmetrized_trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterations need.  The previous form (distinct → symmetrize →
     repartition) paid an extra full exchange for the distinct
     (measured same-session at sf0.1: q96 median 3.02 s → 2.41 s).
-    Caller owns the persist handle (unpersist in finally).
     """
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    o = _t(m.spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = _t(m.spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     traded = li.join(o, F.col("l_orderkey") == F.col("o_orderkey")).select(
         (F.col("o_custkey") * 2).alias("src"),
         (F.col("l_suppkey") * 2 + 1).alias("dst"),
     )
-    return (
+    return m.persist(
         traded.unionByName(traded.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .repartition("src")
         .dropDuplicates(["src", "dst"])
-        .persist()
     )
 
 
@@ -1724,13 +1720,13 @@ def q96_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # node-sized rank frame shuffles — without this the 2|E| frame
     # re-exchanged once per iteration (measured ~30% of the query).
     # Build shared with q108 (single-exchange dedup-in-partition form).
-    edges = _symmetrized_trade_edges(spark, sf_dir)
-    try:
-        deg = (
+    with materialize(spark) as m:
+        edges = _symmetrized_trade_edges(m, sf_dir)
+        # node-sized; read by every iteration + the seed
+        deg = m.persist(
             edges.groupBy("src")
             .agg(F.count(F.lit(1)).alias("outdeg"))
             .withColumnRenamed("src", "node")
-            .persist()  # node-sized; read by every iteration + the seed
         )
         n_nodes = deg.count()  # one scalar to the driver (model-sized state)
         base = 150_000_000_000 // n_nodes
@@ -1755,7 +1751,7 @@ def q96_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                     (F.lit(base) + F.coalesce(F.col("in_mass"), F.lit(0))).alias("r"),
                 )
             )
-        return (
+        return m.result(
             ranks.orderBy(F.col("r").desc(), F.col("node").asc())
             .limit(25)
             .select(
@@ -1763,11 +1759,7 @@ def q96_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("node") % 2).cast("bigint").alias("is_supplier"),
                 F.col("r").alias("rank_micro"),
             )
-            .localCheckpoint()
         )
-    finally:
-        edges.unpersist(blocking=False)
-        deg.unpersist(blocking=False)
 
 
 @query(
@@ -2073,28 +2065,22 @@ def q100_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     token frame, a corpus-scale cache write), and `oriented` (≤ 64²/2
     rows) is persisted so the co self-join runs once, not per wedge
     reference."""
-    per_node, oriented = _q100_tri_build(spark, sf_dir)
-    try:
-        return (
-            per_node.orderBy(F.col("n_tri").desc(), F.col("node").asc())
-            .limit(10)
-            .localCheckpoint()  # materialize while oriented is cached
+    with materialize(spark) as m:
+        return m.result(
+            _q100_tri_build(m, sf_dir).orderBy(F.col("n_tri").desc(), F.col("node").asc()).limit(10)
         )
-    finally:
-        oriented.unpersist(blocking=False)
 
 
-def _q100_tri_build(spark: SparkSession, sf_dir: str):
-    """q100's pre-checkpoint build (q107 pin recipe): returns
-    (per_node frame, persisted oriented-edge cache — caller unpersists
-    after materializing)."""
-    docs = _t(spark, sf_dir, "documents")
+def _q100_tri_build(m: Materialization, sf_dir: str) -> DataFrame:
+    """q100's pre-checkpoint build (q107 pin recipe): the per_node frame
+    over the ``sel`` checkpoint and ``oriented`` persist held in ``m``."""
+    docs = _t(m.spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.explode_outer(F.array_distinct(text.tokens("text"))).alias("tok")
     ).filter(F.col("tok").isNotNull())
     dfreq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     top = dfreq.orderBy(F.col("df").desc(), F.col("tok").asc()).limit(64).select("tok")
-    sel = toks.join(F.broadcast(top), "tok").localCheckpoint()
+    sel = m.checkpoint(toks.join(F.broadcast(top), "tok"))
     x = sel.select("doc_id", F.col("tok").alias("u"))
     y = sel.select("doc_id", F.col("tok").alias("v"))
     co = (
@@ -2119,14 +2105,14 @@ def _q100_tri_build(spark: SparkSession, sf_dir: str):
     u_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = (
+    # ≤ 64²/2 rows; referenced three times by the wedge pass
+    oriented = m.persist(
         edges.join(du, "u")
         .join(dv, "v")
         .select(
             F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("a"),
             F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("b"),
         )
-        .persist()  # ≤ 64²/2 rows; referenced three times by the wedge pass
     )
     e1 = oriented.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = oriented.select(F.col("a").alias("y"), F.col("b").alias("z"))
@@ -2136,14 +2122,13 @@ def _q100_tri_build(spark: SparkSession, sf_dir: str):
         ["x", "z"],
         "left_semi",
     )
-    per_node = (
+    return (
         tri.select(F.col("x").alias("node"))
         .unionAll(tri.select(F.col("y").alias("node")))
         .unionAll(tri.select(F.col("z").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("n_tri"))
     )
-    return per_node, oriented
 
 
 @query(
@@ -2591,12 +2576,8 @@ def q107_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     src/Core/MapReduceC.hs reducer laws).  Probing the 10 true heavy
     hitters pins the CMS overestimate guarantee (est >= true) by value.
     """
-    plan, freq = _q107_cms_build(spark, sf_dir)
-    try:
-        # materialize the 10-row result while freq is cached
-        return plan.localCheckpoint()
-    finally:
-        freq.unpersist(blocking=False)
+    with materialize(spark) as m:
+        return m.result(_q107_cms_build(m, sf_dir))
 
 
 def _q107_cell_col():
@@ -2623,25 +2604,29 @@ def _q107_cells(freq: DataFrame, rows: DataFrame) -> DataFrame:
     )
 
 
-def _q107_cms_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """q107's pre-checkpoint plan + the persisted vocab frame (returned
-    so callers — the query and the plan-pin test — control unpersist)."""
-    docs = _t(spark, sf_dir, "documents")
+def _q107_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """q107's (term, c) corpus term frequencies."""
     toks = (
-        docs.select(text.tokens("text").alias("__t"))
+        _t(spark, sf_dir, "documents")
+        .select(text.tokens("text").alias("__t"))
         .select(F.explode_outer("__t").alias("term"))
         .filter(F.col("term").isNotNull())
     )
+    return toks.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
+
+
+def _q107_cms_build(m: Materialization, sf_dir: str) -> DataFrame:
+    """q107's pre-checkpoint plan over the vocab frame persisted in ``m``."""
     # vocab-sized; read twice (cell build + probe selection) — persist so
     # the token-scale tokenize+count pass runs ONCE
-    freq = toks.groupBy("term").agg(F.count(F.lit(1)).alias("c")).persist()
-    rows = spark.range(4).select(F.col("id").cast("int").alias("r"))
+    freq = m.persist(_q107_freq(m.spark, sf_dir))
+    rows = m.spark.range(4).select(F.col("id").cast("int").alias("r"))
     cells = _q107_cells(freq, rows)
     probe = freq.orderBy(F.col("c").desc(), F.col("term").asc()).limit(10)
     pr = probe.crossJoin(F.broadcast(rows)).select(
         "term", "c", "r", _q107_cell_col().alias("col")
     )
-    plan = (
+    return (
         cells.join(F.broadcast(pr), ["r", "col"])
         .groupBy("term")
         .agg(
@@ -2649,7 +2634,6 @@ def _q107_cms_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
             F.min("v").cast("bigint").alias("cms_est"),
         )
     )
-    return plan, freq
 
 
 def _q108_oracle(hops: int = 3) -> str:
@@ -2700,11 +2684,8 @@ def q108_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned on src (q96 discipline).  Distances are integers, so
     the level histogram value-checks bit-for-bit against the unrolled
     oracle."""
-    edges = _symmetrized_trade_edges(spark, sf_dir)  # q96's shared build
-    levels = []  # per-level checkpoint free() handles, called in finally
-    try:
-        from mapreducehs_spark.operators.iteration import local_checkpoint_freeable
-
+    with materialize(spark) as m:
+        edges = _symmetrized_trade_edges(m, sf_dir)  # q96's shared build
         # lazy seed (round 12): the start node is an agg SUBTREE over
         # the persisted adjacency, not a driver collect — the whole
         # query is then ONE action and the edge build materializes
@@ -2715,13 +2696,10 @@ def q108_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         # + the unioned dist) — a non-eager checkpoint makes the seed
         # aggregation provably computed once instead of relying on plan
         # canonicalization to match the two subtrees for ReusedExchange.
-        dist, free0 = local_checkpoint_freeable(
-            edges.agg(F.min("src").alias("node")).select(
-                "node", F.lit(0).cast("int").alias("d")
-            ),
+        dist = m.checkpoint(
+            edges.agg(F.min("src").alias("node")).select("node", F.lit(0).cast("int").alias("d")),
             eager=False,
         )
-        levels.append(free0)
         for level in range(1, 4):
             frontier = dist.filter(F.col("d") == level - 1)
             expanded = (
@@ -2729,25 +2707,16 @@ def q108_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .select(F.col("dst").alias("node"), F.lit(level).alias("d"))
             )
             # checkpoint the per-level result: keeps the lineage flat
-            # (O(1) plan depth per level, not O(level)); freeable so the
-            # reached-set-sized blocks don't outlive the query
-            dist, free = local_checkpoint_freeable(
+            # (O(1) plan depth per level, not O(level))
+            dist = m.checkpoint(
                 dist.unionByName(expanded).groupBy("node").agg(F.min("d").alias("d")),
                 eager=False,
             )
-            levels.append(free)
-        return (
-            dist.groupBy(F.col("d").alias("hops"))
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
-            .localCheckpoint()  # materialize while the adjacency is cached
+        return m.result(
+            dist.groupBy(F.col("d").alias("hops")).agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_nodes")
+            )
         )
-    finally:
-        edges.unpersist(blocking=False)
-        # the result above is materialized — the per-level checkpoint
-        # blocks can now be genuinely released (DataFrame.unpersist()
-        # would be a no-op here; see operators/iteration.py)
-        for free_level in levels:
-            free_level()
 
 
 @query(
@@ -2909,28 +2878,23 @@ def q111_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # pairs is #types²-sized but referenced twice (marginal + join) —
     # persist so the event-scale window pass runs ONCE, not per branch
-    pairs = (
-        seq.filter(F.col("to_type").isNotNull())
-        .groupBy("from_type", "to_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .persist()
-    )
-    try:
+    with materialize(spark) as m:
+        pairs = m.persist(
+            seq.filter(F.col("to_type").isNotNull())
+            .groupBy("from_type", "to_type")
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
         marg = pairs.groupBy("from_type").agg(
             F.sum("n").cast("bigint").alias("n_from")
         )
-        return (
-            pairs.join(F.broadcast(marg), "from_type")
-            .select(
+        return m.result(
+            pairs.join(F.broadcast(marg), "from_type").select(
                 "from_type",
                 "to_type",
                 F.col("n").cast("bigint").alias("n"),
                 F.expr("(n * 1000000L) div n_from").cast("bigint").alias("p_micro"),
             )
-            .localCheckpoint()  # materialize the matrix while pairs is cached
         )
-    finally:
-        pairs.unpersist(blocking=False)
 
 
 @query(
@@ -3055,37 +3019,36 @@ def q113_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every metric is integer (seconds, counts, cents) and every order
     carries a user_id tiebreak, so quintile boundaries are
     total-ordered and the whole grid value-checks at any parallelism."""
-    from mapreducehs_spark.operators.sampling import global_positions_cached
+    from mapreducehs_spark.operators.sampling import global_positions
 
     ev = _t(spark, sf_dir, "events")
     ref = ev.agg(F.max(F.unix_timestamp("ts")).alias("t_ref"))
-    per_user = (
-        ev.groupBy("user_id")
-        .agg(
-            F.max(F.unix_timestamp("ts")).alias("last_s"),
-            F.count(F.lit(1)).cast("bigint").alias("frequency"),
-            F.sum(
-                F.when(
-                    F.col("event_type") == "purchase",
-                    F.floor(F.col("value") * 100).cast("bigint"),
-                ).otherwise(0)
+    with materialize(spark) as m:
+        per_user = m.persist(  # read by the three position passes + the rollup
+            ev.groupBy("user_id")
+            .agg(
+                F.max(F.unix_timestamp("ts")).alias("last_s"),
+                F.count(F.lit(1)).cast("bigint").alias("frequency"),
+                F.sum(
+                    F.when(
+                        F.col("event_type") == "purchase",
+                        F.floor(F.col("value") * 100).cast("bigint"),
+                    ).otherwise(0)
+                )
+                .cast("bigint")
+                .alias("monetary_cents"),
             )
-            .cast("bigint")
-            .alias("monetary_cents"),
+            .crossJoin(F.broadcast(ref))
+            .select(
+                "user_id",
+                (F.col("t_ref") - F.col("last_s")).cast("bigint").alias("recency_s"),
+                F.col("frequency"),
+                # negated copies so every global_positions order is ASC
+                (-F.col("frequency")).alias("neg_frequency"),
+                "monetary_cents",
+                (-F.col("monetary_cents")).alias("neg_monetary"),
+            )
         )
-        .crossJoin(F.broadcast(ref))
-        .select(
-            "user_id",
-            (F.col("t_ref") - F.col("last_s")).cast("bigint").alias("recency_s"),
-            F.col("frequency"),
-            # negated copies so every global_positions order is ASC
-            (-F.col("frequency")).alias("neg_frequency"),
-            "monetary_cents",
-            (-F.col("monetary_cents")).alias("neg_monetary"),
-        )
-        .persist()  # read by the three position passes + the rollup
-    )
-    try:
         n_total = per_user.count()  # one scalar to the driver
         base, rem = n_total // 5, n_total % 5
         cut = rem * (base + 1)
@@ -3103,13 +3066,10 @@ def q113_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(rem) + F.call_function("div", pos - F.lit(cut) + small - 1, small)
             )
 
-        caches = []
-
         def score(order_cols, name):
-            ranked, cache = global_positions_cached(
-                per_user.select("user_id", *order_cols), order_cols + ["user_id"], "pos"
+            ranked = global_positions(
+                m, per_user.select("user_id", *order_cols), order_cols + ["user_id"], "pos"
             )
-            caches.append(cache)
             return ranked.select(
                 "user_id", tile(F.col("pos")).cast("int").alias(name)
             )
@@ -3121,7 +3081,7 @@ def q113_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=3) as pool:
-            r, f, m = pool.map(
+            r, f, mon = pool.map(
                 lambda a: score(*a),
                 [
                     (["recency_s"], "r_score"),
@@ -3129,22 +3089,17 @@ def q113_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                     (["neg_monetary"], "m_score"),
                 ],
             )
-        return (
+        return m.result(
             per_user.select("user_id", "monetary_cents")
             .join(r, "user_id")
             .join(f, "user_id")
-            .join(m, "user_id")
+            .join(mon, "user_id")
             .groupBy("r_score", "f_score", "m_score")
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_users"),
                 F.sum("monetary_cents").cast("bigint").alias("segment_cents"),
             )
-            .localCheckpoint()  # materialize the grid while per_user is cached
         )
-    finally:
-        per_user.unpersist(blocking=False)
-        for c in caches:  # the three range-sorted position caches
-            c.unpersist(blocking=False)
 
 
 @query(
@@ -3726,8 +3681,6 @@ def q121_weighted_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustered distribution — the q96 dedup-in-partition discipline).
     Per-round localCheckpoint keeps plan depth O(1) (q108's lineage
     lesson)."""
-    from mapreducehs_spark.operators.iteration import local_checkpoint_freeable
-
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_quantity"
@@ -3737,24 +3690,18 @@ def q121_weighted_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_suppkey") * 2 + 1).alias("dst"),
         F.round("l_quantity").cast("bigint").alias("w"),
     )
-    edges = (
-        raw.unionByName(
-            raw.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
-            )
+    with materialize(spark) as m:
+        edges = m.persist(
+            raw.unionByName(raw.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w"))
+            .repartition("src")
+            .groupBy("src", "dst")
+            .agg(F.min("w").alias("w"))
         )
-        .repartition("src")
-        .groupBy("src", "dst")
-        .agg(F.min("w").alias("w"))
-        .persist()
-    )
-    frees = []
-    try:
         # lazy seed (round 12, q108's discipline): agg subtree instead
         # of a driver collect — one action for the whole relaxation.
         # Round 13 (ADVICE r12): non-eager checkpoint so the doubly
         # referenced 1-row seed is provably computed once (q108's fix).
-        dist, free0 = local_checkpoint_freeable(
+        dist = m.checkpoint(
             edges.agg(F.min("src").alias("node")).select(
                 "node",
                 F.lit(0).cast("long").alias("d"),
@@ -3762,7 +3709,6 @@ def q121_weighted_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             eager=False,
         )
-        frees.append(free0)
         for rnd in range(1, 4):
             frontier = dist.filter(F.col("r") == rnd - 1)
             cand = frontier.join(edges, frontier["node"] == edges["src"]).select(
@@ -3779,21 +3725,12 @@ def q121_weighted_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(F.min(F.struct("d", "r")).alias("s"))
                 .select("node", F.col("s.d").alias("d"), F.col("s.r").alias("r"))
             )
-            dist, free = local_checkpoint_freeable(merged, eager=False)
-            frees.append(free)
-        return (
+            dist = m.checkpoint(merged, eager=False)
+        return m.result(
             dist.select("node", F.col("d").alias("dist"))
             .orderBy(F.col("dist").asc(), F.col("node").asc())
             .limit(20)
-            .localCheckpoint()  # materialize while the rounds are cached
         )
-    finally:
-        edges.unpersist(blocking=False)
-        # the 20-row result above is materialized — the per-round
-        # checkpoint blocks can now be genuinely released (q108's
-        # checkpoint-before-unpersist ordering)
-        for free in frees:
-            free()
 
 
 
@@ -4338,8 +4275,8 @@ def q126_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     full design argument lives on _q126_build; the oracle replays the
     generation split from the base table, value-checking the write+
     read round trip end to end.  The fieldId read confs are set only
-    around the materialization (localCheckpoint) so the session is
-    left untouched."""
+    around the materialization (the result checkpoint) so the session
+    is left untouched."""
     confs = {
         "spark.sql.parquet.fieldId.read.enabled": "true",
         "spark.sql.parquet.fieldId.read.ignoreMissing": "true",
@@ -4350,7 +4287,8 @@ def q126_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         # the field-id scan confs must be live when the scan RUNS, not
         # just when the plan is built — materialize before restoring
-        return _q126_build(spark, sf_dir).localCheckpoint()
+        with materialize(spark) as m:
+            return m.result(_q126_build(spark, sf_dir))
     finally:
         for k, v in saved.items():
             if v is None:
@@ -4475,7 +4413,8 @@ def q127_partition_spec_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
     reads — exactly why specs get evolved; the rollup is the only
     exchange.  Reference witness: O12 pluggable-store read path
     (src/Core/Store.hs) + O7 key-range partitioning (divides)."""
-    return _q127_build(spark, sf_dir).localCheckpoint()
+    with materialize(spark) as m:
+        return m.result(_q127_build(spark, sf_dir))
 
 
 def _q128_oracle() -> str:

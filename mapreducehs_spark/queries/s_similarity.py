@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from mapreducehs_spark.operators import dedup, multimodal, similarity, text, windows
 from mapreducehs_spark.operators import sampling as _sampling
+from mapreducehs_spark.operators.iteration import materialize
 from mapreducehs_spark.operators.joins import asof_join
 from mapreducehs_spark.pipeline import word_count_pipeline
 from mapreducehs_spark.sources.catalog import load_table
@@ -653,16 +654,12 @@ def s12_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         return _dot
 
-    from mapreducehs_spark.operators.iteration import local_checkpoint_freeable
-
-    cur = (
-        base.filter(F.col("vec_id") != 0)
-        .withColumn("sq", dot_udf(qvec)(F.col("qv")))
-        .withColumn("mx", F.lit(0).cast("bigint"))
-        .persist()
-    )
-    free_cur = cur.unpersist  # CacheManager-persisted: plain unpersist works
-    try:
+    with materialize(spark) as m:
+        cur = m.persist(
+            base.filter(F.col("vec_id") != 0)
+            .withColumn("sq", dot_udf(qvec)(F.col("qv")))
+            .withColumn("mx", F.lit(0).cast("bigint"))
+        )
         picks = []
         for rank in range(1, 6):
             top = (
@@ -685,18 +682,13 @@ def s12_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 else F.greatest(F.col("mx"), dot_udf(svec)(F.col("qv")))
             )
             # flatten per-round lineage; eager, so the superseded round's
-            # blocks can be released immediately below (plain unpersist()
-            # would be a no-op on these — see operators/iteration.py)
-            nxt, free_nxt = local_checkpoint_freeable(
-                cur.filter(F.col("vec_id") != top["vec_id"]).withColumn("mx", upd)
-            )
-            free_cur()
-            cur, free_cur = nxt, free_nxt
+            # blocks can be released immediately below
+            nxt = m.checkpoint(cur.filter(F.col("vec_id") != top["vec_id"]).withColumn("mx", upd))
+            m.free(cur)
+            cur = nxt
         return spark.createDataFrame(
             picks, "rank long, vec_id long, relevance long, max_prev long, margin long"
         )
-    finally:
-        free_cur()
 
 
 @query(
@@ -1293,7 +1285,8 @@ def s18_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     heaps; avgdl enters as (dl*N)/sum_dl in BOTH engines so float
     evaluation order is identical and the score replays bit-for-bit."""
     docs = _t(spark, sf_dir, "documents")
-    scored, score, any_tf = _bm25_scored(docs)
+    with materialize(spark) as m:
+        scored, score, any_tf = _bm25_scored(docs, m.result)
     return (
         scored.filter(any_tf > 0)
         .withColumn("__score", score)
@@ -1308,15 +1301,17 @@ def s18_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bm25_scored(docs: DataFrame):
+def _bm25_scored(docs: DataFrame, pin: Callable[[DataFrame], DataFrame]):
     """s18's BM25 machinery, shared with s19's retrieve-then-rerank:
     returns (the checkpointed narrow per-doc frame cross-broadcast with
     the corpus statistics, the score column, the any-term filter) —
     exactly the expression tree s18 built inline before round 7, so the
-    plan fingerprint is unchanged."""
+    plan fingerprint is unchanged.  ``pin`` checkpoints the narrow
+    frame: ``m.result`` when the returned plan reads it (s18),
+    ``m.checkpoint`` when only a checkpointed candidate set does (s19)."""
     k1, b = _BM25_K1, _BM25_B
     toks = docs.select("doc_id", text.tokens("text").alias("tk"))
-    proj = toks.select(
+    proj = pin(toks.select(
         "doc_id",
         F.size("tk").cast("bigint").alias("dl"),
         # NB: the lambda must be unary — F.filter reads a 2-arg lambda as
@@ -1328,7 +1323,7 @@ def _bm25_scored(docs: DataFrame):
             .alias(f"tf_{t}")
             for t in _BM25_TERMS
         ],
-    ).localCheckpoint()
+    ))
     stats = proj.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("dl").cast("bigint").alias("sum_dl"),
@@ -1442,20 +1437,24 @@ def s19_retrieve_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank windows run on the 100-row candidate frame — single-partition
     by construction and bounded by n_cand, never corpus-sized."""
     docs = _t(spark, sf_dir, "documents")
-    scored, score, any_tf = _bm25_scored(docs)
-    cand = (
-        scored.filter(any_tf > 0)
-        .withColumn("__score", score)
-        .orderBy(F.col("__score").desc(), F.col("doc_id").asc())
-        .limit(100)
-        .select("doc_id", "__score")
-    )
-    cand = cand.withColumn(
-        "bm25_rank",
-        F.row_number()
-        .over(Window.orderBy(F.col("__score").desc(), F.col("doc_id").asc()))
-        .cast("bigint"),
-    ).localCheckpoint()  # 100 rows: pin the candidate set, broadcast below
+    with materialize(spark) as m:
+        scored, score, any_tf = _bm25_scored(docs, m.checkpoint)
+        cand = (
+            scored.filter(any_tf > 0)
+            .withColumn("__score", score)
+            .orderBy(F.col("__score").desc(), F.col("doc_id").asc())
+            .limit(100)
+            .select("doc_id", "__score")
+        )
+        # 100 rows: pin the candidate set, broadcast below
+        cand = m.result(
+            cand.withColumn(
+                "bm25_rank",
+                F.row_number()
+                .over(Window.orderBy(F.col("__score").desc(), F.col("doc_id").asc()))
+                .cast("bigint"),
+            )
+        )
     feats = (
         docs.join(F.broadcast(cand.select("doc_id")), "doc_id")
         .select("doc_id", F.explode_outer(text.tokens("text")).alias("term"))

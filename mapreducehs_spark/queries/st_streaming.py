@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from mapreducehs_spark.operators import dedup, multimodal, similarity, text, windows
 from mapreducehs_spark.operators import sampling as _sampling
+from mapreducehs_spark.operators.iteration import materialize
 from mapreducehs_spark.operators.joins import asof_join
 from mapreducehs_spark.pipeline import word_count_pipeline
 from mapreducehs_spark.sources.catalog import load_table
@@ -57,10 +58,22 @@ def _state_bound(sf_dir: str, table: str = "events") -> int:
     covers columnar compression + row-format state overhead.
     Data-derived (scales with the SF dir / the production horizon),
     never a core count; feeds ``streaming.ops.state_partitions_for``
-    (~64 MB of state per store partition, floor 8)."""
+    (~64 MB of state per store partition, floor 8).  A directory-style
+    table counts its part files (hidden ``.``/``_`` files excluded, as
+    Spark's reader does), not the directory inode."""
     import os
 
-    return 4 * os.path.getsize(os.path.join(sf_dir, f"{table}.parquet"))
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    if os.path.isfile(path):
+        return 4 * os.path.getsize(path)
+    if not os.path.isdir(path):
+        raise FileNotFoundError(f"state bound: no table at {path}")
+    return 4 * sum(
+        os.path.getsize(os.path.join(root, f))
+        for root, _, files in os.walk(path)
+        for f in files
+        if not f.startswith((".", "_"))
+    )
 
 
 def _events_state_bound(sf_dir: str) -> int:
@@ -1022,23 +1035,18 @@ def st23_stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     drops in both)."""
     from mapreducehs_spark import streaming as st
 
-    dim = (
-        q91_scd2_dimension(spark, sf_dir)
-        .select(
-            F.col("user_id").alias("d_user"),
-            F.col("event_type").alias("version_type"),
-            "valid_from_s",
-            "valid_to_s",
+    with materialize(spark) as m:
+        dim = m.persist(
+            q91_scd2_dimension(spark, sf_dir).select(
+                F.col("user_id").alias("d_user"),
+                F.col("event_type").alias("version_type"),
+                "valid_from_s",
+                "valid_to_s",
+            )
         )
-        .persist()
-    )
-    try:
         dim.count()  # materialize once; every micro-batch reuses the cache
         enriched = st.enrich_asof_versions(_replayed_events(spark, sf_dir), dim)
-        out = st.run_to_batch(enriched, "st23_sink", output_mode="append")
-        return out.localCheckpoint()  # materialize while the dim is cached
-    finally:
-        dim.unpersist(blocking=False)
+        return m.result(st.run_to_batch(enriched, "st23_sink", output_mode="append"))
 
 
 # =========================================================================
@@ -1463,15 +1471,18 @@ def st31_stream_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.stop()
     final = spark.read.parquet(serving).filter(F.col("n") > 0)
     try:
-        return final.select(
-            "month",
-            F.col("n").alias("n_orders"),
-            F.concat(
-                F.expr("cast(cents div 100 as string)"),
-                F.lit("."),
-                F.lpad(F.expr("cast(cents % 100 as string)"), 2, "0"),
-            ).alias("total_exact"),
-        ).localCheckpoint()
+        with materialize(spark) as m:
+            return m.result(
+                final.select(
+                    "month",
+                    F.col("n").alias("n_orders"),
+                    F.concat(
+                        F.expr("cast(cents div 100 as string)"),
+                        F.lit("."),
+                        F.lpad(F.expr("cast(cents % 100 as string)"), 2, "0"),
+                    ).alias("total_exact"),
+                )
+            )
     finally:
         shutil.rmtree(serving, ignore_errors=True)
 
@@ -1623,22 +1634,20 @@ def st34_stream_curriculum_router(spark: SparkSession, sf_dir: str) -> DataFrame
     from mapreducehs_spark import streaming as st
     from mapreducehs_spark.queries.t_text import _t49_build
 
-    out49, cache = _t49_build(spark, sf_dir)
-    try:
-        cutoffs = (
-            out49.select("source", "decile", "q_max")
+    with materialize(spark) as m:
+        # freeze the boundary model before streaming
+        cutoffs = m.checkpoint(
+            _t49_build(m, sf_dir)
+            .select("source", "decile", "q_max")
             .groupBy("source")
             .agg(
                 F.array_sort(
                     F.collect_list(F.struct(F.col("decile"), F.col("q_max")))
                 ).alias("bounds")
             )
-            .localCheckpoint()  # freeze the boundary model before streaming
         )
-    finally:
-        cache.unpersist(blocking=False)
-    routed = st.curriculum_route_stream(_replayed_docs(spark, sf_dir), cutoffs)
-    log = st.run_to_batch(routed, "st34_sink", output_mode="append")
+        routed = st.curriculum_route_stream(_replayed_docs(spark, sf_dir), cutoffs)
+        log = st.run_to_batch(routed, "st34_sink", output_mode="append")
     return log.groupBy("source", "decile").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("n_tok").cast("bigint").alias("n_tokens"),
@@ -1712,15 +1721,14 @@ def st35_stream_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         log = st.run_to_batch(
             _st35_stream(spark, sf_dir), "st35_sink", output_mode="append"
         )
-        return (
-            log.groupBy("generation", "status")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-                F.sum("amount_cents").cast("bigint").alias("total_cents"),
-                F.count("channel").cast("bigint").alias("n_with_channel"),
+        with materialize(spark) as m:
+            return m.result(
+                log.groupBy("generation", "status").agg(
+                    F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+                    F.sum("amount_cents").cast("bigint").alias("total_cents"),
+                    F.count("channel").cast("bigint").alias("n_with_channel"),
+                )
             )
-            .localCheckpoint()
-        )
     finally:
         for k, v in saved.items():
             if v is None:
@@ -1800,13 +1808,16 @@ def st36_stream_compaction_monitor(spark: SparkSession, sf_dir: str) -> DataFram
     st.manifest_monitor_fold(spark, replay, monitor, _ST36_SMALL_BYTES)
     final = spark.read.parquet(monitor)
     try:
-        return final.select(
-            "part_id",
-            "n_files",
-            "n_small",
-            "small_bytes",
-            "total_bytes",
-            (F.col("n_small") >= _ST36_FIRE_N).cast("bigint").alias("fires"),
-        ).localCheckpoint()
+        with materialize(spark) as m:
+            return m.result(
+                final.select(
+                    "part_id",
+                    "n_files",
+                    "n_small",
+                    "small_bytes",
+                    "total_bytes",
+                    (F.col("n_small") >= _ST36_FIRE_N).cast("bigint").alias("fires"),
+                )
+            )
     finally:
         shutil.rmtree(monitor, ignore_errors=True)

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from mapreducehs_spark.operators import dedup, multimodal, similarity, text, windows
 from mapreducehs_spark.operators import sampling as _sampling
+from mapreducehs_spark.operators.iteration import Materialization, materialize
 from mapreducehs_spark.operators.joins import asof_join
 from mapreducehs_spark.pipeline import word_count_pipeline
 from mapreducehs_spark.sources.catalog import load_table
@@ -403,16 +404,15 @@ def t11_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregatable dedup at fact scale), so the self-join runs on
     |vocab| rows per source, not |tokens|; 20 sources → 190 pairs out.
     The pairs frame is sources² rows, so it is materialized eagerly
-    (localCheckpoint) and the shared vocabulary frame unpersisted in
-    the same call — no cached blocks outlive it (d13 discipline)."""
+    and the shared vocabulary frame freed in the same call — no cached
+    blocks outlive it (d13 discipline)."""
     docs = _t(spark, sf_dir, "documents")
-    vocab = (
-        docs.select("source", text.tokens("text").alias("__toks"))
-        .select("source", F.explode("__toks").alias("term"))
-        .distinct()
-        .persist()
-    )
-    try:
+    with materialize(spark) as m:
+        vocab = m.persist(
+            docs.select("source", text.tokens("text").alias("__toks"))
+            .select("source", F.explode("__toks").alias("term"))
+            .distinct()
+        )
         sized = vocab.groupBy("source").agg(F.count(F.lit(1)).alias("vocab_size"))
         a = vocab.select(F.col("source").alias("source_a"), "term")
         b = vocab.select(F.col("source").alias("source_b"), "term")
@@ -424,7 +424,7 @@ def t11_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sa = sized.select(F.col("source").alias("source_a"), F.col("vocab_size").alias("size_a"))
         sb = sized.select(F.col("source").alias("source_b"), F.col("vocab_size").alias("size_b"))
-        return (
+        return m.result(
             inter.join(F.broadcast(sa), "source_a")
             .join(F.broadcast(sb), "source_b")
             .select(
@@ -436,10 +436,7 @@ def t11_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
                     6,
                 ).alias("vocab_jaccard"),
             )
-            .localCheckpoint()
         )
-    finally:
-        vocab.unpersist(blocking=False)
 
 
 @query(
@@ -629,7 +626,7 @@ def t15_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort + partition offsets): a bare row_number() window would rank
     the whole vocabulary in ONE task — fine at test scale, a straggler
     on a billion-term n-gram vocabulary."""
-    from mapreducehs_spark.operators.sampling import global_positions_cached
+    from mapreducehs_spark.operators.sampling import global_positions
 
     docs = _t(spark, sf_dir, "documents")
     par = spark.sparkContext.defaultParallelism
@@ -641,17 +638,15 @@ def t15_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("f"))
     )
-    ranked, cache = global_positions_cached(
-        freq.withColumn("neg_f", -F.col("f")), ["neg_f", "term"], "r"
-    )
-    try:
-        return ranked.agg(
-            F.count(F.lit(1)).alias("vocab"),
-            F.round(F.expr("regr_slope(ln(f), ln(r))"), 6).alias("zipf_slope"),
-            F.round(F.expr("regr_r2(ln(f), ln(r))"), 6).alias("r2"),
-        ).localCheckpoint()  # materialize the 1-row result, then free the cache
-    finally:
-        cache.unpersist(blocking=False)
+    with materialize(spark) as m:
+        ranked = global_positions(m, freq.withColumn("neg_f", -F.col("f")), ["neg_f", "term"], "r")
+        return m.result(
+            ranked.agg(
+                F.count(F.lit(1)).alias("vocab"),
+                F.round(F.expr("regr_slope(ln(f), ln(r))"), 6).alias("zipf_slope"),
+                F.round(F.expr("regr_r2(ln(f), ln(r))"), 6).alias("r2"),
+            )
+        )
 
 
 # =========================================================================
@@ -1311,36 +1306,31 @@ def t23_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantize to integer micro-nats (floor(1e6·ln p), the t17/s08
     recipe) so the doc aggregation is order-independent and the whole
     model value-checks."""
-    out, caches = _t23_build(spark, sf_dir)
-    try:
-        # materialize the doc-level scores while caches live
-        return out.localCheckpoint()
-    finally:
-        for c in caches:
-            c.unpersist(blocking=False)
+    with materialize(spark) as m:
+        return m.result(_t23_build(m, sf_dir))
 
 
-def _t23_build(spark: SparkSession, sf_dir: str):
-    """t23's pre-checkpoint frame + caches (q107 pin recipe)."""
-    docs = _t(spark, sf_dir, "documents")
-    toked = docs.select("doc_id", text.tokens("text").alias("__t")).persist()
+def _t23_build(m: Materialization, sf_dir: str) -> DataFrame:
+    """t23's pre-checkpoint frame over caches held in ``m`` (q107 pin
+    recipe)."""
+    docs = _t(m.spark, sf_dir, "documents")
+    toked = m.persist(docs.select("doc_id", text.tokens("text").alias("__t")))
     # Round 13 (guide §2.3 — shuffle fewer bytes): the (doc, a, b) pair
     # aggregation is the ONE corpus-scale exchange here, and it carried
     # two token STRINGS per row.  The unigram vocabulary is
     # broadcast-scale (t17's model posture), so tokens dictionary-encode
     # to longs before the exchange: the vocab table rides the SAME
     # corpus pass the old countDistinct vocab-size scan already paid
-    # (localCheckpoint materializes ONE id assignment — both encode
+    # (the checkpoint materializes ONE id assignment — both encode
     # joins and the model join must read the same dictionary), vv is
     # its count, and the pair exchange + model join run on 2x int64
     # instead of strings.  Ids never reach the output (per-doc scores),
     # so results are identical.
-    vocab = (
+    vocab = m.checkpoint(
         toked.select(F.explode_outer("__t").alias("u"))
         .filter(F.col("u").isNotNull())
         .distinct()
         .withColumn("iu", F.monotonically_increasing_id())
-        .localCheckpoint()
     )
     vv = vocab.count()
     enc = (
@@ -1355,11 +1345,7 @@ def _t23_build(spark: SparkSession, sf_dir: str):
         )
         .select("doc_id", "ia", "ib")
     )
-    dp = (
-        enc.groupBy("doc_id", "ia", "ib")
-        .agg(F.count(F.lit(1)).alias("m"))
-        .persist()
-    )
+    dp = m.persist(enc.groupBy("doc_id", "ia", "ib").agg(F.count(F.lit(1)).alias("m")))
     big = dp.groupBy("ia", "ib").agg(F.sum("m").cast("bigint").alias("cab"))
     uni = big.groupBy("ia").agg(F.sum("cab").cast("bigint").alias("ca"))
     # micro-nats on the bigram-TABLE frame via the C-library log
@@ -1376,7 +1362,7 @@ def _t23_build(spark: SparkSession, sf_dir: str):
         )
         .select("ia", "ib", "micro")
     )
-    out = (
+    return (
         dp.join(scored, ["ia", "ib"])
         .groupBy("doc_id")
         .agg(
@@ -1393,7 +1379,6 @@ def _t23_build(spark: SparkSession, sf_dir: str):
             ).alias("avg_logprob"),
         )
     )
-    return out, (toked, dp)
 
 
 @query(
@@ -1429,11 +1414,8 @@ def t24_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     toked = docs.select("doc_id", text.tokens("text").alias("__t"))
     pairs = _bigram_pairs(toked, include_doc=False)
-    big = (
-        pairs.groupBy("a", "b").agg(F.count(F.lit(1)).cast("bigint").alias("cab"))
-        .persist()
-    )
-    try:
+    with materialize(spark) as m:
+        big = m.persist(pairs.groupBy("a", "b").agg(F.count(F.lit(1)).cast("bigint").alias("cab")))
         uni = big.groupBy("a").agg(F.sum("cab").cast("bigint").alias("ca"))
         unib = big.groupBy("b").agg(F.sum("cab").cast("bigint").alias("cb"))
         tot = big.agg(F.sum("cab").cast("bigint").alias("n"))
@@ -1443,7 +1425,7 @@ def t24_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n").cast("double") * F.col("cab").cast("double"))
             / (F.col("ca").cast("double") * F.col("cb").cast("double"))
         )
-        return (
+        return m.result(
             big.filter(F.col("cab") >= 5)
             .join(F.broadcast(uni), "a")
             .join(F.broadcast(unib), "b")
@@ -1451,10 +1433,7 @@ def t24_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("a", "b", "cab", pmi.alias("pmi_micro"))
             .orderBy(F.col("pmi_micro").desc(), F.col("a").asc(), F.col("b").asc())
             .limit(25)
-            .localCheckpoint()  # materialize the 25-row result while big is cached
         )
-    finally:
-        big.unpersist(blocking=False)
 
 
 @query(
@@ -2089,30 +2068,27 @@ def t33_balanced_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     LPT-flavored balanced assignment that is pure ARITHMETIC on the
     global position, hence deterministic and engine-replayable, unlike
     greedy least-loaded-bin which is inherently sequential.  Positions
-    come from sampling.global_positions_cached (range-partitioned
+    come from sampling.global_positions (range-partitioned
     distributed sort + per-partition offsets — never the single-task
     gather a bare row_number() collapses to); per-shard rollup is a
     K-row aggregate and the grand total meets it as a broadcast 1-row
     crossJoin (t20 discipline).  Reported per shard: doc count, token
     total, and its share in integer micro-units of the perfectly
     balanced 1e6 (truncating div — engine-exact)."""
-    df, cache = _t33_build(spark, sf_dir)
-    try:
-        return df.localCheckpoint()  # materialize, then free the sorted cache
-    finally:
-        cache.unpersist(blocking=False)
+    with materialize(spark) as m:
+        return m.result(_t33_build(m, sf_dir))
 
 
-def _t33_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+def _t33_build(m: Materialization, sf_dir: str) -> DataFrame:
     """t33 pre-checkpoint builder (q107 discipline: the query returns a
     checkpointed 8-row result, so plan pins inspect THIS)."""
-    from mapreducehs_spark.operators.sampling import global_positions_cached
+    from mapreducehs_spark.operators.sampling import global_positions
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = _t(m.spark, sf_dir, "documents")
     keyed = docs.select(
         "doc_id", F.size(text.tokens("text")).alias("n_tokens")
     ).withColumn("neg_tokens", -F.col("n_tokens"))
-    pos, cache = global_positions_cached(keyed, ["neg_tokens", "doc_id"])
+    pos = global_positions(m, keyed, ["neg_tokens", "doc_id"])
     p = F.col("pos") - 1
     shard = F.when(
         (p.cast("bigint") % 16) < 8, p.cast("bigint") % 8
@@ -2126,7 +2102,7 @@ def _t33_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         )
     )
     tot = per.agg(F.sum("total_tokens").cast("bigint").alias("grand"))
-    df = per.crossJoin(F.broadcast(tot)).select(
+    return per.crossJoin(F.broadcast(tot)).select(
         "shard",
         "n_docs",
         "total_tokens",
@@ -2134,7 +2110,6 @@ def _t33_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
             "share_micro"
         ),
     )
-    return df, cache
 
 
 #: t17's per-doc integer LM score keyed for ranking — the ONE oracle
@@ -2193,7 +2168,7 @@ def t34_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     by RANK, not by a percentile estimate.  The scale trap here is the
     obvious implementation — ntile(3) OVER (PARTITION BY source) puts
     each source (possibly 30 TB of a 100 TB corpus) in ONE task; this
-    query instead ranks through sampling.global_positions_cached
+    query instead ranks through sampling.global_positions
     ordered by (source, -score, doc_id) — positions within a source
     are CONTIGUOUS in the global order, so local rank = pos − the
     source's min position, recovered by a sources-sized broadcast
@@ -2202,11 +2177,8 @@ def t34_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     tercile): doc count, realized score boundaries (the min/max
     micro-nat keys — these ARE the CCNet cutoffs downstream filters
     reuse), token mass."""
-    df, cache = _t34_build(spark, sf_dir)
-    try:
-        return df.localCheckpoint()  # materialize, then free the sorted cache
-    finally:
-        cache.unpersist(blocking=False)
+    with materialize(spark) as m:
+        return m.result(_t34_build(m, sf_dir))
 
 
 def _t34_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2252,17 +2224,17 @@ def _t34_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _t34_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+def _t34_build(m: Materialization, sf_dir: str) -> DataFrame:
     """t34 pre-checkpoint builder (q107 discipline)."""
-    from mapreducehs_spark.operators.sampling import global_positions_cached
+    from mapreducehs_spark.operators.sampling import global_positions
 
-    keyed = _t34_keyed(spark, sf_dir)
-    pos, cache = global_positions_cached(keyed, ["source", "neg_qk", "doc_id"])
+    keyed = _t34_keyed(m.spark, sf_dir)
+    pos = global_positions(m, keyed, ["source", "neg_qk", "doc_id"])
     srcagg = pos.groupBy("source").agg(
         F.min("pos").alias("p0"), F.count(F.lit(1)).alias("ns")
     )
     bucket = F.expr("(pos - p0) * 3 div ns")
-    df = (
+    return (
         pos.join(F.broadcast(srcagg), "source")
         .groupBy("source", bucket.cast("bigint").alias("bucket"))
         .agg(
@@ -2272,7 +2244,6 @@ def _t34_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
             F.sum("n_tokens").cast("bigint").alias("total_tokens"),
         )
     )
-    return df, cache
 
 
 @query(
@@ -2802,10 +2773,10 @@ def t39_signal_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     overflows at n ≈ 2.1e6 docs — past ~2M docs switch the rho
     computation to the q01 decimal(38,0) recipe.  Global ranks come
     from the two-phase positions idiom (range-repartition + offsets,
-    global_positions_cached) — never a single-task row_number window;
+    global_positions) — never a single-task row_number window;
     both rank passes and the final 1-row reduce are the whole cost on
     top of the two signal laws."""
-    from mapreducehs_spark.operators.sampling import global_positions_cached
+    from mapreducehs_spark.operators.sampling import global_positions
     from mapreducehs_spark.operators.text import with_quality_score
 
     docs = _t(spark, sf_dir, "documents")
@@ -2839,9 +2810,8 @@ def t39_signal_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     y = with_quality_score(docs).select(
         "doc_id", F.round("quality_score", 6).alias("y")
     )
-    joined = x.join(y, "doc_id").persist()
-    caches = []
-    try:
+    with materialize(spark) as m:
+        joined = m.persist(x.join(y, "doc_id"))
         joined.count()
         # the two rank passes are independent sorts of the cached
         # doc-sized frame; construct them concurrently so their driver
@@ -2851,13 +2821,11 @@ def t39_signal_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=2) as pool:
-            (rx, c1), (ry, c2) = pool.map(
-                lambda a: global_positions_cached(joined.select("doc_id", a[0]), a[1], a[2]),
+            rx, ry = pool.map(
+                lambda a: global_positions(m, joined.select("doc_id", a[0]), a[1], a[2]),
                 [("x", ["x", "doc_id"], "rx"), ("y", ["y", "doc_id"], "ry")],
             )
-        caches.append(c1)
-        caches.append(c2)
-        return (
+        return m.result(
             rx.select("doc_id", "rx")
             .join(ry.select("doc_id", "ry"), "doc_id")
             .agg(
@@ -2876,12 +2844,7 @@ def t39_signal_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
                     " (n_docs * (n_docs * n_docs - 1)) as bigint)"
                 ).alias("rho_milli"),
             )
-            .localCheckpoint()  # materialize while the rank caches live
         )
-    finally:
-        joined.unpersist(blocking=False)
-        for c in caches:
-            c.unpersist(blocking=False)
 
 
 # =========================================================================
@@ -2942,7 +2905,7 @@ def t40_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     offsets — sequence id = cumulative-token div context_len, doc/seq
     overlap = interval intersection — so the packing is deterministic
     and oracle-replayable.  Offsets come from
-    ``sampling.global_prefix_sums_cached`` (t33's two-phase idiom,
+    ``sampling.global_prefix_sums`` (t33's two-phase idiom,
     weighted: range-repartition + per-partition weight subtotals +
     Arrow running sum) — NEVER a ``sum() OVER (ORDER BY ...)`` window,
     which collapses a 30 TB corpus onto one task.  Plan: one corpus
@@ -2953,26 +2916,23 @@ def t40_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     IS the truncation loss if the export drops ragged tails.
     Reference witness: O1 fission + O2 ordered fold
     (src/Core/MapReduceC.hs:24-26)."""
-    df, cache = _t40_build(spark, sf_dir)
-    try:
-        return df.localCheckpoint()
-    finally:
-        cache.unpersist(blocking=False)
+    with materialize(spark) as m:
+        return m.result(_t40_build(m, sf_dir))
 
 
-def _t40_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+def _t40_build(m: Materialization, sf_dir: str) -> DataFrame:
     """t40 pre-checkpoint builder (q107 discipline: plan pins inspect
     THIS; the query returns a checkpointed result so the positions
     cache can be freed)."""
-    from mapreducehs_spark.operators.sampling import global_prefix_sums_cached
+    from mapreducehs_spark.operators.sampling import global_prefix_sums
 
     C = _T40_CTX
-    docs = _t(spark, sf_dir, "documents")
+    docs = _t(m.spark, sf_dir, "documents")
     keyed = docs.select(
         "doc_id",
         (F.size(text.tokens("text")).cast("bigint") + F.lit(1)).alias("w"),
     )
-    starts, cache = global_prefix_sums_cached(keyed, ["doc_id"], "w", out_col="start")
+    starts = global_prefix_sums(m, keyed, ["doc_id"], "w", out_col="start")
     x = starts.select(
         "doc_id",
         "w",
@@ -2984,7 +2944,7 @@ def _t40_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     fill = F.least(
         F.col("start") + F.col("w"), (F.col("seq_id") + 1) * C
     ) - F.greatest(F.col("start"), F.col("seq_id") * C)
-    per_seq = (
+    return (
         x.select(
             "doc_id",
             "seq_id",
@@ -3013,7 +2973,6 @@ def _t40_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
             ),
         )
     )
-    return per_seq, cache
 
 
 def _t41_oracle() -> str:
@@ -3652,7 +3611,7 @@ def t46_topical_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     intersection fill).
 
     The per-cluster offsets come from the round-9 seam
-    ``sampling.grouped_prefix_sums_cached`` — global two-phase prefix
+    ``sampling.grouped_prefix_sums`` — global two-phase prefix
     sums over (cluster, doc_id) minus each cluster's broadcast base
     offset.  With k=8 clusters over 100 TB, a
     ``sum() OVER (PARTITION BY cluster ORDER BY doc_id)`` window would
@@ -3663,33 +3622,27 @@ def t46_topical_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange, the (cluster, seq_id) hash agg — window-free.
     Reference witness: O1 fission + O2 ordered fold
     (src/Core/MapReduceC.hs:24-26)."""
-    df, caches = _t46_build(spark, sf_dir)
-    try:
-        return df.localCheckpoint()
-    finally:
-        for c in caches:
-            c.unpersist(blocking=False)
+    with materialize(spark) as m:
+        return m.result(_t46_build(m, sf_dir))
 
 
-def _t46_build(spark: SparkSession, sf_dir: str):
+def _t46_build(m: Materialization, sf_dir: str) -> DataFrame:
     """t46 pre-checkpoint builder (q107/t40 discipline: plan pins
     inspect THIS; the query checkpoints so the caches can be freed)."""
-    from mapreducehs_spark.operators.sampling import grouped_prefix_sums_cached
+    from mapreducehs_spark.operators.sampling import grouped_prefix_sums
     from mapreducehs_spark.operators.similarity import kmeans_assignments
 
     C = _T40_CTX
-    emb = _t(spark, sf_dir, "embeddings")
-    assign, kcache = kmeans_assignments(emb, k=8, iters=2)
-    docs = _t(spark, sf_dir, "documents")
+    emb = _t(m.spark, sf_dir, "embeddings")
+    assign = kmeans_assignments(m, emb, k=8, iters=2)
+    docs = _t(m.spark, sf_dir, "documents")
     keyed = docs.select(
         "doc_id",
         (F.size(text.tokens("text")).cast("bigint") + F.lit(1)).alias("w"),
     ).join(
         assign.select(F.col("id").alias("doc_id"), "cluster"), "doc_id"
     ).select("cluster", "doc_id", "w")
-    starts, pcache = grouped_prefix_sums_cached(
-        keyed, ["cluster"], ["doc_id"], "w", out_col="start"
-    )
+    starts = grouped_prefix_sums(m, keyed, ["cluster"], ["doc_id"], "w", out_col="start")
     x = starts.select(
         "cluster",
         "doc_id",
@@ -3702,7 +3655,7 @@ def _t46_build(spark: SparkSession, sf_dir: str):
     fill = F.least(
         F.col("start") + F.col("w"), (F.col("seq_id") + 1) * C
     ) - F.greatest(F.col("start"), F.col("seq_id") * C)
-    per_seq = (
+    return (
         x.select(
             "cluster",
             "doc_id",
@@ -3733,7 +3686,6 @@ def _t46_build(spark: SparkSession, sf_dir: str):
             ),
         )
     )
-    return per_seq, (kcache, pcache)
 
 
 # =========================================================================
@@ -4004,17 +3956,17 @@ _T49_ORACLE = """
 """
 
 
-def _t49_build(spark: SparkSession, sf_dir: str):
-    """t49's pre-checkpoint frame + caches (q107 pin recipe)."""
-    from mapreducehs_spark.operators.sampling import grouped_prefix_sums_cached
+def _t49_build(m: Materialization, sf_dir: str) -> DataFrame:
+    """t49's pre-checkpoint frame (q107 pin recipe)."""
+    from mapreducehs_spark.operators.sampling import grouped_prefix_sums
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = _t(m.spark, sf_dir, "documents")
     scored = _quality_scored(docs).withColumn("__one", F.lit(1).cast("long"))
-    ranked, cache = grouped_prefix_sums_cached(
-        scored, ["source"], ["quality_micro", "doc_id"], "__one", out_col="rank0"
+    ranked = grouped_prefix_sums(
+        m, scored, ["source"], ["quality_micro", "doc_id"], "__one", out_col="rank0"
     )
     sizes = scored.groupBy("source").agg(F.count(F.lit(1)).alias("n_src"))
-    out = (
+    return (
         ranked.join(F.broadcast(sizes), "source")
         .select(
             "source",
@@ -4030,7 +3982,6 @@ def _t49_build(spark: SparkSession, sf_dir: str):
             F.max("quality_micro").cast("bigint").alias("q_max"),
         )
     )
-    return out, cache
 
 
 @query("t49_quality_deciles", oracle=_T49_ORACLE)
@@ -4057,11 +4008,8 @@ def t49_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_sources-row size frame broadcasts.  Window-free plan-pinned.
     Reference witness: O2 ordered keyed fold (src/Core/MapReduceC.hs:
     24-26)."""
-    out, cache = _t49_build(spark, sf_dir)
-    try:
-        return out.localCheckpoint()
-    finally:
-        cache.unpersist(blocking=False)
+    with materialize(spark) as m:
+        return m.result(_t49_build(m, sf_dir))
 
 
 # =========================================================================
@@ -4132,11 +4080,11 @@ _T50_ORACLE = f"""
 """
 
 
-def _t50_build(spark: SparkSession, sf_dir: str):
-    """t50's pre-checkpoint frame + caches (q107 pin recipe)."""
-    from mapreducehs_spark.operators.sampling import grouped_prefix_sums_cached
+def _t50_build(m: Materialization, sf_dir: str) -> DataFrame:
+    """t50's pre-checkpoint frame (q107 pin recipe)."""
+    from mapreducehs_spark.operators.sampling import grouped_prefix_sums
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = _t(m.spark, sf_dir, "documents")
     tok = _mixture_tok(docs).filter(F.col("n_tokens") > 0)
     eplan = _t44_plan(docs).select(
         "source",
@@ -4177,14 +4125,14 @@ def _t50_build(spark: SparkSession, sf_dir: str):
             ).cast("bigint"),
         )
     )
-    pref, cache = grouped_prefix_sums_cached(
-        exploded, ["source", "epoch"], ["k", "doc_id"], "n_tokens", out_col="start"
+    pref = grouped_prefix_sums(
+        m, exploded, ["source", "epoch"], ["k", "doc_id"], "n_tokens", out_col="start"
     )
     kept = pref.filter(
         (F.col("epoch") <= F.col("epochs_full"))
         | (F.col("start") * 1000000 < F.col("frac_ppm") * F.col("tokens_total"))
     )
-    out = (
+    return (
         kept.select(
             "source",
             F.col("epoch").cast("bigint").alias("epoch"),
@@ -4197,7 +4145,6 @@ def _t50_build(spark: SparkSession, sf_dir: str):
             F.sum("n_tokens").cast("bigint").alias("n_tokens"),
         )
     )
-    return out, cache
 
 
 @query("t50_epoch_shuffle_manifest", oracle=_T50_ORACLE)
@@ -4227,11 +4174,8 @@ def t50_epoch_shuffle_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     total-epoch-tokens / _T50_SHARD.  Window-free plan-pinned.
     Reference witness: O1 fission + O2 ordered keyed fold
     (src/Core/MapReduceC.hs:24-26)."""
-    out, cache = _t50_build(spark, sf_dir)
-    try:
-        return out.localCheckpoint()
-    finally:
-        cache.unpersist(blocking=False)
+    with materialize(spark) as m:
+        return m.result(_t50_build(m, sf_dir))
 
 
 # =========================================================================
@@ -4584,25 +4528,22 @@ def t53_packing_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     2-scalar totals frame broadcasts into the 3-row projection.
     Output: one row per L.  Reference witness: O1 fission + O2 keyed
     fold (src/Core/MapReduceC.hs:24-26)."""
-    out, cache = _t53_build(spark, sf_dir)
-    try:
-        return out.localCheckpoint()
-    finally:
-        cache.unpersist(blocking=False)
+    with materialize(spark) as m:
+        return m.result(_t53_build(m, sf_dir))
 
 
-def _t53_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+def _t53_build(m: Materialization, sf_dir: str) -> DataFrame:
     """t53 pre-checkpoint builder (q107 discipline: plan pins inspect
     THIS; the query returns a checkpointed result so the positions
     cache can be freed)."""
-    from mapreducehs_spark.operators.sampling import global_prefix_sums_cached
+    from mapreducehs_spark.operators.sampling import global_prefix_sums
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = _t(m.spark, sf_dir, "documents")
     keyed = docs.select(
         "doc_id",
         (F.size(text.tokens("text")).cast("bigint") + F.lit(1)).alias("w"),
     )
-    starts, cache = global_prefix_sums_cached(keyed, ["doc_id"], "w", out_col="start")
+    starts = global_prefix_sums(m, keyed, ["doc_id"], "w", out_col="start")
     L = F.col("ctx_len")
     first_seq = F.expr("start div ctx_len")
     last_seq = F.expr("(start + w - 1) div ctx_len")
@@ -4629,7 +4570,7 @@ def _t53_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         F.sum("w").cast("bigint").alias("total"),
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
     )
-    out = per.crossJoin(F.broadcast(tot)).select(
+    return per.crossJoin(F.broadcast(tot)).select(
         "ctx_len",
         "n_docs",
         F.col("total").alias("total_tokens"),
@@ -4647,7 +4588,6 @@ def _t53_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
             " * 1000000 div ctx_len AS BIGINT)"
         ).alias("tail_fill_ppm"),
     )
-    return out, cache
 
 
 _T54_ORACLE = """
@@ -4830,20 +4770,20 @@ _T55_ORACLE = _T34_KEYED_CTES + """
 """
 
 
-def _t55_buckets(spark: SparkSession, sf_dir: str):
+def _t55_buckets(m: Materialization, sf_dir: str) -> DataFrame:
     """t55's DISTRIBUTED stage (the plan-pinned part): per-source exact
     rank deciles via the grouped prefix-sum seam, rolled up to the
-    <= 10 * n_sources bucket table.  Returns (buckets_df, cache)."""
-    from mapreducehs_spark.operators.sampling import grouped_prefix_sums_cached
+    <= 10 * n_sources bucket table."""
+    from mapreducehs_spark.operators.sampling import grouped_prefix_sums
 
-    keyed = _t34_keyed(spark, sf_dir).withColumn("__one", F.lit(1).cast("long"))
-    ranked, c1 = grouped_prefix_sums_cached(
-        keyed, ["source"], ["neg_qk", "doc_id"], "__one", out_col="rank0"
+    keyed = _t34_keyed(m.spark, sf_dir).withColumn("__one", F.lit(1).cast("long"))
+    ranked = grouped_prefix_sums(
+        m, keyed, ["source"], ["neg_qk", "doc_id"], "__one", out_col="rank0"
     )
     # sizes read the PERSISTED sorted frame via ranked, not a fresh
     # token scan (the t17 pipeline is the expensive part of this plan)
     sizes = ranked.groupBy("source").agg(F.count(F.lit(1)).alias("n_src"))
-    buckets = (
+    return (
         ranked.join(F.broadcast(sizes), "source")
         .select(
             F.expr("(rank0 * 10) div n_src").cast("bigint").alias("decile"),
@@ -4859,7 +4799,6 @@ def _t55_buckets(spark: SparkSession, sf_dir: str):
             F.max("qk").cast("bigint").alias("qk_max"),
         )
     )
-    return buckets, c1
 
 
 @query("t55_curriculum_schedule", oracle=_T55_ORACLE)
@@ -4897,14 +4836,11 @@ def t55_curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     either way).  At 100 TB the heavy data makes exactly two shuffles
     (the t17 token aggs) plus one range exchange; the driver holds
     only the bucket table (10 rows per source — the same #groups ≪
-    #rows bound grouped_prefix_sums_cached's broadcast already
+    #rows bound grouped_prefix_sums's broadcast already
     assumes).  Reference witness: O2 ordered keyed fold
     (src/Core/MapReduceC.hs:24-26)."""
-    buckets, cache = _t55_buckets(spark, sf_dir)
-    try:
-        rows = buckets.collect()
-    finally:
-        cache.unpersist(blocking=False)
+    with materialize(spark) as m:
+        rows = _t55_buckets(m, sf_dir).collect()
     rows.sort(key=lambda r: (r["decile"], r["source"]))
     out, run = [], 0
     for r in rows:
@@ -5173,12 +5109,13 @@ def t57_agentic_trace_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap, t54's bounded-window case); the per-turn 4-block fan-out is a
     posexplode of a literal 4-struct array (pure projection, no
     shuffle).  The per-turn spans frame (<= 5 rows per source) is
-    localCheckpointed so the system-row arm derives its distinct
+    checkpointed so the system-row arm derives its distinct
     sources from it instead of re-running the pair plan — the corpus
     is scanned exactly TWICE (t45's two ranked arms), plan-pinned.
     Output is <= 21 rows per source.  Reference witness: O2 ordered
     keyed fold + O1 per-record rewrite (src/Core/MapReduceC.hs:24-26)."""
-    spans = _t57_build(spark, sf_dir).localCheckpoint()
+    with materialize(spark) as m:
+        spans = m.result(_t57_build(spark, sf_dir))
     toks_of = lambda c: F.size(text.tokens(c)).cast("bigint")  # noqa: E731
     fold_of = lambda c: (  # noqa: E731
         F.conv(F.substring(F.md5(c), 1, 12), 16, 10).cast("bigint")

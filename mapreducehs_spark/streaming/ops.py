@@ -1497,6 +1497,7 @@ def streaming_logreg_train(
     At 100 TB/day this is the always-on trainer: per batch ONE scan of
     the new data, a 64-key shuffle, and a model-sized driver update —
     cost tracks ingest volume, never history."""
+    from mapreducehs_spark.operators.iteration import materialize
     from mapreducehs_spark.operators.ml import hashed_features, logreg_gradient_step
 
     spark = docs.sparkSession
@@ -1506,12 +1507,14 @@ def streaming_logreg_train(
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         nonlocal weights, bias
-        rows = batch_df.select(
-            "doc_id",
-            "text",
-            (F.length("text") >= label_chars).cast("bigint").alias("y"),
-        ).persist()
-        try:
+        with materialize(batch_df.sparkSession) as m:
+            rows = m.persist(
+                batch_df.select(
+                    "doc_id",
+                    "text",
+                    (F.length("text") >= label_chars).cast("bigint").alias("y"),
+                )
+            )
             n = rows.count()
             if n == 0:  # trailing empty batch: no step
                 return
@@ -1519,8 +1522,6 @@ def streaming_logreg_train(
             labels = rows.select("doc_id", "y")
             weights, bias = logreg_gradient_step(feats, labels, weights, bias, n)
             snaps.append((int(batch_id), dict(weights), bias))
-        finally:
-            rows.unpersist(blocking=False)
 
     q = docs.writeStream.foreachBatch(step).trigger(availableNow=True).start()
     try:

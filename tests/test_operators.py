@@ -23,6 +23,7 @@ from mapreducehs_spark.functions.vector import (
     l2_norm,
     l2_normalize,
 )
+from mapreducehs_spark.operators.iteration import materialize
 from mapreducehs_spark.operators.joins import asof_join, range_join
 from mapreducehs_spark.operators.skew import salted, top_frequent_keys, two_phase_agg
 from mapreducehs_spark.pipeline import Pipeline, word_count_pipeline
@@ -272,10 +273,11 @@ def test_cosine_pairs_lsh_finds_planted_dups(spark):
 
     rows, planted = _planted_vectors()
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in cosine_pairs_lsh(df, threshold=0.95, dim=32).collect()
-    }
+    with materialize(spark) as m:
+        got = {
+            (r["id_a"], r["id_b"])
+            for r in cosine_pairs_lsh(m, df, threshold=0.95, dim=32).collect()
+        }
     # every planted pair is found (recall 1.0 at cosine ≈ 0.999), and
     # nothing below the threshold sneaks in (verification is exact)
     assert set(planted) <= got
@@ -287,10 +289,11 @@ def test_blocked_all_pairs_matches_bruteforce(spark):
 
     rows, _ = _planted_vectors(n=150, n_dups=5)
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = sorted(
-        (r["id_a"], r["id_b"], r["cosine"])
-        for r in all_pairs_cosine_blocked(df, threshold=0.3, block_size=40).collect()
-    )
+    with materialize(spark) as m:
+        got = sorted(
+            (r["id_a"], r["id_b"], r["cosine"])
+            for r in all_pairs_cosine_blocked(m, df, threshold=0.3, block_size=40).collect()
+        )
     a = df.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
     b = df.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
     brute = sorted(
@@ -326,14 +329,15 @@ def test_minhash_estimates_track_exact_jaccard(spark):
     from mapreducehs_spark.operators.dedup import minhash_lsh_pairs, ngram_jaccard_pairs
 
     df = spark.createDataFrame(_doc_corpus(), "doc_id long, text string")
-    exact = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(df, threshold=0.0, max_shingle_df=None).collect()
-    }
-    est = {
-        (r["id_a"], r["id_b"]): r["est_jaccard"]
-        for r in minhash_lsh_pairs(df, jaccard_threshold=0.0).collect()
-    }
+    with materialize(spark) as m:
+        exact = {
+            (r["id_a"], r["id_b"]): r["jaccard"]
+            for r in ngram_jaccard_pairs(m, df, threshold=0.0, max_shingle_df=None).collect()
+        }
+        est = {
+            (r["id_a"], r["id_b"]): r["est_jaccard"]
+            for r in minhash_lsh_pairs(m, df, jaccard_threshold=0.0).collect()
+        }
     # the exact-duplicate pair is found with estimate 1.0
     assert est[(0, 1)] == 1.0
     # every LSH-surfaced pair's estimate is within 0.3 of exact Jaccard
@@ -356,10 +360,11 @@ def test_simhash_fingerprint_locality(spark):
     # banded candidate generation surfaces the exact-dup pair
     # (pigeonhole only GUARANTEES candidates up to hamming bands-1 = 3,
     # so no assertion about the ham(0,2) pair being found)
-    out = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in simhash_near_pairs(df, max_hamming=16).collect()
-    }
+    with materialize(spark) as m:
+        out = {
+            (r["id_a"], r["id_b"]): r["hamming"]
+            for r in simhash_near_pairs(m, df, max_hamming=16).collect()
+        }
     assert out[(0, 1)] == 0
 
 
@@ -454,10 +459,11 @@ def test_ngram_jaccard_matches_pure_python(spark):
 
     rows = _doc_corpus()
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(df, threshold=0.0, max_shingle_df=None).collect()
-    }
+    with materialize(spark) as m:
+        got = {
+            (r["id_a"], r["id_b"]): r["jaccard"]
+            for r in ngram_jaccard_pairs(m, df, threshold=0.0, max_shingle_df=None).collect()
+        }
 
     def sh(text, n=3):
         toks = text.split()
@@ -617,18 +623,19 @@ def test_near_dedup_pipeline_recall(spark):
 
     rows = _doc_corpus()
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    dropped = {
-        r["doc_id"]: r["rep_id"]
-        for r in near_dedup_drop_list(
-            df, candidate_threshold=0.2, jaccard_threshold=0.5
-        ).collect()
-    }
-    exact_pairs = ngram_jaccard_pairs(df, threshold=0.5, max_shingle_df=None)
-    want = {
-        r["doc_id"]: r["rep_id"]
-        for r in resolve_duplicate_clusters(exact_pairs).collect()
-        if r["doc_id"] != r["rep_id"]
-    }
+    with materialize(spark) as m:
+        dropped = {
+            r["doc_id"]: r["rep_id"]
+            for r in near_dedup_drop_list(
+                m, df, candidate_threshold=0.2, jaccard_threshold=0.5
+            ).collect()
+        }
+        exact_pairs = ngram_jaccard_pairs(m, df, threshold=0.5, max_shingle_df=None)
+        want = {
+            r["doc_id"]: r["rep_id"]
+            for r in resolve_duplicate_clusters(exact_pairs).collect()
+            if r["doc_id"] != r["rep_id"]
+        }
     # every exact-path drop is found by the pipeline with identical rep
     # (tiny corpus: LSH at 32 perms surfaces all J>=0.5 pairs here)
     assert dropped == want
@@ -1012,14 +1019,15 @@ def test_global_positions_invariant_to_input_partitioning(spark):
     base = spark.range(0, 1000).select(
         F.col("id"), F.md5(F.col("id").cast("string")).alias("k")
     )
-    a = {
-        r["id"]: r["pos"]
-        for r in global_positions(base.repartition(1), ["k", "id"]).collect()
-    }
-    b = {
-        r["id"]: r["pos"]
-        for r in global_positions(base.repartition(13), ["k", "id"]).collect()
-    }
+    with materialize(spark) as m:
+        a = {
+            r["id"]: r["pos"]
+            for r in global_positions(m, base.repartition(1), ["k", "id"]).collect()
+        }
+        b = {
+            r["id"]: r["pos"]
+            for r in global_positions(m, base.repartition(13), ["k", "id"]).collect()
+        }
     assert a == b
     assert sorted(a.values()) == list(range(1, 1001))
 
@@ -1203,12 +1211,11 @@ def test_prefix_filter_completeness_vs_shared_shingle_join(spark):
         for r in QUERIES["d18_prefix_filter_pairs"](spark, sf).collect()
     }
     docs = load_table(spark, sf, "documents")
-    want = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in ngram_jaccard_pairs(
-            docs, threshold=0.5, max_shingle_df=None
-        ).collect()
-    }
+    with materialize(spark) as m:
+        want = {
+            (r.id_a, r.id_b, r.jaccard)
+            for r in ngram_jaccard_pairs(m, docs, threshold=0.5, max_shingle_df=None).collect()
+        }
     assert got == want and got
 
 
@@ -1395,12 +1402,11 @@ def test_cms_overestimate_property(spark):
     overestimates can never underestimate."""
     import pyspark.sql.functions as F
 
-    from mapreducehs_spark.queries import _q107_cell_col, _q107_cells, _q107_cms_build
+    from mapreducehs_spark.queries import _q107_cell_col, _q107_cells, _q107_freq
+    from tests.conftest import SF_DIR
 
-    sf = "/root/testdata/sf0.001"
-    plan, freq = _q107_cms_build(spark, sf)
-    try:
-        plan.collect()  # materialize cells while freq is cached
+    with materialize(spark) as m:
+        freq = m.persist(_q107_freq(spark, SF_DIR))
         rows = spark.range(4).select(F.col("id").cast("int").alias("r"))
         # the SAME cell law as production — reused, not re-derived, so a
         # width/salt change in q107 is automatically covered here
@@ -1415,8 +1421,6 @@ def test_cms_overestimate_property(spark):
         )
         bad = est.filter(F.col("est") < F.col("true_c")).count()
         assert bad == 0
-    finally:
-        freq.unpersist(blocking=False)
 
 
 def test_build_fixture_once_atomic_and_legacy_safe(tmp_path):
@@ -1493,26 +1497,72 @@ def test_build_fixture_once_cleans_up_failed_build(tmp_path):
     assert not os.path.exists(base)
 
 
-def test_local_checkpoint_freeable_releases_blocks(spark):
+def _persistent_rdd_ids(spark) -> set[int]:
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+
+def test_materialize_scope_releases_blocks(spark):
     """Pin the two facts operators/iteration.py is built on: (a) plain
     DataFrame.unpersist() does NOT unregister a localCheckpoint's RDD
-    (it bypasses the CacheManager), and (b) the returned free() handle
-    does — the persistent-RDD registry returns to baseline."""
-    from mapreducehs_spark.operators.iteration import (
-        _persistent_rdds,
-        local_checkpoint_freeable,
-    )
+    (it bypasses the CacheManager), and (b) the scope does — on exit,
+    and early through m.free() — so the registry returns to baseline."""
+    spark.catalog.clearCache()
+    base_ids = _persistent_rdd_ids(spark)
+    frame = spark.range(1000).selectExpr("id", "id * 2 AS x")
+    with materialize(spark) as m:
+        df = m.checkpoint(frame)
+        assert df.count() == 1000
+        assert _persistent_rdd_ids(spark) - base_ids, "checkpoint registered nothing"
+        df.unpersist(blocking=True)  # the documented no-op
+        assert _persistent_rdd_ids(spark) - base_ids, "plain unpersist unexpectedly worked"
+        early = m.checkpoint(frame.selectExpr("x"))
+        registered = _persistent_rdd_ids(spark)
+        m.free(early)
+        assert len(registered - _persistent_rdd_ids(spark)) == 1, "free() released the wrong blocks"
+        with pytest.raises(ValueError):
+            m.free(early)  # no longer held
+    assert not (_persistent_rdd_ids(spark) - base_ids), "the scope left blocks registered"
 
-    sc = spark.sparkContext
-    base_ids = set(_persistent_rdds(sc))
-    df, free = local_checkpoint_freeable(spark.range(1000).selectExpr("id", "id * 2 AS x"))
-    assert df.count() == 1000
-    assert set(_persistent_rdds(sc)) - base_ids, "checkpoint registered nothing"
-    df.unpersist(blocking=True)  # the documented no-op
-    assert set(_persistent_rdds(sc)) - base_ids, "plain unpersist unexpectedly worked"
-    free()
-    assert not (set(_persistent_rdds(sc)) - base_ids), "free() left blocks registered"
-    free()  # idempotent
+
+def test_materialize_scope_frees_on_failure(spark):
+    """A block that registers a persist and a checkpoint and then raises
+    leaves the persistent-RDD registry and the CacheManager at baseline
+    — the class behind a builder failing before its caller could free
+    what it had persisted."""
+    spark.catalog.clearCache()
+    base_ids = _persistent_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="builder failed"):
+        with materialize(spark) as m:
+            cached = m.persist(spark.range(500).selectExpr("id % 7 AS k"))
+            assert cached.count() == 500
+            m.checkpoint(cached.groupBy("k").count())
+            raise RuntimeError("builder failed")
+    assert not (_persistent_rdd_ids(spark) - base_ids)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_materialization_only_through_the_scope():
+    """Every persist, cache, checkpoint and unpersist in the engine goes
+    through the ``materialize`` scope handle (``m``), so no hand-rolled
+    lifetime can creep back outside operators/iteration.py."""
+    import ast
+    import pathlib
+
+    import mapreducehs_spark
+
+    root = pathlib.Path(mapreducehs_spark.__file__).parent
+    banned = {"persist", "cache", "localCheckpoint", "checkpoint", "unpersist"}
+    bad = [
+        f"{path.relative_to(root)}:{node.lineno} .{node.func.attr}("
+        for path in sorted(root.rglob("*.py"))
+        if path != root / "operators" / "iteration.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in banned
+        and not (isinstance(node.func.value, ast.Name) and node.func.value.id == "m")
+    ]
+    assert not bad, bad
 
 
 def test_guard_driver_fixture_trips_on_oversized_frame(spark):
@@ -1708,11 +1758,11 @@ def test_raw_edge_arms_close_to_canonical_classes(spark):
         (r["node"], r["rep"])
         for r in connected_components_star(star_edges).collect()
     }
-    raw, free = hash64_duplicate_edges(h, max_hamming=3)
-    closed_raw = {
-        (r["node"], r["rep"]) for r in connected_components_star(raw).collect()
-    }
-    free()
+    with materialize(spark) as m:
+        raw = hash64_duplicate_edges(m, h, max_hamming=3)
+        closed_raw = {
+            (r["node"], r["rep"]) for r in connected_components_star(raw).collect()
+        }
     assert closed_raw == closed_star
     assert closed_raw == {(2, 1), (5, 1), (9, 1)}
 
@@ -1803,8 +1853,8 @@ def test_hash64_canonical_dedup_vs_bruteforce(spark):
 
 
 def test_hash64_canonical_dedup_result_is_rereadable(spark):
-    """The q108 ordering discipline (ADVICE r05): the returned frame is
-    eagerly localCheckpointed BEFORE its persisted inputs are released —
+    """The returned frame is handed out of the scope with m.result, which
+    materializes it BEFORE the scope frees its persisted inputs —
     collecting it twice must work (no CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)."""
     from mapreducehs_spark.operators.dedup import hash64_canonical_dedup
 
@@ -1818,11 +1868,10 @@ def test_hash64_canonical_dedup_result_is_rereadable(spark):
 
 
 def test_q108_result_rereadable_after_level_frames_freed(spark):
-    """ADVICE r05: q108 frees its per-level checkpoint blocks in a
-    finally block and relies on the result's EAGER localCheckpoint
-    having materialized first — an ordering that lived only in a
-    comment.  Collecting the result twice locks it: if the checkpoint
-    ever becomes lazy (or is dropped), the second action dies with
+    """q108's scope frees its per-level checkpoint blocks on exit; the
+    result survives because m.result materializes it first.  Collecting
+    the result twice locks that: if the result ever became lazy (or
+    read a freed level), the second action would die with
     CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND."""
     from mapreducehs_spark.queries import QUERIES
 
@@ -2197,11 +2246,8 @@ def test_kmeans_assignments_consistent_with_profile(spark):
         r["cluster"]: (r["n_members"], r["avg_sqdist"])
         for r in kmeans_profile(df, k=k, iters=2).collect()
     }
-    assign, cache = kmeans_assignments(df, k=k, iters=2)
-    try:
-        rows = assign.collect()
-    finally:
-        cache.unpersist(blocking=False)
+    with materialize(spark) as m:
+        rows = kmeans_assignments(m, df, k=k, iters=2).collect()
     # every vector labeled exactly once
     assert sorted(r["id"] for r in rows) == list(range(n))
     agg: dict = {}

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import pytest
 
+from mapreducehs_spark.operators.iteration import materialize
 from mapreducehs_spark.plans import inspect as I
 from mapreducehs_spark.queries import QUERIES
 
@@ -440,15 +441,13 @@ def test_q100_triangles_no_cartesian(spark):
     # materializes sel/oriented eagerly, which would hide the plan
     from mapreducehs_spark.queries.q_ext import _q100_tri_build
 
-    per_node, oriented = _q100_tri_build(spark, SF)
-    try:
+    with materialize(spark) as m:
+        per_node = _q100_tri_build(m, SF)
         plan = I.formatted_plan(per_node)
         assert "CartesianProduct" not in plan
         # round 13: the corpus subtree is materialized ONCE — the wedge
         # pass must reference the checkpoint/cache, never re-scan parquet
         assert "Scan parquet" not in plan
-    finally:
-        oriented.unpersist(blocking=False)
 
 
 def test_q101_rules_topk_no_global_sort(q):
@@ -495,13 +494,11 @@ def test_q107_cms_probe_broadcasts(spark):
     # plan — the query itself returns a checkpointed 10-row result.)
     from mapreducehs_spark.queries import _q107_cms_build
 
-    df, freq = _q107_cms_build(spark, SF)
-    try:
+    with materialize(spark) as m:
+        df = _q107_cms_build(m, SF)
         plan = I.formatted_plan(df)
         assert "BroadcastHashJoin" in plan
         assert "SortAggregate" not in plan
-    finally:
-        freq.unpersist(blocking=False)
 
 
 def test_q110_nested_schema_pruning(q):
@@ -568,13 +565,12 @@ def test_t28_gradient_step_broadcast_model_no_extra_exchange(spark):
     # persist (exactly what the operator does): InMemoryRelation keeps
     # the doc_id hash partitioning visible to the planner — a
     # localCheckpoint would erase it and force re-exchanges
-    features = hashed_features(docs, 64).repartition("doc_id").persist()
-    labels = (
-        docs.select("doc_id", (F.col("n_chars") >= 300).cast("bigint").alias("y"))
-        .repartition("doc_id")
-        .persist()
-    )
-    try:
+    with materialize(spark) as m:
+        features = m.persist(hashed_features(docs, 64).repartition("doc_id"))
+        labels = m.persist(
+            docs.select("doc_id", (F.col("n_chars") >= 300).cast("bigint").alias("y"))
+            .repartition("doc_id")
+        )
         features.count(), labels.count()
         grad_df, _resid = gradient_frames(
             features, labels, {b: 0 for b in range(64)}, 0
@@ -598,9 +594,6 @@ def test_t28_gradient_step_broadcast_model_no_extra_exchange(spark):
         assert not re.search(
             r"Sort \(\d+\)\n[\s:+*-]*Exchange", plan
         ), "the residual join re-shuffles a side that should be co-partitioned"
-    finally:
-        features.unpersist(blocking=False)
-        labels.unpersist(blocking=False)
 
 
 def test_d22_single_cluster_shuffle_no_cartesian(q):
@@ -633,13 +626,12 @@ def test_t29_sample_filter_prunes_before_model_join(spark):
     from mapreducehs_spark.queries import _t
 
     docs = _t(spark, SF, "documents")
-    features = hashed_features(docs, 64).repartition("doc_id").persist()
-    labels = (
-        docs.select("doc_id", (F.col("n_chars") >= 300).cast("bigint").alias("y"))
-        .repartition("doc_id")
-        .persist()
-    )
-    try:
+    with materialize(spark) as m:
+        features = m.persist(hashed_features(docs, 64).repartition("doc_id"))
+        labels = m.persist(
+            docs.select("doc_id", (F.col("n_chars") >= 300).cast("bigint").alias("y"))
+            .repartition("doc_id")
+        )
         features.count(), labels.count()
         pred = sample_pred(1, 4)
         grad_df, _resid = gradient_frames(
@@ -654,9 +646,6 @@ def test_t29_sample_filter_prunes_before_model_join(spark):
         assert re.search(
             r"HashAggregate \(\d+\)\n[\s:+*-]*HashAggregate \(\d+\)", plan
         ), "sampled margin aggregation no longer reuses the features partitioning"
-    finally:
-        features.unpersist(blocking=False)
-        labels.unpersist(blocking=False)
 
 
 def test_t30_rates_broadcast_doc_side_never_shuffles_wide(q):
@@ -786,21 +775,19 @@ def test_d26_sig_scan_is_shuffle_free_and_bench_broadcasts(q, spark):
 
 
 def test_t33_no_single_task_window(spark):
-    # the sharding sort is global_positions_cached's range-partitioned
+    # the sharding sort is global_positions's range-partitioned
     # two-phase idiom — a bare row_number() OVER (ORDER BY ...) would
     # appear as a Window over a single partition; assert none exists.
     # (Inspect the PRE-checkpoint plan — the query itself returns a
     # checkpointed 8-row result.)
     from mapreducehs_spark.queries import _t33_build
 
-    df, cache = _t33_build(spark, SF)
-    try:
+    with materialize(spark) as m:
+        df = _t33_build(m, SF)
         plan = I.formatted_plan(df)
         assert "Window" not in plan
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" in plan  # the 1-row total meets per-shard broadcast
-    finally:
-        cache.unpersist(blocking=False)
 
 
 def test_q117_compaction_window_group_limit(q):
@@ -831,13 +818,11 @@ def test_t34_tercile_bucketing_window_free(spark):
     # (Pre-checkpoint plan, q107 discipline.)
     from mapreducehs_spark.queries import _t34_build
 
-    df, cache = _t34_build(spark, SF)
-    try:
+    with materialize(spark) as m:
+        df = _t34_build(m, SF)
         plan = I.formatted_plan(df)
         assert "Window" not in plan
         assert "BroadcastHashJoin" in plan
-    finally:
-        cache.unpersist(blocking=False)
 
 
 def test_t35_weight_table_broadcasts_topk_bounded(q):
@@ -892,16 +877,14 @@ def test_t37_fold_filter_preserves_partitioning(spark):
     import pyspark.sql.functions as F
 
     docs = load_table(spark, SF, "documents")
-    feats = (
-        hashed_features(docs, 64)
-        .withColumn("fold", cv_fold_col(3))
-        .repartition("doc_id")
-        .persist()
-    )
-    labels = docs.select(
-        "doc_id", (F.col("n_chars") >= 300).cast("bigint").alias("y")
-    ).repartition("doc_id").persist()
-    try:
+    with materialize(spark) as m:
+        feats = m.persist(
+            hashed_features(docs, 64).withColumn("fold", cv_fold_col(3)).repartition("doc_id")
+        )
+        labels = m.persist(
+            docs.select("doc_id", (F.col("n_chars") >= 300).cast("bigint").alias("y"))
+            .repartition("doc_id")
+        )
         feats.count(), labels.count()  # materialize: partitioning visible
         grad, _ = gradient_frames(
             feats.filter(F.col("fold") != 0).select("doc_id", "bucket", "x"),
@@ -921,9 +904,6 @@ def test_t37_fold_filter_preserves_partitioning(spark):
         assert re.search(
             r"HashAggregate \(\d+\)\n[\s:+*-]*HashAggregate \(\d+\)", plan
         ), "fold filter broke the cached partitioning reuse"
-    finally:
-        feats.unpersist(blocking=False)
-        labels.unpersist(blocking=False)
 
 
 def test_t38_shared_window_partitioning_single_pass(q):
@@ -972,8 +952,8 @@ def test_t40_packing_window_free_one_scan(spark):
     discipline.)"""
     from mapreducehs_spark.queries import _t40_build
 
-    df, cache = _t40_build(spark, SF)
-    try:
+    with materialize(spark) as m:
+        df = _t40_build(m, SF)
         plan = I.formatted_plan(df)
         assert "Window" not in plan
         assert "Join" not in plan
@@ -984,8 +964,6 @@ def test_t40_packing_window_free_one_scan(spark):
         # duplicates cached subtrees; runtime has one of each)
         assert plan.count("hashpartitioning") == 1
         assert "rangepartitioning(doc_id" in plan
-    finally:
-        cache.unpersist(blocking=False)
 
 
 def test_t41_provenance_same_shape_as_t32(q):
@@ -1063,16 +1041,13 @@ def test_t46_topical_packing_window_free(q, spark):
     cluster ever collapses onto one task."""
     from mapreducehs_spark.queries import _t46_build
 
-    df, caches = _t46_build(spark, SF)
-    try:
+    with materialize(spark) as m:
+        df = _t46_build(m, SF)
         plan = I.formatted_plan(df)
         assert "Window" not in plan
         assert "CartesianProduct" not in plan
         assert "rangepartitioning(cluster" in plan
         assert I.broadcast_join_count(df) >= 1  # the k-row base frame
-    finally:
-        for c in caches:
-            c.unpersist(blocking=False)
 
 
 def test_m18_vlm_packing_window_free_one_scan(q, spark):
@@ -1081,8 +1056,8 @@ def test_m18_vlm_packing_window_free_one_scan(q, spark):
     base), no Window, no pixel column read."""
     from mapreducehs_spark.queries import _m18_build
 
-    df, cache = _m18_build(spark, SF)
-    try:
+    with materialize(spark) as m:
+        df = _m18_build(m, SF)
         plan = I.formatted_plan(df)
         import re as _re
 
@@ -1091,8 +1066,6 @@ def test_m18_vlm_packing_window_free_one_scan(q, spark):
         assert "CartesianProduct" not in plan
         assert "rangepartitioning(source" in plan
         assert I.broadcast_join_count(df) >= 1
-    finally:
-        cache.unpersist(blocking=False)
 
 
 def test_d30_benchmark_side_broadcasts(q):
@@ -1167,15 +1140,13 @@ def test_t49_deciles_window_free(q, spark):
     terabyte source shard never lands on one task."""
     from mapreducehs_spark.queries import _t49_build
 
-    df, cache = _t49_build(spark, SF)
-    try:
+    with materialize(spark) as m:
+        df = _t49_build(m, SF)
         plan = I.formatted_plan(df)
         assert "Window" not in plan
         assert "CartesianProduct" not in plan
         assert "rangepartitioning(source" in plan
         assert I.broadcast_join_count(df) >= 2  # base offsets + sizes
-    finally:
-        cache.unpersist(blocking=False)
 
 
 def test_m19_funnel_single_scan_no_udf(q):
@@ -1217,8 +1188,8 @@ def test_t50_manifest_window_free(q, spark):
     nothing cartesians."""
     from mapreducehs_spark.queries import _t50_build
 
-    df, cache = _t50_build(spark, SF)
-    try:
+    with materialize(spark) as m:
+        df = _t50_build(m, SF)
         plan = I.formatted_plan(df)
         # the only Window is t44's unpartitioned totals pass over the
         # ALREADY-AGGREGATED n_sources-row frame (the documented t42/
@@ -1229,8 +1200,6 @@ def test_t50_manifest_window_free(q, spark):
         assert "CartesianProduct" not in plan
         assert "rangepartitioning(source" in plan
         assert I.broadcast_join_count(df) >= 2  # eplan + group bases
-    finally:
-        cache.unpersist(blocking=False)
 
 
 def test_t50_conservation_vs_t44(q, spark):
@@ -1392,15 +1361,13 @@ def test_t53_sweep_window_free(spark):
     no Window operator anywhere, nothing cartesians."""
     from mapreducehs_spark.queries import _t53_build
 
-    df, cache = _t53_build(spark, SF)
-    try:
+    with materialize(spark) as m:
+        df = _t53_build(m, SF)
         plan = I.formatted_plan(df)
         assert "Window" not in plan
         assert "CartesianProduct" not in plan
         assert "rangepartitioning" in plan
         assert I.broadcast_join_count(df) >= 1
-    finally:
-        cache.unpersist(blocking=False)
 
 
 def test_t53_agrees_with_t40_at_committed_length(q):
@@ -1486,14 +1453,12 @@ def test_t55_schedule_window_free(spark):
     data.)"""
     from mapreducehs_spark.queries.t_text import _t55_buckets
 
-    df, cache = _t55_buckets(spark, SF)
-    try:
+    with materialize(spark) as m:
+        df = _t55_buckets(m, SF)
         plan = I.formatted_plan(df)
         assert "Window" not in plan
         assert "CartesianProduct" not in plan
         assert "rangepartitioning(source" in plan
-    finally:
-        cache.unpersist(blocking=False)
 
 
 def test_t55_conservation_vs_t49(q):

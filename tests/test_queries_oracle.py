@@ -20,10 +20,35 @@ def con():
     c.close()
 
 
+def _persistent_rdd_ids(spark) -> set[int]:
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+
+def _read_rdd_ids(df) -> set[int]:
+    """Ids of the RDDs the frame's plan reads: its ``LogicalRDD`` leaves
+    (a checkpointed frame is a ``LogicalRDD`` over the persisted RDD)."""
+    leaves = df._jdf.queryExecution().logical().collectLeaves()
+    return {
+        int(leaf.rdd().id())
+        for leaf in (leaves.apply(i) for i in range(leaves.size()))
+        if leaf.getClass().getSimpleName() == "LogicalRDD"
+    }
+
+
 @pytest.mark.parametrize("name", sorted(ORACLE))
 def test_oracle_parity(spark, con, name):
+    """Value parity with the oracle, plus the materialization lifetime
+    contract (operators/iteration.py): once the query returns, the only
+    persistent RDDs it registered are ones its result reads, and the
+    CacheManager holds nothing."""
+    spark.catalog.clearCache()
+    before = _persistent_rdd_ids(spark)
     df = QUERIES[name](spark, SF_DIR)
     assert_matches_oracle(df, con, ORACLE[name], name)
+    leaked = _persistent_rdd_ids(spark) - before - _read_rdd_ids(df)
+    assert not leaked, f"{name}: unread persistent RDDs {sorted(leaked)} outlive the query"
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    assert cache_manager.isEmpty(), f"{name}: CacheManager entries outlive the query"
 
 
 def test_every_query_has_an_oracle():
@@ -100,16 +125,14 @@ def test_t46_topical_packing_conservation(spark):
     from pyspark.sql import functions as F
 
     from mapreducehs_spark.operators import text
+    from mapreducehs_spark.operators.iteration import materialize
     from mapreducehs_spark.operators.similarity import kmeans_assignments
     from mapreducehs_spark.queries import _T40_CTX
     from mapreducehs_spark.sources.catalog import load_table
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    assign, cache = kmeans_assignments(emb, k=8, iters=2)
-    try:
-        labels = {r["id"]: r["cluster"] for r in assign.collect()}
-    finally:
-        cache.unpersist(blocking=False)
+    with materialize(spark) as m:
+        labels = {r["id"]: r["cluster"] for r in kmeans_assignments(m, emb, k=8, iters=2).collect()}
     docs = load_table(spark, SF_DIR, "documents").select(
         "doc_id", F.size(text.tokens("text")).cast("bigint").alias("n_tok")
     )

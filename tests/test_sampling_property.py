@@ -133,17 +133,16 @@ grp_rows = st.lists(
 @given(rows=grp_rows)
 @settings(**SETTINGS)
 def test_grouped_prefix_sums_differential(spark, rows):
-    """grouped_prefix_sums_cached == per-group exclusive cumsum (pure
+    """grouped_prefix_sums == per-group exclusive cumsum (pure
     Python mirror), for arbitrary group sizes including singleton and
     empty-weight rows."""
-    from mapreducehs_spark.operators.sampling import grouped_prefix_sums_cached
+    from mapreducehs_spark.operators.iteration import materialize
+    from mapreducehs_spark.operators.sampling import grouped_prefix_sums
 
     df = spark.createDataFrame(rows, "g long, k long, w long")
-    out, cache = grouped_prefix_sums_cached(df, ["g"], ["k"], "w", out_col="start")
-    try:
+    with materialize(spark) as m:
+        out = grouped_prefix_sums(m, df, ["g"], ["k"], "w", out_col="start")
         got = {(r["g"], r["k"]): r["start"] for r in out.collect()}
-    finally:
-        cache.unpersist(blocking=False)
 
     want: dict = {}
     running: dict = {}

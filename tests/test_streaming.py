@@ -939,3 +939,26 @@ def test_st36_monitor_checkpoint_restart_and_replay_dedup(spark, tmp_path):
         checkpoint_dir=str(tmp_path / "ckpt2"),
     )
     assert snapshot() == got
+
+
+def test_state_bound_counts_parquet_directory_parts(tmp_path):
+    """A directory-style copy of ``events`` (part file + Spark's hidden
+    marker files) sizes the state store exactly like the single file;
+    a missing table names its path instead of falling to the floor."""
+    import shutil
+
+    from mapreducehs_spark.queries.st_streaming import _state_bound
+    from mapreducehs_spark.streaming.ops import state_partitions_for
+    from tests.conftest import SF_DIR
+
+    table = tmp_path / "events.parquet"
+    table.mkdir()
+    shutil.copy(os.path.join(SF_DIR, "events.parquet"), table / "part-00000.parquet")
+    (table / "_SUCCESS").write_bytes(b"")
+    (table / ".part-00000.parquet.crc").write_bytes(b"x" * 64)
+    assert _state_bound(str(tmp_path)) == _state_bound(SF_DIR)
+    assert state_partitions_for(_state_bound(str(tmp_path))) == state_partitions_for(
+        _state_bound(SF_DIR)
+    )
+    with pytest.raises(FileNotFoundError, match="no_such_table.parquet"):
+        _state_bound(str(tmp_path), "no_such_table")
