@@ -31,7 +31,10 @@ def _minhash_checked_ctes() -> tuple[str, str, int]:
     constants the Spark operator uses
     (operators/dedup.minhash_check_seeds) — parity by construction.
     Returns (cte_body, agree_expr, num_perm); d11 and d15 append
-    different tails."""
+    different tails.  CTEs read more than once (here or by a tail) are
+    ``AS MATERIALIZED``: DuckDB 1.0 otherwise inlines a CTE and
+    recomputes it at every reference (FIXTURES.md, oracle capacity
+    rules)."""
     from mapreducehs_spark.operators.dedup import (
         MINHASH_CHECK_BANDS,
         MINHASH_CHECK_NUM_PERM,
@@ -59,17 +62,17 @@ def _minhash_checked_ctes() -> tuple[str, str, int]:
       FROM documents
     ), pos AS (
       SELECT doc_id, t, unnest(range(1, greatest(len(t) - 2, 0) + 1)) AS i FROM toks
-    ), sh AS (
+    ), sh AS MATERIALIZED (
       SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s FROM pos
     ), ids AS (
       SELECT doc_id, ('0x' || substr(md5(s), 1, 15))::BIGINT % 2147483647 AS x FROM sh
-    ), sigs AS (
+    ), sigs AS MATERIALIZED (
       SELECT doc_id, {mins}
       FROM ids GROUP BY doc_id
-    ), bandcols AS (
+    ), bandcols AS MATERIALIZED (
       SELECT doc_id, {bkeys} FROM sigs
-    ), banded AS ({unions}),
-    cand AS (
+    ), banded AS MATERIALIZED ({unions}),
+    cand AS MATERIALIZED (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
       FROM banded a JOIN banded b ON a.band = b.band AND a.bk = b.bk AND a.doc_id < b.doc_id
     )"""
@@ -102,7 +105,7 @@ def _d15_oracle(est_threshold: float = 0.25, jaccard_threshold: float = 0.5) -> 
       SELECT c.id_a, c.id_b
       FROM cand c JOIN sigs sa ON sa.doc_id = c.id_a JOIN sigs sb ON sb.doc_id = c.id_b
       WHERE ({agree}) / {float(np_)} >= {est_threshold}
-    ), sized AS (
+    ), sized AS MATERIALIZED (
       SELECT doc_id, count(*) AS set_size FROM sh GROUP BY 1
     ), inter AS (
       SELECT e.id_a, e.id_b, count(*) AS inter
@@ -110,13 +113,13 @@ def _d15_oracle(est_threshold: float = 0.25, jaccard_threshold: float = 0.5) -> 
       JOIN sh a ON a.doc_id = e.id_a
       JOIN sh b ON b.doc_id = e.id_b AND b.s = a.s
       GROUP BY 1, 2
-    ), p AS (
+    ), p AS MATERIALIZED (
       SELECT id_a, id_b
       FROM inter
       JOIN sized za ON za.doc_id = id_a
       JOIN sized zb ON zb.doc_id = id_b
       WHERE inter / CAST(za.set_size + zb.set_size - inter AS DOUBLE) >= {jaccard_threshold}
-    ), edges AS (
+    ), edges AS MATERIALIZED (
       SELECT id_a AS src, id_b AS dst FROM p
       UNION
       SELECT id_b, id_a FROM p
@@ -129,115 +132,6 @@ def _d15_oracle(est_threshold: float = 0.25, jaccard_threshold: float = 0.5) -> 
     FROM reach
     GROUP BY src
     HAVING src != min(dst)
-    """
-
-
-def _d15_staged_stmts(
-    prefix: str, est_threshold: float = 0.25, jaccard_threshold: float = 0.5
-) -> str:
-    """_d15_oracle's drop-list replay as ';'-separated TEMP TABLE
-    stages (the STAGED_ORACLE discipline): shingles → signatures →
-    banding candidates → estimate filter → exact-Jaccard verify →
-    recursive component closure, each its own statement with consumed
-    scratch dropped, ending with ``{prefix}_drop (doc_id, rep_id)``
-    materialized.  Built from the SAME seed constants and literal CTE
-    bodies as _minhash_checked_ctes — parity by construction; m14's
-    sf1 replay needs this because the monolithic arm plus a sibling
-    arm's residue overflows the box in one statement."""
-    from mapreducehs_spark.operators.dedup import (
-        MINHASH_CHECK_BANDS,
-        MINHASH_CHECK_NUM_PERM,
-        minhash_check_seeds,
-    )
-
-    a, b = minhash_check_seeds()
-    np_, nb = MINHASH_CHECK_NUM_PERM, MINHASH_CHECK_BANDS
-    rows = np_ // nb
-    p = prefix
-    mins = ",\n             ".join(
-        f"min(({a[i]}*x + {b[i]}) % 2147483647) AS m{i}" for i in range(np_)
-    )
-    bkeys = ", ".join(
-        "concat_ws('_', "
-        + ", ".join(f"m{bi * rows + r}" for r in range(rows))
-        + f") AS bk{bi}"
-        for bi in range(nb)
-    )
-    unions = " UNION ALL ".join(
-        f"SELECT doc_id, {bi} AS band, bk{bi} AS bk FROM {p}_bandcols"
-        for bi in range(nb)
-    )
-    agree = " + ".join(f"CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END" for i in range(np_))
-    return f"""
-    DROP TABLE IF EXISTS {p}_sh;
-    CREATE TEMP TABLE {p}_sh AS
-      WITH toks AS (
-        SELECT doc_id, list_filter(regexp_split_to_array(text, '\\s+'), x -> x != '') AS t
-        FROM documents
-      ), pos AS (
-        SELECT doc_id, t, unnest(range(1, greatest(len(t) - 2, 0) + 1)) AS i FROM toks
-      )
-      SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s FROM pos;
-    DROP TABLE IF EXISTS {p}_sigs;
-    CREATE TEMP TABLE {p}_sigs AS
-      WITH ids AS (
-        SELECT doc_id, ('0x' || substr(md5(s), 1, 15))::BIGINT % 2147483647 AS x
-        FROM {p}_sh
-      )
-      SELECT doc_id, {mins}
-      FROM ids GROUP BY doc_id;
-    DROP TABLE IF EXISTS {p}_bandcols;
-    CREATE TEMP TABLE {p}_bandcols AS
-      SELECT doc_id, {bkeys} FROM {p}_sigs;
-    DROP TABLE IF EXISTS {p}_cand;
-    CREATE TEMP TABLE {p}_cand AS
-      WITH banded AS ({unions})
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM banded a JOIN banded b
-        ON a.band = b.band AND a.bk = b.bk AND a.doc_id < b.doc_id;
-    DROP TABLE {p}_bandcols;
-    DROP TABLE IF EXISTS {p}_est;
-    CREATE TEMP TABLE {p}_est AS
-      SELECT c.id_a, c.id_b
-      FROM {p}_cand c
-      JOIN {p}_sigs sa ON sa.doc_id = c.id_a
-      JOIN {p}_sigs sb ON sb.doc_id = c.id_b
-      WHERE ({agree}) / {float(np_)} >= {est_threshold};
-    DROP TABLE {p}_cand;
-    DROP TABLE {p}_sigs;
-    DROP TABLE IF EXISTS {p}_p;
-    CREATE TEMP TABLE {p}_p AS
-      WITH sized AS (
-        SELECT doc_id, count(*) AS set_size FROM {p}_sh GROUP BY 1
-      ), inter AS (
-        SELECT e.id_a, e.id_b, count(*) AS inter
-        FROM {p}_est e
-        JOIN {p}_sh a ON a.doc_id = e.id_a
-        JOIN {p}_sh b ON b.doc_id = e.id_b AND b.s = a.s
-        GROUP BY 1, 2
-      )
-      SELECT id_a, id_b
-      FROM inter
-      JOIN sized za ON za.doc_id = id_a
-      JOIN sized zb ON zb.doc_id = id_b
-      WHERE inter / CAST(za.set_size + zb.set_size - inter AS DOUBLE)
-            >= {jaccard_threshold};
-    DROP TABLE {p}_est;
-    DROP TABLE {p}_sh;
-    DROP TABLE IF EXISTS {p}_drop;
-    CREATE TEMP TABLE {p}_drop AS
-      WITH RECURSIVE edges AS (
-        SELECT id_a AS src, id_b AS dst FROM {p}_p
-        UNION
-        SELECT id_b, id_a FROM {p}_p
-      ), reach(src, dst) AS (
-        SELECT DISTINCT src, src FROM edges
-        UNION
-        SELECT e.src, r.dst FROM edges e JOIN reach r ON e.dst = r.src
-      )
-      SELECT src AS doc_id, CAST(min(dst) AS BIGINT) AS rep_id
-      FROM reach GROUP BY src HAVING src != min(dst);
-    DROP TABLE {p}_p;
     """
 
 

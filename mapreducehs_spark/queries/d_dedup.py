@@ -23,7 +23,6 @@ from mapreducehs_spark.sources.catalog import load_table
 from mapreducehs_spark.queries._registry import (  # noqa: F401
     ORACLE,
     QUERIES,
-    STAGED_ORACLE,
     query,
 )
 from mapreducehs_spark.queries._shared import (  # noqa: F401
@@ -957,11 +956,11 @@ def _d21_oracle() -> str:
     ctes, agree, np_ = _minhash_checked_ctes()
     return f"""
     WITH RECURSIVE {ctes},
-    est AS (
+    est AS MATERIALIZED (
       SELECT c.id_a, c.id_b
       FROM cand c JOIN sigs sa ON sa.doc_id = c.id_a JOIN sigs sb ON sb.doc_id = c.id_b
       WHERE ({agree}) / {float(np_)} >= 0.25
-    ), edges AS (
+    ), edges AS MATERIALIZED (
       SELECT id_a AS src, id_b AS dst FROM est
       UNION
       SELECT id_b, id_a FROM est
@@ -1432,10 +1431,10 @@ def d26_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "d27_lsh_quality_report",
     oracle="""
-    WITH truth AS (
+    WITH truth AS MATERIALIZED (
       SELECT id_a, id_b FROM (""" + ORACLE["d02_ngram_jaccard_pairs"] + """
       ) WHERE jaccard >= 0.5
-    ), lsh AS (
+    ), lsh AS MATERIALIZED (
       SELECT id_a, id_b FROM (""" + _d11_oracle(threshold=0.25) + """
       )
     ), hit AS (
@@ -1523,11 +1522,11 @@ def _d28_oracle() -> str:
              CASE WHEN doc_id % 3 = 1 THEN text || ' updated' ELSE text END AS text
       FROM documents WHERE doc_id % 3 IN (0, 1)
     ), {ctes},
-    est AS (
+    est AS MATERIALIZED (
       SELECT c.id_a, c.id_b
       FROM cand c JOIN sigs sa ON sa.doc_id = c.id_a JOIN sigs sb ON sb.doc_id = c.id_b
       WHERE ({agree}) / {float(np_)} >= 0.25
-    ), edges AS (
+    ), edges AS MATERIALIZED (
       SELECT id_a AS src, id_b AS dst FROM est
       UNION
       SELECT id_b, id_a FROM est
@@ -1832,11 +1831,11 @@ def _d31_oracle() -> str:
              CASE WHEN doc_id % 3 = 1 THEN text || ' updated' ELSE text END AS text
       FROM documents WHERE doc_id % 3 IN (0, 1)
     ), {ctes},
-    est AS (
+    est AS MATERIALIZED (
       SELECT c.id_a, c.id_b
       FROM cand c JOIN sigs sa ON sa.doc_id = c.id_a JOIN sigs sb ON sb.doc_id = c.id_b
       WHERE ({agree}) / {float(np_)} >= 0.25
-    ), edges AS (
+    ), edges AS MATERIALIZED (
       SELECT id_a AS src, id_b AS dst FROM est
       UNION
       SELECT id_b, id_a FROM est
@@ -1846,7 +1845,7 @@ def _d31_oracle() -> str:
       SELECT e.src, r.dst FROM edges e JOIN reach1 r ON e.dst = r.src
     ), labels1 AS (
       SELECT src AS node, min(dst) AS rep FROM reach1 GROUP BY src
-    ), base_edges AS (
+    ), base_edges AS MATERIALIZED (
       SELECT src, dst FROM edges WHERE src < 1000000 AND dst < 1000000
     ), reach0(src, dst) AS (
       SELECT DISTINCT src, src FROM base_edges
@@ -1983,7 +1982,7 @@ def _d32_oracle() -> str:
             for bi in range(nb)
         )
         return (
-            f"b{nb} AS ({sel}), c{nb} AS ("
+            f"b{nb} AS MATERIALIZED ({sel}), c{nb} AS MATERIALIZED ("
             f"SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b "
             f"FROM b{nb} a JOIN b{nb} b "
             f"ON a.band = b.band AND a.bk = b.bk AND a.doc_id < b.doc_id)"
@@ -1991,7 +1990,7 @@ def _d32_oracle() -> str:
 
     def est_cte(nb: int, cand_name: str) -> str:
         return (
-            f"e{nb} AS (SELECT c.id_a, c.id_b, ({agree}) AS agree "
+            f"e{nb} AS MATERIALIZED (SELECT c.id_a, c.id_b, ({agree}) AS agree "
             f"FROM {cand_name} c JOIN sigs sa ON sa.doc_id = c.id_a "
             f"JOIN sigs sb ON sb.doc_id = c.id_b)"
         )
@@ -2008,7 +2007,7 @@ def _d32_oracle() -> str:
               JOIN tp t ON t.id_a = e.id_a AND t.id_b = e.id_b
               WHERE e.agree * 4 >= {np_}) AS n_hits"""
 
-    truth = """tp AS (
+    truth = """tp AS MATERIALIZED (
       SELECT id_a, id_b FROM (
         SELECT i.id_a, i.id_b, i.inter, za.set_size AS sa_sz, zb.set_size AS sb_sz
         FROM (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
@@ -2160,113 +2159,3 @@ def d32_lsh_banding_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         " n_est bigint, n_truth bigint, n_hits bigint,"
         " recall_micro bigint, precision_micro bigint",
     )
-
-
-def _d32_staged() -> str:
-    """_d32_oracle's replay as ';'-separated TEMP TABLE stages (the
-    STAGED_ORACLE discipline): shingles → signatures → exact-Jaccard
-    truth → per-config banding/candidates/agreement counted into a
-    9-row stats table, consumed scratch dropped per stage.  The
-    monolithic form keeps three cand×sigs joins plus the truth
-    equi-join live in ONE statement and exhausts the box's spill disk
-    at sf1; the largest stage here is one config's candidate join.
-    Built from the SAME seed constants as the Spark arm — parity by
-    construction (verified value-identical at sf0.001/0.01)."""
-    from mapreducehs_spark.operators.dedup import (
-        MINHASH_CHECK_NUM_PERM,
-        minhash_check_seeds,
-    )
-
-    a, b = minhash_check_seeds()
-    np_ = MINHASH_CHECK_NUM_PERM
-    mins = ",\n             ".join(
-        f"min(({a[i]}*x + {b[i]}) % 2147483647) AS m{i}" for i in range(np_)
-    )
-    agree = " + ".join(
-        f"CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END" for i in range(np_)
-    )
-
-    def config_stages(nb: int) -> str:
-        rows = np_ // nb
-        unions = " UNION ALL ".join(
-            "SELECT doc_id, {bi} AS band, concat_ws('_', {cols}) AS bk "
-            "FROM d32_sigs".format(
-                bi=bi, cols=", ".join(f"m{bi * rows + r}" for r in range(rows))
-            )
-            for bi in range(nb)
-        )
-        return f"""
-    DROP TABLE IF EXISTS d32_cand;
-    CREATE TEMP TABLE d32_cand AS
-      WITH banded AS ({unions})
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM banded a JOIN banded b
-        ON a.band = b.band AND a.bk = b.bk AND a.doc_id < b.doc_id;
-    DROP TABLE IF EXISTS d32_est;
-    CREATE TEMP TABLE d32_est AS
-      SELECT c.id_a, c.id_b, ({agree}) AS agree
-      FROM d32_cand c
-      JOIN d32_sigs sa ON sa.doc_id = c.id_a
-      JOIN d32_sigs sb ON sb.doc_id = c.id_b;
-    INSERT INTO d32_rows
-      SELECT CAST({nb} AS BIGINT), CAST({rows} AS BIGINT),
-             (SELECT CAST(count(*) AS BIGINT) FROM d32_cand),
-             (SELECT CAST(count(*) AS BIGINT) FROM d32_est
-                WHERE agree * 4 >= {np_}),
-             (SELECT CAST(count(*) AS BIGINT) FROM d32_tp),
-             (SELECT CAST(count(*) AS BIGINT) FROM d32_est e
-                JOIN d32_tp t ON t.id_a = e.id_a AND t.id_b = e.id_b
-                WHERE e.agree * 4 >= {np_});
-    DROP TABLE d32_cand;
-    DROP TABLE d32_est;"""
-
-    return f"""
-    DROP TABLE IF EXISTS d32_sh;
-    CREATE TEMP TABLE d32_sh AS
-      WITH toks AS (
-        SELECT doc_id, list_filter(regexp_split_to_array(text, '\\s+'), x -> x != '') AS t
-        FROM documents
-      ), pos AS (
-        SELECT doc_id, t, unnest(range(1, greatest(len(t) - 2, 0) + 1)) AS i FROM toks
-      )
-      SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s FROM pos;
-    DROP TABLE IF EXISTS d32_sigs;
-    CREATE TEMP TABLE d32_sigs AS
-      WITH ids AS (
-        SELECT doc_id, ('0x' || substr(md5(s), 1, 15))::BIGINT % 2147483647 AS x
-        FROM d32_sh
-      )
-      SELECT doc_id, {mins}
-      FROM ids GROUP BY doc_id;
-    DROP TABLE IF EXISTS d32_tp;
-    CREATE TEMP TABLE d32_tp AS
-      SELECT id_a, id_b FROM (
-        SELECT i.id_a, i.id_b, i.inter, za.set_size AS sa_sz, zb.set_size AS sb_sz
-        FROM (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-              FROM d32_sh a JOIN d32_sh b ON a.s = b.s AND a.doc_id < b.doc_id
-              GROUP BY 1, 2) i
-        JOIN (SELECT doc_id, count(*) AS set_size FROM d32_sh GROUP BY 1) za
-          ON za.doc_id = i.id_a
-        JOIN (SELECT doc_id, count(*) AS set_size FROM d32_sh GROUP BY 1) zb
-          ON zb.doc_id = i.id_b
-      ) WHERE inter * 2 >= sa_sz + sb_sz - inter;
-    DROP TABLE d32_sh;
-    DROP TABLE IF EXISTS d32_rows;
-    CREATE TEMP TABLE d32_rows (
-      bands BIGINT, rows_per_band BIGINT, n_candidates BIGINT,
-      n_est BIGINT, n_truth BIGINT, n_hits BIGINT);
-    {config_stages(2)}
-    {config_stages(4)}
-    {config_stages(8)}
-    DROP TABLE d32_sigs;
-    DROP TABLE d32_tp;
-    SELECT bands, rows_per_band, n_candidates, n_est, n_truth, n_hits,
-           CAST((n_hits * 1000000) // greatest(n_truth, 1) AS BIGINT)
-             AS recall_micro,
-           CAST((n_hits * 1000000) // greatest(n_est, 1) AS BIGINT)
-             AS precision_micro
-    FROM d32_rows
-    """
-
-
-STAGED_ORACLE["d32_lsh_banding_sweep"] = _d32_staged()

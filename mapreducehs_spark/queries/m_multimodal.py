@@ -23,12 +23,10 @@ from mapreducehs_spark.sources.catalog import load_table
 from mapreducehs_spark.queries._registry import (  # noqa: F401
     ORACLE,
     QUERIES,
-    STAGED_ORACLE,
     query,
 )
 from mapreducehs_spark.queries._shared import (  # noqa: F401
     _d15_oracle,
-    _d15_staged_stmts,
     _t,
 )
 
@@ -406,10 +404,10 @@ def m10_tolerant_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: component closure, then (member, rep, class_size) broadcast back to
 #: members.  The closure runs over DISTINCT HASHES, not members, so the
 #: recursion stays tiny even when duplicate classes are huge.
-_HASH64_CANONICAL_TAIL = """grp AS (
+_HASH64_CANONICAL_TAIL = """grp AS MATERIALIZED (
       SELECT lo, hi, min(doc_id) AS hrep, CAST(count(*) AS BIGINT) AS cnt
       FROM h GROUP BY lo, hi
-    ), gbanded AS (
+    ), gbanded AS MATERIALIZED (
       SELECT hrep, b,
              CASE b WHEN 0 THEN lo & 65535 WHEN 1 THEN lo >> 16
                     WHEN 2 THEN hi & 65535 ELSE hi >> 16 END AS bk
@@ -417,11 +415,11 @@ _HASH64_CANONICAL_TAIL = """grp AS (
     ), gcand AS (
       SELECT DISTINCT a.hrep AS ra, b.hrep AS rb
       FROM gbanded a JOIN gbanded b ON a.b = b.b AND a.bk = b.bk AND a.hrep < b.hrep
-    ), pe AS (
+    ), pe AS MATERIALIZED (
       SELECT c.ra, c.rb
       FROM gcand c JOIN grp ga ON ga.hrep = c.ra JOIN grp gb ON gb.hrep = c.rb
       WHERE bit_count(xor(ga.lo, gb.lo)) + bit_count(xor(ga.hi, gb.hi)) <= 3
-    ), edges AS (
+    ), edges AS MATERIALIZED (
       SELECT ra AS src, rb AS dst FROM pe UNION SELECT rb, ra FROM pe
     ), reach(src, dst) AS (
       SELECT DISTINCT src, src FROM edges
@@ -429,7 +427,7 @@ _HASH64_CANONICAL_TAIL = """grp AS (
       SELECT e.src, r.dst FROM edges e JOIN reach r ON e.dst = r.src
     ), comp AS (
       SELECT src AS hrep, min(dst) AS comp FROM reach GROUP BY src
-    ), crep AS (
+    ), crep AS MATERIALIZED (
       SELECT g.lo, g.hi, g.cnt, coalesce(c.comp, g.hrep) AS comp
       FROM grp g LEFT JOIN comp c ON c.hrep = g.hrep
     ), sizes AS (
@@ -446,7 +444,7 @@ _HASH64_CANONICAL_TAIL = """grp AS (
 #: embed the identical image-class replay as a subquery.
 #: The ahash-from-doc_id law (cells → tot → bits → h(lo,hi)) shared by
 #: m11's dedup oracle and m15's alignment-verification oracle.
-_AHASH_CTES = """cells AS (
+_AHASH_CTES = """cells AS MATERIALIZED (
       SELECT doc_id, r, c,
              CAST(sum((doc_id * 31 + ((2 * r + br) * 32 + (4 * c + bc)) * 7) % 256)
                   AS BIGINT) AS cs
@@ -460,7 +458,7 @@ _AHASH_CTES = """cells AS (
       SELECT cells.doc_id, (r * 8 + c) AS k,
              CASE WHEN cs * 64 > total THEN 1::BIGINT ELSE 0::BIGINT END AS bit
       FROM cells JOIN tot USING (doc_id)
-    ), h AS (
+    ), h AS MATERIALIZED (
       SELECT doc_id,
              CAST(sum(CASE WHEN k < 32 THEN bit << k ELSE 0 END) AS BIGINT) AS lo,
              CAST(sum(CASE WHEN k >= 32 THEN bit << (k - 32) ELSE 0 END) AS BIGINT) AS hi
@@ -504,7 +502,7 @@ def m11_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
              ('0x' || substr(md5((doc_id % 128)::VARCHAR || '_' || i::VARCHAR), 1, 4))::INT
                % 4096 - 2048 AS s
       FROM documents, unnest(range(256)) t(i)
-    ), en AS (
+    ), en AS MATERIALIZED (
       SELECT doc_id, i // 4 AS k, CAST(sum(s * s) AS BIGINT) AS e
       FROM samples GROUP BY 1, 2
     ), tot AS (
@@ -513,7 +511,7 @@ def m11_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT en.doc_id, k,
              CASE WHEN e * 64 > te THEN 1::BIGINT ELSE 0::BIGINT END AS bit
       FROM en JOIN tot USING (doc_id)
-    ), h AS (
+    ), h AS MATERIALIZED (
       SELECT doc_id,
              CAST(sum(CASE WHEN k < 32 THEN bit << k ELSE 0 END) AS BIGINT) AS lo,
              CAST(sum(CASE WHEN k >= 32 THEN bit << (k - 32) ELSE 0 END) AS BIGINT) AS hi
@@ -552,22 +550,22 @@ def m12_audio_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: (doc_id, w0..w3) 32-bit words and replays the 4x32-bit-band
 #: composition — same closure-over-distinct-hashes shape as
 #: _HASH64_CANONICAL_TAIL, wider bands.
-_HASH128_CANONICAL_TAIL = """grp AS (
+_HASH128_CANONICAL_TAIL = """grp AS MATERIALIZED (
       SELECT w0, w1, w2, w3, min(doc_id) AS hrep, CAST(count(*) AS BIGINT) AS cnt
       FROM h GROUP BY w0, w1, w2, w3
-    ), gbanded AS (
+    ), gbanded AS MATERIALIZED (
       SELECT hrep, b,
              CASE b WHEN 0 THEN w0 WHEN 1 THEN w1 WHEN 2 THEN w2 ELSE w3 END AS bk
       FROM grp, unnest(range(4)) tb(b)
     ), gcand AS (
       SELECT DISTINCT a.hrep AS ra, b.hrep AS rb
       FROM gbanded a JOIN gbanded b ON a.b = b.b AND a.bk = b.bk AND a.hrep < b.hrep
-    ), pe AS (
+    ), pe AS MATERIALIZED (
       SELECT c.ra, c.rb
       FROM gcand c JOIN grp ga ON ga.hrep = c.ra JOIN grp gb ON gb.hrep = c.rb
       WHERE bit_count(xor(ga.w0, gb.w0)) + bit_count(xor(ga.w1, gb.w1))
             + bit_count(xor(ga.w2, gb.w2)) + bit_count(xor(ga.w3, gb.w3)) <= 3
-    ), edges AS (
+    ), edges AS MATERIALIZED (
       SELECT ra AS src, rb AS dst FROM pe UNION SELECT rb, ra FROM pe
     ), reach(src, dst) AS (
       SELECT DISTINCT src, src FROM edges
@@ -575,7 +573,7 @@ _HASH128_CANONICAL_TAIL = """grp AS (
       SELECT e.src, r.dst FROM edges e JOIN reach r ON e.dst = r.src
     ), comp AS (
       SELECT src AS hrep, min(dst) AS comp FROM reach GROUP BY src
-    ), crep AS (
+    ), crep AS MATERIALIZED (
       SELECT g.w0, g.w1, g.w2, g.w3, g.cnt, coalesce(c.comp, g.hrep) AS comp
       FROM grp g LEFT JOIN comp c ON c.hrep = g.hrep
     ), sizes AS (
@@ -591,7 +589,7 @@ _HASH128_CANONICAL_TAIL = """grp AS (
 @query(
     "m13_phash128_dedup",
     oracle="""
-    WITH RECURSIVE cells AS (
+    WITH RECURSIVE cells AS MATERIALIZED (
       SELECT doc_id, r, c,
              CAST(sum((doc_id * 31 + ((4 * r + br) * 64 + (4 * c + bc)) * 7) % 256)
                   AS BIGINT) AS cs
@@ -605,7 +603,7 @@ _HASH128_CANONICAL_TAIL = """grp AS (
       SELECT cells.doc_id, (r * 16 + c) AS k,
              CASE WHEN cs * 128 > total THEN 1::BIGINT ELSE 0::BIGINT END AS bit
       FROM cells JOIN tot USING (doc_id)
-    ), h AS (
+    ), h AS MATERIALIZED (
       SELECT doc_id,
              CAST(sum(CASE WHEN k // 32 = 0 THEN bit << (k % 32) ELSE 0 END) AS BIGINT) AS w0,
              CAST(sum(CASE WHEN k // 32 = 1 THEN bit << (k % 32) ELSE 0 END) AS BIGINT) AS w1,
@@ -640,28 +638,48 @@ def m13_phash128_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _m14_oracle() -> str:
     """m14: union of m11's image-phash class edges (the full m11 oracle
     embedded as a subquery) and d07's checked near-dup caption class
-    edges (d15's renderer, the d23 embedding), closed with a
-    recursive-CTE component min over documents — the cross-modal merge
-    replayed relationally.  Outer CTE names are xm14_-prefixed because
-    BOTH embedded oracles define ``edges``/``reach`` internally and
-    DuckDB resolves an outer recursive CTE against the shadowing inner
-    name (measured: 404 vs the correct 476 rows at sf0.01)."""
+    edges (d15's renderer, the d23 embedding), closed by a
+    recursive-CTE component min — the cross-modal merge replayed
+    relationally.
+
+    The closure runs on the REP GRAPH, never on members: a
+    member-level ``reach`` holds every transitive (src, dst) pair,
+    Σ class_size² rows, which does not fit at sf1.  Contraction is
+    value-identical.  Each arm's rep is its class MINIMUM, so every
+    node has an edge to a ≤-valued rep and a merged component's
+    minimum is always a rep.  Components of the member graph are
+    therefore the components of the rep graph, where two reps are
+    adjacent when some node (a rep included, via its (b, b) row) maps
+    to both.  The rep-graph reach is Σ (classes per merged
+    component)², quadratic in classes merged, not in members.
+
+    Outer CTE names are xm14_-prefixed because BOTH embedded oracles
+    define ``edges``/``reach`` internally and DuckDB resolves an outer
+    recursive CTE against the shadowing inner name (measured: 404 vs
+    the correct 476 rows at sf0.01)."""
     txt = _d15_oracle(est_threshold=0.25, jaccard_threshold=0.6)
     return f"""
-    WITH RECURSIVE xm14_img AS (
+    WITH RECURSIVE xm14_e0 AS MATERIALIZED (
       SELECT member AS a, rep AS b FROM ({_M11_ORACLE}) tim
-    ), xm14_txt AS (
-      SELECT doc_id AS a, rep_id AS b FROM ({txt}) ttx
-    ), xm14_e0 AS (
-      SELECT a, b FROM xm14_img UNION SELECT a, b FROM xm14_txt
-    ), xm14_edges AS (
-      SELECT a AS src, b AS dst FROM xm14_e0 UNION SELECT b, a FROM xm14_e0
-    ), xm14_reach(src, dst) AS (
-      SELECT DISTINCT src, src FROM xm14_edges
       UNION
-      SELECT e.src, r.dst FROM xm14_edges e JOIN xm14_reach r ON e.dst = r.src
-    ), xm14_comp AS (
-      SELECT src AS member, min(dst) AS comp FROM xm14_reach GROUP BY src
+      SELECT doc_id, rep_id FROM ({txt}) ttx
+    ), xm14_nm AS MATERIALIZED (
+      SELECT a AS node, b AS r FROM xm14_e0
+      UNION
+      SELECT b, b FROM xm14_e0
+    ), xm14_redges AS MATERIALIZED (
+      SELECT DISTINCT x.r AS src, y.r AS dst
+      FROM xm14_nm x JOIN xm14_nm y ON x.node = y.node
+    ), xm14_reach(src, dst) AS (
+      SELECT src, dst FROM xm14_redges
+      UNION
+      SELECT e.src, r.dst FROM xm14_redges e JOIN xm14_reach r ON e.dst = r.src
+    ), xm14_rcomp AS (
+      SELECT src AS r, min(dst) AS comp FROM xm14_reach GROUP BY src
+    ), xm14_comp AS MATERIALIZED (
+      SELECT n.node AS member, min(c.comp) AS comp
+      FROM xm14_nm n JOIN xm14_rcomp c ON c.r = n.r
+      GROUP BY n.node
     ), xm14_sizes AS (
       SELECT comp, CAST(count(*) AS BIGINT) AS class_size
       FROM xm14_comp GROUP BY comp
@@ -803,7 +821,7 @@ def m15_alignment_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: 256) through the 8x8 block-sum bit rule per SAMPLED frame, majority-
 #: pooled across frames {0,3,6} into one 64-bit (lo, hi) pair that
 #: feeds the shared canonical-dedup tail.
-_VIDEO_AHASH_CTES = """cells AS (
+_VIDEO_AHASH_CTES = """cells AS MATERIALIZED (
       SELECT doc_id, f, r, c,
              CAST(sum((doc_id * 31 + f * 101 + (r * 16 + 2 * c + bc) * 7) % 256)
                   AS BIGINT) AS cs
@@ -823,7 +841,7 @@ _VIDEO_AHASH_CTES = """cells AS (
       SELECT doc_id, k,
              CASE WHEN sum(bit) >= 2 THEN 1::BIGINT ELSE 0::BIGINT END AS bit
       FROM fbits GROUP BY 1, 2
-    ), h AS (
+    ), h AS MATERIALIZED (
       SELECT doc_id,
              CAST(sum(CASE WHEN k < 32 THEN bit << k ELSE 0 END) AS BIGINT) AS lo,
              CAST(sum(CASE WHEN k >= 32 THEN bit << (k - 32) ELSE 0 END) AS BIGINT) AS hi
@@ -862,194 +880,6 @@ def m16_video_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.hash64_canonical_dedup(
         video_majority_ahash(payloads, every_n=3), max_hamming=3
     )
-
-
-def _staged_hash64_tail(h_table: str, p: str, into: str | None = None) -> str:
-    """_HASH64_CANONICAL_TAIL replayed as ';'-separated statements over
-    a materialized (doc_id, lo, hi) TEMP TABLE ``h_table``: grp →
-    banding/verify edges → recursive component closure → final select,
-    each stage its own statement so DuckDB frees the previous stage's
-    memory before the next (the STAGED_ORACLE discipline).  ``p``
-    prefixes the temp-table names.  Value-identical to the monolithic
-    tail: the closure runs over the SAME edge set, just materialized.
-    The final (member, rep, class_size) select ALWAYS materializes as
-    a TEMP TABLE (``into`` if given — m14's arms — else ``{p}_cls``)
-    and the scratch tables are dropped once consumed, so no
-    memory-critical residue outlives the stage; without ``into`` a
-    trailing ``SELECT * FROM {p}_cls`` makes it the script result
-    (only the small class table itself remains live)."""
-    out = into if into is not None else f"{p}_cls"
-    script = (
-        _staged_hash64_body(h_table, p).replace(
-            "WITH crep AS (",
-            f"DROP TABLE IF EXISTS {out};\n"
-            f"    CREATE TEMP TABLE {out} AS\n"
-            f"    WITH crep AS (",
-            1,
-        )
-        + f";\n    DROP TABLE {p}_grp;\n    DROP TABLE {p}_comp;\n"
-    )
-    if into is None:
-        script += f"    SELECT * FROM {out}\n    "
-    return script
-
-
-def _staged_hash64_body(h_table: str, p: str) -> str:
-    """The raw stage script for :func:`_staged_hash64_tail` (ends with
-    the bare final select; callers wrap/materialize it)."""
-    return f"""
-    DROP TABLE IF EXISTS {p}_grp;
-    CREATE TEMP TABLE {p}_grp AS
-      SELECT lo, hi, min(doc_id) AS hrep, CAST(count(*) AS BIGINT) AS cnt
-      FROM {h_table} GROUP BY lo, hi;
-    DROP TABLE IF EXISTS {p}_edges;
-    CREATE TEMP TABLE {p}_edges AS
-      WITH gbanded AS (
-        SELECT hrep, b,
-               CASE b WHEN 0 THEN lo & 65535 WHEN 1 THEN lo >> 16
-                      WHEN 2 THEN hi & 65535 ELSE hi >> 16 END AS bk
-        FROM {p}_grp, unnest(range(4)) tb(b)
-      ), gcand AS (
-        SELECT DISTINCT a.hrep AS ra, b.hrep AS rb
-        FROM gbanded a JOIN gbanded b ON a.b = b.b AND a.bk = b.bk AND a.hrep < b.hrep
-      ), pe AS (
-        SELECT c.ra, c.rb
-        FROM gcand c JOIN {p}_grp ga ON ga.hrep = c.ra JOIN {p}_grp gb ON gb.hrep = c.rb
-        WHERE bit_count(xor(ga.lo, gb.lo)) + bit_count(xor(ga.hi, gb.hi)) <= 3
-      )
-      SELECT ra AS src, rb AS dst FROM pe UNION SELECT rb, ra FROM pe;
-    DROP TABLE IF EXISTS {p}_comp;
-    CREATE TEMP TABLE {p}_comp AS
-      WITH RECURSIVE reach(src, dst) AS (
-        SELECT DISTINCT src, src FROM {p}_edges
-        UNION
-        SELECT e.src, r.dst FROM {p}_edges e JOIN reach r ON e.dst = r.src
-      )
-      SELECT src AS hrep, min(dst) AS comp FROM reach GROUP BY src;
-    DROP TABLE {p}_edges;
-    WITH crep AS (
-      SELECT g.lo, g.hi, g.cnt, coalesce(c.comp, g.hrep) AS comp
-      FROM {p}_grp g LEFT JOIN {p}_comp c ON c.hrep = g.hrep
-    ), sizes AS (
-      SELECT comp, CAST(sum(cnt) AS BIGINT) AS class_size FROM crep GROUP BY comp
-    )
-    SELECT h.doc_id AS member, CAST(cr.comp AS BIGINT) AS rep, s.class_size
-    FROM {h_table} h JOIN crep cr ON cr.lo = h.lo AND cr.hi = h.hi
-    JOIN sizes s ON s.comp = cr.comp
-    WHERE h.doc_id != cr.comp
-    """
-
-
-#: m16 staged: the video-ahash head split at its two natural barriers
-#: (per-frame bits, then majority-pooled 64-bit hash) before the shared
-#: staged tail.  The monolithic _M16_ORACLE keeps cells→tot→fbits→
-#: vbits→h→banding→closure live at once and dies at sf1 with an
-#: internal allocation failure even isolated at a 108 GB limit
-#: (CORRECTNESS_sf1 r9); largest single stage here is the fbits
-#: build — well inside the box.
-STAGED_ORACLE["m16_video_dedup"] = (
-    """
-    DROP TABLE IF EXISTS m16_fbits;
-    CREATE TEMP TABLE m16_fbits AS
-      WITH cells AS (
-        SELECT doc_id, f, r, c,
-               CAST(sum((doc_id * 31 + f * 101 + (r * 16 + 2 * c + bc) * 7) % 256)
-                    AS BIGINT) AS cs
-        FROM documents,
-             unnest([0, 3, 6]) tf(f),
-             unnest(range(8)) tr(r), unnest(range(8)) tc(c),
-             unnest(range(2)) tbc(bc)
-        GROUP BY 1, 2, 3, 4
-      ), tot AS (
-        SELECT doc_id, f, CAST(sum(cs) AS BIGINT) AS total
-        FROM cells GROUP BY 1, 2
-      )
-      SELECT cells.doc_id, cells.f, (r * 8 + c) AS k,
-             CASE WHEN cs * 64 > total THEN 1 ELSE 0 END AS bit
-      FROM cells JOIN tot ON tot.doc_id = cells.doc_id AND tot.f = cells.f;
-    DROP TABLE IF EXISTS m16_h;
-    CREATE TEMP TABLE m16_h AS
-      WITH vbits AS (
-        SELECT doc_id, k,
-               CASE WHEN sum(bit) >= 2 THEN 1::BIGINT ELSE 0::BIGINT END AS bit
-        FROM m16_fbits GROUP BY 1, 2
-      )
-      SELECT doc_id,
-             CAST(sum(CASE WHEN k < 32 THEN bit << k ELSE 0 END) AS BIGINT) AS lo,
-             CAST(sum(CASE WHEN k >= 32 THEN bit << (k - 32) ELSE 0 END) AS BIGINT) AS hi
-      FROM vbits GROUP BY 1;
-    DROP TABLE m16_fbits;
-    """
-    + _staged_hash64_tail("m16_h", "m16")
-)
-
-
-#: m14 staged: each ARM (m11's image classes, d07's caption drop list —
-#: both sf1-green standalone) replays FULLY staged — ahash head +
-#: staged canonical tail for the image arm, _d15_staged_stmts for the
-#: caption arm — and the cross-modal closure is CONTRACTED to the REP
-#: GRAPH before the recursive CTE.  The real sf1 bomb (bisected
-#: statement-by-statement, r10) is not the arms: it is the MEMBER-level
-#: ``reach``, which materializes every transitive (src, dst) pair —
-#: Σ class_size² rows, a 32 GiB un-spillable hash allocation at sf1's
-#: class sizes (this is also why the monolithic form overflowed the
-#: spill disk).  Contraction is value-identical: each arm's rep is its
-#: class MINIMUM, so every node has an edge to a ≤-valued rep, the
-#: merged component's minimum is always a rep vertex, and components
-#: of the member graph = components of the rep graph (reps sharing a
-#: node are merged).  The rep-graph reach is Σ (classes-per-merged-
-#: component)², quadratic in CLASSES merged, not members.  INSERT
-#: instead of the original UNION between arms is value-identical: the
-#: nm self-join dedups anyway.
-STAGED_ORACLE["m14_crossmodal_dedup"] = f"""
-    DROP TABLE IF EXISTS m14i_h;
-    CREATE TEMP TABLE m14i_h AS
-      WITH {_AHASH_CTES}
-      SELECT doc_id, lo, hi FROM h;
-    {_staged_hash64_tail("m14i_h", "m14i", into="m14i_cls")}
-    DROP TABLE m14i_h;
-    {_d15_staged_stmts("m14t", est_threshold=0.25, jaccard_threshold=0.6)}
-    DROP TABLE IF EXISTS xm14_e0;
-    CREATE TEMP TABLE xm14_e0 AS
-      SELECT member AS a, rep AS b FROM m14i_cls;
-    INSERT INTO xm14_e0
-      SELECT doc_id AS a, rep_id AS b FROM m14t_drop;
-    DROP TABLE m14i_cls;
-    DROP TABLE m14t_drop;
-    DROP TABLE IF EXISTS xm14_nm;
-    CREATE TEMP TABLE xm14_nm AS
-      SELECT a AS node, b AS r FROM xm14_e0
-      UNION
-      SELECT DISTINCT b, b FROM xm14_e0;
-    DROP TABLE xm14_e0;
-    DROP TABLE IF EXISTS xm14_redges;
-    CREATE TEMP TABLE xm14_redges AS
-      SELECT DISTINCT x.r AS src, y.r AS dst
-      FROM xm14_nm x JOIN xm14_nm y ON x.node = y.node;
-    DROP TABLE IF EXISTS xm14_rcomp;
-    CREATE TEMP TABLE xm14_rcomp AS
-      WITH RECURSIVE reach(src, dst) AS (
-        SELECT src, dst FROM xm14_redges
-        UNION
-        SELECT e.src, r.dst FROM xm14_redges e JOIN reach r ON e.dst = r.src
-      )
-      SELECT src AS r, min(dst) AS comp FROM reach GROUP BY src;
-    DROP TABLE xm14_redges;
-    DROP TABLE IF EXISTS xm14_comp;
-    CREATE TEMP TABLE xm14_comp AS
-      SELECT n.node AS member, min(c.comp) AS comp
-      FROM xm14_nm n JOIN xm14_rcomp c ON c.r = n.r
-      GROUP BY n.node;
-    DROP TABLE xm14_nm;
-    DROP TABLE xm14_rcomp;
-    WITH sizes AS (
-      SELECT comp, CAST(count(*) AS BIGINT) AS class_size
-      FROM xm14_comp GROUP BY comp
-    )
-    SELECT c.member, CAST(c.comp AS BIGINT) AS rep, s.class_size
-    FROM xm14_comp c JOIN sizes s USING (comp)
-    WHERE c.member != c.comp
-    """
 
 
 # =========================================================================

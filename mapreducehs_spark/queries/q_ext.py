@@ -1996,7 +1996,7 @@ def q99_linear_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q100_triangle_count",
     oracle="""
-    WITH toks AS (
+    WITH toks AS MATERIALIZED (
       SELECT doc_id, unnest(list_distinct(
                list_filter(regexp_split_to_array(text, '\\s+'), x -> x != ''))) AS tok
       FROM documents
@@ -2004,7 +2004,7 @@ def q99_linear_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT tok, count(*) AS df FROM toks GROUP BY tok
     ), top AS (
       SELECT tok FROM dfreq ORDER BY df DESC, tok ASC LIMIT 64
-    ), sel AS (
+    ), sel AS MATERIALIZED (
       SELECT doc_id, tok FROM toks WHERE tok IN (SELECT tok FROM top)
     ), co AS (
       SELECT x.tok AS u, y.tok AS v, count(*) AS c
@@ -2012,19 +2012,19 @@ def q99_linear_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
       GROUP BY x.tok, y.tok
     ), nd AS (
       SELECT count(*) AS n_docs FROM documents
-    ), edges AS (
+    ), edges AS MATERIALIZED (
       SELECT u, v FROM co, nd WHERE c * 4 >= n_docs
-    ), deg AS (
+    ), deg AS MATERIALIZED (
       SELECT node, count(*) AS d FROM (
         SELECT u AS node FROM edges UNION ALL SELECT v AS node FROM edges
       ) GROUP BY node
-    ), oriented AS (
+    ), oriented AS MATERIALIZED (
       SELECT CASE WHEN (du.d, e.u) < (dv.d, e.v) THEN e.u ELSE e.v END AS a,
              CASE WHEN (du.d, e.u) < (dv.d, e.v) THEN e.v ELSE e.u END AS b
       FROM edges e
       JOIN deg du ON du.node = e.u
       JOIN deg dv ON dv.node = e.v
-    ), tri AS (
+    ), tri AS MATERIALIZED (
       SELECT e1.a AS x, e1.b AS y, e2.b AS z
       FROM oriented e1
       JOIN oriented e2 ON e2.a = e1.b

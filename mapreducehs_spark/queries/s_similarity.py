@@ -494,14 +494,14 @@ def _s11_ctes(iters: int = 3) -> str:
     WITH q AS (
       SELECT [CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT) FOR x IN embedding] AS qv
       FROM embeddings
-    ), gU AS (
+    ), gU AS MATERIALIZED (
       SELECT i.i AS i, j.j AS j, CAST(sum(qv[i.i] * qv[j.j]) AS BIGINT) AS g
       FROM q,
            LATERAL unnest(range(1, len(qv) + 1)) AS i(i),
            LATERAL unnest(range(1, len(qv) + 1)) AS j(j)
       WHERE j.j >= i.i
       GROUP BY 1, 2
-    ), g AS (
+    ), g AS MATERIALIZED (
       SELECT i, j, g FROM gU
       UNION ALL
       SELECT j AS i, i AS j, g FROM gU WHERE j > i
@@ -512,13 +512,13 @@ def _s11_ctes(iters: int = 3) -> str:
     for k in range(1, iters + 1):
         prev = f"v{k - 1}"
         parts.append(f"""
-    , w{k} AS (
+    , w{k} AS MATERIALIZED (
       SELECT g.i AS i, CAST(sum(g.g * p.v) AS BIGINT) AS w
       FROM g JOIN {prev} p ON p.j = g.j
       GROUP BY 1
     ), m{k} AS (
       SELECT max(abs(w)) AS m FROM w{k}
-    ), v{k} AS (
+    ), v{k} AS MATERIALIZED (
       SELECT i AS j, CAST((w * 1024) // m AS BIGINT) AS v FROM w{k}, m{k}
     )""")
     return head + "".join(parts)
@@ -583,17 +583,17 @@ def _s12_oracle(k: int = 5) -> str:
     max-sim-to-selected (all integer quantized dots), argmax with a
     (margin, vec_id) total order — engine-exact at every step."""
     head = """
-    WITH e AS (
+    WITH e AS MATERIALIZED (
       SELECT vec_id, [CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT) FOR x IN embedding] AS qv
       FROM embeddings
     ), q AS (
       SELECT qv FROM e WHERE vec_id = 0
-    ), c AS (
+    ), c AS MATERIALIZED (
       SELECT e.vec_id, e.qv,
              CAST(list_sum([e.qv[i] * q.qv[i] FOR i IN range(1, len(e.qv) + 1)])
                   AS BIGINT) AS sq
       FROM e, q WHERE e.vec_id <> 0
-    ), s1 AS (
+    ), s1 AS MATERIALIZED (
       SELECT vec_id, sq, CAST(0 AS BIGINT) AS mx
       FROM c ORDER BY sq DESC, vec_id LIMIT 1
     )"""
@@ -610,7 +610,7 @@ def _s12_oracle(k: int = 5) -> str:
       FROM c, sel{j} se
       WHERE c.vec_id NOT IN ({selset})
       GROUP BY c.vec_id, c.sq
-    ), s{j} AS (
+    ), s{j} AS MATERIALIZED (
       SELECT vec_id, sq, mx FROM m{j} ORDER BY sq - mx DESC, vec_id LIMIT 1
     )""")
     selects = " UNION ALL ".join(

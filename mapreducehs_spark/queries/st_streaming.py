@@ -723,7 +723,7 @@ def _st18_oracle(n_chunks: int = 4, n_buckets: int = 64) -> str:
       SELECT f.doc_id, CAST(sum(w{s}.w * f.x) AS BIGINT) AS zf
       FROM feats f JOIN chunk c USING (doc_id) JOIN w{s} USING (bucket)
       WHERE c.step = {s} GROUP BY 1
-    ), r{s} AS (
+    ), r{s} AS MATERIALIZED (
       SELECT lab.doc_id,
              CAST(greatest(0, least(1000000,
                     ((coalesce(z.zf, 0) + b{s}.b) // 4) + 500000))
@@ -735,11 +735,11 @@ def _st18_oracle(n_chunks: int = 4, n_buckets: int = 64) -> str:
       FROM r{s} r JOIN feats f USING (doc_id) GROUP BY 1
     ), gb{s} AS (SELECT CAST(sum(r) AS BIGINT) AS g FROM r{s}),
     n{s} AS (SELECT n FROM cnt WHERE step = {s}),
-    w{s + 1} AS (
+    w{s + 1} AS MATERIALIZED (
       SELECT w{s}.bucket,
              CAST(w{s}.w - (coalesce(g{s}.g, 0) // n{s}.n) // 50 AS BIGINT) AS w
       FROM w{s} LEFT JOIN g{s} USING (bucket), n{s}
-    ), b{s + 1} AS (
+    ), b{s + 1} AS MATERIALIZED (
       SELECT CAST(b{s}.b - (gb{s}.g // n{s}.n) // 50 AS BIGINT) AS b
       FROM b{s}, gb{s}, n{s}
     )""")
@@ -754,19 +754,19 @@ def _st18_oracle(n_chunks: int = 4, n_buckets: int = 64) -> str:
       SELECT doc_id,
              unnest(list_filter(regexp_split_to_array(text, '\\s+'), x -> x != '')) AS term
       FROM documents
-    ), feats AS (
+    ), feats AS MATERIALIZED (
       SELECT doc_id,
              ('0x' || substr(md5(term), 1, 12))::BIGINT % {n_buckets} AS bucket,
              CAST(count(*) AS BIGINT) AS x
       FROM toks GROUP BY 1, 2
-    ), lab AS (
+    ), lab AS MATERIALIZED (
       SELECT doc_id,
              CASE WHEN length(text) >= 300 THEN 1::BIGINT ELSE 0::BIGINT END AS y
       FROM documents
     ), ranked AS (
       SELECT doc_id, row_number() OVER (ORDER BY doc_id ASC) - 1 AS rk FROM documents
     ), nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-    chunk AS (
+    chunk AS MATERIALIZED (
       SELECT doc_id, CAST((rk * {n_chunks}) // nn.n AS BIGINT) AS step
       FROM ranked, nn
     ), cnt AS (

@@ -6,6 +6,7 @@ regressions surface locally first.
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 
 from mapreducehs_spark.queries import ORACLE, QUERIES
@@ -56,8 +57,13 @@ def test_every_query_has_an_oracle():
     kernels; this replaces the (then-vestigial, always-skipped)
     rows-only runner with the invariant it proved: the oracle record
     IS the spec, for EVERY declared query (reference discipline:
-    test/Generator.hs:83-92)."""
+    test/Generator.hs:83-92).  Each oracle is ONE statement: a
+    multi-statement replay is a second oracle form, and every oracle
+    check runs exactly the registered string."""
     assert set(QUERIES) == set(ORACLE)
+    con = duckdb.connect()
+    for name, sql in ORACLE.items():
+        assert len(con.extract_statements(sql)) == 1, name
 
 
 def test_t41_reconciles_with_t32(spark):
@@ -156,23 +162,3 @@ def test_t46_topical_packing_conservation(spark):
             assert r["n_fill"] == _T40_CTX and r["fill_micro"] == 1_000_000
         assert rows[-1]["n_fill"] <= _T40_CTX
         assert [r["seq_id"] for r in rows] == list(range(len(rows)))
-
-
-def test_staged_oracles_match_monolithic():
-    """Every STAGED_ORACLE entry must stay value-identical to its
-    canonical monolithic ORACLE (ADVICE r10: driver_sim now runs the
-    monolithic form wherever it fits and falls back to the staged
-    replay only on capacity failure, so BOTH forms keep getting
-    exercised against Spark — this test additionally checks them
-    against EACH OTHER at sf0.001 so a one-sided edit can't drift)."""
-    from mapreducehs_spark.queries import ORACLE, STAGED_ORACLE
-
-    from tests.oracle import canonicalize, duckdb_conn
-
-    assert STAGED_ORACLE, "staged registry unexpectedly empty"
-    for name, staged in STAGED_ORACLE.items():
-        mono = canonicalize(
-            duckdb_conn(SF_DIR).execute(ORACLE[name]).df()
-        )
-        via_stages = canonicalize(duckdb_conn(SF_DIR).execute(staged).df())
-        assert mono.equals(via_stages), name

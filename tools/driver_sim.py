@@ -38,21 +38,19 @@ print(f"entry: {rows} rows OK", flush=True)
 def fresh_oracle():
     """A clean DuckDB connection with spill + views.
 
-    An in-memory DuckDB has NO temp directory, so a big oracle (m14's
-    recursive closure, m16's banding at sf1) cannot spill and dies
-    with OutOfMemory/IOException instead — the spill dir + explicit
+    An in-memory DuckDB has NO temp directory, so a big oracle at sf1
+    cannot spill and dies with OutOfMemory/IOException instead — the spill dir + explicit
     limit keep oracle-side capacity from masquerading as a mismatch.
     Rebuilt AFTER any oracle error: a connection that just hit an
     IO/OOM failure keeps leaked buffer-manager blocks, and every
     subsequent non-trivial oracle then dies on kilobyte allocations —
-    the sf1 cascade where one genuine disk-capacity failure (m14)
-    turned six healthy oracles into phantom OOMs."""
+    the sf1 cascade where one genuine disk-capacity failure turned six
+    healthy oracles into phantom OOMs."""
     c = duckdb.connect()
     c.execute("SET temp_directory='/tmp/duckdb_spill'")
     c.execute(f"SET memory_limit='{os.environ.get('DRIVER_SIM_MEM', '95GB')}'")
-    # Bound the spill: a capacity-infeasible MONOLITHIC oracle (m14,
-    # d32 at sf1) should raise promptly and fall back to its STAGED
-    # replay, not fill the box's disk first — 32 GiB is far above any
+    # Bound the spill: a capacity-infeasible oracle should raise
+    # promptly, not fill the box's disk first — 32 GiB is far above any
     # legitimately-green oracle's observed spill.
     c.execute(
         "SET max_temp_directory_size="
@@ -90,13 +88,6 @@ def canon(df: pd.DataFrame) -> str:
 
 Q = E.queries()
 O = E.oracle_sql()
-# Staged (multi-statement TEMP TABLE) replays for oracles whose
-# monolithic form is memory-infeasible at sf1 — value-identical by
-# construction; see queries/_registry.py STAGED_ORACLE.
-try:
-    from mapreducehs_spark.queries import STAGED_ORACLE as STAGED
-except ImportError:
-    STAGED = {}
 fails = []
 records = {}
 for name, fn in Q.items():
@@ -121,60 +112,28 @@ for name, fn in Q.items():
                          "spark_rows": len(sp), "oracle_rows": None, "err": "no_oracle"}
         print(f"{name}: {status} ({dt:.1f}s)", flush=True)
         continue
-    # Canonical (monolithic) oracle first so small-SF runs keep
-    # exercising it; fall back to the STAGED (TEMP-TABLE) replay only
-    # when the monolithic form raises (e.g. m14/m16 capacity at sf1) —
-    # keeps the two forms from drifting apart undetected.
-    oracle_form = None  # set when the staged replay substitutes
     try:
         ora = con.execute(O[name]).fetchdf()
     except Exception as ex:
+        fails.append(name)
+        records[name] = {"rows_match": None, "schema_match": None,
+                         "hash_match": None, "spark_rows": len(sp),
+                         "oracle_rows": None,
+                         "err": f"oracle:{type(ex).__name__}"}
+        print(f"{name}: ORACLE ERROR {type(ex).__name__}: "
+              f"{str(ex)[:200]}", flush=True)
         try:
             con.close()
         except Exception:
             pass
         con = fresh_oracle()  # don't let one capacity failure cascade
-        if name in STAGED:
-            try:
-                ora = con.execute(STAGED[name]).fetchdf()
-                # surface the substitution in the JSON artifact, not
-                # just stdout — a NEW monolithic regression must show
-                # up in CORRECTNESS_* diffs, not pass as a normal green
-                oracle_form = {"oracle_form": "staged",
-                               "monolithic_err": type(ex).__name__}
-                print(f"{name}: monolithic oracle raised "
-                      f"{type(ex).__name__}; staged replay used", flush=True)
-            except Exception as ex2:
-                fails.append(name)
-                records[name] = {"rows_match": None, "schema_match": None,
-                                 "hash_match": None, "spark_rows": len(sp),
-                                 "oracle_rows": None,
-                                 "err": f"oracle:{type(ex2).__name__}"}
-                print(f"{name}: ORACLE ERROR (staged) {type(ex2).__name__}: "
-                      f"{str(ex2)[:200]}", flush=True)
-                try:
-                    con.close()
-                except Exception:
-                    pass
-                con = fresh_oracle()
-                continue
-        else:
-            fails.append(name)
-            records[name] = {"rows_match": None, "schema_match": None,
-                             "hash_match": None, "spark_rows": len(sp),
-                             "oracle_rows": None,
-                             "err": f"oracle:{type(ex).__name__}"}
-            print(f"{name}: ORACLE ERROR {type(ex).__name__}: "
-                  f"{str(ex)[:200]}", flush=True)
-            continue
+        continue
     rows_m = len(sp) == len(ora)
     schema_m = sorted(map(str, sp.columns)) == sorted(map(str, ora.columns))
     hash_m = schema_m and canon(sp) == canon(ora)
     ok = rows_m and schema_m and hash_m
     records[name] = {"rows_match": rows_m, "schema_match": schema_m, "hash_match": hash_m,
                      "spark_rows": len(sp), "oracle_rows": len(ora), "err": None}
-    if oracle_form:
-        records[name].update(oracle_form)
     if not ok:
         fails.append(name)
         print(f"{name}: MISMATCH rows={len(sp)}/{len(ora)} schema={schema_m} "
