@@ -309,48 +309,6 @@ def full_inventory() -> list[str]:
     return [n for n in QUERIES if not n.startswith("st")]
 
 
-def alt_queries():
-    """Bench-only throughput alternates: the vectorized-hash /
-    trained-codebook formulations that round 6 swapped out of the
-    five driver-visible defaults (d03/d04/d07/s02/s04) in favor of the
-    oracle-replayable checked kernels.  Timed after the main pass and
-    recorded in BENCH_local.json only (not part of the headline total —
-    they have no oracle row)."""
-    from pyspark.sql import functions as F
-
-    from mapreducehs_spark.operators import dedup, similarity
-    from mapreducehs_spark.sources.catalog import load_table
-
-    def docs(s, d):
-        return load_table(s, d, "documents")
-
-    def emb(s, d):
-        return load_table(s, d, "embeddings")
-
-    return {
-        "alt_d03_minhash_vectorized": lambda m, s, d: dedup.minhash_lsh_pairs(
-            m, docs(s, d), jaccard_threshold=0.35
-        ),
-        "alt_d04_simhash_vectorized": lambda m, s, d: dedup.simhash_near_pairs(
-            m, docs(s, d), max_hamming=8
-        ),
-        "alt_d07_near_dedup_vectorized": lambda m, s, d: dedup.near_dedup_drop_list(
-            m, docs(s, d), candidate_threshold=0.3, jaccard_threshold=0.5
-        ),
-        "alt_s02_ivf_trained": lambda m, s, d: similarity.ivf_topk(
-            emb(s, d).filter(F.col("vec_id") >= 8),
-            emb(s, d).filter(F.col("vec_id") < 8),
-            k=5,
-        ),
-        "alt_s04_srp_gaussian": lambda m, s, d: similarity.srp_topk(
-            emb(s, d).filter(F.col("vec_id") >= 8),
-            emb(s, d).filter(F.col("vec_id") < 8),
-            k=5,
-            bands=8,
-        ),
-    }
-
-
 def calibration(spark) -> dict:
     """Fixed box-speed probe, VERSION 2 (round 12).
 
@@ -423,7 +381,6 @@ def calibration(spark) -> dict:
 
 
 def main() -> None:
-    from mapreducehs_spark.operators.iteration import materialize
     from mapreducehs_spark.queries import QUERIES
     from mapreducehs_spark.session import get_spark
 
@@ -491,15 +448,6 @@ def main() -> None:
         )
         for name in inventory
     }
-    # throughput alternates: single timed pass (already JIT-warm from
-    # the kernels the defaults share), detail file only
-    alts = {}
-    for name, fn in alt_queries().items():
-        t0 = time.perf_counter()
-        with materialize(spark) as m:
-            fn(m, spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        alts[name] = round(time.perf_counter() - t0, 4)
-
     sf = SF_DIR.rstrip("/").split("sf")[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else SF_DIR
     total = round(sum(timings.values()), 4)
@@ -527,7 +475,6 @@ def main() -> None:
         "common_inventory_total": common_total,
         "common_inventory_n": common_n,
         "queries": timings,
-        "alt_queries": alts,
         "sf": sf_val,
     }
     # SPARK_GRAFT_BENCH_OUT redirects the detail file so off-sf runs

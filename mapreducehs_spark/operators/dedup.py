@@ -10,7 +10,7 @@ kernel can express only exact distinct via its Reducer, SURVEY §2.2
 - MinHash + LSH  — banded minhash bucket join (the 100 TB path:
                    candidate generation is linear, one shuffle per band
                    union, verification only within buckets).
-- SimHash        — 64-bit sign-fingerprint, near-dup = small Hamming
+- SimHash        — 32-bit sign-fingerprint, near-dup = small Hamming
                    distance; banded for candidate generation.
 - embedding      — cosine near-dup over embedding vectors (delegates to
                    operators.similarity).
@@ -21,6 +21,10 @@ it buckets (LSH bands / simhash bands / shared shingles) and only joins
 within buckets.  Hot buckets (boilerplate shingles) are the skew risk:
 ``ngram_jaccard_pairs`` caps per-shingle fanout via a document-frequency
 filter, the standard trick.
+
+Each near-dup job has one kernel.  The MinHash and SimHash kernels are
+engine-portable (md5-hex token/shingle ids, literal-seed permutations,
+deterministic banding), so a DuckDB oracle replays every step of them.
 """
 
 from __future__ import annotations
@@ -32,6 +36,17 @@ from pyspark.sql import functions as F
 
 from mapreducehs_spark.operators.iteration import Materialization, materialize
 from mapreducehs_spark.operators.text import tokens
+
+
+#: Mersenne prime 2^31-1, both the fold target and the universal-hash
+#: modulus.  The modulus must equal the hash domain: with x < p and
+#: a,b < p, (a*x+b) mod p wraps for essentially every (a, x) and is a
+#: proper universal permutation, and a*x+b < 2^62 never overflows
+#: a signed bigint.  (A much larger p, e.g. 2^61-1, silently breaks minhash:
+#: whenever a < p/max(x) the map is wrap-free hence order-preserving —
+#: every such "permutation" picks argmin(x), grossly inflating
+#: signature agreement between correlated sets.)
+_H31 = (1 << 31) - 1
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -96,51 +111,6 @@ def shingle_frame(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFram
     )
 
 
-def hashed_shingle_frame(
-    df: DataFrame, text_col: str, id_col: str, n: int, fold_31bit: bool = False
-) -> DataFrame:
-    """(id, hs: array<bigint>) — distinct shingles as 64-bit hashes.
-
-    The shingle string is never materialized: the n-token window feeds a
-    multi-arg ``xxhash64`` directly (measured ~10x vs building 20-char
-    shingle strings through interpreted concat/slice HOFs, and the
-    downstream joins key on bigint instead of string).  Collision risk
-    at 64 bits is birthday-bounded ≈ (#distinct shingles)²/2⁶⁵ —
-    negligible below ~10⁸ shingles per comparison scope; pass
-    ``fold_31bit`` only where an arithmetic bound needs hashes < 2³¹
-    (minhash's universal-hash overflow bound).
-    """
-    par = df.sparkSession.sparkContext.defaultParallelism
-    staged = (
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
-        .repartition(par, "id")
-        .select("id", tokens(F.col("__text")).alias("__toks"))
-        # cheap pre-filter; filtering on size(hs) AFTER would re-evaluate
-        # the whole interpreted HOF chain (no CSE; measured 7x)
-        .filter(F.size("__toks") >= n)
-    )
-    toks = F.col("__toks")
-    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(0)))
-
-    def shingle_hash(i):
-        return F.xxhash64(*[F.element_at(toks, i + j) for j in range(n)])
-
-    expr = F.transform(idx, lambda i: shingle_hash(i))
-    if fold_31bit:
-        expr = F.transform(idx, lambda i: F.pmod(shingle_hash(i), F.lit(_H31).cast("bigint")))
-    return staged.select("id", F.array_distinct(expr).alias("hs"))
-
-
-def _staged_text(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, __text) spread over the session's parallelism (same
-    rationale as shingle_frame: compute-bound kernels must not inherit
-    the input's split count on small file counts)."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    return df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text")).repartition(
-        par
-    )
-
-
 def hashed_shingle_rows(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
 ) -> DataFrame:
@@ -151,11 +121,12 @@ def hashed_shingle_rows(
     Python, then ONE vectorized C hash over the whole batch's shingles
     (``pd.util.hash_array``, keyed siphash — deterministic across
     workers).  Spark's array higher-order functions run interpreted
-    (CodegenFallback), so the expression formulation
-    (``hashed_shingle_frame``) pays per-element interpretation overhead;
-    the Arrow kernel is ~4x faster at equal semantics and is the 100 TB
-    path — scan-shaped, no shuffle, vectorized transfer.  Docs shorter
-    than ``n`` tokens emit nothing (same contract as the JVM path).
+    (CodegenFallback), so an expression formulation pays per-element
+    interpretation overhead; the Arrow kernel is ~4x faster at equal
+    semantics and is the 100 TB path — scan-shaped, vectorized
+    transfer.  The text is first spread over the session's parallelism
+    (same rationale as ``shingle_frame``).  Docs shorter than ``n``
+    tokens emit nothing.
     """
 
     def kernel(batches):
@@ -192,8 +163,11 @@ def hashed_shingle_rows(
                 }
             )
 
-    return _staged_text(df, text_col, id_col).mapInPandas(
-        kernel, "id long, set_size long, shingle long"
+    par = df.sparkSession.sparkContext.defaultParallelism
+    return (
+        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
+        .repartition(par)
+        .mapInPandas(kernel, "id long, set_size long, shingle long")
     )
 
 
@@ -262,242 +236,6 @@ def ngram_jaccard_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
-    )
-
-
-# ---------------------------------------------------------------------------
-# MinHash + LSH
-# ---------------------------------------------------------------------------
-
-#: Mersenne prime 2^31-1, both the fold target and the universal-hash
-#: modulus.  The modulus must equal the hash domain: with x < p and
-#: a,b < p, (a*x+b) mod p wraps for essentially every (a, x) and is a
-#: proper universal permutation, and a*x+b < 2^62 never overflows
-#: uint64.  (A much larger p, e.g. 2^61-1, silently breaks minhash:
-#: whenever a < p/max(x) the map is wrap-free hence order-preserving —
-#: every such "permutation" picks argmin(x), grossly inflating
-#: signature agreement between correlated sets.)
-_H31 = (1 << 31) - 1
-
-
-def minhash_signature(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 32,
-    shingle_n: int = 3,
-    bands: int | None = None,
-) -> DataFrame:
-    """num_perm minhash values per doc via universal hashing, in one
-    Arrow-batched numpy pass.
-
-    Per batch: shingle each doc (Python set), hash ALL shingles with one
-    vectorized C pass (``pd.util.hash_array``), fold below 2³¹, then
-    compute every permutation at once as a (num_perm × n_shingles)
-    uint64 matrix ``(aᵢ·h + bᵢ) mod (2³¹−1)`` and take per-doc minima
-    with ``np.minimum.reduceat`` — no bigint overflow (a,h < 2³¹ →
-    product < 2⁶²).  Replaces the expression formulation (interpreted
-    array HOFs, CodegenFallback) at ~4x; scan-shaped, no shuffle, which
-    is what dominates at 100 TB.
-
-    With ``bands`` set, also emits the ``bands`` LSH bucket keys per doc
-    (vectorized FNV-1a over each band's signature rows) so the LSH path
-    gets signatures + band keys from the same single pass.
-    """
-    import random
-
-    rnd = random.Random(42)
-    a = np.array([rnd.randrange(1, _H31) for _ in range(num_perm)], dtype=np.uint64)
-    b = np.array([rnd.randrange(0, _H31) for _ in range(num_perm)], dtype=np.uint64)
-    p31 = np.uint64(_H31)
-    n_bands = bands or 0
-    rows_per_band = num_perm // bands if bands else 0
-    schema = "id long, sig array<bigint>" + (", bks array<bigint>" if bands else "")
-
-    def kernel(batches):
-        empty = {"id": np.empty(0, dtype="int64"), "sig": []}
-        if n_bands:
-            empty["bks"] = []
-        for pdf in batches:
-            ids: list[int] = []
-            sizes: list[int] = []
-            shingle_lists: list[list[str]] = []
-            for di, txt in zip(pdf["id"].values, pdf["__text"].values):
-                toks = txt.split()
-                m = len(toks) - shingle_n + 1
-                if m <= 0:
-                    continue
-                sh = list({" ".join(toks[j : j + shingle_n]) for j in range(m)})
-                ids.append(di)
-                sizes.append(len(sh))
-                shingle_lists.append(sh)
-            if not ids:
-                yield pd.DataFrame(empty)
-                continue
-            counts = np.asarray(sizes, dtype="int64")
-            flat = np.array([s for lst in shingle_lists for s in lst], dtype=object)
-            h = pd.util.hash_array(flat) % p31  # fold into [0, p) — full domain
-            perms = (a[:, None] * h[None, :] + b[:, None]) % p31  # (P, S)
-            offsets = np.zeros(len(counts), dtype="int64")
-            np.cumsum(counts[:-1], out=offsets[1:])
-            sig = np.minimum.reduceat(perms, offsets, axis=1)  # (P, D)
-            out = {"id": np.asarray(ids, dtype="int64"), "sig": list(sig.astype("int64").T)}
-            if n_bands:
-                bks = np.empty((len(ids), n_bands), dtype=np.uint64)
-                for bi in range(n_bands):
-                    acc = np.full(len(ids), 14695981039346656037, dtype=np.uint64)
-                    for r in range(rows_per_band):
-                        acc = (acc ^ sig[bi * rows_per_band + r]) * np.uint64(1099511628211)
-                    bks[:, bi] = acc ^ np.uint64(bi)
-                out["bks"] = list(bks.view("int64"))
-            yield pd.DataFrame(out)
-
-    return _staged_text(df, text_col, id_col).mapInPandas(kernel, schema)
-
-
-def minhash_lsh_pairs(
-    m: Materialization,
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    jaccard_threshold: float = 0.5,
-) -> DataFrame:
-    """Near-dup candidate pairs via banded MinHash LSH, verified by
-    estimated Jaccard (signature agreement rate).
-
-    bands=8 × rows=4 over 32 perms → catches pairs with J ≳ 0.5.
-    Candidates: explode each signature into its band keys, self-join on
-    (band, band-hash).  Verification: fraction of agreeing minhashes.
-    Linear candidate generation; only bucket-mates are compared.
-    """
-    # Band join carries ONLY (id, band_key): at scale the 32-long
-    # signature arrays would otherwise ride through the explode-join
-    # shuffle (~512 bytes/pair); instead candidates are deduped as bare
-    # id pairs and signatures re-attached with two joins afterwards.
-    sigs = m.persist(minhash_signature(df, text_col, id_col, num_perm, shingle_n, bands=bands))
-    banded = sigs.select("id", F.posexplode("bks").alias("band", "band_key"))
-    left = banded.select(F.col("id").alias("id_a"), "band", "band_key")
-    right = banded.select(F.col("id").alias("id_b"), "band", "band_key")
-    cand_ids = (
-        left.join(right, ["band", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    cand = cand_ids.join(
-        sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a")), "id_a"
-    ).join(sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b")), "id_b")
-    agree = F.size(
-        F.filter(
-            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    )
-    return (
-        cand.withColumn(
-            "est_jaccard", F.round(agree.cast("double") / float(num_perm), 6)
-        )
-        .filter(F.col("est_jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "est_jaccard")
-    )
-
-
-# ---------------------------------------------------------------------------
-# SimHash
-# ---------------------------------------------------------------------------
-
-def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-            bits: int = 63) -> DataFrame:
-    """Per-doc SimHash fingerprint: sign of the per-bit sum of token
-    hashes (token OCCURRENCES — repeated tokens weigh more), 63 usable
-    bits (fingerprint stays below 2^63 as a signed bigint).
-
-    One Arrow-batched numpy pass: hash every token in the batch with a
-    single vectorized call, expand to a (tokens × bits) ±1 matrix, and
-    per-doc column sums via ``np.add.reduceat`` — scan-shaped, no
-    shuffle.  Replaced the expression form (explode + a 64-expression
-    hash aggregate) which measured ~9x slower at sf0.1: 64 aggregation
-    states per group put it far off the whole-stage-codegen fast path.
-    Docs with zero tokens emit nothing (same contract as before).
-    """
-    bitpos = np.arange(bits, dtype=np.uint64)
-    weights = (np.uint64(1) << bitpos).astype("uint64")
-
-    def kernel(batches):
-        for pdf in batches:
-            ids: list[int] = []
-            counts: list[int] = []
-            toks_flat: list[str] = []
-            for di, txt in zip(pdf["id"].values, pdf["__text"].values):
-                toks = txt.split()
-                if not toks:
-                    continue
-                ids.append(di)
-                counts.append(len(toks))
-                toks_flat.extend(toks)
-            if not ids:
-                yield pd.DataFrame(
-                    {"id": np.empty(0, dtype="int64"), "simhash": np.empty(0, dtype="int64")}
-                )
-                continue
-            h = pd.util.hash_array(np.array(toks_flat, dtype=object))  # uint64
-            pm = (((h[:, None] >> bitpos[None, :]) & np.uint64(1)).astype("int32") * 2) - 1
-            offsets = np.zeros(len(counts), dtype="int64")
-            np.cumsum(np.asarray(counts[:-1], dtype="int64"), out=offsets[1:])
-            sums = np.add.reduceat(pm, offsets, axis=0)  # (D, bits)
-            fp = ((sums > 0).astype("uint64") * weights[None, :]).sum(axis=1)
-            yield pd.DataFrame(
-                {"id": np.asarray(ids, dtype="int64"), "simhash": fp.view("int64")}
-            )
-
-    return _staged_text(df, text_col, id_col).mapInPandas(kernel, "id long, simhash long")
-
-
-def simhash_near_pairs(
-    m: Materialization,
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    bands: int = 4,
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance ≤ ``max_hamming``.
-
-    Candidate generation: split the 63-bit fingerprint into ``bands``
-    16-bit bands; by pigeonhole any pair within Hamming distance
-    (bands-1) shares an exact band → equi-join per band.  Verification:
-    popcount of XOR via bit loop (still column expressions).
-    """
-    # persist: the fingerprint aggregation feeds 2×bands join sides —
-    # without it the explode+64-bit-sum groupBy recomputes per side.
-    fps = m.persist(simhash(df, text_col, id_col))
-    band_cols = [
-        (F.shiftrightunsigned(F.col("simhash"), i * 16).bitwiseAND(F.lit(0xFFFF))).alias(
-            f"band{i}"
-        )
-        for i in range(bands)
-    ]
-    banded = fps.select("id", "simhash", *band_cols)
-    pairs = None
-    for i in range(bands):
-        l = banded.select(
-            F.col("id").alias("id_a"), F.col("simhash").alias("fp_a"), F.col(f"band{i}").alias("bk")
-        )
-        r = banded.select(
-            F.col("id").alias("id_b"), F.col("simhash").alias("fp_b"), F.col(f"band{i}").alias("bk")
-        )
-        p = l.join(r, "bk").filter(F.col("id_a") < F.col("id_b")).drop("bk")
-        pairs = p if pairs is None else pairs.unionByName(p)
-    cand = pairs.dropDuplicates(["id_a", "id_b"])
-    x = F.col("fp_a").bitwiseXOR(F.col("fp_b"))
-    hamming = F.bit_count(x).cast("int")
-    return (
-        cand.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
     )
 
 
@@ -612,66 +350,6 @@ def _min_label_propagation(
     return labels.select(F.col("id").alias("doc_id"), F.col("rep").alias("rep_id"))
 
 
-def near_dedup_drop_list(
-    m: Materialization,
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    candidate_threshold: float = 0.35,
-    jaccard_threshold: float = 0.5,
-) -> DataFrame:
-    """The composed 100 TB near-dedup pipeline: MinHash-LSH candidate
-    generation → EXACT Jaccard verification restricted to candidate
-    docs → connected-component resolution → (doc_id, rep_id) for every
-    document that should be DROPPED (rep survives).
-
-    This is the shape a production dedup runs at scale: the corpus is
-    never pair-joined (LSH buckets bound candidate generation), exact
-    verification runs PER CANDIDATE PAIR — each pair's two shingle
-    sets joined in and intersected in an Arrow kernel — and the
-    component step guarantees one survivor per duplicate cluster even
-    when A~B~C but A≁C.  The candidate threshold is set BELOW the
-    verify threshold so LSH misses near the boundary don't leak
-    through; the exact pass makes the final decision.
-
-    Verification cost is O(#pairs × shingle-set size), NEVER a corpus
-    re-join: re-running the d02 shingle self-join over the candidate
-    docs measured quadratic-within-cluster (a 100k-doc corpus with
-    20-way dup clusters — where nearly every doc is in some pair —
-    blew past 9 minutes; the per-pair form finishes the same corpus in
-    well under a minute).
-    """
-    cands = minhash_lsh_pairs(
-        m, df, text_col, id_col, num_perm, bands, shingle_n,
-        jaccard_threshold=candidate_threshold,
-    )
-    return _verify_and_resolve(df, cands, text_col, id_col, shingle_n, jaccard_threshold)
-
-
-def _verify_and_resolve(
-    df: DataFrame,
-    cands: DataFrame,
-    text_col: str,
-    id_col: str,
-    shingle_n: int,
-    jaccard_threshold: float,
-) -> DataFrame:
-    """Shared tail of the composed dedup pipelines: exact per-pair
-    Jaccard verification of candidate pairs → connected-component
-    resolution → drop list (doc_id, rep_id) with the representative
-    removed.  Candidate generation is the caller's (vectorized
-    minhash_lsh_pairs for throughput, minhash_lsh_pairs_checked for the
-    oracle-replayable twin).  The candidate/shingle caches are freed on
-    return: resolve_duplicate_clusters materializes its result."""
-    with materialize(df.sparkSession) as m:
-        verified = _verified_pairs(m, df, cands, text_col, id_col, shingle_n, jaccard_threshold)
-        clusters = resolve_duplicate_clusters(verified)
-    return clusters.filter(F.col("doc_id") != F.col("rep_id"))
-
-
 def near_dedup_verified_edges_checked(
     m: Materialization,
     df: DataFrame,
@@ -680,37 +358,30 @@ def near_dedup_verified_edges_checked(
     shingle_n: int = 3,
     est_threshold: float = 0.25,
     jaccard_threshold: float = 0.5,
-):
+) -> DataFrame:
     """Exact-Jaccard-VERIFIED near-dup edges (id_a, id_b) from the
     checked MinHash-LSH candidate path, WITHOUT cluster resolution —
-    the text-modality arm for callers that close several modality edge
+    the pair stage of ``near_dedup_drop_list_checked``, and the
+    text-modality arm for callers that close several modality edge
     sets in ONE shared components pass (m14; round 12, guide §1.2
     step 1: the per-arm union-find and drop-list re-keying were
     computed only to be thrown away by the cross-modal closure).
-    Connectivity equals ``near_dedup_drop_list_checked``'s drop-list
-    edges by construction (both encode the verified-pair graph).
-    Returns the LAZY verified-pair frame (the caller's closure
-    materializes it in its one action) over caches held in ``m``."""
-    cands = minhash_lsh_pairs_checked(
-        df, text_col, id_col, shingle_n, est_threshold
-    ).select("id_a", "id_b")
-    return _verified_pairs(m, df, cands, text_col, id_col, shingle_n, jaccard_threshold)
 
-
-def _verified_pairs(
-    m: Materialization,
-    df: DataFrame,
-    cands: DataFrame,
-    text_col: str,
-    id_col: str,
-    shingle_n: int,
-    jaccard_threshold: float,
-) -> DataFrame:
-    """Exact per-pair Jaccard verification of candidate pairs: each
-    pair's two shingle sets joined in and intersected in an Arrow
-    kernel.  Returns the verified (id_a, id_b) frame — LAZY, over the
-    candidate and shingle-set frames persisted in ``m``."""
-    cands = m.persist(cands)
+    Verification runs PER CANDIDATE PAIR: each pair's two shingle sets
+    are joined in and intersected in an Arrow kernel, so its cost is
+    O(#pairs × shingle-set size), NEVER a corpus re-join.  Re-running
+    the d02 shingle self-join over the candidate docs measured
+    quadratic-within-cluster (a 100k-doc corpus with 20-way dup
+    clusters — where nearly every doc is in some pair — blew past 9
+    minutes; the per-pair form finishes the same corpus in well under
+    a minute).  Returns the LAZY verified-pair frame (the caller's
+    closure materializes it in its one action) over the candidate and
+    shingle-set frames persisted in ``m``."""
+    cands = m.persist(
+        minhash_lsh_pairs_checked(df, text_col, id_col, shingle_n, est_threshold).select(
+            "id_a", "id_b"
+        )
+    )
     cand_docs = (
         cands.select(F.col("id_a").alias("cid"))
         .unionByName(cands.select(F.col("id_b").alias("cid")))
@@ -754,18 +425,27 @@ def near_dedup_drop_list_checked(
     est_threshold: float = 0.25,
     jaccard_threshold: float = 0.5,
 ) -> DataFrame:
-    """The composed dedup pipeline with CANDIDATES an external oracle
-    can replay: minhash_lsh_pairs_checked (md5-fold shingle ids,
-    literal-seed permutations, deterministic banding) feeds the same
-    exact-verify → resolve tail as near_dedup_drop_list.  End to end
-    value-checked by d15's DuckDB oracle; near_dedup_drop_list stays
-    the vectorized throughput path (identical topology).  The estimate
-    threshold sits below the verify threshold so LSH boundary misses
-    don't leak through — the exact pass decides."""
-    cands = minhash_lsh_pairs_checked(
-        df, text_col, id_col, shingle_n, est_threshold
-    ).select("id_a", "id_b")
-    return _verify_and_resolve(df, cands, text_col, id_col, shingle_n, jaccard_threshold)
+    """The composed 100 TB near-dedup pipeline: checked MinHash-LSH
+    candidate generation → EXACT per-pair Jaccard verification
+    (``near_dedup_verified_edges_checked``) → connected-component
+    resolution → (doc_id, rep_id) for every document that should be
+    DROPPED (rep survives).
+
+    The corpus is never pair-joined (LSH buckets bound candidate
+    generation), and the component step guarantees one survivor per
+    duplicate cluster even when A~B~C but A≁C.  Every candidate step
+    (md5-fold shingle ids, literal-seed permutations, deterministic
+    banding) reruns in SQL, so the pipeline is value-checked end to end
+    by d15's DuckDB oracle.  The estimate threshold sits below the
+    verify threshold so LSH boundary misses don't leak through — the
+    exact pass decides.  The candidate/shingle caches are freed on
+    return: resolve_duplicate_clusters materializes its result."""
+    with materialize(df.sparkSession) as m:
+        verified = near_dedup_verified_edges_checked(
+            m, df, text_col, id_col, shingle_n, est_threshold, jaccard_threshold
+        )
+        clusters = resolve_duplicate_clusters(verified)
+    return clusters.filter(F.col("doc_id") != F.col("rep_id"))
 
 
 def decontaminate(
@@ -1145,14 +825,12 @@ def minhash_lsh_pairs_checked(
     keys are plain signature concatenations — every step re-runnable in
     ANSI-ish SQL, so the whole LSH pipeline (signatures → banding →
     candidates → estimate) is value-checked against the DuckDB oracle,
-    not just row-counted.  ``minhash_lsh_pairs`` (vectorized numpy
-    kernel, xxhash-class hashing) remains the throughput path; this
-    variant costs ~an md5 per shingle and exists to pin the ALGORITHM.
+    not just row-counted.  The price is ~an md5 per shingle.
 
-    Same scale shape as the fast path: shingling + hashing are
-    scan-shaped, signatures are one 16-way min aggregation (partial
-    aggregation applies — min is associative), candidates come from a
-    band-key equi-join, and only candidate pairs compare signatures.
+    Scale shape: shingling + hashing are scan-shaped, signatures are
+    one 16-way min aggregation (partial aggregation applies — min is
+    associative), candidates come from a band-key equi-join, and only
+    candidate pairs compare signatures.
     """
     sigs, banded = minhash_checked_signatures(
         df, text_col=text_col, id_col=id_col, shingle_n=shingle_n
@@ -1208,8 +886,7 @@ def simhash_checked(
     matters on a small vocabulary), banding is 4×8 bits of the
     signature, and verification is bit_count(xor) <= max_hamming.
     Every step reruns in DuckDB, so the whole simhash pipeline is
-    value-checked; ``simhash``/``simhash_near_pairs`` stay the
-    vectorized throughput path.
+    value-checked.
 
     Scale shape: token hashing is scan-side, the 32 bit-sums are ONE
     partial-aggregatable grouped aggregation, candidates come from a

@@ -8,7 +8,7 @@ reference, SURVEY §2.2 "LLM-pipeline: similarity search").  Two paths:
   O(|queries| × |corpus|) — fine when the query side is small enough to
   broadcast, which is the common "probe" shape even at 100 TB corpora.
 - ``signed random projection LSH`` (``srp_signatures`` /
-  ``cosine_pairs_lsh`` / ``cosine_topk_lsh``) — the scale path: bucket
+  ``cosine_pairs_lsh`` / ``srp_topk``) — the scale path: bucket
   by sign-pattern of random hyperplane projections, compare only within
   buckets.  Candidate generation is linear; hyperplanes are seeded and
   shipped as literal arrays (a broadcast-sized constant).

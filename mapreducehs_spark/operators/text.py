@@ -6,8 +6,7 @@ is built-in-function-only (split/regexp/aggregate) so the hot path stays
 inside whole-stage codegen — no Python UDFs.
 
 Operators: tokenization + token stats, quality scoring, language-ID
-heuristic, document fingerprinting (md5 content hash + rolling-hash
-style prefix fingerprint), n-grams, per-facet term statistics (TF-IDF).
+heuristic, n-grams, per-facet term statistics (TF-IDF).
 """
 
 from __future__ import annotations
@@ -109,26 +108,6 @@ def with_lang_guess(df: DataFrame, text_col: str = "text") -> DataFrame:
         .when(n_cyr * 3 > n_total, "ru")
         .when(n_ar * 3 > n_total, "ar")
         .otherwise("latin"),
-    )
-
-
-def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Content fingerprints: full md5 plus a shift-xor rolling hash.
-
-    The rolling hash is a polynomial hash over token md5s folded with a
-    rotate-xor — a deterministic, order-sensitive 64-bit fingerprint
-    computable with built-in functions on both Spark and the oracle.
-    """
-    toks = tokens(text_col)
-    # conv(substr(md5, 1, 15), 16, 10) keeps us under 2^63 (15 hex digits).
-    tok_h = lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("bigint")  # noqa: E731
-    rolled = F.aggregate(
-        toks,
-        F.lit(0).cast("bigint"),
-        lambda acc, t: (acc * F.lit(31) + tok_h(t)) % F.lit(1_000_000_007),
-    )
-    return df.withColumn("content_md5", F.md5(F.col(text_col))).withColumn(
-        "rolling_fp", rolled
     )
 
 

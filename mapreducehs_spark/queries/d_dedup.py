@@ -97,26 +97,21 @@ def _d02_pairs(m: Materialization, docs: DataFrame) -> DataFrame:
 
 @query("d03_minhash_lsh_pairs")  # oracle attached below (_d11_oracle(0.375))
 def d03_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash LSH near-dup pairs — the scalable near-dup path, now
-    running the engine-portable checked kernel by DEFAULT (round 6):
+    """MinHash LSH near-dup pairs — the scalable near-dup path, on the
+    engine-portable checked kernel (dedup.minhash_lsh_pairs_checked):
     md5-fold shingle ids + literal-seed permutations replay bit-for-bit
     in the DuckDB oracle (d11's renderer at a stricter 0.375 estimate
-    threshold, i.e. ≥ 12/32 agreeing permutations).  The xxhash64
-    vectorized formulation (dedup.minhash_lsh_pairs) remains the
-    throughput alternate, benched as alt_d03 in bench.py and pinned
-    against exact Jaccard in tests."""
+    threshold, i.e. ≥ 6/16 agreeing permutations)."""
     docs = _t(spark, sf_dir, "documents")
     return dedup.minhash_lsh_pairs_checked(docs, est_threshold=0.375)
 
 
 @query("d04_simhash_pairs")  # oracle attached below (_d12_oracle(3))
 def d04_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs, engine-portable checked kernel by
-    DEFAULT (round 6): md5-fold token hashes + frequency-weighted bit
-    votes + 4×8-bit banding replay in DuckDB (d12's renderer at the
-    looser hamming ≤ 3).  The 63-bit xxhash vectorized formulation
-    (dedup.simhash_near_pairs) remains the throughput alternate
-    (alt_d04 in bench.py), pinned in tests."""
+    """SimHash near-dup pairs on the engine-portable checked kernel
+    (dedup.simhash_checked): md5-fold token hashes + frequency-weighted
+    bit votes + 4×8-bit banding replay in DuckDB (d12's renderer at the
+    looser hamming ≤ 3)."""
     docs = _t(spark, sf_dir, "documents")
     with materialize(spark) as m:
         return dedup.simhash_checked(m, docs, max_hamming=3)
@@ -205,12 +200,12 @@ def d07_near_dedup_drop_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash-LSH candidates → exact Jaccard verification on candidate
     docs only → duplicate-cluster resolution → the drop list
     (doc_id, rep_id) of every document whose cluster representative
-    survives.  Runs the value-checked composition by DEFAULT (round 6):
-    d11's replayable candidates + exact Jaccard at the stricter 0.6 +
-    recursive-closure-equivalent cluster resolution, all replayed by
-    the DuckDB oracle (d15's renderer).  The vectorized-hash candidate
-    variant (dedup.near_dedup_drop_list) remains the throughput
-    alternate (alt_d07 in bench.py), recall-pinned in tests."""
+    survives.  Runs the value-checked composition
+    (dedup.near_dedup_drop_list_checked): d11's replayable candidates +
+    exact Jaccard at the stricter 0.6 + recursive-closure-equivalent
+    cluster resolution, all replayed by the DuckDB oracle (d15's
+    renderer).  Recall against the all-exact path is pinned in tests
+    (test_near_dedup_pipeline_recall)."""
     docs = _t(spark, sf_dir, "documents")
     return dedup.near_dedup_drop_list_checked(
         docs, est_threshold=0.25, jaccard_threshold=0.6
@@ -355,8 +350,7 @@ def d11_minhash_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DuckDB oracle replays signatures, banding, candidate generation
     and the agreement estimate bit-for-bit
     (operators/dedup.minhash_lsh_pairs_checked).  d03 runs the same
-    kernel at a stricter threshold; the vectorized throughput path is
-    dedup.minhash_lsh_pairs (bench.py's alt_d03)."""
+    kernel at a stricter threshold."""
     docs = _t(spark, sf_dir, "documents")
     return dedup.minhash_lsh_pairs_checked(docs, est_threshold=0.25)
 
@@ -405,8 +399,7 @@ def d12_simhash_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedup.simhash_checked): md5-fold token hashes,
     frequency-weighted per-bit majority votes, 4x8-bit banding, xor
     popcount verification — DuckDB replays all of it.  d04 runs the
-    same kernel at hamming <= 3; the vectorized 63-bit throughput path
-    is dedup.simhash_near_pairs (bench.py's alt_d04)."""
+    same kernel at hamming <= 3."""
     docs = _t(spark, sf_dir, "documents")
     with materialize(spark) as m:
         return dedup.simhash_checked(m, docs, max_hamming=2)
@@ -418,21 +411,19 @@ def d15_near_dedup_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-replayable MinHash-LSH candidates (d11's literal seeds) →
     exact per-pair Jaccard verification → connected-component
     resolution → the (doc_id, rep_id) drop list
-    (operators/dedup.near_dedup_drop_list_checked).  d07 keeps the
-    vectorized-hash throughput path with identical topology; this run
-    proves the COMPOSITION — candidates, verify decisions, cluster
-    reps, drop set — bit-for-bit against DuckDB's recursive-CTE
-    replay."""
+    (operators/dedup.near_dedup_drop_list_checked).  d07 runs the same
+    pipeline at the stricter 0.6; this run proves the COMPOSITION —
+    candidates, verify decisions, cluster reps, drop set — bit-for-bit
+    against DuckDB's recursive-CTE replay."""
     docs = _t(spark, sf_dir, "documents")
     return dedup.near_dedup_drop_list_checked(
         docs, est_threshold=0.25, jaccard_threshold=0.5
     )
 
 
-# Round 6: the five formerly rows-only queries (VERDICT r05 §missing #1)
-# now run the checked kernels by default, so they get full value-check
-# oracles.  Attached here (not at the @query site) because the renderers
-# live next to their twins, below the original query definitions.
+# d03/d04/d07 run the checked kernels, so they get full value-check
+# oracles.  Attached here (not at the @query site) because _d12_oracle is
+# defined below the original query definitions.
 ORACLE["d03_minhash_lsh_pairs"] = _d11_oracle(threshold=0.375)
 
 

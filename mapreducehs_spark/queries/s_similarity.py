@@ -88,7 +88,7 @@ def s02_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment, probing and rank replay in the DuckDB oracle (s06's
     renderer at the tighter n_probe=2, i.e. an 8× scan cut).  The
     trained-random-codebook variant stays the recall path, pinned in
-    tests (test_ivf_topk_recall) and benched as alt_s02."""
+    tests (test_ivf_topk_recall)."""
     emb = _t(spark, sf_dir, "embeddings")
     return similarity.ivf_topk(
         emb.filter(F.col("vec_id") >= 8),
@@ -108,7 +108,7 @@ def s04_ann_srp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus itself so the sign bits, 4×4-bit banding and candidate rank
     replay in the DuckDB oracle (s07's renderer).  The
     Gaussian-hyperplane variant stays the recall path, pinned in tests
-    (test_srp_topk_recall) and benched as alt_s04."""
+    (test_srp_topk_recall)."""
     emb = _t(spark, sf_dir, "embeddings")
     return similarity.srp_topk(
         emb.filter(F.col("vec_id") >= 8),

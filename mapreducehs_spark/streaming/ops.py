@@ -200,7 +200,6 @@ def run_to_batch(
     stream_df: DataFrame,
     name: str,
     output_mode: str = "append",
-    shuffle_partitions: int | None = None,
     state_bytes: int | None = None,
 ) -> DataFrame:
     """Drain a finite stream into a memory sink; return the result table.
@@ -208,27 +207,26 @@ def run_to_batch(
     The memory sink is the test/driver harness sink only — production
     sinks are kafka/parquet/delta via the same ``writeStream`` call.
 
-    ``shuffle_partitions`` pins the state-store partition count for this
-    query (read at ``start()``, fixed for the query's lifetime).  A
-    vanilla 200-partition session pays 200 state-store tasks per
-    stateful op per micro-batch — for the bounded state here (thousands
-    of windows/users) a few per core is right.  At 100 TB this knob is
-    the per-topology state sizing decision, made per stream, not
-    globally.
-
-    ``state_bytes`` is the round-13 data-shape form of that decision: an
-    upper bound on the topology's retained state volume, from which the
-    partition count derives via ``state_partitions_for`` (~64 MB of
-    state per store partition, floor 8).  Partitioning cannot change
-    values (only placement), so results are identical by construction.
+    The state-store partition count is set for this query (read at
+    ``start()``, fixed for the query's lifetime).  A vanilla
+    200-partition session pays 200 state-store tasks per stateful op per
+    micro-batch — for the bounded state here (thousands of
+    windows/users) a few per core is right.  At 100 TB it is the
+    per-topology state sizing decision, made per stream, not globally.
+    ``state_bytes`` is an upper bound on the topology's retained state
+    volume, from which the partition count derives via
+    ``state_partitions_for`` (~64 MB of state per store partition,
+    floor 8); without it the count is ``max(8, defaultParallelism)``.
+    Partitioning cannot change values (only placement), so results are
+    identical by construction.
     """
     spark = stream_df.sparkSession
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is None and state_bytes is not None:
-        shuffle_partitions = state_partitions_for(state_bytes)
-    if shuffle_partitions is None:
-        shuffle_partitions = max(8, spark.sparkContext.defaultParallelism)
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    if state_bytes is not None:
+        partitions = state_partitions_for(state_bytes)
+    else:
+        partitions = max(8, spark.sparkContext.defaultParallelism)
+    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
     try:
         q = (
             stream_df.writeStream.format("memory")

@@ -326,7 +326,7 @@ def _doc_corpus():
 
 
 def test_minhash_estimates_track_exact_jaccard(spark):
-    from mapreducehs_spark.operators.dedup import minhash_lsh_pairs, ngram_jaccard_pairs
+    from mapreducehs_spark.operators.dedup import minhash_lsh_pairs_checked, ngram_jaccard_pairs
 
     df = spark.createDataFrame(_doc_corpus(), "doc_id long, text string")
     with materialize(spark) as m:
@@ -336,36 +336,32 @@ def test_minhash_estimates_track_exact_jaccard(spark):
         }
         est = {
             (r["id_a"], r["id_b"]): r["est_jaccard"]
-            for r in minhash_lsh_pairs(m, df, jaccard_threshold=0.0).collect()
+            for r in minhash_lsh_pairs_checked(df, est_threshold=0.0).collect()
         }
     # the exact-duplicate pair is found with estimate 1.0
     assert est[(0, 1)] == 1.0
     # every LSH-surfaced pair's estimate is within 0.3 of exact Jaccard
-    # (32 perms → σ ≈ sqrt(J(1-J)/32) ≤ 0.09; 0.3 is a >3σ bound)
+    # (16 perms → σ ≈ sqrt(J(1-J)/16) ≤ 0.125; 0.3 is a >2σ bound)
     for pair, e in est.items():
         assert abs(e - exact.get(pair, 0.0)) < 0.3, (pair, e, exact.get(pair))
 
 
-def test_simhash_fingerprint_locality(spark):
-    from mapreducehs_spark.operators.dedup import simhash, simhash_near_pairs
+def test_simhash_checked_locality(spark):
+    from mapreducehs_spark.operators.dedup import simhash_checked
 
     df = spark.createDataFrame(_doc_corpus(), "doc_id long, text string")
-    fp = {r["id"]: r["simhash"] for r in simhash(df).collect()}
-    ham = lambda a, b: bin(fp[a] ^ fp[b]).count("1")
-    assert ham(0, 1) == 0  # identical text → identical fingerprint
-    # near dup is closer than unrelated docs (locality property)
-    assert ham(0, 2) < ham(0, 3)
-    assert ham(0, 2) < ham(0, 4)
-
-    # banded candidate generation surfaces the exact-dup pair
-    # (pigeonhole only GUARANTEES candidates up to hamming bands-1 = 3,
-    # so no assertion about the ham(0,2) pair being found)
     with materialize(spark) as m:
         out = {
             (r["id_a"], r["id_b"]): r["hamming"]
-            for r in simhash_near_pairs(m, df, max_hamming=16).collect()
+            for r in simhash_checked(m, df, max_hamming=32).collect()
         }
+    # identical text → identical fingerprint
     assert out[(0, 1)] == 0
+    # the near dup lands within a few bits of its original
+    assert out[(0, 2)] <= 2
+    # banded candidate generation never pairs the unrelated docs
+    # (locality: they share no exact 8-bit band with anything)
+    assert all(3 not in pair and 4 not in pair for pair in out), out
 
 
 # ---------------------------------------------------------------------------
@@ -616,20 +612,20 @@ def test_near_dedup_pipeline_recall(spark):
     all-exact path finds (planted dup corpus), and never drops a
     cluster representative."""
     from mapreducehs_spark.operators.dedup import (
-        near_dedup_drop_list,
+        near_dedup_drop_list_checked,
         ngram_jaccard_pairs,
         resolve_duplicate_clusters,
     )
 
     rows = _doc_corpus()
     df = spark.createDataFrame(rows, "doc_id long, text string")
+    dropped = {
+        r["doc_id"]: r["rep_id"]
+        for r in near_dedup_drop_list_checked(
+            df, est_threshold=0.2, jaccard_threshold=0.5
+        ).collect()
+    }
     with materialize(spark) as m:
-        dropped = {
-            r["doc_id"]: r["rep_id"]
-            for r in near_dedup_drop_list(
-                m, df, candidate_threshold=0.2, jaccard_threshold=0.5
-            ).collect()
-        }
         exact_pairs = ngram_jaccard_pairs(m, df, threshold=0.5, max_shingle_df=None)
         want = {
             r["doc_id"]: r["rep_id"]
@@ -637,7 +633,7 @@ def test_near_dedup_pipeline_recall(spark):
             if r["doc_id"] != r["rep_id"]
         }
     # every exact-path drop is found by the pipeline with identical rep
-    # (tiny corpus: LSH at 32 perms surfaces all J>=0.5 pairs here)
+    # (tiny corpus: LSH at 16 perms surfaces all J>=0.5 pairs here)
     assert dropped == want
     # a representative is never in the drop list
     assert set(dropped).isdisjoint(set(dropped.values()))

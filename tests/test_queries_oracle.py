@@ -6,6 +6,8 @@ regressions surface locally first.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import duckdb
 import pytest
 
@@ -64,6 +66,21 @@ def test_every_query_has_an_oracle():
     con = duckdb.connect()
     for name, sql in ORACLE.items():
         assert len(con.extract_statements(sql)) == 1, name
+
+
+def test_queries_md_matches_registry():
+    """QUERIES.md is generated from the query docstrings; a docstring
+    edit without a regeneration (``python tools/gen_queries_md.py``)
+    leaves the committed table stale."""
+    import importlib.util
+
+    root = Path(__file__).resolve().parent.parent
+    spec = importlib.util.spec_from_file_location(
+        "gen_queries_md", root / "tools" / "gen_queries_md.py"
+    )
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    assert (root / "QUERIES.md").read_text() == gen.render()
 
 
 def test_t41_reconciles_with_t32(spark):

@@ -1,6 +1,7 @@
 """Regenerate QUERIES.md from the query registry docstrings.
 
-Run from the repo root after adding/renaming queries:
+Run from the repo root after adding/renaming queries or editing their
+docstrings (tests/test_queries_oracle.py fails while the file is stale):
     python tools/gen_queries_md.py
 """
 
@@ -34,7 +35,8 @@ def first_sentences(doc: str | None, width: int = 175) -> str:
     return text.replace("|", "\\|")
 
 
-def main() -> None:
+def render() -> str:
+    """QUERIES.md's full text, from the registry as it stands."""
     import __spark_entry__ as entry
 
     qs, oracles = entry.queries(), entry.oracle_sql()
@@ -46,9 +48,14 @@ def main() -> None:
         f"\n{len(qs)} queries; {len(oracles)} oracle-checked, "
         f"{len(qs) - len(oracles)} rows-only.\n"
     )
+    return HEADER + "\n".join(rows) + "\n" + footer
+
+
+def main() -> None:
+    text = render()
     with open(os.path.join(REPO, "QUERIES.md"), "w") as f:
-        f.write(HEADER + "\n".join(rows) + "\n" + footer)
-    print(f"QUERIES.md: {len(qs)} queries written")
+        f.write(text)
+    print(f"QUERIES.md: {text.splitlines()[-1]}")
 
 
 if __name__ == "__main__":
