@@ -239,117 +239,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def resolve_duplicate_clusters(
-    pairs: DataFrame, max_iter: int = 25, driver_threshold: int = 5_000_000
-) -> DataFrame:
-    """Resolve near-dup pairs into clusters: connected components;
-    returns (doc_id, rep_id) where ``rep_id`` is the minimum doc id of
-    the component — the canonical "keep one representative per
-    duplicate cluster" step after any candidate-pair generator
-    (d02/d03/d04/d05).
-
-    Two regimes, chosen by the materialized pair count:
-
-    - ``n_pairs ≤ driver_threshold`` → **driver union-find**.  The
-      verified pair list is scalar (two longs/row) and a vanishing
-      fraction of the corpus — 5M pairs is ~80 MB — while every round
-      of the distributed loop is a full Spark job (join + agg +
-      convergence collect) whose scheduling dwarfs the compute at this
-      size (measured seconds/round for a 25-edge graph).  Union-find
-      with path compression resolves millions of edges in under a
-      second on the driver; the result is parallelized back.
-    - larger → **iterative min-label propagation**: each round every
-      node takes the min label among itself and its neighbors;
-      convergence in O(component diameter) rounds — the standard
-      scalable CC shape (a GraphX/Pregel equivalent expressed as
-      DataFrame joins).  Per-round cost is ONE equi-join + ONE hash
-      aggregation: self-loops baked into the edge list make "min over
-      self and neighbors" a single ``groupBy(dst).min(rep)``.
-      Convergence detection rides the monotonicity of min-label
-      propagation: reps only decrease, so the loop is done exactly
-      when ``sum(rep)`` stops falling.  Caps at ``max_iter`` as a
-      pathological-chain guard.
-
-    Both paths are semantically identical (pinned by
-    tests/test_operators.py::test_resolve_clusters_driver_vs_distributed);
-    pass ``driver_threshold=0`` to force the distributed loop.
-    """
-    # materialize the pair list once up front: its size picks the
-    # regime, and every downstream frame derives from it
-    with materialize(pairs.sparkSession) as m:
-        fwd = m.persist(pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")))
-        n_pairs = fwd.count()
-        if n_pairs > driver_threshold:
-            return m.result(_min_label_propagation(m, fwd, n_pairs, max_iter))
-        pdf = fwd.toPandas()
-
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(x, x) != x:
-            parent[x], x = root, parent[x]
-        return root
-
-    for a, b in zip(pdf["src"].values, pdf["dst"].values):
-        ra, rb = find(int(a)), find(int(b))
-        if ra != rb:
-            if rb < ra:
-                ra, rb = rb, ra
-            parent[rb] = ra  # min root wins → rep is the min id
-    ids = sorted(set(pdf["src"].astype(int)) | set(pdf["dst"].astype(int)))
-    out = pd.DataFrame(
-        {"doc_id": ids, "rep_id": [find(i) for i in ids]}, dtype="int64"
-    )
-    return pairs.sparkSession.createDataFrame(out, schema="doc_id long, rep_id long")
-
-
-def _min_label_propagation(
-    m: Materialization, fwd: DataFrame, n_pairs: int, max_iter: int
-) -> DataFrame:
-    """``resolve_duplicate_clusters``' distributed regime over the
-    persisted (src, dst) pair list ``fwd``; returns (doc_id, rep_id)
-    over the last round's labels, persisted in ``m``."""
-    nodes = (
-        fwd.select(F.col("src").alias("id"))
-        .unionByName(fwd.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    # Right-size the loop's parallelism to the actual graph: one
-    # partition per ~25k edges, capped at the session's parallelism.
-    # The repartition co-locates each round's join probe on src; AQE
-    # handles the reduce sides.
-    par = fwd.sparkSession.sparkContext.defaultParallelism
-    target = max(1, min(par, n_pairs // 25_000 + 1))
-    edges = m.persist(
-        fwd.unionByName(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .unionByName(nodes.select(F.col("id").alias("src"), F.col("id").alias("dst")))
-        .repartition(target, "src")
-    )
-    edges.count()  # materialize once; every round joins this frame
-    m.free(fwd)
-    labels = m.persist(nodes.withColumn("rep", F.col("id")))
-    prev_sum = None
-
-    for _ in range(max_iter):
-        new_labels = m.persist(
-            edges.join(labels, edges.src == labels.id)
-            .groupBy("dst")
-            .agg(F.min("rep").alias("rep"))
-            .select(F.col("dst").alias("id"), "rep")
-        )
-        cur_sum = new_labels.agg(F.sum("rep")).collect()[0][0]
-        m.free(labels)
-        labels = new_labels
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    m.free(edges)
-    return labels.select(F.col("id").alias("doc_id"), F.col("rep").alias("rep_id"))
-
-
 def near_dedup_verified_edges_checked(
     m: Materialization,
     df: DataFrame,
@@ -439,13 +328,13 @@ def near_dedup_drop_list_checked(
     by d15's DuckDB oracle.  The estimate threshold sits below the
     verify threshold so LSH boundary misses don't leak through — the
     exact pass decides.  The candidate/shingle caches are freed on
-    return: resolve_duplicate_clusters materializes its result."""
+    return: connected_components_star materializes its result."""
     with materialize(df.sparkSession) as m:
         verified = near_dedup_verified_edges_checked(
             m, df, text_col, id_col, shingle_n, est_threshold, jaccard_threshold
         )
-        clusters = resolve_duplicate_clusters(verified)
-    return clusters.filter(F.col("doc_id") != F.col("rep_id"))
+        cc = connected_components_star(verified)
+    return cc.select(F.col("node").alias("doc_id"), F.col("rep").alias("rep_id"))
 
 
 def decontaminate(
@@ -995,60 +884,39 @@ def fuzzy_name_pairs(
 
 
 def connected_components_star(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_rounds: int = 25,
-    driver_threshold: int = 5_000_000,
+    pairs: DataFrame, driver_threshold: int = 5_000_000
 ) -> DataFrame:
-    """Connected components by alternating LARGE-STAR / SMALL-STAR
-    (Kiveris et al. 2014, "Connected Components in MapReduce and
-    Beyond") — the web-scale CC algorithm: converges in O(log² n)
-    rounds on ANY graph shape, where hash-to-min label propagation
-    (``resolve_duplicate_clusters``'s distributed regime) needs
-    O(diameter) rounds and dies on long chains.  Each round is two
-    aggregate+join passes over the current edge list; no adjacency
-    ever materializes per node.
+    """Connected components of the (id_a, id_b) pair graph — the
+    engine's one CC kernel, the "keep one representative per duplicate
+    cluster" step after any candidate-pair generator.  Returns (node,
+    rep) for every non-representative node, rep = the component's
+    minimum id; self-loops are dropped.  The fixpoint is unique, so the
+    result value-checks against a recursive-CTE closure.
 
-    - large-star(u): every STRICTLY LARGER neighbor of u connects to
-      min(Γ(u) ∪ {u});
-    - small-star(u): every neighbor ≤ u (and u itself) connects to the
-      minimum of that set.
+    Two regimes, picked by the count that materializes the edge list's
+    non-eager localCheckpoint (inside the count's own stage; a persist
+    costs AQE one more job to build its cache):
 
-    Deterministic: the fixpoint (every node → its component minimum)
-    is unique, so the result value-checks against a recursive-CTE
-    closure regardless of round count.  Convergence is detected with
-    an order-free integer checksum of the canonicalized edge set;
-    since round 12 the checksum aggregate is the SAME action that
-    materializes the round's non-eager localCheckpoint, so a round
-    costs ONE driver action, not two (guide §2.6), and the round body
-    carries one distinct instead of four — groupBy-min is duplicate-
-    tolerant and each round's single trailing distinct restores set
-    semantics before the checksum (guide §2.4: 9 → 7 shuffle exchanges
-    in the static round plan, plans/r12/cc_round_body_{before,after}.txt;
-    AQE reuses more at runtime).  Per-round frames are genuinely freed
-    (operators/iteration), and the result is checkpointed before the
-    last round's frame is.
-
-    TWO REGIMES, picked by the deduped edge count (round 12; the
-    ``resolve_duplicate_clusters`` discipline applied to the star
-    path): at or below ``driver_threshold`` edges the canonical edge
-    list is scalar-sized (two longs/row; 5 M edges ≈ 80 MB) and every
-    star round is a full multi-stage Spark job whose scheduling
-    dwarfs the compute, so the components come from driver union-find
-    with path compression over the ALREADY-MATERIALIZED edge frame
-    (the regime-picking count rides the same action that would have
-    seeded the convergence checksum — no extra pass).  Above the
-    threshold the O(log² n)-round star alternation runs unchanged —
-    the 100 TB path; ``driver_threshold=0`` forces it (pinned
-    equivalent by tests/test_operators.py).
-
-    Returns (node, rep) for every non-representative node, rep = the
-    component's minimum id — ``resolve_duplicate_clusters``'s contract.
+    - at or below ``driver_threshold`` edges → **driver union-find**
+      with path compression over one ``toPandas`` of that list.  It is
+      scalar (two longs/row; 5 M edges ≈ 80 MB), while every
+      distributed round is a full Spark job whose scheduling dwarfs
+      the compute at this size.
+    - above it → alternating LARGE-STAR / SMALL-STAR (Kiveris et al.
+      2014, "Connected Components in MapReduce and Beyond"): O(log² n)
+      rounds on ANY graph shape, where hash-to-min label propagation
+      needs O(diameter) and straggles on long chains.  Each round is
+      two aggregate+join passes; no adjacency materializes per node.
+      large-star(u): every STRICTLY LARGER neighbor of u connects to
+      min(Γ(u) ∪ {u}); small-star(u): every neighbor ≤ u (and u)
+      connects to the minimum of that set.  Convergence is an
+      order-free checksum of the canonical edge set, computed by the
+      SAME action that materializes the round's non-eager
+      localCheckpoint — one driver action per round (guide §2.6) —
+      and the round body carries one trailing distinct (guide §2.4:
+      9 → 7 exchanges, plans/r12/cc_round_body_{before,after}.txt).
+      ``driver_threshold=0`` forces this regime.
     """
-    e0 = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v")).filter(
-        F.col("u") != F.col("v")
-    )
 
     def large_star(E: DataFrame) -> DataFrame:
         # duplicate output rows are fine: small_star's min-aggregation
@@ -1086,10 +954,18 @@ def connected_components_star(
         ).collect()[0]
         return (row["n"], row["h"])
 
+    max_rounds = 25  # O(log² n) rounds; more means a broken round body
     with materialize(pairs.sparkSession) as m:
-        cur = m.checkpoint(e0.distinct(), eager=False)
-        prev_sum = checksum(cur)
-        if prev_sum[0] > driver_threshold:
+        e = m.checkpoint(
+            pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")).filter(
+                F.col("u") != F.col("v")
+            ),
+            eager=False,
+        )
+        if e.count() > driver_threshold:
+            cur = m.checkpoint(e.distinct(), eager=False)
+            prev_sum = checksum(cur)
+            m.free(e)  # the checksum stored cur's blocks; nothing reads e again
             for _ in range(max_rounds):
                 nxt = m.checkpoint(small_star(large_star(cur)), eager=False)
                 cur_sum = checksum(nxt)
@@ -1103,11 +979,7 @@ def connected_components_star(
             # converged: every edge points node → component min; a node has a
             # single rep at the fixpoint, min() guards intermediate ties
             return m.result(cur.groupBy(F.col("u").alias("node")).agg(F.min("v").alias("rep")))
-        # small-graph regime: union-find on the materialized edge list
-        # (min root wins → rep is the component minimum, exactly the
-        # star fixpoint).  The checksum action above already stored the
-        # checkpoint blocks, so this toPandas reads them, not lineage.
-        pdf = cur.toPandas()
+        pdf = e.toPandas()
 
     parent: dict[int, int] = {}
 
@@ -1124,7 +996,7 @@ def connected_components_star(
         if ra != rb:
             if rb < ra:
                 ra, rb = rb, ra
-            parent[rb] = ra
+            parent[rb] = ra  # min root wins → rep is the component minimum
     ids = sorted(set(pdf["u"].astype(int)) | set(pdf["v"].astype(int)))
     rows = [(i, find(i)) for i in ids]
     out_pdf = pd.DataFrame(
@@ -1352,9 +1224,8 @@ def banded_duplicate_edges(
     (and emitting, and re-keying) each arm first.
 
     Returns a LAZY (id_a, id_b) frame over caches held in ``m`` — so
-    the caller's closure materializes every arm in its ONE
-    checkpoint+checksum action instead of paying a per-arm
-    materialization action."""
+    the caller's closure materializes every arm in its ONE edge-list
+    count instead of paying a per-arm materialization action."""
     h = m.persist(hashes.select(F.col(id_col).alias("id"), *key_cols))
     grp = m.persist(
         h.groupBy(*key_cols).agg(F.min("id").alias("hrep"), F.count(F.lit(1)).alias("cnt"))

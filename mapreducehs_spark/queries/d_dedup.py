@@ -185,13 +185,15 @@ def d05_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d06_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster resolution: exact-Jaccard pairs (d02 semantics)
-    resolved into connected components by iterative min-label
-    propagation (dedup.resolve_duplicate_clusters) — each doc mapped to
-    its cluster representative (min doc id).  The iterative Spark loop
-    is oracle-checked against a DuckDB RECURSIVE transitive closure:
-    genuinely-iterative dataflow, hash-matched anyway."""
+    resolved into connected components (dedup.connected_components_star)
+    — each doc mapped to its cluster representative (min doc id), the
+    representative included.  Oracle-checked against a DuckDB RECURSIVE
+    transitive closure."""
     with materialize(spark) as m:
-        return dedup.resolve_duplicate_clusters(_d02_pairs(m, _t(spark, sf_dir, "documents")))
+        cc = dedup.connected_components_star(_d02_pairs(m, _t(spark, sf_dir, "documents")))
+    return cc.unionByName(cc.select(F.col("rep").alias("node"), "rep").distinct()).select(
+        F.col("node").alias("doc_id"), F.col("rep").alias("rep_id")
+    )
 
 
 @query("d07_near_dedup_drop_list")  # oracle attached below (_d15_oracle(0.25, 0.6))
@@ -471,11 +473,8 @@ def d16_embedding_dedup_drop_list(spark: SparkSession, sf_dir: str) -> DataFrame
     emb = _t(spark, sf_dir, "embeddings")
     with materialize(spark) as m:
         pairs = all_pairs_cosine_blocked(m, emb, threshold=0.4).select("id_a", "id_b")
-        clusters = dedup.resolve_duplicate_clusters(pairs)
-    return (
-        clusters.filter(F.col("doc_id") != F.col("rep_id"))
-        .select(F.col("doc_id").alias("vec_id"), "rep_id")
-    )
+        cc = dedup.connected_components_star(pairs)
+    return cc.select(F.col("node").alias("vec_id"), F.col("rep").alias("rep_id"))
 
 
 @query(
@@ -972,12 +971,12 @@ def d21_star_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components via LARGE-STAR/SMALL-STAR alternation
     (operators/dedup.connected_components_star) over d11's checked
     MinHash candidate graph — the O(log² n)-round web-scale CC
-    algorithm next to d06's hash-to-min label propagation, which needs
-    O(diameter) rounds and straggles on chain-shaped duplicate
-    clusters.  Both reach the same unique fixpoint (node → component
-    minimum), so the star schedule value-checks against the
-    recursive-CTE closure bit-for-bit; equivalence with the union-find
-    resolver is additionally pinned in tests."""
+    algorithm, where hash-to-min label propagation needs O(diameter)
+    rounds and straggles on chain-shaped duplicate clusters.  Its
+    fixpoint (node → component minimum) is unique, so the result
+    value-checks against the recursive-CTE closure bit-for-bit; the
+    kernel's small-graph union-find and distributed star regimes are
+    pinned against each other in tests."""
     docs = _t(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs_checked(docs, est_threshold=0.25).select(
         "id_a", "id_b"

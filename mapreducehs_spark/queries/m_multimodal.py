@@ -727,7 +727,7 @@ def m14_crossmodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         txt = dedup.near_dedup_verified_edges_checked(
             m, docs, est_threshold=0.25, jaccard_threshold=0.6
         )
-        # ONE action (the closure's checkpoint+checksum) materializes both
+        # ONE action (the closure's regime-picking count) materializes both
         # lazy arms; their internal caches are freed once it returns
         comp = dedup.connected_components_star(img.unionByName(txt))
     sizes = comp.groupBy("rep").agg(

@@ -474,8 +474,26 @@ def test_ngram_jaccard_matches_pure_python(spark):
     assert got == want
 
 
-def test_resolve_duplicate_clusters_components(spark):
-    from mapreducehs_spark.operators.dedup import resolve_duplicate_clusters
+def _reference_components(edges) -> dict[int, int]:
+    """Pure-Python connected components: {node: component minimum} for
+    every node of ``edges`` (an iterable of (a, b) pairs) — the
+    reference the CC kernel's regimes are checked against."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
+
+
+def test_connected_components_contract(spark):
+    from mapreducehs_spark.operators.dedup import connected_components_star
 
     # two chained components {1,2,3,7,6,5} (via 3-7 bridge) and {10,11},
     # plus an isolated pair {20,21}
@@ -483,8 +501,8 @@ def test_resolve_duplicate_clusters_components(spark):
         [(1, 2), (2, 3), (5, 6), (6, 7), (3, 7), (10, 11), (20, 21)],
         "id_a long, id_b long",
     )
-    got = {r["doc_id"]: r["rep_id"] for r in resolve_duplicate_clusters(pairs).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 5: 1, 6: 1, 7: 1, 10: 10, 11: 10, 20: 20, 21: 20}
+    got = {r["node"]: r["rep"] for r in connected_components_star(pairs).collect()}
+    assert got == {2: 1, 3: 1, 5: 1, 6: 1, 7: 1, 11: 10, 21: 20}
 
 
 def test_hash_split_matches_pure_python(spark):
@@ -612,9 +630,9 @@ def test_near_dedup_pipeline_recall(spark):
     all-exact path finds (planted dup corpus), and never drops a
     cluster representative."""
     from mapreducehs_spark.operators.dedup import (
+        connected_components_star,
         near_dedup_drop_list_checked,
         ngram_jaccard_pairs,
-        resolve_duplicate_clusters,
     )
 
     rows = _doc_corpus()
@@ -628,9 +646,8 @@ def test_near_dedup_pipeline_recall(spark):
     with materialize(spark) as m:
         exact_pairs = ngram_jaccard_pairs(m, df, threshold=0.5, max_shingle_df=None)
         want = {
-            r["doc_id"]: r["rep_id"]
-            for r in resolve_duplicate_clusters(exact_pairs).collect()
-            if r["doc_id"] != r["rep_id"]
+            r["node"]: r["rep"]
+            for r in connected_components_star(exact_pairs).collect()
         }
     # every exact-path drop is found by the pipeline with identical rep
     # (tiny corpus: LSH at 16 perms surfaces all J>=0.5 pairs here)
@@ -957,11 +974,11 @@ def test_pgm_encode_decode_roundtrip():
 
 
 def test_resolve_clusters_driver_vs_distributed(spark):
-    """The two CC regimes (driver union-find below the threshold,
-    iterative min-label propagation above) must agree exactly — a
+    """The two CC regimes (driver union-find at or below the threshold,
+    the distributed star alternation above) must agree exactly — a
     planted graph with a chain (worst diameter), a triangle, and an
     isolated pair."""
-    from mapreducehs_spark.operators.dedup import resolve_duplicate_clusters
+    from mapreducehs_spark.operators.dedup import connected_components_star
 
     edges = [
         # chain 10-11-12-13-14 (diameter 4)
@@ -972,16 +989,15 @@ def test_resolve_clusters_driver_vs_distributed(spark):
         (30, 31),
     ]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    want = {10: 10, 11: 10, 12: 10, 13: 10, 14: 10,
-            20: 20, 21: 20, 22: 20, 30: 30, 31: 30}
+    want = {11: 10, 12: 10, 13: 10, 14: 10, 21: 20, 22: 20, 31: 30}
 
     via_driver = {
-        r["doc_id"]: r["rep_id"]
-        for r in resolve_duplicate_clusters(pairs).collect()
+        r["node"]: r["rep"]
+        for r in connected_components_star(pairs).collect()
     }
     via_loop = {
-        r["doc_id"]: r["rep_id"]
-        for r in resolve_duplicate_clusters(pairs, driver_threshold=0).collect()
+        r["node"]: r["rep"]
+        for r in connected_components_star(pairs, driver_threshold=0).collect()
     }
     assert via_driver == want
     assert via_loop == want
@@ -1661,14 +1677,11 @@ def test_make_sf_replication_fidelity(tmp_path, spark):
 
 
 def test_star_cc_matches_union_find_on_chains(spark):
-    """Large-star/small-star CC must agree with the union-find resolver
-    on the shape that separates the algorithms: a LONG CHAIN (hash-min
+    """Both CC regimes must agree with the pure-Python reference on the
+    shape that separates the algorithms: a LONG CHAIN (hash-min
     propagation needs O(length) rounds there; the star alternation
     O(log^2)).  Mixed with a clique and singleton pairs."""
-    from mapreducehs_spark.operators.dedup import (
-        connected_components_star,
-        resolve_duplicate_clusters,
-    )
+    from mapreducehs_spark.operators.dedup import connected_components_star
 
     pairs = []
     pairs += [(i, i + 1) for i in range(100, 180)]  # 81-node chain
@@ -1682,27 +1695,22 @@ def test_star_cc_matches_union_find_on_chains(spark):
         (r["node"], r["rep"])
         for r in connected_components_star(pdf, driver_threshold=0).collect()
     }
-    uf = {
-        (r["doc_id"], r["rep_id"])
-        for r in resolve_duplicate_clusters(pdf).collect()
-        if r["doc_id"] != r["rep_id"]
-    }
-    assert star == uf
+    uf = {(r["node"], r["rep"]) for r in connected_components_star(pdf).collect()}
+    want = {(n, r) for n, r in _reference_components(pairs).items() if n != r}
+    assert star == want
+    assert uf == want
     # the chain collapsed to one star on 100
     assert {(i, 100) for i in range(101, 181)} <= star
 
 
 def test_star_cc_random_graphs_property(spark):
     """Property run over seeded pseudo-random graphs (varied density,
-    incl. disconnected + isolated regimes): the star alternation's
-    fixpoint must equal the union-find resolver's components on every
-    instance — the QuickCheck discipline applied to the CC pair."""
+    incl. disconnected + isolated regimes): both CC regimes' fixpoint
+    must equal the pure-Python reference's components on every
+    instance — the QuickCheck discipline applied to the CC kernel."""
     import random
 
-    from mapreducehs_spark.operators.dedup import (
-        connected_components_star,
-        resolve_duplicate_clusters,
-    )
+    from mapreducehs_spark.operators.dedup import connected_components_star
 
     for seed, n_nodes, n_edges in [(1, 40, 20), (2, 60, 90), (3, 30, 150), (4, 80, 40)]:
         rnd = random.Random(seed)
@@ -1718,12 +1726,10 @@ def test_star_cc_random_graphs_property(spark):
             (r["node"], r["rep"])
             for r in connected_components_star(pdf, driver_threshold=0).collect()
         }
-        uf = {
-            (r["doc_id"], r["rep_id"])
-            for r in resolve_duplicate_clusters(pdf).collect()
-            if r["doc_id"] != r["rep_id"]
-        }
-        assert star == uf, f"divergence at seed={seed}"
+        uf = {(r["node"], r["rep"]) for r in connected_components_star(pdf).collect()}
+        want = {(n, r) for n, r in _reference_components(pairs).items() if n != r}
+        assert star == want, f"distributed divergence at seed={seed}"
+        assert uf == want, f"driver divergence at seed={seed}"
 
 
 def test_raw_edge_arms_close_to_canonical_classes(spark):
@@ -1764,26 +1770,31 @@ def test_raw_edge_arms_close_to_canonical_classes(spark):
 
 
 def test_star_cc_regimes_agree(spark):
-    """connected_components_star's round-12 small-graph regime (driver
-    union-find at or below driver_threshold edges) must emit exactly the
-    distributed star alternation's fixpoint — same (node, rep) set, same
-    schema — on chains, cliques, duplicate/reversed edges and self-loop
-    inputs (the shapes where a naive union-find diverges from the star
-    contract)."""
+    """connected_components_star's two regimes (driver union-find at or
+    below driver_threshold edges, the distributed star alternation
+    above) must both emit exactly the expected (node, rep) set with the
+    same schema — on chains (worst diameter), cliques, triangles,
+    duplicate/reversed edges, self-loops (the shapes where a naive
+    union-find diverges from the star contract) and an empty edge
+    list."""
     from mapreducehs_spark.operators.dedup import connected_components_star
 
-    pairs = []
-    pairs += [(i, i + 1) for i in range(100, 140)]  # chain
-    pairs += [(a, b) for a in range(10, 14) for b in range(a + 1, 14)]  # clique
-    pairs += [(2000, 1000), (1000, 2000), (5, 5), (3000, 4000)]  # rev/dup/self
-    pdf = spark.createDataFrame(pairs, "id_a long, id_b long")
-
-    small = connected_components_star(pdf)  # default threshold → union-find
-    dist = connected_components_star(pdf, driver_threshold=0)  # star loop
-    assert small.schema == dist.schema
-    assert {(r["node"], r["rep"]) for r in small.collect()} == {
-        (r["node"], r["rep"]) for r in dist.collect()
-    }
+    mixed = []
+    mixed += [(i, i + 1) for i in range(100, 140)]  # chain
+    mixed += [(a, b) for a in range(10, 14) for b in range(a + 1, 14)]  # clique
+    mixed += [(2000, 1000), (1000, 2000), (5, 5), (3000, 4000)]  # rev/dup/self
+    cases = [
+        (mixed, {(n, r) for n, r in _reference_components(mixed).items() if n != r}),
+        ([], set()),
+    ]
+    for edges, want in cases:
+        pdf = spark.createDataFrame(edges, "id_a long, id_b long")
+        small = connected_components_star(pdf)  # default threshold → union-find
+        dist = connected_components_star(pdf, driver_threshold=0)  # star loop
+        assert small.schema == dist.schema
+        assert small.schema.simpleString() == "struct<node:bigint,rep:bigint>"
+        assert {(r["node"], r["rep"]) for r in small.collect()} == want
+        assert {(r["node"], r["rep"]) for r in dist.collect()} == want
 
 
 # ---------------------------------------------------------------------------
@@ -1818,24 +1829,16 @@ def test_hash64_canonical_dedup_vs_bruteforce(spark):
 
     # brute force in python
     ids = {i: (lo, hi) for i, lo, hi in rows}
-    parent = {i: i for i in ids}
-
-    def find(x):
-        while parent[x] != x:
-            x = parent[x]
-        return x
-
-    for a, b in itertools.combinations(ids, 2):
-        ham = bin((ids[a][0] ^ ids[b][0]) & (2**64 - 1)).count("1") + bin(
-            (ids[a][1] ^ ids[b][1]) & (2**64 - 1)
-        ).count("1")
-        if ham <= 3:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
+    edges = [
+        (a, b)
+        for a, b in itertools.combinations(ids, 2)
+        if bin((ids[a][0] ^ ids[b][0]) & (2**64 - 1)).count("1")
+        + bin((ids[a][1] ^ ids[b][1]) & (2**64 - 1)).count("1")
+        <= 3
+    ]
     comps: dict[int, list[int]] = {}
-    for i in ids:
-        comps.setdefault(find(i), []).append(i)
+    for i, r in _reference_components(edges).items():
+        comps.setdefault(r, []).append(i)
     want = {
         (m, min(members), len(members))
         for members in comps.values()
@@ -2082,22 +2085,14 @@ def test_hash128_canonical_dedup_vs_bruteforce(spark):
     }
 
     ids = {r[0]: r[1:] for r in rows}
-    parent = {i: i for i in ids}
-
-    def find(x):
-        while parent[x] != x:
-            x = parent[x]
-        return x
-
-    for a, b in itertools.combinations(ids, 2):
-        ham = sum(bin(wa ^ wb).count("1") for wa, wb in zip(ids[a], ids[b]))
-        if ham <= 3:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
+    edges = [
+        (a, b)
+        for a, b in itertools.combinations(ids, 2)
+        if sum(bin(wa ^ wb).count("1") for wa, wb in zip(ids[a], ids[b])) <= 3
+    ]
     comps: dict[int, list[int]] = {}
-    for i in ids:
-        comps.setdefault(find(i), []).append(i)
+    for i, r in _reference_components(edges).items():
+        comps.setdefault(r, []).append(i)
     want = {
         (m, min(ms), len(ms))
         for ms in comps.values()
