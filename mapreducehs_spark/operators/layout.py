@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mapreducehs_spark.sources.catalog import data_files
+
 
 def zorder_value(x_col: Column | str, y_col: Column | str, bits: int = 16) -> Column:
     """Morton (z-order) key: bit-interleave of two non-negative integer
@@ -122,11 +124,7 @@ def compact_dir(
     """
     import os
 
-    total = 0
-    for root, _dirs, files in os.walk(src_path):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                total += os.path.getsize(os.path.join(root, f))
+    total = sum(os.path.getsize(f) for f in data_files(src_path))
     n_files = max(1, round(total / target_file_bytes))
     df = spark.read.format(fmt).load(src_path)
     out = df.repartition(n_files)
@@ -181,9 +179,5 @@ def execute_compaction_plan(
         if not entry.startswith("bin="):
             continue
         b = int(entry.split("=", 1)[1])
-        realized[b] = sum(
-            1
-            for f in os.listdir(os.path.join(out_dir, entry))
-            if not f.startswith(("_", "."))
-        )
+        realized[b] = len(data_files(os.path.join(out_dir, entry)))
     return realized

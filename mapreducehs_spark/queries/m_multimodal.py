@@ -196,17 +196,15 @@ def m05_pointer_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-time driver loop (it IS the external media store); everything
     after is distributed."""
     import os
-    import tempfile
 
     from mapreducehs_spark.operators.multimodal import read_binary_dir
-    from mapreducehs_spark.sources.catalog import build_fixture_once, source_fingerprint
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    fp = source_fingerprint(sf_dir, "documents")
+    from mapreducehs_spark.sources.catalog import (
+        FIXTURE_ROOT,
+        derived_fixture,
+        guard_driver_fixture,
+    )
 
     def _write_media(tmp: str) -> None:
-        from mapreducehs_spark.sources.catalog import guard_driver_fixture
-
         os.makedirs(tmp, exist_ok=True)
         docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
         guard_driver_fixture(docs, f"m05 media fixture ({sf_dir})")
@@ -214,9 +212,8 @@ def m05_pointer_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             with open(os.path.join(tmp, f"doc_{r['doc_id']}.bin"), "wb") as f:
                 f.write(r["text"].encode("utf-8"))
 
-    base = build_fixture_once(
-        os.path.join(tempfile.gettempdir(), f"mapreducehs_media_{tag}_{fp}"),
-        _write_media,
+    base = derived_fixture(
+        os.path.join(FIXTURE_ROOT, "mapreducehs_media"), sf_dir, ("documents",), _write_media
     )
     bins = read_binary_dir(spark, os.path.join(base, "*.bin"))
     return bins.select(

@@ -1056,27 +1056,34 @@ def q78_multiformat_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     then both join the parquet customer table.  Witnesses the
     csv/json readers inside the ORACLE-CHECKED inventory, not just unit
     tests; at 100 TB this is the common shape of sidecar dims living in
-    exported flat files.  The dims are rewritten per run into /tmp —
-    trivial (25 + 5 rows); the fact side stays parquet with full
-    pushdown."""
+    exported flat files.  The dims are written once per source
+    fingerprint as a derived fixture — trivial (25 + 5 rows); the fact
+    side stays parquet with full pushdown."""
     import os
-    import tempfile
 
-    from mapreducehs_spark.sources.catalog import read_any, write_any
+    from mapreducehs_spark.sources.catalog import (
+        FIXTURE_ROOT,
+        derived_fixture,
+        read_any,
+        write_any,
+    )
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(tempfile.gettempdir(), f"mapreducehs_fmt_{tag}")
-    nation_csv = os.path.join(base, "nation_csv")
-    region_json = os.path.join(base, "region_json")
-    nat, reg = _t(spark, sf_dir, "nation"), _t(spark, sf_dir, "region")
-    write_any(nat, nation_csv, fmt="csv", header="true")
-    write_any(reg, region_json, fmt="json")
+    def build(tmp: str) -> None:
+        write_any(_t(spark, sf_dir, "nation"), os.path.join(tmp, "nation_csv"),
+                  fmt="csv", header="true")
+        write_any(_t(spark, sf_dir, "region"), os.path.join(tmp, "region_json"), fmt="json")
 
+    base = derived_fixture(
+        os.path.join(FIXTURE_ROOT, "mapreducehs_fmt"), sf_dir, ("nation", "region"), build
+    )
     nat2 = read_any(
-        spark, nation_csv, fmt="csv",
+        spark, os.path.join(base, "nation_csv"), fmt="csv",
         schema="n_nationkey int, n_name string, n_regionkey int", header="true",
     )
-    reg2 = read_any(spark, region_json, fmt="json", schema="r_regionkey int, r_name string")
+    reg2 = read_any(
+        spark, os.path.join(base, "region_json"), fmt="json",
+        schema="r_regionkey int, r_name string",
+    )
     cust = _t(spark, sf_dir, "customer")
     return (
         cust.join(F.broadcast(nat2), nat2["n_nationkey"] == cust["c_nationkey"])
@@ -1171,6 +1178,24 @@ def q80_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_Q80_SQL)
 
 
+def _events_by_date(spark: SparkSession, sf_dir: str) -> str:
+    """The date-partitioned events layout q82 and q106 read: events
+    written once per source fingerprint, hive-partitioned by
+    ``event_date``.  Returns the fixture directory."""
+    import os
+
+    from mapreducehs_spark.sources.catalog import FIXTURE_ROOT, derived_fixture
+
+    return derived_fixture(
+        os.path.join(FIXTURE_ROOT, "mapreducehs_events_bydate"), sf_dir, ("events",),
+        lambda tmp: _t(spark, sf_dir, "events")
+        .withColumn("event_date", F.col("ts").cast("date"))
+        .write.mode("overwrite")
+        .partitionBy("event_date")
+        .parquet(tmp),
+    )
+
+
 @query(
     "q82_partitioned_pruned_scan",
     oracle="""
@@ -1189,25 +1214,11 @@ def q82_partitioned_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     event date (the 100 TB fact layout — a daily ingest appends one
     directory), and the one-day query touches exactly one partition
     directory (PartitionFilters, zero data read elsewhere).  The
-    fixture write is idempotent (_DONE marker); the day is
-    data-relative (min date + 5) so the query is deterministic across
-    scale factors."""
-    import os
-    import tempfile
-
-    from mapreducehs_spark.sources.catalog import build_fixture_once, source_fingerprint
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    fp = source_fingerprint(sf_dir, "events")
+    fixture is built once per source fingerprint (``_events_by_date``);
+    the day is data-relative (min date + 5) so the query is
+    deterministic across scale factors."""
     ev = _t(spark, sf_dir, "events")
-    base = build_fixture_once(
-        os.path.join(tempfile.gettempdir(), f"mapreducehs_events_bydate_{tag}_{fp}"),
-        lambda tmp: ev.withColumn("event_date", F.col("ts").cast("date"))
-        .write.mode("overwrite")
-        .partitionBy("event_date")
-        .parquet(tmp),
-    )
-
+    base = _events_by_date(spark, sf_dir)
     d0 = ev.agg(F.min(F.col("ts").cast("date"))).collect()[0][0]
     target = d0 + __import__("datetime").timedelta(days=5)
     part = spark.read.parquet(base).filter(F.col("event_date") == F.lit(target))
@@ -1593,20 +1604,22 @@ def q93_xml_source_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark 4's built-in XML reader (explicit schema, no inference scan)
     and joins the parquet nation dim — the sidecar-export shape q78
     covers for csv/json, extended to the remaining built-in text
-    format.  Rewritten per run into /tmp (dim-sized, trivial); the
-    oracle reads the original parquet, so the XML writer+reader
-    round-trip itself is what's value-checked."""
+    format.  Written once per source fingerprint as a derived fixture
+    (dim-sized, trivial); the oracle reads the original parquet, so the
+    XML writer+reader round-trip itself is what's value-checked."""
     import os
-    import tempfile
 
-    from mapreducehs_spark.sources.catalog import read_any
+    from mapreducehs_spark.sources.catalog import FIXTURE_ROOT, derived_fixture, read_any
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(tempfile.gettempdir(), f"mapreducehs_xml_{tag}")
-    sup = _t(spark, sf_dir, "supplier")
-    sup.write.format("xml").option("rootTag", "suppliers").option("rowTag", "supplier").mode(
-        "overwrite"
-    ).save(base)
+    base = derived_fixture(
+        os.path.join(FIXTURE_ROOT, "mapreducehs_xml"), sf_dir, ("supplier",),
+        lambda tmp: _t(spark, sf_dir, "supplier")
+        .write.format("xml")
+        .option("rootTag", "suppliers")
+        .option("rowTag", "supplier")
+        .mode("overwrite")
+        .save(tmp),
+    )
     sup2 = read_any(
         spark,
         base,
@@ -2496,25 +2509,9 @@ def q106_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     partition directories at RUNTIME, the mechanism star-schema date
     filters rely on (plan-pinned in tests/test_plans.py).  The dim
     broadcasts; the fact never shuffles before the aggregate."""
-    import os
-    import tempfile
-
-    from mapreducehs_spark.sources.catalog import build_fixture_once, source_fingerprint
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    fp = source_fingerprint(sf_dir, "events")
-    ev = _t(spark, sf_dir, "events")
-    base = build_fixture_once(
-        os.path.join(tempfile.gettempdir(), f"mapreducehs_events_bydate_{tag}_{fp}"),
-        lambda tmp: ev.withColumn("event_date", F.col("ts").cast("date"))
-        .write.mode("overwrite")
-        .partitionBy("event_date")
-        .parquet(tmp),
-    )
-
-    fact = spark.read.parquet(base)
+    fact = spark.read.parquet(_events_by_date(spark, sf_dir))
     dim = (
-        ev.select(F.col("ts").cast("date").alias("event_date"))
+        _t(spark, sf_dir, "events").select(F.col("ts").cast("date").alias("event_date"))
         .distinct()
         .filter(F.dayofmonth("event_date") % 3 == 0)
     )
@@ -2805,16 +2802,12 @@ def q110_nested_struct_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle replays from the FLAT events table (same rows by
     construction), so the nested round trip itself is value-checked."""
     import os
-    import tempfile
 
-    from mapreducehs_spark.sources.catalog import build_fixture_once, source_fingerprint
+    from mapreducehs_spark.sources.catalog import FIXTURE_ROOT, derived_fixture
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    fp = source_fingerprint(sf_dir, "events")
-    ev = _t(spark, sf_dir, "events")
-    base = build_fixture_once(
-        os.path.join(tempfile.gettempdir(), f"mapreducehs_events_nested_{tag}_{fp}"),
-        lambda tmp: ev.select(
+    base = derived_fixture(
+        os.path.join(FIXTURE_ROOT, "mapreducehs_events_nested"), sf_dir, ("events",),
+        lambda tmp: _t(spark, sf_dir, "events").select(
             "event_id",
             F.struct(
                 F.col("event_type").alias("kind"),
@@ -3480,12 +3473,9 @@ def q119_csv_ingest_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the parquet table — so the whole CSV round trip, the
     PERMISSIVE split, and the aggregate are value-checked."""
     import os
-    import tempfile
 
-    from mapreducehs_spark.sources.catalog import build_fixture_once, source_fingerprint
+    from mapreducehs_spark.sources.catalog import FIXTURE_ROOT, derived_fixture
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    fp = source_fingerprint(sf_dir, "customer")
     cust = _t(spark, sf_dir, "customer")
 
     def build(tmp: str) -> None:
@@ -3501,9 +3491,8 @@ def q119_csv_ingest_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         cust.select(line.alias("value")).write.mode("overwrite").text(tmp)
 
-    base = build_fixture_once(
-        os.path.join(tempfile.gettempdir(), f"mapreducehs_csv_dlq_{tag}_{fp}"),
-        build,
+    base = derived_fixture(
+        os.path.join(FIXTURE_ROOT, "mapreducehs_csv_dlq"), sf_dir, ("customer",), build
     )
     parsed = (
         spark.read.schema(
@@ -4141,17 +4130,11 @@ def _q126_fixture(spark: SparkSession, sf_dir: str):
     read schema (ids 1..4) that resolves BOTH generations per file
     footer."""
     import os
-    import tempfile
 
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-    from mapreducehs_spark.sources.catalog import (
-        build_fixture_once,
-        source_fingerprint,
-    )
+    from mapreducehs_spark.sources.catalog import FIXTURE_ROOT, derived_fixture
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    fp = source_fingerprint(sf_dir, "orders")
     orders = _t(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100, 0)
 
@@ -4188,9 +4171,8 @@ def _q126_fixture(spark: SparkSession, sf_dir: str):
             .parquet(os.path.join(tmp, "gen2"))
         )
 
-    base = build_fixture_once(
-        os.path.join(tempfile.gettempdir(), f"mapreducehs_schevo_{tag}_{fp}"),
-        build,
+    base = derived_fixture(
+        os.path.join(FIXTURE_ROOT, "mapreducehs_schevo"), sf_dir, ("orders",), build
     )
     md = lambda i: {"parquet.field.id": i}  # noqa: E731
     canonical = StructType(
@@ -4331,17 +4313,10 @@ def _q127_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     column), gen2 hive-partitioned by month (month is a DIRECTORY) —
     read under one predicate; the caller materializes."""
     import os
-    import tempfile
 
-    from mapreducehs_spark.sources.catalog import (
-        build_fixture_once,
-        source_fingerprint,
-    )
+    from mapreducehs_spark.sources.catalog import FIXTURE_ROOT, derived_fixture
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    fp = source_fingerprint(sf_dir, "orders")
-    orders = _t(spark, sf_dir, "orders")
-    src = orders.select(
+    src = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_orderstatus").alias("status"),
         F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
@@ -4368,9 +4343,8 @@ def _q127_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(os.path.join(tmp, "gen2"))
         )
 
-    base = build_fixture_once(
-        os.path.join(tempfile.gettempdir(), f"mapreducehs_pspec_{tag}_{fp}"),
-        build,
+    base = derived_fixture(
+        os.path.join(FIXTURE_ROOT, "mapreducehs_pspec"), sf_dir, ("orders",), build
     )
     in_range = (F.col("month") >= "1995-01") & (F.col("month") <= "1995-03")
     frames = [

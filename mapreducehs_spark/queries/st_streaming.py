@@ -18,7 +18,7 @@ from mapreducehs_spark.operators import sampling as _sampling
 from mapreducehs_spark.operators.iteration import materialize
 from mapreducehs_spark.operators.joins import asof_join
 from mapreducehs_spark.pipeline import word_count_pipeline
-from mapreducehs_spark.sources.catalog import load_table
+from mapreducehs_spark.sources.catalog import FIXTURE_ROOT, load_table, table_files
 
 from mapreducehs_spark.queries._registry import ORACLE, QUERIES, query  # noqa: F401
 from mapreducehs_spark.queries._shared import (  # noqa: F401
@@ -59,21 +59,11 @@ def _state_bound(sf_dir: str, table: str = "events") -> int:
     Data-derived (scales with the SF dir / the production horizon),
     never a core count; feeds ``streaming.ops.state_partitions_for``
     (~64 MB of state per store partition, floor 8).  A directory-style
-    table counts its part files (hidden ``.``/``_`` files excluded, as
-    Spark's reader does), not the directory inode."""
+    table counts its data files (``catalog.table_files``), not the
+    directory inode."""
     import os
 
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    if os.path.isfile(path):
-        return 4 * os.path.getsize(path)
-    if not os.path.isdir(path):
-        raise FileNotFoundError(f"state bound: no table at {path}")
-    return 4 * sum(
-        os.path.getsize(os.path.join(root, f))
-        for root, _, files in os.walk(path)
-        for f in files
-        if not f.startswith((".", "_"))
-    )
+    return 4 * sum(os.path.getsize(f) for f in table_files(sf_dir, table))
 
 
 def _events_state_bound(sf_dir: str) -> int:
@@ -434,7 +424,6 @@ def st10_stream_upsert_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     Integer-cents sums keep the fold order-exact across engines."""
     import os
     import shutil
-    import tempfile
 
     from mapreducehs_spark import streaming as st
     from mapreducehs_spark.operators.merge import merge_upsert
@@ -449,8 +438,8 @@ def st10_stream_upsert_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     serving = os.path.join(
-        tempfile.gettempdir(),
-        f"mapreducehs_serving_{os.path.basename(os.path.normpath(sf_dir))}",
+        FIXTURE_ROOT,
+        f"mapreducehs_serving_{os.path.basename(os.path.normpath(sf_dir))}_{os.getpid()}",
     )
     shutil.rmtree(serving, ignore_errors=True)
 
@@ -478,11 +467,17 @@ def st10_stream_upsert_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not q.awaitTermination(timeout=600):
         q.stop()
         raise TimeoutError("st10 stream did not finish")
-    return spark.read.parquet(serving).select(
-        "user_id",
-        "n_events",
-        F.round(F.col("cents") / 100.0, 4).alias("sum_value"),
-    )
+    try:
+        with materialize(spark) as m:
+            return m.result(
+                spark.read.parquet(serving).select(
+                    "user_id",
+                    "n_events",
+                    F.round(F.col("cents") / 100.0, 4).alias("sum_value"),
+                )
+            )
+    finally:
+        shutil.rmtree(serving, ignore_errors=True)
 
 
 @query(
@@ -1404,13 +1399,12 @@ def st31_stream_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     Delta/Iceberg MV; only the sink changes."""
     import os
     import shutil
-    import tempfile
 
     from mapreducehs_spark import streaming as st
 
     base_mv, replay = st.prepare_cdc_mv_dir(spark, sf_dir, n_chunks=4)
     serving = os.path.join(
-        tempfile.gettempdir(),
+        FIXTURE_ROOT,
         f"mapreducehs_mv_{os.path.basename(os.path.normpath(sf_dir))}_{os.getpid()}",
     )
     shutil.rmtree(serving, ignore_errors=True)
@@ -1791,13 +1785,12 @@ def st36_stream_compaction_monitor(spark: SparkSession, sf_dir: str) -> DataFram
     (src/Core/Store.hs)."""
     import os
     import shutil
-    import tempfile
 
     from mapreducehs_spark import streaming as st
 
     replay = st.prepare_manifest_dir(spark, sf_dir, n_chunks=4)
     monitor = os.path.join(
-        tempfile.gettempdir(),
+        FIXTURE_ROOT,
         f"mapreducehs_monitor_{os.path.basename(os.path.normpath(sf_dir))}_{os.getpid()}",
     )
     shutil.rmtree(monitor, ignore_errors=True)

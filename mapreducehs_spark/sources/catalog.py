@@ -5,13 +5,19 @@ passed to ``runMapReduce`` (reference ``src/Impl.hs:90,98``).  The new
 engine's sources are Spark's readers; parquet is the default so Catalyst
 gets predicate pushdown + column pruning + partition pruning for free.
 
-At 100 TB each table would be a partitioned/bucketed directory on object
-storage; here each is a single parquet file.  The API is identical.
+A table is either a single parquet file or a directory of part files
+(the 100 TB layout: a partitioned/bucketed directory on object
+storage); Spark reads both the same way, and every filesystem question
+about a table ("which files make it up") goes through ``data_files``,
+so sizing and fixture keys are layout-blind too.  Derived fixtures
+(stream replays, partitioned rewrites, media files) live under one
+root, ``FIXTURE_ROOT``, keyed by ``derived_fixture``.
 """
 
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,24 +42,65 @@ BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+#: Root of every derived fixture directory.  ``TMPDIR`` moves it.
+FIXTURE_ROOT = tempfile.gettempdir()
+
+
+def data_files(path: str) -> list[str]:
+    """The data files at *path*, sorted: the path itself for a single
+    file; for a directory, every file under its tree except hidden
+    ``.``/``_`` files and directories (``_SUCCESS``, ``.crc``
+    checksums, ``_temporary``), which Spark's reader skips too."""
+    if os.path.isfile(path):
+        return [path]
+    if not os.path.isdir(path):
+        raise FileNotFoundError(f"no table at {path}")
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+        out += [os.path.join(root, f) for f in files if not f.startswith((".", "_"))]
+    return sorted(out)
+
+
+def table_files(sf_dir: str, name: str) -> list[str]:
+    """The data files of table *name* under *sf_dir* (``data_files``)."""
+    return data_files(os.path.join(sf_dir, f"{name}.parquet"))
+
+
 def source_fingerprint(sf_dir: str, *tables: str) -> str:
     """Short content token for *tables* under *sf_dir*, for fixture
     cache keys.
 
-    Derived cached fixtures (stream replay dirs, partitioned rewrites,
-    media files) must be rebuilt when the driver regenerates the
-    testdata in place — the sf-dir *name* stays the same, so a
+    Derived cached fixtures must be rebuilt when the testdata is
+    regenerated in place — the sf-dir *name* stays the same, so a
     name-only cache key would silently serve fixtures built from stale
-    data.  size + mtime_ns of each source parquet changes on any
-    regeneration; folding them into the key makes reuse safe.
+    data.  The name, size and mtime_ns of every data file change on any
+    regeneration, including a part file rewritten in place inside a
+    directory table; folding them into the key makes reuse safe.
     """
     import hashlib
 
     h = hashlib.md5()
     for name in tables or TABLES:
-        st = os.stat(os.path.join(sf_dir, f"{name}.parquet"))
-        h.update(f"{name}:{st.st_size}:{st.st_mtime_ns};".encode())
+        for path in table_files(sf_dir, name):
+            st = os.stat(path)
+            rel = os.path.relpath(path, sf_dir)
+            h.update(f"{rel}:{st.st_size}:{st.st_mtime_ns};".encode())
     return h.hexdigest()[:12]
+
+
+def derived_fixture(base_dir: str, sf_dir: str, tables: tuple[str, ...], build, *params) -> str:
+    """Build (once) and return the fixture directory derived from
+    *tables* under *sf_dir*: ``{base_dir}/{sf basename}_{params…}_{fp}``
+    with ``fp = source_fingerprint(sf_dir, *tables)``, so two sf dirs
+    with the same name but different data files never share a fixture.
+    ``build(tmp)`` writes the fixture into *tmp* (``build_fixture_once``,
+    looked up at call time so a tracer that rebinds it sees every build)."""
+    key = "_".join(
+        [os.path.basename(os.path.normpath(sf_dir)), *map(str, params),
+         source_fingerprint(sf_dir, *tables)]
+    )
+    return build_fixture_once(os.path.join(base_dir, key), build)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -52,7 +52,12 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from mapreducehs_spark.sources.catalog import load_table
+from mapreducehs_spark.sources.catalog import (
+    FIXTURE_ROOT,
+    derived_fixture,
+    guard_driver_fixture,
+    load_table,
+)
 
 #: Schema of the replayed events stream (µs timestamps — the ns→µs
 #: conversion happens once in load_table before chunks are written).
@@ -74,85 +79,85 @@ def prepare_stream_dir(
     spark: SparkSession,
     sf_dir: str,
     n_chunks: int = 4,
-    base_dir: str = "/tmp/mapreducehs_stream",
+    base_dir: str = os.path.join(FIXTURE_ROOT, "mapreducehs_stream"),
     n_flush: int = 1,
 ) -> str:
-    """Materialize ``events`` as a time-ordered chunked replay directory.
+    """Materialize ``events`` as a time-ordered chunked replay directory,
+    ``n_flush`` sentinel chunks last.  Built once per (sf_dir contents,
+    n_chunks, n_flush).
 
-    Idempotent per (sf_dir, n_chunks, n_flush): reuses the directory if it is
-    already fully built (a ``_DONE`` marker commits it).
+    n_flush > 1 appends extra sentinel chunks: stream-stream OUTER
+    joins emit watermark-closed NULL rows one batch AFTER eviction, so
+    they need a batch to exist after the watermark advance (st14).
     """
-    from mapreducehs_spark.sources.catalog import source_fingerprint
 
-    from mapreducehs_spark.sources.catalog import build_fixture_once
+    def build(out: str) -> None:
+        pdf = _replay_events(spark, sf_dir)
+        flush = [_flush_sentinel(pdf, j) for j in range(n_flush)]
+        write_replay(out, even_chunks(pdf, n_chunks) + flush)
 
-    key = (
-        f"{os.path.basename(os.path.normpath(sf_dir))}_c{n_chunks}_f{n_flush}_v2"
-        f"_{source_fingerprint(sf_dir, 'events')}"
-    )
-    return build_fixture_once(
-        os.path.join(base_dir, key),
-        lambda tmp: _build_stream_chunks(spark, sf_dir, n_chunks, tmp, n_flush),
-    )
+    return derived_fixture(base_dir, sf_dir, ("events",), build, f"c{n_chunks}", f"f{n_flush}")
 
 
-def _build_stream_chunks(
-    spark: SparkSession, sf_dir: str, n_chunks: int, out: str, n_flush: int = 1
-) -> None:
-    from mapreducehs_spark.sources.catalog import guard_driver_fixture
-
-    os.makedirs(out, exist_ok=True)
+def _replay_events(spark: SparkSession, sf_dir: str) -> pd.DataFrame:
+    """``events`` on the driver in stable ``ts`` order."""
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
-    guard_driver_fixture(ev, f"stream replay chunks ({sf_dir})")
-    pdf = ev.toPandas().sort_values("ts", kind="mergesort", ignore_index=True)
-    n = len(pdf)
-    bounds = [round(i * n / n_chunks) for i in range(n_chunks + 1)]
-    for i in range(n_chunks):
-        chunk = pdf.iloc[bounds[i] : bounds[i + 1]]
+    return _driver_frame(ev, f"stream replay chunks ({sf_dir})", "ts")
+
+
+def _flush_sentinel(pdf: pd.DataFrame, j: int = 0) -> pd.DataFrame:
+    """The j-th flush sentinel row, 365 + j days past the last event.
+    props must be a real string: an all-null column round-trips through
+    arrow as null-type and fails the declared stream schema."""
+    return pd.DataFrame(
+        {
+            "event_id": [-1 - j],
+            "ts": [pdf["ts"].max() + pd.Timedelta(days=365 + j)],
+            "user_id": [-1],
+            "event_type": [FLUSH_TYPE],
+            "value": [0.0],
+            "props": ["{}"],
+        }
+    )
+
+
+def _driver_frame(df: DataFrame, what: str, order) -> pd.DataFrame:
+    """*df* pulled to the driver for a replay fixture — refused above
+    the fixture ceiling (``guard_driver_fixture``) — and stably sorted
+    by *order*, so equal keys keep the scan order."""
+    guard_driver_fixture(df, what)
+    return df.toPandas().sort_values(order, kind="mergesort", ignore_index=True)
+
+
+def even_chunks(pdf: pd.DataFrame, n: int) -> list[pd.DataFrame]:
+    """*pdf* cut into *n* contiguous row ranges, bounds ``round(i*len/n)``."""
+    bounds = [round(i * len(pdf) / n) for i in range(n + 1)]
+    return [pdf.iloc[bounds[i] : bounds[i + 1]] for i in range(n)]
+
+
+def write_replay(out: str, chunks: list[pd.DataFrame]) -> None:
+    """Write *chunks*, in replay order, as ``chunk_NNNN.parquet`` files
+    under *out* for a file-source stream read one file per trigger.
+
+    Empty chunks are skipped.  Timestamps land as µs: the engine
+    session reads TIMESTAMP(NANOS) via the nanosAsLong legacy flag,
+    which would turn a ns chunk back into bigint and break the declared
+    stream schema.  Mtimes are set explicitly, 10 s apart in chunk
+    order: the file source orders and batches files by modification
+    time (ms granularity), and wall-clock write spacing is not reliable.
+    """
+    os.makedirs(out, exist_ok=True)
+    now = time.time()
+    for i, chunk in enumerate(chunks):
         if len(chunk) == 0:
             continue
-        # µs on disk: the engine session reads TIMESTAMP(NANOS) via the
-        # nanosAsLong legacy flag, which would turn a ns chunk back into
-        # bigint and break the declared stream schema.
+        path = os.path.join(out, f"chunk_{i:04d}.parquet")
         chunk.to_parquet(
-            os.path.join(out, f"chunk_{i:04d}.parquet"),
-            index=False,
-            coerce_timestamps="us",
-            allow_truncated_timestamps=True,
+            path, index=False, coerce_timestamps="us", allow_truncated_timestamps=True
         )
-
-    # props must be a real string: an all-null column round-trips
-    # through arrow as null-type and fails the declared stream schema.
-    # n_flush > 1 appends extra sentinel chunks: stream-stream OUTER
-    # joins emit watermark-closed NULL rows one batch AFTER eviction,
-    # so they need a batch to exist after the watermark advance (st14).
-    for j in range(n_flush):
-        flush_ts = pdf["ts"].max() + pd.Timedelta(days=365 + j)
-        sentinel = pd.DataFrame(
-            {
-                "event_id": [-1 - j],
-                "ts": [flush_ts],
-                "user_id": [-1],
-                "event_type": [FLUSH_TYPE],
-                "value": [0.0],
-                "props": ["{}"],
-            }
-        )
-        sentinel.to_parquet(
-            os.path.join(out, f"chunk_{n_chunks + j:04d}.parquet"),
-            index=False,
-            coerce_timestamps="us",
-            allow_truncated_timestamps=True,
-        )
-    # Explicit well-spaced mtimes: the file source orders and batches
-    # files by modification time (ms granularity) — wall-clock write
-    # spacing is not reliable.
-    now = time.time()
-    files = sorted(f for f in os.listdir(out) if f.endswith(".parquet"))
-    for i, f in enumerate(files):
-        os.utime(os.path.join(out, f), (now + i * 10, now + i * 10))
+        os.utime(path, (now + i * 10, now + i * 10))
 
 
 def events_stream(
@@ -479,62 +484,6 @@ def latest_moments(updates: DataFrame) -> DataFrame:
     )
 
 
-def stateful_user_totals_tws(events: DataFrame) -> DataFrame:
-    """Spark 4 successor-API twin of ``stateful_user_totals``:
-    per-user running totals via ``transformWithStateInPandas`` (the
-    ``StatefulProcessor`` + typed ``ValueState`` API that replaces
-    ``applyInPandasWithState``).  Semantics are identical — same output
-    schema, one emitted row per (user, trigger-with-data), last update
-    equals the batch aggregate — so the st03 differential applies
-    verbatim.
-
-    ENV-GATED: the processor runs through a Python-side state server
-    that needs ``google.protobuf``, absent in this container; the test
-    (tests/test_streaming.py::test_transform_with_state_totals) skips
-    until the dependency appears.  applyInPandasWithState (st03)
-    remains the tested path for the same semantics.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class UserTotalsProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", _USER_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            n, total, seq = self._state.get() if self._state.exists() else (0, 0.0, 0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].fillna(0.0).sum())
-            seq += 1
-            self._state.update((n, total, seq))
-            (user_id,) = key
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "n_events": [n],
-                    "total_value": [round(total, 4)],
-                    "update_seq": [seq],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.filter(F.col("event_type") != FLUSH_TYPE)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=UserTotalsProcessor(),
-            outputStructType=_USER_TOTALS_SCHEMA,
-            outputMode="Append",
-            timeMode="None",
-        )
-    )
-
-
 def stream_distinct(events: DataFrame, keys: list[str]) -> DataFrame:
     """Streaming exact dedup: first occurrence per key, state-backed.
 
@@ -703,7 +652,7 @@ def prepare_late_stream_dir(
     late_lo_sec: int = 5400,
     late_hi_sec: int = 1800,
     n_ontime_chunks: int = 3,
-    base_dir: str = "/tmp/mapreducehs_stream",
+    base_dir: str = os.path.join(FIXTURE_ROOT, "mapreducehs_stream"),
 ) -> str:
     """Replay directory with a deterministic LATE slice — the
     watermark-semantics fixture.
@@ -726,83 +675,28 @@ def prepare_late_stream_dir(
     possible), and merges the rest — a deterministic, oracle-checkable
     subset because both watermarks depend only on event time.
     """
-    from mapreducehs_spark.sources.catalog import source_fingerprint
 
-    from mapreducehs_spark.sources.catalog import build_fixture_once
+    def build(out: str) -> None:
+        pdf = _replay_events(spark, sf_dir)
+        t_max = pdf["ts"].max()
+        lo = t_max - pd.Timedelta(seconds=late_lo_sec)
+        hi = t_max - pd.Timedelta(seconds=late_hi_sec)
+        late_mask = (pdf["ts"] >= lo) & (pdf["ts"] < hi)
+        tmax_mask = pdf["ts"] == t_max
+        ontime = pdf[~late_mask & ~tmax_mask]
+        # the t_max rows ride alone so they advance the late-filter
+        # watermark exactly one batch before the late chunk plays
+        tail = pdf[tmax_mask & ~late_mask]
+        write_replay(
+            out,
+            even_chunks(ontime, n_ontime_chunks)
+            + [tail, pdf[late_mask], _flush_sentinel(pdf)],
+        )
 
-    key = (
-        f"{os.path.basename(os.path.normpath(sf_dir))}_late_{late_lo_sec}_{late_hi_sec}"
-        f"_{n_ontime_chunks}_v2_{source_fingerprint(sf_dir, 'events')}"
+    return derived_fixture(
+        base_dir, sf_dir, ("events",), build,
+        "late", late_lo_sec, late_hi_sec, n_ontime_chunks,
     )
-    return build_fixture_once(
-        os.path.join(base_dir, key),
-        lambda tmp: _build_late_stream_chunks(
-            spark, sf_dir, late_lo_sec, late_hi_sec, n_ontime_chunks, tmp
-        ),
-    )
-
-
-def _build_late_stream_chunks(
-    spark: SparkSession,
-    sf_dir: str,
-    late_lo_sec: int,
-    late_hi_sec: int,
-    n_ontime_chunks: int,
-    out: str,
-) -> None:
-    from mapreducehs_spark.sources.catalog import guard_driver_fixture
-
-    os.makedirs(out, exist_ok=True)
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    )
-    guard_driver_fixture(ev, f"late-stream replay chunks ({sf_dir})")
-    pdf = ev.toPandas().sort_values("ts", kind="mergesort", ignore_index=True)
-    t_max = pdf["ts"].max()
-    lo = t_max - pd.Timedelta(seconds=late_lo_sec)
-    hi = t_max - pd.Timedelta(seconds=late_hi_sec)
-    late_mask = (pdf["ts"] >= lo) & (pdf["ts"] < hi)
-    tmax_mask = pdf["ts"] == t_max
-    late = pdf[late_mask]
-    tail = pdf[tmax_mask & ~late_mask]
-    ontime = pdf[~late_mask & ~tmax_mask]
-
-    n = len(ontime)
-    bounds = [round(i * n / n_ontime_chunks) for i in range(n_ontime_chunks + 1)]
-    files = []
-    for i in range(n_ontime_chunks):
-        chunk = ontime.iloc[bounds[i] : bounds[i + 1]]
-        if len(chunk) == 0:
-            continue
-        p = os.path.join(out, f"chunk_{i:04d}.parquet")
-        chunk.to_parquet(p, index=False, coerce_timestamps="us", allow_truncated_timestamps=True)
-        files.append(p)
-    # the t_max rows ride alone so they advance the late-filter
-    # watermark exactly one batch before the late chunk plays
-    p_tail = os.path.join(out, f"chunk_{n_ontime_chunks:04d}_tail.parquet")
-    tail.to_parquet(p_tail, index=False, coerce_timestamps="us", allow_truncated_timestamps=True)
-    files.append(p_tail)
-    p_late = os.path.join(out, f"chunk_{n_ontime_chunks + 1:04d}_late.parquet")
-    late.to_parquet(p_late, index=False, coerce_timestamps="us", allow_truncated_timestamps=True)
-    files.append(p_late)
-
-    sentinel = pd.DataFrame(
-        {
-            "event_id": [-1],
-            "ts": [pdf["ts"].max() + pd.Timedelta(days=365)],
-            "user_id": [-1],
-            "event_type": [FLUSH_TYPE],
-            "value": [0.0],
-            "props": ["{}"],
-        }
-    )
-    p_sent = os.path.join(out, f"chunk_{n_ontime_chunks + 2:04d}_flush.parquet")
-    sentinel.to_parquet(p_sent, index=False, coerce_timestamps="us", allow_truncated_timestamps=True)
-    files.append(p_sent)
-
-    now = time.time()
-    for i, f in enumerate(files):
-        os.utime(f, (now + i * 10, now + i * 10))
 
 
 def chained_window_aggregate(
@@ -1047,48 +941,21 @@ def prepare_docs_stream_dir(
     spark: SparkSession,
     sf_dir: str,
     n_chunks: int = 4,
-    base_dir: str = "/tmp/mapreducehs_docs_stream",
+    base_dir: str = os.path.join(FIXTURE_ROOT, "mapreducehs_docs_stream"),
 ) -> str:
     """Replay dir for the documents table: doc_id-ordered chunks with a
     synthetic arrival timestamp (epoch 2024-01-01 + doc_id seconds), one
     chunk per trigger.  Same idempotent build-once contract as
     ``prepare_stream_dir``.  No flush sentinel: st15 emits pairs on
     ARRIVAL (not on watermark close), so nothing needs flushing."""
-    from mapreducehs_spark.sources.catalog import build_fixture_once, source_fingerprint
 
-    key = (
-        f"{os.path.basename(os.path.normpath(sf_dir))}_c{n_chunks}_v2"
-        f"_{source_fingerprint(sf_dir, 'documents')}"
-    )
-    return build_fixture_once(
-        os.path.join(base_dir, key),
-        lambda tmp: _build_docs_stream_chunks(spark, sf_dir, n_chunks, tmp),
-    )
+    def build(out: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
+        pdf = _driver_frame(docs, f"docs stream replay chunks ({sf_dir})", "doc_id")
+        pdf["ts"] = pd.Timestamp("2024-01-01") + pd.to_timedelta(pdf["doc_id"], unit="s")
+        write_replay(out, even_chunks(pdf[["doc_id", "ts", "source", "text"]], n_chunks))
 
-
-def _build_docs_stream_chunks(
-    spark: SparkSession, sf_dir: str, n_chunks: int, out: str
-) -> None:
-    from mapreducehs_spark.sources.catalog import guard_driver_fixture
-
-    os.makedirs(out, exist_ok=True)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    guard_driver_fixture(docs, f"docs stream replay chunks ({sf_dir})")
-    pdf = docs.toPandas().sort_values("doc_id", ignore_index=True)
-    pdf["ts"] = pd.Timestamp("2024-01-01") + pd.to_timedelta(pdf["doc_id"], unit="s")
-    pdf = pdf[["doc_id", "ts", "source", "text"]]
-    n = len(pdf)
-    now = time.time()
-    bounds = [round(i * n / n_chunks) for i in range(n_chunks + 1)]
-    for i in range(n_chunks):
-        chunk = pdf.iloc[bounds[i] : bounds[i + 1]]
-        if len(chunk) == 0:
-            continue
-        path = os.path.join(out, f"chunk_{i:04d}.parquet")
-        chunk.to_parquet(
-            path, index=False, coerce_timestamps="us", allow_truncated_timestamps=True
-        )
-        os.utime(path, (now + i * 10, now + i * 10))
+    return derived_fixture(base_dir, sf_dir, ("documents",), build, f"c{n_chunks}")
 
 
 def docs_stream(
@@ -2145,29 +2012,18 @@ def prepare_cdc_mv_dir(
     spark: SparkSession,
     sf_dir: str,
     n_chunks: int = 4,
-    base_dir: str = "/tmp/mapreducehs_stream_cdc",
+    base_dir: str = os.path.join(FIXTURE_ROOT, "mapreducehs_stream_cdc"),
 ) -> tuple[str, str]:
     """Materialize st31's inputs: the STORED base rollup (the MV as it
     stood before the CDC arrived) and a chunked replay of q122's signed
     CDC deltas (delete ⇒ one retraction row; update ⇒ retraction from
     the old month + insertion into the shifted month, +10.00 cents law
     — queries/q_ext._Q122 law, integer cents).  Returns
-    (base_mv_parquet, replay_dir).  Idempotent per sf_dir fingerprint
-    (build_fixture_once); chunk mtimes are spaced so the file source
+    (base_mv_parquet, replay_dir).  Built once per sf_dir fingerprint
+    (derived_fixture); chunk mtimes are spaced so the file source
     replays them in order, one per trigger."""
-    from mapreducehs_spark.sources.catalog import (
-        build_fixture_once,
-        guard_driver_fixture,
-        source_fingerprint,
-    )
-
-    key = (
-        f"{os.path.basename(os.path.normpath(sf_dir))}_c{n_chunks}"
-        f"_{source_fingerprint(sf_dir, 'orders')}"
-    )
 
     def build(tmp: str) -> None:
-        os.makedirs(tmp, exist_ok=True)
         orders = load_table(spark, sf_dir, "orders")
         key_c = F.col("o_orderkey")
         cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
@@ -2202,26 +2058,10 @@ def prepare_cdc_mv_dir(
             (cents + 1000).alias("dcents"),
         )
         cdc = d_rows.unionByName(u_retract).unionByName(u_insert)
-        guard_driver_fixture(cdc, f"cdc mv replay chunks ({sf_dir})")
-        pdf = (
-            cdc.toPandas()
-            .sort_values(["k", "dn"], kind="mergesort", ignore_index=True)
-            .drop(columns=["k"])
-        )
-        replay = os.path.join(tmp, "replay")
-        os.makedirs(replay, exist_ok=True)
-        n = len(pdf)
-        bounds = [round(i * n / n_chunks) for i in range(n_chunks + 1)]
-        now = time.time()
-        for i in range(n_chunks):
-            chunk = pdf.iloc[bounds[i] : bounds[i + 1]]
-            if len(chunk) == 0:
-                continue
-            p = os.path.join(replay, f"chunk_{i:04d}.parquet")
-            chunk.to_parquet(p, index=False)
-            os.utime(p, (now + i * 10, now + i * 10))
+        pdf = _driver_frame(cdc, f"cdc mv replay chunks ({sf_dir})", ["k", "dn"])
+        write_replay(os.path.join(tmp, "replay"), even_chunks(pdf.drop(columns=["k"]), n_chunks))
 
-    base = build_fixture_once(os.path.join(base_dir, key), build)
+    base = derived_fixture(base_dir, sf_dir, ("orders",), build, f"c{n_chunks}")
     return os.path.join(base, "base_mv"), os.path.join(base, "replay")
 
 
@@ -2241,46 +2081,23 @@ def prepare_manifest_dir(
     spark: SparkSession,
     sf_dir: str,
     n_chunks: int = 4,
-    base_dir: str = "/tmp/mapreducehs_stream_manifest",
+    base_dir: str = os.path.join(FIXTURE_ROOT, "mapreducehs_stream_manifest"),
 ) -> str:
     """Materialize q105's file manifest (the `_q105_files` seam) as a
     chunked replay directory for st36's small-file monitor: manifest
     rows in file_id order, split into ``n_chunks`` files with spaced
     mtimes so the file source replays them one per trigger — a live
     commit log of file-level table metadata, which is exactly what a
-    lakehouse auto-compaction monitor tails.  Idempotent per sf_dir
-    fingerprint (build_fixture_once)."""
+    lakehouse auto-compaction monitor tails.  Built once per sf_dir
+    fingerprint (derived_fixture)."""
     from mapreducehs_spark.queries.q_ext import _q105_files
-    from mapreducehs_spark.sources.catalog import (
-        build_fixture_once,
-        guard_driver_fixture,
-        source_fingerprint,
-    )
-
-    key = (
-        f"{os.path.basename(os.path.normpath(sf_dir))}_c{n_chunks}"
-        f"_{source_fingerprint(sf_dir, 'orders')}"
-    )
 
     def build(tmp: str) -> None:
-        os.makedirs(tmp, exist_ok=True)
         manifest = _q105_files(load_table(spark, sf_dir, "orders"))
-        guard_driver_fixture(manifest, f"manifest replay chunks ({sf_dir})")
-        pdf = manifest.toPandas().sort_values(
-            "file_id", kind="mergesort", ignore_index=True
-        )
-        n = len(pdf)
-        bounds = [round(i * n / n_chunks) for i in range(n_chunks + 1)]
-        now = time.time()
-        for i in range(n_chunks):
-            chunk = pdf.iloc[bounds[i] : bounds[i + 1]]
-            if len(chunk) == 0:
-                continue
-            p = os.path.join(tmp, f"chunk_{i:04d}.parquet")
-            chunk.to_parquet(p, index=False)
-            os.utime(p, (now + i * 10, now + i * 10))
+        pdf = _driver_frame(manifest, f"manifest replay chunks ({sf_dir})", "file_id")
+        write_replay(tmp, even_chunks(pdf, n_chunks))
 
-    return build_fixture_once(os.path.join(base_dir, key), build)
+    return derived_fixture(base_dir, sf_dir, ("orders",), build, f"c{n_chunks}")
 
 
 def manifest_monitor_fold(
@@ -2383,7 +2200,7 @@ CDC_LOG_SCHEMA = StructType(
 def prepare_cdc_log_dir(
     spark: SparkSession,
     sf_dir: str,
-    base_dir: str = "/tmp/mapreducehs_stream_cdclog",
+    base_dir: str = os.path.join(FIXTURE_ROOT, "mapreducehs_stream_cdclog"),
 ) -> str:
     """Materialize q117's change log (the `_q117_log` seam) as a
     seq-chunked replay directory: chunk i carries exactly the commit-
@@ -2391,31 +2208,13 @@ def prepare_cdc_log_dir(
     delivers every key's versions in order — the property st32's
     stateful classification needs.  Idempotent per sf_dir fingerprint."""
     from mapreducehs_spark.queries.q_ext import _q117_log
-    from mapreducehs_spark.sources.catalog import (
-        build_fixture_once,
-        guard_driver_fixture,
-        source_fingerprint,
-    )
-
-    key = (
-        f"{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{source_fingerprint(sf_dir, 'orders')}"
-    )
 
     def build(tmp: str) -> None:
-        os.makedirs(tmp, exist_ok=True)
         log = _q117_log(load_table(spark, sf_dir, "orders"))
-        guard_driver_fixture(log, f"cdc log replay chunks ({sf_dir})")
-        pdf = log.toPandas().sort_values(["seq", "k"], kind="mergesort",
-                                         ignore_index=True)
-        now = time.time()
-        for i, s in enumerate(sorted(pdf["seq"].unique())):
-            chunk = pdf[pdf["seq"] == s]
-            p = os.path.join(tmp, f"chunk_{i:04d}.parquet")
-            chunk.to_parquet(p, index=False)
-            os.utime(p, (now + i * 10, now + i * 10))
+        pdf = _driver_frame(log, f"cdc log replay chunks ({sf_dir})", ["seq", "k"])
+        write_replay(tmp, [pdf[pdf["seq"] == s] for s in sorted(pdf["seq"].unique())])
 
-    return build_fixture_once(os.path.join(base_dir, key), build)
+    return derived_fixture(base_dir, sf_dir, ("orders",), build)
 
 
 _CDC_IMAGES_SCHEMA = StructType(
@@ -2535,25 +2334,14 @@ def prepare_emb_stream_dir(
     spark: SparkSession,
     sf_dir: str,
     n_chunks: int = 4,
-    base_dir: str = "/tmp/mapreducehs_stream_emb",
+    base_dir: str = os.path.join(FIXTURE_ROOT, "mapreducehs_stream_emb"),
 ) -> str:
     """Materialize st33's embedding re-ingest replay: s23's batch law
     (every third corpus vector re-arrives re-embedded — its reversed
     float array, id offset by 1e6) chunked into ``n_chunks`` files for
     one-batch-per-trigger replay.  Idempotent per sf_dir fingerprint."""
-    from mapreducehs_spark.sources.catalog import (
-        build_fixture_once,
-        guard_driver_fixture,
-        source_fingerprint,
-    )
-
-    key = (
-        f"{os.path.basename(os.path.normpath(sf_dir))}_c{n_chunks}"
-        f"_{source_fingerprint(sf_dir, 'embeddings')}"
-    )
 
     def build(tmp: str) -> None:
-        os.makedirs(tmp, exist_ok=True)
         emb = load_table(spark, sf_dir, "embeddings")
         batch = emb.filter(
             (F.col("vec_id") >= 8) & (F.col("vec_id") % 3 == 0)
@@ -2561,17 +2349,7 @@ def prepare_emb_stream_dir(
             (F.col("vec_id") + 1000000).alias("vec_id"),
             F.reverse("embedding").alias("embedding"),
         )
-        guard_driver_fixture(batch, f"embedding re-ingest chunks ({sf_dir})")
-        pdf = batch.toPandas().sort_values("vec_id", ignore_index=True)
-        n = len(pdf)
-        bounds = [round(i * n / n_chunks) for i in range(n_chunks + 1)]
-        now = time.time()
-        for i in range(n_chunks):
-            chunk = pdf.iloc[bounds[i] : bounds[i + 1]]
-            if len(chunk) == 0:
-                continue
-            p = os.path.join(tmp, f"chunk_{i:04d}.parquet")
-            chunk.to_parquet(p, index=False)
-            os.utime(p, (now + i * 10, now + i * 10))
+        pdf = _driver_frame(batch, f"embedding re-ingest chunks ({sf_dir})", "vec_id")
+        write_replay(tmp, even_chunks(pdf, n_chunks))
 
-    return build_fixture_once(os.path.join(base_dir, key), build)
+    return derived_fixture(base_dir, sf_dir, ("embeddings",), build, f"c{n_chunks}")

@@ -13,17 +13,22 @@ import math
 import duckdb
 import pandas as pd
 
-from mapreducehs_spark.sources.catalog import TABLES
+from mapreducehs_spark.sources.catalog import TABLES, table_files
 
 FLOAT_DECIMALS = 4
+
+
+def duckdb_view_sql(sf_dir: str, name: str) -> str:
+    """The view of table *name* over its data files, on either layout
+    (one parquet file or a directory of parts)."""
+    files = ", ".join(f"'{f}'" for f in table_files(sf_dir, name))
+    return f"CREATE VIEW {name} AS SELECT * FROM read_parquet([{files}])"
 
 
 def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+        con.execute(duckdb_view_sql(sf_dir, t))
     return con
 
 

@@ -1011,15 +1011,51 @@ def test_source_fingerprint_changes_on_regeneration(tmp_path):
     import time
 
     from mapreducehs_spark.sources.catalog import source_fingerprint
+    from tests.conftest import SF_DIR
 
     d = str(tmp_path)
-    shutil.copy("/root/testdata/sf0.001/region.parquet", f"{d}/region.parquet")
+    shutil.copy(os.path.join(SF_DIR, "region.parquet"), f"{d}/region.parquet")
     fp1 = source_fingerprint(d, "region")
     assert fp1 == source_fingerprint(d, "region")  # stable while unchanged
 
     time.sleep(0.01)
     os.utime(f"{d}/region.parquet")  # regeneration bumps mtime
     assert source_fingerprint(d, "region") != fp1
+
+    # a directory table whose part is rewritten in place: the file list
+    # and the directory's own stat stay the same, only the part changes
+    table = tmp_path / "nation.parquet"
+    table.mkdir()
+    for i in range(3):
+        shutil.copy(os.path.join(SF_DIR, "nation.parquet"), table / f"part-{i:05d}.parquet")
+    fp2 = source_fingerprint(d, "nation")
+    assert fp2 == source_fingerprint(d, "nation")
+    time.sleep(0.01)
+    shutil.copy(os.path.join(SF_DIR, "region.parquet"), table / "part-00001.parquet")
+    assert source_fingerprint(d, "nation") != fp2
+
+
+def test_derived_fixture_keys_by_content_not_name(parts_sf_dir, tmp_path):
+    """Two sf dirs with the same basename but different data files (one
+    file per table vs a directory of parts) get different fixture paths, so
+    concurrent runs over same-named sf dirs never share a fixture; the
+    same sf dir reuses its fixture without rebuilding."""
+    from mapreducehs_spark.sources.catalog import derived_fixture
+    from tests.conftest import SF_DIR
+
+    assert os.path.basename(parts_sf_dir) == os.path.basename(SF_DIR)
+    built = []
+
+    def build(sf_dir):
+        return lambda tmp: (os.makedirs(tmp), built.append(sf_dir))
+
+    base = str(tmp_path / "fixtures")
+    a = derived_fixture(base, SF_DIR, ("supplier",), build(SF_DIR), "x", 1)
+    b = derived_fixture(base, parts_sf_dir, ("supplier",), build(parts_sf_dir), "x", 1)
+    assert a != b
+    assert os.path.basename(a).startswith(f"{os.path.basename(SF_DIR)}_x_1_")
+    assert derived_fixture(base, SF_DIR, ("supplier",), build(SF_DIR), "x", 1) == a
+    assert built == [SF_DIR, parts_sf_dir]
 
 
 def test_global_positions_invariant_to_input_partitioning(spark):
@@ -1573,6 +1609,41 @@ def test_materialization_only_through_the_scope():
         and isinstance(node.func, ast.Attribute)
         and node.func.attr in banned
         and not (isinstance(node.func.value, ast.Name) and node.func.value.id == "m")
+    ]
+    assert not bad, bad
+
+
+def test_fixture_paths_only_through_the_catalog():
+    """Temp roots, fixture builds and directory walks in the engine all
+    go through sources/catalog.py (``FIXTURE_ROOT``, ``derived_fixture``,
+    ``data_files``), so no site rebuilds a fixture key, a root or a
+    file listing of its own."""
+    import ast
+    import pathlib
+
+    import mapreducehs_spark
+
+    root = pathlib.Path(mapreducehs_spark.__file__).parent
+
+    def offence(node):
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            return "a /tmp literal" if node.value.startswith("/tmp") else None
+        if not isinstance(node, ast.Call):
+            return None
+        f = node.func
+        name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+        if name in ("gettempdir", "build_fixture_once"):
+            return f"{name}("
+        if name == "walk" and isinstance(f, ast.Attribute) and getattr(f.value, "id", None) == "os":
+            return "os.walk("
+        return None
+
+    bad = [
+        f"{path.relative_to(root)}:{node.lineno} {offence(node)}"
+        for path in sorted(root.rglob("*.py"))
+        if path != root / "sources" / "catalog.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if offence(node)
     ]
     assert not bad, bad
 

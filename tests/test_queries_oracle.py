@@ -54,6 +54,21 @@ def test_oracle_parity(spark, con, name):
     assert cache_manager.isEmpty(), f"{name}: CacheManager entries outlive the query"
 
 
+@pytest.mark.parametrize(
+    "name",
+    ["q82_partitioned_pruned_scan", "st02_stream_sessions", "st15_stream_minhash_dedup"],
+)
+def test_oracle_parity_on_directory_tables(spark, parts_sf_dir, name):
+    """The same query and oracle over a copy of SF_DIR whose tables are
+    3-part parquet directories (the production layout): the fixture
+    keys, state sizing and replay builders see directories, not files."""
+    con = duckdb_conn(parts_sf_dir)
+    try:
+        assert_matches_oracle(QUERIES[name](spark, parts_sf_dir), con, ORACLE[name], name)
+    finally:
+        con.close()
+
+
 def test_every_query_has_an_oracle():
     """Round 6 flipped the last rows-only defaults to value-checked
     kernels; this replaces the (then-vestigial, always-skipped)

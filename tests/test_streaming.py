@@ -208,52 +208,6 @@ def test_checkpoint_restart_exactly_once(spark, tmp_path):
     assert got.select("event_id").distinct().count() == 18  # no double-processing
 
 
-def _has_protobuf() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs google.protobuf (absent in this container); "
-    "applyInPandasWithState covers the same semantics (st03)",
-)
-def test_transform_with_state_totals(spark):
-    """Spark 4 successor stateful API (transformWithStateInPandas) must
-    reproduce the applyInPandasWithState result: last update per user ==
-    batch groupBy aggregate.  Skip-marked until the container gains
-    protobuf — the day it does, this exercises the new API with zero
-    code changes."""
-    from mapreducehs_spark.streaming.ops import latest_per_user
-
-    sf_dir = "/root/testdata/sf0.001"
-    replay = st.prepare_stream_dir(spark, sf_dir, n_chunks=4)
-    events = st.events_stream(spark, replay)
-    updates = st.stateful_user_totals_tws(events)
-    log = st.run_to_batch(updates, "tws_sink", output_mode="append")
-    got = {
-        r["user_id"]: (r["n_events"], r["total_value"])
-        for r in latest_per_user(log).collect()
-    }
-
-    from mapreducehs_spark.sources.catalog import load_table
-
-    batch = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(F.coalesce("value", F.lit(0.0))), 4).alias("t"),
-        )
-    )
-    want = {r["user_id"]: (r["n"], r["t"]) for r in batch.collect()}
-    assert got == want
-
-
 def test_mg_sketch_state_is_bounded(spark):
     """The st13 scale claim, pinned with a hard number: the state store
     holds exactly one row per SHARD (= shards × one bounded sketch),
@@ -948,6 +902,7 @@ def test_state_bound_counts_parquet_directory_parts(tmp_path):
     import shutil
 
     from mapreducehs_spark.queries.st_streaming import _state_bound
+    from mapreducehs_spark.sources.catalog import table_files
     from mapreducehs_spark.streaming.ops import state_partitions_for
     from tests.conftest import SF_DIR
 
@@ -956,6 +911,10 @@ def test_state_bound_counts_parquet_directory_parts(tmp_path):
     shutil.copy(os.path.join(SF_DIR, "events.parquet"), table / "part-00000.parquet")
     (table / "_SUCCESS").write_bytes(b"")
     (table / ".part-00000.parquet.crc").write_bytes(b"x" * 64)
+    (table / "_temporary").mkdir()
+    (table / "_temporary" / "part-00001.parquet").write_bytes(b"x" * 64)
+    assert table_files(str(tmp_path), "events") == [str(table / "part-00000.parquet")]
+    assert table_files(SF_DIR, "events") == [os.path.join(SF_DIR, "events.parquet")]
     assert _state_bound(str(tmp_path)) == _state_bound(SF_DIR)
     assert state_partitions_for(_state_bound(str(tmp_path))) == state_partitions_for(
         _state_bound(SF_DIR)

@@ -30,6 +30,8 @@ spark = (
 spark.sparkContext.setLogLevel("ERROR")
 
 import __spark_entry__ as E
+from mapreducehs_spark.sources.catalog import TABLES
+from tests.oracle import duckdb_view_sql
 
 rows = E.entry(spark).count()
 assert rows > 0, "entry() returned 0 rows"
@@ -56,11 +58,9 @@ def fresh_oracle():
         "SET max_temp_directory_size="
         f"'{os.environ.get('DRIVER_SIM_SPILL', '32GiB')}'"
     )
-    for t in ["region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"]:
-        p = os.path.join(SF_DIR, f"{t}.parquet")
-        if os.path.exists(p):
-            c.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    for t in TABLES:
+        if os.path.exists(os.path.join(SF_DIR, f"{t}.parquet")):
+            c.execute(duckdb_view_sql(SF_DIR, t))
     return c
 
 
