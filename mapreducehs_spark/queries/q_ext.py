@@ -2053,47 +2053,52 @@ def q99_linear_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q100_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree-oriented triangle counting — the third graph-analytics
-    member after connected components (d06) and PageRank (q96), on the
-    token co-occurrence graph (top-64 tokens by document frequency;
-    edge iff the pair co-occurs in >= 25%% of documents — a scale-free
-    integer threshold).  The algorithm is the distributed-standard
-    degree orientation (Suri-Vassilvitskii "Counting Triangles and the
-    Curse of the Last Reducer"): orient every edge from its lower-
-    (degree, id) endpoint to the higher, so each triangle is counted
-    exactly once and — the scale point — the join fan-out per node is
-    bounded by its OUT-degree, which orientation caps at O(sqrt(|E|))
-    even for power-law hubs; the wedge self-join then left-semi-probes
-    the oriented edge list.  All co-occurrence counting is equi-join +
-    hash-agg on doc_id; the quadratic explosion per document is bounded
-    by the 64-token vocabulary filter (broadcast).
+    """Triangle counting — the third graph-analytics member after
+    connected components (d06) and PageRank (q96), on the token
+    co-occurrence graph (top-64 tokens by document frequency; edge iff
+    the pair co-occurs in >= 25%% of documents — a scale-free integer
+    threshold).
 
-    Round 13 (guide §3.3 — truncate enormous plans by materializing):
-    the static plan embedded the corpus subtree once per reference
-    (oriented x3, edges x3, deg x2 → 450 parquet scans, 229 exchanges
-    in the formatted plan) and leaned on AQE runtime exchange reuse to
-    dedup them.  `sel` — the (doc_id, tok) frame restricted to the
-    64-token vocabulary, ≤ 64·n_docs short rows — is localCheckpointed
-    (ONE corpus pass; the r4 revert was a persist of the UNFILTERED
-    token frame, a corpus-scale cache write), and `oriented` (≤ 64²/2
-    rows) is persisted so the co self-join runs once, not per wedge
-    reference."""
+    The corpus-scale half stays distributed (``_q100_edges``):
+    tokenisation, document frequency, the broadcast top-64 filter, the
+    ``doc_id`` self-join and the pair count.  The graph it yields is
+    structurally bounded — the query's own 64-token vocabulary caps it
+    at 64·63/2 = 2016 edges at any scale — so the edge list is collected
+    once and triangles per node are counted on the driver from the
+    64x64 adjacency matrix, ``((A @ A) * A).sum(1) // 2`` (common
+    neighbours of each edge's endpoints, every triangle seen twice per
+    vertex): a distributed join chain over so small a graph pays one
+    Spark round per stage for almost no task work.  Top-10 by (n_tri
+    desc, node asc) stays a Spark ``orderBy``."""
+    import numpy as np
+
+    edges = _q100_edges(spark, sf_dir).collect()
+    nodes = sorted({n for e in edges for n in e})
+    idx = {n: i for i, n in enumerate(nodes)}
+    adj = np.zeros((len(nodes), len(nodes)), dtype=np.int64)
+    for u, v in edges:
+        adj[idx[u], idx[v]] = adj[idx[v], idx[u]] = 1
+    n_tri = ((adj @ adj) * adj).sum(1) // 2
+    per_node = [(n, int(t)) for n, t in zip(nodes, n_tri) if t]
     with materialize(spark) as m:
         return m.result(
-            _q100_tri_build(m, sf_dir).orderBy(F.col("n_tri").desc(), F.col("node").asc()).limit(10)
+            spark.createDataFrame(per_node, "node string, n_tri bigint")
+            .orderBy(F.col("n_tri").desc(), F.col("node").asc())
+            .limit(10)
         )
 
 
-def _q100_tri_build(m: Materialization, sf_dir: str) -> DataFrame:
-    """q100's pre-checkpoint build (q107 pin recipe): the per_node frame
-    over the ``sel`` checkpoint and ``oriented`` persist held in ``m``."""
-    docs = _t(m.spark, sf_dir, "documents")
+def _q100_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """q100's distributed half: the thresholded ``(u, v)`` co-occurrence
+    edges, u < v.  The quadratic per-document explosion of the
+    ``doc_id`` self-join is bounded by the broadcast 64-token filter."""
+    docs = _t(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.explode_outer(F.array_distinct(text.tokens("text"))).alias("tok")
     ).filter(F.col("tok").isNotNull())
     dfreq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     top = dfreq.orderBy(F.col("df").desc(), F.col("tok").asc()).limit(64).select("tok")
-    sel = m.checkpoint(toks.join(F.broadcast(top), "tok"))
+    sel = toks.join(F.broadcast(top), "tok")
     x = sel.select("doc_id", F.col("tok").alias("u"))
     y = sel.select("doc_id", F.col("tok").alias("v"))
     co = (
@@ -2102,46 +2107,9 @@ def _q100_tri_build(m: Materialization, sf_dir: str) -> DataFrame:
         .groupBy("u", "v")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    # scalar corpus count as a driver literal (footer-level count scan):
-    # as a broadcast subtree it re-embedded a parquet scan per edge
-    # reference in the static plan
+    # scalar corpus count as a driver literal (footer-level count scan)
     n_docs = docs.count()
-    edges = co.filter(F.col("c") * 4 >= F.lit(n_docs))
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
-    dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
-    u_first = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    # ≤ 64²/2 rows; referenced three times by the wedge pass
-    oriented = m.persist(
-        edges.join(du, "u")
-        .join(dv, "v")
-        .select(
-            F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("a"),
-            F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("b"),
-        )
-    )
-    e1 = oriented.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    e2 = oriented.select(F.col("a").alias("y"), F.col("b").alias("z"))
-    wedges = e1.join(e2, "y")
-    tri = wedges.join(
-        oriented.select(F.col("a").alias("x"), F.col("b").alias("z")),
-        ["x", "z"],
-        "left_semi",
-    )
-    return (
-        tri.select(F.col("x").alias("node"))
-        .unionAll(tri.select(F.col("y").alias("node")))
-        .unionAll(tri.select(F.col("z").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("n_tri"))
-    )
+    return co.filter(F.col("c") * 4 >= F.lit(n_docs)).select("u", "v")
 
 
 @query(

@@ -58,9 +58,9 @@ def _state_bound(sf_dir: str, table: str = "events") -> int:
     covers columnar compression + row-format state overhead.
     Data-derived (scales with the SF dir / the production horizon),
     never a core count; feeds ``streaming.ops.state_partitions_for``
-    (~64 MB of state per store partition, floor 8).  A directory-style
-    table counts its data files (``catalog.table_files``), not the
-    directory inode."""
+    (~64 MB of state per store partition, floor min(8, cores)).  A
+    directory-style table counts its data files
+    (``catalog.table_files``), not the directory inode."""
     import os
 
     return 4 * sum(os.path.getsize(f) for f in table_files(sf_dir, table))

@@ -95,12 +95,36 @@ def derived_fixture(base_dir: str, sf_dir: str, tables: tuple[str, ...], build, 
     with ``fp = source_fingerprint(sf_dir, *tables)``, so two sf dirs
     with the same name but different data files never share a fixture.
     ``build(tmp)`` writes the fixture into *tmp* (``build_fixture_once``,
-    looked up at call time so a tracer that rebinds it sees every build)."""
-    key = "_".join(
-        [os.path.basename(os.path.normpath(sf_dir)), *map(str, params),
-         source_fingerprint(sf_dir, *tables)]
-    )
-    return build_fixture_once(os.path.join(base_dir, key), build)
+    looked up at call time so a tracer that rebinds it sees every build).
+
+    A build supersedes the older generations of the same fixture: the
+    siblings ``{sf basename}_{params…}_{other fp}`` whose ``_DONE`` names
+    the same source dir are removed.  A same-named fixture of another sf
+    path, or a legacy one whose ``_DONE`` names no source, is kept."""
+    import re
+    import shutil
+
+    source = os.path.realpath(sf_dir)
+    prefix = "_".join([os.path.basename(os.path.normpath(sf_dir)), *map(str, params)]) + "_"
+    base = os.path.join(base_dir, prefix + source_fingerprint(sf_dir, *tables))
+    built = not os.path.exists(os.path.join(base, "_DONE"))
+    build_fixture_once(base, build, source)
+    if built:
+        generation = re.compile(re.escape(prefix) + "[0-9a-f]{12}")
+        for name in os.listdir(base_dir):
+            old = os.path.join(base_dir, name)
+            if old != base and generation.fullmatch(name) and _done_source(old) == source:
+                shutil.rmtree(old, ignore_errors=True)
+    return base
+
+
+def _done_source(fixture: str) -> str | None:
+    """The source dir a committed fixture's ``_DONE`` marker names."""
+    try:
+        with open(os.path.join(fixture, "_DONE")) as f:
+            return f.read()
+    except OSError:
+        return None
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -232,14 +256,14 @@ def guard_driver_fixture(df: DataFrame, what: str, max_rows: int | None = None) 
     return n
 
 
-def build_fixture_once(base: str, build) -> str:
+def build_fixture_once(base: str, build, source: str) -> str:
     """Build a derived fixture directory exactly once, safely under
     CONCURRENT builders (bench + pytest on one box): build into a
-    process-private sibling dir, stamp ``_DONE``, then atomically
-    rename into place; a loser's rename fails and its build is
-    discarded.  The check-then-act ``if not exists(_DONE): write(base)``
-    pattern this replaces let two processes overwrite each other's
-    half-written fixture."""
+    process-private sibling dir, stamp ``_DONE`` with the *source* dir it
+    was derived from, then atomically rename into place; a loser's
+    rename fails and its build is discarded.  The check-then-act
+    ``if not exists(_DONE): write(base)`` pattern this replaces let two
+    processes overwrite each other's half-written fixture."""
     import shutil
 
     done = os.path.join(base, "_DONE")
@@ -250,7 +274,7 @@ def build_fixture_once(base: str, build) -> str:
     try:
         build(tmp)
         with open(os.path.join(tmp, "_DONE"), "w") as f:
-            f.write("ok")
+            f.write(source)
     except BaseException:
         # don't leave a half-built pid dir behind for a failed build —
         # the same pid retrying would reuse the path, anyone else never

@@ -1058,6 +1058,35 @@ def test_derived_fixture_keys_by_content_not_name(parts_sf_dir, tmp_path):
     assert built == [SF_DIR, parts_sf_dir]
 
 
+def test_derived_fixture_regeneration_drops_superseded(parts_sf_dir, tmp_path):
+    """Regenerating a table in place builds a new fixture generation and
+    removes the old one; a same-named fixture built from another sf path
+    (same basename, other data files) is kept."""
+    import shutil
+    import time
+
+    from mapreducehs_spark.sources.catalog import derived_fixture
+
+    sf = tmp_path / os.path.basename(parts_sf_dir)
+    shutil.copytree(
+        os.path.join(parts_sf_dir, "supplier.parquet"), sf / "supplier.parquet",
+        copy_function=shutil.copy,  # fresh mtimes: another fingerprint
+    )
+
+    def build(tmp):
+        os.makedirs(tmp)
+
+    base = str(tmp_path / "fixtures")
+    other = derived_fixture(base, parts_sf_dir, ("supplier",), build, "x", 1)
+    old = derived_fixture(base, str(sf), ("supplier",), build, "x", 1)
+    time.sleep(0.01)
+    part = sf / "supplier.parquet" / "part-00001.parquet"
+    part.write_bytes((sf / "supplier.parquet" / "part-00000.parquet").read_bytes())
+    new = derived_fixture(base, str(sf), ("supplier",), build, "x", 1)
+    assert len({other, old, new}) == 3
+    assert sorted(os.listdir(base)) == sorted(map(os.path.basename, (other, new)))
+
+
 def test_global_positions_invariant_to_input_partitioning(spark):
     """The epoch-shuffle position assignment must be a pure function of
     the data — identical whether the input arrives as 1 partition or
@@ -1321,6 +1350,83 @@ def test_triangle_count_vs_bruteforce(spark):
     assert got == want and got
 
 
+def _q100_documents(tmp_path, texts) -> str:
+    """An sf dir holding only a hand-written ``documents`` table."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = len(texts)
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array(range(n), pa.int64()),
+            "text": texts,
+            "lang": ["en"] * n,
+            "source": ["src0"] * n,
+            "n_chars": pa.array([len(t) for t in texts], pa.int64()),
+        }),
+        tmp_path / "documents.parquet",
+    )
+    return str(tmp_path)
+
+
+def _q100_vs_oracle(spark, sf_dir):
+    import duckdb
+
+    from mapreducehs_spark.queries import ORACLE, QUERIES
+    from tests.oracle import assert_matches_oracle, duckdb_view_sql
+
+    df = QUERIES["q100_triangle_count"](spark, sf_dir)
+    con = duckdb.connect()
+    try:
+        con.execute(duckdb_view_sql(sf_dir, "documents"))
+        assert_matches_oracle(df, con, ORACLE["q100_triangle_count"], "q100")
+    finally:
+        con.close()
+    return df
+
+
+def test_q100_no_edge_reaches_threshold(spark, tmp_path):
+    """Every pair co-occurs in one document of nine (< 25%): the edge
+    list is empty, and so is the result, with the declared schema."""
+    texts = [f"w{2 * i} w{2 * i + 1}" for i in range(8)] + [""]
+    df = _q100_vs_oracle(spark, _q100_documents(tmp_path, texts))
+    assert df.schema.simpleString() == "struct<node:string,n_tri:bigint>"
+    assert df.count() == 0
+
+
+def test_q100_ties_cut_by_node_order(spark, tmp_path):
+    """A 12-clique (55 triangles per node) next to a 4-clique: the
+    top-10 cut falls inside the 12-way tie, so the kept nodes are the
+    first ten by name, as in the oracle."""
+    clique = " ".join(f"n{i:02d}" for i in range(12))
+    texts = [clique] * 4 + ["a b c d"] * 4
+    df = _q100_vs_oracle(spark, _q100_documents(tmp_path, texts))
+    assert [tuple(r) for r in df.orderBy("node").collect()] == [
+        (f"n{i:02d}", 55) for i in range(10)
+    ]
+
+
+#: q100's Spark jobs at sf0.001 on local[4], result collect included
+Q100_JOBS = 10
+
+
+def test_q100_round_budget(spark):
+    """q100 finishes its <= 2016-edge graph on the driver: the whole
+    query, result collect included, stays at its measured job count —
+    well under the 29 jobs of a distributed wedge-join finish."""
+    from mapreducehs_spark.queries import QUERIES
+    from tests.conftest import SF_DIR
+
+    sc = spark.sparkContext
+    sc.setJobGroup("q100_round_budget", "q100 job count")
+    try:
+        QUERIES["q100_triangle_count"](spark, SF_DIR).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup("q100_round_budget")
+    assert len(jobs) <= Q100_JOBS + 2, sorted(jobs)
+
+
 def test_mad_outliers_vs_numpy(spark):
     """q102's rank-selected lower medians equal numpy's independent
     computation (sort + index), and the outlier counts follow."""
@@ -1490,18 +1596,18 @@ def test_build_fixture_once_atomic_and_legacy_safe(tmp_path):
         return _b
 
     # (a) fresh build commits with _DONE
-    out = build_fixture_once(base, build_v("v1"))
+    out = build_fixture_once(base, build_v("v1"), "/data/sf")
     assert out == base
-    assert os.path.exists(os.path.join(base, "_DONE"))
+    assert open(os.path.join(base, "_DONE")).read() == "/data/sf"
     assert open(os.path.join(base, "data.txt")).read() == "v1"
 
     # (c) a second build is a no-op (existing _DONE wins, v1 kept)
-    out = build_fixture_once(base, build_v("v2"))
+    out = build_fixture_once(base, build_v("v2"), "/data/sf")
     assert open(os.path.join(base, "data.txt")).read() == "v1"
 
     # (b) legacy half-built dir (no _DONE) gets replaced
     os.remove(os.path.join(base, "_DONE"))
-    out = build_fixture_once(base, build_v("v3"))
+    out = build_fixture_once(base, build_v("v3"), "/data/sf")
     assert os.path.exists(os.path.join(base, "_DONE"))
     assert open(os.path.join(base, "data.txt")).read() == "v3"
 
@@ -1517,7 +1623,7 @@ def test_build_fixture_once_atomic_and_legacy_safe(tmp_path):
         build_v("loser")(tmp)
 
     os.remove(os.path.join(base, "_DONE"))
-    out = build_fixture_once(base, racing_build)
+    out = build_fixture_once(base, racing_build, "/data/sf")
     assert open(os.path.join(base, "data.txt")).read() == "winner"
     # loser's tmp cleaned up
     assert not [d for d in os.listdir(tmp_path) if ".tmp." in d]
@@ -1540,7 +1646,7 @@ def test_build_fixture_once_cleans_up_failed_build(tmp_path):
         raise ValueError("fixture build exploded")
 
     with pytest.raises(ValueError, match="exploded"):
-        build_fixture_once(base, boom)
+        build_fixture_once(base, boom, "/data/sf")
     assert not [d for d in os.listdir(tmp_path) if ".tmp." in d]
     assert not os.path.exists(base)
 

@@ -436,18 +436,23 @@ def test_t20_profile_two_linear_passes(q):
     assert "HashAggregate" in plan
 
 
-def test_q100_triangles_no_cartesian(spark):
-    # pin the pre-checkpoint build (q107 recipe): the declared query
-    # materializes sel/oriented eagerly, which would hide the plan
-    from mapreducehs_spark.queries.q_ext import _q100_tri_build
+def test_q100_edges_no_cartesian_broadcast_vocabulary(spark):
+    # pin the distributed half the query collects: the co-occurrence
+    # edge frame.  The top-64 vocabulary join must carry the broadcast
+    # hint (a 64-row frame; the hint keeps it broadcast whatever the
+    # size estimate) and build from the TakeOrderedAndProject heap
+    import re
 
-    with materialize(spark) as m:
-        per_node = _q100_tri_build(m, SF)
-        plan = I.formatted_plan(per_node)
-        assert "CartesianProduct" not in plan
-        # round 13: the corpus subtree is materialized ONCE — the wedge
-        # pass must reference the checkpoint/cache, never re-scan parquet
-        assert "Scan parquet" not in plan
+    from mapreducehs_spark.queries.q_ext import _q100_edges
+
+    edges = _q100_edges(spark, SF)
+    plan = I.formatted_plan(edges)
+    assert "CartesianProduct" not in plan
+    assert re.search(r"BroadcastExchange \(\d+\)\n\s+\+- TakeOrderedAndProject", plan)
+    optimized = edges._jdf.queryExecution().optimizedPlan().toString()
+    vocab_joins = re.findall(r"Join Inner, \(tok#\d+ = tok#\d+\)(.*)", optimized)
+    assert len(vocab_joins) == 2  # both sides of the doc_id self-join
+    assert all("rightHint=(strategy=broadcast)" in j for j in vocab_joins)
 
 
 def test_q101_rules_topk_no_global_sort(q):

@@ -895,6 +895,17 @@ def test_st36_monitor_checkpoint_restart_and_replay_dedup(spark, tmp_path):
     assert snapshot() == got
 
 
+def test_state_partitions_floor_is_one_task_wave():
+    """Small state gets min(8, cores) store partitions — one task wave
+    on a small box, the fixed floor on a big one; large state is sized
+    by volume (~64 MB per partition) whatever the core count."""
+    from mapreducehs_spark.streaming.ops import state_partitions_for
+
+    assert state_partitions_for(1 << 20, 4) == 4
+    assert state_partitions_for(1 << 20, 32) == 8
+    assert state_partitions_for(1 << 30, 4) == 16
+
+
 def test_state_bound_counts_parquet_directory_parts(tmp_path):
     """A directory-style copy of ``events`` (part file + Spark's hidden
     marker files) sizes the state store exactly like the single file;
@@ -916,8 +927,8 @@ def test_state_bound_counts_parquet_directory_parts(tmp_path):
     assert table_files(str(tmp_path), "events") == [str(table / "part-00000.parquet")]
     assert table_files(SF_DIR, "events") == [os.path.join(SF_DIR, "events.parquet")]
     assert _state_bound(str(tmp_path)) == _state_bound(SF_DIR)
-    assert state_partitions_for(_state_bound(str(tmp_path))) == state_partitions_for(
-        _state_bound(SF_DIR)
+    assert state_partitions_for(_state_bound(str(tmp_path)), 4) == state_partitions_for(
+        _state_bound(SF_DIR), 4
     )
     with pytest.raises(FileNotFoundError, match="no_such_table.parquet"):
         _state_bound(str(tmp_path), "no_such_table")

@@ -35,8 +35,9 @@ test_plans.py's `_build()` convention).
 Caveat on absolute values: the counts come from the FORMATTED plan
 text, which re-prints a subtree once per reference — a frame consumed
 k times multiplies its exchanges k-fold in the text even though
-runtime deduplicates them via ReuseExchange (q100's wedge join reads
-the oriented-edge frame three times, so its text counts look inflated).
+runtime deduplicates them via ReuseExchange (a self-join such as
+q100's co-occurrence pass prints its corpus subtree once per side, so
+its text counts look inflated).
 The numbers are STABLE fingerprints for diffing across rounds, not
 runtime shuffle counts.
 
