@@ -1,10 +1,8 @@
 """Benchmark harness: the FULL batch query inventory at $SPARK_GRAFT_SF_DIR.
 
-Round 6: the measured set is every batch query (``full_inventory()``,
-~193), closing VERDICT r05's coverage gap (91 of ~191 benched).  The
-compact line reports BOTH the full total (``value``) and the round-5
-91-query series subtotal (``r5_series_total``) so the cross-round
-series stays comparable; ``calib_sec`` normalizes box drift as before.
+The measured set is every registered batch query (``full_inventory()``),
+each timed as the median of ``REPEATS`` runs.  The compact line reports
+the total (``value``) and ``calib_sec``, which normalizes box drift.
 
 Prints exactly ONE COMPACT JSON line (headline total + per-family
 subtotals + a calibration time) and writes the FULL per-query JSON to
@@ -39,271 +37,19 @@ import pandas as pd  # module-level: pandas_udf type hints resolve here
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from mapreducehs_spark.session import DEFAULT_CPUS as CPUS  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 #: repeats per query in the measured pass; the reported time is the
 #: MEDIAN, which strips the box-noise outliers that a single pass
 #: shows (+-20% observed when anything else runs on the machine).
 REPEATS = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
-#: repeats for the non-HEADLINE extension queries (see main())
-EXT_REPEATS = int(os.environ.get("SPARK_GRAFT_BENCH_EXT_REPEATS", "1"))
-
-#: headline set: one per operator family, weighted toward the scale-relevant ones
-HEADLINE = [
-    "q01_pricing_summary",
-    "q05_revenue_by_nation",
-    "q07_asof_enrich",
-    "q12_topk_per_group",
-    "q19_json_extract",
-    "q21_tumbling_window",
-    "q23_sessionization",
-    "q25_percentiles",
-    "q27_interval_join",
-    "d01_dedup_exact",
-    "d02_ngram_jaccard_pairs",
-    "d03_minhash_lsh_pairs",
-    "d05_embedding_near_dup",
-    "s01_cosine_topk",
-    "t01_token_stats",
-    "t04_top_terms_tfidf",
-    "p02_mapreduce_wordcount",
-    "q31_pandas_udf_score",
-    "q36_window_frames",
-    "t08_repetition_scores",
-    "q40_full_outer_reconcile",
-    "q46_brand_supplier_stats",
-    "q48_large_volume_orders",
-    "q50_customer_order_distribution",
-    "q52_latest_event_per_user",
-    "s04_ann_srp_topk",
-    "q62_unshipped_orders",
-    "q65_lone_late_supplier",
-    "d08_decontaminate",
-    "q70_range_band_join",
-    "q71_mg_heavy_hitters",
-    "d10_chunk_dedup",
-    "s05_kmeans_profile",
-    "q72_window_dedup",
-    "q73_time_range_frames",
-    "q76_zorder_key",
-    "t14_source_entropy",
-    # round-4 families: multiformat dims, recursive CTE, large-large
-    # SMJ, exact decimal money, checked-composition dedup, image decode
-    "q78_multiformat_join",
-    "q80_recursive_cte",
-    "q83_large_large_smj",
-    "q84_decimal_exact_money",
-    "d15_near_dedup_checked",
-    "m06_image_decode_stats",
-    # round-4 additions: PII scrub, unigram LM scoring, BPE learning,
-    # chunking, quantized ANN, SCD2, bloom-pruned join, PageRank,
-    # audio decode
-    "t16_pii_redact",
-    "t17_unigram_logprob",
-    "t18_bpe_merge_learn",
-    "t19_doc_chunks",
-    "s08_quantized_cosine_topk",
-    "q91_scd2_dimension",
-    "q92_bloom_prune_join",
-    "q96_pagerank",
-    "m07_audio_decode_stats",
-    "d18_prefix_filter_pairs",
-    "q98_kmv_distinct",
-    "q99_linear_interp",
-    "q100_triangle_count",
-    "t20_data_profile",
-    "q101_association_rules",
-    "q102_mad_outliers",
-    "t21_winnowing_fingerprints",
-    "s09_gram_matrix",
-    "q103_cohort_retention",
-    "q104_table_diff",
-    "d19_duplicate_spans",
-    # round-4 second half: BPE apply, negative sampling, runtime DPP,
-    # count-min sketch, BFS traversal, attribution, bigram LM, PMI
-    "t22_bpe_apply",
-    "s10_negative_samples",
-    "q106_dynamic_partition_pruning",
-    "q107_countmin_sketch",
-    "q108_bfs_hops",
-    "q109_event_attribution",
-    "t23_bigram_logprob",
-    "t24_pmi_collocations",
-    "s11_power_iteration",
-    "d20_quality_canonical",
-    "q110_nested_struct_pruning",
-    "q111_markov_transitions",
-    "t25_novelty_scores",
-    "t26_hashed_linear_score",
-    "s12_mmr_diverse_topk",
-    "m09_video_frame_stats",
-    "t27_token_budget_report",
-    "m10_tolerant_decode",
-    "q112_ab_experiment",
-    "s13_ann_recall_report",
-    "q113_rfm_segments",
-    "q114_cumulative_uniques",
-    # round-5 additions: perceptual-hash image dedup, PQ/ADC ANN,
-    # strict-order funnel, star-alternation connected components
-    "m11_phash_dedup",
-    "s14_pq_adc_topk",
-    "q115_funnel_steps",
-    "d21_star_components",
-    "m12_audio_fingerprint_dedup",
-    # round-6 additions: classifier training, multi-arm ANN recall,
-    # IVF-PQ composition
-    "t28_logreg_train",
-    "s15_ann_recall_report",
-    "s16_ivfpq_adc_topk",
-    # round-7 additions: semantic (embedding-space) dedup, mini-batch
-    # sampled-gradient training, 128-bit-fingerprint dedup
-    "d22_semantic_dedup",
-    "t29_logreg_minibatch",
-    "m13_phash128_dedup",
-    # round-7 additions (2): data-dependent corpus mixture, PCA
-    # projection of the corpus onto s11's dominant eigenvector
-    "t30_domain_mixture_sample",
-    "s17_pca_projection",
-    # round-7 additions (3): BM25 lexical retrieval, weighted sampling
-    # without replacement, the end-to-end curation funnel
-    "s18_bm25_topk",
-    "t31_weighted_sample",
-    "t32_curation_funnel",
-    "q116_calibration_report",
-    # round-7 additions (4): content-defined chunking, cross-modal
-    # (image ∪ caption) canonical dedup
-    "d24_cdc_chunk_dedup",
-    "m14_crossmodal_dedup",
-    "d25_bloom_dedup",
-    # round-7 additions (5): fuzzy (paraphrase-catching) eval-set
-    # decontamination via bipartite broadcast MinHash
-    "d26_decontaminate_fuzzy",
-    # round-7 additions (6): token-balanced shard packing
-    "t33_balanced_shards",
-    # round-7 additions (7): CDC changelog merge (log compaction)
-    "q117_cdc_merge",
-    # round-7 additions (8): cross-modal alignment verification
-    "m15_alignment_verify",
-    # round-7 additions (9): CCNet perplexity tercile bucketing
-    "t34_perplexity_buckets",
-    # round-7 additions (10): DSIR importance selection
-    "t35_dsir_selection",
-    # round-7 additions (11): Gopher intra-doc repetition filter
-    "t36_repetition_filter",
-    # round-7 additions (12): k-anonymity audit, CSV corrupt-record DLQ
-    "q118_k_anonymity",
-    "q119_csv_ingest_dlq",
-    # round-7 additions (13): video near-dup dedup (modality matrix closed)
-    "m16_video_dedup",
-    # round-7 additions (14): late-interaction MaxSim retrieval
-    "s20_maxsim_topk",
-    # round-7 additions (15): BlinkDB-style sampled estimate + SE
-    "q120_aqp_estimates",
-    # round-7 additions (16): k-fold cross-validation readout
-    "t37_logreg_crossval",
-    # round-7 additions (17): weighted shortest paths (min-plus BF)
-    "q121_weighted_sssp",
-    # round-7 additions (18): filtered vector search (pre vs post)
-    "s21_filtered_ann_topk",
-    # round-7 additions (19): span-corruption masking report
-    "t38_span_corruption",
-    # round-7 additions (20): LSH dedup quality (recall/precision)
-    "d27_lsh_quality_report",
-    # round-7 additions (21): quality-signal agreement (Spearman)
-    "t39_signal_agreement",
-    # round-7 additions (22): incremental near-dup components
-    "d28_incremental_components",
-    # round-7 additions (23): dedup-aware weighted sampling
-    "d29_dedup_weighted_sample",
-]
-
-# st13 is excluded from HEADLINE like the other st-series queries: the
-# replay harness measures fixture IO, not the operator.
-
-#: Round 13 (VERDICT r12 item 2a): the most expensive EXTENSION queries
-#: get median-of-REPEATS like the HEADLINE set.  Their single-rep walls
-#: generated 12 false regression alarms in round 12 alone (2-19x
-#: in-sweep spikes, every one adjudicated as a box stall by isolated
-#: re-measure) — a median over 3 reps strips exactly that noise at a
-#: bounded cost (~2x the ~40 s these queries sum to).  Membership is
-#: FROZEN from the two healthy round-12 sweeps (8-core driver run +
-#: quiet-box 32-core before-sweep, every extension query whose wall
-#: read >= 1.4 s in either); entries are only ever ADDED.
-EXPENSIVE_EXT = [
-    "d04_simhash_pairs",
-    "d06_dup_clusters",
-    "d07_near_dedup_drop_list",
-    "d11_minhash_checked",
-    "d12_simhash_checked",
-    "d13_containment_dedup",
-    "d23_leakage_safe_split",
-    "d31_class_stability",
-    "d32_lsh_banding_sweep",
-    "q08_distinct_counts",
-    "q34_approx_distinct",
-    "q41_approx_percentile_contract",
-    "q85_salted_join",
-    "t13_boilerplate_ngrams",
-    "t15_zipf_slope",
-    "t46_topical_packing",
-    "t48_tokenizer_fertility",
-    "t49_quality_deciles",
-    "t50_epoch_shuffle_manifest",
-    "t55_curriculum_schedule",
-]
-
-#: post-round-5 additions, kept in a NAMED list so the cross-round
-#: comparison series below can never silently shift when HEADLINE grows
-#: (ADVICE r06: HEADLINE[:-3] was positionally coupled)
-POST_R5_ADDITIONS = [
-    "t28_logreg_train",
-    "s15_ann_recall_report",
-    "s16_ivfpq_adc_topk",
-    "d22_semantic_dedup",
-    "t29_logreg_minibatch",
-    "m13_phash128_dedup",
-    "t30_domain_mixture_sample",
-    "s17_pca_projection",
-    "s18_bm25_topk",
-    "t31_weighted_sample",
-    "t32_curation_funnel",
-    "q116_calibration_report",
-    "d24_cdc_chunk_dedup",
-    "m14_crossmodal_dedup",
-    "d25_bloom_dedup",
-    "d26_decontaminate_fuzzy",
-    "t33_balanced_shards",
-    "q117_cdc_merge",
-    "m15_alignment_verify",
-    "t34_perplexity_buckets",
-    "t35_dsir_selection",
-    "t36_repetition_filter",
-    "q118_k_anonymity",
-    "q119_csv_ingest_dlq",
-    "m16_video_dedup",
-    "s20_maxsim_topk",
-    "q120_aqp_estimates",
-    "t37_logreg_crossval",
-    "q121_weighted_sssp",
-    "s21_filtered_ann_topk",
-    "t38_span_corruption",
-    "d27_lsh_quality_report",
-    "t39_signal_agreement",
-    "d28_incremental_components",
-    "d29_dedup_weighted_sample",
-]
-
-#: the 91-query round-5 series subset (everything except the post-r5
-#: additions above) — reported separately in the compact line so the
-#: cross-round headline series stays comparable
-R5_SERIES = [q for q in HEADLINE if q not in POST_R5_ADDITIONS]
 
 
 def full_inventory() -> list[str]:
-    """EVERY batch query in registry order (round 6: bench + plan
-    coverage over the whole inventory, not a 91-query sample).  The
-    st-series stays excluded — its replay harness measures fixture IO,
-    not the operator (the streaming ops are timed by their own tests)."""
+    """EVERY batch query in registry order.  The st-series stays
+    excluded — its replay harness measures fixture IO, not the operator
+    (the streaming ops are timed by their own tests)."""
     from mapreducehs_spark.queries import QUERIES
 
     return [n for n in QUERIES if not n.startswith("st")]
@@ -411,7 +157,7 @@ def main() -> None:
         return time.perf_counter() - t0
 
     # spawn the Python UDF workers once, so Arrow-UDF queries measure
-    # kernel time rather than 32 interpreter startups
+    # kernel time rather than one interpreter startup per core
     spark.range(0, 1024, 1, int(CPUS)).mapInPandas(
         lambda it: it, schema="id long"
     ).write.format("noop").mode("overwrite").save()
@@ -431,27 +177,13 @@ def main() -> None:
 
     import statistics
 
-    # the curated HEADLINE series keeps median-of-REPEATS; the ~100
-    # extension queries (round 6 coverage closure) get EXT_REPEATS
-    # (default 1) to bound total bench wall-time — they are individually
-    # small, their noise is bounded by calib_sec normalization, and no
-    # cross-round series depends on them yet.  Round 13: the EXPENSIVE_EXT
-    # subset joins the median-of-REPEATS tier (see its docstring).
-    headline_set = set(HEADLINE) | set(EXPENSIVE_EXT)
     timings = {
-        name: round(
-            statistics.median(
-                run(name)
-                for _ in range(REPEATS if name in headline_set else EXT_REPEATS)
-            ),
-            4,
-        )
+        name: round(statistics.median(run(name) for _ in range(REPEATS)), 4)
         for name in inventory
     }
     sf = SF_DIR.rstrip("/").split("sf")[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else SF_DIR
     total = round(sum(timings.values()), 4)
-    series_total = round(sum(timings[n] for n in R5_SERIES if n in timings), 4)
     common_total = common_n = None
     if prev_inventory is not None:
         common = {n: t for n, t in timings.items() if n in prev_inventory}
@@ -470,8 +202,6 @@ def main() -> None:
         "unit": "sec",
         **calib,
         "n_queries": len(timings),
-        "r5_series_total": series_total,
-        "r5_series_n": len(R5_SERIES),
         "common_inventory_total": common_total,
         "common_inventory_n": common_n,
         "queries": timings,
@@ -493,8 +223,6 @@ def main() -> None:
         "unit": "sec",
         **calib,
         "n_queries": len(timings),
-        "r5_series_total": series_total,
-        "r5_series_n": len(R5_SERIES),
         "common_inventory_total": common_total,
         "common_inventory_n": common_n,
         "queries": dict(sorted(families.items())),

@@ -49,21 +49,6 @@ from mapreducehs_spark.operators.text import tokens
 _H31 = (1 << 31) - 1
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep one row per distinct content hash (lowest id wins —
-    deterministic, unlike ``dropDuplicates`` which keeps an arbitrary
-    row).  One hash-shuffle; at 100 TB prefer this over
-    ``dropDuplicates([text_col])`` because the 32-byte hash, not the
-    full text, is the shuffle key."""
-    h = F.md5(F.col(text_col)).alias("content_hash")
-    winners = (
-        df.select(h, F.col(id_col))
-        .groupBy("content_hash")
-        .agg(F.min(id_col).alias(id_col))
-    )
-    return df.join(winners, on=id_col, how="inner").drop("content_hash")
-
-
 def duplicate_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Per content hash: group size + representative (min) id."""
     return (

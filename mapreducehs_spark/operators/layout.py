@@ -102,38 +102,6 @@ def zorder_write(
     )
 
 
-def compact_dir(
-    spark,
-    src_path: str,
-    dst_path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    fmt: str = "parquet",
-    sort_within_by: list[str] | None = None,
-) -> int:
-    """Small-files compaction: rewrite a directory into ~target-sized
-    files.  Returns the file count written.
-
-    The 100 TB operational reality: streaming sinks and per-trigger
-    writes leave thousands of KB-scale files per partition, and scan
-    cost becomes dominated by per-file open/footer overhead instead of
-    bytes.  The fix is this nightly job: size the output file count
-    from the INPUT BYTES (cheap file-status sum — no data read), then
-    one rebalancing shuffle.  ``sort_within_by`` re-sorts rows inside
-    each output file so min-max stats stay tight after compaction
-    (pair with ``zorder_write`` for the clustered variant).
-    """
-    import os
-
-    total = sum(os.path.getsize(f) for f in data_files(src_path))
-    n_files = max(1, round(total / target_file_bytes))
-    df = spark.read.format(fmt).load(src_path)
-    out = df.repartition(n_files)
-    if sort_within_by:
-        out = out.sortWithinPartitions(*sort_within_by)
-    out.write.format(fmt).mode("overwrite").save(dst_path)
-    return n_files
-
-
 def execute_compaction_plan(
     spark,
     df: DataFrame,

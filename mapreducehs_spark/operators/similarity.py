@@ -252,9 +252,9 @@ def ivf_topk(
     centroids: np.ndarray | None = None,
 ) -> DataFrame:
     """IVF-flat approximate top-k: assign corpus vectors to their
-    nearest centroid (seeded random by default, or a k-means codebook
-    from ``train_ivf_centroids``, shipped inside the UDF closure);
-    each query probes its ``n_probe`` nearest cells and scans only those.
+    nearest centroid (seeded random by default, or a caller-supplied
+    codebook, shipped inside the UDF closure); each query probes its
+    ``n_probe`` nearest cells and scans only those.
 
     Cell assignment and pair scoring run as Arrow-vectorized numpy
     kernels (one BLAS matmul per batch): the JVM higher-order-function
@@ -263,8 +263,9 @@ def ivf_topk(
     functions/vector_np.py).  The join stays a JVM hash join on the
     cell id.
 
-    Recall is approximate; ``train_ivf_centroids`` (sampled k-means)
-    raises it at the same n_probe — the 100 TB recipe.
+    Recall is approximate; a data-fitted codebook (k-means over a
+    sample, as in ``kmeans_profile``) raises it at the same n_probe —
+    the 100 TB recipe.
     """
     scored = ivf_candidates(
         corpus,
@@ -327,63 +328,6 @@ def ivf_candidates(
         .filter(F.col("query_id") != F.col("match_id"))
         .withColumn("cosine", F.round(cosine_udf("__qv", "__cv"), 6))
     )
-
-
-def train_ivf_centroids(
-    emb: DataFrame,
-    n_cells: int = 16,
-    dim: int = 64,
-    iters: int = 3,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    sample_fraction: float | None = None,
-) -> np.ndarray:
-    """Lloyd k-means over the (optionally sampled) corpus → IVF
-    centroids that match the data distribution instead of random
-    hyperplane directions (higher recall at the same n_probe).
-
-    Each iteration is two distributed steps: (1) assign every vector to
-    its best cell with the Arrow argmax kernel (one matmul per batch,
-    scan-shaped), (2) recompute centroids as the per-(cell, dimension)
-    mean via posexplode + hash agg — ONE shuffle keyed on (cell, pos),
-    perfectly partial-aggregatable.  Only the n_cells × dim centroid
-    matrix (broadcast-sized) ever reaches the driver.  At 100 TB: set
-    ``sample_fraction`` so ~1-10M vectors train the codebook (the
-    standard IVF recipe), then assign the full corpus once.
-
-    Empty cells keep their previous centroid.  Returns a unit-normalized
-    (n_cells, dim) matrix to pass to ``ivf_topk(centroids=...)``.
-    """
-    from mapreducehs_spark.functions.vector_np import cell_argmax_udf
-
-    rng = np.random.default_rng(seed)
-    cents = rng.standard_normal((n_cells, dim))
-    cents /= np.linalg.norm(cents, axis=1, keepdims=True)
-
-    train = emb.select(F.col(vec_col).alias("__v"))
-    if sample_fraction is not None:
-        train = train.sample(fraction=sample_fraction, seed=seed)
-    with materialize(emb.sparkSession) as m:
-        train = m.persist(train)
-        for _ in range(iters):
-            sums = (
-                train.withColumn("cell", cell_argmax_udf(cents)(F.col("__v")))
-                .select("cell", F.posexplode("__v").alias("pos", "x"))
-                .groupBy("cell", "pos")
-                .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
-            new = cents.copy()
-            acc = np.zeros((n_cells, dim))
-            cnt = np.zeros(n_cells)
-            for r in sums:
-                acc[r["cell"], r["pos"]] = r["s"]
-                cnt[r["cell"]] = r["n"]
-            nonempty = cnt > 0
-            new[nonempty] = acc[nonempty] / cnt[nonempty, None]
-            norms = np.linalg.norm(new, axis=1, keepdims=True)
-            cents = np.where(norms > 0, new / np.where(norms > 0, norms, 1.0), cents)
-    return cents
 
 
 def label_centroids(
@@ -617,7 +561,7 @@ def kmeans_profile(
     iterations — the iterative-algorithm witness with a replayable
     trajectory (no RNG), so even the oracle can re-derive it.
 
-    Distributed shape per iteration (same as train_ivf_centroids):
+    Distributed shape per iteration:
     (1) assignment is an Arrow-batched numpy matmul against the
     broadcast-sized centroid matrix — scan-shaped, no shuffle;
     (2) the centroid update is posexplode + hash-agg keyed on

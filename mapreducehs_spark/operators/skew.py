@@ -42,18 +42,6 @@ def two_phase_agg(
     return phase1.groupBy(key).agg(*final_aggs)
 
 
-def top_frequent_keys(df: DataFrame, key: str, min_count: int) -> DataFrame:
-    """Measure skew: keys whose row count exceeds ``min_count``.
-    Run on a sample at 100 TB (``df.sample(0.001)``) to pick salting
-    candidates cheaply."""
-    return (
-        df.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= min_count)
-        .orderBy(F.col("n").desc())
-    )
-
-
 def salted_join(
     left: DataFrame,
     right: DataFrame,

@@ -15,11 +15,13 @@ Determinism discipline (FIXTURES.md "Oracle discipline"):
 - every float output rounded; every ranking totally ordered (explicit
   tiebreak columns); sums of integers cast to BIGINT on the DuckDB side
   (DuckDB widens to HUGEINT).
+
+The package exports only the registries and ``query``; helpers live in
+their family module (``_shared`` for the cross-family ones) and are
+imported from there.
 """
 
 from mapreducehs_spark.queries import (  # noqa: F401  (import order = registration order)
-    _registry,
-    _shared,
     q_core,
     q_ext,
     p_pipeline,
@@ -35,25 +37,3 @@ from mapreducehs_spark.queries._registry import (  # noqa: F401
     STAGED_ORACLE,
     query,
 )
-
-_registry._reorder()  # restore the pre-split registration order
-
-# Re-export every module-level name (including the private helpers the
-# test suite imports) so this package namespace equals the former
-# single module's namespace exactly.
-for _m in (_shared, q_core, q_ext, p_pipeline, d_dedup, s_similarity, t_text, m_multimodal, st_streaming):
-    for _k, _v in vars(_m).items():
-        if _k.startswith('__'):
-            continue
-        _prev = globals().get(_k, _v)
-        if _prev is not _v:
-            # two query modules define the same name with DIFFERENT
-            # values — the earliest module wins, but silently keeping it
-            # could mask a divergent helper (ADVICE r8).  Shared helpers
-            # belong in _shared; a true collision is a packaging bug.
-            raise ImportError(
-                f"query-module name collision on {_k!r}: "
-                f"{getattr(_prev, '__module__', type(_prev))} vs {_m.__name__}"
-            )
-        globals().setdefault(_k, _v)
-del _m, _k, _v, _prev

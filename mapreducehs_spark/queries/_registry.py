@@ -1,8 +1,9 @@
 """Query/oracle registries + the @query decorator.
 
-Split out of the former single-module queries.py (round 8); the
-package __init__ restores the original registration order so every
-order-derived artifact is unchanged.
+``QUERIES`` is the one inventory: ``@query`` fills it in module import
+order (the family order of the package ``__init__``, then definition
+order within each module).  Every artifact derived from it keys or
+sorts by name, so no second list of names is kept.
 """
 
 from __future__ import annotations
@@ -23,281 +24,11 @@ STAGED_ORACLE: dict[str, str] = {}
 
 def query(name: str, oracle: str | None = None):
     def deco(fn):
+        if name in QUERIES:
+            raise ValueError(f"query {name!r} is registered twice")
         QUERIES[name] = fn
         if oracle is not None:
             ORACLE[name] = oracle
         return fn
 
     return deco
-
-
-#: Original single-module registration order — __init__ re-inserts
-#: QUERIES/ORACLE in this order so bench/inventory/docs artifacts are
-#: byte-stable across the package split.  New queries (not listed)
-#: keep their module-import insertion order at the end.
-_CANONICAL_ORDER = [
-    "q01_pricing_summary",
-    "q02_revenue_forecast",
-    "q03_scan_project_filter",
-    "q04_order_priority",
-    "q05_revenue_by_nation",
-    "q06_semi_anti_customers",
-    "q07_asof_enrich",
-    "q08_distinct_counts",
-    "q09_rollup_sales",
-    "q10_cube_sales",
-    "q11_pivot_status",
-    "q12_topk_per_group",
-    "q13_running_totals",
-    "q14_global_topk",
-    "q15_ntile_ranks",
-    "q16_set_ops",
-    "q17_string_funcs",
-    "q18_date_funcs",
-    "q19_json_extract",
-    "q20_math_case",
-    "q21_tumbling_window",
-    "q22_sliding_window",
-    "q23_sessionization",
-    "d01_dedup_exact",
-    "d02_ngram_jaccard_pairs",
-    "d03_minhash_lsh_pairs",
-    "d04_simhash_pairs",
-    "d05_embedding_near_dup",
-    "s01_cosine_topk",
-    "s02_ann_ivf_topk",
-    "s04_ann_srp_topk",
-    "s03_label_centroids",
-    "t01_token_stats",
-    "t02_quality_scores",
-    "t03_corpus_facets",
-    "t04_top_terms_tfidf",
-    "t05_fingerprints",
-    "t06_lang_guess",
-    "m01_payload_metadata",
-    "m02_payload_features",
-    "p01_wordcount_pipeline",
-    "p02_mapreduce_wordcount",
-    "st01_stream_tumbling",
-    "st02_stream_sessions",
-    "st03_stream_stateful_totals",
-    "q24_grouping_sets",
-    "q25_percentiles",
-    "q26_stat_aggregates",
-    "q27_interval_join",
-    "q28_trimmed_mean",
-    "q29_unpivot",
-    "q30_lateral_topn",
-    "q31_pandas_udf_score",
-    "m03_frame_sample",
-    "q32_array_map_funcs",
-    "q33_subqueries",
-    "q34_approx_distinct",
-    "q35_salted_agg",
-    "st04_stream_dedup",
-    "st05_stream_stream_join",
-    "q36_window_frames",
-    "q37_hash_split",
-    "q38_stratified_sample",
-    "q39_sequence_packing",
-    "t07_normalize_stats",
-    "d06_dup_clusters",
-    "q40_full_outer_reconcile",
-    "t08_repetition_scores",
-    "q41_approx_percentile_contract",
-    "st06_stream_sliding",
-    "q42_null_semantics",
-    "q43_outer_join_directions",
-    "p03_pipeline_agg_fastpath",
-    "q44_cross_join_matrix",
-    "q45_from_json_struct",
-    "q46_brand_supplier_stats",
-    "d07_near_dedup_drop_list",
-    "q47_python_udtf",
-    "t09_vocab_growth",
-    "q48_large_volume_orders",
-    "q49_top_supplier",
-    "t10_bpe_token_counts",
-    "q50_customer_order_distribution",
-    "st07_stream_static_join",
-    "q51_dormant_rich_customers",
-    "q52_latest_event_per_user",
-    "q53_kll_quantile_contract",
-    "q54_theta_sketch_set_ops",
-    "q55_variant_json",
-    "q56_python_datasource",
-    "m04_arrow_payload_stats",
-    "q57_merge_upsert",
-    "q58_multi_resolution_rollup",
-    "q59_nation_pair_volume",
-    "q60_market_share",
-    "q61_small_quantity_revenue",
-    "q62_unshipped_orders",
-    "q63_late_shipment_priority",
-    "q64_disjunctive_brand_revenue",
-    "q65_lone_late_supplier",
-    "q66_returned_item_customers",
-    "d08_decontaminate",
-    "t11_source_overlap",
-    "q67_mixture_resample",
-    "d09_incremental_dedup",
-    "t12_filter_funnel",
-    "q68_grouped_agg_udf",
-    "q69_event_funnel",
-    "q70_range_band_join",
-    "q71_mg_heavy_hitters",
-    "q72_window_dedup",
-    "d10_chunk_dedup",
-    "t13_boilerplate_ngrams",
-    "s05_kmeans_profile",
-    "st08_stream_late_data",
-    "q73_time_range_frames",
-    "q74_promo_revenue_share",
-    "q75_profit_by_nation_year",
-    "d11_minhash_checked",
-    "d12_simhash_checked",
-    "s06_ann_ivf_checked",
-    "s07_ann_srp_checked",
-    "d15_near_dedup_checked",
-    "m06_image_decode_stats",
-    "q86_lateral_topn",
-    "d16_embedding_dedup_drop_list",
-    "q87_variant_json",
-    "q88_listagg_ordered",
-    "q89_deterministic_shuffle",
-    "q90_schema_evolution_union",
-    "q76_zorder_key",
-    "st09_stream_python_source",
-    "t14_source_entropy",
-    "q77_locf_gap_fill",
-    "d13_containment_dedup",
-    "t15_zipf_slope",
-    "q78_multiformat_join",
-    "q79_date_spine",
-    "q80_recursive_cte",
-    "st10_stream_upsert_serving",
-    "m05_pointer_manifest",
-    "q82_partitioned_pruned_scan",
-    "q83_large_large_smj",
-    "d14_fuzzy_name_match",
-    "q84_decimal_exact_money",
-    "q85_salted_join",
-    "t16_pii_redact",
-    "t17_unigram_logprob",
-    "t18_bpe_merge_learn",
-    "t19_doc_chunks",
-    "s08_quantized_cosine_topk",
-    "q91_scd2_dimension",
-    "q92_bloom_prune_join",
-    "q94_incremental_mv",
-    "q95_price_histogram",
-    "q93_xml_source_join",
-    "st11_stream_chained_windows",
-    "m07_audio_decode_stats",
-    "q96_pagerank",
-    "d17_sorted_neighborhood",
-    "q97_excess_volume_suppliers",
-    "d18_prefix_filter_pairs",
-    "q98_kmv_distinct",
-    "q99_linear_interp",
-    "q100_triangle_count",
-    "t20_data_profile",
-    "q101_association_rules",
-    "q102_mad_outliers",
-    "t21_winnowing_fingerprints",
-    "s09_gram_matrix",
-    "q103_cohort_retention",
-    "q104_table_diff",
-    "q105_compaction_plan",
-    "st12_stream_dedup_watermarked",
-    "m08_image_resize_stats",
-    "d19_duplicate_spans",
-    "t22_bpe_apply",
-    "s10_negative_samples",
-    "q106_dynamic_partition_pruning",
-    "q107_countmin_sketch",
-    "q108_bfs_hops",
-    "q109_event_attribution",
-    "t23_bigram_logprob",
-    "t24_pmi_collocations",
-    "s11_power_iteration",
-    "d20_quality_canonical",
-    "st13_stream_heavy_hitters",
-    "q110_nested_struct_pruning",
-    "q111_markov_transitions",
-    "t25_novelty_scores",
-    "t26_hashed_linear_score",
-    "s12_mmr_diverse_topk",
-    "m09_video_frame_stats",
-    "t27_token_budget_report",
-    "m10_tolerant_decode",
-    "q112_ab_experiment",
-    "s13_ann_recall_report",
-    "q113_rfm_segments",
-    "st14_stream_outer_join",
-    "q114_cumulative_uniques",
-    "st15_stream_minhash_dedup",
-    "m11_phash_dedup",
-    "s14_pq_adc_topk",
-    "q115_funnel_steps",
-    "d21_star_components",
-    "st16_stream_funnel",
-    "m12_audio_fingerprint_dedup",
-    "t28_logreg_train",
-    "s15_ann_recall_report",
-    "s16_ivfpq_adc_topk",
-    "st17_stream_inference",
-    "d22_semantic_dedup",
-    "t29_logreg_minibatch",
-    "st18_stream_train",
-    "m13_phash128_dedup",
-    "t30_domain_mixture_sample",
-    "s17_pca_projection",
-    "st19_stream_mixture",
-    "s18_bm25_topk",
-    "t31_weighted_sample",
-    "t32_curation_funnel",
-    "st20_stream_moments",
-    "q116_calibration_report",
-    "s19_retrieve_rerank",
-    "d23_leakage_safe_split",
-    "st21_stream_anomaly",
-    "d24_cdc_chunk_dedup",
-    "m14_crossmodal_dedup",
-    "d25_bloom_dedup",
-    "d26_decontaminate_fuzzy",
-    "t33_balanced_shards",
-    "q117_cdc_merge",
-    "m15_alignment_verify",
-    "t34_perplexity_buckets",
-    "t35_dsir_selection",
-    "t36_repetition_filter",
-    "st22_stream_bloom_dedup",
-    "q118_k_anonymity",
-    "q119_csv_ingest_dlq",
-    "m16_video_dedup",
-    "s20_maxsim_topk",
-    "q120_aqp_estimates",
-    "t37_logreg_crossval",
-    "q121_weighted_sssp",
-    "st23_stream_scd2_enrich",
-    "s21_filtered_ann_topk",
-    "st24_stream_decode_dlq",
-    "t38_span_corruption",
-    "d27_lsh_quality_report",
-    "t39_signal_agreement",
-    "st25_stream_histogram_quantiles",
-    "d28_incremental_components",
-    "d29_dedup_weighted_sample",
-    "t40_sequence_packing",
-    "t41_funnel_provenance",
-]
-
-
-def _reorder() -> None:
-    for d in (QUERIES, ORACLE):
-        tail = {k: v for k, v in d.items() if k not in set(_CANONICAL_ORDER)}
-        ordered = {k: d[k] for k in _CANONICAL_ORDER if k in d}
-        d.clear()
-        d.update(ordered)
-        d.update(tail)

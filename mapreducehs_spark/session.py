@@ -27,7 +27,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+#: The one core-count default for every session and tool:
+#: ``SPARK_GRAFT_CPUS`` if set, else the cores this process may run on.
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 
 def get_spark(
@@ -42,7 +44,7 @@ def get_spark(
     try:
         n_shuffle = shuffle_partitions or int(cores)
     except ValueError:
-        n_shuffle = shuffle_partitions or 32
+        n_shuffle = shuffle_partitions or int(DEFAULT_CPUS)
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -495,7 +495,7 @@ def stream_distinct(events: DataFrame, keys: list[str]) -> DataFrame:
     """Streaming exact dedup: first occurrence per key, state-backed.
 
     This is the streaming half of the LLM-pipeline dedup tier (batch
-    half: operators/dedup.exact_dedup) — the shape used to make an
+    half: operators/dedup.duplicate_groups, d01) — the shape used to make an
     at-least-once ingest idempotent.  Plain ``dropDuplicates`` keeps
     every seen key in the state store, which is exact but unbounded; a
     real 100 TB ingest bounds state with
@@ -1418,11 +1418,11 @@ def mixture_filter_stream(docs: DataFrame, rates: DataFrame) -> DataFrame:
     store, no watermark, no wide shuffle — throughput is the scan).
 
     ``rates`` is the STATIC (source, accept_ppm) frame built by the
-    batch pass (queries._mixture_rates — the ONE mixture law); at
+    batch pass (queries._shared._mixture_rates — the ONE mixture law); at
     100 TB it is domain-count-sized and broadcasts to every task, the
     standard online-serving split: rates re-derived in batch at
     whatever cadence, streamed docs filtered against the current
-    broadcast.  The md5-fold draw (queries._mix_draw law, inlined here
+    broadcast.  The md5-fold draw (queries.t_text._mix_draw law, inlined here
     to avoid a circular import — agreement is oracle-pinned) keeps
     membership deterministic, so batch and stream keep EXACTLY the
     same documents and t30's oracle CTEs value-check the stream

@@ -25,7 +25,7 @@ from mapreducehs_spark.functions.vector import (
 )
 from mapreducehs_spark.operators.iteration import materialize
 from mapreducehs_spark.operators.joins import asof_join, range_join
-from mapreducehs_spark.operators.skew import salted, top_frequent_keys, two_phase_agg
+from mapreducehs_spark.operators.skew import salted, two_phase_agg
 from mapreducehs_spark.pipeline import Pipeline, word_count_pipeline
 from mapreducehs_spark.sources.catalog import read_any, write_any
 
@@ -66,13 +66,6 @@ def test_salted_range_and_determinism(spark):
     a = salted(df, "k", 8).collect()
     b = salted(df, "k", 8).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-
-def test_top_frequent_keys(spark):
-    rows = [("hot",)] * 50 + [("warm",)] * 10 + [("cold",)] * 2
-    df = spark.createDataFrame(rows, ["k"])
-    out = {r["k"]: r["n"] for r in top_frequent_keys(df, "k", min_count=10).collect()}
-    assert out == {"hot": 50, "warm": 10}
 
 
 # ---------------------------------------------------------------------------
@@ -674,45 +667,6 @@ def test_salted_join_matches_plain_join(spark):
     assert agg(got) == agg(want)
 
 
-def test_trained_ivf_centroids_improve_assignment(spark):
-    """k-means-trained IVF codebook fits clustered data better than
-    random directions: mean best-cell cosine strictly improves, and
-    top-1 recall at n_probe=1 is at least as good."""
-    from mapreducehs_spark.operators.similarity import ivf_topk, train_ivf_centroids
-
-    rng = np.random.default_rng(11)
-    centers = rng.standard_normal((4, 32))
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    rows = []
-    for i in range(240):
-        v = centers[i % 4] + 0.15 * rng.standard_normal(32)
-        rows.append((i, v.tolist()))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    trained = train_ivf_centroids(df, n_cells=4, dim=32, iters=4)
-
-    def mean_best_cos(cents):
-        m = np.stack([np.asarray(v) for _, v in rows])
-        m = m / np.linalg.norm(m, axis=1, keepdims=True)
-        return float(np.max(m @ cents.T, axis=1).mean())
-
-    rng2 = np.random.default_rng(42)
-    rand = rng2.standard_normal((4, 32))
-    rand /= np.linalg.norm(rand, axis=1, keepdims=True)
-    assert mean_best_cos(trained) > mean_best_cos(rand) + 0.05
-
-    # end-to-end: with a trained codebook, probing 1 of 4 cells still
-    # finds each query's true cluster-mates
-    corpus = df.filter(F.col("vec_id") >= 8)
-    queries = df.filter(F.col("vec_id") < 8)
-    got = ivf_topk(
-        corpus, queries, k=1, n_cells=4, n_probe=1, dim=32, centroids=trained
-    ).collect()
-    # every query finds SOME same-cluster neighbor (cluster id = id % 4)
-    hits = sum(1 for r in got if r["match_id"] % 4 == r["query_id"] % 4)
-    assert hits >= 7, [(r["query_id"], r["match_id"]) for r in got]
-
-
 def test_observe_metrics_single_pass(spark):
     """df.observe: data-quality counters collected DURING the query —
     at 100 TB this is how row counts / null rates are monitored without
@@ -910,26 +864,6 @@ def test_zorder_write_tightens_file_ranges(spark, tmp_path):
     # must be at least 2x tighter on each interleaved column
     assert spread(z_dir, "l_partkey") * 2 < spread(plain_dir, "l_partkey")
     assert spread(z_dir, "l_suppkey") * 2 < spread(plain_dir, "l_suppkey")
-
-
-def test_compact_dir_reduces_file_count(spark, tmp_path):
-    from mapreducehs_spark.operators.layout import compact_dir
-    import glob as g
-
-    li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    frag = str(tmp_path / "frag")
-    li.repartition(64).write.parquet(frag)  # the streaming-sink mess
-    assert len(g.glob(frag + "/*.parquet")) == 64
-
-    compacted = str(tmp_path / "compacted")
-    size = sum(
-        __import__("os").path.getsize(f) for f in g.glob(frag + "/*.parquet")
-    )
-    n = compact_dir(spark, frag, compacted, target_file_bytes=size // 4)
-    files = g.glob(compacted + "/*.parquet")
-    assert len(files) == n <= 8
-    # no rows lost
-    assert spark.read.parquet(compacted).count() == li.count()
 
 
 def test_batch_chaos_same_answer_under_task_failures():
@@ -1556,7 +1490,7 @@ def test_cms_overestimate_property(spark):
     overestimates can never underestimate."""
     import pyspark.sql.functions as F
 
-    from mapreducehs_spark.queries import _q107_cell_col, _q107_cells, _q107_freq
+    from mapreducehs_spark.queries.q_ext import _q107_cell_col, _q107_cells, _q107_freq
     from tests.conftest import SF_DIR
 
     with materialize(spark) as m:

@@ -497,7 +497,7 @@ def test_q107_cms_probe_broadcasts(spark):
     # cell counters; the token-scale work is hash-aggregated (partial
     # + final), never sort-aggregated.  (Inspect the PRE-checkpoint
     # plan — the query itself returns a checkpointed 10-row result.)
-    from mapreducehs_spark.queries import _q107_cms_build
+    from mapreducehs_spark.queries.q_ext import _q107_cms_build
 
     with materialize(spark) as m:
         df = _q107_cms_build(m, SF)
@@ -564,7 +564,7 @@ def test_t28_gradient_step_broadcast_model_no_extra_exchange(spark):
     import pyspark.sql.functions as F
 
     from mapreducehs_spark.operators.ml import gradient_frames, hashed_features
-    from mapreducehs_spark.queries import _t
+    from mapreducehs_spark.queries._shared import _t
 
     docs = _t(spark, SF, "documents")
     # persist (exactly what the operator does): InMemoryRelation keeps
@@ -628,7 +628,7 @@ def test_t29_sample_filter_prunes_before_model_join(spark):
         hashed_features,
         sample_pred,
     )
-    from mapreducehs_spark.queries import _t
+    from mapreducehs_spark.queries._shared import _t
 
     docs = _t(spark, SF, "documents")
     with materialize(spark) as m:
@@ -785,7 +785,7 @@ def test_t33_no_single_task_window(spark):
     # appear as a Window over a single partition; assert none exists.
     # (Inspect the PRE-checkpoint plan — the query itself returns a
     # checkpointed 8-row result.)
-    from mapreducehs_spark.queries import _t33_build
+    from mapreducehs_spark.queries.t_text import _t33_build
 
     with materialize(spark) as m:
         df = _t33_build(m, SF)
@@ -821,7 +821,7 @@ def test_t34_tercile_bucketing_window_free(spark):
     # source) — a 30 TB source would collapse to one task; ranks come
     # from the positions idiom + a sources-sized broadcast join.
     # (Pre-checkpoint plan, q107 discipline.)
-    from mapreducehs_spark.queries import _t34_build
+    from mapreducehs_spark.queries.t_text import _t34_build
 
     with materialize(spark) as m:
         df = _t34_build(m, SF)
@@ -955,7 +955,7 @@ def test_t40_packing_window_free_one_scan(spark):
     the corpus onto one task — and the rest is arithmetic + one seq_id
     rollup.  No joins anywhere.  (Pre-checkpoint plan, q107
     discipline.)"""
-    from mapreducehs_spark.queries import _t40_build
+    from mapreducehs_spark.queries.t_text import _t40_build
 
     with materialize(spark) as m:
         df = _t40_build(m, SF)
@@ -1044,7 +1044,7 @@ def test_t46_topical_packing_window_free(q, spark):
     two-phase prefix-sum seam (range exchange on (cluster, doc_id) +
     broadcast base subtraction) — no Window operator anywhere, so no
     cluster ever collapses onto one task."""
-    from mapreducehs_spark.queries import _t46_build
+    from mapreducehs_spark.queries.t_text import _t46_build
 
     with materialize(spark) as m:
         df = _t46_build(m, SF)
@@ -1059,7 +1059,7 @@ def test_m18_vlm_packing_window_free_one_scan(q, spark):
     """m18's scale contract: one metadata scan of documents, per-source
     offsets via the grouped prefix-sum seam (range exchange + broadcast
     base), no Window, no pixel column read."""
-    from mapreducehs_spark.queries import _m18_build
+    from mapreducehs_spark.queries.m_multimodal import _m18_build
 
     with materialize(spark) as m:
         df = _m18_build(m, SF)
@@ -1143,7 +1143,7 @@ def test_t49_deciles_window_free(q, spark):
     prefix-sum seam (range exchange on (source, quality, doc_id) +
     broadcast base/size frames) — no per-source Window anywhere, so a
     terabyte source shard never lands on one task."""
-    from mapreducehs_spark.queries import _t49_build
+    from mapreducehs_spark.queries.t_text import _t49_build
 
     with materialize(spark) as m:
         df = _t49_build(m, SF)
@@ -1191,7 +1191,7 @@ def test_t50_manifest_window_free(q, spark):
     prefix-sum seam on (source, epoch, key, doc_id) — no
     per-(source, epoch) Window, the n_sources plan broadcasts, and
     nothing cartesians."""
-    from mapreducehs_spark.queries import _t50_build
+    from mapreducehs_spark.queries.t_text import _t50_build
 
     with materialize(spark) as m:
         df = _t50_build(m, SF)
@@ -1215,7 +1215,7 @@ def test_t50_conservation_vs_t44(q, spark):
     its own token count)."""
     from pyspark.sql import functions as F
 
-    from mapreducehs_spark.queries import _mixture_tok, _t
+    from mapreducehs_spark.queries._shared import _mixture_tok, _t
 
     plan = {r["source"]: r for r in q("t44_epoch_repeat_plan").collect()}
     rows = q("t50_epoch_shuffle_manifest").collect()
@@ -1292,7 +1292,8 @@ def test_t51_span_conservation(q, spark):
     from pyspark.sql import functions as F
 
     from mapreducehs_spark.operators import text
-    from mapreducehs_spark.queries import _t, _t51_rendered
+    from mapreducehs_spark.queries._shared import _t
+    from mapreducehs_spark.queries.t_text import _t51_rendered
 
     rendered = _t51_rendered(_t(spark, SF, "documents"))
     bad = (
@@ -1364,7 +1365,7 @@ def test_t53_sweep_window_free(spark):
     prefix-sum seam (range exchange) computed ONCE; the three-L sweep
     is an explode + rollup and the 2-scalar totals frame broadcasts —
     no Window operator anywhere, nothing cartesians."""
-    from mapreducehs_spark.queries import _t53_build
+    from mapreducehs_spark.queries.t_text import _t53_build
 
     with materialize(spark) as m:
         df = _t53_build(m, SF)
@@ -1397,7 +1398,8 @@ def test_t54_conversation_conservation(q, spark):
     from pyspark.sql import functions as F
 
     from mapreducehs_spark.operators import text
-    from mapreducehs_spark.queries import _t, _t45_pairs, _quality_scored, _T51_SYSTEM
+    from mapreducehs_spark.queries._shared import _t
+    from mapreducehs_spark.queries.t_text import _T51_SYSTEM, _quality_scored, _t45_pairs
 
     rows = sorted(
         q("t54_multiturn_assembly").collect(), key=lambda r: (r["source"], r["turn"])
@@ -1574,7 +1576,8 @@ def test_t57_trace_tiling_and_conservation(q, spark):
     from pyspark.sql import functions as F
 
     from mapreducehs_spark.operators import text
-    from mapreducehs_spark.queries import _t, _t45_pairs, _quality_scored
+    from mapreducehs_spark.queries._shared import _t
+    from mapreducehs_spark.queries.t_text import _quality_scored, _t45_pairs
     from mapreducehs_spark.queries.t_text import _T57_SYSTEM, _T57_TRAINED
 
     rows = sorted(

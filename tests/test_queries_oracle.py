@@ -132,7 +132,7 @@ def test_t40_packing_conservation(spark):
     from pyspark.sql import functions as F
 
     from mapreducehs_spark.operators import text
-    from mapreducehs_spark.queries import _T40_CTX
+    from mapreducehs_spark.queries.t_text import _T40_CTX
     from mapreducehs_spark.sources.catalog import load_table
 
     docs = load_table(spark, SF_DIR, "documents")
@@ -165,7 +165,7 @@ def test_t46_topical_packing_conservation(spark):
     from mapreducehs_spark.operators import text
     from mapreducehs_spark.operators.iteration import materialize
     from mapreducehs_spark.operators.similarity import kmeans_assignments
-    from mapreducehs_spark.queries import _T40_CTX
+    from mapreducehs_spark.queries.t_text import _T40_CTX
     from mapreducehs_spark.sources.catalog import load_table
 
     emb = load_table(spark, SF_DIR, "embeddings")
@@ -194,3 +194,18 @@ def test_t46_topical_packing_conservation(spark):
             assert r["n_fill"] == _T40_CTX and r["fill_micro"] == 1_000_000
         assert rows[-1]["n_fill"] <= _T40_CTX
         assert [r["seq_id"] for r in rows] == list(range(len(rows)))
+
+
+def test_inventory_is_the_contract():
+    """``QUERIES`` is the only list of query names, so it must hold
+    every name of the committed correctness record, and each name's
+    prefix (``q01``, ``st02``, ...) must be unique: benchmark workloads
+    select queries by prefix, and a second query with the same prefix
+    would silently take the first one's place."""
+    import json
+
+    root = Path(__file__).resolve().parent.parent
+    recorded = json.loads((root / "CORRECTNESS_sf0.01.json").read_text())
+    assert sorted(set(recorded) - set(QUERIES)) == []
+    prefixes = [name.split("_", 1)[0] for name in QUERIES]
+    assert sorted(p for p in set(prefixes) if prefixes.count(p) > 1) == []

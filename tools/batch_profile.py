@@ -25,11 +25,11 @@ def main() -> None:
     runs = int(sys.argv[3]) if len(sys.argv) > 3 else 3
 
     from mapreducehs_spark.queries import QUERIES
-    from mapreducehs_spark.session import get_spark
+    from mapreducehs_spark.session import DEFAULT_CPUS, get_spark
 
     spark = get_spark(app_name="batch_profile")
     # spawn Python workers once (bench.py discipline)
-    spark.range(0, 1024, 1, 32).mapInPandas(
+    spark.range(0, 1024, 1, int(DEFAULT_CPUS)).mapInPandas(
         lambda it: it, schema="id long"
     ).write.format("noop").mode("overwrite").save()
 

@@ -15,14 +15,16 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 
+from mapreducehs_spark.session import DEFAULT_CPUS
+
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None
 
 spark = (
-    SparkSession.builder.master("local[8]")
+    SparkSession.builder.master(f"local[{DEFAULT_CPUS}]")
     .appName("driver_sim")
     .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.shuffle.partitions", "8")
+    .config("spark.sql.shuffle.partitions", DEFAULT_CPUS)
     .config("spark.ui.enabled", "false")
     .config("spark.driver.memory", "16g")
     .getOrCreate()

@@ -58,7 +58,7 @@ os.chdir(REPO)
 def main() -> None:
     from bench import full_inventory
 
-    HEADLINE = full_inventory()  # round 6: every batch query, not a sample
+    inventory = full_inventory()
 
     from mapreducehs_spark.plans.inspect import (
         broadcast_join_count,
@@ -73,7 +73,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     out: dict[str, dict] = {}
-    for name in HEADLINE:
+    for name in inventory:
         try:
             df = QUERIES[name](spark, sf_dir)
             out[name] = {

@@ -162,11 +162,10 @@ def adjudicate() -> None:
     sys.path.insert(0, REPO)
     os.chdir(REPO)
     from mapreducehs_spark.queries import QUERIES
-    from mapreducehs_spark.session import get_spark
+    from mapreducehs_spark.session import DEFAULT_CPUS, get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(app_name="scaling_adjudicate", master=f"local[{cpus}]")
-    spark.range(0, 1024, 1, int(cpus)).mapInPandas(
+    spark = get_spark(app_name="scaling_adjudicate")
+    spark.range(0, 1024, 1, int(DEFAULT_CPUS)).mapInPandas(
         lambda it: it, schema="id long"
     ).write.format("noop").mode("overwrite").save()
 

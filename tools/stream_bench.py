@@ -16,6 +16,8 @@ sink) and records into ``STREAM_BENCH.json``:
                  first pass per query still pays some per-plan codegen,
                  min-of-2 reads steady state the way the batch bench's
                  warm-up pass does);
+- ``secs``     — every repeat's wall, in run order, so two runs can be
+                 told apart from the box's run-to-run spread;
 - ``rows``     — rows emitted to the sink (the batch-read count);
 - ``peak_state_rows`` — max over micro-batches of the SUM of
                  ``numRowsTotal`` across the query's state operators,
@@ -50,10 +52,11 @@ os.chdir(REPO)
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else os.environ.get(
     "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
 )
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 REPEATS = int(os.environ.get("SPARK_GRAFT_STREAM_REPEATS", "2"))
 
 from pyspark.sql.streaming import StreamingQueryListener  # noqa: E402
+
+from mapreducehs_spark.session import DEFAULT_CPUS as CPUS  # noqa: E402
 
 
 class StateFootprintListener(StreamingQueryListener):
@@ -126,8 +129,8 @@ def main() -> None:
     spark.streams.addListener(listener)
 
     # spawn Python UDF workers once (same reason as bench.py): the
-    # applyInPandasWithState queries should measure kernel time, not 32
-    # interpreter startups attributed to whichever st query runs first
+    # applyInPandasWithState queries should measure kernel time, not one
+    # interpreter startup per core attributed to whichever st query runs first
     spark.range(0, 1024, 1, int(CPUS)).mapInPandas(
         lambda it: it, schema="id long"
     ).write.format("noop").mode("overwrite").save()
@@ -140,7 +143,7 @@ def main() -> None:
     results: dict[str, dict] = {}
     for name in sorted(st_queries):
         fn = st_queries[name]
-        best_sec = None
+        secs: list[float] = []
         rows = 0
         peak = 0
         peak_bytes = 0
@@ -150,8 +153,7 @@ def main() -> None:
             t0 = time.perf_counter()
             df = fn(spark, SF_DIR)
             rows = df.count()
-            sec = time.perf_counter() - t0
-            best_sec = sec if best_sec is None else min(best_sec, sec)
+            secs.append(time.perf_counter() - t0)
             # progress events are async on the listener bus; poll until
             # the per-sink batch count stops increasing (with a timeout)
             # instead of a fixed sleep — a late final event would
@@ -176,7 +178,8 @@ def main() -> None:
                     peak_bytes = max(peak_bytes, d.get("peak_state_bytes", 0))
                     batches = max(batches, d["batches"] - prev["batches"])
             results[name] = {
-                "sec": round(best_sec, 4),
+                "sec": round(min(secs), 4),
+                "secs": [round(t, 4) for t in secs],
                 "rows": int(rows),
                 "peak_state_rows": int(peak),
                 "peak_state_bytes": int(peak_bytes),
