@@ -1,34 +1,38 @@
-"""Benchmark harness: the FULL batch query inventory at $SPARK_GRAFT_SF_DIR.
+"""Benchmark harness: the one timer for batch queries at $SPARK_GRAFT_SF_DIR.
 
-The measured set is every registered batch query (``full_inventory()``),
-each timed as the median of ``REPEATS`` runs.  The compact line reports
-the total (``value``) and ``calib_sec``, which normalizes box drift.
+    python bench.py              # every batch query -> BENCH_local.json
+    python bench.py d03,q100     # a subset: full names or unique prefixes
 
-Prints exactly ONE COMPACT JSON line (headline total + per-family
-subtotals + a calibration time) and writes the FULL per-query JSON to
-``BENCH_local.json`` in the repo root.  The split exists because the
-driver's stdout capture keeps only the tail of long lines: round 4's
-86-query line was truncated past recovery (BENCH_r04 ``parsed: null``).
-The compact line is ~300 bytes — it can never lose the headline again —
-and the full detail lives in the committed file.
+Each query runs through the noop sink (no driver collect cost, no
+skipped projections): one untimed warm pass over the measured set
+(JIT, parquet footers, broadcast paths), then ``REPEATS`` timed runs
+per query.  A line per query (median, min, max) goes to stderr as it
+finishes.  ``SPARK_GRAFT_BENCH_REPEATS`` sets the repeats,
+``SPARK_GRAFT_SF_DIR`` the data and ``SPARK_GRAFT_BENCH_OUT`` the
+detail file.
 
-``calib_sec`` is a fixed, data-independent calibration workload
-measured FIRST in the same session — VERSION 2 since round 12 (mixed
-~4 s JVM-shuffle + Arrow/Python reps, median of 5, dispersion
-recorded; see ``calibration()``).  Cross-round comparisons should
-normalize by it WITHIN the same ``calib_version``: this box drifts
-+-2x with load, and the v1 sub-second probe itself swung 2x across
-round-11 sweeps, which is why v2 exists.
+Prints exactly ONE COMPACT JSON line (total + per-family subtotals +
+calibration; the driver's stdout capture keeps only the tail of long
+lines, which truncated round 4's 86-query line) and writes the
+per-query detail (``queries``: median, ``secs``: every repeat) to
+``BENCH_local.json``.  A subset run writes a detail file only where
+``SPARK_GRAFT_BENCH_OUT`` points: ``BENCH_local.json`` is the
+full-inventory record the next full run reads for
+``common_inventory_total``.
 
-Each query is executed fully via the noop sink (no driver collect cost,
-no skipped projections).  One warm-up run of the flagship query first so
-JVM/codegen startup isn't attributed to the first measured query.
+Every run measures ``calib_sec`` first, a fixed data-independent probe
+(VERSION 2 since round 12; see ``calibration()``), so a subset number
+is comparable across sessions.  It costs: on a 4-core machine the
+probe took ~150 s (warm-up + 5 reps of 21-26 s).  Normalize by it only
+within the same ``calib_version``; ``calib_unhealthy`` marks a probe
+whose dispersion stayed above ``CALIB_DISP_MAX`` after one re-measure.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -44,15 +48,34 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: MEDIAN, which strips the box-noise outliers that a single pass
 #: shows (+-20% observed when anything else runs on the machine).
 REPEATS = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
+#: calibration dispersion (stdev / median of the 5 reps) above which
+#: the probe is re-measured once, and flagged if it stays above
+CALIB_DISP_MAX = 0.15
 
 
 def full_inventory() -> list[str]:
     """EVERY batch query in registry order.  The st-series stays
     excluded — its replay harness measures fixture IO, not the operator
-    (the streaming ops are timed by their own tests)."""
+    (``tools/stream_bench.py`` times it)."""
     from mapreducehs_spark.queries import QUERIES
 
     return [n for n in QUERIES if not n.startswith("st")]
+
+
+def resolve_queries(arg: str) -> list[str]:
+    """Map a comma list of full query names or name prefixes (``d03``)
+    to registered names; exit non-zero naming the first unknown entry.
+    Prefixes are unique (``test_inventory_is_the_contract``)."""
+    from mapreducehs_spark.queries import QUERIES
+
+    by_prefix = {n.split("_", 1)[0]: n for n in QUERIES}
+    names = []
+    for entry in arg.split(","):
+        name = entry if entry in QUERIES else by_prefix.get(entry)
+        if name is None:
+            raise SystemExit(f"bench.py: unknown query {entry!r}")
+        names.append(name)
+    return names
 
 
 def calibration(spark) -> dict:
@@ -71,15 +94,13 @@ def calibration(spark) -> dict:
     - Python leg: 30 M-row Arrow round-trip through a pandas UDF →
       97-key aggregate.
 
-    ~4 s per rep on the reference box; warm-up + MEDIAN OF 5, with the
-    raw reps and the dispersion (sample stdev / median) recorded so
-    every artifact carries its own error bar.  Returns a dict:
-    ``{"calib_sec", "calib_disp", "calib_reps", "calib_version"}``.
-    Cross-round normalization is only meaningful within the same
-    calib_version (v2 from round 12 on; BENCH_r11 and earlier carry v1).
+    Warm-up + MEDIAN OF 5, with the raw reps and the dispersion (sample
+    stdev / median) recorded so every artifact carries its own error
+    bar.  A dispersion above ``CALIB_DISP_MAX`` is re-measured once;
+    ``calib_unhealthy`` says whether the kept reading is still above
+    it.  Returns ``{"calib_sec", "calib_disp", "calib_reps",
+    "calib_version", "calib_unhealthy"}``.
     """
-    import statistics
-
     from pyspark.sql import functions as F
 
     @F.pandas_udf("double")
@@ -115,72 +136,92 @@ def calibration(spark) -> dict:
         )
         return time.perf_counter() - t0
 
+    def measure() -> dict:
+        reps = [once() for _ in range(5)]
+        med = statistics.median(reps)
+        return {
+            "calib_sec": round(med, 4),
+            "calib_disp": round(statistics.stdev(reps) / med, 4),
+            "calib_reps": [round(t, 4) for t in reps],
+            "calib_version": 2,
+        }
+
     once()  # warm-up: JIT the generated code, spawn Python workers
-    reps = [once() for _ in range(5)]
-    med = statistics.median(reps)
-    return {
-        "calib_sec": round(med, 4),
-        "calib_disp": round(statistics.stdev(reps) / med, 4),
-        "calib_reps": [round(t, 4) for t in reps],
-        "calib_version": 2,
-    }
+    calib = measure()
+    if calib["calib_disp"] > CALIB_DISP_MAX:
+        calib = measure()
+    calib["calib_unhealthy"] = calib["calib_disp"] > CALIB_DISP_MAX
+    return calib
 
 
-def main() -> None:
-    from mapreducehs_spark.queries import QUERIES
-    from mapreducehs_spark.session import get_spark
-
-    # Round 13 (VERDICT r12 item 2b): snapshot the PREVIOUS round's
-    # per-query inventory from the committed detail file BEFORE this run
-    # overwrites it, so the compact line can report a subtotal over the
-    # queries BOTH rounds measured.  Family sums over different
-    # inventories made round-over-round comparison structurally noisy
-    # (r12's q_family "regression" was q128+q129 being new, not code);
-    # `common_inventory_total` removes that failure mode.  Additive only
-    # — `value` and `queries` are unchanged.
-    # None (reported as null) when the previous detail file is missing
-    # or unparseable — never aliased to this run's total
-    prev_inventory: set[str] | None = None
-    try:
-        with open(os.path.join(REPO, "BENCH_local.json")) as f:
-            prev_inventory = set(json.load(f).get("queries", {}))
-    except (OSError, ValueError):
-        pass
-
-    spark = get_spark(app_name="mapreducehs_spark_bench", master=f"local[{CPUS}]")
-
-    calib = calibration(spark)
-
-    def run(name: str) -> float:
-        t0 = time.perf_counter()
-        QUERIES[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    # spawn the Python UDF workers once, so Arrow-UDF queries measure
-    # kernel time rather than one interpreter startup per core
+def spawn_python_workers(spark) -> None:
+    """Start the Python UDF workers once, so Arrow-UDF queries measure
+    kernel time rather than one interpreter startup per core."""
     spark.range(0, 1024, 1, int(CPUS)).mapInPandas(
         lambda it: it, schema="id long"
     ).write.format("noop").mode("overwrite").save()
 
-    inventory = full_inventory()
 
-    # full untimed warm-up pass: JIT-compile the generated code, prime
-    # parquet footers and broadcast paths.  Measured pass = steady state
-    # (per-query codegen+JIT startup was 2-5x the steady-state time and
-    # measured the JVM, not the plan).
-    for name in inventory:
+def time_queries(spark, names: list[str], sf_dir: str, repeats: int) -> dict[str, list[float]]:
+    """Every timed wall per query: one untimed warm pass over *names*
+    (per-query codegen+JIT startup was 2-5x the steady-state time and
+    measured the JVM, not the plan), then *repeats* runs of each."""
+    from mapreducehs_spark.queries import QUERIES
+
+    def run(name: str) -> float:
+        t0 = time.perf_counter()
+        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0
+
+    for name in names:
         run(name)
     # drop frames persisted inside operators during the warm pass —
     # they are dead (each invocation builds fresh lineage) but would
     # occupy executor memory during the measured pass
     spark.catalog.clearCache()
 
-    import statistics
+    secs: dict[str, list[float]] = {}
+    for name in names:
+        secs[name] = ts = [run(name) for _ in range(repeats)]
+        print(
+            f"{name}: median={statistics.median(ts):.3f}s "
+            f"min={min(ts):.3f}s max={max(ts):.3f}s",
+            file=sys.stderr,
+            flush=True,
+        )
+    return secs
 
-    timings = {
-        name: round(statistics.median(run(name) for _ in range(REPEATS)), 4)
-        for name in inventory
-    }
+
+def main() -> None:
+    argv = sys.argv[1:]
+    if len(argv) > 1:
+        raise SystemExit("usage: python bench.py [name_or_prefix,...]")
+    inventory = resolve_queries(argv[0]) if argv else full_inventory()
+    default_detail = os.path.join(REPO, "BENCH_local.json")
+    detail_path = os.environ.get(
+        "SPARK_GRAFT_BENCH_OUT", None if argv else default_detail
+    )
+
+    from mapreducehs_spark.session import get_spark
+
+    # the PREVIOUS full run's inventory, read before this run overwrites
+    # it: `common_inventory_total` sums only the queries both runs timed
+    # (r12's q_family "regression" was q128+q129 being new, not code).
+    # None (null) when the file is missing or unparseable — never
+    # aliased to this run's total
+    prev_inventory: set[str] | None = None
+    try:
+        with open(default_detail) as f:
+            prev_inventory = set(json.load(f).get("queries", {}))
+    except (OSError, ValueError):
+        pass
+
+    spark = get_spark(app_name="mapreducehs_spark_bench", master=f"local[{CPUS}]")
+    calib = calibration(spark)
+    spawn_python_workers(spark)
+    secs = time_queries(spark, inventory, SF_DIR, REPEATS)
+
+    timings = {name: round(statistics.median(ts), 4) for name, ts in secs.items()}
     sf = SF_DIR.rstrip("/").split("sf")[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else SF_DIR
     total = round(sum(timings.values()), 4)
@@ -196,7 +237,7 @@ def main() -> None:
         fam = name.split("_")[0].rstrip("0123456789") + "_family"
         families[fam] = round(families.get(fam, 0.0) + t, 4)
 
-    full = {
+    head = {
         "metric": "batch_inventory_total_wall",
         "value": total,
         "unit": "sec",
@@ -204,30 +245,23 @@ def main() -> None:
         "n_queries": len(timings),
         "common_inventory_total": common_total,
         "common_inventory_n": common_n,
-        "queries": timings,
-        "sf": sf_val,
     }
-    # SPARK_GRAFT_BENCH_OUT redirects the detail file so off-sf runs
-    # (the /tmp/sf1 scaling pass) never clobber the committed sf0.1
-    # detail; the driver's default run is unchanged.
-    detail_path = os.environ.get(
-        "SPARK_GRAFT_BENCH_OUT", os.path.join(REPO, "BENCH_local.json")
-    )
-    with open(detail_path, "w") as f:
-        json.dump(full, f, indent=1, sort_keys=True)
-        f.write("\n")
+    if detail_path is not None:
+        full = {
+            **head,
+            "queries": timings,
+            "secs": {n: [round(t, 4) for t in ts] for n, ts in secs.items()},
+            "sf": sf_val,
+        }
+        with open(detail_path, "w") as f:
+            json.dump(full, f, indent=1, sort_keys=True)
+            f.write("\n")
 
     compact = {
-        "metric": "batch_inventory_total_wall",
-        "value": total,
-        "unit": "sec",
-        **calib,
-        "n_queries": len(timings),
-        "common_inventory_total": common_total,
-        "common_inventory_n": common_n,
+        **head,
         "queries": dict(sorted(families.items())),
         "sf": sf_val,
-        "detail": os.path.basename(detail_path),
+        "detail": detail_path and os.path.basename(detail_path),
     }
     print(json.dumps(compact))
     spark.stop()

@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from mapreducehs_spark.functions.vector import cosine_similarity, dot_product, l2_normalize
+from mapreducehs_spark.functions.vector import dot_product
 from mapreducehs_spark.operators.iteration import Materialization, materialize
 
 

@@ -13,15 +13,11 @@ import pandas as pd  # noqa: F401 — needed to resolve postponed pd.Series hint
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mapreducehs_spark.operators import dedup, multimodal, similarity, text, windows
-from mapreducehs_spark.operators import sampling as _sampling
+from mapreducehs_spark.operators import similarity, text
 from mapreducehs_spark.operators.iteration import materialize
-from mapreducehs_spark.operators.joins import asof_join
-from mapreducehs_spark.pipeline import word_count_pipeline
-from mapreducehs_spark.sources.catalog import load_table
 
 from mapreducehs_spark.queries._registry import ORACLE, QUERIES, query  # noqa: F401
-from mapreducehs_spark.queries._shared import (  # noqa: F401
+from mapreducehs_spark.queries._shared import (
     _t,
 )
 

@@ -6,22 +6,17 @@ behavior change — plan fingerprints held).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 import pandas as pd  # noqa: F401 — needed to resolve postponed pd.Series hints in pandas UDFs
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreducehs_spark.operators import dedup, multimodal, similarity, text, windows
-from mapreducehs_spark.operators import sampling as _sampling
+from mapreducehs_spark.operators import dedup, text
 from mapreducehs_spark.operators.iteration import materialize
-from mapreducehs_spark.operators.joins import asof_join
-from mapreducehs_spark.pipeline import word_count_pipeline
-from mapreducehs_spark.sources.catalog import FIXTURE_ROOT, load_table, table_files
+from mapreducehs_spark.sources.catalog import FIXTURE_ROOT, table_files
 
-from mapreducehs_spark.queries._registry import ORACLE, QUERIES, query  # noqa: F401
-from mapreducehs_spark.queries._shared import (  # noqa: F401
+from mapreducehs_spark.queries._registry import ORACLE, query
+from mapreducehs_spark.queries._shared import (
     _MIX_CTES,
     _Q115_FUNNEL_ORACLE,
     _T26_ORACLE,
@@ -30,7 +25,7 @@ from mapreducehs_spark.queries._shared import (  # noqa: F401
     _mixture_tok,
     _t,
 )
-from mapreducehs_spark.queries.q_ext import (  # noqa: F401
+from mapreducehs_spark.queries.q_ext import (
     q91_scd2_dimension,
 )
 from mapreducehs_spark.queries.t_text import _T40_CTX
@@ -64,10 +59,6 @@ def _state_bound(sf_dir: str, table: str = "events") -> int:
     import os
 
     return 4 * sum(os.path.getsize(f) for f in table_files(sf_dir, table))
-
-
-def _events_state_bound(sf_dir: str) -> int:
-    return _state_bound(sf_dir, "events")
 
 
 @query(
@@ -225,7 +216,7 @@ def st05_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined,
         "st05_sink",
         output_mode="append",
-        state_bytes=_events_state_bound(sf_dir),
+        state_bytes=_state_bound(sf_dir),
     )
 
 
@@ -627,7 +618,7 @@ def st14_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined,
         "st14_sink",
         output_mode="append",
-        state_bytes=_events_state_bound(sf_dir),
+        state_bytes=_state_bound(sf_dir),
     )
     return out.filter(F.col("user_id") >= 0)
 

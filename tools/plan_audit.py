@@ -1,12 +1,13 @@
-"""Plan-fingerprint audit: one JSON line of plan metrics per headline query.
+"""Plan-fingerprint audit: one row of plan metrics per batch query.
 
 The 49 pin tests lock the plan SHAPES that matter most; this tool
 records the coarse plan metrics (exchange / broadcast-join /
-sort-merge-join / codegen-span counts) for EVERY bench headline query
-into ``PLANS.json``, committed per round — so a silent plan regression
-anywhere in the headline (a broadcast degrading to SMJ, an extra
-exchange creeping into an iteration) shows up as a one-line diff in
-review even where no pin test exists yet.
+sort-merge-join / codegen-span counts) for EVERY batch query
+(``bench.full_inventory()``) into ``PLANS.json``, committed per round —
+so a silent plan regression anywhere in the inventory (a broadcast
+degrading to SMJ, an extra exchange creeping into an iteration) shows
+up as a one-line diff in review even where no pin test exists yet.
+One query's full plan is ``plans.inspect.formatted_plan(df)``.
 
 Plans are BUILT, never executed — with known exceptions that EXECUTE
 real cluster work during build (ADVICE r06: this list had gone stale),

@@ -12,6 +12,11 @@ sink, calibration probe first):
       SPARK_GRAFT_BENCH_OUT=/tmp/bench_sf1.json python bench.py
 
   python tools/scaling_gate.py [sf1_detail] [sf01_detail] [out]
+  python tools/scaling_gate.py --adjudicate [out]   # re-time flagged queries
+
+``--adjudicate`` times each flagged query with ``bench.time_queries`` at
+$SPARK_GRAFT_SF_DIR and $SPARK_GRAFT_SF1_DIR.  To re-time a few queries
+at one scale, run ``bench.py`` on them (``python bench.py t02,q96``).
 
 Writes SCALING.json: per query the raw ratio, the CALIB-NORMALIZED
 ratio (each file records calib_sec — the fixed data-independent probe —
@@ -157,35 +162,24 @@ def adjudicate() -> None:
         print(f"near-threshold re-measured alongside flagged: {near}", flush=True)
 
     import statistics
-    import time
 
     sys.path.insert(0, REPO)
     os.chdir(REPO)
-    from mapreducehs_spark.queries import QUERIES
-    from mapreducehs_spark.session import DEFAULT_CPUS, get_spark
+    from bench import spawn_python_workers, time_queries
+
+    from mapreducehs_spark.session import get_spark
 
     spark = get_spark(app_name="scaling_adjudicate")
-    spark.range(0, 1024, 1, int(DEFAULT_CPUS)).mapInPandas(
-        lambda it: it, schema="id long"
-    ).write.format("noop").mode("overwrite").save()
-
-    def med3(name: str, sf_dir: str) -> float:
-        def run() -> float:
-            t0 = time.perf_counter()
-            QUERIES[name](sf_dir=sf_dir, spark=spark).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            return time.perf_counter() - t0
-
-        run()  # warm-up
-        return statistics.median(run() for _ in range(3))
+    spawn_python_workers(spark)
 
     sf01_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf1_dir = os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/sf1")
     still = []
     for name in flagged:
-        t01 = med3(name, sf01_dir)
-        t1 = med3(name, sf1_dir)
+        t01, t1 = (
+            statistics.median(time_queries(spark, [name], sf_dir, 3)[name])
+            for sf_dir in (sf01_dir, sf1_dir)
+        )
         ratio = round(t1 / t01, 3) if t01 > 0 else float("inf")
         row = data["queries"][name]
         row["adjudicated_sf01_sec"] = round(t01, 4)

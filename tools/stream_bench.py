@@ -120,6 +120,7 @@ def prewarm_fixtures(spark) -> None:
 
 def main() -> None:
     import __spark_entry__ as entry
+    from bench import spawn_python_workers
     from mapreducehs_spark.session import get_spark
 
     spark = get_spark(
@@ -128,12 +129,9 @@ def main() -> None:
     listener = StateFootprintListener()
     spark.streams.addListener(listener)
 
-    # spawn Python UDF workers once (same reason as bench.py): the
-    # applyInPandasWithState queries should measure kernel time, not one
-    # interpreter startup per core attributed to whichever st query runs first
-    spark.range(0, 1024, 1, int(CPUS)).mapInPandas(
-        lambda it: it, schema="id long"
-    ).write.format("noop").mode("overwrite").save()
+    # the applyInPandasWithState queries should measure kernel time, not
+    # one interpreter startup per core attributed to whichever runs first
+    spawn_python_workers(spark)
 
     prewarm_fixtures(spark)
 

@@ -6,16 +6,18 @@ signal, so super-linear STATE growth was unmeasured).
   python tools/stream_bench.py                                  # sf0.1
   SPARK_GRAFT_STREAM_BENCH_OUT=/tmp/stream_bench_sf1.json \
   SPARK_GRAFT_STREAM_REPEATS=1 python tools/stream_bench.py /tmp/sf1
-  python tools/stream_scaling.py [sf1_detail] [sf01_detail] [out]
+  python tools/stream_scaling.py [sf1_detail] [sf01_detail] [out] \
+      [sf1_dir] [sf01_dir]
 
 Writes STREAM_SCALING.json with, per query:
 
 - ``wall_ratio`` — sec(sf1)/sec(sf0.1); flagged when it exceeds
   GATE_RATIO (12x = 10x data + headroom) AND the sf1 wall is above
-  FLOOR_SEC (sub-second ratios measure the box, not the plan — the
-  batch gate's law).  The stream suite has no calibration probe; walls
-  here include trigger scheduling overhead, so a borderline ratio
-  should be re-measured isolated before concluding anything.
+  FLOOR_SEC (sub-second ratios measure the box, not the plan).  Both
+  are the batch gate's, imported from ``scaling_gate.py``.  The stream
+  suite has no calibration probe; walls here include trigger
+  scheduling overhead, so a borderline ratio should be re-measured
+  isolated before concluding anything.
 - ``state_ratio`` — peak_state_rows(sf1)/peak_state_rows(sf0.1); the
   streaming-specific signal.  There is no single gate: BOUNDED-state
   claims (st12's LRU, st22's Bloom shards, st25's fixed histogram,
@@ -34,10 +36,10 @@ import json
 import os
 import sys
 
+from scaling_gate import FLOOR_SEC, GATE_RATIO  # the batch gate's wall law
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-GATE_RATIO = 12.0  # data-proportional ceiling: 10x data + headroom
-FLOOR_SEC = 1.0  # sf1 wall below this never wall-flags (noise regime)
 BOUNDED_SLACK = 2.0  # bounded-state claims may wobble (batch slicing), not grow
 
 #: st queries whose docstrings claim state INDEPENDENT of corpus size
