@@ -12,8 +12,8 @@ finishes.  ``SPARK_GRAFT_BENCH_REPEATS`` sets the repeats,
 detail file.
 
 Prints exactly ONE COMPACT JSON line (total + per-family subtotals +
-calibration; the driver's stdout capture keeps only the tail of long
-lines, which truncated round 4's 86-query line) and writes the
+calibration; a stdout capture that keeps only the tail of long lines
+truncated round 4's 86-query line) and writes the
 per-query detail (``queries``: median, ``secs``: every repeat) to
 ``BENCH_local.json``.  A subset run writes a detail file only where
 ``SPARK_GRAFT_BENCH_OUT`` points: ``BENCH_local.json`` is the
