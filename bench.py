@@ -21,9 +21,14 @@ full-inventory record the next full run reads for
 ``common_inventory_total``.
 
 Every run measures ``calib_sec`` first, a fixed data-independent probe
-(VERSION 2 since round 12; see ``calibration()``), so a subset number
-is comparable across sessions.  It costs: on a 4-core machine the
-probe took ~150 s (warm-up + 5 reps of 21-26 s).  Normalize by it only
+(VERSION 2 since round 12; see ``calibration()``), so a run's walls
+compare across sessions with a run over the same query names.  A subset
+wall does NOT compare with the same query's wall in a full-inventory
+run, calibrated or not: the full run times each query after hundreds
+of earlier queries have warmed the JVM, the subset after a handful
+(d03 read 10.5 s in a two-query run and 3.2 s in a full run on the
+same code and machine).  The probe took ~150 s on a 4-core machine
+(warm-up + 5 reps of 21-26 s).  Normalize by it only
 within the same ``calib_version``; ``calib_unhealthy`` marks a probe
 whose dispersion stayed above ``CALIB_DISP_MAX`` after one re-measure.
 """

@@ -112,10 +112,10 @@ def srp_band_keys_udf(planes: np.ndarray, bands: int):
     return band_keys
 
 
-def quantize_udf(levels: int = 127):
+def quantize_udf():
     """UDF: array<float> → array<long> int8-style scalar quantization.
 
-    Per-vector symmetric quantization: ``q[i] = floor(x[i]/s * levels
+    Per-vector symmetric quantization: ``q[i] = floor(x[i]/s * 127
     + 0.5)`` with ``s = max|x|`` — every op (float32→float64 widening,
     divide, multiply, add, floor) is an exactly-specified IEEE-754
     double op, so an engine-independent oracle reproduces the codes
@@ -124,13 +124,11 @@ def quantize_udf(levels: int = 127):
     """
     from pyspark.sql.types import LongType
 
-    lv = float(levels)
-
     @pandas_udf(ArrayType(LongType()))
     def quantize(vecs: pd.Series) -> pd.Series:
         m = _stack(vecs)
         s = np.abs(m).max(axis=1, keepdims=True)
-        q = np.floor(np.divide(m, s, out=np.zeros_like(m), where=s > 0) * lv + 0.5)
+        q = np.floor(np.divide(m, s, out=np.zeros_like(m), where=s > 0) * 127.0 + 0.5)
         return pd.Series(list(q.astype(np.int64)))
 
     return quantize

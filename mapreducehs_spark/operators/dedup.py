@@ -49,13 +49,13 @@ from mapreducehs_spark.operators.text import tokens
 _H31 = (1 << 31) - 1
 
 
-def duplicate_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def duplicate_groups(df: DataFrame) -> DataFrame:
     """Per content hash: group size + representative (min) id."""
     return (
-        df.groupBy(F.md5(F.col(text_col)).alias("content_hash"))
+        df.groupBy(F.md5(F.col("text")).alias("content_hash"))
         .agg(
             F.count(F.lit(1)).alias("n_dups"),
-            F.min(id_col).alias("keep_id"),
+            F.min("doc_id").alias("keep_id"),
         )
     )
 
@@ -96,9 +96,7 @@ def shingle_frame(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFram
     )
 
 
-def hashed_shingle_rows(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> DataFrame:
+def hashed_shingle_rows(df: DataFrame, n: int = 3) -> DataFrame:
     """(id, set_size, shingle) — the distinct word-n-gram shingles of
     each doc as 64-bit hashes, pre-exploded one row per shingle.
 
@@ -150,7 +148,7 @@ def hashed_shingle_rows(
 
     par = df.sparkSession.sparkContext.defaultParallelism
     return (
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
+        df.select(F.col("doc_id").alias("id"), F.col("text").alias("__text"))
         .repartition(par)
         .mapInPandas(kernel, "id long, set_size long, shingle long")
     )
@@ -159,9 +157,6 @@ def hashed_shingle_rows(
 def ngram_jaccard_intersections(
     m: Materialization,
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     max_shingle_df: int | None = 1000,
 ) -> DataFrame:
     """Raw pairwise shingle-intersection counts (the integer core of
@@ -172,7 +167,7 @@ def ngram_jaccard_intersections(
     a rounded double — no FP anywhere in the predicate."""
     # persist: both sides of the self-join and the doc-frequency guard
     # read this frame — without it the shingle kernel runs 3x.
-    exploded = m.persist(hashed_shingle_rows(df, text_col, id_col, n))
+    exploded = m.persist(hashed_shingle_rows(df))
     if max_shingle_df is not None:
         keep = (
             exploded.groupBy("shingle")
@@ -195,9 +190,6 @@ def ngram_jaccard_intersections(
 def ngram_jaccard_pairs(
     m: Materialization,
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     threshold: float = 0.5,
     max_shingle_df: int | None = 1000,
 ) -> DataFrame:
@@ -209,7 +201,7 @@ def ngram_jaccard_pairs(
     the join (boilerplate guard — bounds the worst bucket at scale).
     Returns (id_a, id_b, jaccard) with id_a < id_b.
     """
-    inter = ngram_jaccard_intersections(m, df, text_col, id_col, n, max_shingle_df)
+    inter = ngram_jaccard_intersections(m, df, max_shingle_df)
     return (
         inter.withColumn(
             "jaccard",
@@ -227,9 +219,6 @@ def ngram_jaccard_pairs(
 def near_dedup_verified_edges_checked(
     m: Materialization,
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
     est_threshold: float = 0.25,
     jaccard_threshold: float = 0.5,
 ) -> DataFrame:
@@ -251,19 +240,15 @@ def near_dedup_verified_edges_checked(
     a minute).  Returns the LAZY verified-pair frame (the caller's
     closure materializes it in its one action) over the candidate and
     shingle-set frames persisted in ``m``."""
-    cands = m.persist(
-        minhash_lsh_pairs_checked(df, text_col, id_col, shingle_n, est_threshold).select(
-            "id_a", "id_b"
-        )
-    )
+    cands = m.persist(minhash_lsh_pairs_checked(df, est_threshold).select("id_a", "id_b"))
     cand_docs = (
         cands.select(F.col("id_a").alias("cid"))
         .unionByName(cands.select(F.col("id_b").alias("cid")))
         .distinct()
     )
-    subset = df.join(cand_docs, df[id_col] == cand_docs.cid, "left_semi")
+    subset = df.join(cand_docs, df["doc_id"] == cand_docs.cid, "left_semi")
     sets = m.persist(
-        hashed_shingle_rows(subset, text_col, id_col, shingle_n)
+        hashed_shingle_rows(subset)
         .groupBy("id")
         .agg(F.collect_list("shingle").alias("hs"))
     )
@@ -293,9 +278,6 @@ def near_dedup_verified_edges_checked(
 
 def near_dedup_drop_list_checked(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
     est_threshold: float = 0.25,
     jaccard_threshold: float = 0.5,
 ) -> DataFrame:
@@ -315,22 +297,14 @@ def near_dedup_drop_list_checked(
     exact pass decides.  The candidate/shingle caches are freed on
     return: connected_components_star materializes its result."""
     with materialize(df.sparkSession) as m:
-        verified = near_dedup_verified_edges_checked(
-            m, df, text_col, id_col, shingle_n, est_threshold, jaccard_threshold
-        )
+        verified = near_dedup_verified_edges_checked(m, df, est_threshold, jaccard_threshold)
         cc = connected_components_star(verified)
     return cc.select(F.col("node").alias("doc_id"), F.col("rep").alias("rep_id"))
 
 
-def decontaminate(
-    train: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 8,
-) -> DataFrame:
+def decontaminate(train: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Train/eval decontamination: per training doc, how many of its
-    distinct word ``n``-grams also occur in the ``benchmark`` corpus.
+    distinct word 8-grams also occur in the ``benchmark`` corpus.
 
     The benchmark side (eval sets are MBs, the training corpus is TBs)
     collapses to DISTINCT n-gram hashes and BROADCASTS, so the training
@@ -341,8 +315,8 @@ def decontaminate(
     docs only; downstream policy (drop doc vs. ratio threshold) is the
     caller's.
     """
-    bench = hashed_shingle_rows(benchmark, text_col, id_col, n).select("shingle").distinct()
-    tr = hashed_shingle_rows(train, text_col, id_col, n)
+    bench = hashed_shingle_rows(benchmark, 8).select("shingle").distinct()
+    tr = hashed_shingle_rows(train, 8)
     return (
         tr.join(F.broadcast(bench), "shingle")
         .groupBy("id", "set_size")
@@ -356,12 +330,7 @@ def decontaminate(
     )
 
 
-def minhash_sigs_scan_shaped(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-) -> DataFrame:
+def minhash_sigs_scan_shaped(df: DataFrame) -> DataFrame:
     """Checked-law MinHash signatures computed WITHOUT a shuffle: the
     16 permutation minima fold inside ONE row-local ``F.aggregate``
     over the shingle-hash array, so the signature frame is a pure
@@ -374,7 +343,7 @@ def minhash_sigs_scan_shaped(
     The md5 runs once per shingle: the hash array is the aggregate's
     INPUT argument (evaluated once), and only the cheap
     ``least((a*v+b) % p)`` zip runs 16× per shingle inside the fold.
-    Docs with fewer than ``shingle_n`` tokens are dropped (no shingles
+    Docs with fewer than 3 tokens are dropped (no shingles
     → no signature), matching the grouped kernel.
 
     Returns (id, mins: array<bigint>[16]).  This is the shape a 100 TB
@@ -393,13 +362,13 @@ def minhash_sigs_scan_shaped(
     )
     par = df.sparkSession.sparkContext.defaultParallelism
     staged = (
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
+        df.select(F.col("doc_id").alias("id"), F.col("text").alias("__text"))
         .repartition(par)
         .select("id", tokens(F.col("__text")).alias("__toks"))
-        .filter(F.size("__toks") >= shingle_n)
+        .filter(F.size("__toks") >= 3)
     )
     xs = F.transform(
-        shingles_of("__toks", shingle_n),
+        shingles_of("__toks", 3),
         lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint") % p,
     )
     mins = F.aggregate(
@@ -436,15 +405,7 @@ def _minhash_band_keys(mins_col, n_bands: int | None = None):
     )
 
 
-def decontaminate_fuzzy(
-    m: Materialization,
-    train: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    est_threshold: float = 0.25,
-) -> DataFrame:
+def decontaminate_fuzzy(m: Materialization, train: DataFrame, benchmark: DataFrame) -> DataFrame:
     """FUZZY train/eval decontamination — the MinHash sibling of
     ``decontaminate``: where the exact pass catches verbatim n-gram
     overlap, this catches PARAPHRASED benchmark leakage (reordered or
@@ -468,12 +429,12 @@ def decontaminate_fuzzy(
     is the lowest-id benchmark doc at the maximum estimate
     (deterministic tie-break).
     """
-    bench_sigs = m.result(minhash_sigs_scan_shaped(benchmark, text_col, id_col, shingle_n))
+    bench_sigs = m.result(minhash_sigs_scan_shaped(benchmark))
     bench_banded = bench_sigs.select(
         F.col("id").alias("eval_id"),
         F.posexplode(_minhash_band_keys("mins")).alias("band", "bk"),
     )
-    train_sigs = minhash_sigs_scan_shaped(train, text_col, id_col, shingle_n)
+    train_sigs = minhash_sigs_scan_shaped(train)
     cand = (
         train_sigs.select(
             "id", "mins", F.posexplode(_minhash_band_keys("mins")).alias("band", "bk")
@@ -497,7 +458,7 @@ def decontaminate_fuzzy(
             "eval_id",
         )
         .withColumn("est", F.round(agree / float(MINHASH_CHECK_NUM_PERM), 6))
-        .filter(F.col("est") >= est_threshold)
+        .filter(F.col("est") >= 0.25)
         .select("id", "eval_id", "est")
     )
     best = F.max(F.struct(F.col("est").alias("e"), (-F.col("eval_id")).alias("nid")))
@@ -516,13 +477,7 @@ def decontaminate_fuzzy(
     )
 
 
-def chunk_dup_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    facet: str = "source",
-    chunk_tokens: int = 16,
-) -> DataFrame:
+def chunk_dup_stats(df: DataFrame, chunk_tokens: int = 16) -> DataFrame:
     """Sub-document (chunk-level) duplication profile per facet — the
     boilerplate/template detector run before training-data dedup.
 
@@ -546,7 +501,7 @@ def chunk_dup_stats(
     # exchanges (guide §2.1/§2.4; the chunk-hash groupBy still pays its
     # narrow exchange)
     staged = (
-        df.select(F.col(id_col).alias("id"), F.col(facet).alias("facet"), F.col(text_col).alias("__text"))
+        df.select(F.col("doc_id").alias("id"), F.col("source").alias("facet"), F.col("text").alias("__text"))
         .repartition(par, "id")
         .select("id", "facet", tokens(F.col("__text")).alias("__toks"))
     )
@@ -586,7 +541,7 @@ def chunk_dup_stats(
                 "avg_dup_frac"
             ),
         )
-        .withColumnRenamed("facet", facet)
+        .withColumnRenamed("facet", "source")
     )
 
 
@@ -612,9 +567,6 @@ def minhash_check_seeds() -> tuple[list[int], list[int]]:
 
 def minhash_checked_signatures(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
     m: Materialization | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """The checked-MinHash SIGNATURE + BANDING stages as a reusable
@@ -649,13 +601,13 @@ def minhash_checked_signatures(
     # aggregates (guide §2.1/§2.4; interleaved A/B at sf0.1: 1.12 s vs
     # 1.48 s median, results identical).
     staged = (
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
+        df.select(F.col("doc_id").alias("id"), F.col("text").alias("__text"))
         .repartition(par, "id")
         .select("id", tokens(F.col("__text")).alias("__toks"))
-        .filter(F.size("__toks") >= shingle_n)
+        .filter(F.size("__toks") >= 3)
     )
     shingles = (
-        staged.select("id", F.explode_outer(shingles_of("__toks", shingle_n)).alias("s"))
+        staged.select("id", F.explode_outer(shingles_of("__toks", 3)).alias("s"))
         .filter(F.col("s").isNotNull())
     )
     x = F.conv(F.substring(F.md5("s"), 1, 15), 16, 10).cast("bigint") % p
@@ -686,13 +638,7 @@ def minhash_checked_signatures(
     return sigs, banded
 
 
-def minhash_lsh_pairs_checked(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    est_threshold: float = 0.25,
-) -> DataFrame:
+def minhash_lsh_pairs_checked(df: DataFrame, est_threshold: float = 0.25) -> DataFrame:
     """MinHash LSH near-dup pairs in a fully ENGINE-PORTABLE formulation:
     shingle ids are md5-hex folds (not siphash/xxhash, which only Spark
     has), permutations are universal hashes with literal seeds, and band
@@ -706,9 +652,7 @@ def minhash_lsh_pairs_checked(
     associative), candidates come from a band-key equi-join, and only
     candidate pairs compare signatures.
     """
-    sigs, banded = minhash_checked_signatures(
-        df, text_col=text_col, id_col=id_col, shingle_n=shingle_n
-    )
+    sigs, banded = minhash_checked_signatures(df)
     cand = (
         banded.select(F.col("id").alias("id_a"), "band", "bk")
         .join(banded.select(F.col("id").alias("id_b"), "band", "bk"), ["band", "bk"])
@@ -746,13 +690,7 @@ SIMHASH_CHECK_BITS = 32
 SIMHASH_CHECK_BANDS = 4
 
 
-def simhash_checked(
-    m: Materialization,
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 2,
-) -> DataFrame:
+def simhash_checked(m: Materialization, df: DataFrame, max_hamming: int = 2) -> DataFrame:
     """SimHash near-dup pairs in an engine-portable formulation (the
     d11 discipline applied to simhash): token hashes are md5-hex folds,
     the 32 signature bits are per-bit term-frequency-weighted majority
@@ -777,7 +715,7 @@ def simhash_checked(
     # §2.1/§2.4; interleaved A/B at sf0.1: 1.85 s vs 2.67 s median,
     # results identical).
     staged = (
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
+        df.select(F.col("doc_id").alias("id"), F.col("text").alias("__text"))
         .repartition(par, "id")
         .select("id", F.explode_outer(tokens(F.col("__text"))).alias("tok"))
         .filter(F.col("tok").isNotNull())
@@ -828,18 +766,13 @@ def simhash_checked(
     )
 
 
-def fuzzy_name_pairs(
-    df: DataFrame,
-    name_col: str,
-    max_edit: int = 2,
-    band_width: int | None = None,
-) -> DataFrame:
+def fuzzy_name_pairs(df: DataFrame, name_col: str) -> DataFrame:
     """Entity-resolution candidate pairs: DISTINCT names within
-    ``max_edit`` Levenshtein distance, with COMPLETE length-band
-    blocking — never all-pairs.
+    Levenshtein distance 2, with COMPLETE length-band blocking — never
+    all-pairs.
 
-    Edit distance ≤ k implies |len(a) − len(b)| ≤ k, so banding lengths
-    at width > k and exploding the left side to adjacent bands loses
+    Edit distance ≤ 2 implies |len(a) − len(b)| ≤ 2, so banding lengths
+    at width 3 and exploding the left side to adjacent bands loses
     nothing: every qualifying pair meets in some band.  The verify step
     is the built-in ``levenshtein`` (JVM codegen).  At 100 TB the name
     frame is the DISTINCT name vocabulary — orders of magnitude smaller
@@ -848,9 +781,8 @@ def fuzzy_name_pairs(
     drops in at the same place when name vocabularies are huge.
     Returns (name_a, name_b, edit_dist), name_a < name_b.
     """
-    bw = band_width or (max_edit + 1)
     names = df.select(F.col(name_col).alias("name")).distinct()
-    banded = names.select("name", F.floor(F.length("name") / bw).alias("b"))
+    banded = names.select("name", F.floor(F.length("name") / 3).alias("b"))
     left = banded.select(
         F.col("name").alias("name_a"),
         F.explode(
@@ -862,7 +794,7 @@ def fuzzy_name_pairs(
         left.join(right, "b")
         .filter(F.col("name_a") < F.col("name_b"))
         .withColumn("edit_dist", F.levenshtein("name_a", "name_b").cast("long"))
-        .filter(F.col("edit_dist") <= max_edit)
+        .filter(F.col("edit_dist") <= 2)
         .select("name_a", "name_b", "edit_dist")
         .dropDuplicates(["name_a", "name_b"])
     )
@@ -999,9 +931,6 @@ def semantic_dedup(
     n_clusters: int = 32,
     tau_num: int = 2,
     tau_den: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 1000,
 ) -> DataFrame:
     """SEMANTIC (embedding-space) dedup, SemDeDup-style (Abbas et al.
     2023, arXiv:2303.09540): cluster the corpus embeddings, then within
@@ -1041,9 +970,9 @@ def semantic_dedup(
 
     den2, num2 = tau_den * tau_den, tau_num * tau_num
     base = emb.select(
-        F.col(id_col).alias("vec_id"),
+        "vec_id",
         F.expr(
-            f"transform({vec_col}, x -> cast(floor(cast(x as double) * {scale}) as bigint))"
+            "transform(embedding, x -> cast(floor(cast(x as double) * 1000) as bigint))"
         ).alias("v"),
     )
     seed_rows = base.orderBy("vec_id").limit(n_clusters).collect()
@@ -1098,11 +1027,7 @@ def semantic_dedup(
     )
 
 
-def hash64_canonical_dedup(
-    hashes: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "id",
-) -> DataFrame:
+def hash64_canonical_dedup(hashes: DataFrame) -> DataFrame:
     """Canonical near-dup resolution over 64-bit perceptual hashes
     (lo/hi int32 halves): (member, rep, class_size) — one row per
     NON-representative member of each duplicate class, rep = the
@@ -1128,13 +1053,11 @@ def hash64_canonical_dedup(
        component id (min doc id) + class size broadcast back to
        members via the hash key — output linear in members.
 
-    Banding stays m11's pigeonhole guarantee: ≤ ``max_hamming`` (< 4)
+    Banding stays m11's pigeonhole guarantee: ≤ 3 (< 4)
     differing bits cannot touch all four 16-bit quarters, so recall
     over candidate pairs is exact, not probabilistic.
     """
-    return banded_canonical_dedup(
-        hashes, ["lo", "hi"], _hash64_bands(), max_hamming=max_hamming, id_col=id_col
-    )
+    return banded_canonical_dedup(hashes, ["lo", "hi"], _hash64_bands())
 
 
 def _hash64_bands():
@@ -1189,14 +1112,7 @@ def _banded_rep_edges(
     )
 
 
-def banded_duplicate_edges(
-    m: Materialization,
-    hashes: DataFrame,
-    key_cols: list[str],
-    bands_arr,
-    max_hamming: int = 3,
-    id_col: str = "id",
-):
+def banded_duplicate_edges(m: Materialization, hashes: DataFrame, key_cols: list[str], bands_arr):
     """Raw connectivity edges of the banded near-dup graph WITHOUT the
     per-arm closure/emit (round 12, guide §1.2 step 1 — don't compute
     what the caller throws away): member→hash-rep edges for every
@@ -1211,11 +1127,11 @@ def banded_duplicate_edges(
     Returns a LAZY (id_a, id_b) frame over caches held in ``m`` — so
     the caller's closure materializes every arm in its ONE edge-list
     count instead of paying a per-arm materialization action."""
-    h = m.persist(hashes.select(F.col(id_col).alias("id"), *key_cols))
+    h = m.persist(hashes.select("id", *key_cols))
     grp = m.persist(
         h.groupBy(*key_cols).agg(F.min("id").alias("hrep"), F.count(F.lit(1)).alias("cnt"))
     )
-    rep_edges = _banded_rep_edges(grp, key_cols, bands_arr, max_hamming)
+    rep_edges = _banded_rep_edges(grp, key_cols, bands_arr, 3)
     mem_edges = (
         h.join(grp.select(*key_cols, "hrep"), key_cols)
         .filter(F.col("id") != F.col("hrep"))
@@ -1224,35 +1140,22 @@ def banded_duplicate_edges(
     return rep_edges.unionByName(mem_edges)
 
 
-def hash64_duplicate_edges(
-    m: Materialization,
-    hashes: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "id",
-):
+def hash64_duplicate_edges(m: Materialization, hashes: DataFrame):
     """``banded_duplicate_edges`` at hash64_canonical_dedup's width: raw
     (id_a, id_b) connectivity edges of the 64-bit perceptual-hash
     near-dup graph (lazy, over caches held in ``m``), for callers that
     run ONE shared closure over several modality arms (m14)."""
-    return banded_duplicate_edges(
-        m, hashes, ["lo", "hi"], _hash64_bands(), max_hamming=max_hamming, id_col=id_col
-    )
+    return banded_duplicate_edges(m, hashes, ["lo", "hi"], _hash64_bands())
 
 
-def banded_canonical_dedup(
-    hashes: DataFrame,
-    key_cols: list[str],
-    bands_arr,
-    max_hamming: int = 3,
-    id_col: str = "id",
-) -> DataFrame:
-    """The WIDTH-PARAMETERIZED canonical near-dup seam (round 8,
-    VERDICT r07 item 7): exact-dup contraction → pigeonhole banding
-    over DISTINCT fingerprints → popcount verify → star-CC → linear
+def banded_canonical_dedup(hashes: DataFrame, key_cols: list[str], bands_arr) -> DataFrame:
+    """The WIDTH-PARAMETERIZED canonical near-dup seam: exact-dup
+    contraction → pigeonhole banding over DISTINCT fingerprints →
+    popcount verify (Hamming ≤ 3) → star-CC → linear
     (member, rep, class_size) emit, for ANY fingerprint laid out as
     integer word columns ``key_cols`` with band keys ``bands_arr``
     (an array Column over those words; pigeonhole guarantee requires
-    ``len(bands) > max_hamming``).
+    ``len(bands) > 3``, the Hamming bound).
 
     WIDTH CHOICE (the measured occupancy model, SCALE.md round-7
     band-occupancy section): with B bands of b bits each, expected
@@ -1272,11 +1175,11 @@ def banded_canonical_dedup(
     64-bit instantiation, m13 the 128-bit one.
     """
     with materialize(hashes.sparkSession) as m:
-        h = m.persist(hashes.select(F.col(id_col).alias("id"), *key_cols))
+        h = m.persist(hashes.select("id", *key_cols))
         grp = m.persist(
             h.groupBy(*key_cols).agg(F.min("id").alias("hrep"), F.count(F.lit(1)).alias("cnt"))
         )
-        edges = _banded_rep_edges(grp, key_cols, bands_arr, max_hamming)
+        edges = _banded_rep_edges(grp, key_cols, bands_arr, 3)
         cc = connected_components_star(edges)  # (node, rep); executes here
         crep = grp.join(cc, grp.hrep == cc.node, "left").select(
             *key_cols, "cnt", F.coalesce("rep", "hrep").alias("comp")
@@ -1294,11 +1197,7 @@ def banded_canonical_dedup(
         )
 
 
-def hash128_canonical_dedup(
-    hashes: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "id",
-) -> DataFrame:
+def hash128_canonical_dedup(hashes: DataFrame) -> DataFrame:
     """``hash64_canonical_dedup`` at 128-bit fingerprint width — the
     band-occupancy mitigation SCALE.md's round-7 probe recorded: the
     four pigeonhole bands ARE the four 32-bit words (w0..w3), so a
@@ -1312,8 +1211,6 @@ def hash128_canonical_dedup(
         hashes,
         ["w0", "w1", "w2", "w3"],
         F.array("w0", "w1", "w2", "w3"),
-        max_hamming=max_hamming,
-        id_col=id_col,
     )
 
 
@@ -1327,13 +1224,7 @@ def hash128_canonical_dedup(
 CDC_DIVISOR = 16
 
 
-def content_defined_chunks(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    facet: str = "source",
-    divisor: int = CDC_DIVISOR,
-) -> DataFrame:
+def content_defined_chunks(df: DataFrame, divisor: int = CDC_DIVISOR) -> DataFrame:
     """Per-chunk frame under CONTENT-DEFINED chunking — the storage-dedup
     boundary rule (Rabin fingerprinting / FastCDC) applied at token
     level: a cut falls after token ``j`` exactly when the 3-gram ending
@@ -1366,9 +1257,9 @@ def content_defined_chunks(
     par = df.sparkSession.sparkContext.defaultParallelism
     toks = (
         df.select(
-            F.col(id_col).alias("id"),
-            F.col(facet).alias("facet"),
-            tokens(F.col(text_col)).alias("t"),
+            F.col("doc_id").alias("id"),
+            F.col("source").alias("facet"),
+            tokens(F.col("text")).alias("t"),
         )
         .filter(F.size("t") >= 1)  # sequence(1, 0) would DESCEND (t21)
         # by-id staging (round 12): the chunk-id prefix-sum window, the
@@ -1449,24 +1340,19 @@ BLOOM_M_BITS = 1 << 20
 BLOOM_WORD_BITS = 32
 
 
-def _bloom_positions(text_col, k: int = BLOOM_K, m_bits: int = BLOOM_M_BITS):
-    """The k bit positions of ``text_col`` — seeded md5-folds
+def _bloom_positions(text_col, m_bits: int = BLOOM_M_BITS):
+    """The BLOOM_K bit positions of ``text_col`` — seeded md5-folds
     ``md5("<j>:" || text) % m`` (engine-portable: the d11 discipline)."""
     return [
         F.conv(
             F.substring(F.md5(F.concat(F.lit(f"{j}:"), text_col)), 1, 12), 16, 10
         ).cast("bigint")
         % m_bits
-        for j in range(k)
+        for j in range(BLOOM_K)
     ]
 
 
-def bloom_text_index(
-    df: DataFrame,
-    text_col: str = "text",
-    k: int = BLOOM_K,
-    m_bits: int = BLOOM_M_BITS,
-) -> DataFrame:
+def bloom_text_index(df: DataFrame) -> DataFrame:
     """Build a Bloom filter over ``df``'s text as a (word, w) frame of
     32-bit words — the SPACE-BOUNDED historical content index: O(m)
     bits regardless of corpus size, built with one partial-aggregatable
@@ -1476,9 +1362,7 @@ def bloom_text_index(
     shuffle join; this trades a measured false-positive rate for an
     index that always fits in a broadcast — the standard move when the
     history is 100 TB but the nightly increment is GBs."""
-    pos = df.select(
-        F.explode(F.array(*_bloom_positions(F.col(text_col), k, m_bits))).alias("p")
-    )
+    pos = df.select(F.explode(F.array(*_bloom_positions(F.col("text")))).alias("p"))
     return (
         pos.select(
             F.expr(f"p div {BLOOM_WORD_BITS}").alias("word"),

@@ -85,7 +85,6 @@ def range_join(
     right_lo: str,
     right_hi: str,
     bucket_width: float,
-    how: str = "inner",
 ) -> DataFrame:
     """Point-in-interval join accelerated by bucketing.
 
@@ -108,7 +107,7 @@ def range_join(
             )
         ),
     )
-    joined = lb.join(rb, on="__bucket", how=how).filter(
+    joined = lb.join(rb, "__bucket").filter(
         F.col(left_point).between(F.col(right_lo), F.col(right_hi))
     )
     return joined.drop("__bucket")
@@ -121,8 +120,6 @@ def interval_join_count(
     anchor_type: str,
     within_type: str,
     lookback_seconds: int,
-    type_col: str = "event_type",
-    value_col: str = "value",
 ) -> DataFrame:
     """Per anchor event: count + value-sum of ``within_type`` events by
     the same user in the strict-lookback window ``(t - lookback, t)``.
@@ -136,7 +133,7 @@ def interval_join_count(
     lb = float(lookback_seconds)
     epoch = F.col(ts_col).cast("double")
 
-    anchors = events.filter(F.col(type_col) == anchor_type).select(
+    anchors = events.filter(F.col("event_type") == anchor_type).select(
         F.col("event_id").alias("__aid"),
         F.col(user_col).alias("__u"),
         epoch.alias("__at"),
@@ -150,10 +147,10 @@ def interval_join_count(
             )
         ),
     )
-    inner = events.filter(F.col(type_col) == within_type).select(
+    inner = events.filter(F.col("event_type") == within_type).select(
         F.col(user_col).alias("__u"),
         epoch.alias("__wt"),
-        F.col(value_col).alias("__wv"),
+        F.col("value").alias("__wv"),
         F.floor(epoch / lb).cast("long").alias("__bucket"),
     )
     matched = (

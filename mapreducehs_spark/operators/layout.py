@@ -46,16 +46,7 @@ def zorder_value(x_col: Column | str, y_col: Column | str, bits: int = 16) -> Co
     return z
 
 
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    x_col: str,
-    y_col: str,
-    n_files: int,
-    bits: int = 8,
-    fmt: str = "parquet",
-    normalize: bool = True,
-) -> None:
+def zorder_write(df: DataFrame, path: str, x_col: str, y_col: str, n_files: int) -> None:
     """Write ``df`` z-ordered on (x_col, y_col) into ~``n_files`` files.
 
     ``repartitionByRange`` on the z key range-partitions (sampled
@@ -65,51 +56,39 @@ def zorder_write(
     predicates on either column.  At 100 TB this is the nightly
     compaction/clustering job, not a per-query step.
 
-    ``normalize`` (default) min-max-rescales both columns to the same
-    ``bits``-wide range first (one cheap agg + broadcast of 4 scalars).
-    Without it, a wider column monopolizes the interleave's high bits
+    Both columns are min-max-rescaled to the same 8-bit range first
+    (one cheap agg + broadcast of 4 scalars).  Without it, a wider column monopolizes the interleave's high bits
     and the narrower column gets no clustering at all (measured: raw
     16-bit interleave of an 11-bit and a 7-bit key clustered ONLY the
     11-bit one).  Min-max is linear, so locality is preserved; heavily
     skewed columns would use rank/percentile encoding instead.
     """
-    if normalize:
-        lo_hi = df.agg(
-            F.min(x_col).cast("double").alias("xlo"),
-            F.max(x_col).cast("double").alias("xhi"),
-            F.min(y_col).cast("double").alias("ylo"),
-            F.max(y_col).cast("double").alias("yhi"),
-        ).collect()[0]
-        top = float((1 << bits) - 1)
+    lo_hi = df.agg(
+        F.min(x_col).cast("double").alias("xlo"),
+        F.max(x_col).cast("double").alias("xhi"),
+        F.min(y_col).cast("double").alias("ylo"),
+        F.max(y_col).cast("double").alias("yhi"),
+    ).collect()[0]
 
-        def scale(col: str, lo: float, hi: float) -> Column:
-            span = (hi - lo) or 1.0
-            return F.floor((F.col(col) - F.lit(lo)) / F.lit(span) * top).cast("bigint")
+    def scale(col: str, lo: float, hi: float) -> Column:
+        span = (hi - lo) or 1.0
+        return F.floor((F.col(col) - F.lit(lo)) / F.lit(span) * 255.0).cast("bigint")
 
-        x_expr = scale(x_col, lo_hi["xlo"], lo_hi["xhi"])
-        y_expr = scale(y_col, lo_hi["ylo"], lo_hi["yhi"])
-    else:
-        x_expr, y_expr = F.col(x_col), F.col(y_col)
-    z = zorder_value(x_expr, y_expr, bits).alias("__z")
+    x_expr = scale(x_col, lo_hi["xlo"], lo_hi["xhi"])
+    y_expr = scale(y_col, lo_hi["ylo"], lo_hi["yhi"])
+    z = zorder_value(x_expr, y_expr, 8).alias("__z")
     (
         df.withColumn("__z", z)
         .repartitionByRange(n_files, "__z")
         .sortWithinPartitions("__z")
         .drop("__z")
-        .write.format(fmt)
+        .write.format("parquet")
         .mode("overwrite")
         .save(path)
     )
 
 
-def execute_compaction_plan(
-    spark,
-    df: DataFrame,
-    plan: DataFrame,
-    out_dir: str,
-    file_id_col: str = "file_id",
-    fmt: str = "parquet",
-) -> dict[int, int]:
+def execute_compaction_plan(spark, df: DataFrame, plan: DataFrame, out_dir: str) -> dict[int, int]:
     """Execute a q105-style compaction PLAN: rewrite the table so each
     plan bin becomes exactly ONE output file, preserving key order.
 
@@ -131,15 +110,15 @@ def execute_compaction_plan(
     p = plan.select("bin", "first_file", "last_file")
     assigned = df.join(
         F.broadcast(p),
-        (F.col(file_id_col) >= F.col("first_file"))
-        & (F.col(file_id_col) <= F.col("last_file")),
+        (F.col("file_id") >= F.col("first_file"))
+        & (F.col("file_id") <= F.col("last_file")),
     ).drop("first_file", "last_file")
     (
         assigned.repartition(F.col("bin"))
-        .sortWithinPartitions(file_id_col)
+        .sortWithinPartitions("file_id")
         .write.mode("overwrite")
         .partitionBy("bin")
-        .format(fmt)
+        .format("parquet")
         .save(out_dir)
     )
     realized: dict[int, int] = {}

@@ -267,13 +267,7 @@ def sample_pred(step: int, sample_mod: int):
     )
 
 
-def logreg_train_minibatch(
-    docs: DataFrame,
-    n_buckets: int = 64,
-    n_steps: int = 2,
-    label_chars: int = 300,
-    sample_mod: int = 4,
-) -> DataFrame:
+def logreg_train_minibatch(docs: DataFrame, n_buckets: int = 64, sample_mod: int = 4) -> DataFrame:
     """MINI-BATCH variant of ``logreg_train_hashed`` (round 7, VERDICT
     r06 item 6): each gradient step runs on a deterministic md5-fold
     SAMPLE of the corpus (``sample_pred``), so per-step cost is
@@ -287,9 +281,7 @@ def logreg_train_minibatch(
     truncating division replays bit-for-bit in DuckDB.  Output contract
     matches t28: (bucket, w_step1, w_final) with bias as bucket −1."""
     spark = docs.sparkSession
-    labels = docs.select(
-        "doc_id", (F.col("n_chars") >= label_chars).cast("bigint").alias("y")
-    )
+    labels = docs.select("doc_id", (F.col("n_chars") >= 300).cast("bigint").alias("y"))
     with materialize(spark) as m:
         features = m.persist(hashed_features(docs, n_buckets))
         labels = m.persist(labels.repartition("doc_id"))
@@ -298,7 +290,7 @@ def logreg_train_minibatch(
         w = {b: 0 for b in range(n_buckets)}
         bias = 0
         snapshots = []
-        for step in range(1, n_steps + 1):
+        for step in range(1, 3):
             pred = sample_pred(step, sample_mod)
             # ONE action per step (round 12): gradient, bias gradient
             # AND the sample count n_s all return from the same job —
@@ -319,18 +311,13 @@ def logreg_train_minibatch(
         )
 
 
-def logreg_train_hashed(
-    docs: DataFrame,
-    n_buckets: int = 64,
-    n_steps: int = 2,
-    label_chars: int = 300,
-) -> DataFrame:
+def logreg_train_hashed(docs: DataFrame, n_buckets: int = 64) -> DataFrame:
     """Train a hashed-feature logistic-regression quality classifier
-    (hard-sigmoid surrogate, integer fixed-point) for ``n_steps``
+    (hard-sigmoid surrogate, integer fixed-point) for 2
     full-batch gradient steps from w=0, and return the weight table
     (bucket, w_step1, w_final) with the bias as bucket −1 — the model
     t26's inference pass would broadcast.  Label: y = 1 iff
-    n_chars ≥ ``label_chars`` (a deterministic length-quality proxy the
+    n_chars ≥ 300 (a deterministic length-quality proxy the
     oracle can replay; swap in human labels in production — same plan).
 
     Scale shape: the feature stream is computed ONCE, persisted
@@ -339,9 +326,7 @@ def logreg_train_hashed(
     step.  n_steps is a constant (2): full-batch GD on 100 TB is one
     scan per step, exactly as many scans as the budget allows."""
     spark = docs.sparkSession
-    labels = docs.select(
-        "doc_id", (F.col("n_chars") >= label_chars).cast("bigint").alias("y")
-    )
+    labels = docs.select("doc_id", (F.col("n_chars") >= 300).cast("bigint").alias("y"))
     with materialize(spark) as m:
         features = m.persist(hashed_features(docs, n_buckets))
         labels = m.persist(labels.repartition("doc_id"))
@@ -351,7 +336,7 @@ def logreg_train_hashed(
         bias = 0
         n_docs = None
         snapshots = []
-        for _ in range(n_steps):
+        for _ in range(2):
             # ONE action per step (round 12): the corpus count n_docs
             # rides the first step's gradient job (count of the bias
             # rows) instead of a separate labels.count() action.
@@ -382,15 +367,9 @@ def cv_fold_col(k: int):
     )
 
 
-def logreg_crossval(
-    docs: DataFrame,
-    n_buckets: int = 64,
-    n_steps: int = 2,
-    label_chars: int = 300,
-    k: int = 3,
-) -> DataFrame:
+def logreg_crossval(docs: DataFrame, k: int = 3) -> DataFrame:
     """K-FOLD CROSS-VALIDATION of the t28 trainer (round 7): for each
-    fold f, train ``n_steps`` full-batch steps on the other k-1 folds
+    fold f, train 2 full-batch steps on the other k-1 folds
     (the exact t28 update law) and score the HELD-OUT fold with the
     final weights (the t26 inference law: hard-sigmoid >= 1/2), emitting
     (fold, n_eval, n_correct, acc_micro) — the model-selection readout
@@ -400,7 +379,7 @@ def logreg_crossval(
     Scale shape: features and labels are computed ONCE, persisted
     hash-partitioned on doc_id with the fold label attached; each
     fold's training filters that frame (a partitioning-preserving
-    predicate — no re-shuffle), so the total cost is k * n_steps
+    predicate — no re-shuffle), so the total cost is k * 2
     scan-shaped gradient passes plus k broadcast-scored eval passes;
     driver state stays dim+1 integers per fold.  Every quantity is
     truncating-integer so all k training chains and eval tails replay
@@ -411,11 +390,11 @@ def logreg_crossval(
         labels = m.persist(
             docs.select(
                 "doc_id",
-                (F.col("n_chars") >= label_chars).cast("bigint").alias("y"),
+                (F.col("n_chars") >= 300).cast("bigint").alias("y"),
                 fold.alias("fold"),
             ).repartition("doc_id")
         )
-        features = m.persist(hashed_features(docs, n_buckets).withColumn("fold", fold))
+        features = m.persist(hashed_features(docs).withColumn("fold", fold))
         # Round 12 (guide §2.6: the k training chains are INDEPENDENT —
         # only steps are sequential): every fold's gradient rides ONE
         # job per step, keyed by the held-out fold f.  A doc with fold
@@ -423,7 +402,7 @@ def logreg_crossval(
         # k-row fold grid replicates each row k−1 times — exactly the
         # bytes the sequential form read anyway (fold f's pass scans the
         # (k−1)/k of the corpus it trains on), but 3 actions total
-        # instead of k·(1 count + n_steps·2 collects) + k eval collects
+        # instead of k·(1 count + 2·2 collects) + k eval collects
         # = 18.  Driver state and the integer update law are unchanged.
         fold_grid = spark.createDataFrame([(f,) for f in range(k)], "f bigint")
         feats_x = features.join(
@@ -432,10 +411,10 @@ def logreg_crossval(
         labs_x = labels.join(
             F.broadcast(fold_grid), F.col("f") != F.col("fold")
         ).select("f", "doc_id", "y")
-        w = {f: {b: 0 for b in range(n_buckets)} for f in range(k)}
+        w = {f: {b: 0 for b in range(64)} for f in range(k)}
         biases = {f: 0 for f in range(k)}
         n_tr: dict[int, int] = {}
-        for step in range(n_steps):
+        for step in range(2):
             grads = _batched_gradients(feats_x, labs_x, w, biases)
             for f in range(k):
                 gf = grads.get(f, {})
@@ -446,7 +425,7 @@ def logreg_crossval(
         # row joins its OWN fold's final model (broadcast), so fold f's
         # eval set meets exactly w_f, as the per-fold loop did.
         wf_df = spark.createDataFrame(
-            [(f, b, w[f][b]) for f in range(k) for b in range(n_buckets)],
+            [(f, b, w[f][b]) for f in range(k) for b in range(64)],
             "f bigint, bucket bigint, w bigint",
         )
         bf_df = spark.createDataFrame(

@@ -32,14 +32,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def attach_payload(df: DataFrame, text_col: str = "text", modality: str = "text") -> DataFrame:
+def attach_payload(df: DataFrame) -> DataFrame:
     """Materialize an opaque binary payload column + metadata struct from
     a source column (UTF-8 bytes of the text in this synthetic setup)."""
-    payload = F.encode(F.col(text_col), "UTF-8")
+    payload = F.encode(F.col("text"), "UTF-8")
     return df.withColumn("payload", payload).withColumn(
         "meta",
         F.struct(
-            F.lit(modality).alias("modality"),
+            F.lit("text").alias("modality"),
             F.lit("application/octet-stream").alias("mime"),
             F.length(payload).cast("bigint").alias("n_bytes"),
             F.md5(payload).alias("checksum"),
@@ -112,16 +112,16 @@ def decode_image(payload_bytes: bytes) -> "np.ndarray":
     return raster.reshape(h, w)
 
 
-def fake_features(payload: bytes, dim: int = 8) -> list[float]:
+def fake_features(payload: bytes) -> list[float]:
     """Deterministic stand-in for a media feature extractor: folds the
-    sha256 digest into ``dim`` floats in [0, 1)."""
+    sha256 digest into 8 floats in [0, 1)."""
     digest = hashlib.sha256(payload).digest()
     return [
-        int.from_bytes(digest[4 * i : 4 * i + 4], "big") / 2**32 for i in range(dim)
+        int.from_bytes(digest[4 * i : 4 * i + 4], "big") / 2**32 for i in range(8)
     ]
 
 
-def extract_features(df: DataFrame, payload_col: str = "payload", dim: int = 8) -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
 
     The production shape for decode/resize/frame-sample: mapInPandas,
@@ -129,14 +129,14 @@ def extract_features(df: DataFrame, payload_col: str = "payload", dim: int = 8) 
     ``fake_features`` for a real extractor without touching the plan.
     """
     out_schema = ", ".join(
-        f"{name} {dtype}" for name, dtype in df.dtypes if name != payload_col
+        f"{name} {dtype}" for name, dtype in df.dtypes if name != "payload"
     ) + f", features array<double>"
 
-    other_cols = [c for c in df.columns if c != payload_col]
+    other_cols = [c for c in df.columns if c != "payload"]
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            feats = [fake_features(p, dim) for p in pdf[payload_col]]
+            feats = [fake_features(p) for p in pdf["payload"]]
             out = pdf[other_cols].copy()
             out["features"] = feats
             yield out
@@ -144,7 +144,7 @@ def extract_features(df: DataFrame, payload_col: str = "payload", dim: int = 8) 
     return df.mapInPandas(batches, schema=out_schema)
 
 
-def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
+def frame_sample_plan(df: DataFrame) -> DataFrame:
     """STUB shape for video frame sampling: emits (id, frame_index) rows
     for frames 0, n, 2n… of a declared frame count in metadata; the
     decode of each frame is a NotImplementedError stub like
@@ -153,14 +153,12 @@ def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
     return df.select(
         "*",
         F.explode(
-            F.sequence(F.lit(0), F.greatest(n_frames - 1, F.lit(0)), F.lit(every_n))
+            F.sequence(F.lit(0), F.greatest(n_frames - 1, F.lit(0)), F.lit(10))
         ).alias("frame_index"),
     )
 
 
-def render_pgm_payloads(
-    df: DataFrame, id_col: str = "doc_id", width: int = 32, height: int = 16
-) -> DataFrame:
+def render_pgm_payloads(df: DataFrame, width: int = 32, height: int = 16) -> DataFrame:
     """Deterministic synthetic image per row: pixel[i] =
     (id*31 + i*7) mod 256, encoded as real PGM bytes.  Plays the
     external camera/media store in tests and m06 — the arithmetic
@@ -172,14 +170,14 @@ def render_pgm_payloads(
         for pdf in it:
             payloads = [
                 encode_pgm((((int(i) * 31 + idx * 7) % 256).astype(np.uint8)).reshape(height, width))
-                for i in pdf[id_col]
+                for i in pdf["doc_id"]
             ]
-            yield pd.DataFrame({"id": pdf[id_col].astype("int64"), "payload": payloads})
+            yield pd.DataFrame({"id": pdf["doc_id"].astype("int64"), "payload": payloads})
 
-    return df.select(id_col).mapInPandas(batches, schema="id long, payload binary")
+    return df.select("doc_id").mapInPandas(batches, schema="id long, payload binary")
 
 
-def decoded_image_stats(df: DataFrame, id_col: str = "id", payload_col: str = "payload") -> DataFrame:
+def decoded_image_stats(df: DataFrame) -> DataFrame:
     """Decode each payload with ``decode_image`` and reduce to stats:
     (id, width, height, px_sum, px_min, px_max).  A genuinely-decoding
     mapInPandas stage — header parse, raster reshape, numpy reduce —
@@ -188,7 +186,7 @@ def decoded_image_stats(df: DataFrame, id_col: str = "id", payload_col: str = "p
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
+            for i, p in zip(pdf["id"], pdf["payload"]):
                 img = decode_image(bytes(p))
                 rows.append(
                     (
@@ -210,23 +208,17 @@ def decoded_image_stats(df: DataFrame, id_col: str = "id", payload_col: str = "p
     )
 
 
-def resize_image(img: "np.ndarray", fy: int = 2, fx: int = 2) -> "np.ndarray":
+def resize_image(img: "np.ndarray") -> "np.ndarray":
     """Nearest-neighbor downsample by integer stride — the resize
     kernel of the decode→resize→featurize template.  Stride slicing is
     a numpy VIEW (zero copy) and bit-deterministic (no interpolation
     arithmetic), which is what lets a resized image's stats be
     value-checked by an oracle replaying the pixel law on the sampled
     grid."""
-    return img[::fy, ::fx]
+    return img[::2, ::2]
 
 
-def resized_image_stats(
-    df: DataFrame,
-    id_col: str = "id",
-    payload_col: str = "payload",
-    fy: int = 2,
-    fx: int = 2,
-) -> DataFrame:
+def resized_image_stats(df: DataFrame) -> DataFrame:
     """Decode + RESIZE each payload, then reduce to stats over the
     resized raster — the real thumbnail/preprocess shape (decode and
     resize fused in ONE Arrow stage so full-resolution pixels never
@@ -235,8 +227,8 @@ def resized_image_stats(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                img = resize_image(decode_image(bytes(p)), fy, fx)
+            for i, p in zip(pdf["id"], pdf["payload"]):
+                img = resize_image(decode_image(bytes(p)))
                 rows.append(
                     (
                         int(i),
@@ -257,7 +249,7 @@ def resized_image_stats(
     )
 
 
-def payload_byte_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def payload_byte_stats(df: DataFrame) -> DataFrame:
     """Per-row payload byte statistics via ``mapInArrow`` — the
     zero-copy variant of the mapInPandas path: batches arrive as
     pyarrow RecordBatches with the binary column as one contiguous
@@ -273,7 +265,7 @@ def payload_byte_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame
     def batches(it):
         for batch in it:
             ids = batch.column(batch.schema.get_field_index("doc_id"))
-            payload = batch.column(batch.schema.get_field_index(payload_col))
+            payload = batch.column(batch.schema.get_field_index("payload"))
             data_buf = payload.buffers()[2]
             buf = (
                 np.frombuffer(data_buf, dtype=np.uint8)
@@ -303,7 +295,7 @@ def payload_byte_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame
                 names=["doc_id", "n_bytes", "head_byte", "byte_sum"],
             )
 
-    return df.select("doc_id", payload_col).mapInArrow(
+    return df.select("doc_id", "payload").mapInArrow(
         batches, schema="doc_id long, n_bytes long, head_byte int, byte_sum long"
     )
 
@@ -316,7 +308,7 @@ def payload_byte_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame
 # ---------------------------------------------------------------------------
 
 
-def encode_wav(samples: "np.ndarray", sample_rate: int = 8000) -> bytes:
+def encode_wav(samples: "np.ndarray") -> bytes:
     """Mono 16-bit PCM WAV: 44-byte RIFF header + little-endian frames."""
     import struct
 
@@ -326,7 +318,7 @@ def encode_wav(samples: "np.ndarray", sample_rate: int = 8000) -> bytes:
         b"RIFF"
         + struct.pack("<I", 36 + n)
         + b"WAVEfmt "
-        + struct.pack("<IHHIIHH", 16, 1, 1, sample_rate, sample_rate * 2, 2, 16)
+        + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 8000 * 2, 2, 16)
         + b"data"
         + struct.pack("<I", n)
         + pcm
@@ -359,29 +351,25 @@ def decode_wav(payload: bytes) -> tuple["np.ndarray", int]:
     return np.frombuffer(data, dtype="<i2"), sample_rate
 
 
-def render_wav_payloads(
-    df: DataFrame, id_col: str = "doc_id", n_samples: int = 256, sample_rate: int = 8000
-) -> DataFrame:
+def render_wav_payloads(df: DataFrame) -> DataFrame:
     """Deterministic synthetic audio per row: sample[i] =
     ((id*13 + i*17) mod 4096) - 2048, as real WAV bytes — the audio
     twin of render_pgm_payloads (the arithmetic law lets a SQL oracle
     replay decoded stats without decoding)."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = np.arange(n_samples, dtype=np.int64)
+        idx = np.arange(256, dtype=np.int64)
         for pdf in it:
             payloads = [
-                encode_wav(((int(i) * 13 + idx * 17) % 4096 - 2048), sample_rate)
-                for i in pdf[id_col]
+                encode_wav((int(i) * 13 + idx * 17) % 4096 - 2048)
+                for i in pdf["doc_id"]
             ]
-            yield pd.DataFrame({"id": pdf[id_col].astype("int64"), "payload": payloads})
+            yield pd.DataFrame({"id": pdf["doc_id"].astype("int64"), "payload": payloads})
 
-    return df.select(id_col).mapInPandas(batches, schema="id long, payload binary")
+    return df.select("doc_id").mapInPandas(batches, schema="id long, payload binary")
 
 
-def decoded_audio_stats(
-    df: DataFrame, id_col: str = "id", payload_col: str = "payload"
-) -> DataFrame:
+def decoded_audio_stats(df: DataFrame) -> DataFrame:
     """Decode each WAV payload and reduce to exact integer stats:
     (id, n_samples, sample_rate, amp_sum, sq_sum, amp_min, amp_max).
     Integer sums (not float RMS) so the oracle check is bit-exact;
@@ -390,7 +378,7 @@ def decoded_audio_stats(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
+            for i, p in zip(pdf["id"], pdf["payload"]):
                 s, rate = decode_wav(bytes(p))
                 s64 = s.astype(np.int64)
                 rows.append(
@@ -453,38 +441,28 @@ def decode_mrv_frames(
     return out
 
 
-def render_mrv_payloads(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    n_frames: int = 8,
-    width: int = 16,
-    height: int = 8,
-) -> DataFrame:
+def render_mrv_payloads(df: DataFrame) -> DataFrame:
     """Deterministic synthetic clip per row: frame f pixel i =
     (id*31 + f*101 + i*7) mod 256 — the m06 pixel-law discipline
     extended with a frame term, so a SQL oracle replays sampled-frame
     stats without demuxing anything.  Emits (id, payload binary)."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = np.arange(width * height, dtype=np.int64)
+        idx = np.arange(16 * 8, dtype=np.int64)
         for pdf in it:
             payloads = []
-            for i in pdf[id_col]:
+            for i in pdf["doc_id"]:
                 frames = [
-                    (((int(i) * 31 + f * 101 + idx * 7) % 256).astype(np.uint8)).reshape(
-                        height, width
-                    )
-                    for f in range(n_frames)
+                    (((int(i) * 31 + f * 101 + idx * 7) % 256).astype(np.uint8)).reshape(8, 16)
+                    for f in range(8)
                 ]
                 payloads.append(encode_mrv(frames))
-            yield pd.DataFrame({"id": pdf[id_col].astype("int64"), "payload": payloads})
+            yield pd.DataFrame({"id": pdf["doc_id"].astype("int64"), "payload": payloads})
 
-    return df.select(id_col).mapInPandas(batches, schema="id long, payload binary")
+    return df.select("doc_id").mapInPandas(batches, schema="id long, payload binary")
 
 
-def sampled_frame_stats(
-    df: DataFrame, every_n: int = 3, id_col: str = "id", payload_col: str = "payload"
-) -> DataFrame:
+def sampled_frame_stats(df: DataFrame) -> DataFrame:
     """Demux + frame-sample + decode + reduce in ONE Arrow stage:
     (id, n_frames, n_sampled, px_sum, px_min, px_max) over the sampled
     frames only — full-resolution rasters never leave the batch (m08's
@@ -494,10 +472,10 @@ def sampled_frame_stats(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
+            for i, p in zip(pdf["id"], pdf["payload"]):
                 payload = bytes(p)
                 (n_frames,) = struct.unpack_from("<I", payload, 4)
-                frames = decode_mrv_frames(payload, every_n=every_n)
+                frames = decode_mrv_frames(payload, every_n=3)
                 stack = np.stack([fr for _, fr in frames]).astype(np.int64)
                 rows.append(
                     (
@@ -520,9 +498,7 @@ def sampled_frame_stats(
     )
 
 
-def ahash_64(
-    df: DataFrame, id_col: str = "id", payload_col: str = "payload"
-) -> DataFrame:
+def ahash_64(df: DataFrame) -> DataFrame:
     """64-bit average hash (aHash) of image payloads — decode and hash
     FUSED in one Arrow stage (the m06/m08 discipline: full-resolution
     rasters never leave the batch).
@@ -544,7 +520,7 @@ def ahash_64(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids, los, his = [], [], []
         for pdf in it:
-            for i, pl in zip(pdf[id_col], pdf[payload_col]):
+            for i, pl in zip(pdf["id"], pdf["payload"]):
                 img = decode_image(bytes(pl))
                 h, w = img.shape
                 if h % 8 or w % 8:
@@ -572,15 +548,9 @@ def ahash_64(
     return df.mapInPandas(batches, schema="id long, lo long, hi long")
 
 
-def render_wav_payloads_seeded(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    seed_mod: int = 128,
-    n_samples: int = 256,
-    sample_rate: int = 8000,
-) -> DataFrame:
+def render_wav_payloads_seeded(df: DataFrame) -> DataFrame:
     """Synthetic audio store with PLANTED duplicate classes: the signal
-    depends only on ``id % seed_mod``, and each sample is an md5 fold
+    depends only on ``id % 128``, and each sample is an md5 fold
     (``(int(md5(f"{seed}_{i}")[:4], 16) % 4096) - 2048``) — white-ish
     noise, unlike ``render_wav_payloads``'s sawtooth whose frame
     energies are so uniform that threshold fingerprints collide
@@ -596,7 +566,7 @@ def render_wav_payloads_seeded(
             [
                 int(hashlib.md5(f"{seed}_{i}".encode()).hexdigest()[:4], 16) % 4096
                 - 2048
-                for i in range(n_samples)
+                for i in range(256)
             ],
             dtype=np.int64,
         )
@@ -605,24 +575,22 @@ def render_wav_payloads_seeded(
         cache: dict[int, bytes] = {}
         for pdf in it:
             payloads = []
-            for i in pdf[id_col]:
-                seed = int(i) % seed_mod
+            for i in pdf["doc_id"]:
+                seed = int(i) % 128
                 if seed not in cache:
-                    cache[seed] = encode_wav(signal(seed), sample_rate)
+                    cache[seed] = encode_wav(signal(seed))
                 payloads.append(cache[seed])
-            yield pd.DataFrame({"id": pdf[id_col].astype("int64"), "payload": payloads})
+            yield pd.DataFrame({"id": pdf["doc_id"].astype("int64"), "payload": payloads})
 
-    return df.select(id_col).mapInPandas(batches, schema="id long, payload binary")
+    return df.select("doc_id").mapInPandas(batches, schema="id long, payload binary")
 
 
-def audio_fingerprint_64(
-    df: DataFrame, id_col: str = "id", payload_col: str = "payload", n_frames: int = 64
-) -> DataFrame:
+def audio_fingerprint_64(df: DataFrame) -> DataFrame:
     """64-bit audio energy fingerprint — decode and hash FUSED in one
     Arrow stage (m11's aHash recipe on the time axis): real WAV decode
-    (RIFF chunk walk), split samples into ``n_frames`` frames, integer
+    (RIFF chunk walk), split samples into 64 frames, integer
     energy (sum of squares) per frame, bit f set iff
-    ``n_frames * energy_f > total_energy``.  Exact integer arithmetic
+    ``64 * energy_f > total_energy``.  Exact integer arithmetic
     end to end, hash returned as two non-negative 32-bit halves
     (``lo``/``hi``) — same sign-safe layout as ``ahash_64``, same
     banding/verify composition downstream (m12)."""
@@ -630,16 +598,16 @@ def audio_fingerprint_64(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             ids, los, his = [], [], []
-            for i, pl in zip(pdf[id_col], pdf[payload_col]):
+            for i, pl in zip(pdf["id"], pdf["payload"]):
                 samples, _rate = decode_wav(bytes(pl))
                 s = samples.astype(np.int64)
-                if len(s) % n_frames:
+                if len(s) % 64:
                     raise ValueError(
                         f"audio_fingerprint_64: {len(s)} samples not divisible "
-                        f"by {n_frames} frames"
+                        "by 64 frames"
                     )
-                en = (s.reshape(n_frames, -1) ** 2).sum(axis=1)
-                bits = en * n_frames > en.sum()
+                en = (s.reshape(64, -1) ** 2).sum(axis=1)
+                bits = en * 64 > en.sum()
                 lo = hi = 0
                 for k in range(32):
                     if bits[k]:
@@ -654,9 +622,7 @@ def audio_fingerprint_64(
     return df.mapInPandas(batches, schema="id long, lo long, hi long")
 
 
-def ahash_128(
-    df: DataFrame, id_col: str = "id", payload_col: str = "payload"
-) -> DataFrame:
+def ahash_128(df: DataFrame) -> DataFrame:
     """128-bit average hash — ``ahash_64`` at double fingerprint width,
     the band-occupancy MITIGATION recorded in SCALE.md's round-7 probe:
     4 bands over a 128-bit hash are 32 bits wide, capping per-band
@@ -672,7 +638,7 @@ def ahash_128(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         out: dict[str, list[int]] = {"id": [], "w0": [], "w1": [], "w2": [], "w3": []}
         for pdf in it:
-            for i, pl in zip(pdf[id_col], pdf[payload_col]):
+            for i, pl in zip(pdf["id"], pdf["payload"]):
                 img = decode_image(bytes(pl))
                 h, w = img.shape
                 if h % 8 or w % 16:
@@ -700,9 +666,7 @@ def ahash_128(
     )
 
 
-def video_majority_ahash(
-    df: DataFrame, every_n: int = 3, id_col: str = "id", payload_col: str = "payload"
-) -> DataFrame:
+def video_majority_ahash(df: DataFrame) -> DataFrame:
     """Temporally-pooled perceptual hash of a video payload — demux,
     frame-sample, per-frame 8x8 block-sum aHash, and MAJORITY-VOTE the
     bits across sampled frames, all fused in ONE Arrow stage (m08/m09
@@ -721,8 +685,8 @@ def video_majority_ahash(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids, los, his = [], [], []
         for pdf in it:
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                frames = decode_mrv_frames(bytes(p), every_n=every_n)
+            for i, p in zip(pdf["id"], pdf["payload"]):
+                frames = decode_mrv_frames(bytes(p), every_n=3)
                 if not frames:
                     # Zero decoded frames would make the majority
                     # threshold 0, so every bit votes true and ALL empty
@@ -761,9 +725,7 @@ def video_majority_ahash(
         if ids:
             yield pd.DataFrame({"id": ids, "lo": los, "hi": his})
 
-    return df.select(id_col, payload_col).mapInPandas(
-        batches, schema="id long, lo long, hi long"
-    )
+    return df.select("id", "payload").mapInPandas(batches, schema="id long, lo long, hi long")
 
 
 def render_corrupt_pgm_batches(it):

@@ -43,11 +43,7 @@ def _draw(text_col: str) -> Column:
     return F.substring(F.md5(F.col(text_col)), 1, _HEX_DIGITS)
 
 
-def hash_split(
-    df: DataFrame,
-    splits: dict[str, float],
-    text_col: str = "text",
-) -> DataFrame:
+def hash_split(df: DataFrame, splits: dict[str, float]) -> DataFrame:
     """Assign each row to a named split by content hash.
 
     ``splits`` maps name → fraction (fractions sum to ~1; the last split
@@ -58,7 +54,7 @@ def hash_split(
     names = list(splits)
     cum = 0.0
     expr: Column | None = None
-    draw = _draw(text_col)
+    draw = _draw("text")
     for name in names[:-1]:
         cum += splits[name]
         cond = draw < F.lit(fraction_to_hex(cum))
@@ -67,7 +63,7 @@ def hash_split(
     return df.withColumn("split", split_col)
 
 
-def hash_split_case_sql(splits: dict[str, float], text_col: str = "text") -> str:
+def hash_split_case_sql(splits: dict[str, float]) -> str:
     """The oracle-side CASE expression computing the identical split."""
     names = list(splits)
     cum = 0.0
@@ -75,51 +71,39 @@ def hash_split_case_sql(splits: dict[str, float], text_col: str = "text") -> str
     for name in names[:-1]:
         cum += splits[name]
         arms.append(
-            f"WHEN substr(md5({text_col}), 1, {_HEX_DIGITS}) < '{fraction_to_hex(cum)}' "
+            f"WHEN substr(md5(text), 1, {_HEX_DIGITS}) < '{fraction_to_hex(cum)}' "
             f"THEN '{name}'"
         )
     return "CASE " + " ".join(arms) + f" ELSE '{names[-1]}' END"
 
 
-def stratified_sample(
-    df: DataFrame,
-    rates: dict[str, float],
-    strata_col: str = "lang",
-    text_col: str = "text",
-    default_rate: float = 0.0,
-) -> DataFrame:
+def stratified_sample(df: DataFrame, rates: dict[str, float]) -> DataFrame:
     """Keep a deterministic per-stratum fraction of rows.
 
     The per-stratum keep rate rebalances a skewed corpus (e.g.
     downsample the dominant language) without an RNG: a row survives iff
     its content draw falls below its stratum's threshold.  Strata not
-    in ``rates`` get ``default_rate``.
+    in ``rates`` are dropped.
     """
-    draw = _draw(text_col)
-    expr: Column = F.lit(fraction_to_hex(default_rate))
+    draw = _draw("text")
+    expr: Column = F.lit(fraction_to_hex(0.0))
     for stratum, rate in rates.items():
-        expr = F.when(F.col(strata_col) == stratum, F.lit(fraction_to_hex(rate))).otherwise(
-            expr
-        )
+        expr = F.when(F.col("lang") == stratum, F.lit(fraction_to_hex(rate))).otherwise(expr)
     return df.filter(draw < expr)
 
 
-def stratified_threshold_case_sql(
-    rates: dict[str, float], strata_col: str = "lang", default_rate: float = 0.0
-) -> str:
+def stratified_threshold_case_sql(rates: dict[str, float]) -> str:
     """Oracle-side CASE yielding each row's keep-threshold hex string."""
     arms = [
-        f"WHEN {strata_col} = '{s}' THEN '{fraction_to_hex(r)}'" for s, r in rates.items()
+        f"WHEN lang = '{s}' THEN '{fraction_to_hex(r)}'" for s, r in rates.items()
     ]
-    return "CASE " + " ".join(arms) + f" ELSE '{fraction_to_hex(default_rate)}' END"
+    return "CASE " + " ".join(arms) + f" ELSE '{fraction_to_hex(0.0)}' END"
 
 
 def mixture_resample(
     df: DataFrame,
     weights: dict[str, float],
     target_fraction: float,
-    group_col: str = "source",
-    text_col: str = "text",
 ) -> DataFrame:
     """Deterministic mixture resampling: downsample each group so the
     kept corpus approximates ``target_fraction`` of the input with
@@ -136,17 +120,17 @@ def mixture_resample(
     w = F.lit(None)
     expr = None
     for name, wt in weights.items():
-        expr = F.when(F.col(group_col) == name, float(wt)) if expr is None else expr.when(
-            F.col(group_col) == name, float(wt)
+        expr = F.when(F.col("source") == name, float(wt)) if expr is None else expr.when(
+            F.col("source") == name, float(wt)
         )
     w = F.lit(1.0) if expr is None else expr.otherwise(1.0)
 
-    counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("__cnt")).withColumn("__wt", w)
+    counts = df.groupBy("source").agg(F.count(F.lit(1)).alias("__cnt")).withColumn("__wt", w)
     totals = counts.agg(
         F.sum("__cnt").alias("__total"), F.sum("__wt").alias("__sum_w")
     )
     rates = counts.crossJoin(F.broadcast(totals)).select(
-        group_col,
+        "source",
         F.least(
             F.lit(1.0),
             (F.lit(target_fraction) * F.col("__total") * F.col("__wt") / F.col("__sum_w"))
@@ -154,7 +138,7 @@ def mixture_resample(
         ).alias("__rate"),
     )
     thresholds = rates.select(
-        group_col,
+        "source",
         F.format_string(
             "%08x",
             F.least(
@@ -164,8 +148,8 @@ def mixture_resample(
         ).alias("__thr"),
     )
     return (
-        df.join(F.broadcast(thresholds), group_col)
-        .filter(_draw(text_col) < F.col("__thr"))
+        df.join(F.broadcast(thresholds), "source")
+        .filter(_draw("text") < F.col("__thr"))
         .drop("__thr")
     )
 

@@ -33,9 +33,6 @@ def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str | None = None,
     max_cosine: float | None = None,
 ) -> DataFrame:
     """Exact top-k by cosine for each query vector.
@@ -43,14 +40,12 @@ def cosine_topk(
     Returns (query_id, match_id, cosine, rank) with rank 1..k; ties
     broken by match id, so results are total-ordered and deterministic.
 
-    ``max_cosine`` (round 8, s22): when set, candidates with rounded
-    cosine ABOVE it are excluded BEFORE ranking — the hard-negative
-    mining predicate (near-identical matches are positives/near-dups,
-    not negatives).  The filter compares the same round(·, 6) value
-    both engines rank on, so no new float boundary is introduced.
-    None (the default) leaves every existing caller's plan unchanged.
+    ``max_cosine``: when set, candidates with rounded cosine ABOVE it
+    are excluded BEFORE ranking — the hard-negative mining predicate
+    (near-identical matches are positives/near-dups, not negatives).
+    The filter compares the same round(·, 6) value both engines rank
+    on, so no new float boundary is introduced.
     """
-    query_id_col = query_id_col or id_col
     # Scoring runs in the Arrow/numpy kernel (one einsum per batch): the
     # JVM HOF dot is interpreted per element, and worse, Catalyst
     # inlines any staged l2_normalize into the per-pair projection above
@@ -59,10 +54,8 @@ def cosine_topk(
     # inside the 6-decimal rounding.
     from mapreducehs_spark.functions.vector_np import cosine_udf
 
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-    )
-    c = corpus.select(F.col(id_col).alias("match_id"), F.col(vec_col).alias("__cv"))
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv"))
+    c = corpus.select(F.col("vec_id").alias("match_id"), F.col("embedding").alias("__cv"))
     scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("query_id") != F.col("match_id"))
@@ -80,27 +73,20 @@ def cosine_topk(
     )
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
-    rng = np.random.default_rng(seed)
+def _hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
+    rng = np.random.default_rng(42)
     return rng.standard_normal((n_planes, dim)).astype(float).tolist()
 
 
-def srp_signatures(
-    df: DataFrame,
-    dim: int,
-    n_planes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
+def srp_signatures(df: DataFrame, dim: int) -> DataFrame:
     """Signed-random-projection signature: bit i = sign(v · h_i).
     Hyperplanes are deterministic (seeded) literal arrays; the signature
     is one integer column — JVM-side end to end."""
-    planes = _hyperplanes(dim, n_planes, seed)
+    planes = _hyperplanes(dim, 16)
     sig = sum(
         (
             F.when(
-                dot_product(F.col(vec_col), F.array(*[F.lit(x) for x in h])) > 0,
+                dot_product(F.col("embedding"), F.array(*[F.lit(x) for x in h])) > 0,
                 F.lit(2**i).cast("bigint"),
             ).otherwise(F.lit(0).cast("bigint"))
         )
@@ -109,39 +95,34 @@ def srp_signatures(
     # vec rides through RAW: sign(v·h) is norm-invariant, and the pair
     # verification (numpy cosine) normalizes inside its own kernel.
     return df.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vec"), sig.alias("srp_sig")
+        F.col("vec_id").alias("id"), F.col("embedding").alias("vec"), sig.alias("srp_sig")
     )
 
 
 def cosine_pairs_lsh(
     m: Materialization,
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.9,
     dim: int = 64,
-    n_planes: int = 16,
-    bands: int = 4,
-    seed: int = 42,
 ) -> DataFrame:
     """All pairs with cosine ≥ threshold, via banded SRP-LSH candidates
     + exact verification.  Returns (id_a, id_b, cosine), id_a < id_b."""
     # persist = materialization barrier AND reuse: the signature (16
-    # interpreted dot products/row) plus normalization feed 2×bands join
+    # interpreted dot products/row) plus normalization feed 2×4 band join
     # sides — uncached, Catalyst re-derives them per side and inlines
     # the normalize into every pair projection (see cosine_topk).
-    sigs = m.persist(srp_signatures(df, dim, n_planes, id_col, vec_col, seed))
-    bits_per_band = n_planes // bands
+    sigs = m.persist(srp_signatures(df, dim))
+    bits_per_band = 4  # 16 planes over 4 bands
     mask = (1 << bits_per_band) - 1
     band_cols = [
         (
             F.shiftrightunsigned(F.col("srp_sig"), i * bits_per_band).bitwiseAND(F.lit(mask))
         ).alias(f"band{i}")
-        for i in range(bands)
+        for i in range(4)
     ]
     banded = sigs.select("id", "vec", *band_cols)
     pairs = None
-    for i in range(bands):
+    for i in range(4):
         l = banded.select(F.col("id").alias("id_a"), F.col("vec").alias("va"), F.col(f"band{i}").alias("bk"))
         r = banded.select(F.col("id").alias("id_b"), F.col("vec").alias("vb"), F.col(f"band{i}").alias("bk"))
         p = l.join(r, "bk").filter(F.col("id_a") < F.col("id_b")).drop("bk")
@@ -164,11 +145,7 @@ def srp_topk(
     queries: DataFrame,
     k: int = 5,
     dim: int = 64,
-    n_planes: int = 16,
     bands: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
     planes: np.ndarray | None = None,
 ) -> DataFrame:
     """ANN top-k via banded SRP-LSH bucketing (query-side broadcast).
@@ -197,7 +174,7 @@ def srp_topk(
     from mapreducehs_spark.functions.vector_np import cosine_udf, srp_band_keys_udf
 
     if planes is None:
-        planes = np.asarray(_hyperplanes(dim, n_planes, seed))
+        planes = np.asarray(_hyperplanes(dim, 16))
     else:
         planes = np.asarray(planes, dtype=np.float64)
     keys_udf = srp_band_keys_udf(planes, bands)
@@ -208,9 +185,9 @@ def srp_topk(
         # re-evaluates the kernel); the key array is always non-empty
         return (
             df.select(
-                F.col(id_col).alias(out_id),
-                F.col(vec_col).alias(out_vec),
-                F.explode_outer(keys_udf(F.col(vec_col))).alias("band_key"),
+                F.col("vec_id").alias(out_id),
+                F.col("embedding").alias(out_vec),
+                F.explode_outer(keys_udf(F.col("embedding"))).alias("band_key"),
             )
             .filter(F.col("band_key").isNotNull())
         )
@@ -243,12 +220,8 @@ def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    n_cells: int = 16,
     n_probe: int = 4,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
     centroids: np.ndarray | None = None,
 ) -> DataFrame:
     """IVF-flat approximate top-k: assign corpus vectors to their
@@ -267,17 +240,7 @@ def ivf_topk(
     sample, as in ``kmeans_profile``) raises it at the same n_probe —
     the 100 TB recipe.
     """
-    scored = ivf_candidates(
-        corpus,
-        queries,
-        n_cells=n_cells,
-        n_probe=n_probe,
-        dim=dim,
-        id_col=id_col,
-        vec_col=vec_col,
-        seed=seed,
-        centroids=centroids,
-    )
+    scored = ivf_candidates(corpus, queries, n_probe=n_probe, dim=dim, centroids=centroids)
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("match_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
@@ -289,12 +252,8 @@ def ivf_topk(
 def ivf_candidates(
     corpus: DataFrame,
     queries: DataFrame,
-    n_cells: int = 16,
     n_probe: int = 4,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
     centroids: np.ndarray | None = None,
 ) -> DataFrame:
     """``ivf_topk``'s probe-and-score stage as a reusable seam (the
@@ -309,18 +268,18 @@ def ivf_candidates(
     )
 
     if centroids is None:
-        rng = np.random.default_rng(seed)
-        cents = rng.standard_normal((n_cells, dim))
+        rng = np.random.default_rng(42)
+        cents = rng.standard_normal((16, dim))
         cents = cents / np.linalg.norm(cents, axis=1, keepdims=True)
     else:
         cents = np.asarray(centroids, dtype=np.float64)
 
     c = corpus.select(
-        F.col(id_col).alias("match_id"), F.col(vec_col).alias("__cv")
+        F.col("vec_id").alias("match_id"), F.col("embedding").alias("__cv")
     ).withColumn("cell", cell_argmax_udf(cents)(F.col("__cv")))
 
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv")
     ).withColumn("cell", F.explode(top_cells_udf(cents, n_probe)(F.col("__qv"))))
 
     return (
@@ -330,9 +289,7 @@ def ivf_candidates(
     )
 
 
-def label_centroids(
-    emb: DataFrame, label_col: str = "label", vec_col: str = "embedding", dim: int = 64
-) -> DataFrame:
+def label_centroids(emb: DataFrame) -> DataFrame:
     """Per-label centroid: mean of each vector component.
 
     posexplode + groupBy(label, pos) + avg — one shuffle keyed on
@@ -340,7 +297,7 @@ def label_centroids(
     (label, pos, centroid_val).
     """
     return (
-        emb.select(F.col(label_col).alias("label"), F.posexplode(vec_col).alias("pos", "v"))
+        emb.select("label", F.posexplode("embedding").alias("pos", "v"))
         .groupBy("label", "pos")
         .agg(F.round(F.avg(F.col("v").cast("double")), 6).alias("centroid_val"))
     )
@@ -350,8 +307,6 @@ def all_pairs_cosine_blocked(
     m: Materialization,
     emb: DataFrame,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     block_size: int = 512,
 ) -> DataFrame:
     """EXACT all-pairs cosine ≥ threshold via blocked matrix products.
@@ -406,9 +361,9 @@ def all_pairs_cosine_blocked(
 
     blocks = m.persist(
         emb.select(
-            F.col(id_col).alias("__id"),
-            F.col(vec_col).alias("__vec"),
-            F.floor(F.col(id_col) / block_size).alias("__blk"),
+            F.col("vec_id").alias("__id"),
+            F.col("embedding").alias("__vec"),
+            F.floor(F.col("vec_id") / block_size).alias("__blk"),
         )
         .groupBy("__blk")
         .applyInPandas(pack, schema=packed_schema)
@@ -548,16 +503,10 @@ def _kmeans_final_assignment(
     return vecs.withColumn("a", assign_udf(cids, cents)(F.col("v")))
 
 
-def kmeans_profile(
-    emb: DataFrame,
-    k: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans_profile(emb: DataFrame, k: int = 8) -> DataFrame:
     """Deterministic Lloyd k-means (data-seeded: initial centroids are
-    the ``k`` lowest-``id_col`` vectors) returning the per-cluster
-    profile ``(cluster, n_members, avg_sqdist)`` after ``iters``
+    the ``k`` lowest-``vec_id`` vectors) returning the per-cluster
+    profile ``(cluster, n_members, avg_sqdist)`` after 2
     iterations — the iterative-algorithm witness with a replayable
     trajectory (no RNG), so even the oracle can re-derive it.
 
@@ -573,7 +522,7 @@ def kmeans_profile(
     """
     with materialize(emb.sparkSession) as m:
         return (
-            _kmeans_final_assignment(m, emb, k, iters, id_col, vec_col)
+            _kmeans_final_assignment(m, emb, k, 2, "vec_id", "embedding")
             .groupBy(F.col("a.cluster").alias("cluster"))
             .agg(
                 F.count(F.lit(1)).alias("n_members"),
@@ -582,16 +531,9 @@ def kmeans_profile(
         )
 
 
-def kmeans_assignments(
-    m: Materialization,
-    emb: DataFrame,
-    k: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans_assignments(m: Materialization, emb: DataFrame, k: int = 8) -> DataFrame:
     """Per-vector cluster labels from ``kmeans_profile``'s EXACT
-    trajectory (same seeds, same ``iters - 1`` updates, same final
+    trajectory (same seeds, same single update, same final
     assignment pass) — the labels are what embedding-curation passes
     consume (SemDeDup partitioning, topical packing, cluster-stratified
     selection), while ``kmeans_profile`` keeps the per-cluster rollup.
@@ -599,26 +541,18 @@ def kmeans_assignments(
     Returns columns (id, cluster, sqdist); the vector frame stays
     persisted in the caller's scope ``m``.
     """
-    return _kmeans_final_assignment(m, emb, k, iters, id_col, vec_col).select(
+    return _kmeans_final_assignment(m, emb, k, 2, "vec_id", "embedding").select(
         "id",
         F.col("a.cluster").alias("cluster"),
         F.col("a.sqdist").alias("sqdist"),
     )
 
 
-def quantized_cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str | None = None,
-    levels: int = 127,
-) -> DataFrame:
+def quantized_cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact top-k by cosine over int8-style QUANTIZED vectors — the
     memory-bandwidth scale path: 4× less corpus IO than float32 (8× vs
     float64), integer SIMD dots, at a bounded similarity error (|Δcos|
-    ≤ ~2/levels on unit vectors).  Same broadcast-probe shape as
+    ≤ ~2/127 on unit vectors).  Same broadcast-probe shape as
     cosine_topk, but both sides run through ``quantize_udf`` first, so
     at 100 TB the quantized corpus column is what you'd materialize
     (write once, scan forever) while raw floats stay cold.
@@ -629,12 +563,9 @@ def quantized_cosine_topk(
     """
     from mapreducehs_spark.functions.vector_np import int_cosine_udf, quantize_udf
 
-    query_id_col = query_id_col or id_col
-    qz = quantize_udf(levels)
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), qz(F.col(vec_col)).alias("__qq")
-    )
-    c = corpus.select(F.col(id_col).alias("match_id"), qz(F.col(vec_col)).alias("__cq"))
+    qz = quantize_udf()
+    q = queries.select(F.col("vec_id").alias("query_id"), qz(F.col("embedding")).alias("__qq"))
+    c = corpus.select(F.col("vec_id").alias("match_id"), qz(F.col("embedding")).alias("__cq"))
     scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("query_id") != F.col("match_id"))
@@ -650,11 +581,7 @@ def quantized_cosine_topk(
     )
 
 
-def gram_matrix(
-    vecs: DataFrame,
-    vec_col: str = "embedding",
-    scale: int = 1000,
-) -> DataFrame:
+def gram_matrix(vecs: DataFrame) -> DataFrame:
     """Distributed integer Gram matrix G = Qᵀ·Q over the whole corpus.
 
     The primitive behind covariance/PCA/whitening of an embedding
@@ -680,7 +607,7 @@ def gram_matrix(
             mat = np.array(col.to_pylist(), dtype=np.float64)
             if mat.size == 0:
                 continue
-            q = np.floor(mat * scale).astype(np.int64)
+            q = np.floor(mat * 1000).astype(np.int64)
             g = q.T @ q
             dim = g.shape[0]
             iu, ju = np.triu_indices(dim)
@@ -693,7 +620,7 @@ def gram_matrix(
                 names=["i", "j", "partial"],
             )
 
-    partials = vecs.select(F.col(vec_col)).mapInArrow(
+    partials = vecs.select(F.col("embedding")).mapInArrow(
         partial_grams, "i long, j long, partial long"
     )
     return (
@@ -703,32 +630,22 @@ def gram_matrix(
     )
 
 
-def ivfpq_adc_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    coarse: np.ndarray,
-    k: int = 5,
-    n_probe: int = 4,
-    n_pq: int = 16,
-    n_sub: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-) -> DataFrame:
+def ivfpq_adc_topk(corpus: DataFrame, queries: DataFrame, coarse: np.ndarray) -> DataFrame:
     """IVF-PQ with asymmetric distance computation — the two preceding
     paradigms COMPOSED the way billion-scale indexes actually compose
     them (Jegou et al. 2011, IVFADC; reference witness: the O1+O2
     composition discipline, src/Core/MapReduceC.hs:22-104): the coarse
-    quantizer (IVF, s06's paradigm) restricts COMPUTE to ``n_probe``
+    quantizer (IVF, s06's paradigm) restricts COMPUTE to 4 probed
     cells per query, and product quantization over the cell RESIDUALS
-    (s14's paradigm) restricts MEMORY to ``n_sub`` one-byte codes per
-    corpus vector.  Quantizing the residual v - centroid(cell) instead
-    of v itself is the load-bearing trick: residual norms are much
+    (s14's paradigm) restricts MEMORY to 4 one-byte codes (one per
+    subspace) per corpus vector.  Quantizing the residual
+    v - centroid(cell) instead of v itself is the load-bearing trick: residual norms are much
     smaller than vector norms, so the same codebook budget yields a
     finer grid exactly where the probed candidates live.
 
     Determinism/oracle: vectors are integer (milli-quantized upstream),
     the coarse codebook is a driver-supplied integer matrix, the PQ
-    codebook is the residuals of the ``n_pq`` LOWEST-id corpus vectors
+    codebook is the residuals of the 16 LOWEST-id corpus vectors
     with id >= n_cells (a fixed data seed, no trained randomness), and
     every distance is an integer sum with first-minimum (= lowest-index)
     tie-breaks — encode -> probe -> ADC -> rank replays bit-for-bit in
@@ -739,39 +656,39 @@ def ivfpq_adc_topk(
     (query, probed-cell) pairs on the cell id — the IVF pruning happens
     in the JVM hash join, so unprobed cells never reach Python — one
     Arrow ADC pass (table lookups + adds, no per-pair vector math), and
-    a WindowGroupLimit top-k.  Driver state: the codebooks and the
-    n_queries x n_probe ADC tables, all model-sized.  At 100 TB the
-    corpus persists as (cell, codes) — n_sub bytes per vector, ~64x
-    smaller than raw floats — and each query touches n_probe/n_cells of
+    a WindowGroupLimit top-5.  Driver state: the codebooks and the
+    n_queries x 4 ADC tables, all model-sized.  At 100 TB the
+    corpus persists as (cell, codes) — 4 bytes per vector, ~64x
+    smaller than raw floats — and each query touches 4/n_cells of
     it; neither raw vectors nor residuals ever shuffle.
     """
     coarse = np.asarray(coarse, dtype=np.int64)
     n_cells, dim = coarse.shape
-    ds = dim // n_sub
+    ds = dim // 4
 
-    # PQ codebook: residuals of the n_pq lowest corpus ids that are not
+    # PQ codebook: residuals of the 16 lowest corpus ids that are not
     # themselves coarse centroids (their residuals would be zero rows).
     seed_rows = (
-        corpus.filter(F.col(id_col) >= n_cells).orderBy(id_col).limit(n_pq).collect()
+        corpus.filter(F.col("vec_id") >= n_cells).orderBy("vec_id").limit(16).collect()
     )
-    S = np.array([r[vec_col] for r in seed_rows], dtype=np.int64)
+    S = np.array([r["v"] for r in seed_rows], dtype=np.int64)
     scell = ((S[:, None, :] - coarse[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
-    CB = (S - coarse[scell]).reshape(n_pq, n_sub, ds)  # (n_pq, n_sub, ds)
+    CB = (S - coarse[scell]).reshape(16, 4, ds)  # (codeword, subspace, ds)
 
     def encode(it):
         for pdf in it:
             if not len(pdf):
                 continue
-            X = np.array(pdf[vec_col].to_list(), dtype=np.int64)
+            X = np.array(pdf["v"].to_list(), dtype=np.int64)
             cell = ((X[:, None, :] - coarse[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
-            R = (X - coarse[cell]).reshape(len(pdf), n_sub, ds)
-            codes = np.empty((len(pdf), n_sub), dtype=np.int64)
-            for m in range(n_sub):
+            R = (X - coarse[cell]).reshape(len(pdf), 4, ds)
+            codes = np.empty((len(pdf), 4), dtype=np.int64)
+            for m in range(4):
                 dm = ((R[:, None, m, :] - CB[None, :, m, :]) ** 2).sum(axis=2)
                 codes[:, m] = dm.argmin(axis=1)  # first min == lowest pqid
             yield pd.DataFrame(
                 {
-                    "match_id": pdf[id_col],
+                    "match_id": pdf["vec_id"],
                     "cell": cell.astype(np.int64),
                     "codes": list(codes),
                 }
@@ -779,28 +696,28 @@ def ivfpq_adc_topk(
 
     coded = corpus.mapInPandas(encode, schema="match_id long, cell long, codes array<bigint>")
 
-    q_rows = queries.orderBy(id_col).collect()
-    qids = [int(r[id_col]) for r in q_rows]
-    Q = np.array([r[vec_col] for r in q_rows], dtype=np.int64)
+    q_rows = queries.orderBy("vec_id").collect()
+    qids = [int(r["vec_id"]) for r in q_rows]
+    Q = np.array([r["v"] for r in q_rows], dtype=np.int64)
     qd = ((Q[:, None, :] - coarse[None, :, :]) ** 2).sum(axis=2)
     # stable argsort: equal distances keep ascending cell id, the
     # oracle's (sq ASC, cid ASC) order
-    probe_cells = np.argsort(qd, axis=1, kind="stable")[:, :n_probe]
+    probe_cells = np.argsort(qd, axis=1, kind="stable")[:, :4]
     tabs: dict[tuple[int, int], np.ndarray] = {}
     probe_pairs = []
     for qi, qid in enumerate(qids):
         for cell in probe_cells[qi]:
-            qr = (Q[qi] - coarse[cell]).reshape(n_sub, ds)
+            qr = (Q[qi] - coarse[cell]).reshape(4, ds)
             tabs[(qid, int(cell))] = (
                 (qr[:, None, :] - CB.transpose(1, 0, 2)) ** 2
-            ).sum(axis=2)  # (n_sub, n_pq)
+            ).sum(axis=2)  # (subspace, codeword)
             probe_pairs.append((qid, int(cell)))
     probes_df = corpus.sparkSession.createDataFrame(
         probe_pairs, "query_id long, cell long"
     )
 
     joined = coded.join(F.broadcast(probes_df), "cell")
-    m_idx = np.arange(n_sub)
+    m_idx = np.arange(4)
 
     def adc_scan(it):
         for pdf in it:
@@ -826,6 +743,6 @@ def ivfpq_adc_topk(
     w = Window.partitionBy("query_id").orderBy(F.col("adc").asc(), F.col("match_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
         .select("query_id", "match_id", "cell", "adc", "rank")
     )

@@ -14,31 +14,27 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def salted(df: DataFrame, key: str, n_salts: int = 16, salt_col: str = "__salt") -> DataFrame:
+def salted(df: DataFrame, key: str, n_salts: int = 16) -> DataFrame:
     """Append a deterministic salt (0..n_salts-1) derived from the full
     row hash, splitting each hot key into n_salts sub-keys."""
     return df.withColumn(
-        salt_col, F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(n_salts))
+        "__salt", F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(n_salts))
     )
 
 
 def two_phase_agg(
-    df: DataFrame,
-    key: str,
-    partial_aggs: list[Column],
-    final_aggs: list[Column],
-    n_salts: int = 16,
+    df: DataFrame, key: str, partial_aggs: list[Column], final_aggs: list[Column]
 ) -> DataFrame:
     """Salted two-phase aggregation for associative reductions on skewed
     keys: phase 1 aggregates (key, salt) — spreading a hot key over
-    n_salts tasks — phase 2 merges per key.
+    16 salt tasks — phase 2 merges per key.
 
     ``partial_aggs`` aggregate raw rows; ``final_aggs`` merge the
     partials (e.g. partial ``sum(x) as s`` then final ``sum(s) as s``).
     For non-skewed data Spark's own map-side partial aggregation already
     does this; use this only for measured hot keys.
     """
-    phase1 = salted(df, key, n_salts).groupBy(key, "__salt").agg(*partial_aggs)
+    phase1 = salted(df, key).groupBy(key, "__salt").agg(*partial_aggs)
     return phase1.groupBy(key).agg(*final_aggs)
 
 
@@ -48,7 +44,6 @@ def salted_join(
     left_key: str,
     right_key: str,
     n_salts: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
     """Salted equi-join for a skewed LEFT side joining a small-ish
     right side that is still too big to broadcast whole.
@@ -63,12 +58,12 @@ def salted_join(
     a grouped-map UDF that must see whole groups, or the planner picked
     a shuffle-hash join AQE won't split).
 
-    Result-identical to ``left.join(right, on, how)`` for inner/left
-    joins on unique right keys (pinned by the equivalence test).
+    Result-identical to the inner ``left.join(right, on)`` on unique
+    right keys (pinned by the equivalence test).
     """
     l = salted(left, left_key, n_salts)
     r = right.withColumn(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
     )
     cond = (l[left_key] == r[right_key]) & (l["__salt"] == r["__salt"])
-    return l.join(r, cond, how).drop("__salt")
+    return l.join(r, cond).drop("__salt")

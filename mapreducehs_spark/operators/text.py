@@ -34,16 +34,16 @@ def bpe_ish_tokens(col: Column | str) -> Column:
     return F.regexp_extract_all(c, F.lit(r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"), 0)
 
 
-def with_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_token_stats(df: DataFrame) -> DataFrame:
     """Adds n_tokens, n_chars_obs, avg_token_len, n_distinct_tokens.
 
     Tokens staged once as a column (split runs once per row, not once
     per derived stat)."""
-    staged = df.withColumn("__toks", tokens(text_col))
+    staged = df.withColumn("__toks", tokens("text"))
     toks = F.col("__toks")
     return (
         staged.withColumn("n_tokens", F.size(toks).cast("bigint"))
-        .withColumn("n_chars_obs", F.length(text_col).cast("bigint"))
+        .withColumn("n_chars_obs", F.length("text").cast("bigint"))
         .withColumn("n_distinct_tokens", F.size(F.array_distinct(toks)).cast("bigint"))
         .withColumn(
             "avg_token_len",
@@ -54,7 +54,7 @@ def with_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_quality_score(df: DataFrame) -> DataFrame:
     """Heuristic quality features + composite score in [0, 1].
 
     Features: stopword ratio (fluency proxy), punctuation density,
@@ -62,20 +62,20 @@ def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     clipped linear blend — deterministic, tunable, cheap at 100 TB
     (pure column expressions over one pass).
     """
-    staged = df.withColumn("__toks", tokens(text_col))
+    staged = df.withColumn("__toks", tokens("text"))
     toks = F.col("__toks")
     n_tokens = F.greatest(F.size(toks), F.lit(1)).cast("double")
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, F.lower(t))))
-    punct_chars = F.length(F.regexp_replace(F.col(text_col), r"[^!-/:-@\[-`{-~]", ""))
-    text_len = F.greatest(F.length(text_col), F.lit(1)).cast("double")
+    punct_chars = F.length(F.regexp_replace(F.col("text"), r"[^!-/:-@\[-`{-~]", ""))
+    text_len = F.greatest(F.length("text"), F.lit(1)).cast("double")
 
     out = (
         staged.withColumn("stopword_ratio", n_stop.cast("double") / n_tokens)
         .withColumn("punct_ratio", punct_chars.cast("double") / text_len)
         .withColumn(
             "len_band_ok",
-            (F.length(text_col) >= 20) & (F.length(text_col) <= 100000),
+            (F.length("text") >= 20) & (F.length("text") <= 100000),
         )
     )
     score = (
@@ -89,7 +89,7 @@ def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     ).drop("__toks")
 
 
-def with_lang_guess(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_lang_guess(df: DataFrame) -> DataFrame:
     """Character-class language-ID heuristic.
 
     Real lang-ID is an n-gram model; the deterministic, oracle-testable
@@ -97,7 +97,7 @@ def with_lang_guess(df: DataFrame, text_col: str = "text") -> DataFrame:
     Arabic / latin) with an ASCII-stopword tiebreak for latin scripts.
     At 100 TB this is one regexp pass per row, fully codegen'd.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     n_cjk = F.length(F.regexp_replace(t, r"[^一-鿿]", ""))
     n_cyr = F.length(F.regexp_replace(t, r"[^Ѐ-ӿ]", ""))
     n_ar = F.length(F.regexp_replace(t, r"[^؀-ۿ]", ""))
@@ -123,10 +123,8 @@ def ngrams(tok_col: Column | str, n: int = 3) -> Column:
     )
 
 
-def term_stats_by_facet(
-    df: DataFrame, text_col: str = "text", facet: str = "lang", top_k: int = 5
-) -> DataFrame:
-    """Top-k terms per facet by TF-IDF-ish weight.
+def term_stats_by_facet(df: DataFrame) -> DataFrame:
+    """Top-5 terms per ``lang`` facet by TF-IDF-ish weight.
 
     tf = term count within facet; df = #facets containing the term;
     weight = tf * ln((N_facets + 1)/(df + 1)).  One explode + two hash
@@ -137,10 +135,10 @@ def term_stats_by_facet(
     # pushes it down with split() inlined — tokenization would run twice
     # (see operators/dedup.py ngram_jaccard_pairs).
     exploded = df.select(
-        F.col(facet), F.explode_outer(tokens(text_col)).alias("term")
+        F.col("lang"), F.explode_outer(tokens("text")).alias("term")
     ).filter(F.col("term").isNotNull())
-    tf = exploded.groupBy(facet, "term").agg(F.count(F.lit(1)).alias("tf"))
-    n_facets = df.select(facet).distinct().count()
+    tf = exploded.groupBy("lang", "term").agg(F.count(F.lit(1)).alias("tf"))
+    n_facets = df.select("lang").distinct().count()
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("facet_df"))
     weighted = tf.join(dfreq, "term").withColumn(
         "tfidf",
@@ -150,27 +148,21 @@ def term_stats_by_facet(
             6,
         ),
     )
-    w = Window.partitionBy(facet).orderBy(
+    w = Window.partitionBy("lang").orderBy(
         F.col("tfidf").desc(), F.col("tf").desc(), F.col("term").asc()
     )
     return (
         weighted.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= top_k)
-        .select(facet, "term", "tf", "facet_df", "tfidf", "rk")
+        .filter(F.col("rk") <= 5)
+        .select("lang", "term", "tf", "facet_df", "tfidf", "rk")
     )
 
 
-def pack_sequences(
-    df: DataFrame,
-    budget_tokens: int,
-    part_col: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def pack_sequences(df: DataFrame, budget_tokens: int) -> DataFrame:
     """Pack documents into fixed-token-budget training chunks.
 
-    Offset packing: within each ``part_col`` shard, documents in
-    ``id_col`` order are laid end-to-end and the chunk id is the token
+    Offset packing: within each ``source`` shard, documents in
+    ``doc_id`` order are laid end-to-end and the chunk id is the token
     offset divided by the budget — ``floor((running - n_tok)/budget)``,
     i.e. a chunk is every document whose *start* offset falls in the
     same budget window.  Deterministic, order-stable, one window pass.
@@ -182,11 +174,11 @@ def pack_sequences(
     never span input shards).  Returns per-chunk stats.
     """
     staged = df.select(
-        F.col(part_col), F.col(id_col), F.size(tokens(text_col)).cast("bigint").alias("n_tok")
+        F.col("source"), F.col("doc_id"), F.size(tokens("text")).cast("bigint").alias("n_tok")
     )
     w = (
-        Window.partitionBy(part_col)
-        .orderBy(id_col)
+        Window.partitionBy("source")
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     chunked = staged.withColumn(
@@ -195,33 +187,27 @@ def pack_sequences(
             "bigint"
         ),
     )
-    return chunked.groupBy(part_col, "chunk_id").agg(
+    return chunked.groupBy("source", "chunk_id").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tok").alias("tok_total"),
-        F.min(id_col).alias("first_doc"),
-        F.max(id_col).alias("last_doc"),
+        F.min("doc_id").alias("first_doc"),
+        F.max("doc_id").alias("last_doc"),
     )
 
 
-def normalize_text(col: Column | str, stopwords: tuple[str, ...] = STOPWORDS) -> Column:
+def normalize_text(col: Column | str) -> Column:
     """Normalization pass: lowercase, drop stopwords, collapse runs of
     whitespace, trim.  Pure regexp — whole-stage codegen, and exactly
     mirrorable in a SQL oracle (RE2 and Java regex agree on this
     pattern subset)."""
     c = F.col(col) if isinstance(col, str) else col
-    pat = r"\b(" + "|".join(stopwords) + r")\b"
+    pat = r"\b(" + "|".join(STOPWORDS) + r")\b"
     return F.trim(F.regexp_replace(F.regexp_replace(F.lower(c), pat, " "), r"\s+", " "))
 
 
-def ngram_hash_rows(
-    df: DataFrame,
-    n: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    carry_col: str = "lang",
-) -> DataFrame:
-    """One row per overlapping word-n-gram OCCURRENCE (multiset — unlike
-    the dedup module's distinct shingle sets), the n-gram as a 64-bit
+def ngram_hash_rows(df: DataFrame) -> DataFrame:
+    """One row per overlapping word-2-gram OCCURRENCE (multiset — unlike
+    the dedup module's distinct shingle sets), the 2-gram as a 64-bit
     hash: (id, carry, gram).
 
     Arrow-batched numpy kernel, same rationale as
@@ -245,13 +231,13 @@ def ngram_hash_rows(
                 pdf["id"].values, pdf["__carry"].values, pdf["__text"].values
             ):
                 toks = txt.split()
-                m = len(toks) - n + 1
+                m = len(toks) - 1
                 if m <= 0:
                     continue
                 ids.append(di)
                 carries.append(cv)
                 counts.append(m)
-                grams.extend(" ".join(toks[j : j + n]) for j in range(m))
+                grams.extend(" ".join(toks[j : j + 2]) for j in range(m))
             if not ids:
                 yield pd.DataFrame(
                     {
@@ -273,9 +259,9 @@ def ngram_hash_rows(
 
     par = df.sparkSession.sparkContext.defaultParallelism
     staged = df.select(
-        F.col(id_col).alias("id"),
-        F.col(carry_col).alias("__carry"),
-        F.col(text_col).alias("__text"),
+        F.col("doc_id").alias("id"),
+        F.col("lang").alias("__carry"),
+        F.col("text").alias("__text"),
     ).repartition(par)
     return staged.mapInPandas(kernel, "id long, carry string, gram long")
 
@@ -285,8 +271,6 @@ def boilerplate_ngrams(
     n: int = 5,
     min_doc_frac: float = 0.05,
     top_k: int = 20,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Corpus-wide boilerplate detector: word ``n``-grams ranked by
     DOCUMENT frequency (how many distinct docs contain them), keeping
@@ -303,7 +287,7 @@ def boilerplate_ngrams(
     """
     par = df.sparkSession.sparkContext.defaultParallelism
     staged = (
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
+        df.select(F.col("doc_id").alias("id"), F.col("text").alias("__text"))
         .repartition(par)
         .select("id", tokens(F.col("__text")).alias("__toks"))
         .filter(F.size("__toks") >= n)
@@ -364,17 +348,11 @@ def pii_counts(col: Column | str) -> dict[str, Column]:
 # ---------------------------------------------------------------------------
 
 
-def chunk_documents(
-    df: DataFrame,
-    chunk_tokens: int = 64,
-    stride: int = 48,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def chunk_documents(df: DataFrame) -> DataFrame:
     """Sliding-window token chunking with overlap: chunk ``i`` covers
-    tokens [i*stride, i*stride + chunk_tokens).  The standard RAG /
-    long-context preparation step — overlap (chunk_tokens - stride)
-    keeps boundary sentences retrievable from both sides.
+    tokens [i*48, i*48 + 64).  The standard RAG / long-context
+    preparation step — the 16-token overlap keeps boundary sentences
+    retrievable from both sides.
 
     Emits (id, chunk_id, n_chunk_tokens, chunk_text).  All array-side:
     one split per row, a sequence+transform to slice windows, one
@@ -382,21 +360,17 @@ def chunk_documents(
     embarrassingly parallel; the explode fission is why this scales to
     100 TB: each output chunk row is independent downstream).
     """
-    if stride <= 0 or chunk_tokens <= 0 or stride > chunk_tokens:
-        raise ValueError("need 0 < stride <= chunk_tokens")
     staged = df.select(
-        F.col(id_col).alias("id"), tokens(text_col).alias("__toks")
+        F.col("doc_id").alias("id"), tokens("text").alias("__toks")
     ).filter(F.size("__toks") > 0)
     n = F.size("__toks")
-    # number of windows: 1 + ceil(max(n - chunk_tokens, 0) / stride)
-    n_chunks = F.lit(1) + F.ceil(
-        F.greatest(n - chunk_tokens, F.lit(0)) / F.lit(stride)
-    ).cast("int")
+    # number of windows: 1 + ceil(max(n - 64, 0) / 48)
+    n_chunks = F.lit(1) + F.ceil(F.greatest(n - 64, F.lit(0)) / F.lit(48)).cast("int")
     windows = F.transform(
         F.sequence(F.lit(0), n_chunks - 1),
         lambda i: F.struct(
             i.cast("bigint").alias("chunk_id"),
-            F.slice(F.col("__toks"), i * stride + 1, chunk_tokens).alias("toks"),
+            F.slice(F.col("__toks"), i * 48 + 1, 64).alias("toks"),
         ),
     )
     ex = staged.select("id", F.explode_outer(windows).alias("c")).filter(
@@ -428,7 +402,6 @@ def bpe_adjacent_pairs(sym_col: Column | str) -> Column:
 def bpe_merge_steps(
     docs: DataFrame,
     iters: int = 3,
-    text_col: str = "text",
     with_vocab: bool = True,
 ) -> list[tuple[int, str, str, int, int]]:
     """Learn ``iters`` BPE merges over whitespace symbols; returns
@@ -457,7 +430,7 @@ def bpe_merge_steps(
     stays small (tokenizer vocab induction runs a bounded merge budget).
     """
     state = docs.select(
-        F.concat(F.lit(" "), F.concat_ws(" ", tokens(text_col)), F.lit(" ")).alias("s")
+        F.concat(F.lit(" "), F.concat_ws(" ", tokens("text")), F.lit(" ")).alias("s")
     )
 
     def _vocab_leg(st: DataFrame) -> DataFrame:

@@ -1,8 +1,4 @@
-"""Shared helpers + oracle CTE fragments used by 2+ query families.
-
-Split out of the former single-module queries.py (round 8, zero
-behavior change — plan fingerprints held).
-"""
+"""Shared helpers + oracle CTE fragments used by 2+ query families."""
 
 from __future__ import annotations
 
@@ -84,7 +80,7 @@ def _d11_oracle(threshold: float = 0.25) -> str:
     """
 
 
-def _d15_oracle(est_threshold: float = 0.25, jaccard_threshold: float = 0.5) -> str:
+def _d15_oracle(jaccard_threshold: float = 0.5) -> str:
     """d15/d07: the full composed drop list — checked-minhash candidates
     (shared CTEs) → exact string-shingle Jaccard ≥ ``jaccard_threshold``
     → recursive-CTE connected components → drop everything but the
@@ -96,7 +92,7 @@ def _d15_oracle(est_threshold: float = 0.25, jaccard_threshold: float = 0.5) -> 
     est AS (
       SELECT c.id_a, c.id_b
       FROM cand c JOIN sigs sa ON sa.doc_id = c.id_a JOIN sigs sb ON sb.doc_id = c.id_b
-      WHERE ({agree}) / {float(np_)} >= {est_threshold}
+      WHERE ({agree}) / {float(np_)} >= 0.25
     ), sized AS MATERIALIZED (
       SELECT doc_id, count(*) AS set_size FROM sh GROUP BY 1
     ), inter AS (

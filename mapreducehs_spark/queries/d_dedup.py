@@ -1,8 +1,4 @@
-"""Deduplication queries (d-series).
-
-Split out of the former single-module queries.py (round 8, zero
-behavior change — plan fingerprints held).
-"""
+"""Deduplication queries (d-series)."""
 
 from __future__ import annotations
 
@@ -80,7 +76,7 @@ def d02_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _d02_pairs(m: Materialization, docs: DataFrame) -> DataFrame:
     """d02's exact-Jaccard pair law, shared by d06 and d27's truth arm."""
-    return dedup.ngram_jaccard_pairs(m, docs, n=3, threshold=0.12, max_shingle_df=None)
+    return dedup.ngram_jaccard_pairs(m, docs, threshold=0.12, max_shingle_df=None)
 
 
 @query("d03_minhash_lsh_pairs")  # oracle attached below (_d11_oracle(0.375))
@@ -184,7 +180,7 @@ def d06_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("d07_near_dedup_drop_list")  # oracle attached below (_d15_oracle(0.25, 0.6))
+@query("d07_near_dedup_drop_list")  # oracle attached below (_d15_oracle(jaccard_threshold=0.6))
 def d07_near_dedup_drop_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end near-dedup pipeline (the composed 100 TB shape):
     MinHash-LSH candidates → exact Jaccard verification on candidate
@@ -241,7 +237,7 @@ def d08_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 50 == 0)
     train = docs.filter(F.col("doc_id") % 50 != 0)
-    return dedup.decontaminate(train, bench, n=8)
+    return dedup.decontaminate(train, bench)
 
 
 @query(
@@ -420,9 +416,7 @@ ORACLE["d03_minhash_lsh_pairs"] = _d11_oracle(threshold=0.375)
 ORACLE["d04_simhash_pairs"] = _d12_oracle(max_hamming=3)
 
 
-ORACLE["d07_near_dedup_drop_list"] = _d15_oracle(
-    est_threshold=0.25, jaccard_threshold=0.6
-)
+ORACLE["d07_near_dedup_drop_list"] = _d15_oracle(jaccard_threshold=0.6)
 
 
 @query(
@@ -513,7 +507,7 @@ def d13_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     with materialize(spark) as m:
-        ex = m.persist(hashed_shingle_rows(docs, "text", "doc_id", 3))
+        ex = m.persist(hashed_shingle_rows(docs, 3))
         a = ex.select(
             F.col("id").alias("id_small"), F.col("set_size").alias("size_small"), "shingle"
         )
@@ -554,7 +548,7 @@ def d14_fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality-based dedup.  Both engines share the levenshtein
     definition, so the whole operator is value-checked."""
     part = _t(spark, sf_dir, "part")
-    return dedup.fuzzy_name_pairs(part, "p_name", max_edit=2)
+    return dedup.fuzzy_name_pairs(part, "p_name")
 
 
 @query(
@@ -1041,7 +1035,7 @@ def _d23_oracle() -> str:
     every document's class representative = coalesce(rep, self), and
     the split is the md5-fold of the REP (never the member) mod 10 —
     so the whole near-dup class lands in one split by construction."""
-    inner = _d15_oracle(est_threshold=0.25, jaccard_threshold=0.6)
+    inner = _d15_oracle(jaccard_threshold=0.6)
     fold = (
         "('0x' || substr(md5(CAST(coalesce(dl.rep_id, d.doc_id) AS VARCHAR)"
         " || ':split'), 1, 12))::BIGINT % 10"
@@ -1312,7 +1306,7 @@ def d25_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _d26_oracle(threshold: float = 0.25) -> str:
+def _d26_oracle() -> str:
     """Bipartite checked-MinHash decontamination oracle: the d11 CTE
     law (shingles → md5-fold ids → literal-seed signatures → banding)
     over ALL documents, split train/eval at candidate time, with d26's
@@ -1365,7 +1359,7 @@ def _d26_oracle(threshold: float = 0.25) -> str:
       FROM cand c
       JOIN sigs sa ON sa.doc_id = c.id
       JOIN sigs sb ON sb.doc_id = c.eval_id
-      WHERE ({agree}) / {float(np_)} >= {threshold}
+      WHERE ({agree}) / {float(np_)} >= 0.25
     ), best AS (
       SELECT id, CAST(count(*) AS BIGINT) AS n_eval_matches, max(est) AS est_jaccard
       FROM scored GROUP BY id
@@ -1398,7 +1392,7 @@ def d26_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench = docs.filter(F.col("doc_id") % 50 == 0)
     train = docs.filter(F.col("doc_id") % 50 != 0)
     with materialize(spark) as m:
-        return dedup.decontaminate_fuzzy(m, train, bench, est_threshold=0.25)
+        return dedup.decontaminate_fuzzy(m, train, bench)
 
 
 # =========================================================================
@@ -1614,7 +1608,7 @@ def d28_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _d29_oracle() -> str:
     """d07's composed drop-list replay (shared renderer) feeding t31's
     exponential-race law, weights = near-dup class sizes."""
-    drop = _d15_oracle(est_threshold=0.25, jaccard_threshold=0.6)
+    drop = _d15_oracle(jaccard_threshold=0.6)
     return f"""
     WITH droplist AS (
       SELECT doc_id, rep_id FROM ({drop}) t
@@ -2057,7 +2051,7 @@ def d32_lsh_banding_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         # round(j, 6), which could diverge from the oracle's unrounded
         # ratio for true J in [0.4999995, 0.5)).
         truth = m.checkpoint(
-            dedup.ngram_jaccard_intersections(m, docs, n=3, max_shingle_df=None)
+            dedup.ngram_jaccard_intersections(m, docs, max_shingle_df=None)
             .filter(
                 F.col("inter") * 2
                 >= F.col("size_a") + F.col("size_b") - F.col("inter")

@@ -1,8 +1,4 @@
-"""Multimodal queries (m-series).
-
-Split out of the former single-module queries.py (round 8, zero
-behavior change — plan fingerprints held).
-"""
+"""Multimodal queries (m-series)."""
 
 from __future__ import annotations
 
@@ -62,7 +58,7 @@ def m02_payload_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays in SQL (hex-slice → int / 2^32) — so even the UDF
     boundary is hash-checked, not just row-counted."""
     docs = _t(spark, sf_dir, "documents")
-    feats = multimodal.extract_features(multimodal.attach_payload(docs), dim=8)
+    feats = multimodal.extract_features(multimodal.attach_payload(docs))
     return feats.select(
         "doc_id",
         F.round(F.element_at("features", 1), 6).alias("f0"),
@@ -93,7 +89,7 @@ def m03_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     with_payload = attach_payload(docs)
-    sampled = frame_sample_plan(with_payload, every_n=10)
+    sampled = frame_sample_plan(with_payload)
     return sampled.select(
         "doc_id",
         F.col("meta.n_bytes").alias("n_bytes"),
@@ -159,7 +155,7 @@ def m06_image_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    payloads = render_pgm_payloads(docs, "doc_id", width=32, height=16)
+    payloads = render_pgm_payloads(docs, width=32, height=16)
     return decoded_image_stats(payloads).withColumnRenamed("id", "doc_id")
 
 
@@ -247,7 +243,7 @@ def m07_audio_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    payloads = render_wav_payloads(docs, "doc_id", n_samples=256, sample_rate=8000)
+    payloads = render_wav_payloads(docs)
     return decoded_audio_stats(payloads).withColumnRenamed("id", "doc_id")
 
 
@@ -284,7 +280,7 @@ def m08_image_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    payloads = render_pgm_payloads(docs, "doc_id", width=32, height=16)
+    payloads = render_pgm_payloads(docs, width=32, height=16)
     return resized_image_stats(payloads).withColumnRenamed("id", "doc_id")
 
 
@@ -327,8 +323,8 @@ def m09_video_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    payloads = render_mrv_payloads(docs, "doc_id", n_frames=8, width=16, height=8)
-    return sampled_frame_stats(payloads, every_n=3).withColumnRenamed("id", "doc_id")
+    payloads = render_mrv_payloads(docs)
+    return sampled_frame_stats(payloads).withColumnRenamed("id", "doc_id")
 
 
 @query(
@@ -475,8 +471,8 @@ def m11_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducehs_spark.operators.multimodal import ahash_64, render_pgm_payloads
 
     docs = _t(spark, sf_dir, "documents")
-    payloads = render_pgm_payloads(docs, "doc_id", width=32, height=16)
-    return dedup.hash64_canonical_dedup(ahash_64(payloads), max_hamming=3)
+    payloads = render_pgm_payloads(docs, width=32, height=16)
+    return dedup.hash64_canonical_dedup(ahash_64(payloads))
 
 
 @query(
@@ -527,8 +523,8 @@ def m12_audio_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    payloads = render_wav_payloads_seeded(docs, "doc_id", seed_mod=128)
-    return dedup.hash64_canonical_dedup(audio_fingerprint_64(payloads), max_hamming=3)
+    payloads = render_wav_payloads_seeded(docs)
+    return dedup.hash64_canonical_dedup(audio_fingerprint_64(payloads))
 
 
 #: hash128_canonical_dedup's oracle tail: takes a CTE ``h`` of
@@ -616,8 +612,8 @@ def m13_phash128_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducehs_spark.operators.multimodal import ahash_128, render_pgm_payloads
 
     docs = _t(spark, sf_dir, "documents")
-    payloads = render_pgm_payloads(docs, "doc_id", width=64, height=32)
-    return dedup.hash128_canonical_dedup(ahash_128(payloads), max_hamming=3)
+    payloads = render_pgm_payloads(docs, width=64, height=32)
+    return dedup.hash128_canonical_dedup(ahash_128(payloads))
 
 
 def _m14_oracle() -> str:
@@ -642,7 +638,7 @@ def _m14_oracle() -> str:
     define ``edges``/``reach`` internally and DuckDB resolves an outer
     recursive CTE against the shadowing inner name (measured: 404 vs
     the correct 476 rows at sf0.01)."""
-    txt = _d15_oracle(est_threshold=0.25, jaccard_threshold=0.6)
+    txt = _d15_oracle(jaccard_threshold=0.6)
     return f"""
     WITH RECURSIVE xm14_e0 AS MATERIALIZED (
       SELECT member AS a, rep AS b FROM ({_M11_ORACLE}) tim
@@ -706,9 +702,9 @@ def m14_crossmodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducehs_spark.operators.multimodal import ahash_64, render_pgm_payloads
 
     docs = _t(spark, sf_dir, "documents")
-    payloads = render_pgm_payloads(docs, "doc_id", width=32, height=16)
+    payloads = render_pgm_payloads(docs, width=32, height=16)
     with materialize(spark) as m:
-        img = dedup.hash64_duplicate_edges(m, ahash_64(payloads), max_hamming=3)
+        img = dedup.hash64_duplicate_edges(m, ahash_64(payloads))
         txt = dedup.near_dedup_verified_edges_checked(
             m, docs, est_threshold=0.25, jaccard_threshold=0.6
         )
@@ -728,7 +724,7 @@ def m14_crossmodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _m15_oracle(max_hamming: int = 3) -> str:
+def _m15_oracle() -> str:
     """m15: the shared ahash-from-doc_id law (m11's _AHASH_CTES) joined
     against the deterministic swapped-pairing rule; flagged pairs are
     those whose decoded-image hash disagrees with the caption-derived
@@ -745,7 +741,7 @@ def _m15_oracle(max_hamming: int = 3) -> str:
     FROM pairs p
     JOIN h ih ON ih.doc_id = p.img_of
     JOIN h ch ON ch.doc_id = p.doc_id
-    WHERE bit_count(xor(ih.lo, ch.lo)) + bit_count(xor(ih.hi, ch.hi)) > {max_hamming}
+    WHERE bit_count(xor(ih.lo, ch.lo)) + bit_count(xor(ih.hi, ch.hi)) > 3
     """
 
 
@@ -774,7 +770,7 @@ def m15_alignment_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducehs_spark.operators.multimodal import ahash_64, render_pgm_payloads
 
     docs = _t(spark, sf_dir, "documents")
-    payloads = render_pgm_payloads(docs, "doc_id", width=32, height=16)
+    payloads = render_pgm_payloads(docs, width=32, height=16)
     with materialize(spark) as m:
         ih = m.result(ahash_64(payloads))
     pairs = docs.select(
@@ -861,10 +857,8 @@ def m16_video_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    payloads = render_mrv_payloads(docs, "doc_id", n_frames=8, width=16, height=8)
-    return dedup.hash64_canonical_dedup(
-        video_majority_ahash(payloads, every_n=3), max_hamming=3
-    )
+    payloads = render_mrv_payloads(docs)
+    return dedup.hash64_canonical_dedup(video_majority_ahash(payloads))
 
 
 # =========================================================================

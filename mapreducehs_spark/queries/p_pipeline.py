@@ -1,8 +1,4 @@
-"""MapReduce-pipeline parity queries (p-series).
-
-Split out of the former single-module queries.py (round 8, zero
-behavior change — plan fingerprints held).
-"""
+"""MapReduce-pipeline parity queries (p-series)."""
 
 from __future__ import annotations
 

@@ -1,8 +1,4 @@
-"""Relational core queries q01–q60.
-
-Split out of the former single-module queries.py (round 8, zero
-behavior change — plan fingerprints held).
-"""
+"""Relational core queries q01–q60."""
 
 from __future__ import annotations
 
@@ -1367,7 +1363,7 @@ def q38_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter; survives 100 TB trivially."""
     docs = _t(spark, sf_dir, "documents")
     return (
-        _sampling.stratified_sample(docs, _STRATA_RATES, strata_col="lang")
+        _sampling.stratified_sample(docs, _STRATA_RATES)
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_kept"),

@@ -1,8 +1,4 @@
-"""Relational extension queries q61–q121.
-
-Split out of the former single-module queries.py (round 8, zero
-behavior change — plan fingerprints held).
-"""
+"""Relational extension queries q61–q121."""
 
 from __future__ import annotations
 
@@ -1633,7 +1629,7 @@ def q93_xml_source_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q96_oracle(iters: int = 3, damp_num: int = 85, damp_den: int = 100) -> str:
+def _q96_oracle() -> str:
     """Unrolled integer PageRank replay: micro-unit bigint ranks, each
     edge contribution (r*85) // (100*outdeg) — integer ops only, so
     partial-sum order can't drift and the whole iteration is
@@ -1655,13 +1651,13 @@ def _q96_oracle(iters: int = 3, damp_num: int = 85, damp_den: int = 100) -> str:
       FROM deg, n
     )"""
     body = []
-    for i in range(1, iters + 1):
+    for i in range(1, 4):
         prev = f"r{i - 1}"
         body.append(f"""
     , r{i} AS (
       SELECT d.node, d.outdeg,
              CAST((SELECT 150000000000 // n_nodes FROM n)
-                  + coalesce(sum((p.r * {damp_num}) // ({damp_den} * p.outdeg)), 0)
+                  + coalesce(sum((p.r * 85) // (100 * p.outdeg)), 0)
                   AS BIGINT) AS r
       FROM deg d
       LEFT JOIN edges e ON e.dst = d.node
@@ -1670,7 +1666,7 @@ def _q96_oracle(iters: int = 3, damp_num: int = 85, damp_den: int = 100) -> str:
     )""")
     tail = f"""
     SELECT node, CAST(node % 2 AS BIGINT) AS is_supplier, r AS rank_micro
-    FROM r{iters}
+    FROM r3
     ORDER BY r DESC, node ASC
     LIMIT 25
     """
@@ -2596,7 +2592,7 @@ def _q107_cms_build(m: Materialization, sf_dir: str) -> DataFrame:
     )
 
 
-def _q108_oracle(hops: int = 3) -> str:
+def _q108_oracle() -> str:
     """Unrolled BFS frontier replay: per level, the reachable set is the
     previous set plus one edge expansion, with min-hop per node — all
     integer, so the level histogram is engine-exact."""
@@ -2612,7 +2608,7 @@ def _q108_oracle(hops: int = 3) -> str:
       SELECT (SELECT min(src) FROM edges) AS node, 0 AS d
     )"""
     parts = []
-    for i in range(1, hops + 1):
+    for i in range(1, 4):
         prev = f"d{i - 1}"
         parts.append(f"""
     , d{i} AS (
@@ -2625,7 +2621,7 @@ def _q108_oracle(hops: int = 3) -> str:
     )""")
     tail = f"""
     SELECT d AS hops, CAST(count(*) AS BIGINT) AS n_nodes
-    FROM d{hops}
+    FROM d3
     GROUP BY d
     """
     return head + "".join(parts) + tail
@@ -3573,7 +3569,7 @@ def q120_aqp_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =========================================================================
 
 
-def _q121_oracle(rounds: int = 3) -> str:
+def _q121_oracle() -> str:
     """Unrolled Bellman-Ford: per round, FULL relaxation over the
     reached set (provably equal per-round to the changed-frontier
     variant the Spark side runs — an unchanged node's relaxations were
@@ -3592,7 +3588,7 @@ def _q121_oracle(rounds: int = 3) -> str:
       SELECT (SELECT min(src) FROM edges) AS node, CAST(0 AS BIGINT) AS d
     )"""
     parts = []
-    for i in range(1, rounds + 1):
+    for i in range(1, 4):
         prev = f"d{i - 1}"
         parts.append(f"""
     , d{i} AS (
@@ -3605,7 +3601,7 @@ def _q121_oracle(rounds: int = 3) -> str:
     )""")
     tail = f"""
     SELECT node, d AS dist
-    FROM d{rounds}
+    FROM d3
     ORDER BY d ASC, node ASC
     LIMIT 20
     """

@@ -1,8 +1,4 @@
-"""Similarity / retrieval queries (s-series).
-
-Split out of the former single-module queries.py (round 8, zero
-behavior change — plan fingerprints held).
-"""
+"""Similarity / retrieval queries (s-series)."""
 
 from __future__ import annotations
 
@@ -90,7 +86,6 @@ def s02_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") >= 8),
         emb.filter(F.col("vec_id") < 8),
         k=5,
-        n_cells=16,
         n_probe=2,
         centroids=_seeded_centroids(emb),
     )
@@ -110,7 +105,6 @@ def s04_ann_srp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") >= 8),
         emb.filter(F.col("vec_id") < 8),
         k=5,
-        n_planes=16,
         bands=4,
         planes=_seeded_planes(emb),
     )
@@ -190,7 +184,7 @@ def s05_kmeans_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducehs_spark.operators.similarity import kmeans_profile
 
     emb = _t(spark, sf_dir, "embeddings")
-    out = kmeans_profile(emb, k=8, iters=2)
+    out = kmeans_profile(emb, k=8)
     return out.withColumn("avg_sqdist", F.round(F.col("avg_sqdist"), 4))
 
 
@@ -254,7 +248,6 @@ def s06_ann_ivf_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") >= 8),
         emb.filter(F.col("vec_id") < 8),
         k=5,
-        n_cells=16,
         n_probe=4,
         centroids=_seeded_centroids(emb),
     )
@@ -326,7 +319,6 @@ def s07_ann_srp_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") >= 8),
         emb.filter(F.col("vec_id") < 8),
         k=5,
-        n_planes=16,
         bands=4,
         planes=_seeded_planes(emb),
     )
@@ -411,9 +403,7 @@ def s09_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor-quantization makes the sums order-free, so DuckDB replays the
     exact values by exploding index pairs — the oracle pays the O(n·dim²)
     pair explosion the Spark side's matmul avoids."""
-    return similarity.gram_matrix(
-        _t(spark, sf_dir, "embeddings"), vec_col="embedding", scale=1000
-    )
+    return similarity.gram_matrix(_t(spark, sf_dir, "embeddings"))
 
 
 @query(
@@ -479,7 +469,7 @@ def s10_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     return draws.join(labels, "neg_id").select("vec_id", "slot", "neg_id", "neg_label")
 
 
-def _s11_ctes(iters: int = 3) -> str:
+def _s11_ctes() -> str:
     """Unrolled integer power-iteration CTE chain on the symmetrized
     Gram matrix: int64 matvec + truncating integer renormalization —
     both engines truncate BIGINT division identically (Spark `div`,
@@ -505,7 +495,7 @@ def _s11_ctes(iters: int = 3) -> str:
       SELECT DISTINCT i AS j, CAST(1024 AS BIGINT) AS v FROM g
     )"""
     parts = []
-    for k in range(1, iters + 1):
+    for k in range(1, 4):
         prev = f"v{k - 1}"
         parts.append(f"""
     , w{k} AS MATERIALIZED (
@@ -520,9 +510,9 @@ def _s11_ctes(iters: int = 3) -> str:
     return head + "".join(parts)
 
 
-def _s11_oracle(iters: int = 3) -> str:
-    return _s11_ctes(iters) + f"""
-    SELECT j AS i, v FROM v{iters}
+def _s11_oracle() -> str:
+    return _s11_ctes() + f"""
+    SELECT j AS i, v FROM v3
     """
 
 
@@ -550,7 +540,7 @@ def s11_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dominant_eigvec(emb: DataFrame, iters: int = 3):
+def _dominant_eigvec(emb: DataFrame):
     """(dim, v): 3 integer power iterations on the s09 distributed Gram
     matrix.  Driver state is the dim×dim int64 matrix + the dim-vector
     iterate (model-sized, the s05/t18 discipline — the driver never
@@ -558,14 +548,14 @@ def _dominant_eigvec(emb: DataFrame, iters: int = 3):
     (projects the corpus onto it)."""
     import numpy as np
 
-    rows = similarity.gram_matrix(emb, vec_col="embedding", scale=1000).collect()
+    rows = similarity.gram_matrix(emb).collect()
     dim = max(r["j"] for r in rows)
     G = np.zeros((dim, dim), dtype=np.int64)
     for r in rows:
         G[r["i"] - 1, r["j"] - 1] = r["g"]
         G[r["j"] - 1, r["i"] - 1] = r["g"]
     v = np.full(dim, 1024, dtype=np.int64)
-    for _ in range(iters):
+    for _ in range(3):
         w = G @ v
         scaled = w * 1024
         m = np.abs(w).max()
@@ -574,7 +564,7 @@ def _dominant_eigvec(emb: DataFrame, iters: int = 3):
     return dim, v
 
 
-def _s12_oracle(k: int = 5) -> str:
+def _s12_oracle() -> str:
     """Unrolled greedy MMR replay: per round, margin = relevance −
     max-sim-to-selected (all integer quantized dots), argmax with a
     (margin, vec_id) total order — engine-exact at every step."""
@@ -594,7 +584,7 @@ def _s12_oracle(k: int = 5) -> str:
       FROM c ORDER BY sq DESC, vec_id LIMIT 1
     )"""
     parts = []
-    for j in range(2, k + 1):
+    for j in range(2, 6):
         selset = " UNION ALL ".join(f"SELECT vec_id FROM s{i}" for i in range(1, j))
         parts.append(f"""
     , sel{j} AS (
@@ -612,7 +602,7 @@ def _s12_oracle(k: int = 5) -> str:
     selects = " UNION ALL ".join(
         f"""SELECT CAST({j} AS BIGINT) AS rank, vec_id,
                sq AS relevance, mx AS max_prev, sq - mx AS margin FROM s{j}"""
-        for j in range(1, k + 1)
+        for j in range(1, 6)
     )
     return head + "".join(parts) + "\n    " + selects
 
@@ -764,7 +754,7 @@ def s13_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.filter(F.col("vec_id") >= 8)
     queries_df = emb.filter(F.col("vec_id") < 8)
     approx = similarity.ivf_topk(
-        corpus, queries_df, k=5, n_cells=16, n_probe=4, centroids=cents
+        corpus, queries_df, k=5, n_probe=4, centroids=cents
     ).select("query_id", "match_id", F.lit(1).alias("__hit"))
     exact = similarity.cosine_topk(corpus, queries_df, k=5).select(
         "query_id", "match_id"
@@ -1138,17 +1128,13 @@ def s16_ivfpq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.filter(F.col("vec_id") >= 8),
         base.filter(F.col("vec_id") < 8),
         coarse,
-        k=5,
-        n_probe=4,
-        n_pq=16,
-        n_sub=4,
     )
 
 
-def _s17_oracle(iters: int = 3) -> str:
+def _s17_oracle() -> str:
     """s11's unrolled power-iteration chain + a projection tail: every
     corpus vector's quantized dot product with the final iterate."""
-    return _s11_ctes(iters) + f"""
+    return _s11_ctes() + f"""
     , qe AS (
       SELECT vec_id,
              [CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT) FOR x IN embedding] AS qv
@@ -1156,7 +1142,7 @@ def _s17_oracle(iters: int = 3) -> str:
     )
     SELECT e.vec_id,
            CAST(sum(e.qv[p.j] * p.v) AS BIGINT) AS pc1_score
-    FROM qe e, v{iters} p
+    FROM qe e, v3 p
     GROUP BY e.vec_id
     """
 
@@ -1353,11 +1339,11 @@ def _bm25_scored(docs: DataFrame, pin: Callable[[DataFrame], DataFrame]):
 # =========================================================================
 
 
-def _s19_oracle(n_cand: int = 100, k: int = 20) -> str:
+def _s19_oracle() -> str:
     """Retrieve-then-rerank replay: s18's BM25 pieces rank the candidate
-    pool (LIMIT ``n_cand`` under the identical float total order), then
+    pool (LIMIT 100 under the identical float total order), then
     t26's hashed-linear law rescores EXACTLY those docs and the final
-    top-``k`` comes from the integer rerank score — both stage laws are
+    top-20 comes from the integer rerank score — both stage laws are
     the committed s18/t26 oracles, composed."""
     tf_cols, df_cols, term_scores = _bm25_sql_pieces()
     any_tf = " + ".join(f"p.tf_{t}" for t in _BM25_TERMS)
@@ -1380,7 +1366,7 @@ def _s19_oracle(n_cand: int = 100, k: int = 20) -> str:
       FROM p, s
       WHERE {any_tf} > 0
       ORDER BY bm25f DESC, p.doc_id ASC
-      LIMIT {n_cand}
+      LIMIT 100
     ), ranked AS (
       SELECT doc_id, bm25f,
              CAST(row_number() OVER (ORDER BY bm25f DESC, doc_id ASC) AS BIGINT)
@@ -1409,7 +1395,7 @@ def _s19_oracle(n_cand: int = 100, k: int = 20) -> str:
                 AS BIGINT) AS final_rank
     FROM ranked r JOIN rr USING (doc_id)
     ORDER BY rr.rerank_score DESC, r.doc_id ASC
-    LIMIT {k}
+    LIMIT 20
     """
 
 
@@ -1612,7 +1598,7 @@ def s20_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _S21_CAT_MOD, _S21_CAT = 5, 2
 
 
-def _s21_oracle(n_probe: int = 4) -> str:
+def _s21_oracle() -> str:
     """s06's seeded-IVF replay with BOTH filter placements: the
     pre-filtered ranking (filter candidates, then rank — always k
     results from the filtered corpus) and the post-filter survivor
@@ -1644,7 +1630,7 @@ def _s21_oracle(n_probe: int = 4) -> str:
                  ORDER BY list_cosine_similarity(q.qv, c.cv) DESC, c.cid ASC
                ) AS rn
         FROM q CROSS JOIN c
-      ) WHERE rn <= {n_probe}
+      ) WHERE rn <= 4
     ), scored AS (
       SELECT p.query_id, a.vec_id AS match_id,
              round(list_cosine_similarity(p.qv, a.v), 6) AS cosine
@@ -1694,7 +1680,6 @@ def s21_filtered_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = similarity.ivf_candidates(
         emb.filter(F.col("vec_id") >= 8),
         emb.filter(F.col("vec_id") < 8),
-        n_cells=16,
         n_probe=4,
         centroids=_seeded_centroids(emb),
     )

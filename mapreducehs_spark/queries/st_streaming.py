@@ -1,8 +1,4 @@
-"""Structured Streaming queries (st-series).
-
-Split out of the former single-module queries.py (round 8, zero
-behavior change — plan fingerprints held).
-"""
+"""Structured Streaming queries (st-series)."""
 
 from __future__ import annotations
 
@@ -41,7 +37,7 @@ from mapreducehs_spark.queries.t_text import _T40_CTX
 def _replayed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducehs_spark import streaming as st
 
-    replay = st.prepare_stream_dir(spark, sf_dir, n_chunks=4)
+    replay = st.prepare_stream_dir(spark, sf_dir)
     return st.events_stream(spark, replay)
 
 
@@ -77,13 +73,8 @@ def st01_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no late data by replay construction — differential vs DuckDB)."""
     from mapreducehs_spark import streaming as st
 
-    agg = st.tumbling_aggregate(
-        _replayed_events(spark, sf_dir), window="1 hour", watermark="30 minutes"
-    )
-    out = st.run_to_batch(
-        agg, "st01_sink", output_mode="append",
-        state_bytes=_state_bound(sf_dir),
-    )
+    agg = st.tumbling_aggregate(_replayed_events(spark, sf_dir), watermark="30 minutes")
+    out = st.run_to_batch(agg, "st01_sink", state_bytes=_state_bound(sf_dir))
     # sentinel dropped from the BATCH result (an in-stream filter on a
     # group key would be pushed below the watermark; see streaming/ops.py)
     return out.filter(F.col("event_type") != "__flush__")
@@ -120,13 +111,8 @@ def st02_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     differential vs islands-and-gaps sessionization in DuckDB."""
     from mapreducehs_spark import streaming as st
 
-    agg = st.session_aggregate(
-        _replayed_events(spark, sf_dir), gap="30 minutes", watermark="30 minutes"
-    )
-    out = st.run_to_batch(
-        agg, "st02_sink", output_mode="append",
-        state_bytes=_state_bound(sf_dir),
-    )
+    agg = st.session_aggregate(_replayed_events(spark, sf_dir))
+    out = st.run_to_batch(agg, "st02_sink", state_bytes=_state_bound(sf_dir))
     return out.filter(F.col("user_id") >= 0)  # drop the sentinel's session
 
 
@@ -146,10 +132,7 @@ def st03_stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducehs_spark import streaming as st
 
     updates = st.stateful_user_totals(_replayed_events(spark, sf_dir))
-    log = st.run_to_batch(
-        updates, "st03_sink", output_mode="append",
-        state_bytes=_state_bound(sf_dir),
-    )
+    log = st.run_to_batch(updates, "st03_sink", state_bytes=_state_bound(sf_dir))
     from mapreducehs_spark.streaming.ops import latest_per_user
 
     return latest_per_user(log)
@@ -173,10 +156,7 @@ def st04_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = st.stream_distinct(
         _replayed_events(spark, sf_dir), keys=["user_id", "event_type"]
     )
-    return st.run_to_batch(
-        deduped, "st04_sink", output_mode="append",
-        state_bytes=_state_bound(sf_dir),
-    )
+    return st.run_to_batch(deduped, "st04_sink", state_bytes=_state_bound(sf_dir))
 
 
 @query(
@@ -204,20 +184,13 @@ def st05_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     30-minute match horizon has streamed past."""
     from mapreducehs_spark import streaming as st
 
-    joined = st.clicks_then_purchases(
-        _replayed_events(spark, sf_dir), within="30 minutes", watermark="1 hour"
-    )
+    joined = st.clicks_then_purchases(_replayed_events(spark, sf_dir))
     # state partitions from the topology's state bound (round 13): a
     # stream-stream join runs FOUR state stores per partition and each
     # instance pays a fixed per-micro-batch commit cost — size the
     # partition count by state volume, not core count (see
     # streaming/ops.state_partitions_for).
-    return st.run_to_batch(
-        joined,
-        "st05_sink",
-        output_mode="append",
-        state_bytes=_state_bound(sf_dir),
-    )
+    return st.run_to_batch(joined, "st05_sink", state_bytes=_state_bound(sf_dir))
 
 
 @query(
@@ -248,16 +221,8 @@ def st06_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     expiry (see streaming/ops.sliding_aggregate)."""
     from mapreducehs_spark import streaming as st
 
-    agg = st.sliding_aggregate(
-        _replayed_events(spark, sf_dir),
-        window="15 minutes",
-        slide="5 minutes",
-        watermark="30 minutes",
-    )
-    out = st.run_to_batch(
-        agg, "st06_sink", output_mode="append",
-        state_bytes=_state_bound(sf_dir),
-    )
+    agg = st.sliding_aggregate(_replayed_events(spark, sf_dir))
+    out = st.run_to_batch(agg, "st06_sink", state_bytes=_state_bound(sf_dir))
     return out.filter(F.col("event_type") != "__flush__")
 
 
@@ -288,7 +253,7 @@ def st07_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey", "n_name"
     )
     enriched = st.enrich_with_dim(_replayed_events(spark, sf_dir), dim)
-    out = st.run_to_batch(enriched, "st07_sink", output_mode="append")
+    out = st.run_to_batch(enriched, "st07_sink")
     return out.filter(F.col("event_type") != "__flush__")
 
 
@@ -334,11 +299,8 @@ def st08_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     replay = st.prepare_late_stream_dir(spark, sf_dir)
     events = st.events_stream(spark, replay)
-    agg = st.tumbling_aggregate(events, window="1 hour", watermark="2233 seconds")
-    out = st.run_to_batch(
-        agg, "st08_sink", output_mode="append",
-        state_bytes=_state_bound(sf_dir),
-    )
+    agg = st.tumbling_aggregate(events, watermark="2233 seconds")
+    out = st.run_to_batch(agg, "st08_sink", state_bytes=_state_bound(sf_dir))
     return out.filter(F.col("event_type") != "__flush__")
 
 
@@ -419,7 +381,7 @@ def st10_stream_upsert_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducehs_spark import streaming as st
     from mapreducehs_spark.operators.merge import merge_upsert
 
-    replay = st.prepare_stream_dir(spark, sf_dir, n_chunks=4)
+    replay = st.prepare_stream_dir(spark, sf_dir)
     events = st.events_stream(spark, replay)
     cents = F.round(F.col("value") * 100, 0).cast("bigint")
     agg = (
@@ -502,14 +464,8 @@ def st11_stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     window is final; batch replay over the same events is the oracle."""
     from mapreducehs_spark import streaming as st
 
-    agg = st.chained_window_aggregate(
-        _replayed_events(spark, sf_dir), inner="1 hour", outer="6 hours",
-        watermark="30 minutes",
-    )
-    out = st.run_to_batch(
-        agg, "st11_sink", output_mode="append",
-        state_bytes=_state_bound(sf_dir),
-    )
+    agg = st.chained_window_aggregate(_replayed_events(spark, sf_dir))
+    out = st.run_to_batch(agg, "st11_sink", state_bytes=_state_bound(sf_dir))
     return out.filter(F.col("event_type") != "__flush__")
 
 
@@ -535,10 +491,7 @@ def st12_stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame
     deduped = st.stream_distinct_within_watermark(
         _replayed_events(spark, sf_dir), keys=["user_id", "event_type"]
     )
-    return st.run_to_batch(
-        deduped, "st12_sink", output_mode="append",
-        state_bytes=_state_bound(sf_dir),
-    )
+    return st.run_to_batch(deduped, "st12_sink", state_bytes=_state_bound(sf_dir))
 
 
 @query(
@@ -563,13 +516,8 @@ def st13_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     of stream length."""
     from mapreducehs_spark import streaming as st
 
-    updates = st.stateful_mg_sketch(
-        _replayed_events(spark, sf_dir), shards=16, capacity=8
-    )
-    log = st.run_to_batch(
-        updates, "st13_sink", output_mode="append",
-        state_bytes=_state_bound(sf_dir),
-    )
+    updates = st.stateful_mg_sketch(_replayed_events(spark, sf_dir))
+    log = st.run_to_batch(updates, "st13_sink", state_bytes=_state_bound(sf_dir))
     return st.merge_mg_sketch_log(log)
 
 
@@ -608,25 +556,18 @@ def st14_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     window exactly as in the inner case."""
     from mapreducehs_spark import streaming as st
 
-    replay = st.prepare_stream_dir(spark, sf_dir, n_chunks=4, n_flush=2)
-    joined = st.clicks_left_outer_purchases(
-        st.events_stream(spark, replay), within="30 minutes", watermark="1 hour"
-    )
+    replay = st.prepare_stream_dir(spark, sf_dir, n_flush=2)
+    joined = st.clicks_left_outer_purchases(st.events_stream(spark, replay))
     # same state-volume-derived partition count as st05 (four state
     # stores per partition; fixed per-instance commit cost per batch)
-    out = st.run_to_batch(
-        joined,
-        "st14_sink",
-        output_mode="append",
-        state_bytes=_state_bound(sf_dir),
-    )
+    out = st.run_to_batch(joined, "st14_sink", state_bytes=_state_bound(sf_dir))
     return out.filter(F.col("user_id") >= 0)
 
 
 def _replayed_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducehs_spark import streaming as st
 
-    replay = st.prepare_docs_stream_dir(spark, sf_dir, n_chunks=4)
+    replay = st.prepare_docs_stream_dir(spark, sf_dir)
     return st.docs_stream(spark, replay)
 
 
@@ -654,8 +595,8 @@ def st15_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 11.4 s at 32 partitions vs 15.4 s at the state-volume-derived 8
     # (rows identical), so compute parallelism, not store-instance
     # count, is the binding constraint here.
-    log = st.run_to_batch(pairs, "st15_sink", output_mode="append")
-    return st.minhash_pairs_from_log(log, est_threshold=0.25)
+    log = st.run_to_batch(pairs, "st15_sink")
+    return st.minhash_pairs_from_log(log)
 
 
 @query("st16_stream_funnel", oracle=_Q115_FUNNEL_ORACLE)
@@ -672,10 +613,7 @@ def st16_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducehs_spark import streaming as st
 
     snapshots = st.stateful_funnel(_replayed_events(spark, sf_dir))
-    log = st.run_to_batch(
-        snapshots, "st16_sink", output_mode="append",
-        state_bytes=_state_bound(sf_dir),
-    )
+    log = st.run_to_batch(snapshots, "st16_sink", state_bytes=_state_bound(sf_dir))
     return st.funnel_report_from_log(log)
 
 
@@ -692,18 +630,18 @@ def st17_stream_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducehs_spark import streaming as st
 
     scored = st.hashed_linear_score_stream(_replayed_docs(spark, sf_dir))
-    log = st.run_to_batch(scored, "st17_sink", output_mode="append")
+    log = st.run_to_batch(scored, "st17_sink")
     return log.select("doc_id", "n_feats", "score", "keep")
 
 
-def _st18_oracle(n_chunks: int = 4, n_buckets: int = 64) -> str:
+def _st18_oracle() -> str:
     """Unrolled online-SGD oracle: one integer gradient step per replay
     chunk, chunk membership replayed from the fixture's positional law
-    (doc_id rank r -> chunk (r*n_chunks) div n; exact because every
-    fixture SF's doc count divides by n_chunks).  Same truncating
+    (doc_id rank r -> chunk (r*4) div n; exact because every
+    fixture SF's doc count divides by 4).  Same truncating
     update law as t28/t29."""
     steps = []
-    for s in range(n_chunks):
+    for s in range(4):
         steps.append(f"""
     zf{s} AS (
       SELECT f.doc_id, CAST(sum(w{s}.w * f.x) AS BIGINT) AS zf
@@ -733,7 +671,7 @@ def _st18_oracle(n_chunks: int = 4, n_buckets: int = 64) -> str:
         f"""SELECT CAST({s + 1} AS BIGINT) AS step, bucket, w FROM w{s + 1}
     UNION ALL
     SELECT CAST({s + 1} AS BIGINT) AS step, CAST(-1 AS BIGINT) AS bucket, b AS w FROM b{s + 1}"""
-        for s in range(n_chunks)
+        for s in range(4)
     )
     return f"""
     WITH toks AS (
@@ -742,7 +680,7 @@ def _st18_oracle(n_chunks: int = 4, n_buckets: int = 64) -> str:
       FROM documents
     ), feats AS MATERIALIZED (
       SELECT doc_id,
-             ('0x' || substr(md5(term), 1, 12))::BIGINT % {n_buckets} AS bucket,
+             ('0x' || substr(md5(term), 1, 12))::BIGINT % 64 AS bucket,
              CAST(count(*) AS BIGINT) AS x
       FROM toks GROUP BY 1, 2
     ), lab AS MATERIALIZED (
@@ -753,11 +691,11 @@ def _st18_oracle(n_chunks: int = 4, n_buckets: int = 64) -> str:
       SELECT doc_id, row_number() OVER (ORDER BY doc_id ASC) - 1 AS rk FROM documents
     ), nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
     chunk AS MATERIALIZED (
-      SELECT doc_id, CAST((rk * {n_chunks}) // nn.n AS BIGINT) AS step
+      SELECT doc_id, CAST((rk * 4) // nn.n AS BIGINT) AS step
       FROM ranked, nn
     ), cnt AS (
       SELECT step, CAST(count(*) AS BIGINT) AS n FROM chunk GROUP BY 1
-    ), grid AS (SELECT CAST(unnest(range(0, {n_buckets})) AS BIGINT) AS bucket),
+    ), grid AS (SELECT CAST(unnest(range(0, 64)) AS BIGINT) AS bucket),
     w0 AS (SELECT bucket, CAST(0 AS BIGINT) AS w FROM grid),
     b0 AS (SELECT CAST(0 AS BIGINT) AS b),
     {",".join(steps)}
@@ -813,7 +751,7 @@ def st19_stream_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     rates = _mixture_rates(_mixture_tok(docs))
     kept = st.mixture_filter_stream(_replayed_docs(spark, sf_dir), rates)
-    log = st.run_to_batch(kept, "st19_sink", output_mode="append")
+    log = st.run_to_batch(kept, "st19_sink")
     return log.select("doc_id", "source", "n_tokens")
 
 
@@ -845,10 +783,7 @@ def st20_stream_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducehs_spark import streaming as st
 
     updates = st.stateful_moments(_replayed_events(spark, sf_dir))
-    log = st.run_to_batch(
-        updates, "st20_sink", output_mode="append",
-        state_bytes=_state_bound(sf_dir),
-    )
+    log = st.run_to_batch(updates, "st20_sink", state_bytes=_state_bound(sf_dir))
     from mapreducehs_spark.streaming.ops import latest_moments
 
     return latest_moments(log)
@@ -890,13 +825,8 @@ def st21_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     stateful_trailing_anomaly)."""
     from mapreducehs_spark import streaming as st
 
-    flagged = st.stateful_trailing_anomaly(
-        _replayed_events(spark, sf_dir), window=8, num=3
-    )
-    log = st.run_to_batch(
-        flagged, "st21_sink", output_mode="append",
-        state_bytes=_state_bound(sf_dir),
-    )
+    flagged = st.stateful_trailing_anomaly(_replayed_events(spark, sf_dir))
+    log = st.run_to_batch(flagged, "st21_sink", state_bytes=_state_bound(sf_dir))
     return log.select("user_id", "event_id", "cents", "trail_sum")
 
 
@@ -949,10 +879,7 @@ def st22_stream_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducehs_spark import streaming as st
 
     out = st.stateful_bloom_dedup(_replayed_events(spark, sf_dir), shards=8)
-    return st.run_to_batch(
-        out, "st22_sink", output_mode="append",
-        state_bytes=_state_bound(sf_dir),
-    )
+    return st.run_to_batch(out, "st22_sink", state_bytes=_state_bound(sf_dir))
 
 
 # =========================================================================
@@ -1032,7 +959,7 @@ def st23_stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         dim.count()  # materialize once; every micro-batch reuses the cache
         enriched = st.enrich_asof_versions(_replayed_events(spark, sf_dir), dim)
-        return m.result(st.run_to_batch(enriched, "st23_sink", output_mode="append"))
+        return m.result(st.run_to_batch(enriched, "st23_sink"))
 
 
 # =========================================================================
@@ -1088,7 +1015,7 @@ def st24_stream_decode_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
             schema="doc_id long, decode_status string, px_sum long",
         )
     )
-    return st.run_to_batch(decoded, "st24_sink", output_mode="append")
+    return st.run_to_batch(decoded, "st24_sink")
 
 
 # =========================================================================
@@ -1138,10 +1065,7 @@ def st25_stream_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFra
     from mapreducehs_spark import streaming as st
 
     updates = st.stateful_histogram(_replayed_events(spark, sf_dir))
-    log = st.run_to_batch(
-        updates, "st25_sink", output_mode="append",
-        state_bytes=_state_bound(sf_dir),
-    )
+    log = st.run_to_batch(updates, "st25_sink", state_bytes=_state_bound(sf_dir))
     return st.histogram_quantiles_log(log)
 
 
@@ -1193,10 +1117,7 @@ def st26_stream_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(text.tokens("text")).cast("bigint").alias("n_tokens"),
     )
     packed = st.stateful_sequence_packer(docs, ctx_len=_T40_CTX)
-    return st.run_to_batch(
-        packed, "st26_sink", output_mode="append",
-        state_bytes=_state_bound(sf_dir, "documents"),
-    )
+    return st.run_to_batch(packed, "st26_sink", state_bytes=_state_bound(sf_dir, "documents"))
 
 
 @query("st27_stream_decontaminate", oracle=ORACLE["d08_decontaminate"])
@@ -1286,7 +1207,7 @@ def st27_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagged = docs.mapInPandas(
         kernel, schema="id long, total_grams long, hit_grams long"
     )
-    log = st.run_to_batch(flagged, "st27_sink", output_mode="append")
+    log = st.run_to_batch(flagged, "st27_sink")
     return log.select(
         "id",
         "total_grams",
@@ -1319,7 +1240,7 @@ def st28_stream_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducehs_spark.queries.t_text import _t16_doc_frame, _t16_rollup
 
     audit = _t16_doc_frame(_replayed_docs(spark, sf_dir))
-    log = st.run_to_batch(audit, "st28_sink", output_mode="append")
+    log = st.run_to_batch(audit, "st28_sink")
     return _t16_rollup(log)
 
 
@@ -1339,7 +1260,7 @@ def st29_stream_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-checks the final reservoir verbatim."""
     from mapreducehs_spark import streaming as st
 
-    return st.streaming_weighted_sample(_replayed_docs(spark, sf_dir), k=25)
+    return st.streaming_weighted_sample(_replayed_docs(spark, sf_dir))
 
 
 @query("st30_stream_pair_funnel", oracle=ORACLE["m19_pair_curation_funnel"])
@@ -1360,7 +1281,7 @@ def st30_stream_pair_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducehs_spark.queries.m_multimodal import _m19_flagged, _m19_rollup
 
     flagged = _m19_flagged(_replayed_docs(spark, sf_dir))
-    log = st.run_to_batch(flagged, "st30_sink", output_mode="append")
+    log = st.run_to_batch(flagged, "st30_sink")
     return _m19_rollup(log)
 
 
@@ -1393,7 +1314,7 @@ def st31_stream_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from mapreducehs_spark import streaming as st
 
-    base_mv, replay = st.prepare_cdc_mv_dir(spark, sf_dir, n_chunks=4)
+    base_mv, replay = st.prepare_cdc_mv_dir(spark, sf_dir)
     serving = os.path.join(
         FIXTURE_ROOT,
         f"mapreducehs_mv_{os.path.basename(os.path.normpath(sf_dir))}_{os.getpid()}",
@@ -1503,7 +1424,7 @@ def st32_stream_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(replay)
     )
     images = st.stateful_cdc_images(log)
-    return st.run_to_batch(images, "st32_sink", output_mode="append")
+    return st.run_to_batch(images, "st32_sink")
 
 
 @query("st33_stream_ivf_ingest", oracle=ORACLE["s23_ivf_index_maintenance"])
@@ -1534,7 +1455,7 @@ def st33_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _seeded_centroids(emb)
     assign = cell_argmax_udf(cents)
 
-    replay = st.prepare_emb_stream_dir(spark, sf_dir, n_chunks=4)
+    replay = st.prepare_emb_stream_dir(spark, sf_dir)
     schema = StructType(
         [
             StructField("vec_id", LongType()),
@@ -1547,7 +1468,7 @@ def st33_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(replay)
         .select("vec_id", assign(F.col("embedding")).alias("cell"))
     )
-    log = st.run_to_batch(stream, "st33_sink", output_mode="append")
+    log = st.run_to_batch(stream, "st33_sink")
     base = emb.filter(F.col("vec_id") >= 8).select(
         "vec_id", assign(F.col("embedding")).alias("cell")
     )
@@ -1632,7 +1553,7 @@ def st34_stream_curriculum_router(spark: SparkSession, sf_dir: str) -> DataFrame
             )
         )
         routed = st.curriculum_route_stream(_replayed_docs(spark, sf_dir), cutoffs)
-        log = st.run_to_batch(routed, "st34_sink", output_mode="append")
+        log = st.run_to_batch(routed, "st34_sink")
     return log.groupBy("source", "decile").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("n_tok").cast("bigint").alias("n_tokens"),
@@ -1703,9 +1624,7 @@ def st35_stream_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         # the id-resolved scans run inside the stream's micro-batches —
         # the confs must be live until the sink is fully drained
-        log = st.run_to_batch(
-            _st35_stream(spark, sf_dir), "st35_sink", output_mode="append"
-        )
+        log = st.run_to_batch(_st35_stream(spark, sf_dir), "st35_sink")
         with materialize(spark) as m:
             return m.result(
                 log.groupBy("generation", "status").agg(
@@ -1779,7 +1698,7 @@ def st36_stream_compaction_monitor(spark: SparkSession, sf_dir: str) -> DataFram
 
     from mapreducehs_spark import streaming as st
 
-    replay = st.prepare_manifest_dir(spark, sf_dir, n_chunks=4)
+    replay = st.prepare_manifest_dir(spark, sf_dir)
     monitor = os.path.join(
         FIXTURE_ROOT,
         f"mapreducehs_monitor_{os.path.basename(os.path.normpath(sf_dir))}_{os.getpid()}",

@@ -1,8 +1,4 @@
-"""Text-analysis / curation queries (t-series).
-
-Split out of the former single-module queries.py (round 8, zero
-behavior change — plan fingerprints held).
-"""
+"""Text-analysis / curation queries (t-series)."""
 
 from __future__ import annotations
 
@@ -152,7 +148,7 @@ def t04_top_terms_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 TF-IDF terms per language: explode → two hash aggs →
     window top-k (operators/text.py term_stats_by_facet)."""
     docs = _t(spark, sf_dir, "documents")
-    return text.term_stats_by_facet(docs, facet="lang", top_k=5).withColumn(
+    return text.term_stats_by_facet(docs).withColumn(
         "tf", F.col("tf").cast("bigint")
     ).withColumn("facet_df", F.col("facet_df").cast("bigint"))
 
@@ -279,7 +275,7 @@ def t08_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     for why not the explode/HOF form) + three hash aggregations: the
     scalable "per-doc holistic stat then corpus rollup" form."""
     docs = _t(spark, sf_dir, "documents")
-    grams = text.ngram_hash_rows(docs, n=2).withColumnRenamed("carry", "lang")
+    grams = text.ngram_hash_rows(docs).withColumnRenamed("carry", "lang")
     per = grams.groupBy("id", "lang", "gram").agg(F.count(F.lit(1)).alias("c"))
     doc = per.groupBy("id", "lang").agg(
         F.max("c").alias("top_c"), F.sum("c").alias("total_c")
@@ -928,7 +924,7 @@ def t19_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     it scales embarrassingly (every chunk row is independent
     downstream).  chunk_md5 pins each chunk's exact text."""
     docs = _t(spark, sf_dir, "documents")
-    ch = text.chunk_documents(docs, chunk_tokens=64, stride=48)
+    ch = text.chunk_documents(docs)
     return ch.select(
         F.col("id").alias("doc_id"),
         "chunk_id",
@@ -1668,7 +1664,7 @@ def t28_logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducehs_spark.operators.ml import logreg_train_hashed
 
     docs = _t(spark, sf_dir, "documents")
-    return logreg_train_hashed(docs, n_buckets=64, n_steps=2, label_chars=300)
+    return logreg_train_hashed(docs, n_buckets=64)
 
 
 @query(
@@ -1755,9 +1751,7 @@ def t29_logreg_minibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducehs_spark.operators.ml import logreg_train_minibatch
 
     docs = _t(spark, sf_dir, "documents")
-    return logreg_train_minibatch(
-        docs, n_buckets=64, n_steps=2, label_chars=300, sample_mod=4
-    )
+    return logreg_train_minibatch(docs, n_buckets=64, sample_mod=4)
 
 
 def _mix_draw():
@@ -2525,9 +2519,9 @@ def _cv_fold_sql(f: int) -> str:
                FROM {p}ev)"""
 
 
-def _cv_oracle(k: int = _CV_K) -> str:
-    folds = ",\n    ".join(_cv_fold_sql(f) for f in range(k))
-    union = " UNION ALL ".join(f"SELECT * FROM f{f}res" for f in range(k))
+def _cv_oracle() -> str:
+    folds = ",\n    ".join(_cv_fold_sql(f) for f in range(_CV_K))
+    union = " UNION ALL ".join(f"SELECT * FROM f{f}res" for f in range(_CV_K))
     return f"""
     WITH toks AS (
       SELECT doc_id,
@@ -2542,7 +2536,7 @@ def _cv_oracle(k: int = _CV_K) -> str:
       SELECT doc_id,
              CASE WHEN n_chars >= 300 THEN 1::BIGINT ELSE 0::BIGINT END AS y,
              ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':cv'), 1, 12))::BIGINT
-               % {k} AS fold
+               % {_CV_K} AS fold
       FROM documents
     ), grid AS (SELECT CAST(unnest(range(0, 64)) AS BIGINT) AS bucket),
     {folds}
@@ -2572,9 +2566,7 @@ def t37_logreg_crossval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducehs_spark.operators.ml import logreg_crossval
 
     docs = _t(spark, sf_dir, "documents")
-    return logreg_crossval(
-        docs, n_buckets=64, n_steps=2, label_chars=300, k=_CV_K
-    )
+    return logreg_crossval(docs, k=_CV_K)
 
 
 # =========================================================================
@@ -3627,7 +3619,7 @@ def _t46_build(m: Materialization, sf_dir: str) -> DataFrame:
 
     C = _T40_CTX
     emb = _t(m.spark, sf_dir, "embeddings")
-    assign = kmeans_assignments(m, emb, k=8, iters=2)
+    assign = kmeans_assignments(m, emb, k=8)
     docs = _t(m.spark, sf_dir, "documents")
     keyed = docs.select(
         "doc_id",

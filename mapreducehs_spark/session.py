@@ -31,6 +31,12 @@ from pyspark.sql import SparkSession
 #: ``SPARK_GRAFT_CPUS`` if set, else the cores this process may run on.
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
+#: The one driver-heap default for every session and tool: half the
+#: machine's physical memory in whole GiB (at least 1g), so a heap that
+#: never has to collect cannot grow past what the machine holds.
+#: ``SPARK_GRAFT_DRIVER_MEM`` overrides it.
+DEFAULT_DRIVER_MEM = f"{max(1, os.sysconf('SC_PHYS_PAGES') * os.sysconf('SC_PAGE_SIZE') // 2**31)}g"
+
 
 def get_spark(
     app_name: str = "mapreducehs_spark",
@@ -70,7 +76,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", DEFAULT_DRIVER_MEM))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
     )

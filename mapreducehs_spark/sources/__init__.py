@@ -1,1 +1,1 @@
-from mapreducehs_spark.sources.catalog import TABLES, load_table, load_tables, register_views  # noqa: F401
+from mapreducehs_spark.sources.catalog import TABLES, load_table  # noqa: F401

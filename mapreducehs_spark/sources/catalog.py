@@ -39,8 +39,6 @@ TABLES = (
 #: Small dimension tables that should always be broadcast in joins.
 BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 #: Root of every derived fixture directory.  ``TMPDIR`` moves it.
 FIXTURE_ROOT = tempfile.gettempdir()
@@ -151,17 +149,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    """Read all testdata tables as a dict."""
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register every table as a temp view so ``spark.sql`` can use it."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def read_any(spark: SparkSession, path: str, fmt: str = "parquet", schema=None, **options) -> DataFrame:
     """Generic reader covering the formats the engine supports.
 
@@ -182,8 +169,6 @@ def write_bucketed(
     bucket_cols: list[str],
     num_buckets: int,
     sort_cols: list[str] | None = None,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
 ) -> None:
     """Managed bucketed table — the 100 TB co-located-join layout.
 
@@ -198,7 +183,7 @@ def write_bucketed(
     prove one file per bucket).  Plan shape pinned in
     tests/test_plans.py::test_bucketed_join_has_no_exchange.
     """
-    writer = df.write.format(fmt).mode(mode).bucketBy(num_buckets, *bucket_cols)
+    writer = df.write.format("parquet").mode("overwrite").bucketBy(num_buckets, *bucket_cols)
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table_name)

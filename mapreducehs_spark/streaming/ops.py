@@ -78,13 +78,12 @@ FLUSH_TYPE = "__flush__"
 def prepare_stream_dir(
     spark: SparkSession,
     sf_dir: str,
-    n_chunks: int = 4,
     base_dir: str = os.path.join(FIXTURE_ROOT, "mapreducehs_stream"),
     n_flush: int = 1,
 ) -> str:
-    """Materialize ``events`` as a time-ordered chunked replay directory,
-    ``n_flush`` sentinel chunks last.  Built once per (sf_dir contents,
-    n_chunks, n_flush).
+    """Materialize ``events`` as a time-ordered replay directory of 4
+    chunks, ``n_flush`` sentinel chunks last.  Built once per (sf_dir
+    contents, n_flush).
 
     n_flush > 1 appends extra sentinel chunks: stream-stream OUTER
     joins emit watermark-closed NULL rows one batch AFTER eviction, so
@@ -94,9 +93,9 @@ def prepare_stream_dir(
     def build(out: str) -> None:
         pdf = _replay_events(spark, sf_dir)
         flush = [_flush_sentinel(pdf, j) for j in range(n_flush)]
-        write_replay(out, even_chunks(pdf, n_chunks) + flush)
+        write_replay(out, even_chunks(pdf, 4) + flush)
 
-    return derived_fixture(base_dir, sf_dir, ("events",), build, f"c{n_chunks}", f"f{n_flush}")
+    return derived_fixture(base_dir, sf_dir, ("events",), build, "c4", f"f{n_flush}")
 
 
 def _replay_events(spark: SparkSession, sf_dir: str) -> pd.DataFrame:
@@ -160,13 +159,11 @@ def write_replay(out: str, chunks: list[pd.DataFrame]) -> None:
         os.utime(path, (now + i * 10, now + i * 10))
 
 
-def events_stream(
-    spark: SparkSession, replay_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
+def events_stream(spark: SparkSession, replay_dir: str) -> DataFrame:
     """File-source stream over a replay dir (one chunk per trigger)."""
     return (
         spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(replay_dir)
     )
 
@@ -206,12 +203,7 @@ def state_partitions_for(state_bytes: int, cores: int) -> int:
     )
 
 
-def run_to_batch(
-    stream_df: DataFrame,
-    name: str,
-    output_mode: str = "append",
-    state_bytes: int | None = None,
-) -> DataFrame:
+def run_to_batch(stream_df: DataFrame, name: str, state_bytes: int | None = None) -> DataFrame:
     """Drain a finite stream into a memory sink; return the result table.
 
     The memory sink is the test/driver harness sink only — production
@@ -243,7 +235,7 @@ def run_to_batch(
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)
-            .outputMode(output_mode)
+            .outputMode("append")
             .trigger(availableNow=True)
             .start()
         )
@@ -268,9 +260,7 @@ def run_to_batch(
 # ---------------------------------------------------------------------------
 
 
-def tumbling_aggregate(
-    events: DataFrame, window: str = "1 hour", watermark: str = "30 minutes"
-) -> DataFrame:
+def tumbling_aggregate(events: DataFrame, watermark: str = "30 minutes") -> DataFrame:
     """Watermarked tumbling-window counts/sums per event_type.
 
     Late rows (older than watermark) are dropped by Spark; the replay
@@ -284,7 +274,7 @@ def tumbling_aggregate(
     # (run_to_batch(...).filter(...)).
     return (
         events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 4).alias("sum_value"),
@@ -298,9 +288,7 @@ def tumbling_aggregate(
     )
 
 
-def session_aggregate(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "30 minutes"
-) -> DataFrame:
+def session_aggregate(events: DataFrame) -> DataFrame:
     """Watermarked session windows per user (gap-based), append mode.
 
     Equivalent batch semantics: islands-and-gaps sessionization with the
@@ -309,8 +297,8 @@ def session_aggregate(
     # Sentinel kept in-plan for the same pushdown reason as
     # tumbling_aggregate — callers drop user_id < 0 from the batch result.
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.withWatermark("ts", "30 minutes")
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 4).alias("sum_value"),
@@ -508,19 +496,17 @@ def stream_distinct(events: DataFrame, keys: list[str]) -> DataFrame:
     return events.filter(F.col("event_type") != FLUSH_TYPE).select(*keys).dropDuplicates(keys)
 
 
-def stream_distinct_within_watermark(
-    events: DataFrame, keys: list[str], delay: str = "2000 hours"
-) -> DataFrame:
+def stream_distinct_within_watermark(events: DataFrame, keys: list[str]) -> DataFrame:
     """Bounded-state streaming dedup via ``dropDuplicatesWithinWatermark``.
 
     The 100 TB counterpart of ``stream_distinct``: state for a key is
-    EVICTED once the watermark passes its event time + ``delay``, so the
+    EVICTED once the watermark passes its event time + the delay, so the
     state store holds only the redelivery horizon instead of every key
     ever seen.  Dedup is guaranteed only for duplicates arriving within
-    ``delay`` of the first copy — exactly the at-least-once redelivery
-    contract of a queue ingest.  Here ``delay`` is chosen so no state
+    the delay of the first copy — exactly the at-least-once redelivery
+    contract of a queue ingest.  Here the delay is chosen so no state
     evicts during the replay (eviction needs event_time < max_ts -
-    2*``delay``, so any delay >= span/2 suffices; 2000 h covers a
+    2*delay, so any delay >= span/2 suffices; 2000 h covers a
     ~166-day replay), making the emitted set equal SELECT DISTINCT and
     the operator oracle-checkable while still exercising the
     bounded-state API (Spark 3.5+).
@@ -528,21 +514,19 @@ def stream_distinct_within_watermark(
     return (
         events.filter(F.col("event_type") != FLUSH_TYPE)
         .select("ts", *keys)
-        .withWatermark("ts", delay)
+        .withWatermark("ts", "2000 hours")
         .dropDuplicatesWithinWatermark(keys)
         .select(*keys)
     )
 
 
-def clicks_then_purchases(
-    events: DataFrame, within: str = "30 minutes", watermark: str = "1 hour"
-) -> DataFrame:
-    """Stream-stream inner join: purchases within ``within`` after a
+def clicks_then_purchases(events: DataFrame) -> DataFrame:
+    """Stream-stream inner join: purchases within 30 minutes after a
     click by the same user.
 
     Both sides are watermarked and the join condition carries the event
     time range, so the state store evicts rows once the watermark passes
-    ``click.ts + within`` — bounded state, the only join shape that
+    ``click.ts + 30 minutes`` — bounded state, the only join shape that
     survives an unbounded stream.  Inner join emits on match (no
     watermark wait), so with the ordered replay the result equals the
     batch interval join.
@@ -554,7 +538,7 @@ def clicks_then_purchases(
             F.col("user_id").alias("c_user"),
             F.col("ts").alias("c_ts"),
         )
-        .withWatermark("c_ts", watermark)
+        .withWatermark("c_ts", "1 hour")
     )
     purchases = (
         events.filter(F.col("event_type") == "purchase")
@@ -564,12 +548,12 @@ def clicks_then_purchases(
             F.col("ts").alias("p_ts"),
             F.col("value").alias("p_value"),
         )
-        .withWatermark("p_ts", watermark)
+        .withWatermark("p_ts", "1 hour")
     )
     cond = (
         (clicks["c_user"] == purchases["p_user"])
         & (purchases["p_ts"] >= clicks["c_ts"])
-        & (purchases["p_ts"] <= clicks["c_ts"] + F.expr(f"INTERVAL {within}"))
+        & (purchases["p_ts"] <= clicks["c_ts"] + F.expr("INTERVAL 30 minutes"))
     )
     return clicks.join(purchases, cond, "inner").select(
         F.col("c_user").alias("user_id"),
@@ -593,12 +577,7 @@ def latest_per_user(updates: DataFrame) -> DataFrame:
     )
 
 
-def sliding_aggregate(
-    events: DataFrame,
-    window: str = "15 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
+def sliding_aggregate(events: DataFrame) -> DataFrame:
     """Watermarked SLIDING-window counts/sums per event_type: each event
     contributes to window/slide windows (Spark explodes internally).
 
@@ -609,8 +588,8 @@ def sliding_aggregate(
     as tumbling_aggregate: do not filter in-stream.
     """
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"), "event_type")
+        events.withWatermark("ts", "30 minutes")
+        .groupBy(F.window("ts", "15 minutes", "5 minutes").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 4).alias("sum_value"),
@@ -624,12 +603,7 @@ def sliding_aggregate(
     )
 
 
-def enrich_with_dim(
-    events: DataFrame,
-    dim: DataFrame,
-    on_left: str = "user_id",
-    on_right: str = "c_custkey",
-) -> DataFrame:
+def enrich_with_dim(events: DataFrame, dim: DataFrame) -> DataFrame:
     """Stream-static broadcast join: each micro-batch joins against the
     (re-evaluated) static dimension — the canonical streaming enrichment
     shape.  Stateless: nothing is buffered, no watermark is required,
@@ -642,7 +616,7 @@ def enrich_with_dim(
     nation.
     """
     return events.join(
-        F.broadcast(dim), events[on_left] == dim[on_right], "left_outer"
+        F.broadcast(dim), events["user_id"] == dim["c_custkey"], "left_outer"
     ).select(
         "event_id",
         "user_id",
@@ -656,15 +630,12 @@ def enrich_with_dim(
 def prepare_late_stream_dir(
     spark: SparkSession,
     sf_dir: str,
-    late_lo_sec: int = 5400,
-    late_hi_sec: int = 1800,
-    n_ontime_chunks: int = 3,
     base_dir: str = os.path.join(FIXTURE_ROOT, "mapreducehs_stream"),
 ) -> str:
     """Replay directory with a deterministic LATE slice — the
     watermark-semantics fixture.
 
-    Rows with ``ts`` in ``[t_max - late_lo_sec, t_max - late_hi_sec)``
+    Rows with ``ts`` in ``[t_max - 5400 s, t_max - 1800 s)``
     are held back and replayed as the LAST data chunk, after every
     on-time row (the on-time chunks stay time-ordered, so no on-time
     row is ever late).
@@ -686,32 +657,20 @@ def prepare_late_stream_dir(
     def build(out: str) -> None:
         pdf = _replay_events(spark, sf_dir)
         t_max = pdf["ts"].max()
-        lo = t_max - pd.Timedelta(seconds=late_lo_sec)
-        hi = t_max - pd.Timedelta(seconds=late_hi_sec)
+        lo = t_max - pd.Timedelta(seconds=5400)
+        hi = t_max - pd.Timedelta(seconds=1800)
         late_mask = (pdf["ts"] >= lo) & (pdf["ts"] < hi)
         tmax_mask = pdf["ts"] == t_max
         ontime = pdf[~late_mask & ~tmax_mask]
         # the t_max rows ride alone so they advance the late-filter
         # watermark exactly one batch before the late chunk plays
         tail = pdf[tmax_mask & ~late_mask]
-        write_replay(
-            out,
-            even_chunks(ontime, n_ontime_chunks)
-            + [tail, pdf[late_mask], _flush_sentinel(pdf)],
-        )
+        write_replay(out, even_chunks(ontime, 3) + [tail, pdf[late_mask], _flush_sentinel(pdf)])
 
-    return derived_fixture(
-        base_dir, sf_dir, ("events",), build,
-        "late", late_lo_sec, late_hi_sec, n_ontime_chunks,
-    )
+    return derived_fixture(base_dir, sf_dir, ("events",), build, "late", 5400, 1800, 3)
 
 
-def chained_window_aggregate(
-    events: DataFrame,
-    inner: str = "1 hour",
-    outer: str = "6 hours",
-    watermark: str = "30 minutes",
-) -> DataFrame:
+def chained_window_aggregate(events: DataFrame) -> DataFrame:
     """CHAINED stateful ops: tumbling hourly aggregate re-aggregated
     into 6-hour buckets, both streaming (Spark 3.4+ multiple-stateful-
     operator support: the outer ``window()`` accepts the inner window
@@ -725,12 +684,12 @@ def chained_window_aggregate(
     """
     cents = F.round(F.col("value") * 100, 0).cast("bigint")
     hourly = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", inner).alias("w1"), "event_type")
+        events.withWatermark("ts", "30 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("w1"), "event_type")
         .agg(F.count("*").alias("n_events"), F.sum(cents).alias("cents"))
     )
     return (
-        hourly.groupBy(F.window(F.col("w1"), outer).alias("w2"), "event_type")
+        hourly.groupBy(F.window(F.col("w1"), "6 hours").alias("w2"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_hours"),
             F.sum("n_events").alias("n_events"),
@@ -766,20 +725,18 @@ _MG_SKETCH_STATE = StructType(
 )
 
 
-def stateful_mg_sketch(
-    events: DataFrame, shards: int = 16, capacity: int = 8
-) -> DataFrame:
+def stateful_mg_sketch(events: DataFrame) -> DataFrame:
     """Streaming Misra-Gries heavy-hitter sketch, sharded.
 
     The streaming analogue of q71's two-level plan: each micro-batch's
     rows pre-aggregate VECTORIZED (pandas value_counts — the map-side
     combine), then fold into the per-shard sketch state with the
     PODS'12 merge rule (``operators/sketches._mg_merge``), so state per
-    shard is bounded by ``capacity`` regardless of stream length — the
+    shard is bounded by its capacity of 8 terms regardless of stream length — the
     always-on "trending items" topology.  Each update emits the whole
     sketch as one row (arrays of terms/counts); the serving read takes
     the LATEST update per shard and merges shards by summation —
-    with ``capacity ≥ distinct keys`` the sketch never decrements, so
+    with capacity ≥ distinct keys the sketch never decrements, so
     the merged result is EXACT and the whole streaming topology
     value-checks against the batch count (st13).  The reference has no
     streaming at all (batch-only, src/Core/Std.hs:49-50)."""
@@ -803,7 +760,7 @@ def stateful_mg_sketch(
             pd.concat(parts, ignore_index=True)
             if parts
             else pd.DataFrame({"term": [], "est": []}),
-            capacity,
+            8,
         )
         seq += 1
         state.update((list(merged.keys()), [int(v) for v in merged.values()], seq))
@@ -818,7 +775,7 @@ def stateful_mg_sketch(
 
     return (
         events.filter(F.col("event_type") != FLUSH_TYPE)
-        .withColumn("shard", F.col("user_id") % shards)
+        .withColumn("shard", F.col("user_id") % 16)
         .groupBy("shard")
         .applyInPandasWithState(
             fn,
@@ -853,25 +810,23 @@ def merge_mg_sketch_log(log: DataFrame) -> DataFrame:
     )
 
 
-def clicks_left_outer_purchases(
-    events: DataFrame, within: str = "30 minutes", watermark: str = "1 hour"
-) -> DataFrame:
+def clicks_left_outer_purchases(events: DataFrame) -> DataFrame:
     """Stream-stream LEFT OUTER join: every click, with ONE ROW PER
-    matching purchase within ``within`` (a click with k in-window
+    matching purchase within 30 minutes (a click with k in-window
     purchases emits k rows, exactly like the batch LEFT join the oracle
     runs) — or a single NULL row once the watermark proves no match can
     arrive.
 
     The outer side is the semantics inner joins can't express: an
     unmatched click is emitted (purchase columns NULL) only after the
-    watermark passes ``click.ts + within`` — the state store must hold
+    watermark passes ``click.ts + 30 minutes`` — the state store must hold
     the click exactly that long and then give up on it.  Same bounded
     state as the inner join; the extra behavior is the watermark-closed
     NULL emission, which the flush sentinel forces for every click in a
     finite replay, so the result equals the batch LEFT join (st14)."""
     # the flush sentinel must REACH both EventTimeWatermark operators:
     # NULL emission for an unmatched click happens only when the
-    # watermark passes click.ts + within, and the watermark is computed
+    # watermark passes click.ts + 30 minutes, and the watermark is computed
     # from rows that survive the upstream filter.  Filtering to
     # event_type == 'click' alone (st05's inner-join shape, where
     # emission is match-driven and needs no watermark advance) leaves
@@ -885,7 +840,7 @@ def clicks_left_outer_purchases(
             F.col("user_id").alias("c_user"),
             F.col("ts").alias("c_ts"),
         )
-        .withWatermark("c_ts", watermark)
+        .withWatermark("c_ts", "1 hour")
     )
     purchases = (
         events.filter(F.col("event_type").isin("purchase", FLUSH_TYPE))
@@ -894,12 +849,12 @@ def clicks_left_outer_purchases(
             F.col("user_id").alias("p_user"),
             F.col("ts").alias("p_ts"),
         )
-        .withWatermark("p_ts", watermark)
+        .withWatermark("p_ts", "1 hour")
     )
     cond = (
         (clicks["c_user"] == purchases["p_user"])
         & (purchases["p_ts"] >= clicks["c_ts"])
-        & (purchases["p_ts"] <= clicks["c_ts"] + F.expr(f"INTERVAL {within}"))
+        & (purchases["p_ts"] <= clicks["c_ts"] + F.expr("INTERVAL 30 minutes"))
     )
     return clicks.join(purchases, cond, "left_outer").select(
         F.col("c_user").alias("user_id"),
@@ -947,7 +902,6 @@ _MINHASH_STATE = StructType(
 def prepare_docs_stream_dir(
     spark: SparkSession,
     sf_dir: str,
-    n_chunks: int = 4,
     base_dir: str = os.path.join(FIXTURE_ROOT, "mapreducehs_docs_stream"),
 ) -> str:
     """Replay dir for the documents table: doc_id-ordered chunks with a
@@ -960,18 +914,16 @@ def prepare_docs_stream_dir(
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
         pdf = _driver_frame(docs, f"docs stream replay chunks ({sf_dir})", "doc_id")
         pdf["ts"] = pd.Timestamp("2024-01-01") + pd.to_timedelta(pdf["doc_id"], unit="s")
-        write_replay(out, even_chunks(pdf[["doc_id", "ts", "source", "text"]], n_chunks))
+        write_replay(out, even_chunks(pdf[["doc_id", "ts", "source", "text"]], 4))
 
-    return derived_fixture(base_dir, sf_dir, ("documents",), build, f"c{n_chunks}")
+    return derived_fixture(base_dir, sf_dir, ("documents",), build, "c4")
 
 
-def docs_stream(
-    spark: SparkSession, replay_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
+def docs_stream(spark: SparkSession, replay_dir: str) -> DataFrame:
     """File-source stream over a docs replay dir (one chunk per trigger)."""
     return (
         spark.readStream.schema(DOCS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(replay_dir)
     )
 
@@ -1165,7 +1117,7 @@ def stateful_minhash_dedup(
     )
 
 
-def minhash_pairs_from_log(log: DataFrame, est_threshold: float = 0.25) -> DataFrame:
+def minhash_pairs_from_log(log: DataFrame) -> DataFrame:
     """Serving read for ``stateful_minhash_dedup``: a pair discovered in
     k shared bands appears k times with the SAME n_agree (the agreement
     is a pure function of the two signatures) — dedup, attach the d11
@@ -1178,7 +1130,7 @@ def minhash_pairs_from_log(log: DataFrame, est_threshold: float = 0.25) -> DataF
         .withColumn(
             "est_jaccard", F.round(F.col("n_agree") / float(MINHASH_CHECK_NUM_PERM), 6)
         )
-        .filter(F.col("est_jaccard") >= est_threshold)
+        .filter(F.col("est_jaccard") >= 0.25)
         .select("id_a", "id_b", "est_jaccard")
     )
 
@@ -1207,10 +1159,7 @@ _FUNNEL_STATE = StructType(
 )
 
 
-def stateful_funnel(
-    events: DataFrame,
-    steps: tuple = ("view", "click", "purchase"),
-) -> DataFrame:
+def stateful_funnel(events: DataFrame) -> DataFrame:
     """Streaming STRICT-ORDER funnel — q115's batch law as a per-user
     state machine: state is the three first-completion epochs
     (t1 = first `view`, t2 = first `click` strictly after t1,
@@ -1225,8 +1174,6 @@ def stateful_funnel(
     per user is 4 longs, bounded by the user population (add an
     EventTimeTimeout for cohort-window semantics on unbounded
     populations)."""
-    s1, s2, s3 = steps
-
     def fn(
         key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
@@ -1241,13 +1188,13 @@ def stateful_funnel(
             for et, ts in zip(pdf["event_type"], pdf["ts"]):
                 t = int(ts.value // 1_000_000_000)  # epoch seconds
                 if t1 is None:
-                    if et == s1:
+                    if et == "view":
                         t1 = t
                 elif t2 is None:
-                    if et == s2 and t > t1:
+                    if et == "click" and t > t1:
                         t2 = t
                 elif t3 is None:
-                    if et == s3 and t > t2:
+                    if et == "purchase" and t > t2:
                         t3 = t
         seq += 1
         state.update((t1, t2, t3, seq))
@@ -1293,7 +1240,7 @@ def funnel_report_from_log(log: DataFrame) -> DataFrame:
     )
 
 
-def hashed_linear_score_stream(docs: DataFrame, n_buckets: int = 4096) -> DataFrame:
+def hashed_linear_score_stream(docs: DataFrame) -> DataFrame:
     """STREAMING model inference — t26's hashed-linear quality
     classifier applied to the document stream as a STATELESS per-row
     fold: tokenize, md5-fold each token into its bucket, fold the
@@ -1315,9 +1262,7 @@ def hashed_linear_score_stream(docs: DataFrame, n_buckets: int = 4096) -> DataFr
     bit-for-bit (the st13/st15 discipline)."""
     from mapreducehs_spark.operators.text import tokens
 
-    bucket = (
-        f"CAST(conv(substring(md5(t), 1, 12), 16, 10) AS BIGINT) % {n_buckets}"
-    )
+    bucket = "CAST(conv(substring(md5(t), 1, 12), 16, 10) AS BIGINT) % 4096"
     w = f"(({bucket}) * 2654435761L) % 1000 - 500"
     return (
         docs.withColumn("__toks", tokens(F.col("text")))
@@ -1333,11 +1278,7 @@ def hashed_linear_score_stream(docs: DataFrame, n_buckets: int = 4096) -> DataFr
     )
 
 
-def streaming_logreg_train(
-    docs: DataFrame,
-    n_buckets: int = 64,
-    label_chars: int = 300,
-) -> DataFrame:
+def streaming_logreg_train(docs: DataFrame, n_buckets: int = 64) -> DataFrame:
     """STREAMING (online) model TRAINING — the missing cell of the
     train/infer × batch/stream matrix (t28 batch-train, t29 mini-batch
     train, t26 batch-infer, st17 stream-infer, HERE stream-train): each
@@ -1358,7 +1299,7 @@ def streaming_logreg_train(
     law (doc_id rank r → chunk (r·n_chunks) div n; integral bounds at
     every fixture SF since doc counts divide by 4).
 
-    Label: y = (length(text) ≥ label_chars) — identical to t28's
+    Label: y = (length(text) ≥ 300) — identical to t28's
     n_chars law (the generator sets n_chars = len(text); verified
     ASCII, so Spark/DuckDB/Python length agree).
 
@@ -1384,7 +1325,7 @@ def streaming_logreg_train(
                 batch_df.select(
                     "doc_id",
                     "text",
-                    (F.length("text") >= label_chars).cast("bigint").alias("y"),
+                    (F.length("text") >= 300).cast("bigint").alias("y"),
                 )
             )
             n = rows.count()
@@ -1502,26 +1443,24 @@ _ANOMALY_OUT = StructType(
 _ANOMALY_STATE = StructType([StructField("ring", ArrayType(LongType()))])
 
 
-def stateful_trailing_anomaly(
-    events: DataFrame, window: int = 8, num: int = 3
-) -> DataFrame:
+def stateful_trailing_anomaly(events: DataFrame) -> DataFrame:
     """Streaming anomaly detection over a BOUNDED RING BUFFER of the
-    last ``window`` per-user amounts — the always-on spike monitor
+    last 8 per-user amounts — the always-on spike monitor
     (fraud / rate-anomaly topology): an event is anomalous when its
-    integer-cents amount exceeds ``num``× the trailing-window mean,
+    integer-cents amount exceeds 3× the trailing-window mean,
     tested as the exact cross-multiplication
-    ``cents * window > num * sum(ring)`` so no division ever happens
+    ``cents * 8 > 3 * sum(ring)`` so no division ever happens
     and the law replays bit-for-bit in any engine.
 
-    State per user is exactly ``window`` longs — independent of stream
+    State per user is exactly 8 longs — independent of stream
     length, the st12/st13 bounded-state discipline — and the emitted
     rows are linear in ANOMALIES, not events.  Because the replay is
     event-time ordered and (user_id, ts) is unique in the corpus, the
     sequential fold sees each user's events in the batch window-frame
-    order (ROWS BETWEEN ``window`` PRECEDING AND 1 PRECEDING), so the
+    order (ROWS BETWEEN 8 PRECEDING AND 1 PRECEDING), so the
     streaming topology value-checks against the batch window aggregate
     (st16's order-sensitive stream==batch discipline).  At 100 TB/day
-    the state store holds |active users| × ``window`` longs and the
+    the state store holds |active users| × 8 longs and the
     only shuffle is the groupBy(user_id) route — no watermark needed
     for correctness (add EventTimeTimeout to bound the user population
     when it is unbounded).  The reference has no streaming at all
@@ -1544,14 +1483,14 @@ def stateful_trailing_anomaly(
             pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
             for eid, v in zip(pdf["event_id"], pdf["value"]):
                 c = int(math.floor(float(v) * 100.0))
-                if len(ring) == window:
+                if len(ring) == 8:
                     s = sum(ring)
-                    if c * window > num * s:
+                    if c * 8 > 3 * s:
                         out_eid.append(int(eid))
                         out_c.append(c)
                         out_s.append(s)
                 ring.append(c)
-                if len(ring) > window:
+                if len(ring) > 8:
                     ring.pop(0)
         state.update((ring,))
         if out_eid:
@@ -1869,9 +1808,7 @@ _PACK_OUT = StructType(
 _PACK_STATE = StructType([StructField("offset", LongType())])
 
 
-def stateful_sequence_packer(
-    docs: DataFrame, ctx_len: int, n_tokens_col: str = "n_tokens"
-) -> DataFrame:
+def stateful_sequence_packer(docs: DataFrame, ctx_len: int) -> DataFrame:
     """Streaming SEQUENCE PACKING — t40's arithmetic as per-source
     offset state: each source shard keeps ONE long (its cumulative
     token offset incl. EOS separators); every arriving doc is assigned
@@ -1903,7 +1840,7 @@ def stateful_sequence_packer(
         chunks = [pdf for pdf in batches if len(pdf)]
         if chunks:
             pdf = pd.concat(chunks).sort_values("doc_id")
-            for doc_id, nt in zip(pdf["doc_id"], pdf[n_tokens_col]):
+            for doc_id, nt in zip(pdf["doc_id"], pdf["n_tokens"]):
                 w = int(nt) + 1
                 ids.append(int(doc_id))
                 starts.append(off)
@@ -1931,21 +1868,21 @@ def stateful_sequence_packer(
     )
 
 
-def streaming_weighted_sample(docs: DataFrame, k: int = 25) -> DataFrame:
+def streaming_weighted_sample(docs: DataFrame) -> DataFrame:
     """STREAMING weighted sampling without replacement — t31's
     Efraimidis-Spirakis exponential races as an ONLINE reservoir: A-ES
     is *the* streaming-native sampling algorithm (its keys are
-    mergeable minima), so the per-source reservoir of the ``k``
+    mergeable minima), so the per-source reservoir of the 25
     smallest keys, folded batch by batch, equals the batch sample over
     everything seen — exactly, not approximately.
 
     Topology (st18's "the model is the state" posture): per
     micro-batch, keys are computed JVM-side with t31's EXACT expression
     (md5-prefix draw, -ln(u)/w, w = length(text) — the generator's
-    n_chars law), the batch's own per-source top-k survives a
-    WindowGroupLimit window, and only those ≤ #sources·k candidate
+    n_chars law), the batch's own per-source top-25 survives a
+    WindowGroupLimit window, and only those ≤ #sources·25 candidate
     rows reach the driver, where they merge into the held reservoir
-    (tie-break doc_id ASC, t31's law).  State is #sources·k tuples on
+    (tie-break doc_id ASC, t31's law).  State is #sources·25 tuples on
     the driver — no state store, no watermark; per-batch cost is one
     scan + a bounded-output window.  Because keys are content-hash
     deterministic, the final reservoir is replay-order-independent and
@@ -1970,7 +1907,7 @@ def streaming_weighted_sample(docs: DataFrame, k: int = 25) -> DataFrame:
         )
         cand = (
             keyed.withColumn("__rk", F.row_number().over(w_src))
-            .filter(F.col("__rk") <= k)
+            .filter(F.col("__rk") <= 25)
             .collect()
         )
         for r in cand:
@@ -1978,7 +1915,7 @@ def streaming_weighted_sample(docs: DataFrame, k: int = 25) -> DataFrame:
             res.append((float(r["__key"]), int(r["doc_id"]), int(r["w"])))
         for src, res in reservoirs.items():
             res.sort(key=lambda t: (t[0], t[1]))
-            del res[k:]
+            del res[25:]
 
     q = docs.writeStream.foreachBatch(step).trigger(availableNow=True).start()
     try:
@@ -2018,7 +1955,6 @@ CDC_MV_SCHEMA = StructType(
 def prepare_cdc_mv_dir(
     spark: SparkSession,
     sf_dir: str,
-    n_chunks: int = 4,
     base_dir: str = os.path.join(FIXTURE_ROOT, "mapreducehs_stream_cdc"),
 ) -> tuple[str, str]:
     """Materialize st31's inputs: the STORED base rollup (the MV as it
@@ -2066,9 +2002,9 @@ def prepare_cdc_mv_dir(
         )
         cdc = d_rows.unionByName(u_retract).unionByName(u_insert)
         pdf = _driver_frame(cdc, f"cdc mv replay chunks ({sf_dir})", ["k", "dn"])
-        write_replay(os.path.join(tmp, "replay"), even_chunks(pdf.drop(columns=["k"]), n_chunks))
+        write_replay(os.path.join(tmp, "replay"), even_chunks(pdf.drop(columns=["k"]), 4))
 
-    base = derived_fixture(base_dir, sf_dir, ("orders",), build, f"c{n_chunks}")
+    base = derived_fixture(base_dir, sf_dir, ("orders",), build, "c4")
     return os.path.join(base, "base_mv"), os.path.join(base, "replay")
 
 
@@ -2087,12 +2023,11 @@ MANIFEST_SCHEMA = StructType(
 def prepare_manifest_dir(
     spark: SparkSession,
     sf_dir: str,
-    n_chunks: int = 4,
     base_dir: str = os.path.join(FIXTURE_ROOT, "mapreducehs_stream_manifest"),
 ) -> str:
     """Materialize q105's file manifest (the `_q105_files` seam) as a
     chunked replay directory for st36's small-file monitor: manifest
-    rows in file_id order, split into ``n_chunks`` files with spaced
+    rows in file_id order, split into 4 files with spaced
     mtimes so the file source replays them one per trigger — a live
     commit log of file-level table metadata, which is exactly what a
     lakehouse auto-compaction monitor tails.  Built once per sf_dir
@@ -2102,9 +2037,9 @@ def prepare_manifest_dir(
     def build(tmp: str) -> None:
         manifest = _q105_files(load_table(spark, sf_dir, "orders"))
         pdf = _driver_frame(manifest, f"manifest replay chunks ({sf_dir})", "file_id")
-        write_replay(tmp, even_chunks(pdf, n_chunks))
+        write_replay(tmp, even_chunks(pdf, 4))
 
-    return derived_fixture(base_dir, sf_dir, ("orders",), build, f"c{n_chunks}")
+    return derived_fixture(base_dir, sf_dir, ("orders",), build, "c4")
 
 
 def manifest_monitor_fold(
@@ -2113,7 +2048,6 @@ def manifest_monitor_fold(
     monitor_dir: str,
     small_bytes: int,
     checkpoint_dir: str | None = None,
-    timeout: int = 600,
 ) -> None:
     """st36's incremental small-file monitor fold, shared by the query
     and the restart tests: each micro-batch of manifest rows partial-
@@ -2184,7 +2118,7 @@ def manifest_monitor_fold(
         writer = writer.option("checkpointLocation", checkpoint_dir)
     q = writer.trigger(availableNow=True).start()
     try:
-        if not q.awaitTermination(timeout=timeout):
+        if not q.awaitTermination(timeout=600):
             raise TimeoutError("manifest monitor stream did not finish")
     finally:
         q.stop()
@@ -2321,13 +2255,11 @@ def _cdc_images_fn(
         yield pd.concat(frames, ignore_index=True)
 
 
-def stateful_cdc_images(log_stream: DataFrame, n_shards: int = 64) -> DataFrame:
+def stateful_cdc_images(log_stream: DataFrame) -> DataFrame:
     """Streaming change-data-feed serve: q124's image classification
     held as sharded per-key state (`applyInPandasWithState` on
-    k mod ``n_shards``) instead of a lag() window over the full log."""
-    sharded = log_stream.withColumn(
-        "kshard", (F.col("k") % n_shards).cast("bigint")
-    )
+    k mod 64) instead of a lag() window over the full log."""
+    sharded = log_stream.withColumn("kshard", (F.col("k") % 64).cast("bigint"))
     return sharded.groupBy("kshard").applyInPandasWithState(
         _cdc_images_fn,
         outputStructType=_CDC_IMAGES_SCHEMA,
@@ -2340,12 +2272,11 @@ def stateful_cdc_images(log_stream: DataFrame, n_shards: int = 64) -> DataFrame:
 def prepare_emb_stream_dir(
     spark: SparkSession,
     sf_dir: str,
-    n_chunks: int = 4,
     base_dir: str = os.path.join(FIXTURE_ROOT, "mapreducehs_stream_emb"),
 ) -> str:
     """Materialize st33's embedding re-ingest replay: s23's batch law
     (every third corpus vector re-arrives re-embedded — its reversed
-    float array, id offset by 1e6) chunked into ``n_chunks`` files for
+    float array, id offset by 1e6) chunked into 4 files for
     one-batch-per-trigger replay.  Idempotent per sf_dir fingerprint."""
 
     def build(tmp: str) -> None:
@@ -2357,6 +2288,6 @@ def prepare_emb_stream_dir(
             F.reverse("embedding").alias("embedding"),
         )
         pdf = _driver_frame(batch, f"embedding re-ingest chunks ({sf_dir})", "vec_id")
-        write_replay(tmp, even_chunks(pdf, n_chunks))
+        write_replay(tmp, even_chunks(pdf, 4))
 
-    return derived_fixture(base_dir, sf_dir, ("embeddings",), build, f"c{n_chunks}")
+    return derived_fixture(base_dir, sf_dir, ("embeddings",), build, "c4")

@@ -416,7 +416,7 @@ def test_ivf_topk_recall_on_planted_dups(spark):
     queries = df.filter(F.col("vec_id") < 12)
     got = {
         r["query_id"]: r["match_id"]
-        for r in ivf_topk(corpus, queries, k=1, n_cells=16, n_probe=4, dim=32).collect()
+        for r in ivf_topk(corpus, queries, k=1, n_probe=4, dim=32).collect()
     }
     # each query's true nearest neighbor is its planted dup (cosine ≈
     # 0.999), which lands in the query's own argmax cell except when the
@@ -434,7 +434,7 @@ def test_srp_topk_recall_on_planted_dups(spark):
     queries = df.filter(F.col("vec_id") < 12)
     got = {
         r["query_id"]: r["match_id"]
-        for r in srp_topk(corpus, queries, k=1, dim=32, n_planes=16, bands=8).collect()
+        for r in srp_topk(corpus, queries, k=1, dim=32, bands=8).collect()
     }
     # a planted dup (cosine ≈ 0.999) differs in a sign bit only when a
     # projection is within the noise of zero; with 8 two-bit bands one
@@ -528,7 +528,7 @@ def test_stratified_sample_matches_pure_python(spark):
     rows = [(i, langs[i % 3], f"text body {i}") for i in range(300)]
     df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
     rates = {"en": 0.2, "de": 1.0}  # fr falls to default_rate=0.0
-    got = {r["doc_id"] for r in stratified_sample(df, rates, text_col="text").collect()}
+    got = {r["doc_id"] for r in stratified_sample(df, rates).collect()}
     want = {
         i
         for i, lang, txt in rows
@@ -787,7 +787,7 @@ def test_kmeans_profile_matches_numpy_reference(spark):
 
     got = {
         r["cluster"]: (r["n_members"], r["avg_sqdist"])
-        for r in kmeans_profile(df, k=k, iters=2).collect()
+        for r in kmeans_profile(df, k=k).collect()
     }
 
     # numpy replay with the identical trajectory
@@ -849,7 +849,7 @@ def test_zorder_write_tightens_file_ranges(spark, tmp_path):
 
     plain_dir, z_dir = str(tmp_path / "plain"), str(tmp_path / "zord")
     li.repartition(16).write.mode("overwrite").parquet(plain_dir)
-    zorder_write(li, z_dir, "l_partkey", "l_suppkey", n_files=16, bits=8)
+    zorder_write(li, z_dir, "l_partkey", "l_suppkey", n_files=16)
 
     def spread(d, col):
         tot = 0
@@ -1104,7 +1104,7 @@ def test_chunk_documents_windows_and_overlap(spark):
     toks130 = " ".join(f"w{i}" for i in range(130))
     toks40 = " ".join(f"v{i}" for i in range(40))
     df = spark.createDataFrame([(1, toks130), (2, toks40), (3, "   ")], "doc_id long, text string")
-    out = chunk_documents(df, chunk_tokens=64, stride=48).collect()
+    out = chunk_documents(df).collect()
     by_doc = {}
     for r in out:
         by_doc.setdefault(r["id"], []).append(r)
@@ -1178,7 +1178,7 @@ def test_wav_encode_decode_roundtrip():
     from mapreducehs_spark.operators.multimodal import decode_wav, encode_wav
 
     s = ((np.arange(256) * 17 + 5 * 13) % 4096 - 2048).astype(np.int16)
-    payload = encode_wav(s, sample_rate=8000)
+    payload = encode_wav(s)
     out, rate = decode_wav(payload)
     assert rate == 8000 and (out == s).all()
     # chunk walker, not fixed offsets: an extra chunk before data still parses
@@ -1399,7 +1399,7 @@ def test_gram_matrix_matches_numpy(spark):
     df = spark.createDataFrame(
         [(i, row.tolist()) for i, row in enumerate(mat)], "vec_id long, embedding array<float>"
     )
-    out = similarity.gram_matrix(df, scale=1000).collect()
+    out = similarity.gram_matrix(df).collect()
     q = np.floor(mat.astype(np.float64) * 1000).astype(np.int64)
     expect = q.T @ q
     assert len(out) == dim * (dim + 1) // 2
@@ -1863,7 +1863,7 @@ def test_raw_edge_arms_close_to_canonical_classes(spark):
     rows += [(7, 0x0F0F, 0x7070)]  # singleton
     h = spark.createDataFrame(rows, "id long, lo long, hi long")
 
-    canon = hash64_canonical_dedup(h, max_hamming=3)
+    canon = hash64_canonical_dedup(h)
     star_edges = canon.select(
         F.col("member").alias("id_a"), F.col("rep").alias("id_b")
     )
@@ -1872,7 +1872,7 @@ def test_raw_edge_arms_close_to_canonical_classes(spark):
         for r in connected_components_star(star_edges).collect()
     }
     with materialize(spark) as m:
-        raw = hash64_duplicate_edges(m, h, max_hamming=3)
+        raw = hash64_duplicate_edges(m, h)
         closed_raw = {
             (r["node"], r["rep"]) for r in connected_components_star(raw).collect()
         }
@@ -1935,7 +1935,7 @@ def test_hash64_canonical_dedup_vs_bruteforce(spark):
     df = spark.createDataFrame(rows, "id long, lo long, hi long")
     got = {
         (r["member"], r["rep"], r["class_size"])
-        for r in hash64_canonical_dedup(df, max_hamming=3).collect()
+        for r in hash64_canonical_dedup(df).collect()
     }
 
     # brute force in python
@@ -2006,7 +2006,7 @@ def test_logreg_train_matches_numpy_reference(spark):
     )
     got = {
         int(r["bucket"]): (int(r["w_step1"]), int(r["w_final"]))
-        for r in logreg_train_hashed(docs, n_buckets=8, n_steps=2, label_chars=300).collect()
+        for r in logreg_train_hashed(docs, n_buckets=8).collect()
     }
 
     # numpy replay
@@ -2128,9 +2128,7 @@ def test_logreg_minibatch_matches_numpy_reference(spark):
     )
     got = {
         int(r["bucket"]): (int(r["w_step1"]), int(r["w_final"]))
-        for r in logreg_train_minibatch(
-            docs, n_buckets=8, n_steps=2, label_chars=300, sample_mod=2
-        ).collect()
+        for r in logreg_train_minibatch(docs, n_buckets=8, sample_mod=2).collect()
     }
 
     n_b = 8
@@ -2192,7 +2190,7 @@ def test_hash128_canonical_dedup_vs_bruteforce(spark):
     df = spark.createDataFrame(rows, "id long, w0 long, w1 long, w2 long, w3 long")
     got = {
         (r["member"], r["rep"], r["class_size"])
-        for r in hash128_canonical_dedup(df, max_hamming=3).collect()
+        for r in hash128_canonical_dedup(df).collect()
     }
 
     ids = {r[0]: r[1:] for r in rows}
@@ -2346,10 +2344,10 @@ def test_kmeans_assignments_consistent_with_profile(spark):
 
     profile = {
         r["cluster"]: (r["n_members"], r["avg_sqdist"])
-        for r in kmeans_profile(df, k=k, iters=2).collect()
+        for r in kmeans_profile(df, k=k).collect()
     }
     with materialize(spark) as m:
-        rows = kmeans_assignments(m, df, k=k, iters=2).collect()
+        rows = kmeans_assignments(m, df, k=k).collect()
     # every vector labeled exactly once
     assert sorted(r["id"] for r in rows) == list(range(n))
     agg: dict = {}

@@ -170,7 +170,7 @@ def test_t46_topical_packing_conservation(spark):
 
     emb = load_table(spark, SF_DIR, "embeddings")
     with materialize(spark) as m:
-        labels = {r["id"]: r["cluster"] for r in kmeans_assignments(m, emb, k=8, iters=2).collect()}
+        labels = {r["id"]: r["cluster"] for r in kmeans_assignments(m, emb, k=8).collect()}
     docs = load_table(spark, SF_DIR, "documents").select(
         "doc_id", F.size(text.tokens("text")).cast("bigint").alias("n_tok")
     )

@@ -74,7 +74,7 @@ def test_stratified_sample_differential(spark, rates, n):
     langs = ["en", "de", "fr", "zz"]  # zz never in rates → default_rate 0
     rows = [(i, langs[i % 4], f"body {i} {i * 13}") for i in range(n)]
     df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    got = {r["doc_id"] for r in stratified_sample(df, rates, text_col="text").collect()}
+    got = {r["doc_id"] for r in stratified_sample(df, rates).collect()}
     want = {
         i
         for i, lang, txt in rows

@@ -71,9 +71,9 @@ def late_replay_dir(tmp_path):
 
 def test_watermark_drops_late_rows(spark, late_replay_dir):
     ev = st.events_stream(spark, late_replay_dir)
-    agg = st.tumbling_aggregate(ev, window="1 hour", watermark="30 minutes")
+    agg = st.tumbling_aggregate(ev, watermark="30 minutes")
     out = (
-        st.run_to_batch(agg, "late_sink", output_mode="append")
+        st.run_to_batch(agg, "late_sink")
         .filter("event_type != '__flush__'")
         .toPandas()
         .sort_values("bucket_start", ignore_index=True)
@@ -88,7 +88,7 @@ def test_watermark_drops_late_rows(spark, late_replay_dir):
 
 
 def test_replay_dir_chunking(spark):
-    replay = st.prepare_stream_dir(spark, "/root/testdata/sf0.001", n_chunks=4)
+    replay = st.prepare_stream_dir(spark, "/root/testdata/sf0.001")
     files = sorted(f for f in os.listdir(replay) if f.endswith(".parquet"))
     assert len(files) == 5  # 4 chunks + flush sentinel
     # chunks are time-range partitions: each file's min ts >= previous max
@@ -101,7 +101,7 @@ def test_replay_dir_chunking(spark):
 
 
 def test_stream_schema_matches_catalog(spark):
-    replay = st.prepare_stream_dir(spark, "/root/testdata/sf0.001", n_chunks=4)
+    replay = st.prepare_stream_dir(spark, "/root/testdata/sf0.001")
     stream = st.events_stream(spark, replay)
     assert stream.isStreaming
     assert stream.schema == EVENTS_SCHEMA
@@ -114,9 +114,8 @@ def test_foreachbatch_parquet_sink(spark, tmp_path):
     memory sink used by run_to_batch is the harness convenience, this
     is the deploy path."""
     out_dir = str(tmp_path / "agg_parquet")
-    replay = st.prepare_stream_dir(spark, "/root/testdata/sf0.001", n_chunks=4)
-    agg = st.tumbling_aggregate(st.events_stream(spark, replay), window="1 hour",
-                                watermark="30 minutes")
+    replay = st.prepare_stream_dir(spark, "/root/testdata/sf0.001")
+    agg = st.tumbling_aggregate(st.events_stream(spark, replay), watermark="30 minutes")
 
     def write_batch(batch_df, epoch_id):
         batch_df.write.mode("append").parquet(out_dir)
@@ -213,8 +212,8 @@ def test_mg_sketch_state_is_bounded(spark):
     holds exactly one row per SHARD (= shards × one bounded sketch),
     never a row per key or per event — `numRowsTotal` from the query's
     own progress metrics must be ≤ shards regardless of stream length."""
-    replay = st.prepare_stream_dir(spark, "/root/testdata/sf0.001", n_chunks=4)
-    updates = st.stateful_mg_sketch(st.events_stream(spark, replay), shards=16, capacity=8)
+    replay = st.prepare_stream_dir(spark, "/root/testdata/sf0.001")
+    updates = st.stateful_mg_sketch(st.events_stream(spark, replay))
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
@@ -321,12 +320,12 @@ def test_minhash_stream_equals_batch_d11(spark):
     from mapreducehs_spark.sources.catalog import load_table
 
     sf_dir = "/root/testdata/sf0.001"
-    replay = st.prepare_docs_stream_dir(spark, sf_dir, n_chunks=4)
+    replay = st.prepare_docs_stream_dir(spark, sf_dir)
     pairs = st.stateful_minhash_dedup(st.docs_stream(spark, replay), ttl_sec=10**9)
-    log = st.run_to_batch(pairs, "st15_test_sink", output_mode="append")
+    log = st.run_to_batch(pairs, "st15_test_sink")
     got = {
         (r["id_a"], r["id_b"]): r["est_jaccard"]
-        for r in st.minhash_pairs_from_log(log, est_threshold=0.25).collect()
+        for r in st.minhash_pairs_from_log(log).collect()
     }
 
     docs = load_table(spark, sf_dir, "documents")
@@ -345,7 +344,7 @@ def test_minhash_stream_state_is_bounded(spark):
     reports, and the final total must sit well under the no-eviction
     bucket count."""
     sf_dir = "/root/testdata/sf0.001"
-    replay = st.prepare_docs_stream_dir(spark, sf_dir, n_chunks=4)
+    replay = st.prepare_docs_stream_dir(spark, sf_dir)
     # doc ts spacing is 1 s/doc — a 30 s TTL is ~30 docs of history,
     # far less than the chunk span, so chunk N's buckets die by chunk N+1
     pairs = st.stateful_minhash_dedup(
@@ -404,7 +403,7 @@ def test_minhash_stream_checkpoint_restart_same_pairs(spark, tmp_path):
     from mapreducehs_spark.sources.catalog import load_table
 
     sf_dir = "/root/testdata/sf0.001"
-    replay = st.prepare_docs_stream_dir(spark, sf_dir, n_chunks=4)
+    replay = st.prepare_docs_stream_dir(spark, sf_dir)
     files = sorted(glob.glob(replay + "/*.parquet"))
     assert len(files) == 4
 
@@ -440,9 +439,7 @@ def test_minhash_stream_checkpoint_restart_same_pairs(spark, tmp_path):
 
     got = {
         (r["id_a"], r["id_b"]): r["est_jaccard"]
-        for r in st.minhash_pairs_from_log(
-            spark.read.parquet(out), est_threshold=0.25
-        ).collect()
+        for r in st.minhash_pairs_from_log(spark.read.parquet(out)).collect()
     }
     want = {
         (r["id_a"], r["id_b"]): r["est_jaccard"]
@@ -488,9 +485,7 @@ def test_streaming_logreg_train_matches_numpy_online_replay(spark, tmp_path):
 
     got = {
         (int(r["step"]), int(r["bucket"])): int(r["w"])
-        for r in streaming_logreg_train(
-            docs_stream(spark, str(replay)), n_buckets=8, label_chars=300
-        ).collect()
+        for r in streaming_logreg_train(docs_stream(spark, str(replay)), n_buckets=8).collect()
     }
 
     # numpy replay: one step per chunk, normalized by the CHUNK size
@@ -536,9 +531,9 @@ def test_moments_stream_equals_batch_var_pop(spark):
     from mapreducehs_spark.sources.catalog import load_table
     from mapreducehs_spark.streaming.ops import latest_moments
 
-    replay = st.prepare_stream_dir(spark, "/root/testdata/sf0.001", n_chunks=4)
+    replay = st.prepare_stream_dir(spark, "/root/testdata/sf0.001")
     updates = st.stateful_moments(st.events_stream(spark, replay))
-    log = st.run_to_batch(updates, "st20_test_sink", output_mode="append")
+    log = st.run_to_batch(updates, "st20_test_sink")
     got = {r["event_type"]: r for r in latest_moments(log).collect()}
 
     events = load_table(spark, "/root/testdata/sf0.001", "events")
@@ -571,11 +566,9 @@ def test_trailing_anomaly_stream_equals_batch_window(spark):
 
     from mapreducehs_spark.sources.catalog import load_table
 
-    replay = st.prepare_stream_dir(spark, "/root/testdata/sf0.001", n_chunks=4)
-    flagged = st.stateful_trailing_anomaly(
-        st.events_stream(spark, replay), window=8, num=3
-    )
-    log = st.run_to_batch(flagged, "st21_test_sink", output_mode="append")
+    replay = st.prepare_stream_dir(spark, "/root/testdata/sf0.001")
+    flagged = st.stateful_trailing_anomaly(st.events_stream(spark, replay))
+    log = st.run_to_batch(flagged, "st21_test_sink")
     got = {
         (r["user_id"], r["event_id"]): (r["cents"], r["trail_sum"])
         for r in log.collect()
@@ -616,11 +609,11 @@ def test_bloom_dedup_false_positive_regime(spark):
 
     from mapreducehs_spark.sources.catalog import load_table
 
-    replay = st.prepare_stream_dir(spark, "/root/testdata/sf0.001", n_chunks=4)
+    replay = st.prepare_stream_dir(spark, "/root/testdata/sf0.001")
     out = st.stateful_bloom_dedup(
         st.events_stream(spark, replay), shards=4, m_bits=64
     )
-    log = st.run_to_batch(out, "st22_fp_test_sink", output_mode="append")
+    log = st.run_to_batch(out, "st22_fp_test_sink")
     got = {(r["user_id"], r["event_type"]) for r in log.collect()}
 
     rows = (
@@ -844,7 +837,7 @@ def test_st36_monitor_checkpoint_restart_and_replay_dedup(spark, tmp_path):
     from mapreducehs_spark.sources.catalog import load_table
 
     sf = "/root/testdata/sf0.001"
-    replay = st.prepare_manifest_dir(spark, sf, n_chunks=4)
+    replay = st.prepare_manifest_dir(spark, sf)
     files = sorted(glob.glob(os.path.join(replay, "*.parquet")))
     assert len(files) >= 3, "need a mid-replay kill point"
 

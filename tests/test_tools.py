@@ -1,11 +1,15 @@
 """The measurement tools' own rules: ``bench.py``'s query-name
 resolution and the flag laws of the two scaling gates
 (``tools/scaling_gate.py``, ``tools/stream_scaling.py``), checked on
-hand-written detail files.  Nothing here starts Spark."""
+hand-written detail files; the session's machine-sized heap default;
+and an AST guard on the engine's parameter surface.  Nothing here
+starts Spark."""
 
 from __future__ import annotations
 
+import ast
 import json
+import os
 import subprocess
 import sys
 from pathlib import Path
@@ -114,3 +118,111 @@ def test_stream_gate_flags_growing_bounded_state(tools, tmp_path, monkeypatch):
     assert result["state_flagged"] == [bounded]
     # the batch gate's wall law: 0.1 s -> 1.4 s is 14x above the 1 s floor
     assert result["wall_flagged"] == [slow]
+
+
+def test_default_driver_heap_fits_the_machine():
+    from mapreducehs_spark import session
+
+    gib = int(session.DEFAULT_DRIVER_MEM.removesuffix("g"))
+    assert gib >= 1
+    assert gib * 2**30 <= os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+
+
+#: Parameters kept although every call passes their default:
+#: perfbench/run.py rebinds ``base_dir`` on the stream fixture builders
+#: by keyword and reads its default.
+_ONE_VALUE_EXEMPT = {
+    ("streaming/ops.py", f"prepare_{kind}_dir", "base_dir")
+    for kind in ("stream", "late_stream", "docs_stream", "cdc_mv", "manifest", "cdc_log", "emb_stream")
+}
+
+
+def _imported_from(path: Path) -> dict[str, str]:
+    """Local name -> dotted module it was imported from, for one file."""
+    here = ".".join(path.relative_to(ROOT).with_suffix("").parts)
+    out = {}
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                out[a.asname or a.name.split(".")[0]] = a.name if a.asname else a.name.split(".")[0]
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                parent = here.rsplit(".", node.level)[0]
+                base = f"{parent}.{base}" if base else parent
+            for a in node.names:
+                out[a.asname or a.name] = f"{base}.{a.name}"
+    return out
+
+
+def test_no_parameter_has_one_value():
+    """Every defaulted parameter of a module-level engine function is
+    passed some other value by at least one call in the engine, the
+    tools, the tests, the benchmark or the driver entry: a value that
+    no caller varies is a constant, not an option.  A call that passes
+    ``**kwargs`` (``catalog.write_any`` in the tests) or ``*args``
+    covering a parameter counts as varying it.  A call resolves to the
+    module its qualifier (or its bare name) was imported from, so a name
+    defined in two modules (``session_aggregate``) is checked per
+    module."""
+    pkg = ROOT / "mapreducehs_spark"
+    defs = {}  # name -> {dotted module: FunctionDef}
+    for path in sorted(pkg.rglob("*.py")):
+        dotted = ".".join(path.relative_to(ROOT).with_suffix("").parts)
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, ast.FunctionDef):
+                defs.setdefault(node.name, {})[dotted] = node
+    callers = [
+        *sorted(pkg.rglob("*.py")),
+        *(p for d in ("tools", "tests", "perfbench") for p in sorted((ROOT / d).rglob("*.py"))),
+        ROOT / "bench.py",
+        ROOT / "__spark_entry__.py",
+    ]
+    calls = {}  # (dotted module, name) -> [ast.Call]
+    for path in callers:
+        imported = _imported_from(path)
+        here = ".".join(path.relative_to(ROOT).with_suffix("").parts)
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            if name not in defs:
+                continue
+            if isinstance(f, ast.Attribute):
+                origin = imported.get(getattr(f.value, "id", None), "")
+            else:
+                origin = here if here in defs[name] else imported.get(name, "").rpartition(".")[0]
+            owners = [m for m in defs[name] if origin and (m == origin or m.startswith(origin + "."))]
+            for m in owners or defs[name]:
+                calls.setdefault((m, name), []).append(node)
+
+    def varied(pname, default, index, sites):
+        for c in sites:
+            if any(kw.arg is None for kw in c.keywords):
+                return True
+            for i, a in enumerate(c.args):
+                if isinstance(a, ast.Starred):
+                    if index is not None and i <= index:
+                        return True
+                    break
+                if i == index and ast.dump(a) != ast.dump(default):
+                    return True
+            if any(kw.arg == pname and ast.dump(kw.value) != ast.dump(default) for kw in c.keywords):
+                return True
+        return False
+
+    one_value = []
+    for name, by_module in defs.items():
+        for dotted, fn in by_module.items():
+            rel = dotted.removeprefix("mapreducehs_spark.").replace(".", "/") + ".py"
+            a = fn.args
+            pos = a.posonlyargs + a.args
+            defaulted = [(p.arg, d, pos.index(p)) for p, d in zip(pos[len(pos) - len(a.defaults) :], a.defaults)]
+            defaulted += [(p.arg, d, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+            for pname, default, index in defaulted:
+                if (rel, name, pname) in _ONE_VALUE_EXEMPT:
+                    continue
+                if not varied(pname, default, index, calls.get((dotted, name), [])):
+                    one_value.append(f"{rel}:{fn.lineno} {name}({pname}={ast.unparse(default)})")
+    assert not one_value, f"{len(one_value)} parameters with one value in use: {one_value}"

@@ -15,7 +15,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 
-from mapreducehs_spark.session import DEFAULT_CPUS
+from mapreducehs_spark.session import DEFAULT_CPUS, DEFAULT_DRIVER_MEM
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None
@@ -26,7 +26,7 @@ spark = (
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.shuffle.partitions", DEFAULT_CPUS)
     .config("spark.ui.enabled", "false")
-    .config("spark.driver.memory", "16g")
+    .config("spark.driver.memory", DEFAULT_DRIVER_MEM)
     .getOrCreate()
 )
 spark.sparkContext.setLogLevel("ERROR")

@@ -112,10 +112,10 @@ def prewarm_fixtures(spark) -> None:
     """
     from mapreducehs_spark import streaming as st
 
-    st.prepare_stream_dir(spark, SF_DIR, n_chunks=4)
-    st.prepare_stream_dir(spark, SF_DIR, n_chunks=4, n_flush=2)
+    st.prepare_stream_dir(spark, SF_DIR)
+    st.prepare_stream_dir(spark, SF_DIR, n_flush=2)
     st.prepare_late_stream_dir(spark, SF_DIR)
-    st.prepare_docs_stream_dir(spark, SF_DIR, n_chunks=4)
+    st.prepare_docs_stream_dir(spark, SF_DIR)
 
 
 def main() -> None:
