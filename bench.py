@@ -1,24 +1,36 @@
-"""Benchmark harness: the one timer for batch queries at $SPARK_GRAFT_SF_DIR.
+"""Benchmark harness: the one timer for every query at $SPARK_GRAFT_SF_DIR.
 
-    python bench.py              # every batch query -> BENCH_local.json
+    python bench.py              # every query -> BENCH_local.json
     python bench.py d03,q100     # a subset: full names or unique prefixes
 
 Each query runs through the noop sink (no driver collect cost, no
 skipped projections): one untimed warm pass over the measured set
-(JIT, parquet footers, broadcast paths), then ``REPEATS`` timed runs
-per query.  A line per query (median, min, max) goes to stderr as it
-finishes.  ``SPARK_GRAFT_BENCH_REPEATS`` sets the repeats,
-``SPARK_GRAFT_SF_DIR`` the data and ``SPARK_GRAFT_BENCH_OUT`` the
-detail file.
+(JIT, parquet footers, broadcast paths, and every stream replay
+fixture the st queries read), then ``REPEATS`` timed runs per query.
+A line per query (median, min, max) goes to stderr as it finishes.
+``SPARK_GRAFT_BENCH_REPEATS`` sets the repeats, ``SPARK_GRAFT_SF_DIR``
+the data and ``SPARK_GRAFT_BENCH_OUT`` the detail file.
 
 Prints exactly ONE COMPACT JSON line (total + per-family subtotals +
 calibration; a stdout capture that keeps only the tail of long lines
-truncated round 4's 86-query line) and writes the
-per-query detail (``queries``: median, ``secs``: every repeat) to
+truncated round 4's 86-query line) and writes the per-query detail
+(``queries``: median, ``secs``: every repeat, ``state``: the
+state-store footprint of each query that ran micro-batches) to
 ``BENCH_local.json``.  A subset run writes a detail file only where
 ``SPARK_GRAFT_BENCH_OUT`` points: ``BENCH_local.json`` is the
 full-inventory record the next full run reads for
 ``common_inventory_total``.
+
+A stream query's wall is build + drain of its replay through the
+noop sink.  A ``StreamingQueryListener`` records, per query, the max
+over micro-batches and repeats of the summed ``numRowsTotal`` and
+``memoryUsedBytes`` of its state operators, and its micro-batch count
+(``peak_state_rows``, ``peak_state_bytes``, ``batches``):
+``tools/stream_scaling.py`` reads them from two detail files.  The
+listener's events arrive asynchronously, so after a run that started
+a stream the harness waits (untimed, at most ``STREAM_DRAIN_SEC``)
+until each stream it started has reported termination; a run that
+started none does not wait.
 
 Every run measures ``calib_sec`` first, a fixed data-independent probe
 (VERSION 2 since round 12; see ``calibration()``), so a run's walls
@@ -39,9 +51,11 @@ import json
 import os
 import statistics
 import sys
+import threading
 import time
 
 import pandas as pd  # module-level: pandas_udf type hints resolve here
+from pyspark.sql.streaming import StreamingQueryListener
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
@@ -56,15 +70,17 @@ REPEATS = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
 #: calibration dispersion (stdev / median of the 5 reps) above which
 #: the probe is re-measured once, and flagged if it stays above
 CALIB_DISP_MAX = 0.15
+#: longest untimed wait, after a run that started streams, for their
+#: termination events (the listener bus is asynchronous)
+STREAM_DRAIN_SEC = 10.0
+STATE_KEYS = ("peak_state_rows", "peak_state_bytes", "batches")
 
 
 def full_inventory() -> list[str]:
-    """EVERY batch query in registry order.  The st-series stays
-    excluded — its replay harness measures fixture IO, not the operator
-    (``tools/stream_bench.py`` times it)."""
+    """EVERY registered query, batch and stream, in registry order."""
     from mapreducehs_spark.queries import QUERIES
 
-    return [n for n in QUERIES if not n.startswith("st")]
+    return list(QUERIES)
 
 
 def resolve_queries(arg: str) -> list[str]:
@@ -167,16 +183,91 @@ def spawn_python_workers(spark) -> None:
     ).write.format("noop").mode("overwrite").save()
 
 
-def time_queries(spark, names: list[str], sf_dir: str, repeats: int) -> dict[str, list[float]]:
-    """Every timed wall per query: one untimed warm pass over *names*
-    (per-query codegen+JIT startup was 2-5x the steady-state time and
-    measured the JVM, not the plan), then *repeats* runs of each."""
+class StateFootprintListener(StreamingQueryListener):
+    """Per sink name (a stream's query name, else its id): the peak over
+    micro-batches of the summed state rows and state bytes of its state
+    operators, and its micro-batch count; plus the run ids of the
+    streams started and not yet reported terminated.
+
+    Events arrive on the listener-bus thread, except ``onQueryStarted``,
+    which Spark delivers before ``start()`` returns; a stream's progress
+    events precede its termination event on the bus."""
+
+    def __init__(self) -> None:
+        self._cond = threading.Condition()
+        self.stats: dict[str, dict[str, int]] = {}
+        self.running: set[str] = set()
+
+    def onQueryStarted(self, event) -> None:  # noqa: N802
+        with self._cond:
+            self.running.add(str(event.runId))
+
+    def onQueryProgress(self, event) -> None:  # noqa: N802
+        p = event.progress
+        name = p.name or str(p.id)
+        state_rows = sum(int(so.numRowsTotal) for so in p.stateOperators)
+        # memoryUsedBytes is the honest scale signal for SHARDED state
+        # (st32's 64 version-map rows): numRowsTotal is flat by
+        # construction there, while the bytes track |live keys|
+        state_bytes = sum(int(so.memoryUsedBytes) for so in p.stateOperators)
+        with self._cond:
+            d = self.stats.setdefault(name, dict.fromkeys(STATE_KEYS, 0))
+            d["peak_state_rows"] = max(d["peak_state_rows"], state_rows)
+            d["peak_state_bytes"] = max(d["peak_state_bytes"], state_bytes)
+            d["batches"] += 1
+
+    def onQueryTerminated(self, event) -> None:  # noqa: N802
+        with self._cond:
+            self.running.discard(str(event.runId))
+            self._cond.notify_all()
+
+    def snapshot(self) -> dict[str, dict[str, int]]:
+        with self._cond:
+            return {k: dict(v) for k, v in self.stats.items()}
+
+    def drain(self) -> bool:
+        """Wait until every started stream has reported termination (at
+        once when none is running); False after ``STREAM_DRAIN_SEC``."""
+        with self._cond:
+            return self._cond.wait_for(lambda: not self.running, STREAM_DRAIN_SEC)
+
+
+def merge_state(record: dict | None, before: dict, after: dict) -> dict | None:
+    """Fold one run into a query's state record, given the listener's
+    snapshots around the run: every sink whose batch count grew in the
+    run contributes its peaks and its batch delta, and the record keeps
+    the max over sinks and over runs (the state-store footprint is a
+    property of the plan, not of the fastest run).  None while no run
+    has executed a micro-batch."""
+    for sink, d in after.items():
+        done = before.get(sink, {}).get("batches", 0)
+        if d["batches"] > done:
+            delta = {**d, "batches": d["batches"] - done}
+            record = {k: max((record or delta)[k], delta[k]) for k in STATE_KEYS}
+    return record
+
+
+def time_queries(
+    spark, names: list[str], sf_dir: str, repeats: int
+) -> tuple[dict[str, list[float]], dict[str, dict]]:
+    """Every timed wall per query, and the state record (``merge_state``)
+    of each query that ran micro-batches: one untimed warm pass over
+    *names* (per-query codegen+JIT startup was 2-5x the steady-state
+    time and measured the JVM, not the plan; the st queries build their
+    replay fixtures here), then *repeats* runs of each."""
     from mapreducehs_spark.queries import QUERIES
+
+    listener = StateFootprintListener()
+    spark.streams.addListener(listener)
 
     def run(name: str) -> float:
         t0 = time.perf_counter()
         QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        wall = time.perf_counter() - t0
+        if not listener.drain():
+            print(f"{name}: stream termination not reported within "
+                  f"{STREAM_DRAIN_SEC:.0f}s", file=sys.stderr, flush=True)
+        return wall
 
     for name in names:
         run(name)
@@ -186,15 +277,21 @@ def time_queries(spark, names: list[str], sf_dir: str, repeats: int) -> dict[str
     spark.catalog.clearCache()
 
     secs: dict[str, list[float]] = {}
+    state: dict[str, dict | None] = {}
     for name in names:
-        secs[name] = ts = [run(name) for _ in range(repeats)]
+        secs[name] = ts = []
+        for _ in range(repeats):
+            before = listener.snapshot()
+            ts.append(run(name))
+            state[name] = merge_state(state.get(name), before, listener.snapshot())
         print(
             f"{name}: median={statistics.median(ts):.3f}s "
             f"min={min(ts):.3f}s max={max(ts):.3f}s",
             file=sys.stderr,
             flush=True,
         )
-    return secs
+    spark.streams.removeListener(listener)
+    return secs, {n: r for n, r in state.items() if r is not None}
 
 
 def main() -> None:
@@ -224,7 +321,7 @@ def main() -> None:
     spark = get_spark(app_name="mapreducehs_spark_bench", master=f"local[{CPUS}]")
     calib = calibration(spark)
     spawn_python_workers(spark)
-    secs = time_queries(spark, inventory, SF_DIR, REPEATS)
+    secs, state = time_queries(spark, inventory, SF_DIR, REPEATS)
 
     timings = {name: round(statistics.median(ts), 4) for name, ts in secs.items()}
     sf = SF_DIR.rstrip("/").split("sf")[-1]
@@ -236,7 +333,7 @@ def main() -> None:
         common_total, common_n = round(sum(common.values()), 4), len(common)
 
     # per-family subtotals keep the stdout line ~300 bytes: q relational,
-    # d dedup, s similarity, t text, m multimodal, p pipeline
+    # d dedup, s similarity, t text, m multimodal, p pipeline, st stream
     families: dict[str, float] = {}
     for name, t in timings.items():
         fam = name.split("_")[0].rstrip("0123456789") + "_family"
@@ -256,6 +353,7 @@ def main() -> None:
             **head,
             "queries": timings,
             "secs": {n: [round(t, 4) for t in ts] for n, ts in secs.items()},
+            "state": state,
             "sf": sf_val,
         }
         with open(detail_path, "w") as f:

@@ -305,3 +305,55 @@ def _mixture_rates(tok: DataFrame) -> DataFrame:
     )
 
 
+def _pack_sequences(starts: DataFrame, keys: list[str], ctx: int, n_name: str) -> DataFrame:
+    """t40's packing law, shared by t40, t46 and m18: each row of
+    *starts* (*keys*, doc_id, width ``w`` with its separator, global
+    offset ``start`` within its *keys* group) explodes into the
+    *ctx*-position windows it overlaps, and each (*keys*, seq_id)
+    window reports its row count (named *n_name*), doc span, EOS
+    boundaries, filled positions (interval intersection) and fill rate
+    in integer micro-units."""
+    C = ctx
+    x = starts.select(
+        *keys,
+        "doc_id",
+        "w",
+        "start",
+        F.explode_outer(
+            F.expr(f"sequence(start div {C}, (start + w - 1) div {C})")
+        ).alias("seq_id"),
+    ).filter(F.col("seq_id").isNotNull())
+    fill = F.least(
+        F.col("start") + F.col("w"), (F.col("seq_id") + 1) * C
+    ) - F.greatest(F.col("start"), F.col("seq_id") * C)
+    return (
+        x.select(
+            *keys,
+            "doc_id",
+            "seq_id",
+            fill.alias("__fill"),
+            (F.expr(f"(start + w - 1) div {C}") == F.col("seq_id"))
+            .cast("bigint")
+            .alias("__eos"),
+        )
+        .groupBy(*keys, "seq_id")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias(n_name),
+            F.min("doc_id").cast("bigint").alias("first_doc"),
+            F.max("doc_id").cast("bigint").alias("last_doc"),
+            F.sum("__eos").cast("bigint").alias("n_eos"),
+            F.sum("__fill").cast("bigint").alias("n_fill"),
+        )
+        .select(
+            *keys,
+            "seq_id",
+            n_name,
+            "first_doc",
+            "last_doc",
+            "n_eos",
+            "n_fill",
+            F.expr(f"cast((n_fill * 1000000L) div {C} as bigint)").alias(
+                "fill_micro"
+            ),
+        )
+    )

@@ -11,6 +11,7 @@ from mapreducehs_spark.operators.iteration import Materialization, materialize
 from mapreducehs_spark.queries._registry import query
 from mapreducehs_spark.queries._shared import (
     _d15_oracle,
+    _pack_sequences,
     _t,
 )
 
@@ -998,7 +999,6 @@ def _m18_build(m: Materialization, sf_dir: str) -> DataFrame:
     """m18 pre-checkpoint builder (q107/t40 discipline)."""
     from mapreducehs_spark.operators.sampling import grouped_prefix_sums
 
-    C = _M18_CTX
     docs = _t(m.spark, sf_dir, "documents")
     keyed = docs.select(
         "source",
@@ -1010,49 +1010,7 @@ def _m18_build(m: Materialization, sf_dir: str) -> DataFrame:
         ).alias("w"),
     )
     starts = grouped_prefix_sums(m, keyed, ["source"], ["doc_id"], "w", out_col="start")
-    x = starts.select(
-        "source",
-        "doc_id",
-        "w",
-        "start",
-        F.explode_outer(
-            F.expr(f"sequence(start div {C}, (start + w - 1) div {C})")
-        ).alias("seq_id"),
-    ).filter(F.col("seq_id").isNotNull())
-    fill = F.least(
-        F.col("start") + F.col("w"), (F.col("seq_id") + 1) * C
-    ) - F.greatest(F.col("start"), F.col("seq_id") * C)
-    return (
-        x.select(
-            "source",
-            "doc_id",
-            "seq_id",
-            fill.alias("__fill"),
-            (F.expr(f"(start + w - 1) div {C}") == F.col("seq_id"))
-            .cast("bigint")
-            .alias("__eos"),
-        )
-        .groupBy("source", "seq_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-            F.min("doc_id").cast("bigint").alias("first_doc"),
-            F.max("doc_id").cast("bigint").alias("last_doc"),
-            F.sum("__eos").cast("bigint").alias("n_eos"),
-            F.sum("__fill").cast("bigint").alias("n_fill"),
-        )
-        .select(
-            "source",
-            "seq_id",
-            "n_pairs",
-            "first_doc",
-            "last_doc",
-            "n_eos",
-            "n_fill",
-            F.expr(f"cast((n_fill * 1000000L) div {C} as bigint)").alias(
-                "fill_micro"
-            ),
-        )
-    )
+    return _pack_sequences(starts, ["source"], _M18_CTX, "n_pairs")
 
 
 # =========================================================================

@@ -7,6 +7,7 @@ import pandas as pd  # noqa: F401 — needed to resolve postponed pd.Series hint
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+import mapreducehs_spark.streaming.ops as st
 from mapreducehs_spark.operators import dedup, text
 from mapreducehs_spark.operators.iteration import materialize
 from mapreducehs_spark.sources.catalog import FIXTURE_ROOT, table_files
@@ -35,8 +36,6 @@ from mapreducehs_spark.queries.t_text import _T40_CTX
 # =========================================================================
 
 def _replayed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mapreducehs_spark import streaming as st
-
     replay = st.prepare_stream_dir(spark, sf_dir)
     return st.events_stream(spark, replay)
 
@@ -71,8 +70,6 @@ def _state_bound(sf_dir: str, table: str = "events") -> int:
 def st01_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming watermarked tumbling-window agg == the batch aggregate
     (no late data by replay construction — differential vs DuckDB)."""
-    from mapreducehs_spark import streaming as st
-
     agg = st.tumbling_aggregate(_replayed_events(spark, sf_dir), watermark="30 minutes")
     out = st.run_to_batch(agg, "st01_sink", state_bytes=_state_bound(sf_dir))
     # sentinel dropped from the BATCH result (an in-stream filter on a
@@ -109,8 +106,6 @@ def st01_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 def st02_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming session_window (30-min gap) per user, append mode —
     differential vs islands-and-gaps sessionization in DuckDB."""
-    from mapreducehs_spark import streaming as st
-
     agg = st.session_aggregate(_replayed_events(spark, sf_dir))
     out = st.run_to_batch(agg, "st02_sink", state_bytes=_state_bound(sf_dir))
     return out.filter(F.col("user_id") >= 0)  # drop the sentinel's session
@@ -129,13 +124,9 @@ def st02_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def st03_stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming operator (applyInPandasWithState):
     per-user running totals; final snapshot == batch groupBy."""
-    from mapreducehs_spark import streaming as st
-
     updates = st.stateful_user_totals(_replayed_events(spark, sf_dir))
     log = st.run_to_batch(updates, "st03_sink", state_bytes=_state_bound(sf_dir))
-    from mapreducehs_spark.streaming.ops import latest_per_user
-
-    return latest_per_user(log)
+    return st.latest_per_user(log)
 
 
 @query(
@@ -151,8 +142,6 @@ def st04_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is SELECT DISTINCT.  See streaming/ops.stream_distinct for
     the bounded-state (dropDuplicatesWithinWatermark) variant used on
     unbounded ingests."""
-    from mapreducehs_spark import streaming as st
-
     deduped = st.stream_distinct(
         _replayed_events(spark, sf_dir), keys=["user_id", "event_type"]
     )
@@ -182,8 +171,6 @@ def st05_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join in DuckDB; equality holds because inner joins emit on match and
     the ordered replay never lets the watermark evict a click before its
     30-minute match horizon has streamed past."""
-    from mapreducehs_spark import streaming as st
-
     joined = st.clicks_then_purchases(_replayed_events(spark, sf_dir))
     # state partitions from the topology's state bound (round 13): a
     # stream-stream join runs FOUR state stores per partition and each
@@ -219,8 +206,6 @@ def st06_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     slide, per event type) == the batch sliding aggregate: the
     overlapping-window counterpart of st01, bounded state via watermark
     expiry (see streaming/ops.sliding_aggregate)."""
-    from mapreducehs_spark import streaming as st
-
     agg = st.sliding_aggregate(_replayed_events(spark, sf_dir))
     out = st.run_to_batch(agg, "st06_sink", state_bytes=_state_bound(sf_dir))
     return out.filter(F.col("event_type") != "__flush__")
@@ -245,8 +230,6 @@ def st07_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     state store, exactly one output row per event; the batch oracle is
     the identical left join.  The canonical shape for attaching
     slowly-changing reference data to an unbounded ingest."""
-    from mapreducehs_spark import streaming as st
-
     cust = _t(spark, sf_dir, "customer")
     nation = _t(spark, sf_dir, "nation")
     dim = cust.join(nation, cust.c_nationkey == nation.n_nationkey, "left_outer").select(
@@ -295,8 +278,6 @@ def st08_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     can never tie the watermark exactly.  At 100 TB this bounded-state
     discipline (watermark evicts closed windows) is what keeps an
     always-on aggregation's state finite."""
-    from mapreducehs_spark import streaming as st
-
     replay = st.prepare_late_stream_dir(spark, sf_dir)
     events = st.events_stream(spark, replay)
     agg = st.tumbling_aggregate(events, watermark="2233 seconds")
@@ -378,7 +359,6 @@ def st10_stream_upsert_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from mapreducehs_spark import streaming as st
     from mapreducehs_spark.operators.merge import merge_upsert
 
     replay = st.prepare_stream_dir(spark, sf_dir)
@@ -462,8 +442,6 @@ def st11_stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     intermediate sink.  The watermark propagates through the first
     aggregate, so outer windows close exactly when their last inner
     window is final; batch replay over the same events is the oracle."""
-    from mapreducehs_spark import streaming as st
-
     agg = st.chained_window_aggregate(_replayed_events(spark, sf_dir))
     out = st.run_to_batch(agg, "st11_sink", state_bytes=_state_bound(sf_dir))
     return out.filter(F.col("event_type") != "__flush__")
@@ -486,8 +464,6 @@ def st12_stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame
     The replay span fits inside the delay, so the emitted set equals
     SELECT DISTINCT and the bounded-state operator is value-checked,
     not just smoke-tested."""
-    from mapreducehs_spark import streaming as st
-
     deduped = st.stream_distinct_within_watermark(
         _replayed_events(spark, sf_dir), keys=["user_id", "event_type"]
     )
@@ -514,8 +490,6 @@ def st13_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     q71 accuracy-contract discipline applied to streaming state.
     At 100 TB/day the state is shards × capacity entries, independent
     of stream length."""
-    from mapreducehs_spark import streaming as st
-
     updates = st.stateful_mg_sketch(_replayed_events(spark, sf_dir))
     log = st.run_to_batch(updates, "st13_sink", state_bytes=_state_bound(sf_dir))
     return st.merge_mg_sketch_log(log)
@@ -554,8 +528,6 @@ def st14_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     path itself is what the oracle checks (unmatched clicks MUST
     appear exactly once).  At 100 TB state stays bounded by the join
     window exactly as in the inner case."""
-    from mapreducehs_spark import streaming as st
-
     replay = st.prepare_stream_dir(spark, sf_dir, n_flush=2)
     joined = st.clicks_left_outer_purchases(st.events_stream(spark, replay))
     # same state-volume-derived partition count as st05 (four state
@@ -565,8 +537,6 @@ def st14_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _replayed_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mapreducehs_spark import streaming as st
-
     replay = st.prepare_docs_stream_dir(spark, sf_dir)
     return st.docs_stream(spark, replay)
 
@@ -586,8 +556,6 @@ def st15_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     run the stream in its exact regime, value-check against batch).
     Bounded-state behavior itself is pinned separately with a short TTL
     in tests/test_streaming.py."""
-    from mapreducehs_spark import streaming as st
-
     pairs = st.stateful_minhash_dedup(_replayed_docs(spark, sf_dir), ttl_sec=10**9)
     # st15 keeps the parallelism-driven partition default: unlike the
     # state-commit-bound topologies, its per-batch work is the Arrow
@@ -610,8 +578,6 @@ def st16_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream in its exact regime, check against batch).  Serving read =
     latest snapshot per user (st10's upsert shape) + the batch
     aggregate."""
-    from mapreducehs_spark import streaming as st
-
     snapshots = st.stateful_funnel(_replayed_events(spark, sf_dir))
     log = st.run_to_batch(snapshots, "st16_sink", state_bytes=_state_bound(sf_dir))
     return st.funnel_report_from_log(log)
@@ -627,8 +593,6 @@ def st17_stream_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     showing that classifier scoring adds ZERO streaming machinery (the
     scan IS the throughput bound).  Batch t26's oracle value-checks the
     stream bit-for-bit (the st13/st15 stream==batch discipline)."""
-    from mapreducehs_spark import streaming as st
-
     scored = st.hashed_linear_score_stream(_replayed_docs(spark, sf_dir))
     log = st.run_to_batch(scored, "st17_sink")
     return log.select("doc_id", "n_feats", "score", "keep")
@@ -718,8 +682,6 @@ def st18_stream_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle unrolls all four steps with chunk membership replayed from
     the fixture's positional law — the whole ONLINE trajectory,
     batch boundaries included, value-checks bit-for-bit."""
-    from mapreducehs_spark import streaming as st
-
     return st.streaming_logreg_train(_replayed_docs(spark, sf_dir))
 
 
@@ -746,8 +708,6 @@ def st19_stream_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents table the rates were built from, so t30's oracle CTEs
     value-check the stream's kept set bit-for-bit (the st13/st15/st17
     stream==batch discipline); output is linear in KEPT docs."""
-    from mapreducehs_spark import streaming as st
-
     docs = _t(spark, sf_dir, "documents")
     rates = _mixture_rates(_mixture_tok(docs))
     kept = st.mixture_filter_stream(_replayed_docs(spark, sf_dir), rates)
@@ -780,13 +740,9 @@ def st20_stream_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     across executors, checkpoint-restartable like every state-backed op
     here.  Final snapshot (argmax update_seq per key) == the batch
     aggregate, value-checked against DuckDB's var_pop."""
-    from mapreducehs_spark import streaming as st
-
     updates = st.stateful_moments(_replayed_events(spark, sf_dir))
     log = st.run_to_batch(updates, "st20_sink", state_bytes=_state_bound(sf_dir))
-    from mapreducehs_spark.streaming.ops import latest_moments
-
-    return latest_moments(log)
+    return st.latest_moments(log)
 
 
 @query(
@@ -823,8 +779,6 @@ def st21_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin of q36's trailing ROWS frames — the same law, held as live
     per-key state instead of a sort (streaming/ops.
     stateful_trailing_anomaly)."""
-    from mapreducehs_spark import streaming as st
-
     flagged = st.stateful_trailing_anomaly(_replayed_events(spark, sf_dir))
     log = st.run_to_batch(flagged, "st21_sink", state_bytes=_state_bound(sf_dir))
     return log.select("user_id", "event_id", "cents", "trail_sum")
@@ -876,8 +830,6 @@ def st22_stream_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     of its 4 bits was unset strictly before its own first occurrence.
     Value-checks the bounded-state operator INCLUDING its false
     positives — not just the happy path."""
-    from mapreducehs_spark import streaming as st
-
     out = st.stateful_bloom_dedup(_replayed_events(spark, sf_dir), shards=8)
     return st.run_to_batch(out, "st22_sink", state_bytes=_state_bound(sf_dir))
 
@@ -946,8 +898,6 @@ def st23_stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline); boundary law is deterministic in both engines (floored
     seconds, half-open intervals — an event in a zero-width interval
     drops in both)."""
-    from mapreducehs_spark import streaming as st
-
     with materialize(spark) as m:
         dim = m.persist(
             q91_scd2_dimension(spark, sf_dir).select(
@@ -1000,7 +950,6 @@ def st24_stream_decode_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture streams the corpus the oracle reads, so every per-doc
     status and pixel sum value-checks (stream==batch, the st17
     discipline)."""
-    from mapreducehs_spark import streaming as st
     from mapreducehs_spark.operators.multimodal import (
         render_corrupt_pgm_batches,
         tolerant_decode_batches,
@@ -1062,8 +1011,6 @@ def st25_stream_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFra
     integer rank law: p50 at rank (n+1) div 2, p90 at ceil(9n/10),
     each the smallest bucket whose cumulative count reaches the rank.
     Stream==batch at all four SFs (the st13/st15/st17 discipline)."""
-    from mapreducehs_spark import streaming as st
-
     updates = st.stateful_histogram(_replayed_events(spark, sf_dir))
     log = st.run_to_batch(updates, "st25_sink", state_bytes=_state_bound(sf_dir))
     return st.histogram_quantiles_log(log)
@@ -1109,8 +1056,6 @@ def st26_stream_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold's prefix sums equal the batch per-source window replay
     bit-for-bit regardless of trigger slicing — the oracle IS that
     batch replay.  Context length shared with t40 (_T40_CTX)."""
-    from mapreducehs_spark import streaming as st
-
     docs = _replayed_docs(spark, sf_dir).select(
         "source",
         "doc_id",
@@ -1135,8 +1080,6 @@ def st27_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection over the sink read (Spark HALF_UP — the kernel emits
     only integers) so the rounding law is d08's own, and d08's oracle
     checks the whole topology verbatim."""
-    from mapreducehs_spark import streaming as st
-
     docs = _replayed_docs(spark, sf_dir)
     import numpy as _np
 
@@ -1236,7 +1179,6 @@ def st28_stream_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sink read.  Stream == batch holds trivially (the projection
     is per-row deterministic), so t16's own oracle value-checks the
     whole ingest topology verbatim."""
-    from mapreducehs_spark import streaming as st
     from mapreducehs_spark.queries.t_text import _t16_doc_frame, _t16_rollup
 
     audit = _t16_doc_frame(_replayed_docs(spark, sf_dir))
@@ -1258,8 +1200,6 @@ def st29_stream_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the always-on curation sampler: "keep the best 25 per domain,
     length-weighted, forever" at O(domains) memory.  t31's oracle
     value-checks the final reservoir verbatim."""
-    from mapreducehs_spark import streaming as st
-
     return st.streaming_weighted_sample(_replayed_docs(spark, sf_dir))
 
 
@@ -1277,7 +1217,6 @@ def st30_stream_pair_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic metadata arithmetic — no pixel decoded at ingest
     either), so m19's own oracle value-checks the whole ingest
     topology verbatim."""
-    from mapreducehs_spark import streaming as st
     from mapreducehs_spark.queries.m_multimodal import _m19_flagged, _m19_rollup
 
     flagged = _m19_flagged(_replayed_docs(spark, sf_dir))
@@ -1311,8 +1250,6 @@ def st31_stream_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     Delta/Iceberg MV; only the sink changes."""
     import os
     import shutil
-
-    from mapreducehs_spark import streaming as st
 
     base_mv, replay = st.prepare_cdc_mv_dir(spark, sf_dir)
     serving = os.path.join(
@@ -1415,8 +1352,6 @@ def st32_stream_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear in CHANGES in the requested window.  At 100 TB/day the
     same body reads a Kafka compacted topic; only the source line
     changes."""
-    from mapreducehs_spark import streaming as st
-
     replay = st.prepare_cdc_log_dir(spark, sf_dir)
     log = (
         spark.readStream.schema(st.CDC_LOG_SCHEMA)
@@ -1447,7 +1382,6 @@ def st33_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest-hygiene discipline applied to the vector tier)."""
     from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
-    from mapreducehs_spark import streaming as st
     from mapreducehs_spark.functions.vector_np import cell_argmax_udf
     from mapreducehs_spark.queries.s_similarity import _s23_stitch, _seeded_centroids
 
@@ -1537,7 +1471,6 @@ def st34_stream_curriculum_router(spark: SparkSession, sf_dir: str) -> DataFrame
     stream==batch discipline; the min-matching-decile law is
     IDENTICAL text on both engines).  Reference witness: O1 stateless
     per-row kernel + O2 keyed fold (src/Core/MapReduceC.hs:24-26)."""
-    from mapreducehs_spark import streaming as st
     from mapreducehs_spark.queries.t_text import _t49_build
 
     with materialize(spark) as m:
@@ -1612,8 +1545,6 @@ def st35_stream_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     the generation split bit-for-bit.  Reference witness: O12
     pluggable-store read path (src/Core/Store.hs) + O1 stateless
     per-record kernel (src/Core/MapReduceC.hs:24)."""
-    from mapreducehs_spark import streaming as st
-
     confs = {
         "spark.sql.parquet.fieldId.read.enabled": "true",
         "spark.sql.parquet.fieldId.read.ignoreMissing": "true",
@@ -1695,8 +1626,6 @@ def st36_stream_compaction_monitor(spark: SparkSession, sf_dir: str) -> DataFram
     (src/Core/Store.hs)."""
     import os
     import shutil
-
-    from mapreducehs_spark import streaming as st
 
     replay = st.prepare_manifest_dir(spark, sf_dir)
     monitor = os.path.join(

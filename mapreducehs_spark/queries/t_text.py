@@ -15,6 +15,7 @@ from mapreducehs_spark.queries._shared import (
     _T26_ORACLE,
     _mixture_rates,
     _mixture_tok,
+    _pack_sequences,
     _quality_losers,
     _quality_losers_ctes,
     _t,
@@ -2911,53 +2912,13 @@ def _t40_build(m: Materialization, sf_dir: str) -> DataFrame:
     cache can be freed)."""
     from mapreducehs_spark.operators.sampling import global_prefix_sums
 
-    C = _T40_CTX
     docs = _t(m.spark, sf_dir, "documents")
     keyed = docs.select(
         "doc_id",
         (F.size(text.tokens("text")).cast("bigint") + F.lit(1)).alias("w"),
     )
     starts = global_prefix_sums(m, keyed, ["doc_id"], "w", out_col="start")
-    x = starts.select(
-        "doc_id",
-        "w",
-        "start",
-        F.explode_outer(
-            F.expr(f"sequence(start div {C}, (start + w - 1) div {C})")
-        ).alias("seq_id"),
-    ).filter(F.col("seq_id").isNotNull())
-    fill = F.least(
-        F.col("start") + F.col("w"), (F.col("seq_id") + 1) * C
-    ) - F.greatest(F.col("start"), F.col("seq_id") * C)
-    return (
-        x.select(
-            "doc_id",
-            "seq_id",
-            fill.alias("__fill"),
-            (F.expr(f"(start + w - 1) div {C}") == F.col("seq_id"))
-            .cast("bigint")
-            .alias("__eos"),
-        )
-        .groupBy("seq_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.min("doc_id").cast("bigint").alias("first_doc"),
-            F.max("doc_id").cast("bigint").alias("last_doc"),
-            F.sum("__eos").cast("bigint").alias("n_eos"),
-            F.sum("__fill").cast("bigint").alias("n_fill"),
-        )
-        .select(
-            "seq_id",
-            "n_docs",
-            "first_doc",
-            "last_doc",
-            "n_eos",
-            "n_fill",
-            F.expr(f"cast((n_fill * 1000000L) div {C} as bigint)").alias(
-                "fill_micro"
-            ),
-        )
-    )
+    return _pack_sequences(starts, [], _T40_CTX, "n_docs")
 
 
 def _t41_oracle() -> str:
@@ -3617,7 +3578,6 @@ def _t46_build(m: Materialization, sf_dir: str) -> DataFrame:
     from mapreducehs_spark.operators.sampling import grouped_prefix_sums
     from mapreducehs_spark.operators.similarity import kmeans_assignments
 
-    C = _T40_CTX
     emb = _t(m.spark, sf_dir, "embeddings")
     assign = kmeans_assignments(m, emb, k=8)
     docs = _t(m.spark, sf_dir, "documents")
@@ -3628,49 +3588,7 @@ def _t46_build(m: Materialization, sf_dir: str) -> DataFrame:
         assign.select(F.col("id").alias("doc_id"), "cluster"), "doc_id"
     ).select("cluster", "doc_id", "w")
     starts = grouped_prefix_sums(m, keyed, ["cluster"], ["doc_id"], "w", out_col="start")
-    x = starts.select(
-        "cluster",
-        "doc_id",
-        "w",
-        "start",
-        F.explode_outer(
-            F.expr(f"sequence(start div {C}, (start + w - 1) div {C})")
-        ).alias("seq_id"),
-    ).filter(F.col("seq_id").isNotNull())
-    fill = F.least(
-        F.col("start") + F.col("w"), (F.col("seq_id") + 1) * C
-    ) - F.greatest(F.col("start"), F.col("seq_id") * C)
-    return (
-        x.select(
-            "cluster",
-            "doc_id",
-            "seq_id",
-            fill.alias("__fill"),
-            (F.expr(f"(start + w - 1) div {C}") == F.col("seq_id"))
-            .cast("bigint")
-            .alias("__eos"),
-        )
-        .groupBy("cluster", "seq_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.min("doc_id").cast("bigint").alias("first_doc"),
-            F.max("doc_id").cast("bigint").alias("last_doc"),
-            F.sum("__eos").cast("bigint").alias("n_eos"),
-            F.sum("__fill").cast("bigint").alias("n_fill"),
-        )
-        .select(
-            F.col("cluster").cast("bigint").alias("cluster"),
-            "seq_id",
-            "n_docs",
-            "first_doc",
-            "last_doc",
-            "n_eos",
-            "n_fill",
-            F.expr(f"cast((n_fill * 1000000L) div {C} as bigint)").alias(
-                "fill_micro"
-            ),
-        )
-    )
+    return _pack_sequences(starts, ["cluster"], _T40_CTX, "n_docs")
 
 
 # =========================================================================

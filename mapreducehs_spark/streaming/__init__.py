@@ -1,95 +1,2 @@
-from mapreducehs_spark.streaming.ops import (
-    CDC_LOG_SCHEMA,
-    CDC_MV_SCHEMA,
-    MANIFEST_SCHEMA,
-    FLUSH_TYPE,
-    chained_window_aggregate,
-    clicks_left_outer_purchases,
-    clicks_then_purchases,
-    docs_stream,
-    enrich_asof_versions,
-    histogram_quantiles_log,
-    stateful_histogram,
-    stateful_sequence_packer,
-    enrich_with_dim,
-    events_stream,
-    funnel_report_from_log,
-    hashed_linear_score_stream,
-    latest_moments,
-    minhash_pairs_from_log,
-    curriculum_route_stream,
-    manifest_monitor_fold,
-    mixture_filter_stream,
-    prepare_cdc_log_dir,
-    prepare_cdc_mv_dir,
-    prepare_manifest_dir,
-    prepare_emb_stream_dir,
-    prepare_docs_stream_dir,
-    prepare_late_stream_dir,
-    prepare_stream_dir,
-    run_to_batch,
-    merge_mg_sketch_log,
-    stateful_bloom_dedup,
-    stateful_cdc_images,
-    stateful_funnel,
-    stateful_minhash_dedup,
-    stateful_moments,
-    streaming_logreg_train,
-    streaming_weighted_sample,
-    session_aggregate,
-    sliding_aggregate,
-    stateful_mg_sketch,
-    stateful_trailing_anomaly,
-    stateful_user_totals,
-    stream_distinct,
-    stream_distinct_within_watermark,
-    tumbling_aggregate,
-)
-
-__all__ = [
-    "CDC_LOG_SCHEMA",
-    "CDC_MV_SCHEMA",
-    "MANIFEST_SCHEMA",
-    "FLUSH_TYPE",
-    "chained_window_aggregate",
-    "clicks_left_outer_purchases",
-    "clicks_then_purchases",
-    "docs_stream",
-    "enrich_asof_versions",
-    "histogram_quantiles_log",
-    "stateful_histogram",
-    "stateful_sequence_packer",
-    "enrich_with_dim",
-    "events_stream",
-    "funnel_report_from_log",
-    "hashed_linear_score_stream",
-    "latest_moments",
-    "minhash_pairs_from_log",
-    "curriculum_route_stream",
-    "manifest_monitor_fold",
-    "mixture_filter_stream",
-    "prepare_cdc_log_dir",
-    "prepare_cdc_mv_dir",
-    "prepare_manifest_dir",
-    "prepare_emb_stream_dir",
-    "prepare_docs_stream_dir",
-    "prepare_late_stream_dir",
-    "prepare_stream_dir",
-    "run_to_batch",
-    "merge_mg_sketch_log",
-    "stateful_bloom_dedup",
-    "stateful_cdc_images",
-    "stateful_funnel",
-    "stateful_minhash_dedup",
-    "stateful_moments",
-    "streaming_logreg_train",
-    "streaming_weighted_sample",
-    "session_aggregate",
-    "sliding_aggregate",
-    "stateful_mg_sketch",
-    "stateful_trailing_anomaly",
-    "stateful_user_totals",
-    "stream_distinct",
-    "stream_distinct_within_watermark",
-    "tumbling_aggregate",
-]
+"""Structured Streaming: the replay fixtures, the stream sources and the
+stream operators all live in ``mapreducehs_spark.streaming.ops``."""

@@ -461,15 +461,20 @@ def stateful_moments(events: DataFrame) -> DataFrame:
     )
 
 
+def _latest_per_key(log: DataFrame, key: str) -> DataFrame:
+    """The latest update per *key* of an update log: the row with the
+    largest ``update_seq``, ranked in a ``__rn`` column that stays on."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(key).orderBy(F.col("update_seq").desc())
+    return log.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
+
+
 def latest_moments(updates: DataFrame) -> DataFrame:
     """Final snapshot from the moments update log: argmax(update_seq)
     per event_type, variance derived as M2/n."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("event_type").orderBy(F.col("update_seq").desc())
     return (
-        updates.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
+        _latest_per_key(updates, "event_type")
         .select(
             "event_type",
             "n_events",
@@ -567,14 +572,7 @@ def clicks_then_purchases(events: DataFrame) -> DataFrame:
 
 def latest_per_user(updates: DataFrame) -> DataFrame:
     """Final snapshot from the update log: argmax(update_seq) per user."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("update_seq").desc())
-    return (
-        updates.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("user_id", "n_events", "total_value")
-    )
+    return _latest_per_key(updates, "user_id").select("user_id", "n_events", "total_value")
 
 
 def sliding_aggregate(events: DataFrame) -> DataFrame:
@@ -792,14 +790,7 @@ def merge_mg_sketch_log(log: DataFrame) -> DataFrame:
     (update_seq argmax), then the cross-shard PODS merge — summation of
     entry counts (exact when capacity ≥ distinct keys).  Arrays explode
     to (term, est) rows; integer sums are order-free."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("shard").orderBy(F.col("update_seq").desc())
-    latest = (
-        log.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    latest = _latest_per_key(log, "shard").drop("__rn")
     return (
         latest.select(
             F.explode_outer(F.arrays_zip("terms", "counts")).alias("e")
@@ -1221,14 +1212,7 @@ def funnel_report_from_log(log: DataFrame) -> DataFrame:
     then q115's aggregate (counts per step, 1-day completion window,
     truncating micro-unit conversion) — column-for-column the batch
     query's output, so the same oracle checks both."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("update_seq").desc())
-    latest = (
-        log.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .filter(F.col("t1").isNotNull())
-    )
+    latest = _latest_per_key(log, "user_id").filter(F.col("t1").isNotNull())
     return latest.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_viewed"),
         F.count("t2").cast("bigint").alias("n_clicked"),
@@ -1741,10 +1725,8 @@ def histogram_quantiles_log(log: DataFrame) -> DataFrame:
     verbatim."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy("event_type").orderBy(F.col("update_seq").desc())
     latest = (
-        log.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
+        _latest_per_key(log, "event_type")
         .select("event_type", F.arrays_zip("buckets", "counts").alias("z"))
         .select("event_type", F.explode("z").alias("e"))
         .select(

@@ -14,8 +14,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from mapreducehs_spark import streaming as st
-from mapreducehs_spark.streaming.ops import EVENTS_SCHEMA
+import mapreducehs_spark.streaming.ops as st
 
 
 def _write_chunk(path: str, rows: list[dict]) -> None:
@@ -104,7 +103,7 @@ def test_stream_schema_matches_catalog(spark):
     replay = st.prepare_stream_dir(spark, "/root/testdata/sf0.001")
     stream = st.events_stream(spark, replay)
     assert stream.isStreaming
-    assert stream.schema == EVENTS_SCHEMA
+    assert stream.schema == st.EVENTS_SCHEMA
 
 
 def test_foreachbatch_parquet_sink(spark, tmp_path):
@@ -178,7 +177,7 @@ def test_checkpoint_restart_exactly_once(spark, tmp_path):
 
     def run_once():
         stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
+            spark.readStream.schema(st.EVENTS_SCHEMA)
             .option("maxFilesPerTrigger", 1)
             .parquet(staged)
         )
@@ -277,7 +276,7 @@ def test_stateful_checkpoint_restart_recovers_state(spark, tmp_path):
 
     def run_once():
         stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
+            spark.readStream.schema(st.EVENTS_SCHEMA)
             .option("maxFilesPerTrigger", 1)
             .parquet(staged)
         )
@@ -300,11 +299,9 @@ def test_stateful_checkpoint_restart_recovers_state(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
-    from mapreducehs_spark.streaming.ops import latest_per_user
-
     final = {
         r["user_id"]: r["n_events"]
-        for r in latest_per_user(spark.read.parquet(out)).collect()
+        for r in st.latest_per_user(spark.read.parquet(out)).collect()
     }
     # 6 chunks x 3 rows: user 0 gets 2 rows/chunk (j=0,2), user 1 gets 1
     assert final == {0: 12, 1: 6}
@@ -466,7 +463,6 @@ def test_streaming_logreg_train_matches_numpy_online_replay(spark, tmp_path):
     import pandas as pd
 
     from mapreducehs_spark.operators.ml import LR_DEN, MICRO
-    from mapreducehs_spark.streaming.ops import docs_stream, streaming_logreg_train
 
     rows = [
         (i, " ".join(f"w{(i * 7 + j) % 23}" for j in range((i % 5) + 2)) + ("x" * 300 if i % 3 == 0 else ""))
@@ -485,7 +481,7 @@ def test_streaming_logreg_train_matches_numpy_online_replay(spark, tmp_path):
 
     got = {
         (int(r["step"]), int(r["bucket"])): int(r["w"])
-        for r in streaming_logreg_train(docs_stream(spark, str(replay)), n_buckets=8).collect()
+        for r in st.streaming_logreg_train(st.docs_stream(spark, str(replay)), n_buckets=8).collect()
     }
 
     # numpy replay: one step per chunk, normalized by the CHUNK size
@@ -529,12 +525,11 @@ def test_moments_stream_equals_batch_var_pop(spark):
     from pyspark.sql import functions as F
 
     from mapreducehs_spark.sources.catalog import load_table
-    from mapreducehs_spark.streaming.ops import latest_moments
 
     replay = st.prepare_stream_dir(spark, "/root/testdata/sf0.001")
     updates = st.stateful_moments(st.events_stream(spark, replay))
     log = st.run_to_batch(updates, "st20_test_sink")
-    got = {r["event_type"]: r for r in latest_moments(log).collect()}
+    got = {r["event_type"]: r for r in st.latest_moments(log).collect()}
 
     events = load_table(spark, "/root/testdata/sf0.001", "events")
     want = {
@@ -892,11 +887,9 @@ def test_state_partitions_floor_is_one_task_wave():
     """Small state gets min(8, cores) store partitions — one task wave
     on a small box, the fixed floor on a big one; large state is sized
     by volume (~64 MB per partition) whatever the core count."""
-    from mapreducehs_spark.streaming.ops import state_partitions_for
-
-    assert state_partitions_for(1 << 20, 4) == 4
-    assert state_partitions_for(1 << 20, 32) == 8
-    assert state_partitions_for(1 << 30, 4) == 16
+    assert st.state_partitions_for(1 << 20, 4) == 4
+    assert st.state_partitions_for(1 << 20, 32) == 8
+    assert st.state_partitions_for(1 << 30, 4) == 16
 
 
 def test_state_bound_counts_parquet_directory_parts(tmp_path):
@@ -907,7 +900,6 @@ def test_state_bound_counts_parquet_directory_parts(tmp_path):
 
     from mapreducehs_spark.queries.st_streaming import _state_bound
     from mapreducehs_spark.sources.catalog import table_files
-    from mapreducehs_spark.streaming.ops import state_partitions_for
     from tests.conftest import SF_DIR
 
     table = tmp_path / "events.parquet"
@@ -920,7 +912,7 @@ def test_state_bound_counts_parquet_directory_parts(tmp_path):
     assert table_files(str(tmp_path), "events") == [str(table / "part-00000.parquet")]
     assert table_files(SF_DIR, "events") == [os.path.join(SF_DIR, "events.parquet")]
     assert _state_bound(str(tmp_path)) == _state_bound(SF_DIR)
-    assert state_partitions_for(_state_bound(str(tmp_path)), 4) == state_partitions_for(
+    assert st.state_partitions_for(_state_bound(str(tmp_path)), 4) == st.state_partitions_for(
         _state_bound(SF_DIR), 4
     )
     with pytest.raises(FileNotFoundError, match="no_such_table.parquet"):

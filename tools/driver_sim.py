@@ -1,6 +1,6 @@
 """Simulate the round driver: vanilla SparkSession + DuckDB oracle compare.
 
-Run with cwd=/root/repo:  python /tmp/driver_sim.py [sf_dir]
+Run from the repository root:  python tools/driver_sim.py [sf_dir] [q1,q2,...]
 """
 import hashlib
 import os
@@ -52,7 +52,8 @@ def fresh_oracle():
     healthy oracles into phantom OOMs."""
     c = duckdb.connect()
     c.execute("SET temp_directory='/tmp/duckdb_spill'")
-    c.execute(f"SET memory_limit='{os.environ.get('DRIVER_SIM_MEM', '95GB')}'")
+    # the driver heap's rule: half the machine's physical memory, whole GiB
+    c.execute(f"SET memory_limit='{DEFAULT_DRIVER_MEM.removesuffix('g')}GiB'")
     # Bound the spill: a capacity-infeasible oracle should raise
     # promptly, not fill the box's disk first — 32 GiB is far above any
     # legitimately-green oracle's observed spill.

@@ -1,5 +1,5 @@
 """Scaling-exponent gate: per-query wall(sf1)/wall(sf0.1) over the FULL
-batch inventory (VERDICT r07 gap 3).
+inventory, batch and stream (VERDICT r07 gap 3).
 
 SCALE.md argues near-linearity per family; this makes the claim a
 committed TABLE with a GATE, so a super-linear query outside the
@@ -177,7 +177,7 @@ def adjudicate() -> None:
     still = []
     for name in flagged:
         t01, t1 = (
-            statistics.median(time_queries(spark, [name], sf_dir, 3)[name])
+            statistics.median(time_queries(spark, [name], sf_dir, 3)[0][name])
             for sf_dir in (sf01_dir, sf1_dir)
         )
         ratio = round(t1 / t01, 3) if t01 > 0 else float("inf")

@@ -1,31 +1,25 @@
-"""Streaming scaling gate: per-st-query wall AND state-store growth
-between two STREAM_BENCH detail files (VERDICT r08 gap 3 — SCALING.json
-covered the batch inventory; the streaming suite had no recorded scale
-signal, so super-linear STATE growth was unmeasured).
+"""Streaming state gate: per-st-query state-store growth between two
+``bench.py`` detail files (VERDICT r08 gap 3 — super-linear STATE
+growth was unmeasured).  The walls of the same queries are gated with
+every other query's by ``tools/scaling_gate.py``.
 
-  python tools/stream_bench.py                                  # sf0.1
-  SPARK_GRAFT_STREAM_BENCH_OUT=/tmp/stream_bench_sf1.json \
-  SPARK_GRAFT_STREAM_REPEATS=1 python tools/stream_bench.py /tmp/sf1
+  python bench.py                                   # sf0.1 -> BENCH_local.json
+  SPARK_GRAFT_SF_DIR=/tmp/sf1 SPARK_GRAFT_BENCH_REPEATS=1 \
+      SPARK_GRAFT_BENCH_OUT=/tmp/bench_sf1.json python bench.py
   python tools/stream_scaling.py [sf1_detail] [sf01_detail] [out] \
       [sf1_dir] [sf01_dir]
 
-Writes STREAM_SCALING.json with, per query:
-
-- ``wall_ratio`` — sec(sf1)/sec(sf0.1); flagged when it exceeds
-  GATE_RATIO (12x = 10x data + headroom) AND the sf1 wall is above
-  FLOOR_SEC (sub-second ratios measure the box, not the plan).  Both
-  are the batch gate's, imported from ``scaling_gate.py``.  The stream
-  suite has no calibration probe; walls here include trigger
-  scheduling overhead, so a borderline ratio should be re-measured
-  isolated before concluding anything.
-- ``state_ratio`` — peak_state_rows(sf1)/peak_state_rows(sf0.1); the
-  streaming-specific signal.  There is no single gate: BOUNDED-state
-  claims (st12's LRU, st22's Bloom shards, st25's fixed histogram,
-  st26's O(sources) offsets) must show ~1x and are flagged past
-  BOUNDED_SLACK; data-proportional states (st02 sessions, st15 band
-  buckets) legitimately track the 10x data and are flagged only past
-  GATE_RATIO.  Which law applies is declared in BOUNDED_STATE below —
-  the committed list IS the claim the gate checks.
+Reads each file's ``state`` records (``peak_state_rows``,
+``peak_state_bytes``, ``batches`` per query that ran micro-batches)
+and writes STREAM_SCALING.json with, per query, ``state_ratio`` —
+peak_state_rows(sf1)/peak_state_rows(sf0.1).  There is no single gate:
+BOUNDED-state claims (st12's LRU, st22's Bloom shards, st25's fixed
+histogram, st26's O(sources) offsets) must show ~1x and are flagged
+past BOUNDED_SLACK; data-proportional states (st02 sessions, st15 band
+buckets) legitimately track the 10x data and are flagged only past
+GATE_RATIO, the batch gate's 10x-data budget.  Which law applies is
+declared in BOUNDED_STATE below — the committed list IS the claim the
+gate checks.
 
 Reference discipline: measure, don't argue (test/Generator.hs:83-92).
 """
@@ -36,7 +30,7 @@ import json
 import os
 import sys
 
-from scaling_gate import FLOOR_SEC, GATE_RATIO  # the batch gate's wall law
+from scaling_gate import GATE_RATIO  # the batch gate's 10x-data budget
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -90,7 +84,7 @@ PER_KEY_BOUNDED = {
 #: fixed number of shard ROWS (st32: 64 version-map rows, flat by
 #: construction — numRowsTotal is a vacuous gate there) while the real
 #: state lives in per-shard arrays whose total size is O(|live keys|).
-#: Gate the state BYTES (stream_bench's peak_state_bytes, from the
+#: Gate the state BYTES (bench.py's peak_state_bytes, from the
 #: progress telemetry's memoryUsedBytes) against measured key growth.
 PER_KEY_BYTES = {
     "st32_stream_change_feed": ("orders", "o_orderkey"),
@@ -116,9 +110,9 @@ def _key_counts(sf_dir: str) -> dict[str, int]:
 
 
 def main() -> None:
-    sf1_path = sys.argv[1] if len(sys.argv) > 1 else "/tmp/stream_bench_sf1.json"
+    sf1_path = sys.argv[1] if len(sys.argv) > 1 else "/tmp/bench_sf1.json"
     sf01_path = (
-        sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, "STREAM_BENCH.json")
+        sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, "BENCH_local.json")
     )
     out_path = (
         sys.argv[3] if len(sys.argv) > 3 else os.path.join(REPO, "STREAM_SCALING.json")
@@ -128,24 +122,19 @@ def main() -> None:
     keys1, keys01 = _key_counts(sf1_dir), _key_counts(sf01_dir)
 
     with open(sf1_path) as f:
-        b1 = json.load(f)
+        q1 = json.load(f)["state"]
     with open(sf01_path) as f:
-        b01 = json.load(f)
+        q01 = json.load(f)["state"]
 
-    q1, q01 = b1["queries"], b01["queries"]
     common = sorted(set(q1) & set(q01))
     missing = sorted(set(q01) ^ set(q1))
 
     rows: dict[str, dict] = {}
-    wall_flagged: list[str] = []
     state_flagged: list[str] = []
     for name in common:
-        t01, t1 = float(q01[name]["sec"]), float(q1[name]["sec"])
         s01, s1 = int(q01[name]["peak_state_rows"]), int(q1[name]["peak_state_rows"])
-        wall_ratio = t1 / t01 if t01 > 0 else float("inf")
         state_ratio = (s1 / s01) if s01 > 0 else (float("inf") if s1 > 0 else 1.0)
         bounded = name in BOUNDED_STATE
-        wall_flag = bool(wall_ratio > GATE_RATIO and t1 >= FLOOR_SEC)
         per_key = name in PER_KEY_BOUNDED and name in keys1 and name in keys01
         per_key_skipped = name in PER_KEY_BOUNDED and not per_key
         if per_key_skipped:
@@ -168,8 +157,8 @@ def main() -> None:
         state_flag = bool(state_ratio > state_gate)
         # sharded-state BYTES gate (PER_KEY_BYTES): rows are flat by
         # construction, so the leak signal is bytes vs key growth
-        b01 = int(q01[name].get("peak_state_bytes", 0))
-        b1 = int(q1[name].get("peak_state_bytes", 0))
+        b01 = int(q01[name]["peak_state_bytes"])
+        b1 = int(q1[name]["peak_state_bytes"])
         bytes_ratio = (b1 / b01) if b01 > 0 else (float("inf") if b1 > 0 else 1.0)
         per_key_b = (
             name in PER_KEY_BYTES
@@ -191,9 +180,6 @@ def main() -> None:
             bkey_ratio = keys1[name] / max(keys01[name], 1)
             bytes_flag = bool(bytes_ratio > bkey_ratio * BOUNDED_SLACK)
         rows[name] = {
-            "sf01_sec": round(t01, 4),
-            "sf1_sec": round(t1, 4),
-            "wall_ratio": round(wall_ratio, 3),
             "sf01_state_rows": s01,
             "sf1_state_rows": s1,
             "state_ratio": round(state_ratio, 3) if state_ratio != float("inf") else None,
@@ -211,24 +197,18 @@ def main() -> None:
             "bytes_key_ratio": (
                 round(bkey_ratio, 3) if bkey_ratio is not None else None
             ),
-            "wall_flagged": wall_flag,
             "state_flagged": state_flag,
             "bytes_flagged": bytes_flag,
         }
-        if wall_flag:
-            wall_flagged.append(name)
         if state_flag or bytes_flag:
             state_flagged.append(name)
 
     out = {
-        "metric": "stream_sf1_over_sf01",
+        "metric": "stream_state_sf1_over_sf01",
         "gate_ratio": GATE_RATIO,
-        "floor_sec": FLOOR_SEC,
         "bounded_slack": BOUNDED_SLACK,
         "n_queries": len(rows),
-        "n_wall_flagged": len(wall_flagged),
         "n_state_flagged": len(state_flagged),
-        "wall_flagged": wall_flagged,
         "state_flagged": state_flagged,
         "missing_in_one_file": missing,
         "queries": rows,
@@ -240,14 +220,7 @@ def main() -> None:
         json.dumps(
             {
                 k: out[k]
-                for k in (
-                    "metric",
-                    "n_queries",
-                    "n_wall_flagged",
-                    "wall_flagged",
-                    "n_state_flagged",
-                    "state_flagged",
-                )
+                for k in ("metric", "n_queries", "n_state_flagged", "state_flagged")
             }
         )
     )
