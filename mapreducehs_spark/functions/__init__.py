@@ -1,1 +1,1 @@
-from mapreducehs_spark.functions.vector import cosine_similarity, dot_product, l2_norm, l2_normalize  # noqa: F401
+from mapreducehs_spark.functions.vector import dot_product  # noqa: F401

@@ -1,15 +1,17 @@
-"""Vector math over ``array<float>`` columns — JVM-side.
+"""JVM-side dot product over ``array<float>`` columns.
 
-Built on Spark's higher-order functions (``zip_with``, ``aggregate``).
-Caveat learned by measurement: HOFs are CodegenFallback expressions —
-they evaluate INTERPRETED, outside whole-stage codegen, ~µs per array
-element.  That is fine when a plan computes O(1) dot products per row
-(the exact top-k join), and it keeps results bit-identical to a
-sequential SQL fold (the DuckDB oracle).  Plans needing many dot
-products per row (IVF cell assignment) should use the Arrow/numpy
-kernels in ``functions/vector_np.py`` instead.  (The reference engine
-has no vector ops; these support the LLM-pipeline similarity operators
-mandated by BASELINE.json.)
+``dot_product`` folds with Spark's higher-order functions (``zip_with``,
+``aggregate``); ``operators/similarity.srp_signatures`` uses it to take
+the sign of each row's projection on a random hyperplane.  Caveat
+learned by measurement: HOFs are CodegenFallback expressions — they
+evaluate INTERPRETED, outside whole-stage codegen, ~µs per array
+element.  That is fine for O(1) dot products per row, and it keeps
+results bit-identical to a sequential SQL fold (the DuckDB oracle).
+Cosine scoring and any plan needing many dot products per row (IVF
+cell assignment) run in the Arrow/numpy kernels of
+``functions/vector_np.py`` (``cosine_udf``, ``cell_argmax_udf``).
+(The reference engine has no vector ops; these support the
+LLM-pipeline similarity operators mandated by BASELINE.json.)
 """
 
 from __future__ import annotations
@@ -25,33 +27,4 @@ def dot_product(a: Column | str, b: Column | str) -> Column:
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, x: acc + x,
-    )
-
-
-def l2_norm(a: Column | str) -> Column:
-    """Euclidean norm of a vector column (double)."""
-    a = F.col(a) if isinstance(a, str) else a
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
-    )
-
-
-def cosine_similarity(a: Column | str, b: Column | str) -> Column:
-    """Cosine similarity; 0.0 when either vector has zero norm."""
-    num = dot_product(a, b)
-    den = l2_norm(a) * l2_norm(b)
-    return F.when(den == 0.0, F.lit(0.0)).otherwise(num / den)
-
-
-def l2_normalize(a: Column | str) -> Column:
-    """Vector scaled to unit norm (zero vectors pass through).
-
-    Normalizing once before a top-k join turns cosine into a plain dot
-    product — at 100 TB that halves the per-pair arithmetic and lets the
-    norm be computed in the scan projection, once per row instead of
-    once per pair."""
-    a = F.col(a) if isinstance(a, str) else a
-    n = l2_norm(a)
-    return F.when(n == 0.0, a.cast("array<double>")).otherwise(
-        F.transform(a, lambda x: x.cast("double") / n)
     )

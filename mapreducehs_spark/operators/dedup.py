@@ -368,7 +368,7 @@ def minhash_sigs_scan_shaped(df: DataFrame) -> DataFrame:
         .filter(F.size("__toks") >= 3)
     )
     xs = F.transform(
-        shingles_of("__toks", 3),
+        shingles_of("__toks"),
         lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint") % p,
     )
     mins = F.aggregate(
@@ -607,7 +607,7 @@ def minhash_checked_signatures(
         .filter(F.size("__toks") >= 3)
     )
     shingles = (
-        staged.select("id", F.explode_outer(shingles_of("__toks", 3)).alias("s"))
+        staged.select("id", F.explode_outer(shingles_of("__toks")).alias("s"))
         .filter(F.col("s").isNotNull())
     )
     x = F.conv(F.substring(F.md5("s"), 1, 15), 16, 10).cast("bigint") % p

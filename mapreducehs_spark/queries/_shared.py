@@ -13,16 +13,17 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-def _minhash_checked_ctes() -> tuple[str, str, int]:
+def _minhash_banded_ctes() -> tuple[str, str, int]:
     """Shared CTE prefix (shingles → md5-fold ids → literal-seed
-    signatures → banding → candidate pairs) rendered from the SAME seed
-    constants the Spark operator uses
+    signatures → banding, ending at ``banded``) rendered from the SAME
+    seed constants the Spark operator uses
     (operators/dedup.minhash_check_seeds) — parity by construction.
-    Returns (cte_body, agree_expr, num_perm); d11 and d15 append
-    different tails.  CTEs read more than once (here or by a tail) are
-    ``AS MATERIALIZED``: DuckDB 1.0 otherwise inlines a CTE and
-    recomputes it at every reference (FIXTURES.md, oracle capacity
-    rules)."""
+    Returns (cte_body, agree_expr, num_perm); the caller appends its
+    candidate join (``_minhash_checked_ctes`` the self-join, d26 the
+    bipartite train/eval one) and its tail.  CTEs read more than once
+    (here or by a tail) are ``AS MATERIALIZED``: DuckDB 1.0 otherwise
+    inlines a CTE and recomputes it at every reference (FIXTURES.md,
+    oracle capacity rules)."""
     from mapreducehs_spark.operators.dedup import (
         MINHASH_CHECK_BANDS,
         MINHASH_CHECK_NUM_PERM,
@@ -59,7 +60,16 @@ def _minhash_checked_ctes() -> tuple[str, str, int]:
       FROM ids GROUP BY doc_id
     ), bandcols AS MATERIALIZED (
       SELECT doc_id, {bkeys} FROM sigs
-    ), banded AS MATERIALIZED ({unions}),
+    ), banded AS MATERIALIZED ({unions})"""
+    return ctes, agree, np_
+
+
+def _minhash_checked_ctes() -> tuple[str, str, int]:
+    """``_minhash_banded_ctes`` plus the candidate pairs ``cand``
+    (id_a < id_b sharing a band key); d11 and d15 append different
+    tails."""
+    ctes, agree, np_ = _minhash_banded_ctes()
+    ctes += """,
     cand AS MATERIALIZED (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
       FROM banded a JOIN banded b ON a.band = b.band AND a.bk = b.bk AND a.doc_id < b.doc_id

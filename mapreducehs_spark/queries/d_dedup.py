@@ -12,6 +12,7 @@ from mapreducehs_spark.queries._registry import ORACLE, query
 from mapreducehs_spark.queries._shared import (
     _d11_oracle,
     _d15_oracle,
+    _minhash_banded_ctes,
     _minhash_checked_ctes,
     _quality_losers,
     _quality_losers_ctes,
@@ -194,7 +195,7 @@ def d07_near_dedup_drop_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     (test_near_dedup_pipeline_recall)."""
     docs = _t(spark, sf_dir, "documents")
     return dedup.near_dedup_drop_list_checked(
-        docs, est_threshold=0.25, jaccard_threshold=0.6
+        docs, jaccard_threshold=0.6
     )
 
 
@@ -326,7 +327,7 @@ def d10_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     profile computed before paragraph-level dedup, with zero pairwise
     work (same scalability class as d01 exact dedup)."""
     docs = _t(spark, sf_dir, "documents")
-    return dedup.chunk_dup_stats(docs, chunk_tokens=16)
+    return dedup.chunk_dup_stats(docs)
 
 
 @query("d11_minhash_checked", oracle=_d11_oracle())
@@ -338,7 +339,7 @@ def d11_minhash_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedup.minhash_lsh_pairs_checked).  d03 runs the same
     kernel at a stricter threshold."""
     docs = _t(spark, sf_dir, "documents")
-    return dedup.minhash_lsh_pairs_checked(docs, est_threshold=0.25)
+    return dedup.minhash_lsh_pairs_checked(docs)
 
 
 def _d12_oracle(max_hamming: int = 2) -> str:
@@ -388,7 +389,7 @@ def d12_simhash_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     same kernel at hamming <= 3."""
     docs = _t(spark, sf_dir, "documents")
     with materialize(spark) as m:
-        return dedup.simhash_checked(m, docs, max_hamming=2)
+        return dedup.simhash_checked(m, docs)
 
 
 @query("d15_near_dedup_checked", oracle=_d15_oracle())
@@ -403,7 +404,7 @@ def d15_near_dedup_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     against DuckDB's recursive-CTE replay."""
     docs = _t(spark, sf_dir, "documents")
     return dedup.near_dedup_drop_list_checked(
-        docs, est_threshold=0.25, jaccard_threshold=0.5
+        docs
     )
 
 
@@ -507,7 +508,7 @@ def d13_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     with materialize(spark) as m:
-        ex = m.persist(hashed_shingle_rows(docs, 3))
+        ex = m.persist(hashed_shingle_rows(docs))
         a = ex.select(
             F.col("id").alias("id_small"), F.col("set_size").alias("size_small"), "shingle"
         )
@@ -960,7 +961,7 @@ def d21_star_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel's small-graph union-find and distributed star regimes are
     pinned against each other in tests."""
     docs = _t(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_pairs_checked(docs, est_threshold=0.25).select(
+    pairs = dedup.minhash_lsh_pairs_checked(docs).select(
         "id_a", "id_b"
     )
     return dedup.connected_components_star(pairs)
@@ -1026,7 +1027,7 @@ def d22_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel — pairs never cross clusters, so cost is sum(|cluster|^2)
     with k scaling ~ n at 100 TB (operators/dedup.semantic_dedup)."""
     emb = _t(spark, sf_dir, "embeddings")
-    return dedup.semantic_dedup(emb, n_clusters=32, tau_num=2, tau_den=5)
+    return dedup.semantic_dedup(emb)
 
 
 def _d23_oracle() -> str:
@@ -1076,7 +1077,7 @@ def d23_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     observed test-set leakage motivation)."""
     docs = _t(spark, sf_dir, "documents")
     drop = dedup.near_dedup_drop_list_checked(
-        docs, est_threshold=0.25, jaccard_threshold=0.6
+        docs, jaccard_threshold=0.6
     )
     rep = F.coalesce(F.col("rep_id"), F.col("doc_id"))
     bucket = (
@@ -1308,48 +1309,14 @@ def d25_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _d26_oracle() -> str:
     """Bipartite checked-MinHash decontamination oracle: the d11 CTE
-    law (shingles → md5-fold ids → literal-seed signatures → banding)
-    over ALL documents, split train/eval at candidate time, with d26's
-    per-train-doc best-match tail.  ``threshold`` must be dyadic
-    (k/16) so both engines compare identically."""
-    from mapreducehs_spark.operators.dedup import (
-        MINHASH_CHECK_BANDS,
-        MINHASH_CHECK_NUM_PERM,
-        minhash_check_seeds,
-    )
-
-    a, b = minhash_check_seeds()
-    np_, nb = MINHASH_CHECK_NUM_PERM, MINHASH_CHECK_BANDS
-    rows = np_ // nb
-    mins = ",\n             ".join(
-        f"min(({a[i]}*x + {b[i]}) % 2147483647) AS m{i}" for i in range(np_)
-    )
-    bkeys = ", ".join(
-        "concat_ws('_', "
-        + ", ".join(f"m{bi * rows + r}" for r in range(rows))
-        + f") AS bk{bi}"
-        for bi in range(nb)
-    )
-    unions = " UNION ALL ".join(
-        f"SELECT doc_id, {bi} AS band, bk{bi} AS bk FROM bandcols" for bi in range(nb)
-    )
-    agree = " + ".join(f"CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END" for i in range(np_))
+    law (``_minhash_banded_ctes``: shingles → md5-fold ids →
+    literal-seed signatures → banding) over ALL documents, split
+    train/eval at candidate time, with d26's per-train-doc best-match
+    tail.  The 0.25 threshold is dyadic (k/16) so both engines compare
+    identically."""
+    ctes, agree, np_ = _minhash_banded_ctes()
     return f"""
-    WITH toks AS (
-      SELECT doc_id, list_filter(regexp_split_to_array(text, '\\s+'), x -> x != '') AS t
-      FROM documents
-    ), pos AS (
-      SELECT doc_id, t, unnest(range(1, greatest(len(t) - 2, 0) + 1)) AS i FROM toks
-    ), sh AS (
-      SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s FROM pos
-    ), ids AS (
-      SELECT doc_id, ('0x' || substr(md5(s), 1, 15))::BIGINT % 2147483647 AS x FROM sh
-    ), sigs AS (
-      SELECT doc_id, {mins}
-      FROM ids GROUP BY doc_id
-    ), bandcols AS (
-      SELECT doc_id, {bkeys} FROM sigs
-    ), banded AS ({unions}),
+    WITH {ctes},
     cand AS (
       SELECT DISTINCT t.doc_id AS id, e.doc_id AS eval_id
       FROM banded t JOIN banded e ON t.band = e.band AND t.bk = e.bk
@@ -1407,7 +1374,7 @@ def d26_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT id_a, id_b FROM (""" + ORACLE["d02_ngram_jaccard_pairs"] + """
       ) WHERE jaccard >= 0.5
     ), lsh AS MATERIALIZED (
-      SELECT id_a, id_b FROM (""" + _d11_oracle(threshold=0.25) + """
+      SELECT id_a, id_b FROM (""" + _d11_oracle() + """
       )
     ), hit AS (
       SELECT count(*) AS n FROM truth JOIN lsh USING (id_a, id_b)
@@ -1438,7 +1405,7 @@ def d27_lsh_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth arm's shingle equi-join is the same never-all-pairs plan d02
     pins."""
     docs = _t(spark, sf_dir, "documents")
-    lsh = dedup.minhash_lsh_pairs_checked(docs, est_threshold=0.25).select("id_a", "id_b")
+    lsh = dedup.minhash_lsh_pairs_checked(docs).select("id_a", "id_b")
     # ONE action for all three counts (round 12, guide §2.6): the old
     # three-count form (truth.count(), lsh.count(), join().count()) ran
     # three jobs, and the third recomputed BOTH arms from the scan —
@@ -1651,7 +1618,7 @@ def d29_dedup_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     with both laws already value-checked."""
     docs = _t(spark, sf_dir, "documents")
     drop = dedup.near_dedup_drop_list_checked(
-        docs, est_threshold=0.25, jaccard_threshold=0.6
+        docs, jaccard_threshold=0.6
     ).select("doc_id", "rep_id")
     sizes = drop.groupBy("rep_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("members")

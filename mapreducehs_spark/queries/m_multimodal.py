@@ -156,7 +156,7 @@ def m06_image_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    payloads = render_pgm_payloads(docs, width=32, height=16)
+    payloads = render_pgm_payloads(docs)
     return decoded_image_stats(payloads).withColumnRenamed("id", "doc_id")
 
 
@@ -281,7 +281,7 @@ def m08_image_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    payloads = render_pgm_payloads(docs, width=32, height=16)
+    payloads = render_pgm_payloads(docs)
     return resized_image_stats(payloads).withColumnRenamed("id", "doc_id")
 
 
@@ -472,7 +472,7 @@ def m11_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducehs_spark.operators.multimodal import ahash_64, render_pgm_payloads
 
     docs = _t(spark, sf_dir, "documents")
-    payloads = render_pgm_payloads(docs, width=32, height=16)
+    payloads = render_pgm_payloads(docs)
     return dedup.hash64_canonical_dedup(ahash_64(payloads))
 
 
@@ -703,11 +703,11 @@ def m14_crossmodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducehs_spark.operators.multimodal import ahash_64, render_pgm_payloads
 
     docs = _t(spark, sf_dir, "documents")
-    payloads = render_pgm_payloads(docs, width=32, height=16)
+    payloads = render_pgm_payloads(docs)
     with materialize(spark) as m:
         img = dedup.hash64_duplicate_edges(m, ahash_64(payloads))
         txt = dedup.near_dedup_verified_edges_checked(
-            m, docs, est_threshold=0.25, jaccard_threshold=0.6
+            m, docs, jaccard_threshold=0.6
         )
         # ONE action (the closure's regime-picking count) materializes both
         # lazy arms; their internal caches are freed once it returns
@@ -771,7 +771,7 @@ def m15_alignment_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducehs_spark.operators.multimodal import ahash_64, render_pgm_payloads
 
     docs = _t(spark, sf_dir, "documents")
-    payloads = render_pgm_payloads(docs, width=32, height=16)
+    payloads = render_pgm_payloads(docs)
     with materialize(spark) as m:
         ih = m.result(ahash_64(payloads))
     pairs = docs.select(
@@ -1009,7 +1009,7 @@ def _m18_build(m: Materialization, sf_dir: str) -> DataFrame:
             + F.lit(2)
         ).alias("w"),
     )
-    starts = grouped_prefix_sums(m, keyed, ["source"], ["doc_id"], "w", out_col="start")
+    starts = grouped_prefix_sums(m, keyed, ["source"], ["doc_id"], "w")
     return _pack_sequences(starts, ["source"], _M18_CTX, "n_pairs")
 
 

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from mapreducehs_spark.operators import text
 from mapreducehs_spark.operators import sampling as _sampling
 from mapreducehs_spark.operators.iteration import Materialization, materialize
+from mapreducehs_spark.session import scoped_confs
 
 from mapreducehs_spark.queries._registry import query
 from mapreducehs_spark.queries._shared import (
@@ -562,7 +563,7 @@ def q71_mg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     vocab = terms.select("term").distinct().count()  # scalar to the driver
     return mg_topk_per_group(
-        terms, group_col="lang", term_col="term", capacity=max(64, vocab), k=5
+        terms, group_col="lang", term_col="term", capacity=max(64, vocab)
     )
 
 
@@ -1318,7 +1319,7 @@ def q85_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_orderkey", "l_shipdate")
     )
     orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    joined = salted_join(li, orders, "l_orderkey", "o_orderkey", n_salts=16)
+    joined = salted_join(li, orders, "l_orderkey", "o_orderkey")
     return joined.groupBy(
         "o_orderpriority",
         (F.col("l_shipdate").cast("long") / 86400).cast("long").alias("ship_day"),
@@ -1417,15 +1418,6 @@ def q92_bloom_prune_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     is under the production-sized defaults) and the physical plan
     forced while they hold; results are plan-independent and the oracle
     checks the plain join.  Plan pinned in test_q92_bloom_filter."""
-    conf = spark.conf
-    saved = {
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": conf.get(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
-        ),
-        "spark.sql.autoBroadcastJoinThreshold": conf.get(
-            "spark.sql.autoBroadcastJoinThreshold"
-        ),
-    }
     orders = (
         _t(spark, sf_dir, "orders")
         .filter((F.col("o_orderpriority") == "1-URGENT") & (F.col("o_totalprice") > 150000))
@@ -1440,19 +1432,16 @@ def q92_bloom_prune_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.round(F.col("l_extendedprice") * 100, 0).cast("bigint")).alias("cents"),
         )
     )
-    try:
-        conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0"
-        )
-        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    confs = {
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
+    with scoped_confs(spark, confs):
         # force logical optimization + physical planning NOW (both are
         # lazily cached on this Dataset), so the bloom filter is baked
         # into the plan the caller's action will execute even after the
-        # session confs are restored below
+        # session confs are restored on exit
         out._jdf.queryExecution().executedPlan()
-    finally:
-        for k, v in saved.items():
-            conf.set(k, v)
     return out
 
 
@@ -3020,7 +3009,7 @@ def q113_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def score(order_cols, name):
             ranked = global_positions(
-                m, per_user.select("user_id", *order_cols), order_cols + ["user_id"], "pos"
+                m, per_user.select("user_id", *order_cols), order_cols + ["user_id"]
             )
             return ranked.select(
                 "user_id", tile(F.col("pos")).cast("int").alias(name)
@@ -4080,6 +4069,14 @@ _Q126_ORACLE = """
 """
 
 
+#: The session confs under which a read resolves parquet columns by
+#: field id (q126's batch read, st35's stream).
+FIELD_ID_READ_CONFS = {
+    "spark.sql.parquet.fieldId.read.enabled": "true",
+    "spark.sql.parquet.fieldId.read.ignoreMissing": "true",
+}
+
+
 def _q126_fixture(spark: SparkSession, sf_dir: str):
     """q126's two-generation field-id fixture as the ONE seam helper
     (st35 streams the same directory): builds gen1 (k/status/cents
@@ -4218,24 +4215,11 @@ def q126_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     read round trip end to end.  The fieldId read confs are set only
     around the materialization (the result checkpoint) so the session
     is left untouched."""
-    confs = {
-        "spark.sql.parquet.fieldId.read.enabled": "true",
-        "spark.sql.parquet.fieldId.read.ignoreMissing": "true",
-    }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        # the field-id scan confs must be live when the scan RUNS, not
-        # just when the plan is built — materialize before restoring
+    # the field-id scan confs must be live when the scan RUNS, not
+    # just when the plan is built — materialize before restoring
+    with scoped_confs(spark, FIELD_ID_READ_CONFS):
         with materialize(spark) as m:
             return m.result(_q126_build(spark, sf_dir))
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 # =========================================================================

@@ -42,7 +42,7 @@ def s01_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force cosine top-5 for 8 probe vectors: broadcast the
     probes, JVM-side zip_with/aggregate dot products, window top-k."""
     emb = _t(spark, sf_dir, "embeddings")
-    return similarity.cosine_topk(emb, emb.filter(F.col("vec_id") < 8), k=5)
+    return similarity.cosine_topk(emb, emb.filter(F.col("vec_id") < 8))
 
 
 def _seeded_centroids(emb: DataFrame):
@@ -85,7 +85,6 @@ def s02_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ivf_topk(
         emb.filter(F.col("vec_id") >= 8),
         emb.filter(F.col("vec_id") < 8),
-        k=5,
         n_probe=2,
         centroids=_seeded_centroids(emb),
     )
@@ -104,8 +103,6 @@ def s04_ann_srp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.srp_topk(
         emb.filter(F.col("vec_id") >= 8),
         emb.filter(F.col("vec_id") < 8),
-        k=5,
-        bands=4,
         planes=_seeded_planes(emb),
     )
 
@@ -184,7 +181,7 @@ def s05_kmeans_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducehs_spark.operators.similarity import kmeans_profile
 
     emb = _t(spark, sf_dir, "embeddings")
-    out = kmeans_profile(emb, k=8)
+    out = kmeans_profile(emb)
     return out.withColumn("avg_sqdist", F.round(F.col("avg_sqdist"), 4))
 
 
@@ -233,7 +230,7 @@ def _ivf_checked_oracle(n_probe: int = 4) -> str:
     """
 
 
-@query("s06_ann_ivf_checked", oracle=_ivf_checked_oracle(4))
+@query("s06_ann_ivf_checked", oracle=_ivf_checked_oracle())
 def s06_ann_ivf_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN top-k with a DATA-SEEDED codebook (the 16 lowest-vec_id
     vectors as cell centroids) so the whole pipeline — cell assignment
@@ -247,8 +244,6 @@ def s06_ann_ivf_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ivf_topk(
         emb.filter(F.col("vec_id") >= 8),
         emb.filter(F.col("vec_id") < 8),
-        k=5,
-        n_probe=4,
         centroids=_seeded_centroids(emb),
     )
 
@@ -318,8 +313,6 @@ def s07_ann_srp_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.srp_topk(
         emb.filter(F.col("vec_id") >= 8),
         emb.filter(F.col("vec_id") < 8),
-        k=5,
-        bands=4,
         planes=_seeded_planes(emb),
     )
 
@@ -374,7 +367,7 @@ def s08_quantized_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring bit-for-bit — this is the checked twin discipline (d11/s06)
     applied to vector quantization."""
     emb = _t(spark, sf_dir, "embeddings")
-    return similarity.quantized_cosine_topk(emb, emb.filter(F.col("vec_id") < 8), k=5)
+    return similarity.quantized_cosine_topk(emb, emb.filter(F.col("vec_id") < 8))
 
 
 @query(
@@ -754,9 +747,9 @@ def s13_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.filter(F.col("vec_id") >= 8)
     queries_df = emb.filter(F.col("vec_id") < 8)
     approx = similarity.ivf_topk(
-        corpus, queries_df, k=5, n_probe=4, centroids=cents
+        corpus, queries_df, centroids=cents
     ).select("query_id", "match_id", F.lit(1).alias("__hit"))
-    exact = similarity.cosine_topk(corpus, queries_df, k=5).select(
+    exact = similarity.cosine_topk(corpus, queries_df).select(
         "query_id", "match_id"
     )
     return (
@@ -1003,7 +996,7 @@ def _s15_oracle() -> str:
     ) WHERE rank <= 5
     """
     arms = {
-        "ivf": _ivf_checked_oracle(n_probe=4),
+        "ivf": _ivf_checked_oracle(),
         "srp": _srp_checked_oracle(),
         "pq": _S14_ORACLE,
         "ivfpq": _S16_ORACLE,
@@ -1050,7 +1043,7 @@ def s15_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     corpus = emb.filter(F.col("vec_id") >= 8)
     probes = emb.filter(F.col("vec_id") < 8)
-    exact = similarity.cosine_topk(corpus, probes, k=5).select(
+    exact = similarity.cosine_topk(corpus, probes).select(
         "query_id", "match_id"
     )
     arms = {
@@ -1680,7 +1673,6 @@ def s21_filtered_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = similarity.ivf_candidates(
         emb.filter(F.col("vec_id") >= 8),
         emb.filter(F.col("vec_id") < 8),
-        n_probe=4,
         centroids=_seeded_centroids(emb),
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -1966,10 +1958,10 @@ def s24_quantization_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (src/Core/MapReduceC.hs:24-26, test/Generator.hs:83-92)."""
     emb = _t(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 8)
-    approx = similarity.quantized_cosine_topk(emb, queries_df, k=5).select(
+    approx = similarity.quantized_cosine_topk(emb, queries_df).select(
         "query_id", "match_id", F.col("rank").alias("arank")
     )
-    exact = similarity.cosine_topk(emb, queries_df, k=5).select(
+    exact = similarity.cosine_topk(emb, queries_df).select(
         "query_id", "match_id", F.col("rank").alias("xrank")
     )
     return (
@@ -2062,14 +2054,14 @@ def s25_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (src/Core/MapReduceC.hs:24-26, test/Generator.hs:83-92)."""
     emb = _t(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 8)
-    exact = similarity.cosine_topk(emb, queries_df, k=5).select(
+    exact = similarity.cosine_topk(emb, queries_df).select(
         "query_id", "match_id", F.col("rank").alias("xrank")
     )
     reports = []
     for d in (8, 16, 32):
         tq = queries_df.select("vec_id", F.slice("embedding", 1, d).alias("embedding"))
         tc = emb.select("vec_id", F.slice("embedding", 1, d).alias("embedding"))
-        trunc = similarity.cosine_topk(tc, tq, k=5).select(
+        trunc = similarity.cosine_topk(tc, tq).select(
             "query_id", "match_id", F.col("rank").alias("arank")
         )
         reports.append(

@@ -10,7 +10,8 @@ from pyspark.sql import functions as F
 import mapreducehs_spark.streaming.ops as st
 from mapreducehs_spark.operators import dedup, text
 from mapreducehs_spark.operators.iteration import materialize
-from mapreducehs_spark.sources.catalog import FIXTURE_ROOT, table_files
+from mapreducehs_spark.session import scoped_confs
+from mapreducehs_spark.sources.catalog import scratch_dir, table_files
 
 from mapreducehs_spark.queries._registry import ORACLE, query
 from mapreducehs_spark.queries._shared import (
@@ -23,6 +24,7 @@ from mapreducehs_spark.queries._shared import (
     _t,
 )
 from mapreducehs_spark.queries.q_ext import (
+    FIELD_ID_READ_CONFS,
     q91_scd2_dimension,
 )
 from mapreducehs_spark.queries.t_text import _T40_CTX
@@ -36,8 +38,7 @@ from mapreducehs_spark.queries.t_text import _T40_CTX
 # =========================================================================
 
 def _replayed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    replay = st.prepare_stream_dir(spark, sf_dir)
-    return st.events_stream(spark, replay)
+    return st.replay_stream(spark, st.prepare_stream_dir(spark, sf_dir), st.EVENTS_SCHEMA)
 
 
 def _state_bound(sf_dir: str, table: str = "events") -> int:
@@ -70,7 +71,7 @@ def _state_bound(sf_dir: str, table: str = "events") -> int:
 def st01_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming watermarked tumbling-window agg == the batch aggregate
     (no late data by replay construction — differential vs DuckDB)."""
-    agg = st.tumbling_aggregate(_replayed_events(spark, sf_dir), watermark="30 minutes")
+    agg = st.tumbling_aggregate(_replayed_events(spark, sf_dir))
     out = st.run_to_batch(agg, "st01_sink", state_bytes=_state_bound(sf_dir))
     # sentinel dropped from the BATCH result (an in-stream filter on a
     # group key would be pushed below the watermark; see streaming/ops.py)
@@ -279,7 +280,7 @@ def st08_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline (watermark evicts closed windows) is what keeps an
     always-on aggregation's state finite."""
     replay = st.prepare_late_stream_dir(spark, sf_dir)
-    events = st.events_stream(spark, replay)
+    events = st.replay_stream(spark, replay, st.EVENTS_SCHEMA)
     agg = st.tumbling_aggregate(events, watermark="2233 seconds")
     out = st.run_to_batch(agg, "st08_sink", state_bytes=_state_bound(sf_dir))
     return out.filter(F.col("event_type") != "__flush__")
@@ -361,8 +362,7 @@ def st10_stream_upsert_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from mapreducehs_spark.operators.merge import merge_upsert
 
-    replay = st.prepare_stream_dir(spark, sf_dir)
-    events = st.events_stream(spark, replay)
+    events = _replayed_events(spark, sf_dir)
     cents = F.round(F.col("value") * 100, 0).cast("bigint")
     agg = (
         events.filter(F.col("event_type") != st.FLUSH_TYPE)
@@ -370,37 +370,29 @@ def st10_stream_upsert_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum(cents).alias("cents"))
     )
 
-    serving = os.path.join(
-        FIXTURE_ROOT,
-        f"mapreducehs_serving_{os.path.basename(os.path.normpath(sf_dir))}_{os.getpid()}",
-    )
-    shutil.rmtree(serving, ignore_errors=True)
+    with scratch_dir("serving", sf_dir) as serving:
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        if os.path.exists(serving):
-            base = sp.read.parquet(serving)
-            merged = merge_upsert(base, batch_df, keys=["user_id"])
-        else:
-            merged = batch_df
-        # rewrite via a temp dir: the merge READS the current serving
-        # table, and overwriting a path being read is undefined
-        tmp = serving + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(serving):
-            shutil.rmtree(serving)
-        os.rename(tmp, serving)
+        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+            sp = batch_df.sparkSession
+            if os.path.exists(serving):
+                base = sp.read.parquet(serving)
+                merged = merge_upsert(base, batch_df, keys=["user_id"])
+            else:
+                merged = batch_df
+            # rewrite via a temp dir: the merge READS the current serving
+            # table, and overwriting a path being read is undefined
+            tmp = serving + ".tmp"
+            merged.write.mode("overwrite").parquet(tmp)
+            if os.path.exists(serving):
+                shutil.rmtree(serving)
+            os.rename(tmp, serving)
 
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout=600):
-        q.stop()
-        raise TimeoutError("st10 stream did not finish")
-    try:
+        st.drain(
+            agg.writeStream.outputMode("update")
+            .foreachBatch(apply_batch)
+            .trigger(availableNow=True)
+            .start()
+        )
         with materialize(spark) as m:
             return m.result(
                 spark.read.parquet(serving).select(
@@ -409,8 +401,6 @@ def st10_stream_upsert_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.round(F.col("cents") / 100.0, 4).alias("sum_value"),
                 )
             )
-    finally:
-        shutil.rmtree(serving, ignore_errors=True)
 
 
 @query(
@@ -529,7 +519,7 @@ def st14_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     appear exactly once).  At 100 TB state stays bounded by the join
     window exactly as in the inner case."""
     replay = st.prepare_stream_dir(spark, sf_dir, n_flush=2)
-    joined = st.clicks_left_outer_purchases(st.events_stream(spark, replay))
+    joined = st.clicks_left_outer_purchases(st.replay_stream(spark, replay, st.EVENTS_SCHEMA))
     # same state-volume-derived partition count as st05 (four state
     # stores per partition; fixed per-instance commit cost per batch)
     out = st.run_to_batch(joined, "st14_sink", state_bytes=_state_bound(sf_dir))
@@ -538,7 +528,7 @@ def st14_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _replayed_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay = st.prepare_docs_stream_dir(spark, sf_dir)
-    return st.docs_stream(spark, replay)
+    return st.replay_stream(spark, replay, st.DOCS_STREAM_SCHEMA)
 
 
 @query("st15_stream_minhash_dedup", oracle=_d11_oracle())
@@ -556,7 +546,7 @@ def st15_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     run the stream in its exact regime, value-check against batch).
     Bounded-state behavior itself is pinned separately with a short TTL
     in tests/test_streaming.py."""
-    pairs = st.stateful_minhash_dedup(_replayed_docs(spark, sf_dir), ttl_sec=10**9)
+    pairs = st.stateful_minhash_dedup(_replayed_docs(spark, sf_dir))
     # st15 keeps the parallelism-driven partition default: unlike the
     # state-commit-bound topologies, its per-batch work is the Arrow
     # MinHash signature kernel (CPU-bound Python) — A/B at sf0.1 read
@@ -830,7 +820,7 @@ def st22_stream_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     of its 4 bits was unset strictly before its own first occurrence.
     Value-checks the bounded-state operator INCLUDING its false
     positives — not just the happy path."""
-    out = st.stateful_bloom_dedup(_replayed_events(spark, sf_dir), shards=8)
+    out = st.stateful_bloom_dedup(_replayed_events(spark, sf_dir))
     return st.run_to_batch(out, "st22_sink", state_bytes=_state_bound(sf_dir))
 
 
@@ -1233,8 +1223,9 @@ def st31_stream_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ⇒ retraction + insertion into the shifted month — the
     Gupta–Mumick counting method, q122's exact law in integer cents)
     pre-aggregates within the batch and folds into the stored rollup
-    by a group-keyed union + re-aggregate (st10's MERGE-INTO pattern
-    on plain parquet).  Signed-delta sums are ORDER-FREE, so trigger
+    by a group-keyed union + re-aggregate (``st.fold_into_table``,
+    st36's fold too: a retried batch is skipped by the in-dir batch-id
+    marker).  Signed-delta sums are ORDER-FREE, so trigger
     slicing is free — any chunking of the CDC log folds to the same
     state, and q122's own batch oracle value-checks the final table
     verbatim (the st16/st26 stream == batch discipline).
@@ -1248,72 +1239,21 @@ def st31_stream_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     out at the final n > 0 read — q122's tombstone rule applied at
     serving time.  At 100 TB/day the same body merges into a
     Delta/Iceberg MV; only the sink changes."""
-    import os
     import shutil
 
     base_mv, replay = st.prepare_cdc_mv_dir(spark, sf_dir)
-    serving = os.path.join(
-        FIXTURE_ROOT,
-        f"mapreducehs_mv_{os.path.basename(os.path.normpath(sf_dir))}_{os.getpid()}",
-    )
-    shutil.rmtree(serving, ignore_errors=True)
-    shutil.copytree(base_mv, serving)
 
-    cdc = (
-        spark.readStream.schema(st.CDC_MV_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay)
-    )
-
-    def last_applied() -> int:
-        marker = os.path.join(serving, "_last_batch_id")
-        if os.path.exists(marker):
-            with open(marker) as fh:
-                return int(fh.read().strip())
-        return -1
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch is at-least-once: a retried micro-batch must
-        # not double-apply signed deltas.  The last applied batch_id
-        # travels INSIDE the atomically-renamed serving dir (an
-        # underscore file, invisible to the parquet reader), so data
-        # and watermark can never disagree — the MERGE-INTO
-        # idempotency rule the docstring invokes.
-        if batch_id <= last_applied():
-            return
-        sp = batch_df.sparkSession
-        deltas = batch_df.groupBy("month").agg(
+    def deltas(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy("month").agg(
             F.sum("dn").cast("bigint").alias("n"),
             F.sum("dcents").cast("bigint").alias("cents"),
         )
-        merged = (
-            sp.read.parquet(serving)
-            .unionByName(deltas)
-            .groupBy("month")
-            .agg(
-                F.sum("n").cast("bigint").alias("n"),
-                F.sum("cents").cast("bigint").alias("cents"),
-            )
-        )
-        tmp = serving + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, "_last_batch_id"), "w") as fh:
-            fh.write(str(batch_id))
-        shutil.rmtree(serving)
-        os.rename(tmp, serving)
 
-    q = (
-        cdc.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(timeout=600):
-            raise TimeoutError("st31 stream did not finish")
-    finally:
-        q.stop()
-    final = spark.read.parquet(serving).filter(F.col("n") > 0)
-    try:
+    with scratch_dir("mv", sf_dir) as serving:
+        shutil.copytree(base_mv, serving)
+        cdc = st.replay_stream(spark, replay, st.CDC_MV_SCHEMA)
+        st.fold_into_table(cdc, serving, deltas, "month")
+        final = spark.read.parquet(serving).filter(F.col("n") > 0)
         with materialize(spark) as m:
             return m.result(
                 final.select(
@@ -1326,8 +1266,6 @@ def st31_stream_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ).alias("total_exact"),
                 )
             )
-    finally:
-        shutil.rmtree(serving, ignore_errors=True)
 
 
 @query("st32_stream_change_feed", oracle=ORACLE["q124_change_data_feed"])
@@ -1353,12 +1291,7 @@ def st32_stream_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     same body reads a Kafka compacted topic; only the source line
     changes."""
     replay = st.prepare_cdc_log_dir(spark, sf_dir)
-    log = (
-        spark.readStream.schema(st.CDC_LOG_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay)
-    )
-    images = st.stateful_cdc_images(log)
+    images = st.stateful_cdc_images(st.replay_stream(spark, replay, st.CDC_LOG_SCHEMA))
     return st.run_to_batch(images, "st32_sink")
 
 
@@ -1396,11 +1329,8 @@ def st33_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("embedding", ArrayType(DoubleType())),
         ]
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay)
-        .select("vec_id", assign(F.col("embedding")).alias("cell"))
+    stream = st.replay_stream(spark, replay, schema).select(
+        "vec_id", assign(F.col("embedding")).alias("cell")
     )
     log = st.run_to_batch(stream, "st33_sink")
     base = emb.filter(F.col("vec_id") >= 8).select(
@@ -1509,11 +1439,8 @@ def _st35_stream(spark: SparkSession, sf_dir: str):
     from mapreducehs_spark.queries.q_ext import _q126_fixture
 
     base, canonical = _q126_fixture(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(canonical)
-        .option("maxFilesPerTrigger", "1")  # heterogeneous files arrive
-        .parquet(os.path.join(base, "gen*"))  # one micro-batch at a time
-    )
+    # heterogeneous files arrive one micro-batch at a time
+    stream = st.replay_stream(spark, os.path.join(base, "gen*"), canonical)
     return stream.select(
         "*",
         F.regexp_extract(
@@ -1522,7 +1449,7 @@ def _st35_stream(spark: SparkSession, sf_dir: str):
     )
 
 
-@query("st35_stream_schema_evolution", oracle=None)
+@query("st35_stream_schema_evolution")
 def st35_stream_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING SCHEMA-EVOLUTION READ — q126's field-id contract at
     INGEST, closing the lakehouse x streaming matrix: a continuous
@@ -1545,16 +1472,9 @@ def st35_stream_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     the generation split bit-for-bit.  Reference witness: O12
     pluggable-store read path (src/Core/Store.hs) + O1 stateless
     per-record kernel (src/Core/MapReduceC.hs:24)."""
-    confs = {
-        "spark.sql.parquet.fieldId.read.enabled": "true",
-        "spark.sql.parquet.fieldId.read.ignoreMissing": "true",
-    }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        # the id-resolved scans run inside the stream's micro-batches —
-        # the confs must be live until the sink is fully drained
+    # the id-resolved scans run inside the stream's micro-batches —
+    # the confs must be live until the sink is fully drained
+    with scoped_confs(spark, FIELD_ID_READ_CONFS):
         log = st.run_to_batch(_st35_stream(spark, sf_dir), "st35_sink")
         with materialize(spark) as m:
             return m.result(
@@ -1564,12 +1484,6 @@ def st35_stream_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.count("channel").cast("bigint").alias("n_with_channel"),
                 )
             )
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 # st35 value-checks against q126's batch oracle verbatim — the streamed
@@ -1608,9 +1522,9 @@ def st36_stream_compaction_monitor(spark: SparkSession, sf_dir: str) -> DataFram
     chunked one commit batch per trigger) folds per-table-partition
     small-file counters incrementally — each micro-batch partial-
     aggregates to <= O(partitions) rows and merges into a stored
-    monitor table by keyed re-aggregate (st31's foreachBatch MERGE
-    pattern, idempotent via the in-dir batch-id marker) — and the
-    served readout flags every partition whose small-file count has
+    monitor table by keyed re-aggregate (``st.fold_into_table``,
+    st31's fold too, idempotent via the in-dir batch-id marker) — and
+    the served readout flags every partition whose small-file count has
     crossed the auto-compaction threshold, exactly what Delta-style
     auto-compaction evaluates after each commit.
 
@@ -1624,22 +1538,11 @@ def st36_stream_compaction_monitor(spark: SparkSession, sf_dir: str) -> DataFram
     log; only the source line changes.  Reference witness: O2 keyed
     reducer fold (src/Core/MapReduceC.hs:25) + O12 store
     (src/Core/Store.hs)."""
-    import os
-    import shutil
-
     replay = st.prepare_manifest_dir(spark, sf_dir)
-    monitor = os.path.join(
-        FIXTURE_ROOT,
-        f"mapreducehs_monitor_{os.path.basename(os.path.normpath(sf_dir))}_{os.getpid()}",
-    )
-    shutil.rmtree(monitor, ignore_errors=True)
-    # the fold body (batch-local partial agg + keyed monitor merge +
-    # in-dir batch-id idempotency marker) is the shared
-    # `manifest_monitor_fold` seam — the checkpoint-restart pytest
-    # exercises the same code path this query runs
-    st.manifest_monitor_fold(spark, replay, monitor, _ST36_SMALL_BYTES)
-    final = spark.read.parquet(monitor)
-    try:
+    with scratch_dir("monitor", sf_dir) as monitor:
+        # the same fold the checkpoint-restart tests drive
+        st.manifest_monitor_fold(spark, replay, monitor, _ST36_SMALL_BYTES)
+        final = spark.read.parquet(monitor)
         with materialize(spark) as m:
             return m.result(
                 final.select(
@@ -1651,5 +1554,3 @@ def st36_stream_compaction_monitor(spark: SparkSession, sf_dir: str) -> DataFram
                     (F.col("n_small") >= _ST36_FIRE_N).cast("bigint").alias("fires"),
                 )
             )
-    finally:
-        shutil.rmtree(monitor, ignore_errors=True)

@@ -516,7 +516,7 @@ def t13_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     list.  One explode of per-doc DISTINCT grams + one hash agg + a
     total-ordered global top-k."""
     docs = _t(spark, sf_dir, "documents")
-    return text.boilerplate_ngrams(docs, n=3, min_doc_frac=0.01, top_k=20)
+    return text.boilerplate_ngrams(docs, n=3, min_doc_frac=0.01)
 
 
 @query(
@@ -890,7 +890,7 @@ def t18_bpe_merge_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole loop is value-checked: the oracle unrolls the same three
     iterations (see _t18_oracle for the shared merge semantics)."""
     docs = _t(spark, sf_dir, "documents")
-    steps = text.bpe_merge_steps(docs, iters=3)
+    steps = text.bpe_merge_steps(docs)
     return spark.createDataFrame(
         steps, "iter int, pair_a string, pair_b string, pair_count bigint, vocab_after bigint"
     )
@@ -1193,7 +1193,7 @@ def _t22_syms(docs: DataFrame) -> Column:
     ``_t22_merge_ctes``, shared by t22 and t48."""
     merges = [
         (a, b)
-        for _, a, b, _, _ in text.bpe_merge_steps(docs, iters=3, with_vocab=False)
+        for _, a, b, _, _ in text.bpe_merge_steps(docs, with_vocab=False)
     ]
     s = F.concat(F.lit(" "), F.concat_ws(" ", text.tokens("text")), F.lit(" "))
     for a, b in merges:
@@ -1665,7 +1665,7 @@ def t28_logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducehs_spark.operators.ml import logreg_train_hashed
 
     docs = _t(spark, sf_dir, "documents")
-    return logreg_train_hashed(docs, n_buckets=64)
+    return logreg_train_hashed(docs)
 
 
 @query(
@@ -1752,7 +1752,7 @@ def t29_logreg_minibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducehs_spark.operators.ml import logreg_train_minibatch
 
     docs = _t(spark, sf_dir, "documents")
-    return logreg_train_minibatch(docs, n_buckets=64, sample_mod=4)
+    return logreg_train_minibatch(docs)
 
 
 def _mix_draw():
@@ -2917,7 +2917,7 @@ def _t40_build(m: Materialization, sf_dir: str) -> DataFrame:
         "doc_id",
         (F.size(text.tokens("text")).cast("bigint") + F.lit(1)).alias("w"),
     )
-    starts = global_prefix_sums(m, keyed, ["doc_id"], "w", out_col="start")
+    starts = global_prefix_sums(m, keyed, ["doc_id"], "w")
     return _pack_sequences(starts, [], _T40_CTX, "n_docs")
 
 
@@ -3579,7 +3579,7 @@ def _t46_build(m: Materialization, sf_dir: str) -> DataFrame:
     from mapreducehs_spark.operators.similarity import kmeans_assignments
 
     emb = _t(m.spark, sf_dir, "embeddings")
-    assign = kmeans_assignments(m, emb, k=8)
+    assign = kmeans_assignments(m, emb)
     docs = _t(m.spark, sf_dir, "documents")
     keyed = docs.select(
         "doc_id",
@@ -3587,7 +3587,7 @@ def _t46_build(m: Materialization, sf_dir: str) -> DataFrame:
     ).join(
         assign.select(F.col("id").alias("doc_id"), "cluster"), "doc_id"
     ).select("cluster", "doc_id", "w")
-    starts = grouped_prefix_sums(m, keyed, ["cluster"], ["doc_id"], "w", out_col="start")
+    starts = grouped_prefix_sums(m, keyed, ["cluster"], ["doc_id"], "w")
     return _pack_sequences(starts, ["cluster"], _T40_CTX, "n_docs")
 
 
@@ -4029,7 +4029,7 @@ def _t50_build(m: Materialization, sf_dir: str) -> DataFrame:
         )
     )
     pref = grouped_prefix_sums(
-        m, exploded, ["source", "epoch"], ["k", "doc_id"], "n_tokens", out_col="start"
+        m, exploded, ["source", "epoch"], ["k", "doc_id"], "n_tokens"
     )
     kept = pref.filter(
         (F.col("epoch") <= F.col("epochs_full"))
@@ -4446,7 +4446,7 @@ def _t53_build(m: Materialization, sf_dir: str) -> DataFrame:
         "doc_id",
         (F.size(text.tokens("text")).cast("bigint") + F.lit(1)).alias("w"),
     )
-    starts = global_prefix_sums(m, keyed, ["doc_id"], "w", out_col="start")
+    starts = global_prefix_sums(m, keyed, ["doc_id"], "w")
     L = F.col("ctx_len")
     first_seq = F.expr("start div ctx_len")
     last_seq = F.expr("(start + w - 1) div ctx_len")

@@ -24,6 +24,8 @@ on a real cluster the same flags apply, sized to the cluster):
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -85,3 +87,20 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set *confs* on the session for the body of the ``with``; on exit
+    restore each key's old value, or unset a key that had none set."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

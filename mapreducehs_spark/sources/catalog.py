@@ -18,6 +18,8 @@ from __future__ import annotations
 
 import os
 import tempfile
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -114,6 +116,23 @@ def derived_fixture(base_dir: str, sf_dir: str, tables: tuple[str, ...], build, 
             if old != base and generation.fullmatch(name) and _done_source(old) == source:
                 shutil.rmtree(old, ignore_errors=True)
     return base
+
+
+@contextmanager
+def scratch_dir(kind: str, sf_dir: str) -> Iterator[str]:
+    """A process-private working directory for one query run over
+    *sf_dir*: ``{FIXTURE_ROOT}/mapreducehs_{kind}_{sf basename}_{pid}``,
+    absent on entry (a stale one is removed) and removed on exit."""
+    import shutil
+
+    path = os.path.join(
+        FIXTURE_ROOT, f"mapreducehs_{kind}_{os.path.basename(os.path.normpath(sf_dir))}_{os.getpid()}"
+    )
+    shutil.rmtree(path, ignore_errors=True)
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def _done_source(fixture: str) -> str | None:

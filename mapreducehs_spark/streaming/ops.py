@@ -27,7 +27,7 @@ Determinism strategy (what makes these streaming queries *oracle-checkable*):
    is the finite-input stand-in, not a semantic hack.
 
 At 100 TB the same topology runs against a Kafka/file-arrival source
-with the identical query bodies — only ``events_stream`` changes.
+with the identical query bodies — only ``replay_stream`` changes.
 """
 
 from __future__ import annotations
@@ -36,11 +36,12 @@ import os
 import shutil
 import time
 import warnings
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
@@ -58,6 +59,7 @@ from mapreducehs_spark.sources.catalog import (
     guard_driver_fixture,
     load_table,
 )
+from mapreducehs_spark.session import scoped_confs
 
 #: Schema of the replayed events stream (µs timestamps — the ns→µs
 #: conversion happens once in load_table before chunks are written).
@@ -159,13 +161,32 @@ def write_replay(out: str, chunks: list[pd.DataFrame]) -> None:
         os.utime(path, (now + i * 10, now + i * 10))
 
 
-def events_stream(spark: SparkSession, replay_dir: str) -> DataFrame:
-    """File-source stream over a replay dir (one chunk per trigger)."""
-    return (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay_dir)
-    )
+def replay_stream(spark: SparkSession, replay_dir: str, schema: StructType) -> DataFrame:
+    """File-source stream of *schema* rows over a replay dir (or glob),
+    one file per trigger in ascending mtime order."""
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(replay_dir)
+
+
+#: The one wall-clock bound on draining a finite replay stream.
+DRAIN_TIMEOUT_S = 600
+
+
+def drain(q: StreamingQuery) -> None:
+    """Wait for the started query *q* to finish, at most
+    ``DRAIN_TIMEOUT_S``; stop it if it is still active and raise
+    ``TimeoutError`` naming it if it did not finish.
+
+    An ``availableNow`` query self-terminates, and only awaitTermination
+    lets its trailing no-data micro-batch run, which is what evicts the
+    final windows after the sentinel advances the watermark
+    (processAllAvailable + stop() races that batch and loses the last
+    windows)."""
+    try:
+        if not q.awaitTermination(timeout=DRAIN_TIMEOUT_S):
+            raise TimeoutError(f"stream {q.name or q.id} did not finish in {DRAIN_TIMEOUT_S}s")
+    finally:
+        if q.isActive:
+            q.stop()
 
 
 #: State-store partition sizing (round 13, guide §2.2 applied to state
@@ -204,16 +225,18 @@ def state_partitions_for(state_bytes: int, cores: int) -> int:
 
 
 def run_to_batch(stream_df: DataFrame, name: str, state_bytes: int | None = None) -> DataFrame:
-    """Drain a finite stream into a memory sink; return the result table.
+    """Drain a finite stream into the memory sink *name* (``drain``);
+    return the result table.
 
     The memory sink is the test/driver harness sink only — production
     sinks are kafka/parquet/delta via the same ``writeStream`` call.
 
-    The state-store partition count is set for this query (read at
-    ``start()``, fixed for the query's lifetime).  A vanilla
-    200-partition session pays 200 state-store tasks per stateful op per
-    micro-batch — for the bounded state here (thousands of
-    windows/users) a few per core is right.  At 100 TB it is the
+    The state-store partition count is set for this query only: the
+    session's ``spark.sql.shuffle.partitions`` is overridden around
+    ``start()`` (``scoped_confs``), which fixes it for the query's
+    lifetime.  A vanilla 200-partition session pays 200 state-store
+    tasks per stateful op per micro-batch — for the bounded state here
+    (thousands of windows/users) a few per core is right.  At 100 TB it is the
     per-topology state sizing decision, made per stream, not globally.
     ``state_bytes`` is an upper bound on the topology's retained state
     volume, from which the partition count derives via
@@ -224,14 +247,12 @@ def run_to_batch(stream_df: DataFrame, name: str, state_bytes: int | None = None
     identical by construction.
     """
     spark = stream_df.sparkSession
-    old = spark.conf.get("spark.sql.shuffle.partitions")
     cores = spark.sparkContext.defaultParallelism
     if state_bytes is not None:
         partitions = state_partitions_for(state_bytes, cores)
     else:
         partitions = max(8, cores)
-    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
-    try:
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": str(partitions)}):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)
@@ -239,20 +260,61 @@ def run_to_batch(stream_df: DataFrame, name: str, state_bytes: int | None = None
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    try:
-        # availableNow self-terminates — and only awaitTermination lets
-        # the trailing no-data micro-batch run, which is what evicts the
-        # final windows after the sentinel advances the watermark.
-        # (processAllAvailable + stop() races that batch and loses the
-        # last windows.)
-        if not q.awaitTermination(timeout=600):
-            raise TimeoutError(f"stream {name} did not finish in 600s")
-    finally:
-        if q.isActive:
-            q.stop()
-    return stream_df.sparkSession.table(name)
+    drain(q)
+    return spark.table(name)
+
+
+def fold_into_table(
+    stream: DataFrame,
+    table_dir: str,
+    partial: Callable[[DataFrame], DataFrame],
+    key: str,
+    checkpoint_dir: str | None = None,
+) -> None:
+    """Drain *stream* through ``foreachBatch`` into the keyed parquet
+    serving table at *table_dir*, which must exist.  Per micro-batch:
+
+    1. ``partial(batch_df)`` builds the batch's partial aggregate: *key*
+       plus bigint measures, the same columns the table holds;
+    2. the table and that partial are re-aggregated by *key* with sums;
+    3. the last applied batch id is written as ``_last_batch_id`` inside
+       the new table dir (an underscore file, invisible to the parquet
+       reader);
+    4. the new dir is written beside the table and renamed over it (the
+       merge READS the table, and overwriting a path being read is
+       undefined).
+
+    ``foreachBatch`` is at-least-once: a retried or re-replayed batch
+    whose id is at or below the marker is skipped.  Because the marker
+    travels inside the renamed dir, data and marker never disagree, so
+    signed or counted measures can never be applied twice.
+    *checkpoint_dir* makes the stream resumable (the restart tests)."""
+    marker = os.path.join(table_dir, "_last_batch_id")
+
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if os.path.exists(marker):
+            with open(marker) as fh:
+                if batch_id <= int(fh.read().strip()):
+                    return
+        part = partial(batch_df)
+        sums = [F.sum(c).cast("bigint").alias(c) for c in part.columns if c != key]
+        merged = (
+            batch_df.sparkSession.read.parquet(table_dir)
+            .unionByName(part)
+            .groupBy(key)
+            .agg(*sums)
+        )
+        tmp = table_dir + ".tmp"
+        merged.write.mode("overwrite").parquet(tmp)
+        with open(os.path.join(tmp, "_last_batch_id"), "w") as fh:
+            fh.write(str(batch_id))
+        shutil.rmtree(table_dir)
+        os.rename(tmp, table_dir)
+
+    writer = stream.writeStream.foreachBatch(apply_batch)
+    if checkpoint_dir is not None:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    drain(writer.trigger(availableNow=True).start())
 
 
 # ---------------------------------------------------------------------------
@@ -910,15 +972,6 @@ def prepare_docs_stream_dir(
     return derived_fixture(base_dir, sf_dir, ("documents",), build, "c4")
 
 
-def docs_stream(spark: SparkSession, replay_dir: str) -> DataFrame:
-    """File-source stream over a docs replay dir (one chunk per trigger)."""
-    return (
-        spark.readStream.schema(DOCS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay_dir)
-    )
-
-
 #: Soft observability bound for ``stateful_minhash_dedup`` band buckets:
 #: a bucket past this size means a hot band key (skewed corpus) whose
 #: per-batch pair emission is quadratic — warn rather than degrade
@@ -1320,13 +1373,7 @@ def streaming_logreg_train(docs: DataFrame, n_buckets: int = 64) -> DataFrame:
             weights, bias = logreg_gradient_step(feats, labels, weights, bias, n)
             snaps.append((int(batch_id), dict(weights), bias))
 
-    q = docs.writeStream.foreachBatch(step).trigger(availableNow=True).start()
-    try:
-        if not q.awaitTermination(timeout=600):
-            raise TimeoutError("streaming_logreg_train did not finish in 600s")
-    finally:
-        if q.isActive:
-            q.stop()
+    drain(docs.writeStream.foreachBatch(step).trigger(availableNow=True).start())
 
     out_rows: list[tuple[int, int, int]] = []
     for step_i, (_bid, w, b) in enumerate(sorted(snaps, key=lambda t: t[0]), start=1):
@@ -1899,13 +1946,7 @@ def streaming_weighted_sample(docs: DataFrame) -> DataFrame:
             res.sort(key=lambda t: (t[0], t[1]))
             del res[25:]
 
-    q = docs.writeStream.foreachBatch(step).trigger(availableNow=True).start()
-    try:
-        if not q.awaitTermination(timeout=600):
-            raise TimeoutError("streaming_weighted_sample did not finish in 600s")
-    finally:
-        if q.isActive:
-            q.stop()
+    drain(docs.writeStream.foreachBatch(step).trigger(availableNow=True).start())
 
     rows = [
         (src, doc_id, w, kf)
@@ -2031,18 +2072,12 @@ def manifest_monitor_fold(
     small_bytes: int,
     checkpoint_dir: str | None = None,
 ) -> None:
-    """st36's incremental small-file monitor fold, shared by the query
-    and the restart tests: each micro-batch of manifest rows partial-
+    """st36's incremental small-file monitor, shared by the query and
+    the restart tests: each micro-batch of manifest rows partial-
     aggregates per-table-partition counters (files, small files, small
-    bytes, total bytes) and merges into the stored monitor table by
-    keyed re-aggregate — st31's foreachBatch MERGE pattern.  The last
-    applied batch_id travels INSIDE the atomically-renamed monitor dir
-    (an underscore file, invisible to the parquet reader), so an
-    at-least-once retried or fully re-replayed micro-batch can never
-    double-count: data and watermark cannot disagree.  Initializes the
-    monitor if absent (a restart RESUMES the existing one)."""
-    from pyspark.sql import functions as F
-
+    bytes, total bytes) and ``fold_into_table`` merges them into the
+    stored monitor table, idempotently.  Initializes the monitor if
+    absent (a restart RESUMES the existing one)."""
     if not os.path.exists(os.path.join(monitor_dir, "_SUCCESS")):
         empty = spark.createDataFrame(
             [],
@@ -2051,20 +2086,10 @@ def manifest_monitor_fold(
         )
         empty.write.mode("overwrite").parquet(monitor_dir)
 
-    def last_applied() -> int:
-        marker = os.path.join(monitor_dir, "_last_batch_id")
-        if os.path.exists(marker):
-            with open(marker) as fh:
-                return int(fh.read().strip())
-        return -1
-
     small = F.col("bytes") < small_bytes
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= last_applied():
-            return
-        sp = batch_df.sparkSession
-        partial = batch_df.groupBy(F.expr("file_id div 64").alias("part_id")).agg(
+    def partial(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy(F.expr("file_id div 64").alias("part_id")).agg(
             F.count(F.lit(1)).cast("bigint").alias("n_files"),
             F.sum(small.cast("bigint")).cast("bigint").alias("n_small"),
             F.sum(F.when(small, F.col("bytes")).otherwise(F.lit(0)))
@@ -2072,38 +2097,9 @@ def manifest_monitor_fold(
             .alias("small_bytes"),
             F.sum("bytes").cast("bigint").alias("total_bytes"),
         )
-        merged = (
-            sp.read.parquet(monitor_dir)
-            .unionByName(partial)
-            .groupBy("part_id")
-            .agg(
-                F.sum("n_files").cast("bigint").alias("n_files"),
-                F.sum("n_small").cast("bigint").alias("n_small"),
-                F.sum("small_bytes").cast("bigint").alias("small_bytes"),
-                F.sum("total_bytes").cast("bigint").alias("total_bytes"),
-            )
-        )
-        tmp = monitor_dir + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, "_last_batch_id"), "w") as fh:
-            fh.write(str(batch_id))
-        shutil.rmtree(monitor_dir)
-        os.rename(tmp, monitor_dir)
 
-    manifest = (
-        spark.readStream.schema(MANIFEST_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay_dir)
-    )
-    writer = manifest.writeStream.foreachBatch(apply_batch)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.trigger(availableNow=True).start()
-    try:
-        if not q.awaitTermination(timeout=600):
-            raise TimeoutError("manifest monitor stream did not finish")
-    finally:
-        q.stop()
+    manifest = replay_stream(spark, replay_dir, MANIFEST_SCHEMA)
+    fold_into_table(manifest, monitor_dir, partial, "part_id", checkpoint_dir)
 
 
 #: st32's CDC log replay schema — q117's change log rows, chunked one

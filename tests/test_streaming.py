@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import mapreducehs_spark.streaming.ops as st
+from mapreducehs_spark.session import scoped_confs
 
 
 def _write_chunk(path: str, rows: list[dict]) -> None:
@@ -69,7 +70,7 @@ def late_replay_dir(tmp_path):
 
 
 def test_watermark_drops_late_rows(spark, late_replay_dir):
-    ev = st.events_stream(spark, late_replay_dir)
+    ev = st.replay_stream(spark, late_replay_dir, st.EVENTS_SCHEMA)
     agg = st.tumbling_aggregate(ev, watermark="30 minutes")
     out = (
         st.run_to_batch(agg, "late_sink")
@@ -101,7 +102,7 @@ def test_replay_dir_chunking(spark):
 
 def test_stream_schema_matches_catalog(spark):
     replay = st.prepare_stream_dir(spark, "/root/testdata/sf0.001")
-    stream = st.events_stream(spark, replay)
+    stream = st.replay_stream(spark, replay, st.EVENTS_SCHEMA)
     assert stream.isStreaming
     assert stream.schema == st.EVENTS_SCHEMA
 
@@ -114,19 +115,20 @@ def test_foreachbatch_parquet_sink(spark, tmp_path):
     is the deploy path."""
     out_dir = str(tmp_path / "agg_parquet")
     replay = st.prepare_stream_dir(spark, "/root/testdata/sf0.001")
-    agg = st.tumbling_aggregate(st.events_stream(spark, replay), watermark="30 minutes")
+    agg = st.tumbling_aggregate(
+        st.replay_stream(spark, replay, st.EVENTS_SCHEMA), watermark="30 minutes"
+    )
 
     def write_batch(batch_df, epoch_id):
         batch_df.write.mode("append").parquet(out_dir)
 
-    q = (
+    st.drain(
         agg.writeStream.foreachBatch(write_batch)
         .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
-    assert q.awaitTermination(timeout=600)
 
     from mapreducehs_spark.sources.catalog import load_table
 
@@ -176,22 +178,17 @@ def test_checkpoint_restart_exactly_once(spark, tmp_path):
     out = str(tmp_path / "out")
 
     def run_once():
-        stream = (
-            spark.readStream.schema(st.EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(staged)
-        )
+        stream = st.replay_stream(spark, staged, st.EVENTS_SCHEMA)
         # stateless projection -> append file sink: restart-safe via the
         # checkpoint's file-source log + output commit protocol
         proj = stream.select("event_id", "user_id", "value")
-        q = (
+        st.drain(
             proj.writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
-        assert q.awaitTermination(120)
 
     run_once()
     n_first = spark.read.parquet(out).count()
@@ -212,10 +209,8 @@ def test_mg_sketch_state_is_bounded(spark):
     never a row per key or per event — `numRowsTotal` from the query's
     own progress metrics must be ≤ shards regardless of stream length."""
     replay = st.prepare_stream_dir(spark, "/root/testdata/sf0.001")
-    updates = st.stateful_mg_sketch(st.events_stream(spark, replay))
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    updates = st.stateful_mg_sketch(st.replay_stream(spark, replay, st.EVENTS_SCHEMA))
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": "8"}):
         q = (
             updates.writeStream.format("memory")
             .queryName("st13_state_probe")
@@ -223,20 +218,14 @@ def test_mg_sketch_state_is_bounded(spark):
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    try:
-        assert q.awaitTermination(timeout=300)
-        state_rows = [
-            p["stateOperators"][0]["numRowsTotal"]
-            for p in q.recentProgress
-            if p.get("stateOperators")
-        ]
-        assert state_rows, "no state metrics captured"
-        assert max(state_rows) <= 16
-    finally:
-        if q.isActive:
-            q.stop()
+    st.drain(q)
+    state_rows = [
+        p["stateOperators"][0]["numRowsTotal"]
+        for p in q.recentProgress
+        if p.get("stateOperators")
+    ]
+    assert state_rows, "no state metrics captured"
+    assert max(state_rows) <= 16
     # and the serving merge still reproduces the exact batch counts
     out = st.merge_mg_sketch_log(spark.table("st13_state_probe")).collect()
     assert sum(r["est_total"] for r in out) > 0
@@ -271,17 +260,10 @@ def test_stateful_checkpoint_restart_recovers_state(spark, tmp_path):
 
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "out")
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
 
     def run_once():
-        stream = (
-            spark.readStream.schema(st.EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(staged)
-        )
-        updates = st.stateful_user_totals(stream)
-        q = (
+        updates = st.stateful_user_totals(st.replay_stream(spark, staged, st.EVENTS_SCHEMA))
+        st.drain(
             updates.writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
@@ -289,15 +271,12 @@ def test_stateful_checkpoint_restart_recovers_state(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        assert q.awaitTermination(120)
 
-    try:
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": "4"}):
         run_once()
         for f in files[3:]:
             shutil.copy2(f, staged)
         run_once()  # restart: state must RESUME, not reset
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
 
     final = {
         r["user_id"]: r["n_events"]
@@ -318,7 +297,9 @@ def test_minhash_stream_equals_batch_d11(spark):
 
     sf_dir = "/root/testdata/sf0.001"
     replay = st.prepare_docs_stream_dir(spark, sf_dir)
-    pairs = st.stateful_minhash_dedup(st.docs_stream(spark, replay), ttl_sec=10**9)
+    pairs = st.stateful_minhash_dedup(
+        st.replay_stream(spark, replay, st.DOCS_STREAM_SCHEMA), ttl_sec=10**9
+    )
     log = st.run_to_batch(pairs, "st15_test_sink")
     got = {
         (r["id_a"], r["id_b"]): r["est_jaccard"]
@@ -345,11 +326,9 @@ def test_minhash_stream_state_is_bounded(spark):
     # doc ts spacing is 1 s/doc — a 30 s TTL is ~30 docs of history,
     # far less than the chunk span, so chunk N's buckets die by chunk N+1
     pairs = st.stateful_minhash_dedup(
-        st.docs_stream(spark, replay), ttl_sec=30, watermark="5 seconds"
+        st.replay_stream(spark, replay, st.DOCS_STREAM_SCHEMA), ttl_sec=30, watermark="5 seconds"
     )
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": "8"}):
         q = (
             pairs.writeStream.format("memory")
             .queryName("st15_state_probe")
@@ -357,18 +336,12 @@ def test_minhash_stream_state_is_bounded(spark):
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    try:
-        assert q.awaitTermination(timeout=300)
-        state_rows = [
-            p["stateOperators"][0]["numRowsTotal"]
-            for p in q.recentProgress
-            if p.get("stateOperators")
-        ]
-    finally:
-        if q.isActive:
-            q.stop()
+    st.drain(q)
+    state_rows = [
+        p["stateOperators"][0]["numRowsTotal"]
+        for p in q.recentProgress
+        if p.get("stateOperators")
+    ]
     assert state_rows, "no state metrics captured"
     removed = [
         p["stateOperators"][0].get("numRowsRemoved", 0)
@@ -413,26 +386,21 @@ def test_minhash_stream_checkpoint_restart_same_pairs(spark, tmp_path):
 
     def run_once():
         pairs = st.stateful_minhash_dedup(
-            st.docs_stream(spark, staged), ttl_sec=10**9
+            st.replay_stream(spark, staged, st.DOCS_STREAM_SCHEMA), ttl_sec=10**9
         )
-        q = (
+        st.drain(
             pairs.writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
-        assert q.awaitTermination(300)
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": "8"}):
         run_once()
         for f in files[2:]:
             shutil.copy2(f, staged)
         run_once()  # restart: state reloads, only new chunks process
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
 
     got = {
         (r["id_a"], r["id_b"]): r["est_jaccard"]
@@ -481,7 +449,9 @@ def test_streaming_logreg_train_matches_numpy_online_replay(spark, tmp_path):
 
     got = {
         (int(r["step"]), int(r["bucket"])): int(r["w"])
-        for r in st.streaming_logreg_train(st.docs_stream(spark, str(replay)), n_buckets=8).collect()
+        for r in st.streaming_logreg_train(
+            st.replay_stream(spark, str(replay), st.DOCS_STREAM_SCHEMA), n_buckets=8
+        ).collect()
     }
 
     # numpy replay: one step per chunk, normalized by the CHUNK size
@@ -527,7 +497,7 @@ def test_moments_stream_equals_batch_var_pop(spark):
     from mapreducehs_spark.sources.catalog import load_table
 
     replay = st.prepare_stream_dir(spark, "/root/testdata/sf0.001")
-    updates = st.stateful_moments(st.events_stream(spark, replay))
+    updates = st.stateful_moments(st.replay_stream(spark, replay, st.EVENTS_SCHEMA))
     log = st.run_to_batch(updates, "st20_test_sink")
     got = {r["event_type"]: r for r in st.latest_moments(log).collect()}
 
@@ -562,7 +532,7 @@ def test_trailing_anomaly_stream_equals_batch_window(spark):
     from mapreducehs_spark.sources.catalog import load_table
 
     replay = st.prepare_stream_dir(spark, "/root/testdata/sf0.001")
-    flagged = st.stateful_trailing_anomaly(st.events_stream(spark, replay))
+    flagged = st.stateful_trailing_anomaly(st.replay_stream(spark, replay, st.EVENTS_SCHEMA))
     log = st.run_to_batch(flagged, "st21_test_sink")
     got = {
         (r["user_id"], r["event_id"]): (r["cents"], r["trail_sum"])
@@ -606,7 +576,7 @@ def test_bloom_dedup_false_positive_regime(spark):
 
     replay = st.prepare_stream_dir(spark, "/root/testdata/sf0.001")
     out = st.stateful_bloom_dedup(
-        st.events_stream(spark, replay), shards=4, m_bits=64
+        st.replay_stream(spark, replay, st.EVENTS_SCHEMA), shards=4, m_bits=64
     )
     log = st.run_to_batch(out, "st22_fp_test_sink")
     got = {(r["user_id"], r["event_type"]) for r in log.collect()}
@@ -665,12 +635,8 @@ def test_cdc_images_checkpoint_restart_matches_q124(spark, tmp_path):
     out = str(tmp_path / "out")
 
     def run_once():
-        log = (
-            spark.readStream.schema(st.CDC_LOG_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(staged)
-        )
-        q = (
+        log = st.replay_stream(spark, staged, st.CDC_LOG_SCHEMA)
+        st.drain(
             st.stateful_cdc_images(log)
             .writeStream.format("parquet")
             .option("path", out)
@@ -679,7 +645,6 @@ def test_cdc_images_checkpoint_restart_matches_q124(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        assert q.awaitTermination(300)
 
     cols = ["change_seq", "o_orderkey", "change_type", "status", "total_cents"]
     # kill after all but the LAST commit sequence: the emit window is
@@ -709,18 +674,11 @@ def test_st35_stream_schema_evolution_is_stateless_per_file(spark):
     micro-batch progress), generations arrive in SEPARATE micro-batches
     (maxFilesPerTrigger=1 => at least one trigger per physical file),
     and the id-resolved sink agrees with q126's batch read exactly."""
-    from mapreducehs_spark.queries.q_ext import q126_schema_evolution_read
+    from mapreducehs_spark.queries.q_ext import FIELD_ID_READ_CONFS, q126_schema_evolution_read
     from mapreducehs_spark.queries.st_streaming import _st35_stream
 
     sf = "/root/testdata/sf0.001"
-    confs = {
-        "spark.sql.parquet.fieldId.read.enabled": "true",
-        "spark.sql.parquet.fieldId.read.ignoreMissing": "true",
-    }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_confs(spark, FIELD_ID_READ_CONFS):
         q = (
             _st35_stream(spark, sf)
             .writeStream.format("memory")
@@ -729,7 +687,7 @@ def test_st35_stream_schema_evolution_is_stateless_per_file(spark):
             .trigger(availableNow=True)
             .start()
         )
-        assert q.awaitTermination(timeout=600)
+        st.drain(q)
         progresses = [p for p in q.recentProgress if p["numInputRows"] > 0]
         # stateless: no micro-batch ever reports a state operator with
         # state rows (no state store, no watermark)
@@ -756,12 +714,6 @@ def test_st35_stream_schema_evolution_is_stateless_per_file(spark):
             for r in q126_schema_evolution_read(spark, sf).collect()
         }
         assert got == want
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_st36_monitor_matches_manifest_law_and_refolds_idempotently(spark):

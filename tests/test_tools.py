@@ -197,6 +197,22 @@ def test_default_driver_heap_fits_the_machine():
     assert gib * 2**30 <= os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
 
 
+def test_driver_sim_canon_ignores_order_rounds_floats_and_widens_ints(tools):
+    """``tools/driver_sim.py`` imports without starting Spark or DuckDB,
+    and its ``canon`` hash ignores column and row order, rounds floats
+    to 4 decimals and reads every int width as ``Int64``."""
+    import pandas as pd
+
+    import driver_sim
+
+    a = pd.DataFrame({"k": [1, 2], "v": [0.123456, 2.5]})
+    b = pd.DataFrame({"v": [2.5, 0.12346], "k": [2, 1]})
+    assert driver_sim.canon(a) == driver_sim.canon(b)
+    assert driver_sim.canon(a) != driver_sim.canon(a.assign(v=[0.1234, 2.5]))
+    ints = [pd.DataFrame({"k": pd.array([3, 1], dtype=t)}) for t in ("int32", "int64", "Int64", object)]
+    assert len({driver_sim.canon(df) for df in ints}) == 1
+
+
 #: Parameters kept although every call passes their default:
 #: perfbench/run.py rebinds ``base_dir`` on the stream fixture builders
 #: by keyword and reads its default.
