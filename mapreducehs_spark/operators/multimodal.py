@@ -10,26 +10,84 @@ reference).  Conventions:
   UDF — shuffling raw media through every stage is the classic
   anti-pattern.  ``attach_payload`` here materializes real bytes because
   the testdata is synthetic text; the schema contract is identical.
-- Decode / feature-extract run as Arrow-batched ``mapInPandas`` — the
-  only sane shape for per-item Python media libs (one Python worker per
-  partition, batches amortize serialization).  ``decode_image`` is a
-  REAL pure-numpy decoder for binary PGM (P5) — header parse + raster —
-  so the decode stage is exercised end-to-end (m06); formats that need
-  a codec lib (JPEG/PNG, absent in this container) still raise
-  ``NotImplementedError`` and ``fake_features`` provides the
-  deterministic stand-in used by the feature-extraction tests.
+- Every render, decode and fingerprint kernel is a plain per-row
+  function run by ONE stage, ``_row_map``: an Arrow-batched
+  ``mapInPandas`` that calls the row function on each row and builds
+  the output frame from the schema's column names — the reference's
+  ``Mapper`` (a per-row function lifted over every row by one runner),
+  and the only sane shape for per-item Python media libs (one Python
+  worker per partition, batches amortize serialization).  Renderers
+  are ``doc_id -> bytes`` laws; decoders are ``(id, payload) -> row``.
+  ``decode_image`` is a REAL pure-numpy decoder for binary PGM (P5) —
+  header parse + raster — so the decode stage is exercised end-to-end
+  (m06); formats that need a codec lib (JPEG/PNG, absent in this
+  container) still raise ``NotImplementedError`` and ``fake_features``
+  provides the deterministic stand-in used by the feature-extraction
+  tests.
+- The perceptual fingerprints share one block-sum threshold
+  (``_block_bits``) and one packer of bits into non-negative 32-bit
+  words (``_pack_words``).
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
-from collections.abc import Iterator
+import struct
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def _row_map(df: DataFrame, cols: list[str], row: Callable[..., tuple], schema: str) -> DataFrame:
+    """The media layer's one stage: ``row(*values)`` over ``df``'s
+    ``cols`` on every row, one Arrow batch at a time; each returned
+    tuple is one output row, named by ``schema``'s column names."""
+    names = [field.split()[0] for field in schema.split(",")]
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = [row(*values) for values in zip(*(pdf[c].tolist() for c in cols))]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.select(*cols).mapInPandas(batches, schema=schema)
+
+
+def _render(df: DataFrame, law: Callable[[int], bytes]) -> DataFrame:
+    """A synthetic media store: (id, payload binary) with
+    ``payload = law(doc_id)`` for every row of ``df``."""
+    return _row_map(df, ["doc_id"], lambda i: (i, law(i)), "id long, payload binary")
+
+
+def _block_bits(raster: "np.ndarray", rows: int, cols: int, who: str) -> "np.ndarray":
+    """Threshold bits of a 2-D raster cut into a ``rows`` x ``cols``
+    grid of equal blocks: bit k (row-major block k) is set iff
+    ``n_blocks * block_sum > total_sum`` — the average-hash rule in
+    exact integer arithmetic, so a SQL oracle replays it bit for bit."""
+    h, w = raster.shape
+    if h % rows or w % cols:
+        grid = f"{rows}" if rows == cols else f"{rows}x{cols}"
+        raise ValueError(f"{who}: dims {h}x{w} not divisible by {grid}")
+    cells = (
+        raster.astype(np.int64).reshape(rows, h // rows, cols, w // cols).sum(axis=(1, 3)).ravel()
+    )
+    return cells * cells.size > cells.sum()
+
+
+#: 2**j for bit j of a 32-bit word.
+_WORD_WEIGHTS = 1 << np.arange(32, dtype=np.int64)
+
+
+def _pack_words(bits: "np.ndarray") -> tuple[int, ...]:
+    """A bool vector as non-negative 32-bit words: bit k lands in word
+    ``k // 32`` at position ``k % 32``.  32-bit words keep a hash's top
+    bit out of a BIGINT's sign position, which sidesteps
+    arithmetic-vs-logical shift divergence between engines."""
+    return tuple(int(w) for w in np.asarray(bits, dtype=np.int64).reshape(-1, 32) @ _WORD_WEIGHTS)
 
 
 def attach_payload(df: DataFrame) -> DataFrame:
@@ -86,7 +144,7 @@ def decode_image(payload_bytes: bytes) -> "np.ndarray":
     so the decode stage of the multimodal pipeline is exercised
     end-to-end without PIL/cv2 (which this container lacks).  Other
     formats (JPEG/PNG/…) still require a codec lib: deployments extend
-    the dispatch below; the mapInPandas plumbing is identical.
+    the dispatch below; the ``_row_map`` plumbing is identical.
     """
     if not payload_bytes.startswith(b"P5"):
         raise NotImplementedError(
@@ -127,6 +185,9 @@ def extract_features(df: DataFrame) -> DataFrame:
     The production shape for decode/resize/frame-sample: mapInPandas,
     one pandas batch of payloads in, features out.  Swap
     ``fake_features`` for a real extractor without touching the plan.
+    Every column but ``payload`` passes through as pandas carries it,
+    which is why this stage is not a ``_row_map`` (whose rows are
+    Python tuples).
     """
     out_schema = ", ".join(
         f"{name} {dtype}" for name, dtype in df.dtypes if name != "payload"
@@ -158,53 +219,39 @@ def frame_sample_plan(df: DataFrame) -> DataFrame:
     )
 
 
+def _pixels(seed: int, width: int, height: int) -> "np.ndarray":
+    """The m-series pixel law: a (height, width) uint8 raster with
+    pixel[i] = (seed + i*7) mod 256, row-major."""
+    idx = np.arange(width * height, dtype=np.int64)
+    return ((seed + idx * 7) % 256).astype(np.uint8).reshape(height, width)
+
+
 def render_pgm_payloads(df: DataFrame, width: int = 32, height: int = 16) -> DataFrame:
     """Deterministic synthetic image per row: pixel[i] =
     (id*31 + i*7) mod 256, encoded as real PGM bytes.  Plays the
     external camera/media store in tests and m06 — the arithmetic
     pixel law is what lets a SQL oracle replay decoded-image stats
     without itself decoding anything.  Emits (id, payload binary)."""
+    return _render(df, lambda i: encode_pgm(_pixels(i * 31, width, height)))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = np.arange(width * height, dtype=np.int64)
-        for pdf in it:
-            payloads = [
-                encode_pgm((((int(i) * 31 + idx * 7) % 256).astype(np.uint8)).reshape(height, width))
-                for i in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"id": pdf["doc_id"].astype("int64"), "payload": payloads})
 
-    return df.select("doc_id").mapInPandas(batches, schema="id long, payload binary")
+#: Output schema of the pixel-stats stages.
+_PIXEL_STATS = "id long, width long, height long, px_sum long, px_min long, px_max long"
+
+
+def _pixel_stats(i: int, img: "np.ndarray") -> tuple:
+    """(id, width, height, px_sum, px_min, px_max) of one raster."""
+    px = img.astype(np.int64)
+    return i, img.shape[1], img.shape[0], int(px.sum()), int(px.min()), int(px.max())
 
 
 def decoded_image_stats(df: DataFrame) -> DataFrame:
     """Decode each payload with ``decode_image`` and reduce to stats:
     (id, width, height, px_sum, px_min, px_max).  A genuinely-decoding
-    mapInPandas stage — header parse, raster reshape, numpy reduce —
-    the template every real extractor (resize, embed, OCR) follows."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for i, p in zip(pdf["id"], pdf["payload"]):
-                img = decode_image(bytes(p))
-                rows.append(
-                    (
-                        int(i),
-                        img.shape[1],
-                        img.shape[0],
-                        int(img.astype(np.int64).sum()),
-                        int(img.min()),
-                        int(img.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["id", "width", "height", "px_sum", "px_min", "px_max"]
-            )
-
-    return df.mapInPandas(
-        batches,
-        schema="id long, width long, height long, px_sum long, px_min long, px_max long",
+    Arrow stage — header parse, raster reshape, numpy reduce — the
+    template every real extractor (resize, embed, OCR) follows."""
+    return _row_map(
+        df, ["id", "payload"], lambda i, p: _pixel_stats(i, decode_image(p)), _PIXEL_STATS
     )
 
 
@@ -223,29 +270,11 @@ def resized_image_stats(df: DataFrame) -> DataFrame:
     resized raster — the real thumbnail/preprocess shape (decode and
     resize fused in ONE Arrow stage so full-resolution pixels never
     leave the batch, let alone the executor)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for i, p in zip(pdf["id"], pdf["payload"]):
-                img = resize_image(decode_image(bytes(p)))
-                rows.append(
-                    (
-                        int(i),
-                        img.shape[1],
-                        img.shape[0],
-                        int(img.astype(np.int64).sum()),
-                        int(img.min()),
-                        int(img.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["id", "width", "height", "px_sum", "px_min", "px_max"]
-            )
-
-    return df.mapInPandas(
-        batches,
-        schema="id long, width long, height long, px_sum long, px_min long, px_max long",
+    return _row_map(
+        df,
+        ["id", "payload"],
+        lambda i, p: _pixel_stats(i, resize_image(decode_image(p))),
+        _PIXEL_STATS,
     )
 
 
@@ -310,8 +339,6 @@ def payload_byte_stats(df: DataFrame) -> DataFrame:
 
 def encode_wav(samples: "np.ndarray") -> bytes:
     """Mono 16-bit PCM WAV: 44-byte RIFF header + little-endian frames."""
-    import struct
-
     pcm = samples.astype("<i2").tobytes()
     n = len(pcm)
     return (
@@ -329,8 +356,6 @@ def decode_wav(payload: bytes) -> tuple["np.ndarray", int]:
     """Parse a mono 16-bit PCM WAV: validate RIFF/WAVE magic, walk the
     chunk list to fmt/data (no fixed-offset assumptions), return
     (samples int16 array, sample_rate)."""
-    import struct
-
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
     pos, fmt, data = 12, None, None
@@ -356,17 +381,14 @@ def render_wav_payloads(df: DataFrame) -> DataFrame:
     ((id*13 + i*17) mod 4096) - 2048, as real WAV bytes — the audio
     twin of render_pgm_payloads (the arithmetic law lets a SQL oracle
     replay decoded stats without decoding)."""
+    idx = np.arange(256, dtype=np.int64)
+    return _render(df, lambda i: encode_wav((i * 13 + idx * 17) % 4096 - 2048))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = np.arange(256, dtype=np.int64)
-        for pdf in it:
-            payloads = [
-                encode_wav((int(i) * 13 + idx * 17) % 4096 - 2048)
-                for i in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"id": pdf["doc_id"].astype("int64"), "payload": payloads})
 
-    return df.select("doc_id").mapInPandas(batches, schema="id long, payload binary")
+def _audio_stats(i: int, payload: bytes) -> tuple:
+    s, rate = decode_wav(payload)
+    s = s.astype(np.int64)
+    return i, len(s), rate, int(s.sum()), int((s * s).sum()), int(s.min()), int(s.max())
 
 
 def decoded_audio_stats(df: DataFrame) -> DataFrame:
@@ -374,27 +396,12 @@ def decoded_audio_stats(df: DataFrame) -> DataFrame:
     (id, n_samples, sample_rate, amp_sum, sq_sum, amp_min, amp_max).
     Integer sums (not float RMS) so the oracle check is bit-exact;
     callers derive rms = sqrt(sq_sum/n) at the edge."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for i, p in zip(pdf["id"], pdf["payload"]):
-                s, rate = decode_wav(bytes(p))
-                s64 = s.astype(np.int64)
-                rows.append(
-                    (int(i), len(s), rate, int(s64.sum()), int((s64 * s64).sum()),
-                     int(s64.min()), int(s64.max()))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "n_samples", "sample_rate", "amp_sum", "sq_sum",
-                         "amp_min", "amp_max"],
-            )
-
-    return df.mapInPandas(
-        batches,
-        schema=("id long, n_samples long, sample_rate long, amp_sum long, "
-                "sq_sum long, amp_min long, amp_max long"),
+    return _row_map(
+        df,
+        ["id", "payload"],
+        _audio_stats,
+        "id long, n_samples long, sample_rate long, amp_sum long, sq_sum long, "
+        "amp_min long, amp_max long",
     )
 
 
@@ -405,8 +412,6 @@ def encode_mrv(frames: "list[np.ndarray]") -> bytes:
     per-frame-decode path is REAL in this container.  Real deployments
     swap this for mp4/mkv demuxing; the Spark-side plumbing (binary
     column → demux → frame-sample → decode → stats) is identical."""
-    import struct
-
     out = [b"MRV1", struct.pack("<I", len(frames))]
     for fr in frames:
         pgm = encode_pgm(fr)
@@ -425,8 +430,6 @@ def decode_mrv_frames(
     1-in-10 cuts decode CPU 10×; IO still reads the payload, which is
     why real stores chunk frames into separately-fetchable ranges).
     Returns [(frame_idx, (h, w) uint8 array), ...]."""
-    import struct
-
     if payload[:4] != b"MRV1":
         raise NotImplementedError("only MRV1 demuxes without a codec lib")
     (n_frames,) = struct.unpack_from("<I", payload, 4)
@@ -446,20 +449,16 @@ def render_mrv_payloads(df: DataFrame) -> DataFrame:
     (id*31 + f*101 + i*7) mod 256 — the m06 pixel-law discipline
     extended with a frame term, so a SQL oracle replays sampled-frame
     stats without demuxing anything.  Emits (id, payload binary)."""
+    return _render(
+        df, lambda i: encode_mrv([_pixels(i * 31 + f * 101, 16, 8) for f in range(8)])
+    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = np.arange(16 * 8, dtype=np.int64)
-        for pdf in it:
-            payloads = []
-            for i in pdf["doc_id"]:
-                frames = [
-                    (((int(i) * 31 + f * 101 + idx * 7) % 256).astype(np.uint8)).reshape(8, 16)
-                    for f in range(8)
-                ]
-                payloads.append(encode_mrv(frames))
-            yield pd.DataFrame({"id": pdf["doc_id"].astype("int64"), "payload": payloads})
 
-    return df.select("doc_id").mapInPandas(batches, schema="id long, payload binary")
+def _frame_stats(i: int, payload: bytes) -> tuple:
+    (n_frames,) = struct.unpack_from("<I", payload, 4)
+    frames = decode_mrv_frames(payload, every_n=3)
+    stack = np.stack([fr for _, fr in frames]).astype(np.int64)
+    return i, n_frames, len(frames), int(stack.sum()), int(stack.min()), int(stack.max())
 
 
 def sampled_frame_stats(df: DataFrame) -> DataFrame:
@@ -467,34 +466,11 @@ def sampled_frame_stats(df: DataFrame) -> DataFrame:
     (id, n_frames, n_sampled, px_sum, px_min, px_max) over the sampled
     frames only — full-resolution rasters never leave the batch (m08's
     fusion discipline applied to the video template)."""
-    import struct
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for i, p in zip(pdf["id"], pdf["payload"]):
-                payload = bytes(p)
-                (n_frames,) = struct.unpack_from("<I", payload, 4)
-                frames = decode_mrv_frames(payload, every_n=3)
-                stack = np.stack([fr for _, fr in frames]).astype(np.int64)
-                rows.append(
-                    (
-                        int(i),
-                        int(n_frames),
-                        len(frames),
-                        int(stack.sum()),
-                        int(stack.min()),
-                        int(stack.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "n_frames", "n_sampled", "px_sum", "px_min", "px_max"],
-            )
-
-    return df.mapInPandas(
-        batches,
-        schema="id long, n_frames long, n_sampled long, px_sum long, px_min long, px_max long",
+    return _row_map(
+        df,
+        ["id", "payload"],
+        _frame_stats,
+        "id long, n_frames long, n_sampled long, px_sum long, px_min long, px_max long",
     )
 
 
@@ -508,44 +484,27 @@ def ahash_64(df: DataFrame) -> DataFrame:
     raster into an 8x8 grid of blocks, block SUM per cell (= mean x
     block size, kept as the integer sum), bit k (row-major cell k) set
     iff 64*cell_sum > total_sum.  The hash is returned as two
-    non-negative 32-bit halves (``lo`` bits 0-31, ``hi`` bits 32-63):
-    keeping bit 63 out of a BIGINT's sign position sidesteps
-    arithmetic-vs-logical shift divergence between engines.
+    non-negative 32-bit halves (``lo`` bits 0-31, ``hi`` bits 32-63).
 
     Emits (id, lo, hi).  Near-duplicate images then band-join on 16-bit
     hash quarters and verify by XOR popcount — m11 composes this with
     the d-series banding paradigm.
     """
+    return _row_map(
+        df,
+        ["id", "payload"],
+        lambda i, p: (i, *_pack_words(_block_bits(decode_image(p), 8, 8, "ahash_64"))),
+        "id long, lo long, hi long",
+    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, los, his = [], [], []
-        for pdf in it:
-            for i, pl in zip(pdf["id"], pdf["payload"]):
-                img = decode_image(bytes(pl))
-                h, w = img.shape
-                if h % 8 or w % 8:
-                    raise ValueError(f"ahash_64: dims {h}x{w} not divisible by 8")
-                cells = (
-                    img.astype(np.int64)
-                    .reshape(8, h // 8, 8, w // 8)
-                    .sum(axis=(1, 3))
-                    .ravel()
-                )
-                total = int(cells.sum())
-                bits = cells * 64 > total
-                lo = hi = 0
-                for k in range(32):
-                    if bits[k]:
-                        lo |= 1 << k
-                    if bits[k + 32]:
-                        hi |= 1 << k
-                ids.append(int(i))
-                los.append(lo)
-                his.append(hi)
-            yield pd.DataFrame({"id": ids, "lo": los, "hi": his})
-            ids, los, his = [], [], []
 
-    return df.mapInPandas(batches, schema="id long, lo long, hi long")
+@functools.lru_cache(maxsize=128)
+def _seeded_wav(seed: int) -> bytes:
+    samples = [
+        int(hashlib.md5(f"{seed}_{i}".encode()).hexdigest()[:4], 16) % 4096 - 2048
+        for i in range(256)
+    ]
+    return encode_wav(np.array(samples, dtype=np.int64))
 
 
 def render_wav_payloads_seeded(df: DataFrame) -> DataFrame:
@@ -558,31 +517,19 @@ def render_wav_payloads_seeded(df: DataFrame) -> DataFrame:
     With md5 samples, fingerprints of DIFFERENT classes are ~iid random
     bits, so near-dup pairs are exactly the planted classes plus a
     negligible random tail — the healthy dedup workload shape.  The
-    128 signals memoize per batch; bytes are real WAV (encode_wav)."""
-    import hashlib
+    128 signals memoize per worker; bytes are real WAV (encode_wav)."""
+    return _render(df, lambda i: _seeded_wav(i % 128))
 
-    def signal(seed: int) -> "np.ndarray":
-        return np.array(
-            [
-                int(hashlib.md5(f"{seed}_{i}".encode()).hexdigest()[:4], 16) % 4096
-                - 2048
-                for i in range(256)
-            ],
-            dtype=np.int64,
+
+def _audio_fingerprint(i: int, payload: bytes) -> tuple:
+    samples, _rate = decode_wav(payload)
+    s = samples.astype(np.int64)
+    if len(s) % 64:
+        raise ValueError(
+            f"audio_fingerprint_64: {len(s)} samples not divisible by 64 frames"
         )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[int, bytes] = {}
-        for pdf in it:
-            payloads = []
-            for i in pdf["doc_id"]:
-                seed = int(i) % 128
-                if seed not in cache:
-                    cache[seed] = encode_wav(signal(seed))
-                payloads.append(cache[seed])
-            yield pd.DataFrame({"id": pdf["doc_id"].astype("int64"), "payload": payloads})
-
-    return df.select("doc_id").mapInPandas(batches, schema="id long, payload binary")
+    energy = (s * s).reshape(1, -1)
+    return (i, *_pack_words(_block_bits(energy, 1, 64, "audio_fingerprint_64")))
 
 
 def audio_fingerprint_64(df: DataFrame) -> DataFrame:
@@ -594,32 +541,7 @@ def audio_fingerprint_64(df: DataFrame) -> DataFrame:
     end to end, hash returned as two non-negative 32-bit halves
     (``lo``/``hi``) — same sign-safe layout as ``ahash_64``, same
     banding/verify composition downstream (m12)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, los, his = [], [], []
-            for i, pl in zip(pdf["id"], pdf["payload"]):
-                samples, _rate = decode_wav(bytes(pl))
-                s = samples.astype(np.int64)
-                if len(s) % 64:
-                    raise ValueError(
-                        f"audio_fingerprint_64: {len(s)} samples not divisible "
-                        "by 64 frames"
-                    )
-                en = (s.reshape(64, -1) ** 2).sum(axis=1)
-                bits = en * 64 > en.sum()
-                lo = hi = 0
-                for k in range(32):
-                    if bits[k]:
-                        lo |= 1 << k
-                    if bits[k + 32]:
-                        hi |= 1 << k
-                ids.append(int(i))
-                los.append(lo)
-                his.append(hi)
-            yield pd.DataFrame({"id": ids, "lo": los, "hi": his})
-
-    return df.mapInPandas(batches, schema="id long, lo long, hi long")
+    return _row_map(df, ["id", "payload"], _audio_fingerprint, "id long, lo long, hi long")
 
 
 def ahash_128(df: DataFrame) -> DataFrame:
@@ -634,36 +556,26 @@ def ahash_128(df: DataFrame) -> DataFrame:
     128·cell_sum > total_sum.  Emits (id, w0, w1, w2, w3) — four
     non-negative 32-bit words, bits 0-31 in w0 through bits 96-127 in
     w3 (the ahash_64 sign-bit discipline, four ways)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list[int]] = {"id": [], "w0": [], "w1": [], "w2": [], "w3": []}
-        for pdf in it:
-            for i, pl in zip(pdf["id"], pdf["payload"]):
-                img = decode_image(bytes(pl))
-                h, w = img.shape
-                if h % 8 or w % 16:
-                    raise ValueError(f"ahash_128: dims {h}x{w} not divisible by 8x16")
-                cells = (
-                    img.astype(np.int64)
-                    .reshape(8, h // 8, 16, w // 16)
-                    .sum(axis=(1, 3))
-                    .ravel()
-                )
-                total = int(cells.sum())
-                bits = cells * 128 > total
-                words = [0, 0, 0, 0]
-                for k in range(128):
-                    if bits[k]:
-                        words[k // 32] |= 1 << (k % 32)
-                out["id"].append(int(i))
-                for j in range(4):
-                    out[f"w{j}"].append(words[j])
-            yield pd.DataFrame(out)
-            out = {"id": [], "w0": [], "w1": [], "w2": [], "w3": []}
-
-    return df.mapInPandas(
-        batches, schema="id long, w0 long, w1 long, w2 long, w3 long"
+    return _row_map(
+        df,
+        ["id", "payload"],
+        lambda i, p: (i, *_pack_words(_block_bits(decode_image(p), 8, 16, "ahash_128"))),
+        "id long, w0 long, w1 long, w2 long, w3 long",
     )
+
+
+def _video_majority_hash(i: int, payload: bytes) -> tuple:
+    frames = decode_mrv_frames(payload, every_n=3)
+    if not frames:
+        # Zero decoded frames would make the majority threshold 0, so
+        # every bit votes true and ALL empty clips silently collapse
+        # into one all-ones fingerprint — reject instead (mirrors the
+        # dims-not-divisible-by-8 guard).
+        raise ValueError(f"video_majority_ahash: payload id={i} decoded to zero frames")
+    votes = sum(
+        _block_bits(img, 8, 8, "video_majority_ahash").astype(np.int64) for _, img in frames
+    )
+    return (i, *_pack_words(votes >= (len(frames) + 1) // 2))
 
 
 def video_majority_ahash(df: DataFrame) -> DataFrame:
@@ -681,91 +593,37 @@ def video_majority_ahash(df: DataFrame) -> DataFrame:
     pigeonhole banding → star-CC) composes unchanged; m16 is the video
     member of the per-modality dedup matrix (text d-series, image m11,
     audio m12)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, los, his = [], [], []
-        for pdf in it:
-            for i, p in zip(pdf["id"], pdf["payload"]):
-                frames = decode_mrv_frames(bytes(p), every_n=3)
-                if not frames:
-                    # Zero decoded frames would make the majority
-                    # threshold 0, so every bit votes true and ALL empty
-                    # clips silently collapse into one all-ones
-                    # fingerprint — reject instead (mirrors the
-                    # dims-not-divisible-by-8 guard below).
-                    raise ValueError(
-                        f"video_majority_ahash: payload id={int(i)} "
-                        "decoded to zero frames"
-                    )
-                votes = np.zeros(64, dtype=np.int64)
-                for _fidx, img in frames:
-                    h, w = img.shape
-                    if h % 8 or w % 8:
-                        raise ValueError(
-                            f"video_majority_ahash: dims {h}x{w} not divisible by 8"
-                        )
-                    cells = (
-                        img.astype(np.int64)
-                        .reshape(8, h // 8, 8, w // 8)
-                        .sum(axis=(1, 3))
-                        .ravel()
-                    )
-                    total = int(cells.sum())
-                    votes += (cells * 64 > total).astype(np.int64)
-                maj = votes >= (len(frames) + 1) // 2
-                lo = hi = 0
-                for k in range(32):
-                    if maj[k]:
-                        lo |= 1 << k
-                    if maj[k + 32]:
-                        hi |= 1 << k
-                ids.append(int(i))
-                los.append(lo)
-                his.append(hi)
-        if ids:
-            yield pd.DataFrame({"id": ids, "lo": los, "hi": his})
-
-    return df.select("id", "payload").mapInPandas(batches, schema="id long, lo long, hi long")
+    return _row_map(df, ["id", "payload"], _video_majority_hash, "id long, lo long, hi long")
 
 
-def render_corrupt_pgm_batches(it):
-    """m10's render kernel as a module-level mapInPandas stage (round 7:
-    shared by batch m10 and the streaming DLQ st24): the doc_id pixel
-    law rastered to PGM, with every 13th payload truncated mid-raster —
-    the deterministic corruption both oracles replay."""
-    import numpy as np
-    import pandas as pd
-
-    idx = np.arange(512, dtype=np.int64)
-    for pdf in it:
-        payloads = []
-        for i in pdf["doc_id"]:
-            img = (((int(i) * 31 + idx * 7) % 256).astype(np.uint8)).reshape(16, 32)
-            p = encode_pgm(img)
-            if int(i) % 13 == 0:
-                p = p[: len(p) // 2]  # truncate mid-raster
-            payloads.append(p)
-        yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-        )
+def _corrupt_pgm(i: int) -> bytes:
+    """The 32x16 pixel law rastered to PGM, with every 13th payload
+    truncated mid-raster — the deterministic corruption m10 and st24's
+    oracles replay."""
+    p = encode_pgm(_pixels(i * 31, 32, 16))
+    return p[: len(p) // 2] if i % 13 == 0 else p
 
 
-def tolerant_decode_batches(it):
-    """m10's decode kernel as a module-level mapInPandas stage: per-row
-    classify — 'ok' rows carry the pixel sum, corrupt rows land in the
-    quarantine status with ZERO exceptions escaping the kernel."""
-    import numpy as np
-    import pandas as pd
+def _tolerant_decode_row(i: int, payload: bytes) -> tuple:
+    try:
+        img = decode_image(payload)
+        if img.size != 512:
+            raise ValueError("short raster")
+        return i, "ok", int(img.astype(np.int64).sum())
+    except Exception:
+        return i, "corrupt_truncated", 0
 
-    for pdf in it:
-        rows = []
-        for i, p in zip(pdf["doc_id"], pdf["payload"]):
-            b = bytes(p)
-            try:
-                img = decode_image(b)
-                if img.size != 512:
-                    raise ValueError("short raster")
-                rows.append((int(i), "ok", int(img.astype(np.int64).sum())))
-            except Exception:
-                rows.append((int(i), "corrupt_truncated", 0))
-        yield pd.DataFrame(rows, columns=["doc_id", "decode_status", "px_sum"])
+
+def tolerant_decode(df: DataFrame) -> DataFrame:
+    """Error-tolerant decode over a corrupting media store (m10, and
+    the streaming DLQ st24): render each ``doc_id``'s payload by the
+    corruption law, then classify per row — 'ok' rows carry the pixel
+    sum, corrupt rows land in the quarantine status with ZERO
+    exceptions escaping the stage.  Emits (doc_id, decode_status,
+    px_sum)."""
+    return _row_map(
+        _render(df, _corrupt_pgm),
+        ["id", "payload"],
+        _tolerant_decode_row,
+        "doc_id long, decode_status string, px_sum long",
+    )

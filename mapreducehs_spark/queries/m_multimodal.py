@@ -2,11 +2,15 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreducehs_spark.operators import dedup, multimodal, text
 from mapreducehs_spark.operators.iteration import Materialization, materialize
+from mapreducehs_spark.operators.sampling import grouped_prefix_sums
+from mapreducehs_spark.sources.catalog import FIXTURE_ROOT, derived_fixture, guard_driver_fixture
 
 from mapreducehs_spark.queries._registry import query
 from mapreducehs_spark.queries._shared import (
@@ -86,11 +90,8 @@ def m03_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal frame-sampling plan shape (every-10th-frame explode
     over payload metadata; decode itself is the documented stub —
     operators/multimodal.frame_sample_plan)."""
-    from mapreducehs_spark.operators.multimodal import attach_payload, frame_sample_plan
-
     docs = _t(spark, sf_dir, "documents")
-    with_payload = attach_payload(docs)
-    sampled = frame_sample_plan(with_payload)
+    sampled = multimodal.frame_sample_plan(multimodal.attach_payload(docs))
     return sampled.select(
         "doc_id",
         F.col("meta.n_bytes").alias("n_bytes"),
@@ -117,10 +118,8 @@ def m04_arrow_payload_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     array — no per-cell Python objects.  Oracle recomputes byte stats
     from the source text (payload = UTF-8 bytes; the corpus is ASCII so
     per-char ascii() equals per-byte value)."""
-    from mapreducehs_spark.operators.multimodal import attach_payload, payload_byte_stats
-
     docs = _t(spark, sf_dir, "documents")
-    return payload_byte_stats(attach_payload(docs))
+    return multimodal.payload_byte_stats(multimodal.attach_payload(docs))
 
 
 @query(
@@ -150,14 +149,9 @@ def m06_image_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     what is value-checked.  Formats needing codec libs stay env-gated;
     the pipeline shape (binary column → decode kernel → stats) is the
     production one."""
-    from mapreducehs_spark.operators.multimodal import (
-        decoded_image_stats,
-        render_pgm_payloads,
-    )
-
     docs = _t(spark, sf_dir, "documents")
-    payloads = render_pgm_payloads(docs)
-    return decoded_image_stats(payloads).withColumnRenamed("id", "doc_id")
+    payloads = multimodal.render_pgm_payloads(docs)
+    return multimodal.decoded_image_stats(payloads).withColumnRenamed("id", "doc_id")
 
 
 @query(
@@ -180,15 +174,6 @@ def m05_pointer_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixture files were written from.  The fixture write is a
     one-time driver loop (it IS the external media store); everything
     after is distributed."""
-    import os
-
-    from mapreducehs_spark.operators.multimodal import read_binary_dir
-    from mapreducehs_spark.sources.catalog import (
-        FIXTURE_ROOT,
-        derived_fixture,
-        guard_driver_fixture,
-    )
-
     def _write_media(tmp: str) -> None:
         os.makedirs(tmp, exist_ok=True)
         docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -200,7 +185,7 @@ def m05_pointer_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = derived_fixture(
         os.path.join(FIXTURE_ROOT, "mapreducehs_media"), sf_dir, ("documents",), _write_media
     )
-    bins = read_binary_dir(spark, os.path.join(base, "*.bin"))
+    bins = multimodal.read_binary_dir(spark, os.path.join(base, "*.bin"))
     return bins.select(
         F.element_at(F.split(F.col("path"), "/"), -1).alias("file_name"),
         F.col("length").alias("n_bytes"),
@@ -238,14 +223,9 @@ def m07_audio_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself is value-checked; stats stay integer (amp/square sums) so
     the check is bit-exact.  Codec-dependent formats (mp3/flac) remain
     env-gated stubs; this pins the real binary-parsing path."""
-    from mapreducehs_spark.operators.multimodal import (
-        decoded_audio_stats,
-        render_wav_payloads,
-    )
-
     docs = _t(spark, sf_dir, "documents")
-    payloads = render_wav_payloads(docs)
-    return decoded_audio_stats(payloads).withColumnRenamed("id", "doc_id")
+    payloads = multimodal.render_wav_payloads(docs)
+    return multimodal.decoded_audio_stats(payloads).withColumnRenamed("id", "doc_id")
 
 
 @query(
@@ -275,14 +255,9 @@ def m08_image_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampling is bit-deterministic, so DuckDB value-checks the resized
     stats by replaying the pixel law on the sampled (even-row,
     even-col) grid — the resize kernel itself is what is checked."""
-    from mapreducehs_spark.operators.multimodal import (
-        render_pgm_payloads,
-        resized_image_stats,
-    )
-
     docs = _t(spark, sf_dir, "documents")
-    payloads = render_pgm_payloads(docs)
-    return resized_image_stats(payloads).withColumnRenamed("id", "doc_id")
+    payloads = multimodal.render_pgm_payloads(docs)
+    return multimodal.resized_image_stats(payloads).withColumnRenamed("id", "doc_id")
 
 
 @query(
@@ -318,14 +293,9 @@ def m09_video_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     without demuxing, so encode→demux→sample→decode is value-checked
     end to end.  Codec formats (h264/vp9) remain env-gated; the
     Spark-side shape is the production one."""
-    from mapreducehs_spark.operators.multimodal import (
-        render_mrv_payloads,
-        sampled_frame_stats,
-    )
-
     docs = _t(spark, sf_dir, "documents")
-    payloads = render_mrv_payloads(docs)
-    return sampled_frame_stats(payloads).withColumnRenamed("id", "doc_id")
+    payloads = multimodal.render_mrv_payloads(docs)
+    return multimodal.sampled_frame_stats(payloads).withColumnRenamed("id", "doc_id")
 
 
 @query(
@@ -356,43 +326,55 @@ def m10_tolerant_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     exceptions escaping the kernel — the badRecords/DLQ pattern as a
     column, so the pipeline's error budget is itself a queryable,
     value-checked result."""
-    from mapreducehs_spark.operators.multimodal import (
-        render_corrupt_pgm_batches,
-        tolerant_decode_batches,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-
-    # the render/decode kernels live in operators/multimodal.py since
-    # round 7, shared verbatim with the streaming DLQ twin (st24)
-    decoded = (
-        docs.select("doc_id")
-        .mapInPandas(render_corrupt_pgm_batches, schema="doc_id long, payload binary")
-        .mapInPandas(
-            tolerant_decode_batches,
-            schema="doc_id long, decode_status string, px_sum long",
-        )
-    )
+    decoded = multimodal.tolerant_decode(_t(spark, sf_dir, "documents"))
     return decoded.groupBy("decode_status").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_payloads"),
         F.sum("px_sum").cast("bigint").alias("px_sum_total"),
     )
 
 
-#: Shared oracle tail for the multimodal canonical dedup (m11/m12):
-#: takes a CTE ``h`` of (doc_id, lo, hi) 64-bit hashes and replays
-#: hash64_canonical_dedup — exact-dup contraction to distinct hashes,
-#: pigeonhole banding + popcount verify between hash reps, recursive-CTE
-#: component closure, then (member, rep, class_size) broadcast back to
-#: members.  The closure runs over DISTINCT HASHES, not members, so the
-#: recursion stays tiny even when duplicate classes are huge.
-_HASH64_CANONICAL_TAIL = """grp AS MATERIALIZED (
-      SELECT lo, hi, min(doc_id) AS hrep, CAST(count(*) AS BIGINT) AS cnt
-      FROM h GROUP BY lo, hi
+#: Fingerprint layouts for the canonical-dedup oracles: word columns
+#: plus the four pigeonhole band keys over them — a 64-bit hash banded
+#: on its 16-bit quarters, a 128-bit hash on its 32-bit words (the
+#: ``key_cols``/``bands_arr`` of dedup.banded_canonical_dedup).
+_HASH64 = (["lo", "hi"], ["lo & 65535", "lo >> 16", "hi & 65535", "hi >> 16"])
+_HASH128 = (["w0", "w1", "w2", "w3"], ["w0", "w1", "w2", "w3"])
+
+
+def _packed_h(words: list[str]) -> str:
+    """The ``h`` CTE: a CTE ``bits`` of (doc_id, k, bit) rows packed
+    into non-negative 32-bit word columns ``words``, bit k in word
+    k // 32 at position k % 32 (multimodal._pack_words's layout)."""
+    cols = ",\n             ".join(
+        f"CAST(sum(CASE WHEN k // 32 = {j} THEN bit << (k % 32) ELSE 0 END) AS BIGINT) AS {w}"
+        for j, w in enumerate(words)
+    )
+    return f"""h AS MATERIALIZED (
+      SELECT doc_id,
+             {cols}
+      FROM bits GROUP BY doc_id
+    )"""
+
+
+def _hash_dedup_oracle(bit_ctes: str, words: list[str], bands: list[str]) -> str:
+    """A canonical media-dedup oracle: ``bit_ctes`` derive a CTE
+    ``bits`` of (doc_id, k, bit) from the render law, ``_packed_h``
+    packs it into ``words``, and the tail replays
+    banded_canonical_dedup — exact-dup contraction to distinct hashes,
+    pigeonhole banding on ``bands`` + popcount verify between hash
+    reps, recursive-CTE component closure, then (member, rep,
+    class_size) broadcast back to members.  The closure runs over
+    DISTINCT HASHES, not members, so the recursion stays tiny even when
+    duplicate classes are huge."""
+    keys = ", ".join(words)
+    band_keys = " ".join(f"WHEN {b} THEN {e}" for b, e in enumerate(bands[:-1]))
+    hamming = " + ".join(f"bit_count(xor(ga.{w}, gb.{w}))" for w in words)
+    return f"""
+    WITH RECURSIVE {bit_ctes}, {_packed_h(words)}, grp AS MATERIALIZED (
+      SELECT {keys}, min(doc_id) AS hrep, CAST(count(*) AS BIGINT) AS cnt
+      FROM h GROUP BY {keys}
     ), gbanded AS MATERIALIZED (
-      SELECT hrep, b,
-             CASE b WHEN 0 THEN lo & 65535 WHEN 1 THEN lo >> 16
-                    WHEN 2 THEN hi & 65535 ELSE hi >> 16 END AS bk
+      SELECT hrep, b, CASE b {band_keys} ELSE {bands[-1]} END AS bk
       FROM grp, unnest(range(4)) tb(b)
     ), gcand AS (
       SELECT DISTINCT a.hrep AS ra, b.hrep AS rb
@@ -400,7 +382,7 @@ _HASH64_CANONICAL_TAIL = """grp AS MATERIALIZED (
     ), pe AS MATERIALIZED (
       SELECT c.ra, c.rb
       FROM gcand c JOIN grp ga ON ga.hrep = c.ra JOIN grp gb ON gb.hrep = c.rb
-      WHERE bit_count(xor(ga.lo, gb.lo)) + bit_count(xor(ga.hi, gb.hi)) <= 3
+      WHERE {hamming} <= 3
     ), edges AS MATERIALIZED (
       SELECT ra AS src, rb AS dst FROM pe UNION SELECT rb, ra FROM pe
     ), reach(src, dst) AS (
@@ -410,23 +392,22 @@ _HASH64_CANONICAL_TAIL = """grp AS MATERIALIZED (
     ), comp AS (
       SELECT src AS hrep, min(dst) AS comp FROM reach GROUP BY src
     ), crep AS MATERIALIZED (
-      SELECT g.lo, g.hi, g.cnt, coalesce(c.comp, g.hrep) AS comp
+      SELECT {", ".join(f"g.{w}" for w in words)}, g.cnt, coalesce(c.comp, g.hrep) AS comp
       FROM grp g LEFT JOIN comp c ON c.hrep = g.hrep
     ), sizes AS (
       SELECT comp, CAST(sum(cnt) AS BIGINT) AS class_size FROM crep GROUP BY comp
     )
     SELECT h.doc_id AS member, CAST(cr.comp AS BIGINT) AS rep, s.class_size
-    FROM h JOIN crep cr ON cr.lo = h.lo AND cr.hi = h.hi
+    FROM h JOIN crep cr ON {" AND ".join(f"cr.{w} = h.{w}" for w in words)}
     JOIN sizes s ON s.comp = cr.comp
     WHERE h.doc_id != cr.comp
     """
 
 
-#: m11's full oracle as a constant so m14's cross-modal composition can
-#: embed the identical image-class replay as a subquery.
-#: The ahash-from-doc_id law (cells → tot → bits → h(lo,hi)) shared by
-#: m11's dedup oracle and m15's alignment-verification oracle.
-_AHASH_CTES = """cells AS MATERIALIZED (
+#: The ahash-from-doc_id law (cells → tot → bits) shared by m11's
+#: dedup oracle (which m14 embeds) and m15's alignment-verification
+#: oracle.
+_AHASH_BITS = """cells AS MATERIALIZED (
       SELECT doc_id, r, c,
              CAST(sum((doc_id * 31 + ((2 * r + br) * 32 + (4 * c + bc)) * 7) % 256)
                   AS BIGINT) AS cs
@@ -440,15 +421,10 @@ _AHASH_CTES = """cells AS MATERIALIZED (
       SELECT cells.doc_id, (r * 8 + c) AS k,
              CASE WHEN cs * 64 > total THEN 1::BIGINT ELSE 0::BIGINT END AS bit
       FROM cells JOIN tot USING (doc_id)
-    ), h AS MATERIALIZED (
-      SELECT doc_id,
-             CAST(sum(CASE WHEN k < 32 THEN bit << k ELSE 0 END) AS BIGINT) AS lo,
-             CAST(sum(CASE WHEN k >= 32 THEN bit << (k - 32) ELSE 0 END) AS BIGINT) AS hi
-      FROM bits GROUP BY doc_id
     )"""
 
 
-_M11_ORACLE = "\n    WITH RECURSIVE " + _AHASH_CTES + ", " + _HASH64_CANONICAL_TAIL
+_M11_ORACLE = _hash_dedup_oracle(_AHASH_BITS, *_HASH64)
 
 
 @query("m11_phash_dedup", oracle=_M11_ORACLE)
@@ -469,17 +445,15 @@ def m11_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     16-bit quarters).  At 100 TB: hashing is scan-shaped over the media
     store manifest (m05's pointer layout), the shuffle carries 64-bit
     hashes — never pixels — and no stage is quadratic in members."""
-    from mapreducehs_spark.operators.multimodal import ahash_64, render_pgm_payloads
-
     docs = _t(spark, sf_dir, "documents")
-    payloads = render_pgm_payloads(docs)
-    return dedup.hash64_canonical_dedup(ahash_64(payloads))
+    payloads = multimodal.render_pgm_payloads(docs)
+    return dedup.hash64_canonical_dedup(multimodal.ahash_64(payloads))
 
 
 @query(
     "m12_audio_fingerprint_dedup",
-    oracle="""
-    WITH RECURSIVE samples AS (
+    oracle=_hash_dedup_oracle(
+        """samples AS (
       SELECT doc_id, i,
              ('0x' || substr(md5((doc_id % 128)::VARCHAR || '_' || i::VARCHAR), 1, 4))::INT
                % 4096 - 2048 AS s
@@ -493,13 +467,9 @@ def m11_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT en.doc_id, k,
              CASE WHEN e * 64 > te THEN 1::BIGINT ELSE 0::BIGINT END AS bit
       FROM en JOIN tot USING (doc_id)
-    ), h AS MATERIALIZED (
-      SELECT doc_id,
-             CAST(sum(CASE WHEN k < 32 THEN bit << k ELSE 0 END) AS BIGINT) AS lo,
-             CAST(sum(CASE WHEN k >= 32 THEN bit << (k - 32) ELSE 0 END) AS BIGINT) AS hi
-      FROM bits GROUP BY doc_id
-    ), """
-    + _HASH64_CANONICAL_TAIL,
+    )""",
+        *_HASH64,
+    ),
 )
 def m12_audio_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AUDIO near-dup dedup — completes the multimodal×dedup matrix
@@ -518,60 +488,15 @@ def m12_audio_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits → banding → popcount → components replays bit-for-bit in
     DuckDB.  At 100 TB: fingerprints shuffle, audio bytes never do
     (m05's pointer story)."""
-    from mapreducehs_spark.operators.multimodal import (
-        audio_fingerprint_64,
-        render_wav_payloads_seeded,
-    )
-
     docs = _t(spark, sf_dir, "documents")
-    payloads = render_wav_payloads_seeded(docs)
-    return dedup.hash64_canonical_dedup(audio_fingerprint_64(payloads))
-
-
-#: hash128_canonical_dedup's oracle tail: takes a CTE ``h`` of
-#: (doc_id, w0..w3) 32-bit words and replays the 4x32-bit-band
-#: composition — same closure-over-distinct-hashes shape as
-#: _HASH64_CANONICAL_TAIL, wider bands.
-_HASH128_CANONICAL_TAIL = """grp AS MATERIALIZED (
-      SELECT w0, w1, w2, w3, min(doc_id) AS hrep, CAST(count(*) AS BIGINT) AS cnt
-      FROM h GROUP BY w0, w1, w2, w3
-    ), gbanded AS MATERIALIZED (
-      SELECT hrep, b,
-             CASE b WHEN 0 THEN w0 WHEN 1 THEN w1 WHEN 2 THEN w2 ELSE w3 END AS bk
-      FROM grp, unnest(range(4)) tb(b)
-    ), gcand AS (
-      SELECT DISTINCT a.hrep AS ra, b.hrep AS rb
-      FROM gbanded a JOIN gbanded b ON a.b = b.b AND a.bk = b.bk AND a.hrep < b.hrep
-    ), pe AS MATERIALIZED (
-      SELECT c.ra, c.rb
-      FROM gcand c JOIN grp ga ON ga.hrep = c.ra JOIN grp gb ON gb.hrep = c.rb
-      WHERE bit_count(xor(ga.w0, gb.w0)) + bit_count(xor(ga.w1, gb.w1))
-            + bit_count(xor(ga.w2, gb.w2)) + bit_count(xor(ga.w3, gb.w3)) <= 3
-    ), edges AS MATERIALIZED (
-      SELECT ra AS src, rb AS dst FROM pe UNION SELECT rb, ra FROM pe
-    ), reach(src, dst) AS (
-      SELECT DISTINCT src, src FROM edges
-      UNION
-      SELECT e.src, r.dst FROM edges e JOIN reach r ON e.dst = r.src
-    ), comp AS (
-      SELECT src AS hrep, min(dst) AS comp FROM reach GROUP BY src
-    ), crep AS MATERIALIZED (
-      SELECT g.w0, g.w1, g.w2, g.w3, g.cnt, coalesce(c.comp, g.hrep) AS comp
-      FROM grp g LEFT JOIN comp c ON c.hrep = g.hrep
-    ), sizes AS (
-      SELECT comp, CAST(sum(cnt) AS BIGINT) AS class_size FROM crep GROUP BY comp
-    )
-    SELECT h.doc_id AS member, CAST(cr.comp AS BIGINT) AS rep, s.class_size
-    FROM h JOIN crep cr ON cr.w0 = h.w0 AND cr.w1 = h.w1 AND cr.w2 = h.w2 AND cr.w3 = h.w3
-    JOIN sizes s ON s.comp = cr.comp
-    WHERE h.doc_id != cr.comp
-    """
+    payloads = multimodal.render_wav_payloads_seeded(docs)
+    return dedup.hash64_canonical_dedup(multimodal.audio_fingerprint_64(payloads))
 
 
 @query(
     "m13_phash128_dedup",
-    oracle="""
-    WITH RECURSIVE cells AS MATERIALIZED (
+    oracle=_hash_dedup_oracle(
+        """cells AS MATERIALIZED (
       SELECT doc_id, r, c,
              CAST(sum((doc_id * 31 + ((4 * r + br) * 64 + (4 * c + bc)) * 7) % 256)
                   AS BIGINT) AS cs
@@ -585,15 +510,9 @@ _HASH128_CANONICAL_TAIL = """grp AS MATERIALIZED (
       SELECT cells.doc_id, (r * 16 + c) AS k,
              CASE WHEN cs * 128 > total THEN 1::BIGINT ELSE 0::BIGINT END AS bit
       FROM cells JOIN tot USING (doc_id)
-    ), h AS MATERIALIZED (
-      SELECT doc_id,
-             CAST(sum(CASE WHEN k // 32 = 0 THEN bit << (k % 32) ELSE 0 END) AS BIGINT) AS w0,
-             CAST(sum(CASE WHEN k // 32 = 1 THEN bit << (k % 32) ELSE 0 END) AS BIGINT) AS w1,
-             CAST(sum(CASE WHEN k // 32 = 2 THEN bit << (k % 32) ELSE 0 END) AS BIGINT) AS w2,
-             CAST(sum(CASE WHEN k // 32 = 3 THEN bit << (k % 32) ELSE 0 END) AS BIGINT) AS w3
-      FROM bits GROUP BY doc_id
-    ), """
-    + _HASH128_CANONICAL_TAIL,
+    )""",
+        *_HASH128,
+    ),
 )
 def m13_phash128_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """128-BIT perceptual-hash dedup (round 7) — m11's composition at
@@ -610,11 +529,9 @@ def m13_phash128_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     class_size)), and the whole pipeline — pixel law, 128 block sums,
     threshold bits, word packing, banding, closure — replays
     bit-for-bit in DuckDB."""
-    from mapreducehs_spark.operators.multimodal import ahash_128, render_pgm_payloads
-
     docs = _t(spark, sf_dir, "documents")
-    payloads = render_pgm_payloads(docs, width=64, height=32)
-    return dedup.hash128_canonical_dedup(ahash_128(payloads))
+    payloads = multimodal.render_pgm_payloads(docs, width=64, height=32)
+    return dedup.hash128_canonical_dedup(multimodal.ahash_128(payloads))
 
 
 def _m14_oracle() -> str:
@@ -700,12 +617,10 @@ def m14_crossmodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     is identical by construction (every class edge is a path in the
     raw edge set and vice versa), which the oracle value-check
     witnesses at three scale factors."""
-    from mapreducehs_spark.operators.multimodal import ahash_64, render_pgm_payloads
-
     docs = _t(spark, sf_dir, "documents")
-    payloads = render_pgm_payloads(docs)
+    payloads = multimodal.render_pgm_payloads(docs)
     with materialize(spark) as m:
-        img = dedup.hash64_duplicate_edges(m, ahash_64(payloads))
+        img = dedup.hash64_duplicate_edges(m, multimodal.ahash_64(payloads))
         txt = dedup.near_dedup_verified_edges_checked(
             m, docs, jaccard_threshold=0.6
         )
@@ -726,12 +641,12 @@ def m14_crossmodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _m15_oracle() -> str:
-    """m15: the shared ahash-from-doc_id law (m11's _AHASH_CTES) joined
+    """m15: the shared ahash-from-doc_id law (m11's _AHASH_BITS) joined
     against the deterministic swapped-pairing rule; flagged pairs are
     those whose decoded-image hash disagrees with the caption-derived
     expectation by more than ``max_hamming`` bits."""
     return f"""
-    WITH {_AHASH_CTES}, pairs AS (
+    WITH {_AHASH_BITS}, {_packed_h(_HASH64[0])}, pairs AS (
       SELECT doc_id,
              CASE WHEN doc_id % 7 = 3 THEN doc_id - 1 ELSE doc_id END AS img_of
       FROM documents
@@ -768,12 +683,10 @@ def m15_alignment_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash frame is checkpointed once and handed out with the result —
     two joins consume it without re-decoding the corpus
     (simhash_checked discipline)."""
-    from mapreducehs_spark.operators.multimodal import ahash_64, render_pgm_payloads
-
     docs = _t(spark, sf_dir, "documents")
-    payloads = render_pgm_payloads(docs)
+    payloads = multimodal.render_pgm_payloads(docs)
     with materialize(spark) as m:
-        ih = m.result(ahash_64(payloads))
+        ih = m.result(multimodal.ahash_64(payloads))
     pairs = docs.select(
         "doc_id",
         F.when(F.col("doc_id") % 7 == 3, F.col("doc_id") - 1)
@@ -801,9 +714,8 @@ def m15_alignment_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: m16's frame-term ahash CTEs: m09's pixel law (id·31 + f·101 + 7i mod
 #: 256) through the 8x8 block-sum bit rule per SAMPLED frame, majority-
-#: pooled across frames {0,3,6} into one 64-bit (lo, hi) pair that
-#: feeds the shared canonical-dedup tail.
-_VIDEO_AHASH_CTES = """cells AS MATERIALIZED (
+#: pooled across frames {0,3,6} into one 64-bit clip's ``bits``.
+_VIDEO_AHASH_BITS = """cells AS MATERIALIZED (
       SELECT doc_id, f, r, c,
              CAST(sum((doc_id * 31 + f * 101 + (r * 16 + 2 * c + bc) * 7) % 256)
                   AS BIGINT) AS cs
@@ -819,22 +731,14 @@ _VIDEO_AHASH_CTES = """cells AS MATERIALIZED (
       SELECT cells.doc_id, cells.f, (r * 8 + c) AS k,
              CASE WHEN cs * 64 > total THEN 1 ELSE 0 END AS bit
       FROM cells JOIN tot ON tot.doc_id = cells.doc_id AND tot.f = cells.f
-    ), vbits AS (
+    ), bits AS (
       SELECT doc_id, k,
              CASE WHEN sum(bit) >= 2 THEN 1::BIGINT ELSE 0::BIGINT END AS bit
       FROM fbits GROUP BY 1, 2
-    ), h AS MATERIALIZED (
-      SELECT doc_id,
-             CAST(sum(CASE WHEN k < 32 THEN bit << k ELSE 0 END) AS BIGINT) AS lo,
-             CAST(sum(CASE WHEN k >= 32 THEN bit << (k - 32) ELSE 0 END) AS BIGINT) AS hi
-      FROM vbits GROUP BY 1
     )"""
 
 
-_M16_ORACLE = "\n    WITH RECURSIVE " + _VIDEO_AHASH_CTES + ", " + _HASH64_CANONICAL_TAIL
-
-
-@query("m16_video_dedup", oracle=_M16_ORACLE)
+@query("m16_video_dedup", oracle=_hash_dedup_oracle(_VIDEO_AHASH_BITS, *_HASH64))
 def m16_video_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """VIDEO near-dup dedup — the last cell of the per-modality dedup
     matrix (text d-series, image m11, audio m12): every doc's 8-frame
@@ -852,14 +756,9 @@ def m16_video_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic in members.  The oracle replays pixel law → block sums →
     per-frame bits → majority pool → banding → components
     relationally, end to end."""
-    from mapreducehs_spark.operators.multimodal import (
-        render_mrv_payloads,
-        video_majority_ahash,
-    )
-
     docs = _t(spark, sf_dir, "documents")
-    payloads = render_mrv_payloads(docs)
-    return dedup.hash64_canonical_dedup(video_majority_ahash(payloads))
+    payloads = multimodal.render_mrv_payloads(docs)
+    return dedup.hash64_canonical_dedup(multimodal.video_majority_ahash(payloads))
 
 
 # =========================================================================
@@ -997,8 +896,6 @@ def m18_vlm_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _m18_build(m: Materialization, sf_dir: str) -> DataFrame:
     """m18 pre-checkpoint builder (q107/t40 discipline)."""
-    from mapreducehs_spark.operators.sampling import grouped_prefix_sums
-
     docs = _t(m.spark, sf_dir, "documents")
     keyed = docs.select(
         "source",

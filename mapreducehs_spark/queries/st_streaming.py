@@ -8,7 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 import mapreducehs_spark.streaming.ops as st
-from mapreducehs_spark.operators import dedup, text
+from mapreducehs_spark.operators import dedup, multimodal, text
 from mapreducehs_spark.operators.iteration import materialize
 from mapreducehs_spark.session import scoped_confs
 from mapreducehs_spark.sources.catalog import scratch_dir, table_files
@@ -929,10 +929,10 @@ def st24_stream_decode_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
     error-tolerance requirement at the point it actually bites: the
     CONTINUOUS intake, where one corrupt payload must neither kill the
     stream nor silently vanish.  Each arriving doc renders its payload
-    and runs the SAME tolerant-decode kernel m10 uses (the two
-    mapInPandas stages are shared module functions, not copies) — 'ok'
-    rows carry the pixel sum, corrupt rows route to the quarantine
-    status, zero exceptions escape the Arrow stage.  Stateless append:
+    and runs the SAME tolerant decode m10 uses
+    (multimodal.tolerant_decode) — 'ok' rows carry the pixel sum,
+    corrupt rows route to the quarantine status, zero exceptions escape
+    the Arrow stage.  Stateless append:
     no watermark, no state store, per-row emission is the DLQ routing
     itself (aggregate error budgets are a downstream batch query, m10's
     shape).  At 100 TB/day the decode cost is the scan, and a poisoned
@@ -940,20 +940,7 @@ def st24_stream_decode_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture streams the corpus the oracle reads, so every per-doc
     status and pixel sum value-checks (stream==batch, the st17
     discipline)."""
-    from mapreducehs_spark.operators.multimodal import (
-        render_corrupt_pgm_batches,
-        tolerant_decode_batches,
-    )
-
-    decoded = (
-        _replayed_docs(spark, sf_dir)
-        .select("doc_id")
-        .mapInPandas(render_corrupt_pgm_batches, schema="doc_id long, payload binary")
-        .mapInPandas(
-            tolerant_decode_batches,
-            schema="doc_id long, decode_status string, px_sum long",
-        )
-    )
+    decoded = multimodal.tolerant_decode(_replayed_docs(spark, sf_dir))
     return st.run_to_batch(decoded, "st24_sink")
 
 

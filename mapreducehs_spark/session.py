@@ -80,6 +80,9 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", DEFAULT_DRIVER_MEM))
         .config("spark.ui.enabled", "false")
+        # the console progress bar would share stderr lines with callers'
+        # per-query logging (bench.py); disabling the UI leaves it on
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
     )
     for k, v in (extra_conf or {}).items():

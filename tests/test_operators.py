@@ -890,6 +890,104 @@ def test_pgm_encode_decode_roundtrip():
         decode_image(b"\xff\xd8\xff\xe0 jpeg-ish")
 
 
+def test_media_word_packer_and_block_bits():
+    """The fingerprints' shared helpers, without Spark: ``_pack_words``
+    lays bit k into word k // 32 at position k % 32 as a non-negative
+    32-bit value, ``_block_bits`` sets bit k iff block k's sum exceeds
+    the block mean (strictly), and every fingerprint guard raises."""
+    from mapreducehs_spark.operators import multimodal as mm
+
+    bits = np.zeros(64, dtype=bool)
+    bits[[0, 31, 32, 63]] = True
+    lo, hi = mm._pack_words(bits)
+    assert lo == hi == 2**31 + 1 and lo > 0 and hi > 0
+
+    wide = np.zeros(128, dtype=bool)
+    wide[[5, 40, 70, 127]] = True
+    assert mm._pack_words(wide) == (1 << 5, 1 << 8, 1 << 6, 1 << 31)
+
+    # the bit-by-bit loop the fingerprints used to run, as the reference
+    rng = np.random.default_rng(5)
+    for n in (64, 128):
+        for _ in range(20):
+            bits = rng.random(n) < 0.5
+            words = [0] * (n // 32)
+            for k in np.flatnonzero(bits):
+                words[k // 32] |= 1 << (int(k) % 32)
+            assert mm._pack_words(bits) == tuple(words)
+
+    # 16x16 raster, 8x8 grid of 2x2 blocks: the top half is bright, so
+    # block rows 0-3 (bits 0-31) sit above the mean and rows 4-7 below
+    raster = np.zeros((16, 16), dtype=np.uint8)
+    raster[:8] = 3
+    got = mm._block_bits(raster, 8, 8, "ahash_64")
+    assert got.tolist() == [True] * 32 + [False] * 32
+    assert mm._pack_words(got) == (2**32 - 1, 0)
+    # one hot block in the last cell; a block equal to the mean stays 0
+    raster = np.ones((16, 16), dtype=np.uint8)
+    raster[14:, 14:] = 9
+    assert np.flatnonzero(mm._block_bits(raster, 8, 8, "ahash_64")).tolist() == [63]
+    assert not mm._block_bits(np.ones((16, 32)), 8, 16, "ahash_128").any()
+
+    with pytest.raises(ValueError, match="ahash_64: dims 12x16 not divisible by 8$"):
+        mm._block_bits(np.zeros((12, 16)), 8, 8, "ahash_64")
+    with pytest.raises(ValueError, match="ahash_128: dims 16x24 not divisible by 8x16"):
+        mm._block_bits(np.zeros((16, 24)), 8, 16, "ahash_128")
+    with pytest.raises(ValueError, match="video_majority_ahash: dims 8x12 not divisible by 8"):
+        mm._video_majority_hash(1, mm.encode_mrv([np.zeros((8, 12), dtype=np.uint8)]))
+    with pytest.raises(ValueError, match="payload id=7 decoded to zero frames"):
+        mm._video_majority_hash(7, mm.encode_mrv([]))
+    with pytest.raises(ValueError, match="100 samples not divisible by 64 frames"):
+        mm._audio_fingerprint(1, mm.encode_wav(np.zeros(100, dtype=np.int64)))
+
+
+def test_media_kernels_run_on_the_one_row_map():
+    """Every media kernel is a per-row function run by
+    ``multimodal._row_map``: operators/multimodal.py calls
+    ``mapInPandas`` nowhere else (``extract_features`` keeps its own
+    pass-through stage), and no query hands a media kernel to
+    ``mapInPandas`` itself."""
+    import ast
+    import pathlib
+
+    import mapreducehs_spark
+
+    root = pathlib.Path(mapreducehs_spark.__file__).parent
+    media = root / "operators" / "multimodal.py"
+    media_defs = {
+        node.name for node in ast.parse(media.read_text()).body if isinstance(node, ast.FunctionDef)
+    }
+
+    def map_in_pandas_calls(tree):
+        return [
+            node
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "mapInPandas"
+        ]
+
+    def named(node):
+        return node.id if isinstance(node, ast.Name) else getattr(node, "attr", "")
+
+    bad = [
+        f"operators/multimodal.py:{call.lineno} in {fn.name}"
+        for fn in ast.parse(media.read_text()).body
+        if getattr(fn, "name", None) not in ("_row_map", "extract_features")
+        for call in map_in_pandas_calls(fn)
+    ]
+    for path in sorted((root / "queries").rglob("*.py")):
+        for call in map_in_pandas_calls(ast.parse(path.read_text())):
+            kernels = [
+                named(a)
+                for a in [*call.args, *(kw.value for kw in call.keywords)]
+                if named(a) in media_defs or named(a).startswith(("render_", "tolerant"))
+            ]
+            if kernels:
+                bad.append(f"{path.relative_to(root)}:{call.lineno} {kernels}")
+    assert not bad, bad
+
+
 def test_resolve_clusters_driver_vs_distributed(spark):
     """The two CC regimes (driver union-find at or below the threshold,
     the distributed star alternation above) must agree exactly — a

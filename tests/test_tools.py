@@ -197,6 +197,13 @@ def test_default_driver_heap_fits_the_machine():
     assert gib * 2**30 <= os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
 
 
+def test_sessions_disable_the_console_progress_bar(spark):
+    """A ``get_spark`` session draws no console progress bar, which
+    would share stderr lines with bench.py's per-query lines
+    (``spark.ui.enabled=false`` does not turn it off)."""
+    assert spark.sparkContext.getConf().get("spark.ui.showConsoleProgress") == "false"
+
+
 def test_driver_sim_canon_ignores_order_rounds_floats_and_widens_ints(tools):
     """``tools/driver_sim.py`` imports without starting Spark or DuckDB,
     and its ``canon`` hash ignores column and row order, rounds floats

@@ -1,38 +1,21 @@
 """Plan-fingerprint audit: one row of plan metrics per batch query.
 
-The 49 pin tests lock the plan SHAPES that matter most; this tool
-records the coarse plan metrics (exchange / broadcast-join /
-sort-merge-join / codegen-span counts) for EVERY batch query (the
-st-series returns a read of its drained sink, whose plan says nothing
-about the stream's) into ``PLANS.json``, committed per round —
-so a silent plan regression anywhere in the inventory (a broadcast
-degrading to SMJ, an extra exchange creeping into an iteration) shows
-up as a one-line diff in review even where no pin test exists yet.
-One query's full plan is ``plans.inspect.formatted_plan(df)``.
+The pin tests in tests/test_plans.py lock the plan SHAPES that matter
+most; this tool records the coarse plan metrics (exchange /
+broadcast-join / sort-merge-join / codegen-span counts) for EVERY
+batch query (the st-series returns a read of its drained sink, whose
+plan says nothing about the stream's) into ``PLANS.json``, committed
+per round — so a silent plan regression anywhere in the inventory (a
+broadcast degrading to SMJ, an extra exchange creeping into an
+iteration) shows up as a one-line diff in review even where no pin
+test exists yet.  One query's full plan is
+``plans.inspect.formatted_plan(df)``.
 
-Plans are BUILT, never executed — with known exceptions that EXECUTE
-real cluster work during build (ADVICE r06: this list had gone stale),
-so a full-inventory audit is no longer "a few seconds":
-- the iterative bodies that end in ``localCheckpoint`` (q96/q108/
-  q111/d21/s05/s11/t18, the m11/m12 canonical dedup, d20);
-- q71, which runs a distinct-count at build time to size its
-  Misra-Gries exact-regime capacity from the measured vocabulary
-  (the sf1 correctness fix; ADVICE r05 notes the cost — it is the
-  price of a capacity that cannot silently under-size);
-- t28/t29 (full training loop: per-step counts + model collects),
-  s15 (executes all ANN arms plus the exact top-k), and the
-  seeded-codebook collects in s02/s04/s06/s07/s16/d22;
-- the mid-pipeline reuse barriers added round 7: the checked-simhash
-  signature frame (d04/d12), d17's tokenized-corpus frame, and s18's
-  per-term tf projection — each materializes a narrow frame once
-  instead of recomputing a scan-heavy subtree per downstream
-  reference;
-- s19, which executes its entire BM25 retrieval stage at build time
-  (the 100-row candidate set localCheckpoints so the rerank joins
-  against a pinned frame, never a recomputed sort).
-Those report the plan of the materialized result; their interesting
-plan properties are pinned by dedicated tests instead (see
-test_plans.py's `_build()` convention).
+Plans are BUILT, never executed, except where a query materializes
+while building (a checkpoint, a sizing count, a collect): such a query
+reports the plan of its materialized result, and its pin tests take
+the pre-checkpoint frame from its builder (``_t33_build(m, sf_dir)``
+and the like).
 
 Caveat on absolute values: the counts come from the FORMATTED plan
 text, which re-prints a subtree once per reference — a frame consumed
